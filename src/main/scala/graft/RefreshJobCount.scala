@@ -1,19 +1,39 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Measures the Spark JOB count of text-index REFRESH paths (r19 VERDICT
-  * #3's "done" criterion: a changeful refresh must drop from 4+ source
-  * evaluations to classify + delta re-index). Builds an index over a slice
-  * of the sf documents table, then runs three REFRESHes — no-change,
-  * append-only growth, and a change+remove reshape — counting jobs via a
-  * SparkListener. Usage: runMain graft.RefreshJobCount [sfDir]
+/** Measures the Spark JOB count of text-index paths: three REFRESHes over a
+  * slice of the sf documents table — no-change, append-only growth, and a
+  * change+remove reshape (a changeful refresh must stay at classify + delta
+  * re-index, not 4+ source evaluations) — and the planning of a claimed
+  * bm25 top-k on the warm index, which must launch no job at all (the
+  * reader snapshot serves `IndexStore.load` without file listing or schema
+  * inference). Usage: runMain graft.RefreshJobCount [sfDir]
   */
 object RefreshJobCount {
+
+  /** `body`'s result and the number of Spark jobs it launched on this
+    * thread, counted by job group from `statusTracker`. The status store is
+    * fed by the listener bus in order, so once a marker job submitted after
+    * `body` is visible, every job `body` launched is visible too — an exact
+    * count with no settle sleep. */
+  def jobsIn[T](spark: SparkSession, label: String)(body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobcount-$label-${System.nanoTime()}"
+    sc.setJobGroup(group, label)
+    val out = try body finally sc.clearJobGroup()
+    val marker = s"$group-marker"
+    sc.setJobGroup(marker, "status barrier")
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty) {
+      require(System.nanoTime() < deadline, "status store never saw the marker job")
+      Thread.sleep(5)
+    }
+    (out, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
+
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val spark = GraftSession.configure(
@@ -24,19 +44,8 @@ object RefreshJobCount {
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.ensurePublicDb(spark)
 
-    val jobs = new AtomicInteger(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    })
-    def counted(label: String)(body: => Unit): Unit = {
-      // the listener bus is async and private[spark]; a short settle sleep
-      // on an idle session is enough for a counting probe
-      Thread.sleep(1000); jobs.set(0)
-      body
-      Thread.sleep(1000)
-      println(s"JOBS[$label] = ${jobs.get()}")
-    }
+    def counted(label: String)(body: => Unit): Unit =
+      println(s"JOBS[$label] = ${jobsIn(spark, label)(body)._2}")
 
     val docs = Tables.documents(spark, dir)
     try graft.search.Ddl.execute(spark, "DROP SEARCH INDEX jobcount_idx")
@@ -57,6 +66,13 @@ object RefreshJobCount {
           .otherwise(col("text")))
       .createOrReplaceTempView("jobcount_docs")
     counted("change+remove")(spark.sql("REFRESH SEARCH INDEX jobcount_idx").collect())
+
+    // the first plan warms the reader snapshot; the counted one is warm
+    val topk = "SELECT doc_id FROM jobcount_docs " +
+      "ORDER BY bm25(text, 'vector query', 'whitespace') DESC LIMIT 10"
+    spark.sql(topk).queryExecution.optimizedPlan
+    val (plan, jobs) = jobsIn(spark, "claim-plan")(spark.sql(topk).queryExecution.optimizedPlan)
+    println(s"JOBS[claim-plan] = $jobs (claimed: ${!plan.toString.contains("bm25(")})")
 
     spark.sql("DROP SEARCH INDEX jobcount_idx")
     spark.stop()

@@ -1,11 +1,13 @@
 package graft.index
 
+import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets
 import scala.collection.concurrent.TrieMap
 import scala.util.hashing.MurmurHash3
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 /** Durable, segmented storage for [[InvertedIndex]].
@@ -40,6 +42,25 @@ import org.apache.spark.sql.functions._
   *   manifest, and leaves old segment dirs for [[cleanup]] — readers holding
   *   lazy plans over old segments keep working until cleanup runs (the
   *   reference's snapshot-pinning behavior, iresearch_snapshot_pinning.test).
+  *
+  * Reader snapshot (the reference keeps its index readers open and reuses
+  * the current segment snapshot per query): [[load]] serves one cached
+  * snapshot per index directory, keyed by the on-disk state a load reads —
+  * the `_SEGMENTS` manifest (content and modification time), the legacy
+  * `_DELETES` file (length and modification time) and the `_DELETES_P`
+  * listing (each tombstone generation and the `_FLOOR` file, with their
+  * modification times). Computing the key is a few metadata calls and
+  * launches no Spark job. The snapshot holds only session-independent
+  * state: each segment part's resolved `HadoopFsRelation` (its file listing
+  * and inferred schema), the `meta.json` totals, and the tombstone
+  * relation plus its count/dlen scalars. A call whose key matches does no
+  * file listing, no schema inference and no Spark job, so warm claims plan
+  * without Spark jobs; any write that changes the key (append, delete,
+  * compact, DROP + re-CREATE) makes the next call reload. Segments are
+  * immutable once the manifest names them, so the key is exact. DataFrames
+  * are never cached: every call rebinds copies of the cached relations to
+  * the caller's session, so every `load` yields fresh leaf exprIds and
+  * plans under the caller's SQLConf.
   */
 object IndexStore {
   val NumBuckets = 64
@@ -63,12 +84,10 @@ object IndexStore {
   def defaultRoot: String = sys.env.getOrElse(
     "GRAFT_INDEX_DIR", sys.props("java.io.tmpdir") + "/graft-index")
 
-  private val jvmCache = TrieMap.empty[String, InvertedIndex]
-
-  /** Drop the cached load of `dir` (callers that delete the directory out
-    * of band — e.g. DROP SEARCH INDEX — must invalidate, or a later
-    * same-key ensure() would serve the dead index). */
-  def invalidate(dir: String): Unit = jvmCache.remove(dir)
+  /** Drop the reader snapshot of `dir` (callers that delete the directory
+    * out of band — e.g. DROP SEARCH INDEX — invalidate so the dead index's
+    * relations are not kept alive until the next load). */
+  def invalidate(dir: String): Unit = readers.remove(dir)
 
   private def slug(s: String): String = s.replaceAll("[^A-Za-z0-9._-]+", "_")
 
@@ -111,12 +130,12 @@ object IndexStore {
 
   // ---- lifecycle -----------------------------------------------------------
 
-  /** Build-or-load the index for (table parquet dir, text column, analyzer);
-    * cached per JVM, persisted across JVMs. */
   /** Canonical on-disk location for an ensured index. */
   def dirFor(cacheKey: String, textCol: String, analyzerName: String): String =
     s"$defaultRoot/${slug(cacheKey)}-$textCol-$analyzerName-v$FormatVersion"
 
+  /** Build-or-load the index for (table parquet dir, text column, analyzer):
+    * built once, persisted across JVMs, loaded through the reader snapshot. */
   def ensure(spark: SparkSession, docs: => DataFrame, cacheKey: String,
       idCol: String, textCol: String, analyzerName: String,
       withPositions: Boolean = true): InvertedIndex = {
@@ -128,21 +147,19 @@ object IndexStore {
         xxhash64(col(textCol)).as("content_fp"))))
       writeStringAtomic(spark, s"$dir/_SEGMENTS", "seg=00000\n")
     }
-    jvmCache.getOrElseUpdate(dir, {
-      if (!exists(spark, s"$dir/_SEGMENTS")) build()
-      try load(spark, dir)
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") =>
-          // a POISONED dir from an older build over an empty source
-          // (0-partition parquet write → fileless segment): rebuild once
-          val p = new Path(dir)
-          val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          fs.delete(p, true)
-          build()
-          load(spark, dir)
-      }
-    })
+    if (!exists(spark, s"$dir/_SEGMENTS")) build()
+    try load(spark, dir)
+    catch {
+      case e: org.apache.spark.sql.AnalysisException
+          if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") =>
+        // a POISONED dir from an older build over an empty source
+        // (0-partition parquet write → fileless segment): rebuild once
+        val p = new Path(dir)
+        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        fs.delete(p, true)
+        build()
+        load(spark, dir)
+    }
   }
 
   /** Convenience: the standard documents-table index. */
@@ -244,29 +261,27 @@ object IndexStore {
       idCol: String, textCol: String, analyzerName: String,
       docsMax: Long): InvertedIndex = {
     val dir = dirFor(cacheKey, textCol, analyzerName)
-    jvmCache.getOrElseUpdate(dir, {
-      if (!exists(spark, s"$dir/_BACKFILL_DONE")) {
-        val d = docs
-        val n = d.count()
-        val waves = math.max(1, math.ceil(n.toDouble / docsMax).toInt)
-        // a crashed backfill resumes at the first unpublished wave: wave
-        // membership is a deterministic hash, committed segments map 1:1 to
-        // completed waves (assumes the source is unchanged across the
-        // retry, the usual backfill-retry contract)
-        val alreadyDone = listSegments(spark, dir).size
-        (alreadyDone until waves).foreach { w =>
-          val wave = d.filter(
-            org.apache.spark.sql.functions.pmod(
-              org.apache.spark.sql.functions.hash(col(idCol)),
-              org.apache.spark.sql.functions.lit(waves)) === w)
-          val idx = InvertedIndex.build(wave, idCol, textCol, analyzerName)
-          appendSegment(idx, dir, Some(wave.select(col(idCol).as("doc_id"),
-            xxhash64(col(textCol)).as("content_fp"))))
-        }
-        writeStringAtomic(spark, s"$dir/_BACKFILL_DONE", waves.toString)
+    if (!exists(spark, s"$dir/_BACKFILL_DONE")) {
+      val d = docs
+      val n = d.count()
+      val waves = math.max(1, math.ceil(n.toDouble / docsMax).toInt)
+      // a crashed backfill resumes at the first unpublished wave: wave
+      // membership is a deterministic hash, committed segments map 1:1 to
+      // completed waves (assumes the source is unchanged across the
+      // retry, the usual backfill-retry contract)
+      val alreadyDone = listSegments(spark, dir).size
+      (alreadyDone until waves).foreach { w =>
+        val wave = d.filter(
+          org.apache.spark.sql.functions.pmod(
+            org.apache.spark.sql.functions.hash(col(idCol)),
+            org.apache.spark.sql.functions.lit(waves)) === w)
+        val idx = InvertedIndex.build(wave, idCol, textCol, analyzerName)
+        appendSegment(idx, dir, Some(wave.select(col(idCol).as("doc_id"),
+          xxhash64(col(textCol)).as("content_fp"))))
       }
-      load(spark, dir)
-    })
+      writeStringAtomic(spark, s"$dir/_BACKFILL_DONE", waves.toString)
+    }
+    load(spark, dir)
   }
 
   /** Append a new segment (streaming ingest / incremental refresh). */
@@ -278,7 +293,6 @@ object IndexStore {
     writeSegment(idx, dir, next, docIds)
     writeStringAtomic(spark, s"$dir/_SEGMENTS",
       (existing :+ f"seg=$next%05d").distinct.sorted.mkString("", "\n", "\n"))
-    jvmCache.remove(dir)
     next
   }
 
@@ -314,7 +328,7 @@ object IndexStore {
         else base.select(col("doc_id"), lit(null).cast("long").as("content_fp"))
       withFp.withColumn("__seg", lit(segNo))
     }.reduce(_ unionByName _)
-    val alive = deletesDf(spark, dir) match {
+    val alive = snapshot(spark, dir).flatMap(_.tombstones(spark)) match {
       case None => perSeg
       case Some(d) =>
         val del = broadcast(d.select(col("doc_id").as("__del_id"),
@@ -464,7 +478,8 @@ object IndexStore {
 
   private def writeTombstones(spark: SparkSession, dir: String,
       matched: DataFrame): Unit = {
-    val fresh = deletesDf(spark, dir) match {
+    val snap = snapshot(spark, dir)
+    val fresh = snap.flatMap(_.tombstones(spark)) match {
       case Some(prior) => matched.join(prior.select("doc_id", "max_seg"),
         Seq("doc_id", "max_seg"), "left_anti")
       case None => matched
@@ -474,68 +489,29 @@ object IndexStore {
     // would permanently degrade them for zero information
     if (fresh.isEmpty) return
     // each delete lands in its own generation dir — the write target is
-    // never a path the dedup anti-join is reading
-    val next = deleteGens(spark, dir)
-      .map(_.getName.stripPrefix("gen=").toInt).foldLeft(-1)(math.max) + 1
+    // never a path the dedup anti-join is reading, and never below the
+    // floor, where it would be born retired
+    val next = snap.fold(0)(_.nextGen)
     fresh.write.mode("overwrite").parquet(s"$dir/_DELETES_P/gen=$next")
-    jvmCache.remove(dir)
   }
-
-  private def deleteGens(spark: SparkSession, dir: String): Seq[Path] =
-    if (!exists(spark, s"$dir/_DELETES_P")) Seq.empty
-    else fs(spark, dir).listStatus(new Path(s"$dir/_DELETES_P")).map(_.getPath)
-      .filter(_.getName.startsWith("gen=")).sortBy(_.getName).toSeq
 
   /** Id-list delete, routed through the predicate leg. */
   def delete(spark: SparkSession, dir: String, ids: Seq[Long]): Unit =
     deleteWhere(spark, dir, col("doc_id").isin(ids: _*))
-
-  /** All tombstones as a DataFrame (doc_id, dlen, max_seg): the parquet
-    * `_DELETES_P` dataset plus any legacy `_DELETES` text lines. */
-  private def deletesDf(spark: SparkSession, dir: String): Option[DataFrame] = {
-    import spark.implicits._
-    val legacy =
-      if (!exists(spark, s"$dir/_DELETES")) None
-      else {
-        val rows = readString(spark, s"$dir/_DELETES").split("\n").filter(_.nonEmpty)
-          .toSeq.map { l => val p = l.split(","); (p(0).toLong, p(1).toLong, p(2).toInt) }
-        if (rows.isEmpty) None else Some(rows.toDF("doc_id", "dlen", "max_seg"))
-      }
-    val gens = deleteGens(spark, dir)
-    val pq =
-      if (gens.isEmpty) None
-      else Some(spark.read.parquet(gens.map(_.toString): _*))
-    (legacy.toSeq ++ pq.toSeq).reduceOption(_ unionByName _)
-      .map(_.dropDuplicates("doc_id", "max_seg"))
-  }
 
   /** Exact live-doc count from segment metadata ALONE — the reference's
     * "count answered from reader metadata" fast path
     * (inverted_index_count_variants.test: `Output: row-count only`). None
     * when tombstones exist (their accounting lives in a deletes dataset,
     * not metadata) or the index has no segments — callers fall back to the
-    * normal scan. Cost: one tiny meta.json read per segment, driver-side. */
-  def metaNumDocs(spark: SparkSession, dir: String): Option[Long] = {
-    val segs = listSegments(spark, dir)
-    if (segs.isEmpty) return None
-    val hasDeletes =
-      (exists(spark, s"$dir/_DELETES") &&
-        readString(spark, s"$dir/_DELETES").trim.nonEmpty) ||
-        deleteGens(spark, dir).nonEmpty
-    if (hasDeletes) None
-    else Some(segs.map { s =>
-      """"numDocs":(\d+)""".r
-        .findFirstMatchIn(readString(spark, s"$dir/$s/meta.json"))
-        .get.group(1).toLong
-    }.sum)
-  }
+    * normal scan. Served from the reader snapshot: no file IO when warm. */
+  def metaNumDocs(spark: SparkSession, dir: String): Option[Long] =
+    snapshot(spark, dir).filter(s => s.segs.nonEmpty && !s.hasDeletes).map(_.numDocs)
 
   /** Whether this index carries tombstones (deleted docs) — metadata-only
     * answers must then account for them or bail. */
   def hasDeletes(spark: SparkSession, dir: String): Boolean =
-    (exists(spark, s"$dir/_DELETES") &&
-      readString(spark, s"$dir/_DELETES").trim.nonEmpty) ||
-      deleteGens(spark, dir).nonEmpty
+    snapshot(spark, dir).exists(_.hasDeletes)
 
   /** Live segments per the manifest (source of truth — compacted-away
     * segment dirs may still exist on disk until [[cleanup]]). */
@@ -543,19 +519,123 @@ object IndexStore {
     if (!exists(spark, s"$dir/_SEGMENTS")) Seq.empty
     else readString(spark, s"$dir/_SEGMENTS").split("\n").filter(_.nonEmpty).toSeq.sorted
 
-  /** Load an index, merging all segments' stats at read time. */
-  def load(spark: SparkSession, dir: String): InvertedIndex = {
-    val segs = listSegments(spark, dir)
-    require(segs.nonEmpty, s"no index segments under $dir")
-    val deletes = deletesDf(spark, dir)
-    // collection-total adjustments are two scalars — metadata, not data
-    val delStats = deletes.map { d =>
+  // ---- reader snapshot -----------------------------------------------------
+
+  /** The on-disk state a [[load]] reads (see the object scaladoc): manifest
+    * content and mtime, legacy `_DELETES` (length, mtime), and every
+    * `_DELETES_P` entry (name, mtime, length). */
+  private final case class Stamp(manifest: String, manifestMtime: Long,
+      legacyDeletes: Option[(Long, Long)], deleteEntries: Seq[(String, Long, Long)])
+
+  /** Session-independent reader state for one [[Stamp]]. The parquet
+    * relations and tombstone scalars resolve lazily (once), so
+    * metadata-only callers ([[metaNumDocs]]) never list files, infer
+    * schemas or run a job. */
+  private final class Snapshot(spark: SparkSession, dir: String, val stamp: Stamp) {
+    val segs: Seq[String] = stamp.manifest.split("\n").filter(_.nonEmpty).toSeq.sorted
+    private val metas = segs.map(s => readString(spark, s"$dir/$s/meta.json"))
+    private def metaSum(key: String): Long = metas.map { t =>
+      s""""$key":(\\d+)""".r.findFirstMatchIn(t).get.group(1).toLong
+    }.sum
+    val numDocs: Long = metaSum("numDocs")
+    val sumDl: Long = metaSum("sumDl")
+
+    /** Every tombstone generation on disk. Those below the floor were folded
+      * into a compacted segment and stay only as grace for in-flight plans. */
+    val gens: Seq[Int] = stamp.deleteEntries.map(_._1)
+      .filter(_.startsWith("gen=")).map(_.stripPrefix("gen=").toInt)
+    val floor: Int =
+      if (!stamp.deleteEntries.exists(_._1 == "_FLOOR")) 0
+      else readString(spark, s"$dir/_DELETES_P/_FLOOR").trim.toInt
+    private val liveGens = gens.filter(_ >= floor).sorted
+    val nextGen: Int = (gens :+ (floor - 1)).max + 1
+    val legacy: Seq[(Long, Long, Int)] =
+      if (stamp.legacyDeletes.isEmpty) Nil
+      else readString(spark, s"$dir/_DELETES").split("\n").map(_.trim)
+        .filter(_.nonEmpty).toSeq
+        .map { l => val p = l.split(","); (p(0).toLong, p(1).toLong, p(2).toInt) }
+    val hasDeletes: Boolean = legacy.nonEmpty || liveGens.nonEmpty
+
+    private def resolve(paths: String*): HadoopFsRelation =
+      spark.read.parquet(paths: _*).queryExecution.analyzed
+        .collectFirst { case lr: LogicalRelation => lr.relation }
+        .collect { case h: HadoopFsRelation => h }
+        .getOrElse(throw new IllegalStateException(s"not a parquet file relation: $paths"))
+
+    /** part name → one relation per segment, in `segs` order. */
+    lazy val parts: Map[String, Seq[HadoopFsRelation]] =
+      Seq("postings", "termdict", "docstats")
+        .map(p => p -> segs.map(s => resolve(s"$dir/$s/$p"))).toMap
+
+    private lazy val genRel: Option[HadoopFsRelation] =
+      if (liveGens.isEmpty) None
+      else Some(resolve(liveGens.map(g => s"$dir/_DELETES_P/gen=$g"): _*))
+
+    /** All live tombstones (doc_id, dlen, max_seg) over `s`: the parquet
+      * generations at or above the floor plus any legacy `_DELETES` lines. */
+    def tombstones(s: SparkSession): Option[DataFrame] = {
+      import s.implicits._
+      val leg = if (legacy.isEmpty) None else Some(legacy.toDF("doc_id", "dlen", "max_seg"))
+      (leg.toSeq ++ genRel.map(rebind(s, _)).toSeq).reduceOption(_ unionByName _)
+        .map(_.dropDuplicates("doc_id", "max_seg"))
+    }
+
+    /** (count, Σ dlen) of the live tombstones: the collection-total
+      * adjustments are two scalars — metadata, not data. */
+    lazy val deleted: (Long, Long) = tombstones(spark).fold((0L, 0L)) { d =>
       val r = d.agg(count(lit(1)), coalesce(sum(col("dlen")), lit(0L))).head()
       (r.getLong(0), r.getLong(1))
     }
+  }
+
+  private val readers = TrieMap.empty[String, Snapshot]
+
+  private def rebind(spark: SparkSession, rel: HadoopFsRelation): DataFrame =
+    spark.baseRelationToDataFrame(rel.copy()(spark))
+
+  private def stampOf(spark: SparkSession, dir: String): Option[Stamp] = {
+    val f = fs(spark, dir)
+    def status(p: String) =
+      try Some(f.getFileStatus(new Path(p))) catch { case _: FileNotFoundException => None }
+    status(s"$dir/_SEGMENTS").map { man =>
+      val entries =
+        try f.listStatus(new Path(s"$dir/_DELETES_P")).toSeq
+          .map(st => (st.getPath.getName, st.getModificationTime, st.getLen)).sortBy(_._1)
+        catch { case _: FileNotFoundException => Nil }
+      Stamp(readString(spark, s"$dir/_SEGMENTS"), man.getModificationTime,
+        status(s"$dir/_DELETES").map(st => (st.getLen, st.getModificationTime)), entries)
+    }
+  }
+
+  /** The snapshot matching `dir`'s on-disk state now, reloaded when the
+    * state changed; None when the manifest is missing. */
+  private def snapshot(spark: SparkSession, dir: String): Option[Snapshot] =
+    stampOf(spark, dir) match {
+      case None => readers.remove(dir); None
+      case Some(st) => readers.get(dir).filter(_.stamp == st).orElse {
+        val s = new Snapshot(spark, dir, st)
+        readers.put(dir, s)
+        Some(s)
+      }
+    }
+
+  private def current(spark: SparkSession, dir: String): Snapshot = {
+    val snap = snapshot(spark, dir)
+    require(snap.exists(_.segs.nonEmpty), s"no index segments under $dir")
+    snap.get
+  }
+
+  /** Load an index, merging all segments' stats at read time. The frames
+    * are rebuilt over `spark` from the reader snapshot on every call. */
+  def load(spark: SparkSession, dir: String): InvertedIndex =
+    read(spark, current(spark, dir))
+
+  private def read(spark: SparkSession, snap: Snapshot): InvertedIndex = {
+    val segs = snap.segs
+    val deletes = snap.tombstones(spark)
     def readAll(part: String): DataFrame =
-      segs.map { s =>
-        val df = spark.read.parquet(s"$dir/$s/$part")
+      segs.zip(snap.parts(part)).map { case (s, rel) =>
+        val df = rebind(spark, rel)
         if (deletes.isEmpty) df
         else df.withColumn("__seg", lit(s.stripPrefix("seg=").toInt))
       }.reduce(_ unionByName _)
@@ -590,24 +670,21 @@ object IndexStore {
         postings.groupBy(col("term"), col("bucket"))
           .agg(count(lit(1)).as("df"), sum(col("tf")).as("ctf"),
             max(col("tf")).as("max_tf"))
-    val metas = segs.map { s =>
-      val txt = readString(spark, s"$dir/$s/meta.json")
-      val nd = """"numDocs":(\d+)""".r.findFirstMatchIn(txt).get.group(1).toLong
-      val sd = """"sumDl":(\d+)""".r.findFirstMatchIn(txt).get.group(1).toLong
-      (nd, sd)
-    }
     InvertedIndex(postings, termDict, docStats,
-      metas.map(_._1).sum - delStats.map(_._1).getOrElse(0L),
-      metas.map(_._2).sum - delStats.map(_._2).getOrElse(0L))
+      snap.numDocs - snap.deleted._1, snap.sumDl - snap.deleted._2)
   }
 
   /** Compaction (the reference's background compaction task,
     * maintenance.h:36-44): merge all live segments into one NEW segment,
     * atomically repoint the manifest at it, and leave the old segment dirs
     * in place — readers holding lazy plans over them stay valid; call
-    * [[cleanup]] when no reader can still reference them. */
+    * [[cleanup]] when no reader can still reference them. Tombstone
+    * generations get the same one-compaction grace: the ones folded into
+    * the merged segment are retired by raising the floor, and only those
+    * below the PREVIOUS floor are deleted. */
   def compact(spark: SparkSession, dir: String): Unit = Metrics.timed(dir, "consolidation") {
-    val merged = load(spark, dir)
+    val snap = current(spark, dir)
+    val merged = read(spark, snap)
     // the surviving doc-id manifest (with content fingerprints) must be
     // captured BEFORE the manifest repoints — the merged segment's docids
     // would otherwise fall back to docstats, losing zero-token docs and
@@ -615,7 +692,7 @@ object IndexStore {
     // lose update detection after any compaction). Checkpointed so the
     // frame doesn't lazily re-read segment dirs cleanup may later remove.
     val manifest = liveDocFps(spark, dir).localCheckpoint(true)
-    val next = listSegments(spark, dir)
+    val next = snap.segs
       .map(_.stripPrefix("seg=").toInt).foldLeft(-1)(math.max) + 1
     // merged postings/docstats come pre-bucketed/pre-merged from load();
     // strip the bucket column so writeSegment re-derives partitioning.
@@ -626,14 +703,16 @@ object IndexStore {
       merged.numDocs, merged.sumDl)
     writeSegment(rebuilt, dir, next, Some(manifest))
     writeStringAtomic(spark, s"$dir/_SEGMENTS", f"seg=$next%05d\n")
-    // the merged segment was written deletes-applied; clear tombstones
+    // the merged segment was written deletes-applied; retire its tombstones
     // AFTER the swap (a crash in between leaves deletes that now anti-join
-    // nothing — harmless, never resurrecting rows)
-    writeStringAtomic(spark, s"$dir/_DELETES", "")
-    val delDir = new Path(s"$dir/_DELETES_P")
+    // nothing — never resurrecting rows). Legacy lines are read into each
+    // plan as local rows, so clearing them yanks nothing from a reader.
+    if (snap.nextGen > snap.floor)
+      writeStringAtomic(spark, s"$dir/_DELETES_P/_FLOOR", s"${snap.nextGen}\n")
     val f = fs(spark, dir)
-    if (f.exists(delDir)) f.delete(delDir, true)
-    jvmCache.remove(dir)
+    snap.gens.filter(_ < snap.floor)
+      .foreach(g => f.delete(new Path(s"$dir/_DELETES_P/gen=$g"), true))
+    if (snap.legacy.nonEmpty) writeStringAtomic(spark, s"$dir/_DELETES", "")
   }
 
   /** Compact with SNAPSHOT-ISOLATED cleanup (the reference pins the segment

@@ -391,10 +391,10 @@ case class ClaimScoreTopK(spark: SparkSession) extends Rule[LogicalPlan] {
       idAttr: AttributeReference, scoreIds: Set[ExprId],
       outList: Seq[NamedExpression]): LogicalPlan = {
     val idx = IndexStore.load(spark, entry.segDir)
-    // fresh exprIds: the candidate tree's LeftSemi legs were built from the
-    // SAME JVM-cached postings relation, so without re-instancing, identical
-    // leaf exprIds would sit on both sides of the Inner join — hidden today
-    // by the semi-join's output but fragile under later optimizer passes
+    // fresh exprIds: every IndexStore.load yields fresh leaf exprIds, so the
+    // candidate tree's LeftSemi legs (an earlier load) and this scored plan
+    // start disjoint; re-instancing keeps the Inner join's sides disjoint
+    // even if both sides ever come from one load
     val scoredPlan = PlanShapes.freshRelationIds(
       ScorerShapes.scoredQuery(idx, scorer, query, dict, params)
         .select(col("doc_id"), col("_score").as("__graft_score"))

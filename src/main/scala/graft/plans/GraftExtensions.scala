@@ -718,8 +718,9 @@ case class PushdownTsDictAggregate(spark: SparkSession) extends Rule[LogicalPlan
     import org.apache.spark.sql.catalyst.expressions.aggregate.{Complete, Sum}
     val idx = graft.index.IndexStore.load(spark, c.segDir)
     val posts = idx.postings.select(f("term"), f("doc_id"), f("tf").cast("long").as("tf"))
-    // the matched subtree (`right`) usually reads the SAME cached postings
-    // relation — re-instance ours so the self-join has disjoint exprIds
+    // every IndexStore.load yields fresh leaf exprIds, so `right` (an
+    // earlier load) and these postings start disjoint; re-instancing keeps
+    // the self-join's sides disjoint even if both came from one load
     val pBase = freshRelationIds(posts.queryExecution.optimizedPlan)
     // token residual commutes with the per-term grouping — apply it to the
     // postings' term column BEFORE the semi-join (prunes earliest)

@@ -1,0 +1,129 @@
+package graft.search
+
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.types._
+import org.scalatest.funsuite.AnyFunSuite
+import graft.{RefreshJobCount, TestSpark}
+
+/** The index reader snapshot behind `IndexStore.load`: warm claims plan
+  * without launching a Spark job, every index write is seen by the next
+  * statement, and one snapshot serves every session. Claimed answers are
+  * checked against row evaluation of the same predicate over a copy of the
+  * table that the claim rules cannot see (a local relation, not an indexed
+  * scan). */
+class ReaderSnapshotSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+  private val tag = System.nanoTime().toString.takeRight(9)
+  private val tbl = s"rs_docs_$tag"
+  private val idx = s"rs_idx_$tag"
+  private val dict = s"rs_dict_$tag"
+
+  private val words = Seq("alpha", "bravo", "charlie", "delta", "echo", "foxtrot")
+  private def body(pk: Int): String =
+    Seq(words(pk % 6), words(pk % 4), words(pk / 3 % 6), s"w$pk").mkString(" ")
+  // distances to the hybrid query vector are all distinct: no LIMIT ties
+  private def emb(pk: Int): Seq[Float] = Seq(pk.toFloat, 0f, 0f, 0f)
+  private val schema = StructType(Seq(StructField("pk", IntegerType, nullable = false),
+    StructField("body", StringType), StructField("emb", ArrayType(FloatType, containsNull = false))))
+
+  private def run(s: SparkSession, sql: String): Array[Row] = s.sql(sql).collect()
+
+  private def insert(pks: Range): Unit = {
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      pks.map(p => Row(p, body(p), emb(p))), 2), schema).createOrReplaceTempView(s"${tbl}_src")
+    run(spark, s"INSERT INTO $tbl SELECT pk, body, emb FROM ${tbl}_src")
+  }
+
+  private def createIndex(): Unit =
+    run(spark, s"CREATE INDEX $idx ON $tbl USING inverted(pk, body $dict, emb ivf (metric = 'l2'))")
+
+  private def registerFunctions(s: SparkSession): Unit = {
+    SqlSurface.registerAll(s)
+    graft.catalog.CatalogDdl.registerFunctions(s)
+  }
+
+  private lazy val ready: Unit = {
+    registerFunctions(spark)
+    run(spark, s"CREATE TEXT SEARCH DICTIONARY $dict (template = 'text', " +
+      "locale = 'en_US.UTF-8', case = 'lower', stemming = false, frequency = true, position = true)")
+    run(spark, s"CREATE TABLE $tbl(pk INTEGER PRIMARY KEY, body VARCHAR, emb FLOAT[4])")
+    insert(1 to 40)
+    createIndex()
+  }
+
+  private def m(q: String) = s"ts_match(body, $q, '$dict')"
+  private val topK = s"SELECT pk FROM $idx WHERE ${m("'alpha'")} " +
+    s"ORDER BY bm25(body, 'alpha', '$dict') DESC LIMIT 5"
+  private val count = s"SELECT count(*) AS n FROM $idx WHERE ${m("'bravo'")}"
+  private val hybrid = s"SELECT pk FROM $idx WHERE ${m("'charlie'")} " +
+    "ORDER BY emb <-> [20.3, 0.0, 0.0, 0.0]::FLOAT[4] LIMIT 5"
+
+  /** No search stub (text match, scorer, vector distance) is left for
+    * row-at-a-time evaluation. */
+  private def claimed(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean = {
+    val s = plan.toString
+    !(s.contains("ts_match(") || s.contains("bm25(") || s.contains("ann_l2("))
+  }
+
+  private def pks(rows: Array[Row]): Set[Int] =
+    rows.map(_.getAs[Number](0).intValue).toSet
+
+  /** Filters checked after every write: single terms (one of them only on
+    * rows inserted later), and two conjuncts whose legs both come from one
+    * reader snapshot. */
+  private val filters = Seq(m("'alpha'"), m("'w41'"), s"${m("'bravo'")} AND ${m("'delta'")}")
+
+  /** Claimed answers (via the index relation) equal row evaluation. */
+  private def assertAgrees(s: SparkSession, when: String): Unit = {
+    val rows = run(s, s"SELECT * FROM $tbl")
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      .createOrReplaceTempView(s"${tbl}_raw")
+    assert(run(s, s"SELECT count(*) FROM $idx").head.getLong(0) == rows.length,
+      s"$when: live-doc count")
+    filters.foreach { f =>
+      val want = pks(run(s, s"SELECT pk FROM ${tbl}_raw WHERE $f"))
+      val df = s.sql(s"SELECT pk FROM $idx WHERE $f")
+      assert(claimed(df.queryExecution.optimizedPlan), s"$when: $f must be claimed")
+      assert(pks(df.collect()) == want, s"$when: $f")
+      assert(run(s, s"SELECT count(*) FROM $idx WHERE $f").head.getLong(0) == want.size,
+        s"$when: count of $f")
+    }
+  }
+
+  test("warm claims plan with zero Spark jobs: bm25 top-k, ts_match count, hybrid") {
+    ready
+    Seq(topK, count, hybrid).foreach { q =>
+      spark.sql(q).queryExecution.optimizedPlan
+      val (plan, jobs) = RefreshJobCount.jobsIn(spark, "claim-plan")(
+        spark.sql(q).queryExecution.optimizedPlan)
+      assert(claimed(plan), s"not claimed: $q\n$plan")
+      assert(jobs == 0, s"planning launched $jobs Spark jobs: $q")
+    }
+  }
+
+  test("every index write is seen by the next claimed statement") {
+    ready
+    assertAgrees(spark, "after CREATE INDEX")
+    insert(41 to 48)
+    run(spark, s"VACUUM (REFRESH_TABLE) $tbl")
+    assertAgrees(spark, "after INSERT + refresh")
+    run(spark, s"DELETE FROM $tbl WHERE pk IN (6, 12, 41)")
+    run(spark, s"VACUUM (REFRESH_TABLE) $tbl")
+    assertAgrees(spark, "after DELETE + refresh")
+    run(spark, s"VACUUM (COMPACT_TABLE) $tbl")
+    assertAgrees(spark, "after COMPACT")
+    run(spark, s"DROP INDEX $idx")
+    run(spark, s"DELETE FROM $tbl WHERE pk IN (18, 24, 42)")
+    createIndex()
+    assertAgrees(spark, "after DROP + re-CREATE INDEX")
+  }
+
+  test("a second session plans the same claimed answers from the shared snapshot") {
+    ready
+    val want = Seq(topK, count, hybrid).map(q => run(spark, q).toSeq)
+    val s2 = spark.newSession()
+    registerFunctions(s2)
+    assert(Seq(topK, count, hybrid).map(q => run(s2, q).toSeq) == want)
+    assertAgrees(s2, "second session")
+  }
+}
