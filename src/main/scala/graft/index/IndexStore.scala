@@ -9,6 +9,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Durable, segmented storage for [[InvertedIndex]].
   *
@@ -61,6 +62,16 @@ import org.apache.spark.sql.functions._
   * are never cached: every call rebinds copies of the cached relations to
   * the caller's session, so every `load` yields fresh leaf exprIds and
   * plans under the caller's SQLConf.
+  *
+  * Scoring reads the snapshot's files, not its frames: `load` hands the
+  * index the snapshot's [[IndexFiles]] (each live segment's postings files
+  * by bucket and docstats files, the live tombstone files and the legacy
+  * tombstone lines), and the term-bag scoring leaf ([[TermBagScan]]) opens
+  * them inside one task, applying the generation-scoped tombstones and
+  * re-deriving live `df`/`ctf`/`max_tf` exactly as [[load]]'s frames do.
+  * ClaimScoreTopK (graft.plans) drops a `ts_match` semi-join whose query is
+  * an OR of single terms covering the scorer's terms, and keeps the join
+  * with the base table.
   */
 object IndexStore {
   val NumBuckets = 64
@@ -580,6 +591,22 @@ object IndexStore {
         .map(_.dropDuplicates("doc_id", "max_seg"))
     }
 
+    /** What a scoring task reads ([[TermBagScan]]): every segment's
+      * postings (by bucket) and docstats files and the live tombstones —
+      * listings of the cached relations, no IO. */
+    lazy val files: IndexFiles = {
+      val (post, stats) = (parts("postings"), parts("docstats"))
+      IndexFiles(
+        segs.indices.map { i =>
+          SegmentFiles(segs(i).stripPrefix("seg=").toInt,
+            post(i).dataSchema, IndexFile.listing(post(i)),
+            stats(i).dataSchema, IndexFile.listing(stats(i)).map(_._2))
+        },
+        genRel.fold(new StructType())(_.dataSchema),
+        genRel.toSeq.flatMap(IndexFile.listing(_).map(_._2)),
+        legacy.map { case (d, _, m) => (d, m) })
+    }
+
     /** (count, Σ dlen) of the live tombstones: the collection-total
       * adjustments are two scalars — metadata, not data. */
     lazy val deleted: (Long, Long) = tombstones(spark).fold((0L, 0L)) { d =>
@@ -671,7 +698,7 @@ object IndexStore {
           .agg(count(lit(1)).as("df"), sum(col("tf")).as("ctf"),
             max(col("tf")).as("max_tf"))
     InvertedIndex(postings, termDict, docStats,
-      snap.numDocs - snap.deleted._1, snap.sumDl - snap.deleted._2)
+      snap.numDocs - snap.deleted._1, snap.sumDl - snap.deleted._2, Some(snap.files))
   }
 
   /** Compaction (the reference's background compaction task,

@@ -26,18 +26,24 @@ import graft.analysis.AnalyzerRegistry
   * Scale notes: postings are built with one explode + one groupBy shuffle,
   * both keyed on (doc, term) so map-side partial aggregation applies; the
   * only global state is the (tiny) term dictionary and two scalars. Every
-  * search primitive below is a join/semi-join — no `collect()` — so plans
-  * compose and stay distributed. Scoring drives from the matched postings
-  * (bucket-pruned union), never from a full corpus scan — the Spark shape of
-  * the reference's WAND postings walk (max_score_iterator.hpp): cost is
-  * O(Σ df(term)), not O(numDocs).
+  * match primitive below is a join/semi-join — no `collect()` — so plans
+  * compose and stay distributed. The term-bag scorers ([[scoredTerms]])
+  * drive from one leaf operator, [[TermBagScan]]: a single task reads the
+  * query terms' bucket-pruned postings and the docstats — the reference's
+  * postings walk into a top-k collector (max_score_iterator.hpp,
+  * top_k_heap.hpp): cost is O(Σ df(term)) postings rows, never a corpus
+  * scan of postings, with no shuffle. An index loaded through
+  * [[IndexStore]] carries its reader snapshot's `files`, which the leaf
+  * reads directly; an index built in memory has none and the leaf reads
+  * its frames.
   */
 final case class InvertedIndex(
     postings: DataFrame,
     termDict: DataFrame,
     docStats: DataFrame,
     numDocs: Long,
-    sumDl: Long) {
+    sumDl: Long,
+    files: Option[IndexFiles] = None) {
 
   /** Exact collection average doc length; derived so segment merges stay
     * lossless (sumDl adds, avgDl wouldn't). */
@@ -54,7 +60,7 @@ final case class InvertedIndex(
     base.filter(col("term") === t)
   }
 
-  private def postingsForAny(terms: Seq[String]): DataFrame = {
+  private[index] def postingsForAny(terms: Seq[String]): DataFrame = {
     val base = if (hasBucket)
       postings.filter(col("bucket").isin(terms.map(IndexStore.bucketOf).distinct: _*))
     else postings
@@ -410,44 +416,29 @@ final case class InvertedIndex(
     chained.select(col("doc_id"))
   }
 
-  /** Matched docs with per-query-term tf and df as pivoted columns
-    * (`0_tf`, `0_df`, `1_tf`, …, indexed by position in `distinctTerms`),
-    * joined with docStats for dlen. This is the shared scoring drive: only
-    * docs matching ≥1 term are ever produced (union of bucket-pruned per-term
-    * postings), so cost is O(Σ df(term)) — the reference's postings-walk
-    * shape (top_k_heap.hpp, max_score_iterator.hpp), not a corpus scan. */
-  private def matchedTermStats(distinctTerms: Seq[String],
-      candidates: Option[DataFrame] = None): DataFrame = {
-    val tIdx = typedlit(distinctTerms.zipWithIndex.toMap)
-    val base = postingsForAny(distinctTerms)
-    // WAND candidate prune: only docs that matched a NECESSARY term enter
-    // the pivot/groupBy shuffle and the docStats join
-    val pruned = candidates.fold(base)(c => base.join(c, Seq("doc_id"), "left_semi"))
-    val matched = pruned
-      .join(broadcast(termDictFor(distinctTerms)
-        .select(col("term"), col("df"), col("ctf"))), "term")
-      .withColumn("ti", element_at(tIdx, col("term")))
-    matched.groupBy(col("doc_id"))
-      .pivot("ti", distinctTerms.indices)
-      .agg(first(col("tf")).as("tf"), first(col("df")).as("df"),
-        first(col("ctf")).as("ctf"))
-      .join(docStats.select(col("doc_id"), col("dlen")), "doc_id")
-  }
+  /** The scoring drive: one row per doc matching ≥1 of `terms`, with
+    * `dlen` and per-distinct-term `i_tf`, `i_df`, `i_ctf` (null where the doc
+    * lacks term `i`) and `gi_ctf` — see [[TermBagScan]]. Cost is
+    * O(Σ df(term)) postings rows plus the docstats read, in one task; with
+    * `wand` the task keeps only docs of the WAND necessary prefix. */
+  private def termBag(terms: Seq[String],
+      wand: Option[TermBagScan.Wand] = None): DataFrame =
+    TermBagScan.frame(this, terms, wand)
 
   /** BM25 scores for a bag of query terms, one row per matching doc.
     *
     * Standard BM25 (k1=1.2, b=0.75, Lucene-style idf) — per-term partial
-    * scores are separate pivoted columns added in query-term order, so the
-    * double addition order is fixed and the score is reproducible
-    * bit-for-bit (a groupBy sum would add in shuffle arrival order).
+    * scores are separate columns added in query-term order, so the double
+    * addition order is fixed and the score is reproducible bit-for-bit (a
+    * groupBy sum would add in shuffle arrival order).
     */
   def bm25(terms: Seq[String], k1: Double = 1.2, b: Double = 0.75): DataFrame =
     bm25Scored(terms, k1, b, None)
 
   private def bm25Scored(terms: Seq[String], k1: Double, b: Double,
-      candidates: Option[DataFrame]): DataFrame = {
+      wand: Option[TermBagScan.Wand]): DataFrame = {
     val distinct = terms.distinct
-    val scored = matchedTermStats(distinct, candidates)
+    val scored = termBag(terms, wand)
     val scoreCols = terms.map { t =>
       val i = distinct.indexOf(t)
       val tf = coalesce(col(s"${i}_tf").cast("double"), lit(0.0))
@@ -575,7 +566,7 @@ final case class InvertedIndex(
     * with bm25. */
   def tfidf(terms: Seq[String], withNorms: Boolean = false): DataFrame = {
     val distinct = terms.distinct
-    val scored = matchedTermStats(distinct)
+    val scored = termBag(distinct)
     val scoreCols = terms.map { t =>
       val i = distinct.indexOf(t)
       val tf = coalesce(col(s"${i}_tf").cast("double"), lit(0.0))
@@ -606,7 +597,7 @@ final case class InvertedIndex(
     require(mu >= 0.0 && !mu.isInfinite && !mu.isNaN,
       "lm_dirichlet: mu must be a non-negative finite value")
     val distinct = terms.distinct
-    val scored = matchedTermStats(distinct)
+    val scored = termBag(distinct)
     val sumDlD = sumDl.toDouble
     val termScores = terms.map { t =>
       val i = distinct.indexOf(t)
@@ -633,7 +624,7 @@ final case class InvertedIndex(
     require(lambda > 0.0 && lambda <= 1.0,
       "lm_jelinek_mercer: lambda must be in (0, 1]")
     val distinct = terms.distinct
-    val scored = matchedTermStats(distinct)
+    val scored = termBag(distinct)
     val sumDlD = sumDl.toDouble
     val termScores = terms.map { t =>
       val i = distinct.indexOf(t)
@@ -659,13 +650,8 @@ final case class InvertedIndex(
     val distinct = terms.distinct
     // Indri smoothing needs each term's GLOBAL ctf even for docs where the
     // term is absent (tf=0 still contributes log(μ·p_c/(dlen+μ))) — the
-    // pivoted per-doc ctf is null there, so carry a broadcast one-row
-    // global-stats plan instead.
-    val globals = termDictFor(distinct).agg(
-      max(when(col("term") === distinct.head, col("ctf"))).as("g0_ctf"),
-      distinct.indices.drop(1).map(i =>
-        max(when(col("term") === distinct(i), col("ctf"))).as(s"g${i}_ctf")): _*)
-    val scored = matchedTermStats(distinct).crossJoin(broadcast(globals))
+    // per-doc ctf is null there, so read the leaf's `gi_ctf` instead.
+    val scored = termBag(distinct)
     val sumDlD = sumDl.toDouble
     val termScores = terms.map { t =>
       val i = distinct.indexOf(t)
@@ -687,7 +673,7 @@ final case class InvertedIndex(
     * `saturated`, `chi_squared`). */
   def dfi(terms: Seq[String], measure: String = "standardized"): DataFrame = {
     val distinct = terms.distinct
-    val scored = matchedTermStats(distinct)
+    val scored = termBag(distinct)
     val sumDlD = sumDl.toDouble
     val termScores = terms.map { t =>
       val i = distinct.indexOf(t)
@@ -709,13 +695,13 @@ final case class InvertedIndex(
 
   /** raw_boost — constant score per matched doc (raw_boost.hpp). */
   def rawBoost(terms: Seq[String], boost: Double = 1.0): DataFrame =
-    matchedTermStats(terms.distinct)
+    termBag(terms.distinct)
       .select(col("doc_id"), lit(boost).as("_score"))
 
   /** raw_tf / raw_dl — the reference's diagnostic scorers (search.cpp:142-173). */
   def rawTf(terms: Seq[String]): DataFrame = {
     val distinct = terms.distinct
-    val scored = matchedTermStats(distinct)
+    val scored = termBag(distinct)
     val tfs = terms.map { t =>
       coalesce(col(s"${distinct.indexOf(t)}_tf").cast("double"), lit(0.0))
     }
@@ -724,7 +710,7 @@ final case class InvertedIndex(
   }
 
   def rawDl(terms: Seq[String]): DataFrame =
-    matchedTermStats(terms.distinct)
+    termBag(terms.distinct)
       .select(col("doc_id"), col("dlen").cast("double").as("_score"))
 
   /** BM25 top-k with score pushdown: per-partition top-k heaps before the
@@ -738,54 +724,51 @@ final case class InvertedIndex(
       .limit(k)
 
   /** BM25 with a minimum-score floor — the reference's `min_score` WAND
-    * threshold claim (duckdb_table_function.h:176-182; max_score_iterator.hpp):
-    * the floor seeds the drive instead of post-filtering.
+    * threshold claim (duckdb_table_function.h:176-182; max_score_iterator.hpp).
     *
     * Two-level WAND, batch-shaped: per-term score UPPER BOUNDS come from the
-    * term dictionary (idf × the tf-saturation ceiling at max_tf with the
-    * dl→0 length bound — |q| doubles to the driver, metadata not data).
-    * Sorting terms by bound, the NECESSARY set N is the smallest prefix such
-    * that the remaining terms' bounds sum below the floor: a doc matching no
-    * term of N can never reach it. Candidates therefore drive from N's
-    * postings only, and the pivot + docStats join score just those docs —
-    * the non-necessary terms' postings are touched only semi-joined against
-    * the (floor-pruned) candidate set. Exactness: the final filter is the
-    * same `_score >= minScore` over fully-scored docs; bounds only ever
-    * EXCLUDE docs that provably cannot pass (IndexSpec asserts equality with
-    * the post-filter plan and that candidates < matched docs). */
+    * live term statistics (idf × the tf-saturation ceiling at max_tf with
+    * the dl→0 length bound). Sorting terms by bound, the NECESSARY set N is
+    * the smallest prefix such that the remaining terms' bounds sum below the
+    * floor: a doc matching no term of N can never reach it. The scoring
+    * task computes N from the `df`/`max_tf` it reads and emits only docs
+    * matching a term of N, so planning reads nothing. Exactness: the final
+    * filter is the same `_score >= minScore` over fully-scored docs; bounds
+    * only ever EXCLUDE docs that provably cannot pass (IndexSpec asserts
+    * equality with the post-filter plan). */
   def bm25MinScore(terms: Seq[String], minScore: Double,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val (byUb, p) = wandNecessary(terms, minScore, k1, b)
-    if (p == 0) bm25Scored(terms, k1, b, None).filter(lit(false)) // floor unreachable
-    else if (p == byUb.size) bm25Scored(terms, k1, b, None).filter(col("_score") >= minScore)
-    else {
-      val candidates = anyOf(byUb.take(p))
-      bm25Scored(terms, k1, b, Some(candidates)).filter(col("_score") >= minScore)
-    }
-  }
+      k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    bm25Scored(terms, k1, b, Some(TermBagScan.Wand(minScore, k1, b)))
+      .filter(col("_score") >= minScore)
 
-  /** Terms sorted by score upper bound (desc) and the necessary-prefix size
-    * for `minScore` — exposed so tests can assert the floor prunes the
-    * drive. The dictionary read is ≤ |query terms| rows: metadata, not
-    * data. */
+  /** [[InvertedIndex.wandNecessary]] over this index's term dictionary —
+    * exposed so tests can assert a floor prunes the drive. */
   private[index] def wandNecessary(terms: Seq[String], minScore: Double,
       k1: Double, b: Double): (Seq[String], Int) = {
-    val distinct = terms.distinct
-    val mult = terms.groupBy(identity).view.mapValues(_.size.toDouble).toMap
-    val ub = termDictFor(distinct)
+    val stats = termDictFor(terms.distinct)
       .select(col("term"), col("df").cast("double"), col("max_tf").cast("double"))
-      .collect().map { r =>
-        val (t, dfT, maxTf) = (r.getString(0), r.getDouble(1), r.getDouble(2))
-        val idf = math.log(1.0 + (numDocs.toDouble - dfT + 0.5) / (dfT + 0.5))
-        t -> mult(t) * idf * maxTf * (k1 + 1.0) / (maxTf + k1 * (1.0 - b))
-      }.toMap
-    val byUb = distinct.sortBy(t => -ub.getOrElse(t, 0.0))
-    def tailSum(p: Int) = byUb.drop(p).map(ub.getOrElse(_, 0.0)).sum
-    (byUb, (0 to byUb.size).find(tailSum(_) < minScore).getOrElse(byUb.size))
+      .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    InvertedIndex.wandNecessary(terms, stats, numDocs, minScore, k1, b)
   }
 }
 
 object InvertedIndex {
+  /** Terms sorted by bm25 score upper bound (desc) and the WAND
+    * necessary-prefix size for `minScore`, from each term's `(df, max_tf)`
+    * (`stats`; a term without stats bounds at 0). A query term repeated m
+    * times bounds m-fold. */
+  def wandNecessary(terms: Seq[String], stats: Map[String, (Double, Double)],
+      numDocs: Long, minScore: Double, k1: Double, b: Double): (Seq[String], Int) = {
+    val mult = terms.groupBy(identity).view.mapValues(_.size.toDouble).toMap
+    val ub = stats.map { case (t, (dfT, maxTf)) =>
+      val idf = math.log(1.0 + (numDocs.toDouble - dfT + 0.5) / (dfT + 0.5))
+      t -> mult(t) * idf * maxTf * (k1 + 1.0) / (maxTf + k1 * (1.0 - b))
+    }
+    val byUb = terms.distinct.sortBy(t => -ub.getOrElse(t, 0.0))
+    def tailSum(p: Int) = byUb.drop(p).map(ub.getOrElse(_, 0.0)).sum
+    (byUb, (0 to byUb.size).find(tailSum(_) < minScore).getOrElse(byUb.size))
+  }
+
   /** Build the index in ONE analyzer pass: analyze → posexplode →
     * groupBy(doc, term) → postings; termDict and docStats both derive from
     * postings (dlen = Σ tf), so the tokenizer UDF runs exactly once —

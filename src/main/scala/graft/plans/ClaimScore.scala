@@ -307,13 +307,33 @@ case class ClaimScoreTopK(spark: SparkSession) extends Rule[LogicalPlan] {
         PlanShapes.isColumnOf(lr, a, a.name) || scoreIds.contains(a.exprId))
     } yield candidate match {
       case Some(candTree) =>
-        claimFiltered(candTree, entry, scorer, query, dict, params, k, idAttr,
-          scoreIds, outList)
+        claimFiltered(absorbMatch(candTree, entry, textAttr, query, dict), entry,
+          scorer, query, dict, params, k, idAttr, scoreIds, outList)
       case None =>
         claimBare(entry, scorer, query, dict, params, k, root, refs, scoreIds,
           outList)
     }
   }
+
+  /** `candTree` without the `ts_match` semi-joins the scorer makes
+    * redundant: a [[TsMatchLeg]] on the same column, dictionary and full
+    * index whose query is an OR of single terms covering every analyzed
+    * scorer term. Exact, because a term-bag scorer returns only docs holding
+    * at least one of its terms, and each such doc matches the OR. The scan
+    * stays in the tree, so the top-k still joins the base table and a row
+    * deleted before its REFRESH is still left out. */
+  private def absorbMatch(candTree: LogicalPlan, entry: IndexCatalog.TextEntry,
+      textAttr: AttributeReference, query: String, dict: String): LogicalPlan =
+    if (graft.search.TsQueryCodec.isEncoded(query)) candTree
+    else {
+      val terms = ScorerShapes.termsOf(query, dict).toSet
+      candTree.transformUp {
+        case j @ Join(left, _, LeftSemi, _, _) if j.getTagValue(TsMatchLeg.tag).exists { l =>
+            l.segDir == entry.segDir && l.dict == dict && l.text == textAttr.exprId &&
+              TsMatchLeg.orTerms(l.query).exists(terms.subsetOf) } =>
+          left
+      }
+    }
 
   /** The original bare-scan drive: index top-k, then one late-materializing
     * join-back for any projected columns beyond the id. */
@@ -428,9 +448,10 @@ case class ClaimScoreTopK(spark: SparkSession) extends Rule[LogicalPlan] {
   * (also `>`, and the mirrored literal-first forms) — into an index-driven
   * semi-join. For bm25 the floor seeds the two-level WAND drive
   * (InvertedIndex.bm25MinScore; reference min_score claim,
-  * duckdb_table_function.h:176-182): candidates come from the necessary
-  * term set's postings only. Other scorers score their matched docs and
-  * filter. Non-claimable conjuncts stay behind as residual filters. */
+  * duckdb_table_function.h:176-182): the scoring task keeps only docs of
+  * the necessary term set, computed from the term statistics it reads, so
+  * the claim itself reads nothing. Other scorers score their matched docs
+  * and filter. Non-claimable conjuncts stay behind as residual filters. */
 case class ClaimScoreFilter(spark: SparkSession) extends Rule[LogicalPlan] {
 
   /** `(scorerUdf, threshold, strict)` for the four comparison forms. */

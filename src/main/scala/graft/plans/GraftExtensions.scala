@@ -1,10 +1,11 @@
 package graft.plans
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.expressions.{And => CAnd, AttributeReference, EqualTo, Expression, Literal, ScalaUDF}
+import org.apache.spark.sql.catalyst.expressions.{And => CAnd, AttributeReference, EqualTo, ExprId, Expression, Literal, ScalaUDF}
 import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, JoinHint, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.search.IndexCatalog
@@ -1242,6 +1243,33 @@ private[plans] object TsPredicates {
   }
 }
 
+/** The text claim behind a [[ClaimTsMatch]] semi-join — one positive
+  * `ts_match` leg over a plain column — tagged on the join so
+  * [[ClaimScoreTopK]] can absorb a leg its scorer makes redundant. */
+private[plans] final case class TsMatchLeg(segDir: String, dict: String,
+    text: ExprId, query: graft.search.TsQuery)
+
+private[plans] object TsMatchLeg {
+  val tag: TreeNodeTag[TsMatchLeg] = TreeNodeTag("graft.tsMatchLeg")
+
+  /** The terms of a query that matches exactly the docs holding at least
+    * one of them: an OR (nested, boosted or not) of single terms. */
+  def orTerms(q: graft.search.TsQuery): Option[Set[String]] = {
+    import graft.search.TsQuery._
+    q match {
+      case Term(t) => Some(Set(t))
+      case Phrase(Seq(t)) => Some(Set(t))
+      case SlopPhrase(Seq(t), _) => Some(Set(t))
+      case Boost(inner, _) => orTerms(inner)
+      case And(Seq(inner)) => orTerms(inner)
+      case Or(qs) if qs.nonEmpty =>
+        val parts = qs.map(orTerms)
+        if (parts.forall(_.isDefined)) Some(parts.flatten.reduce(_ ++ _)) else None
+      case _ => None
+    }
+  }
+}
+
 case class ClaimTsMatch(spark: SparkSession) extends Rule[LogicalPlan] {
   import TsPredicates.{asTsMatch, conjuncts}
 
@@ -1389,23 +1417,31 @@ case class ClaimTsMatch(spark: SparkSession) extends Rule[LogicalPlan] {
     }
 
     val joined = claimable.foldLeft(child) {
-      case (acc, (_, legs, docId, negated, _)) =>
+      case (acc, (_, legs, docId, negated, args)) =>
+        val parsed = legs.map { case (segDir, dict, build) =>
+          val a = graft.analysis.AnalyzerRegistry.get(dict)
+          (segDir, dict, graft.search.TsQuery.bindDict(build(a), a))
+        }
         // one drive per leg; an OR conjunct unions its legs' drives (semi/
         // anti joins are duplicate-insensitive, so no distinct needed)
-        val matched = legs.map { case (segDir, dict, build) =>
+        val matched = parsed.map { case (segDir, _, q) =>
           val idx = graft.index.IndexStore.load(spark, segDir)
-          val a = graft.analysis.AnalyzerRegistry.get(dict)
-          val parsed = graft.search.TsQuery.bindDict(build(a), a)
-          graft.search.TsQueryExec.matching(idx, parsed).select("doc_id")
+          graft.search.TsQueryExec.matching(idx, q).select("doc_id")
         }.reduce(_ unionByName _)
         // optimizedPlan, NOT analyzed: the injected subtree skips the earlier
         // optimizer batches, so e.g. a Deduplicate (from .distinct()) would
         // otherwise reach physical planning unreplaced and fail the query
         val mPlan = matched.queryExecution.optimizedPlan
         val rightId = mPlan.output.find(_.name == "doc_id").get
-        Join(acc, mPlan,
+        val j = Join(acc, mPlan,
           if (negated) org.apache.spark.sql.catalyst.plans.LeftAnti else LeftSemi,
           Some(EqualTo(docId, rightId)), JoinHint.NONE)
+        (parsed, args) match {
+          case (Seq((segDir, dict, q)), Seq(text: AttributeReference)) if !negated =>
+            j.setTagValue(TsMatchLeg.tag, TsMatchLeg(segDir, dict, text.exprId, q))
+          case _ => ()
+        }
+        j
     }
     val joinedAll = fieldClaimable.foldLeft(joined) {
       case (acc, (_, attr, mkPred, entry, idAttr)) =>

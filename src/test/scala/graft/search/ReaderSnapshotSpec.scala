@@ -55,6 +55,12 @@ class ReaderSnapshotSpec extends AnyFunSuite {
   private val topK = s"SELECT pk FROM $idx WHERE ${m("'alpha'")} " +
     s"ORDER BY bm25(body, 'alpha', '$dict') DESC LIMIT 5"
   private val count = s"SELECT count(*) AS n FROM $idx WHERE ${m("'bravo'")}"
+  private val threshold = s"SELECT pk FROM $idx WHERE bm25(body, 'alpha bravo', '$dict') >= 1.0"
+  /** The search mix's bm25 shape: the text match is an OR of the scorer's
+    * terms, so the top-k absorbs it. */
+  private def canonical(k: Int) =
+    s"SELECT pk, bm25(body, 'alpha bravo', '$dict') AS s FROM $idx " +
+      s"WHERE ${m("ts_or(ts_phrase('alpha'), ts_phrase('bravo'))")} ORDER BY s DESC LIMIT $k"
   private val hybrid = s"SELECT pk FROM $idx WHERE ${m("'charlie'")} " +
     "ORDER BY emb <-> [20.3, 0.0, 0.0, 0.0]::FLOAT[4] LIMIT 5"
 
@@ -90,9 +96,16 @@ class ReaderSnapshotSpec extends AnyFunSuite {
     }
   }
 
+  private def semiJoins(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int =
+    plan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join
+          if j.joinType == org.apache.spark.sql.catalyst.plans.LeftSemi => j
+    }.size
+
   test("warm claims plan with zero Spark jobs: bm25 top-k, ts_match count, hybrid") {
     ready
-    Seq(topK, count, hybrid).foreach { q =>
+    // the bm25 floor's WAND prefix is worked out when the statement runs
+    Seq(topK, count, hybrid, threshold).foreach { q =>
       spark.sql(q).queryExecution.optimizedPlan
       val (plan, jobs) = RefreshJobCount.jobsIn(spark, "claim-plan")(
         spark.sql(q).queryExecution.optimizedPlan)
@@ -125,5 +138,37 @@ class ReaderSnapshotSpec extends AnyFunSuite {
     registerFunctions(s2)
     assert(Seq(topK, count, hybrid).map(q => run(s2, q).toSeq) == want)
     assertAgrees(s2, "second session")
+  }
+
+  test("a text match that misses a scorer term is not absorbed") {
+    ready
+    val q = s"SELECT pk FROM $idx WHERE ${m("'alpha'")} " +
+      s"ORDER BY bm25(body, 'alpha bravo', '$dict') DESC LIMIT 40"
+    val df = spark.sql(q)
+    assert(claimed(df.queryExecution.optimizedPlan))
+    assert(semiJoins(df.queryExecution.optimizedPlan) == 1, "the ts_match drive stays")
+    val alpha = pks(run(spark, s"SELECT pk FROM $tbl WHERE body LIKE '%alpha%'"))
+    val got = pks(df.collect())
+    assert(got.nonEmpty && got.subsetOf(alpha), s"non-alpha docs in $got")
+  }
+
+  test("the absorbed top-k: no drive, base-table join kept, at most 2 Spark jobs") {
+    ready
+    val plan = spark.sql(canonical(5)).queryExecution.optimizedPlan
+    assert(claimed(plan))
+    assert(semiJoins(plan) == 0, s"the ts_match drive must be absorbed\n$plan")
+    run(spark, canonical(5))
+    val (_, jobs) = RefreshJobCount.jobsIn(spark, "topk-exec")(run(spark, canonical(5)))
+    assert(jobs <= 2, s"the warm top-k ran $jobs Spark jobs")
+
+    // between a DELETE and its REFRESH the index still scores the deleted
+    // rows; the base-table join leaves them out and nothing else changes
+    val all = run(spark, canonical(100)).map(r => r.getAs[Number](0).intValue -> r.getDouble(1))
+    val gone = all.take(3).map(_._1)
+    run(spark, s"DELETE FROM $tbl WHERE pk IN (${gone.mkString(", ")})")
+    try {
+      val after = run(spark, canonical(5)).map(r => r.getAs[Number](0).intValue -> r.getDouble(1))
+      assert(after.toSeq == all.filterNot(p => gone.contains(p._1)).take(5).toSeq)
+    } finally run(spark, s"VACUUM (REFRESH_TABLE) $tbl")
   }
 }
