@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   * re-index, not 4+ source evaluations) — and the planning of a claimed
   * bm25 top-k on the warm index, which must launch no job at all (the
   * reader snapshot serves `IndexStore.load` without file listing or schema
-  * inference), and the execution of that warm top-k. Usage: runMain
-  * graft.RefreshJobCount [sfDir]
+  * inference), and the execution of that warm top-k, of a warm claimed
+  * `ts_match` count (the text-match leaf's count-only mode: one job) and of
+  * a warm claimed phrase match. Usage: runMain graft.RefreshJobCount [sfDir]
   */
 object RefreshJobCount {
 
@@ -44,6 +45,7 @@ object RefreshJobCount {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.ensurePublicDb(spark)
+    graft.search.SqlSurface.registerAll(spark)
 
     def counted(label: String)(body: => Unit): Unit =
       println(s"JOBS[$label] = ${jobsIn(spark, label)(body)._2}")
@@ -81,6 +83,14 @@ object RefreshJobCount {
     println(s"JOBS[claim-plan] = $jobs (claimed: ${!plan.toString.contains("bm25(")})")
     spark.sql(topk).collect()
     counted("topk-exec")(spark.sql(topk).collect())
+    val count = "SELECT count(*) FROM jobcount_all " +
+      "WHERE ts_match(text, ts_or(ts_phrase('vector'), ts_phrase('query')), 'whitespace')"
+    val phrase = "SELECT doc_id FROM jobcount_all " +
+      "WHERE ts_match(text, ts_phrase('hash join'), 'whitespace')"
+    Seq("count-exec" -> count, "phrase-exec" -> phrase).foreach { case (label, q) =>
+      spark.sql(q).collect()
+      counted(label)(spark.sql(q).collect())
+    }
 
     spark.sql("DROP SEARCH INDEX jobcount_topk_idx")
     spark.sql("DROP SEARCH INDEX jobcount_idx")

@@ -1,0 +1,170 @@
+package graft.index
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.sources.Filter
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+/** One parquet file of an index part, as an index task opens it. */
+final case class IndexFile(path: String, length: Long, mtime: Long) {
+  def toPartitionedFile: PartitionedFile =
+    PartitionedFile(InternalRow.empty, SparkPath.fromPath(new Path(path)), 0L, length,
+      Array.empty[String], mtime, length)
+}
+
+object IndexFile {
+  /** Every data file of `rel` with its hash bucket (None for files outside
+    * `bucket=K` dirs: an empty segment keeps `bucket` as a data column). A
+    * listing of the relation's cached file index — no IO. */
+  def listing(rel: HadoopFsRelation): Seq[(Option[Int], IndexFile)] = {
+    val bucketAt = rel.partitionSchema.fieldNames.indexOf("bucket")
+    rel.location.listFiles(Nil, Nil).flatMap { dir =>
+      val bucket =
+        if (bucketAt < 0) None
+        else Some(dir.values.get(bucketAt, rel.partitionSchema(bucketAt).dataType).toString.toInt)
+      dir.files.map(f => bucket -> IndexFile(f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+  }
+}
+
+/** One live segment's files: postings by hash bucket, and docstats. */
+final case class SegmentFiles(segNo: Int,
+    postingsSchema: StructType, postings: Seq[(Option[Int], IndexFile)],
+    docStatsSchema: StructType, docStats: Seq[IndexFile]) {
+  /** Postings files that can hold any of `buckets`. */
+  def postingsIn(buckets: Set[Int]): Seq[IndexFile] =
+    postings.collect { case (b, f) if b.forall(buckets.contains) => f }
+}
+
+/** The files of one reader snapshot that an index task reads: the live
+  * segments of the index at `dir` in manifest order, the parquet tombstone
+  * generations at or above the floor, and the legacy `_DELETES` lines as
+  * `(doc_id, max_seg)`. */
+final case class IndexFiles(dir: String, segments: Seq[SegmentFiles],
+    tombstoneSchema: StructType, tombstones: Seq[IndexFile],
+    legacyTombstones: Seq[(Long, Int)])
+
+/** A relation that opens an index's files inside its own task
+  * ([[TermBagScan]], [[MatchScan]]) instead of scanning them as a file
+  * relation. `indexDir` names that index (None for one built in memory), so
+  * scan-level checks such as RBAC can map the read back to its table. */
+trait IndexLeaf {
+  def indexDir: Option[String]
+}
+
+/** What the single-task index leaves ([[TermBagScan]], [[MatchScan]]) share:
+  * opening a snapshot's parquet files inside the task, reading an in-memory
+  * index's frames through one partition, and the generation-scoped
+  * tombstones. */
+private[index] object IndexTask {
+
+  /** Builds the parquet readers a task opens [[IndexFiles]] with. Driver
+    * side: each reader is serialized into the task closure. */
+  final class Reader(spark: SparkSession) {
+    private val fmt = new ParquetFileFormat
+    private val readers = scala.collection.mutable.Map.empty[
+      (StructType, StructType, Seq[Filter]), PartitionedFile => Iterator[InternalRow]]
+
+    /** `cols` of `data` from the files `in`, with `filters` pushed down. */
+    def input(data: StructType, cols: Seq[String], filters: Seq[Filter],
+        in: Seq[IndexFile]): Input = {
+      val required = StructType(cols.map(data(_)))
+      // a fresh conf per reader: the build writes the requested schema
+      // into the conf it broadcasts
+      val read = readers.getOrElseUpdate((data, required, filters),
+        fmt.buildReaderWithPartitionValues(spark, data, StructType(Nil), required,
+          filters, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+          spark.sessionState.newHadoopConf()))
+      Input(read, required.map(_.dataType), in.map(_.toPartitionedFile))
+    }
+
+    /** The live tombstones of `files`, read in the task by
+      * [[TombstoneFiles.load]]. */
+    def tombstones(files: IndexFiles): TombstoneFiles =
+      TombstoneFiles(
+        if (files.tombstones.isEmpty) None
+        else Some(input(files.tombstoneSchema, Seq("doc_id", "max_seg"), Nil, files.tombstones)),
+        files.legacyTombstones)
+  }
+
+  /** A snapshot's tombstone parquet files and legacy lines. */
+  final case class TombstoneFiles(parquet: Option[Input], legacy: Seq[(Long, Int)]) {
+    def load(docType: DataType): Tombstones = {
+      val dead = new Tombstones(docType)
+      legacy.foreach { case (d, m) => dead.add(d, m) }
+      parquet.foreach(_.rows(r => if (!r.isNull(0)) dead.add(r.long(0), r.int(1))))
+      dead
+    }
+  }
+
+  /** `df`'s rows through one partition (an in-memory index's frames). */
+  def onePartition(spark: SparkSession, df: DataFrame): RDD[InternalRow] = {
+    val rdd = df.queryExecution.toRdd
+    if (rdd.getNumPartitions == 0) spark.sparkContext.parallelize(Seq.empty[InternalRow], 1)
+    else rdd.coalesce(1)
+  }
+
+  /** Files of one index part, the reader that opens them and the types of
+    * the columns it returns; rows reach `f` through [[Cols]]. */
+  final case class Input(read: PartitionedFile => Iterator[InternalRow],
+      types: Seq[DataType], files: Seq[PartitionedFile]) {
+    def rows(f: Cols => Unit): Unit = {
+      val c = new Cols(types)
+      files.foreach(pf => read(pf).foreach(r => f(c.bind(r))))
+    }
+  }
+
+  /** A reader row viewed through typed getters. Reader rows are reused
+    * buffers: every value is copied out before the next row. */
+  final class Cols(types: Seq[DataType]) {
+    private var row: InternalRow = _
+    def bind(r: InternalRow): Cols = { row = r; this }
+    def isNull(i: Int): Boolean = row.isNullAt(i)
+    def term(i: Int): UTF8String = row.getUTF8String(i)
+    def long(i: Int): Long = types(i) match {
+      case LongType => row.getLong(i)
+      case IntegerType => row.getInt(i).toLong
+      case t => throw new IllegalStateException(s"index column $i has type $t")
+    }
+    def int(i: Int): Int = long(i).toInt
+    /** The int array at `i` (a postings `positions`), copied; null stays null. */
+    def ints(i: Int): Array[Int] = if (row.isNullAt(i)) null else row.getArray(i).toIntArray()
+    /** The doc id at `i`, as a value of `docType`. */
+    def doc(i: Int, docType: DataType): Any = {
+      val v = types(i) match {
+        case _ if row.isNullAt(i) => null
+        case StringType => row.getUTF8String(i).copy()
+        case t => row.get(i, t)
+      }
+      convert(v, types(i), docType)
+    }
+  }
+
+  /** `v` of type `from` as a value of type `to` (segments, and tombstones
+    * that store ids as long, may differ from the union's doc id type). */
+  def convert(v: Any, from: DataType, to: DataType): Any =
+    if (from == to) v else Cast(Literal(v, from), to).eval()
+
+  /** Generation-scoped tombstones: a doc id's rows in segment `s` are dead
+    * when a tombstone of that id has `max_seg >= s`. A null id is never
+    * dead, as in the load-time anti-join. */
+  final class Tombstones(docType: DataType) {
+    private val maxSeg = new java.util.HashMap[Any, Integer]
+    def add(docId: Long, seg: Int): Unit = {
+      val k = convert(docId, LongType, docType)
+      val prev = maxSeg.get(k)
+      if (prev == null || prev < seg) maxSeg.put(k, seg)
+    }
+    def dead(doc: Any, seg: Int): Boolean = {
+      val m = maxSeg.get(doc)
+      m != null && seg <= m
+    }
+  }
+}

@@ -596,7 +596,7 @@ object IndexStore {
       * listings of the cached relations, no IO. */
     lazy val files: IndexFiles = {
       val (post, stats) = (parts("postings"), parts("docstats"))
-      IndexFiles(
+      IndexFiles(dir,
         segs.indices.map { i =>
           SegmentFiles(segs(i).stripPrefix("seg=").toInt,
             post(i).dataSchema, IndexFile.listing(post(i)),

@@ -25,16 +25,19 @@ import graft.analysis.AnalyzerRegistry
   *
   * Scale notes: postings are built with one explode + one groupBy shuffle,
   * both keyed on (doc, term) so map-side partial aggregation applies; the
-  * only global state is the (tiny) term dictionary and two scalars. Every
-  * match primitive below is a join/semi-join — no `collect()` — so plans
-  * compose and stay distributed. The term-bag scorers ([[scoredTerms]])
-  * drive from one leaf operator, [[TermBagScan]]: a single task reads the
-  * query terms' bucket-pruned postings and the docstats — the reference's
-  * postings walk into a top-k collector (max_score_iterator.hpp,
+  * only global state is the (tiny) term dictionary and two scalars. The
+  * expansion primitives below (prefix, wildcard, regexp, range, fuzzy,
+  * n-gram, phrase-prefix) are term-dictionary joins over postings — no
+  * `collect()` — so plans compose and stay distributed. Two single-task
+  * leaves drive everything else: the term-bag scorers ([[scoredTerms]])
+  * read [[TermBagScan]], and exact-term matches (terms, phrases and their
+  * boolean trees, [[graft.search.TsQueryExec.matching]]) read
+  * [[MatchScan]]. Each task reads the query terms' bucket-pruned postings —
+  * the reference's postings walk into a collector (max_score_iterator.hpp,
   * top_k_heap.hpp): cost is O(Σ df(term)) postings rows, never a corpus
   * scan of postings, with no shuffle. An index loaded through
-  * [[IndexStore]] carries its reader snapshot's `files`, which the leaf
-  * reads directly; an index built in memory has none and the leaf reads
+  * [[IndexStore]] carries its reader snapshot's `files`, which the leaves
+  * read directly; an index built in memory has none and the leaves read
   * its frames.
   */
 final case class InvertedIndex(
@@ -308,28 +311,6 @@ final case class InvertedIndex(
       .select(col("doc_id"))
   }
 
-  /** Exact positional phrase via postings positions — ts_phrase with slop 0
-    * (/root/reference/libs/iresearch/include/iresearch/search/phrase_filter.hpp).
-    * Chains per-term postings joins on doc_id, intersecting shifted position
-    * arrays; the i-th intersection holds positions where a length-i prefix of
-    * the phrase ends. All joins are co-partitioned on doc_id after the first
-    * shuffle; no driver-side state. */
-  def phrase(terms: Seq[String]): DataFrame = {
-    require(terms.nonEmpty, "empty phrase")
-    val first = postingsFor(terms.head)
-      .select(col("doc_id"), col("positions").as("chain"))
-    val chained = terms.zipWithIndex.drop(1).foldLeft(first) { case (acc, (t, _)) =>
-      val next = postingsFor(t)
-        .select(col("doc_id"), col("positions").as("next_pos"))
-      acc.join(next, "doc_id")
-        .withColumn("chain",
-          array_intersect(transform(col("chain"), p => p + 1), col("next_pos")))
-        .filter(size(col("chain")) > 0)
-        .select(col("doc_id"), col("chain"))
-    }
-    chained.select(col("doc_id"))
-  }
-
   /** Phrase whose final slot is a PREFIX match (ES match_phrase_prefix):
     * the last step of the position chain runs against the UNION of
     * positions of every prefix-expanded term, merged per doc with one
@@ -358,62 +339,6 @@ final case class InvertedIndex(
         array_intersect(transform(col("chain"), p => p + 1), col("next_pos")))
       .filter(size(col("chain")) > 0)
       .select(col("doc_id"))
-  }
-
-  /** Sloppy phrase — ts_phrase with per-gap [min,max] position ranges
-    * (/root/reference/libs/iresearch/include/iresearch/search/slop_phrase.hpp).
-    * `gaps(i)` bounds the position delta between term i and term i+1
-    * (exact phrase = (1,1) everywhere). The chain carries candidate
-    * end-positions; each step keeps positions of the next term within
-    * [prev+min, prev+max]. */
-  def sloppyPhrase(terms: Seq[String], gaps: Seq[(Int, Int)]): DataFrame = {
-    require(terms.size >= 2 && gaps.size == terms.size - 1, "gaps must be terms-1")
-    val first = postingsFor(terms.head)
-      .select(col("doc_id"), col("positions").as("chain"))
-    val chained = terms.drop(1).zip(gaps).foldLeft(first) { case (acc, (t, (lo, hi))) =>
-      val next = postingsFor(t)
-        .select(col("doc_id"), col("positions").as("next_pos"))
-      acc.join(next, "doc_id")
-        .withColumn("chain",
-          filter(col("next_pos"), p =>
-            exists(col("chain"), c => p >= c + lo && p <= c + hi)))
-        .filter(size(col("chain")) > 0)
-        .select(col("doc_id"), col("chain"))
-    }
-    chained.select(col("doc_id"))
-  }
-
-  /** Move-budget sloppy phrase (Lucene slop; reference
-    * `ts_phrase(..., slop := N)`, sloppy_phrase.test /
-    * iresearch search/phrase_filter.hpp's VariadicPhrase): matches when the
-    * terms align with total displacement Σ|pᵢ₊₁ − pᵢ − 1| ≤ slop — one
-    * inserted word costs 1, a transposed adjacent pair costs 2. Unlike
-    * [[sloppyPhrase]]'s per-gap ranges, the budget is shared and order
-    * inversions are admitted. Chained co-partitioned joins on doc_id like
-    * [[phrase]]; the chain carries (endPos, minUsedBudget) structs — a DP
-    * whose state is one struct per candidate position, all inside
-    * higher-order functions (codegen'd, no UDF). */
-  def slopPhrase(terms: Seq[String], slop: Int): DataFrame = {
-    require(terms.size >= 2, "slop phrase needs >= 2 terms")
-    val first = postingsFor(terms.head)
-      .select(col("doc_id"), transform(col("positions"),
-        p => struct(p.as("p"), lit(0).as("c"))).as("chain"))
-    val chained = terms.drop(1).foldLeft(first) { (acc, t) =>
-      val next = postingsFor(t)
-        .select(col("doc_id"), col("positions").as("next_pos"))
-      acc.join(next, "doc_id")
-        .withColumn("chain",
-          filter(
-            transform(col("next_pos"), pp => struct(
-              pp.as("p"),
-              array_min(transform(
-                filter(col("chain"), e => e.getField("p") =!= pp),
-                e => e.getField("c") + abs(pp - e.getField("p") - lit(1)))).as("c"))),
-            e => e.getField("c").isNotNull && e.getField("c") <= slop))
-        .filter(size(col("chain")) > 0)
-        .select(col("doc_id"), col("chain"))
-    }
-    chained.select(col("doc_id"))
   }
 
   /** The scoring drive: one row per doc matching ≥1 of `terms`, with

@@ -399,7 +399,10 @@ case class RbacCheck(spark: SparkSession)
         inner.outputSet
       inner.foreach {
         case lr: LogicalRelation =>
-          PlanShapes.scanRoot(lr).foreach { root =>
+          // an index leaf reads its artifacts inside its own task
+          val leafDir = Some(lr.relation).collect { case l: graft.index.IndexLeaf => l }
+            .flatMap(_.indexDir)
+          PlanShapes.scanRoot(lr).orElse(leafDir).foreach { root =>
             // an index artifact counts as reading the SOURCE columns it
             // materializes (postings reveal the indexed column; the
             // covering sidecar carries source columns verbatim)

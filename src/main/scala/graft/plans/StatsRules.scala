@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.index.{IndexStore, PkIndex}
+import graft.index.{IndexStore, MatchScan, PkIndex}
 import graft.search.IndexCatalog
 
 /** Shared helpers for the metadata/statistics claim rules. */
@@ -49,20 +49,19 @@ private[plans] object StatsShapes {
     }
   }
 
-  /** Row-count → output values, when the whole aggregate list is countable
-    * from a row count alone: count(*) / count(1) / count(<non-null
-    * literal>) count every row, count(NULL) is always 0, and plain literal
-    * columns (tags like `SELECT 'all' AS leg, count(*)`) pass through.
-    * DISTINCT, FILTER clauses, and column arguments bail. */
+  /** Row-count expression → output expressions, when the whole aggregate
+    * list is countable from a row count alone: count(*) / count(1) /
+    * count(<non-null literal>) count every row, count(NULL) is always 0,
+    * and plain literal columns (tags like `SELECT 'all' AS leg, count(*)`)
+    * pass through. DISTINCT, FILTER clauses, and column arguments bail. */
   def countOnlyAggs(aggs: Seq[org.apache.spark.sql.catalyst.expressions.NamedExpression])
-      : Option[Long => Seq[Any]] = {
-    val legs: Seq[Option[Long => Any]] = aggs.map {
+      : Option[Expression => Seq[Expression]] = {
+    val legs: Seq[Option[Expression => Expression]] = aggs.map {
       case Alias(AggregateExpression(Count(args), _, false, None, _), _)
           if args.forall(_.isInstanceOf[Literal]) =>
-        if (args.forall { case Literal(v, _) => v != null })
-          Some((rc: Long) => rc)
-        else Some((_: Long) => 0L)
-      case Alias(l: Literal, _) => Some((_: Long) => l.value)
+        if (args.forall { case Literal(v, _) => v != null }) Some((rc: Expression) => rc)
+        else Some((_: Expression) => Literal(0L))
+      case Alias(l: Literal, _) => Some((_: Expression) => l)
       case _ => None
     }
     if (legs.forall(_.isDefined)) Some(rc => legs.map(_.get.apply(rc)))
@@ -75,7 +74,16 @@ private[plans] object StatsShapes {
   def countResult(agg: Aggregate, rowCount: Long): LocalRelation =
     LocalRelation(agg.output,
       Seq(InternalRow.fromSeq(
-        countOnlyAggs(agg.aggregateExpressions).get.apply(rowCount))))
+        countOnlyAggs(agg.aggregateExpressions).get.apply(Literal(rowCount)).map(_.eval()))))
+
+  /** The aggregate's outputs, under its own attributes, projected over
+    * `counted`: a one-row plan whose only column is the row count. */
+  def countProjection(agg: Aggregate, counted: LogicalPlan): Project = {
+    val values = countOnlyAggs(agg.aggregateExpressions).get.apply(counted.output.head)
+    Project(agg.aggregateExpressions.zip(values).map { case (a, v) =>
+      Alias(v, a.name)(exprId = a.exprId, qualifier = a.qualifier)
+    }, counted)
+  }
 }
 
 /** Count-only fast paths over indexed scans — the Spark analogue of the
@@ -91,7 +99,13 @@ private[plans] object StatsShapes {
   *     counts the postings drive directly and never scans the base table:
   *     the claimed semi-join's left side contributes nothing to a count
   *     once every matched doc_id is known to exist in the scan (index
-  *     fresh ⇒ drive ids ⊆ table ids).
+  *     fresh ⇒ drive ids ⊆ table ids). When every predicate is on one
+  *     index and the conjunction of their queries is an exact-term tree,
+  *     the count is the text-match leaf's count-only mode
+  *     ([[graft.index.MatchScan.count]]) under a projection: one
+  *     Spark job of one task, no exchange. A predicate on a second index or
+  *     a tree with an expansion leaf counts the distinct ids of the
+  *     composed drives.
   *
   * Both legs are gated on the `_SOURCE_FP` fingerprint (same bytes the DDL
   * fingerprinted at CREATE/REFRESH); anything stale, partial, deleted-from,
@@ -153,7 +167,7 @@ case class ClaimCountOnly(spark: SparkSession) extends Rule[LogicalPlan] {
             disjuncts(l) ++ disjuncts(r)
           case other => Seq(other)
         }
-        def leafDrive(e: Expression): Option[org.apache.spark.sql.DataFrame] =
+        def leafQuery(e: Expression): Option[(String, graft.search.TsQuery)] =
           for {
             (arg, dict, build) <- asTsMatch(e)
             attr <- Some(arg).collect { case a: AttributeReference => a }
@@ -164,26 +178,32 @@ case class ClaimCountOnly(spark: SparkSession) extends Rule[LogicalPlan] {
             if e2.predicate.isEmpty
             if indexFresh(spark, e2.segDir, rel)
           } yield {
-            val idx = IndexStore.load(spark, e2.segDir)
             val a = graft.analysis.AnalyzerRegistry.get(dict)
-            graft.search.TsQueryExec
-              .matching(idx, graft.search.TsQuery.bindDict(build(a), a))
-              .select("doc_id")
+            (e2.segDir, graft.search.TsQuery.bindDict(build(a), a))
           }
         // each conjunct: a claimable leaf, or an OR whose every disjunct is
-        // one — the OR counts through the UNION of its leaf drives
-        val parts = conjuncts(cond)
-        val claims = parts.map { p =>
-          val legs = disjuncts(p).map(leafDrive)
-          if (legs.exists(_.isEmpty)) None
-          else Some(legs.flatten.reduce(_ unionByName _))
+        // one
+        val parts = conjuncts(cond).map(p => disjuncts(p).map(leafQuery))
+        if (parts.isEmpty || parts.exists(_.exists(_.isEmpty))) return agg
+        val legs = parts.map(_.flatten)
+        import graft.search.{TsQuery, TsQueryExec}
+        // on one index, the conjunction is one query tree: an OR per
+        // conjunct, ANDed — the same docs as the semi-joined unions below
+        val tree = TsQuery.And(legs.map(ls => TsQuery.Or(ls.map(_._2))))
+        legs.flatten.map(_._1).distinct match {
+          case Seq(segDir) if MatchScan.exact(tree) =>
+            countProjection(agg,
+              MatchScan.count(IndexStore.load(spark, segDir), tree).queryExecution.optimizedPlan)
+          case _ =>
+            // conjunct intersection on postings-sized doc_id sets; an OR
+            // counts through the union of its leaf drives
+            val drive = legs.map(_.map { case (segDir, q) =>
+                TsQueryExec.matching(IndexStore.load(spark, segDir), q).select("doc_id")
+              }.reduce(_ unionByName _))
+              .reduce((a, b) => a.join(b, Seq("doc_id"), "left_semi"))
+              .select("doc_id").distinct()
+            agg.copy(child = drive.queryExecution.optimizedPlan)
         }
-        if (claims.isEmpty || claims.exists(_.isEmpty)) return agg
-        val drive = claims.flatten
-          // conjunct intersection on postings-sized doc_id sets
-          .reduce((a, b) => a.join(b, Seq("doc_id"), "left_semi"))
-          .select("doc_id").distinct()
-        agg.copy(child = drive.queryExecution.optimizedPlan)
 
       case _ => agg
     }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.analysis.AnalyzerRegistry
 import graft.index.{IndexStore, InvertedIndex}
+import graft.search.{TsQuery, TsQueryExec}
 
 /** Full-text search surface (SURVEY.md §2.9) wired end-to-end: every entry
   * runs against the persisted inverted index over `documents.parquet`
@@ -67,12 +68,12 @@ object Search {
 
   /** Exact positional phrase — ts_phrase slop 0 (phrase_filter.hpp). */
   def tsPhrase(s: SparkSession, dir: String): DataFrame =
-    idx(s, dir).phrase(Seq("hash", "join"))
+    TsQueryExec.matching(idx(s, dir), TsQuery.Phrase(Seq("hash", "join")))
 
   /** Sloppy phrase — ts_phrase with a [1,3] gap: 'hash' then 'join' within
     * 0–2 intervening tokens (slop_phrase.hpp). */
   def tsPhraseSlop(s: SparkSession, dir: String): DataFrame =
-    idx(s, dir).sloppyPhrase(Seq("hash", "join"), Seq((1, 3)))
+    TsQueryExec.matching(idx(s, dir), TsQuery.PhraseGap(Seq("hash", "join"), Seq((1, 3))))
 
   /** Facet over the term dictionary — ts_dict_agg/_count/_freq semantics
     * (ts_dict.test:42-55): every analyzed token with document count and total
@@ -147,7 +148,6 @@ object Search {
     * search.h:91): top-10 by `2·bm25(vector) + phrase('hash join')`'s
     * term contributions, summed with OR's full-outer coalesce. */
   def boostedBm25TopK(s: SparkSession, dir: String): DataFrame = {
-    import graft.search.{TsQuery, TsQueryExec}
     val q = (TsQuery.Term("vector") ^ 2.0) ||
       TsQuery.Phrase(Seq("hash", "join"))
     TsQueryExec.scoredBm25(idx(s, dir), q)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.index.IndexStore
+import graft.search.{TsQuery, TsQueryExec}
 
 /** Search-Benchmark-Game protocol harness (BASELINE.md row 1; reference
   * tests/bench/search-benchmark-game/do_query.cpp:14-24 — ops COUNT /
@@ -29,7 +30,8 @@ object SearchBench {
         _.allOf(Seq("window", "filter", "stream"))),
       QueryClass("union", Seq("join", "hash", "merge"),
         _.anyOf(Seq("join", "hash", "merge"))),
-      QueryClass("phrase", Seq("hash", "join"), _.phrase(Seq("hash", "join"))))
+      QueryClass("phrase", Seq("hash", "join"),
+        TsQueryExec.matching(_, TsQuery.Phrase(Seq("hash", "join")))))
     val ks = Seq(10, 100, 1000)
 
     def time(df: => DataFrame): Double = {

@@ -3,7 +3,7 @@ package graft.search
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.analysis.Analyzer
-import graft.index.InvertedIndex
+import graft.index.{InvertedIndex, MatchScan}
 
 /** TSQUERY — the composable search-query value of the reference
   * (/root/reference/server/connector/functions/search.h:31,82-91: operators
@@ -114,48 +114,49 @@ object TsQuery {
   * Spark analogue of the reference's filter-tree build
   * (search_filter_builder.cpp: irs::Or/And/Not at :505-531,:1135-1151).
   *
+  * An exact-term tree (terms, phrases, `And`/`Or`/`Not`/`Boost`/`All` over
+  * them) is one leaf, [[MatchScan]]: a single task walks the tree over the
+  * snapshot's postings, with no shuffle. Only a tree holding an expansion
+  * leaf (`Prefix`, `Wildcard`, `Regexp`, `TermRange`, `Fuzzy`, `NgramSim`,
+  * `GramSim`, `PhrasePrefix`) composes DataFrames: each expansion leaf is
+  * a term-dictionary join, each exact-term subtree a leaf, and the nodes
+  * joining them unions and semi/anti joins.
+  *
   * Negation scoping matches the reference: NOT inside a conjunction becomes
   * an anti-join against the positive base (never materializing a complement);
   * a top-level NOT runs against the doc universe.
   */
 object TsQueryExec {
 
-  def matching(idx: InvertedIndex, q: TsQuery): DataFrame = q match {
-    case TsQuery.All => universe(idx)
-    case TsQuery.Or(qs) if qs.isEmpty => universe(idx).filter(lit(false))
-    case TsQuery.And(qs) if qs.isEmpty => universe(idx)
-    case TsQuery.Term(t) => idx.term(t)
-    case TsQuery.Prefix(p) => idx.prefix(p)
-    case TsQuery.Wildcard(p) => idx.wildcard(p)
-    case TsQuery.Regexp(r) => idx.regexp(r)
-    case TsQuery.TermRange(lo, hi, loInc, hiInc) => idx.range(lo, hi, loInc, hiInc)
-    case TsQuery.Fuzzy(t, d, tr, p) => idx.fuzzy(t, d, transpositions = tr, prefix = p)
-    case TsQuery.NgramSim(q, j, n) => idx.ngramSimilarity(q, j, n)
-    case TsQuery.GramSim(gs, r) => idx.gramSimilarity(gs, r)
-    case TsQuery.Phrase(ts) if ts.size == 1 => idx.term(ts.head)
-    case TsQuery.Phrase(ts) => idx.phrase(ts)
-    case TsQuery.PhrasePrefix(init, p) => idx.phrasePrefix(init, p)
-    case TsQuery.PhraseGap(ts, gaps) => idx.sloppyPhrase(ts, gaps)
-    case TsQuery.SlopPhrase(ts, s) if ts.size == 1 => idx.term(ts.head)
-    case TsQuery.SlopPhrase(ts, 0) => idx.phrase(ts)
-    case TsQuery.SlopPhrase(ts, s) => idx.slopPhrase(ts, s)
-    case TsQuery.Boost(inner, _) => matching(idx, inner)
-    case TsQuery.Or(qs) =>
-      qs.map(matching(idx, _)).reduce(_ unionByName _).distinct()
-    case TsQuery.And(qs) =>
-      val (negs, poss) = qs.partition(_.isInstanceOf[TsQuery.Not])
-      val base =
-        if (poss.nonEmpty)
-          poss.map(matching(idx, _))
-            .reduce((a, b) => a.join(b, Seq("doc_id"), "left_semi"))
-        else universe(idx)
-      negs.foldLeft(base) { (acc, n) =>
-        acc.join(matching(idx, n.asInstanceOf[TsQuery.Not].q),
-          Seq("doc_id"), "left_anti")
-      }
-    case TsQuery.Not(inner) =>
-      universe(idx).join(matching(idx, inner), Seq("doc_id"), "left_anti")
-  }
+  def matching(idx: InvertedIndex, q: TsQuery): DataFrame =
+    if (MatchScan.exact(q)) MatchScan.frame(idx, q)
+    else q match {
+      case TsQuery.Prefix(p) => idx.prefix(p)
+      case TsQuery.Wildcard(p) => idx.wildcard(p)
+      case TsQuery.Regexp(r) => idx.regexp(r)
+      case TsQuery.TermRange(lo, hi, loInc, hiInc) => idx.range(lo, hi, loInc, hiInc)
+      case TsQuery.Fuzzy(t, d, tr, p) => idx.fuzzy(t, d, transpositions = tr, prefix = p)
+      case TsQuery.NgramSim(q, j, n) => idx.ngramSimilarity(q, j, n)
+      case TsQuery.GramSim(gs, r) => idx.gramSimilarity(gs, r)
+      case TsQuery.PhrasePrefix(init, p) => idx.phrasePrefix(init, p)
+      case TsQuery.Boost(inner, _) => matching(idx, inner)
+      case TsQuery.Or(qs) =>
+        qs.map(matching(idx, _)).reduce(_ unionByName _).distinct()
+      case TsQuery.And(qs) =>
+        val (negs, poss) = qs.partition(_.isInstanceOf[TsQuery.Not])
+        val base =
+          if (poss.nonEmpty)
+            poss.map(matching(idx, _))
+              .reduce((a, b) => a.join(b, Seq("doc_id"), "left_semi"))
+          else universe(idx)
+        negs.foldLeft(base) { (acc, n) =>
+          acc.join(matching(idx, n.asInstanceOf[TsQuery.Not].q),
+            Seq("doc_id"), "left_anti")
+        }
+      case TsQuery.Not(inner) =>
+        universe(idx).join(matching(idx, inner), Seq("doc_id"), "left_anti")
+      case other => throw new IllegalStateException(s"unhandled query node: $other")
+    }
 
   /** BM25 over a STRUCTURED query with boost folding — the reference's
     * `BM25(...) WHERE body @@ (q ^ w)` surface (boost_score.test: "boost
@@ -240,8 +241,7 @@ object TsQueryExec {
   /** All indexed docs (docs with ≥1 token; zero-token docs cannot be
     * represented in postings and are excluded from NOT results — deviation
     * documented in InvertedIndex.build). */
-  private def universe(idx: InvertedIndex): DataFrame =
-    idx.docStats.select(col("doc_id"))
+  private def universe(idx: InvertedIndex): DataFrame = MatchScan.frame(idx, TsQuery.All)
 
   /** Plain two-row DP edit distance for the row-eval Fuzzy leaf (the
     * indexed path uses Spark's thresholded `levenshtein` over the term
@@ -342,7 +342,7 @@ object TsQueryExec {
       }.nonEmpty
     case TsQuery.SlopPhrase(ts, slop) =>
       // DP over (position of term i, min budget used) — same recurrence as
-      // InvertedIndex.slopPhrase's chain of (p, c) structs
+      // MatchScan's chain of (position, budget) pairs
       val positions = ts.map(t => toks.zipWithIndex.collect { case (x, i) if x == t => i })
       positions.drop(1).foldLeft(positions.head.map(p => (p, 0))) { (chain, next) =>
         next.flatMap { pp =>

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.{Tables, TestSpark}
 import graft.analysis.WhitespaceAnalyzer
+import graft.search.{TsQuery, TsQueryExec}
 
 /** Index-vs-fullscan equality (the reference's own cross-check pattern —
   * demo6 re-runs its search query without postings, examples/demo6/demo.sql)
@@ -66,7 +67,7 @@ class IndexSpec extends AnyFunSuite {
 
   test("phrase matches full scan sliding window") {
     val q = Seq("hash", "join")
-    assert(ids(idx.phrase(q)) ==
+    assert(ids(TsQueryExec.matching(idx, TsQuery.Phrase(q))) ==
       toks.collect { case (id, ts) if ts.sliding(2).contains(q) => id }.toSet)
   }
 
@@ -75,7 +76,7 @@ class IndexSpec extends AnyFunSuite {
       ts.zipWithIndex.exists { case (t, i) =>
         t == "hash" && ts.slice(i + 1, i + 4).contains("join")
       }
-    assert(ids(idx.sloppyPhrase(Seq("hash", "join"), Seq((1, 3)))) ==
+    assert(ids(TsQueryExec.matching(idx, TsQuery.PhraseGap(Seq("hash", "join"), Seq((1, 3))))) ==
       toks.collect { case (id, ts) if slopMatch(ts) => id }.toSet)
   }
 
@@ -271,7 +272,8 @@ class IndexSpec extends AnyFunSuite {
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_id").collect().map(_.getLong(0)).toSet
     assert(ids(rotated.term("vector")) == ids(whole.term("vector")))
-    assert(ids(rotated.phrase(Seq("hash", "join"))) == ids(whole.phrase(Seq("hash", "join"))))
+    val phrase = TsQuery.Phrase(Seq("hash", "join"))
+    assert(ids(TsQueryExec.matching(rotated, phrase)) == ids(TsQueryExec.matching(whole, phrase)))
     assert(rotated.sumDl == whole.sumDl)
   }
 

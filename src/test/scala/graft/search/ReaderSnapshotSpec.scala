@@ -63,6 +63,11 @@ class ReaderSnapshotSpec extends AnyFunSuite {
       s"WHERE ${m("ts_or(ts_phrase('alpha'), ts_phrase('bravo'))")} ORDER BY s DESC LIMIT $k"
   private val hybrid = s"SELECT pk FROM $idx WHERE ${m("'charlie'")} " +
     "ORDER BY emb <-> [20.3, 0.0, 0.0, 0.0]::FLOAT[4] LIMIT 5"
+  /** Count filters: a term, an OR, an AND of two predicates and a phrase
+    * ("bravo delta" opens the bodies of pk 7, 19, 31 and 43). */
+  private val countFilters = Seq(m("'bravo'"), m("ts_or(ts_phrase('alpha'), ts_phrase('delta'))"),
+    s"${m("'bravo'")} AND ${m("'delta'")}", m("ts_phrase('bravo delta')"))
+  private def countOf(f: String) = s"SELECT count(*) AS n FROM $idx WHERE $f"
 
   /** No search stub (text match, scorer, vector distance) is left for
     * row-at-a-time evaluation. */
@@ -79,12 +84,22 @@ class ReaderSnapshotSpec extends AnyFunSuite {
     * reader snapshot. */
   private val filters = Seq(m("'alpha'"), m("'w41'"), s"${m("'bravo'")} AND ${m("'delta'")}")
 
-  /** Claimed answers (via the index relation) equal row evaluation. */
-  private def assertAgrees(s: SparkSession, when: String): Unit = {
+  /** A copy of the table's rows the claim rules cannot see, as `${tbl}_raw`;
+    * returns the row count. */
+  private def rawCopy(s: SparkSession): Int = {
     val rows = run(s, s"SELECT * FROM $tbl")
     s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
       .createOrReplaceTempView(s"${tbl}_raw")
-    assert(run(s, s"SELECT count(*) FROM $idx").head.getLong(0) == rows.length,
+    rows.length
+  }
+
+  private def rawCount(s: SparkSession, f: String): Long =
+    run(s, s"SELECT count(*) FROM ${tbl}_raw WHERE $f").head.getLong(0)
+
+  /** Claimed answers (via the index relation) equal row evaluation. */
+  private def assertAgrees(s: SparkSession, when: String): Unit = {
+    val rows = rawCopy(s)
+    assert(run(s, s"SELECT count(*) FROM $idx").head.getLong(0) == rows,
       s"$when: live-doc count")
     filters.foreach { f =>
       val want = pks(run(s, s"SELECT pk FROM ${tbl}_raw WHERE $f"))
@@ -105,7 +120,7 @@ class ReaderSnapshotSpec extends AnyFunSuite {
   test("warm claims plan with zero Spark jobs: bm25 top-k, ts_match count, hybrid") {
     ready
     // the bm25 floor's WAND prefix is worked out when the statement runs
-    Seq(topK, count, hybrid, threshold).foreach { q =>
+    (Seq(topK, count, hybrid, threshold) ++ countFilters.map(countOf)).foreach { q =>
       spark.sql(q).queryExecution.optimizedPlan
       val (plan, jobs) = RefreshJobCount.jobsIn(spark, "claim-plan")(
         spark.sql(q).queryExecution.optimizedPlan)
@@ -169,6 +184,46 @@ class ReaderSnapshotSpec extends AnyFunSuite {
     try {
       val after = run(spark, canonical(5)).map(r => r.getAs[Number](0).intValue -> r.getDouble(1))
       assert(after.toSeq == all.filterNot(p => gone.contains(p._1)).take(5).toSeq)
+    } finally run(spark, s"VACUUM (REFRESH_TABLE) $tbl")
+  }
+
+  private def joins(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int =
+    plan.collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.size
+
+  test("a warm claimed count runs as 1 Spark job of the text-match leaf, tombstones included") {
+    ready
+    def check(when: String): Unit = {
+      rawCopy(spark)
+      countFilters.foreach { f =>
+        val q = countOf(f)
+        val plan = spark.sql(q).queryExecution.optimizedPlan
+        assert(plan.toString.contains("MatchScan(count") && joins(plan) == 0,
+          s"$when: $f must count through the leaf\n$plan")
+        run(spark, q)
+        val (rows, jobs) = RefreshJobCount.jobsIn(spark, "count-exec")(run(spark, q))
+        assert(jobs == 1, s"$when: the warm count of $f ran $jobs Spark jobs")
+        assert(rows.head.getLong(0) == rawCount(spark, f), s"$when: count of $f")
+      }
+    }
+    check("warm")
+    run(spark, s"DELETE FROM $tbl WHERE pk IN (7, 8, 9)")
+    run(spark, s"VACUUM (REFRESH_TABLE) $tbl")
+    check("after DELETE + refresh")
+  }
+
+  test("a count between a DELETE and its REFRESH stays on the base-table semi-join") {
+    ready
+    run(spark, s"DELETE FROM $tbl WHERE pk IN (19, 20, 21)")
+    try {
+      rawCopy(spark)
+      countFilters.foreach { f =>
+        val df = spark.sql(countOf(f))
+        val plan = df.queryExecution.optimizedPlan
+        assert(claimed(plan), s"$f must be claimed\n$plan")
+        assert(!plan.toString.contains("MatchScan(count") && semiJoins(plan) >= 1,
+          s"a stale index must not answer the count of $f alone\n$plan")
+        assert(df.collect().head.getLong(0) == rawCount(spark, f), s"count of $f")
+      }
     } finally run(spark, s"VACUUM (REFRESH_TABLE) $tbl")
   }
 }
