@@ -9,9 +9,11 @@ import org.apache.spark.sql.functions._
   * re-index, not 4+ source evaluations) — and the planning of a claimed
   * bm25 top-k on the warm index, which must launch no job at all (the
   * reader snapshot serves `IndexStore.load` without file listing or schema
-  * inference), and the execution of that warm top-k, of a warm claimed
-  * `ts_match` count (the text-match leaf's count-only mode: one job) and of
-  * a warm claimed phrase match. Usage: runMain graft.RefreshJobCount [sfDir]
+  * inference), and the execution of that warm top-k and of the search
+  * mix's absorbed `ts_match` + bm25 top-k (index-only on a fresh index: one
+  * job each), of a warm claimed `ts_match` count (the text-match leaf's
+  * count-only mode: one job) and of a warm claimed phrase match. Usage:
+  * runMain graft.RefreshJobCount [sfDir]
   */
 object RefreshJobCount {
 
@@ -81,13 +83,17 @@ object RefreshJobCount {
     spark.sql(topk).queryExecution.optimizedPlan
     val (plan, jobs) = jobsIn(spark, "claim-plan")(spark.sql(topk).queryExecution.optimizedPlan)
     println(s"JOBS[claim-plan] = $jobs (claimed: ${!plan.toString.contains("bm25(")})")
-    spark.sql(topk).collect()
-    counted("topk-exec")(spark.sql(topk).collect())
+    // the search mix's shape: a text match the scorer's terms make
+    // redundant, absorbed into an index-only top-k (expected: 1 job)
+    val absorbed = "SELECT doc_id FROM jobcount_all " +
+      "WHERE ts_match(text, ts_or(ts_phrase('vector'), ts_phrase('query')), 'whitespace') " +
+      "ORDER BY bm25(text, 'vector query', 'whitespace') DESC LIMIT 10"
     val count = "SELECT count(*) FROM jobcount_all " +
       "WHERE ts_match(text, ts_or(ts_phrase('vector'), ts_phrase('query')), 'whitespace')"
     val phrase = "SELECT doc_id FROM jobcount_all " +
       "WHERE ts_match(text, ts_phrase('hash join'), 'whitespace')"
-    Seq("count-exec" -> count, "phrase-exec" -> phrase).foreach { case (label, q) =>
+    Seq("topk-exec" -> topk, "topk-absorbed-exec" -> absorbed, "count-exec" -> count,
+        "phrase-exec" -> phrase).foreach { case (label, q) =>
       spark.sql(q).collect()
       counted(label)(spark.sql(q).collect())
     }

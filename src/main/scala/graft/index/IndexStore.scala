@@ -399,7 +399,8 @@ object IndexStore {
     * before the stats fields existed fall back to one counting scan. */
   def registerStatsTables(spark: SparkSession, dir: String, prefix: String): Unit = {
     import org.apache.spark.sql.catalyst.TableIdentifier
-    import org.apache.spark.sql.catalyst.catalog.{CatalogColumnStat, CatalogStatistics}
+    import org.apache.spark.sql.catalyst.catalog.{CatalogColumnStat, CatalogStatistics,
+      CatalogStorageFormat, CatalogTable, CatalogTableType, CatalogUtils}
     val segs = listSegments(spark, dir)
     require(segs.nonEmpty, s"no index segments under $dir")
     def metaSum(key: String): Option[Long] = {
@@ -424,14 +425,25 @@ object IndexStore {
       // bucket partition column disappears from these CBO-stats tables —
       // bucket-pruned access goes through the registered views, which read
       // per-segment and union.
-      spark.sql(s"CREATE TABLE $name USING parquet OPTIONS " +
-        s"(path '$dir/seg=*/$sub', recursiveFileLookup 'true')")
+      val options = Map("recursiveFileLookup" -> "true")
       val stats = CatalogStatistics(
         sizeInBytes = BigInt(bytesUnder(sub)),
         rowCount = Some(BigInt(rows)),
         colStats = Map("term" -> CatalogColumnStat(
           distinctCount = Some(BigInt(termNdv)), nullCount = Some(BigInt(0)))))
-      spark.sessionState.catalog.alterTableStats(TableIdentifier(name), Some(stats))
+      // registered in the session catalog directly: `CREATE TABLE … (path
+      // '<glob>')` resolves the relation, and Spark's metadata-directory
+      // probe of a glob path logs a FileNotFoundException stack trace. The
+      // schema comes from one segment, which holds every segment's layout.
+      spark.sessionState.catalog.createTable(CatalogTable(
+        identifier = TableIdentifier(name),
+        tableType = CatalogTableType.EXTERNAL,
+        storage = CatalogStorageFormat.empty.copy(
+          locationUri = Some(CatalogUtils.stringToURI(s"$dir/seg=*/$sub")),
+          properties = options),
+        schema = spark.read.options(options).parquet(s"$dir/${segs.head}/$sub").schema,
+        provider = Some("parquet"),
+        stats = Some(stats)), ignoreIfExists = false)
     }
     mk(s"${prefix}_termdict_tbl", "termdict", termRows, termRows)
     mk(s"${prefix}_postings_tbl", "postings", postRows, termRows)

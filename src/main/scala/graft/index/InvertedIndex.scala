@@ -1,6 +1,9 @@
 package graft.index
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, GreaterThan, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+import org.apache.spark.sql.graft.Frames
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.analysis.AnalyzerRegistry
@@ -341,42 +344,33 @@ final case class InvertedIndex(
       .select(col("doc_id"))
   }
 
-  /** The scoring drive: one row per doc matching ≥1 of `terms`, with
-    * `dlen` and per-distinct-term `i_tf`, `i_df`, `i_ctf` (null where the doc
-    * lacks term `i`) and `gi_ctf` — see [[TermBagScan]]. Cost is
-    * O(Σ df(term)) postings rows plus the docstats read, in one task; with
-    * `wand` the task keeps only docs of the WAND necessary prefix. */
-  private def termBag(terms: Seq[String],
-      wand: Option[TermBagScan.Wand] = None): DataFrame =
-    TermBagScan.frame(this, terms, wand)
-
-  /** BM25 scores for a bag of query terms, one row per matching doc.
-    *
-    * Standard BM25 (k1=1.2, b=0.75, Lucene-style idf) — per-term partial
-    * scores are separate columns added in query-term order, so the double
-    * addition order is fixed and the score is reproducible bit-for-bit (a
-    * groupBy sum would add in shuffle arrival order).
-    */
-  def bm25(terms: Seq[String], k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    bm25Scored(terms, k1, b, None)
-
-  private def bm25Scored(terms: Seq[String], k1: Double, b: Double,
-      wand: Option[TermBagScan.Wand]): DataFrame = {
-    val distinct = terms.distinct
-    val scored = termBag(terms, wand)
-    val scoreCols = terms.map { t =>
-      val i = distinct.indexOf(t)
-      val tf = coalesce(col(s"${i}_tf").cast("double"), lit(0.0))
-      val dfT = coalesce(col(s"${i}_df").cast("double"), lit(1.0))
-      val idf = log(lit(1.0) + (lit(numDocs.toDouble) - dfT + 0.5) / (dfT + 0.5))
-      idf * tf * (k1 + 1.0) /
-        (tf + lit(k1) * (lit(1.0 - b) + lit(b) * col("dlen").cast("double") / avgDl))
-    }
-    scored
-      .withColumn("_score", scoreCols.reduce(_ + _))
-      .filter(col("_score") > 0.0)
-      .select(col("doc_id"), col("_score"))
+  /** The scoring plan `(doc_id, _score)`: the term-bag leaf — one row per
+    * doc matching ≥1 of `terms`, see [[TermBagScan]] — the kernel's score
+    * over it, and the filter dropping non-positive scores where the kernel
+    * asks for it. Cost is O(Σ df(term)) postings rows plus the docstats
+    * read, in one task; with `wand` the task keeps only docs of the WAND
+    * necessary prefix. The nodes are bound to the leaf's attributes, so a
+    * claim rule splices the plan into a query as is and the outer optimizer
+    * runs once. */
+  private def scoredPlan(kernel: ScoreKernel, terms: Seq[String],
+      wand: Option[TermBagScan.Wand]): LogicalPlan = {
+    val leaf = TermBagScan.leaf(this, terms, wand)
+    val byName = leaf.output.map(a => a.name -> (a: Expression)).toMap
+    val scored = Project(
+      Seq(leaf.output.head, Alias(kernel.score(byName), "_score")()), leaf)
+    if (kernel.dropZero) Filter(GreaterThan(scored.output(1), Literal(0.0)), scored)
+    else scored
   }
+
+  private def scoredFrame(kernel: ScoreKernel, terms: Seq[String],
+      wand: Option[TermBagScan.Wand] = None): DataFrame =
+    Frames.ofRows(postings.sparkSession, scoredPlan(kernel, terms, wand))
+
+  /** BM25 scores for a bag of query terms, one row per matching doc —
+    * standard BM25 (k1=1.2, b=0.75, Lucene-style idf), see
+    * [[ScoreKernels]]. */
+  def bm25(terms: Seq[String], k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    scoredFrame(ScoreKernels.bm25(this, terms, k1, b), terms)
 
   /** BM25 over a DATA-DEPENDENT dictionary expansion — the reference's
     * scored MultiTermQuery (multiterm_query.cpp:157-200): a doc matched by
@@ -448,195 +442,40 @@ final case class InvertedIndex(
     if (mergeMax) out else out.filter(col("_score") > 0.0)
   }
 
-  /** Scorer-name dispatch over the per-scorer term-bag kernels — one place
-    * for the reference's 9 registered scorers (search.cpp:142-173), used by
-    * both the SQL claim rules and the structured-query scoring tree. */
+  /** Scorer-name dispatch over the term-bag kernels — one place for the
+    * reference's 9 registered scorers (search.cpp:142-173), used by both
+    * the SQL claim rules and the structured-query scoring tree: the
+    * `(doc_id, _score)` plan of [[scoredPlan]]. */
+  private[graft] def scoredTermsPlan(scorer: String, terms: Seq[String],
+      params: Seq[Any] = Nil): LogicalPlan =
+    scoredPlan(ScoreKernels(this, scorer, terms, params), terms, None)
+
   def scoredTerms(scorer: String, terms: Seq[String],
-      params: Seq[Any] = Nil): DataFrame = {
-    def num(i: Int, d: Double): Double = params.lift(i) match {
-      case Some(n: Number) => n.doubleValue
-      case Some(other) => throw new IllegalArgumentException(
-        s"$scorer: parameter ${i + 1} must be numeric, got $other")
-      case None => d
-    }
-    scorer match {
-      case "bm25" => bm25(terms, k1 = num(0, 1.2), b = num(1, 0.75))
-      case "tfidf" => tfidf(terms, withNorms = params.headOption.exists {
-        case b: Boolean => b
-        case other => throw new IllegalArgumentException(
-          s"tfidf: with_norms must be boolean, got $other")
-      })
-      case "lm_dirichlet" => lmDirichlet(terms, mu = num(0, 2000.0))
-      case "lm_jelinek_mercer" | "lm_jm" =>
-        lmJelinekMercer(terms, lambda = num(0, 0.1))
-      case "indri_dirichlet" => indriDirichlet(terms, mu = num(0, 2000.0))
-      case "dfi" => dfi(terms, measure = params.headOption match {
-        case Some(s: String) => s
-        case Some(other) => throw new IllegalArgumentException(
-          s"dfi: measure must be a string, got $other")
-        case None => "standardized"
-      })
-      case "raw_tf" => rawTf(terms)
-      case "raw_dl" => rawDl(terms)
-      case "raw_boost" => rawBoost(terms)
-      case other => throw new IllegalArgumentException(s"unknown scorer $other")
-    }
-  }
+      params: Seq[Any] = Nil): DataFrame =
+    Frames.ofRows(postings.sparkSession, scoredTermsPlan(scorer, terms, params))
 
-  /** TFIDF scores — the reference's second scorer
-    * (/root/reference/libs/iresearch/include/iresearch/search/tfidf.hpp,
-    * registered at server/connector/functions/search.cpp:142-173):
-    * score = Σ sqrt(tf) * idf² with idf = 1 + ln(numDocs / (df + 1)),
-    * norm-free (the reference's default). Shares the matched-postings drive
-    * with bm25. */
-  def tfidf(terms: Seq[String], withNorms: Boolean = false): DataFrame = {
-    val distinct = terms.distinct
-    val scored = termBag(distinct)
-    val scoreCols = terms.map { t =>
-      val i = distinct.indexOf(t)
-      val tf = coalesce(col(s"${i}_tf").cast("double"), lit(0.0))
-      val dfT = coalesce(col(s"${i}_df").cast("double"), lit(1.0))
-      // the reference's idf (tfidf.cpp:148-151): log1p((N+1)/(df+1)) —
-      // NOT Lucene-classic (1+ln(N/(df+1)))² (fixed r14 against the exact
-      // goldens of inverted_index_multiterm_score.test: ln5/ln3 on the
-      // 7-doc corpus). with_norms (the optional BOOLEAN scorer arg,
-      // search.cpp:151; off by default, tfidf.hpp:38) divides each
-      // contribution by sqrt(norm) = sqrt(dlen) (tfidf.cpp:73-76).
-      val idf = log(lit(1.0) + (lit(numDocs.toDouble) + 1.0) / (dfT + 1.0))
-      val base = sqrt(tf) * idf
-      if (withNorms) base / sqrt(col("dlen").cast("double")) else base
-    }
-    scored
-      .withColumn("_score", scoreCols.reduce(_ + _))
-      .filter(col("_score") > 0.0)
-      .select(col("doc_id"), col("_score"))
-  }
+  def tfidf(terms: Seq[String], withNorms: Boolean = false): DataFrame =
+    scoredFrame(ScoreKernels.tfidf(this, terms, withNorms), terms)
 
-  /** LM-Dirichlet query likelihood — the reference's lm_dirichlet scorer
-    * (libs/iresearch/.../search/lm_dirichlet.hpp; search.cpp:142-173):
-    * score = Σ_t log(1 + tf / (μ · p_c(t))) + |q| · log(μ / (dlen + μ)),
-    * with p_c(t) = ctf / sumDl the collection language model. Matched docs
-    * only; a doc matching none of the terms scores nothing (the reference
-    * also scores only index matches). */
-  def lmDirichlet(terms: Seq[String], mu: Double = 2000.0): DataFrame = {
-    require(mu >= 0.0 && !mu.isInfinite && !mu.isNaN,
-      "lm_dirichlet: mu must be a non-negative finite value")
-    val distinct = terms.distinct
-    val scored = termBag(distinct)
-    val sumDlD = sumDl.toDouble
-    val termScores = terms.map { t =>
-      val i = distinct.indexOf(t)
-      val tf = coalesce(col(s"${i}_tf").cast("double"), lit(0.0))
-      val ctfT = coalesce(col(s"${i}_ctf").cast("double"), lit(1.0))
-      // per-term score floors at ZERO (lm_dirichlet.cpp:57-68: r =
-      // log1p(tf·mu_p_inv) − log1p(dl/mu), clamped) — an unmatched term
-      // (tf=0) contributes exactly 0, and a long doc can never drive a
-      // matched term's contribution negative
-      greatest(
-        log(lit(1.0) + tf / (lit(mu) * (ctfT / sumDlD))) +
-          log(lit(mu) / (col("dlen").cast("double") + mu)),
-        lit(0.0))
-    }
-    scored
-      .withColumn("_score", termScores.reduce(_ + _))
-      .select(col("doc_id"), col("_score"))
-  }
+  def lmDirichlet(terms: Seq[String], mu: Double = 2000.0): DataFrame =
+    scoredFrame(ScoreKernels.lmDirichlet(this, terms, mu), terms)
 
-  /** LM-Jelinek-Mercer smoothing (lm_jelinek_mercer.hpp:33-46):
-    * score = Σ_t log(1 + ((1-λ)·tf/dlen) / (λ·p_c(t))); the default λ is
-    * the reference's LAMBDA() = 0.1, λ ∈ (0, 1]. */
-  def lmJelinekMercer(terms: Seq[String], lambda: Double = 0.1): DataFrame = {
-    require(lambda > 0.0 && lambda <= 1.0,
-      "lm_jelinek_mercer: lambda must be in (0, 1]")
-    val distinct = terms.distinct
-    val scored = termBag(distinct)
-    val sumDlD = sumDl.toDouble
-    val termScores = terms.map { t =>
-      val i = distinct.indexOf(t)
-      val tf = coalesce(col(s"${i}_tf").cast("double"), lit(0.0))
-      val ctfT = coalesce(col(s"${i}_ctf").cast("double"), lit(1.0))
-      log(lit(1.0) +
-        (lit(1.0 - lambda) * tf / col("dlen").cast("double")) /
-          (lit(lambda) * (ctfT / sumDlD)))
-    }
-    scored
-      .withColumn("_score", termScores.reduce(_ + _))
-      .filter(col("_score") > 0.0)
-      .select(col("doc_id"), col("_score"))
-  }
+  def lmJelinekMercer(terms: Seq[String], lambda: Double = 0.1): DataFrame =
+    scoredFrame(ScoreKernels.lmJelinekMercer(this, terms, lambda), terms)
 
-  /** Indri-style Dirichlet query likelihood (indri_dirichlet.hpp):
-    * score = Σ_t log((tf + μ·p_c(t)) / (dlen + μ)) over matched docs —
-    * unlike lmDirichlet's rank-equivalent form, every query term contributes
-    * its smoothed probability even at tf=0. */
-  def indriDirichlet(terms: Seq[String], mu: Double = 2000.0): DataFrame = {
-    require(mu >= 0.0 && !mu.isInfinite && !mu.isNaN,
-      "indri_dirichlet: mu must be a non-negative finite value")
-    val distinct = terms.distinct
-    // Indri smoothing needs each term's GLOBAL ctf even for docs where the
-    // term is absent (tf=0 still contributes log(μ·p_c/(dlen+μ))) — the
-    // per-doc ctf is null there, so read the leaf's `gi_ctf` instead.
-    val scored = termBag(distinct)
-    val sumDlD = sumDl.toDouble
-    val termScores = terms.map { t =>
-      val i = distinct.indexOf(t)
-      val tf = coalesce(col(s"${i}_tf").cast("double"), lit(0.0))
-      val ctfT = coalesce(col(s"g${i}_ctf").cast("double"), lit(1.0))
-      log((tf + lit(mu) * (ctfT / sumDlD)) / (col("dlen").cast("double") + mu))
-    }
-    scored.withColumn("_score", termScores.reduce(_ + _))
-      .select(col("doc_id"), col("_score"))
-  }
+  def indriDirichlet(terms: Seq[String], mu: Double = 2000.0): DataFrame =
+    scoredFrame(ScoreKernels.indriDirichlet(this, terms, mu), terms)
 
-  /** DFI — divergence from independence (dfi.hpp): per term, expected tf
-    * under independence e = dlen · ctf / sumDl; contribution
-    * max(log2((tf+1)/(e+1)), 0) — only above-expectation terms score. */
-  /** DFI — Divergence From Independence (dfi.hpp:30-49):
-    * expected = dl · (ttf_t + 1)/(ttf_field + 1); score = 0 when
-    * tf ≤ expected, else log2(measure(tf, expected) + 1) with the
-    * reference's three independence measures (`standardized` default,
-    * `saturated`, `chi_squared`). */
-  def dfi(terms: Seq[String], measure: String = "standardized"): DataFrame = {
-    val distinct = terms.distinct
-    val scored = termBag(distinct)
-    val sumDlD = sumDl.toDouble
-    val termScores = terms.map { t =>
-      val i = distinct.indexOf(t)
-      val tf = coalesce(col(s"${i}_tf").cast("double"), lit(0.0))
-      val ctfT = coalesce(col(s"${i}_ctf").cast("double"), lit(0.0))
-      val e = col("dlen").cast("double") * ((ctfT + 1.0) / (sumDlD + 1.0))
-      val m = measure match {
-        case "standardized" => (tf - e) / sqrt(e)
-        case "saturated"    => (tf - e) / e
-        case "chi_squared"  => (tf - e) * (tf - e) / e
-        case other => throw new IllegalArgumentException(s"dfi: invalid measure $other")
-      }
-      when(tf > e, log2(m + 1.0)).otherwise(lit(0.0))
-    }
-    scored.withColumn("_score", termScores.reduce(_ + _))
-      .filter(col("_score") > 0.0)
-      .select(col("doc_id"), col("_score"))
-  }
+  def dfi(terms: Seq[String], measure: String = "standardized"): DataFrame =
+    scoredFrame(ScoreKernels.dfi(this, terms, measure), terms)
 
-  /** raw_boost — constant score per matched doc (raw_boost.hpp). */
   def rawBoost(terms: Seq[String], boost: Double = 1.0): DataFrame =
-    termBag(terms.distinct)
-      .select(col("doc_id"), lit(boost).as("_score"))
+    scoredFrame(ScoreKernels.rawBoost(boost), terms)
 
-  /** raw_tf / raw_dl — the reference's diagnostic scorers (search.cpp:142-173). */
-  def rawTf(terms: Seq[String]): DataFrame = {
-    val distinct = terms.distinct
-    val scored = termBag(distinct)
-    val tfs = terms.map { t =>
-      coalesce(col(s"${distinct.indexOf(t)}_tf").cast("double"), lit(0.0))
-    }
-    scored.withColumn("_score", tfs.reduce(_ + _))
-      .select(col("doc_id"), col("_score"))
-  }
+  def rawTf(terms: Seq[String]): DataFrame = scoredFrame(ScoreKernels.rawTf(terms), terms)
 
-  def rawDl(terms: Seq[String]): DataFrame =
-    termBag(terms.distinct)
-      .select(col("doc_id"), col("dlen").cast("double").as("_score"))
+  def rawDl(terms: Seq[String]): DataFrame = scoredFrame(ScoreKernels.rawDl, terms)
+
 
   /** BM25 top-k with score pushdown: per-partition top-k heaps before the
     * global merge, the Spark shape of the reference's WAND collector
@@ -663,7 +502,8 @@ final case class InvertedIndex(
     * equality with the post-filter plan). */
   def bm25MinScore(terms: Seq[String], minScore: Double,
       k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    bm25Scored(terms, k1, b, Some(TermBagScan.Wand(minScore, k1, b)))
+    scoredFrame(ScoreKernels.bm25(this, terms, k1, b), terms,
+      Some(TermBagScan.Wand(minScore, k1, b)))
       .filter(col("_score") >= minScore)
 
   /** [[InvertedIndex.wandNecessary]] over this index's term dictionary —

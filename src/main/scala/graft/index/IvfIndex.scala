@@ -7,8 +7,13 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
+import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Cast, In, Literal, SortOrder, UnaryMinus}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, LocalLimit, LogicalPlan, Project, Sort}
 import org.apache.spark.sql.functions._
-import graft.functions.VectorFunctions
+import org.apache.spark.sql.graft.Frames
+import org.apache.spark.sql.types.{ArrayType, FloatType}
+import graft.functions.{InnerProductExpr, L2SqrDistanceExpr, VectorFunctions}
 
 /** IVF (inverted-file) index over an embedding column.
   *
@@ -62,13 +67,39 @@ final case class IvfIndex(
   private def distCol(q: Seq[Float]) =
     VectorFunctions.l2SqrDistance(col("embedding"), typedlit(q))
 
-  private def topK(probes: Seq[Int], q: Seq[Float], k: Int): DataFrame =
-    assignments
-      .filter(col("cluster").isin(probes: _*))
-      .withColumn("dist", distCol(q))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), col("dist"))
+  /** The exact k-NN over the inverted lists `probes` as plan nodes,
+    * `(vec_id, dist)`: the vectors relation, `cluster IN (probes)`
+    * (partition-pruned by the optimizer), the native distance to `q` —
+    * squared L2, or the negative inner product with `ip` — then
+    * Sort(dist, vec_id) and the limit. Claim rules splice it into a query
+    * as is; [[knn]] and [[knnIp]] are DataFrames over it. */
+  def probePlan(probes: Seq[Int], q: Seq[Float], k: Int, ip: Boolean): LogicalPlan = {
+    val vectors = assignments.queryExecution.analyzed match {
+      case m: MultiInstanceRelation => m.newInstance()
+      case other => other
+    }
+    def attr(name: String) = vectors.output.find(_.name == name).get
+    val cluster = attr("cluster")
+    val probed = Filter(
+      In(cluster, probes.map(p => Cast(Literal(p), cluster.dataType))), vectors)
+    val qLit = Literal.create(q, ArrayType(FloatType, containsNull = false))
+    val dist = Alias(
+      if (ip) UnaryMinus(InnerProductExpr(attr("embedding"), qLit))
+      else L2SqrDistanceExpr(attr("embedding"), qLit), "dist")()
+    val vecId = attr("vec_id")
+    val sorted = Sort(Seq(SortOrder(dist.toAttribute, Ascending), SortOrder(vecId, Ascending)),
+      global = true, Project(Seq(vecId, dist), probed))
+    GlobalLimit(Literal(k), LocalLimit(Literal(k), sorted))
+  }
+
+  private def topK(probes: Seq[Int], q: Seq[Float], k: Int, ip: Boolean = false): DataFrame =
+    Frames.ofRows(assignments.sparkSession, probePlan(probes, q, k, ip))
+
+  /** The exact static ball-bound probe set for `query` (see class doc). */
+  def exactProbes(query: Seq[Float], k: Int): Seq[Int] = {
+    val (p1, p2) = ballProbes(query, k)
+    p1 ++ p2
+  }
 
   /** The two probe sets of the exact static ball-bound strategy: (nearest
     * lists holding ≥ k points, extra lists whose ball overlaps the upper
@@ -101,7 +132,7 @@ final case class IvfIndex(
   def knn(query: Seq[Float], k: Int, nprobe: Int = 0): DataFrame = {
     val probes =
       if (nprobe > 0) centroidDistSq(query.map(_.toDouble)).take(nprobe).map(_._2).toSeq
-      else { val (p1, p2) = ballProbes(query, k); p1 ++ p2 }
+      else exactProbes(query, k)
     topK(probes, query, k)
   }
 
@@ -225,15 +256,8 @@ final case class IvfIndex(
     }).toSeq
   }
 
-  def knnIp(query: Seq[Float], k: Int): DataFrame = {
-    val probes = ipProbes(query, k)
-    assignments
-      .filter(col("cluster").isin(probes: _*))
-      .withColumn("dist", -VectorFunctions.innerProduct(col("embedding"), typedlit(query)))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), col("dist"))
-  }
+  def knnIp(query: Seq[Float], k: Int): DataFrame =
+    topK(ipProbes(query, k), query, k, ip = true)
 }
 
 object IvfIndex {

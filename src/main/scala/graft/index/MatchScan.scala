@@ -4,6 +4,8 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SQLContext}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.graft.Frames
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources.{BaseRelation, In, TableScan}
 import org.apache.spark.sql.types._
@@ -62,18 +64,23 @@ private[graft] object MatchScan {
   }
 
   /** The matched docs of the exact tree `q`: one `doc_id` column. */
-  def frame(idx: InvertedIndex, q: TsQuery): DataFrame = relation(idx, q, countOnly = false)
+  def frame(idx: InvertedIndex, q: TsQuery): DataFrame =
+    Frames.ofRows(idx.postings.sparkSession, leaf(idx, q))
+
+  /** [[frame]] as a plan node, for claim rules that splice it into a query. */
+  def leaf(idx: InvertedIndex, q: TsQuery): LogicalRelation = relation(idx, q, countOnly = false)
 
   /** The number of docs the exact tree `q` matches: one row, one `count`
     * column. */
-  def count(idx: InvertedIndex, q: TsQuery): DataFrame = relation(idx, q, countOnly = true)
+  def countLeaf(idx: InvertedIndex, q: TsQuery): LogicalRelation =
+    relation(idx, q, countOnly = true)
 
-  private def relation(idx: InvertedIndex, q: TsQuery, countOnly: Boolean): DataFrame = {
+  private def relation(idx: InvertedIndex, q: TsQuery, countOnly: Boolean): LogicalRelation = {
     require(exact(q), s"not an exact-term query: $q")
     validate(q)
     val spark = idx.postings.sparkSession
     val docType = idx.postings.schema("doc_id").dataType
-    spark.baseRelationToDataFrame(Relation(idx, q, docType, countOnly)(spark.sqlContext))
+    LogicalRelation(Relation(idx, q, docType, countOnly)(spark.sqlContext))
   }
 
   /** The shape checks the positional joins made when they were built. */

@@ -1,9 +1,10 @@
 package graft.index
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SQLContext}
+import org.apache.spark.sql.{Row, SQLContext}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources.{BaseRelation, In, TableScan}
 import org.apache.spark.sql.types._
@@ -41,11 +42,11 @@ private[index] object TermBagScan {
 
   final case class Wand(minScore: Double, k1: Double, b: Double)
 
-  def frame(idx: InvertedIndex, terms: Seq[String], wand: Option[Wand]): DataFrame = {
+  /** The leaf as a plan node. */
+  def leaf(idx: InvertedIndex, terms: Seq[String], wand: Option[Wand]): LogicalRelation = {
     val spark = idx.postings.sparkSession
     val docType = idx.postings.schema("doc_id").dataType
-    spark.baseRelationToDataFrame(
-      Relation(idx, terms, docType, wand)(spark.sqlContext))
+    LogicalRelation(Relation(idx, terms, docType, wand)(spark.sqlContext))
   }
 
   private final case class Relation(idx: InvertedIndex, terms: Seq[String],

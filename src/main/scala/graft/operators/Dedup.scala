@@ -70,10 +70,8 @@ object Dedup {
         graft.analysis.Analyzers.minHashSignature(sh, n))
 
   private def kernelIsUdf: Boolean =
-    // the SYSPROP first: it is the per-run switch MinhashAb flips per A/B
-    // arm inside one JVM — env-var precedence would silently pin both arms
-    // to the same kernel whenever the var is set in the environment
-    // (r18 ADVICE #5); the env var remains the out-of-band override
+    // the SYSPROP first, so one JVM can switch kernels between runs even
+    // when the env var is set; the env var is the out-of-band override
     sys.props.get("graft.minhash.kernel").orElse(
       sys.env.get("GRAFT_MINHASH_KERNEL")).contains("udf")
 
@@ -148,16 +146,10 @@ object Dedup {
     // columnar parquet). Caching it thrashed storage memory at 10x bench
     // data — 85 s with the cache vs 8.4 s recomputing (sf1 spot, r16) — and
     // the r20 re-test AFTER the r18 codegen kernel (interleaved same-JVM
-    // A/B, AbRunner) confirmed it: recompute stays the winner. On a 100 TB
-    // corpus a persisted shingle set would evict everything else in the
-    // cluster. Three linear recomputes beat one quadratic-pressure cache.
-    // (sysprop arm kept ONLY for the A/B harness, never the default)
-    val sh = shingles(docs, idCol, textCol)
-    val shArm =
-      if (sys.props.get("graft.minhash.shingleCheckpoint").contains("1"))
-        sh.localCheckpoint()
-      else sh
-    jaccardVerify(cands, shArm, minJ)
+    // A/B) confirmed it: recompute stays the winner. On a 100 TB corpus a
+    // persisted shingle set would evict everything else in the cluster.
+    // Three linear recomputes beat one quadratic-pressure cache.
+    jaccardVerify(cands, shingles(docs, idCol, textCol), minJ)
   }
 
   /** Exact n-gram Jaccard pairs via the inverted shingle index: only pairs

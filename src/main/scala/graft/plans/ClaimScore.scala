@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, And => CAnd, Ascending,
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftAnti, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, Join, JoinHint, LocalLimit, LogicalPlan, Project, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.unsafe.types.UTF8String
 import graft.analysis.AnalyzerRegistry
@@ -96,6 +96,17 @@ private[plans] object ScorerShapes {
 
   def termsOf(query: String, dict: String): Seq[String] =
     AnalyzerRegistry.get(dict).tokens(query)
+
+  /** [[scoredQuery]] as a plan, `(doc_id, _score)`. A plain term bag is the
+    * scorer leaf plus its score expression, built as plan nodes; a
+    * TSQUERY-constructor query scores through the composed boost-folding
+    * tree, optimized on its own. */
+  def scoredPlan(idx: InvertedIndex, scorer: String, query: String,
+      dict: String, params: Seq[Any]): LogicalPlan =
+    if (graft.search.TsQueryCodec.isEncoded(query))
+      PlanShapes.freshRelationIds(scoredQuery(idx, scorer, query, dict, params)
+        .select(col("doc_id"), col("_score")).queryExecution.optimizedPlan)
+    else idx.scoredTermsPlan(scorer, termsOf(query, dict), params)
 
   /** Resolves the sorted input to its underlying indexed scan. Accepted
     * shapes (the reference claims Sort/TopN over an already-claimed filter
@@ -217,10 +228,22 @@ private[plans] object ScorerShapes {
   *   - `Project(cols, Sort(scorerUdf DESC, scan))` — ORDER BY not in SELECT
   *   - `[Project(exprs,)] Sort(s DESC, Project([cols, bm25(...) AS s], scan))`
   *     — scorer aliased in the SELECT list (score value in the output)
-  * Projections beyond the id column late-materialize through one PK
-  * join-back (search_pk_lookup.h), re-sorted by score so the claimed output
-  * preserves the order the Sort promised. Ties break by doc id — a
-  * deterministic refinement of the requested score-only order.
+  * The scorer leaf and its score expression are built as plan nodes
+  * ([[graft.index.InvertedIndex.scoredTermsPlan]]), so the outer optimizer
+  * runs once. One construction serves the bare scan and the absorbed `ts_match`
+  * shape; the plan depends only on the index's freshness and the outputs:
+  *   - the sorted input is the bare indexed scan once absorbed, the index
+  *     is byte-fresh with it ([[StatsShapes.indexFresh]]) and every output
+  *     is the id or the score → the index-only top-k: Sort and limit over
+  *     the scored leaf, 1 Spark job, no base-table bytes;
+  *   - a stale index, residual filters or semi-joins → the scored leaf
+  *     joins the candidate rows, so a row deleted before its REFRESH is
+  *     left out;
+  *   - a bare scan with outputs beyond the id and the score → one PK
+  *     join-back (search_pk_lookup.h) to the covering columnstore or the
+  *     base table, re-sorted by score.
+  * Ties break by doc id — a deterministic refinement of the requested
+  * score-only order.
   *
   * SEMANTICS NOTE (intentional deviation from literal SQL Sort+Limit): a
   * claimed scorer returns only docs matching ≥1 query term — the search
@@ -305,15 +328,36 @@ case class ClaimScoreTopK(spark: SparkSession) extends Rule[LogicalPlan] {
       refs = outList.flatMap(_.references.toSeq).distinct
       if refs.forall(a =>
         PlanShapes.isColumnOf(lr, a, a.name) || scoreIds.contains(a.exprId))
-    } yield candidate match {
-      case Some(candTree) =>
-        claimFiltered(absorbMatch(candTree, entry, textAttr, query, dict), entry,
-          scorer, query, dict, params, k, idAttr, scoreIds, outList)
-      case None =>
-        claimBare(entry, scorer, query, dict, params, k, root, refs, scoreIds,
-          outList)
+    } yield {
+      val tree = candidate.map(absorbMatch(_, entry, textAttr, query, dict))
+        .getOrElse(scanPlan)
+      val idOrScore = refs.forall(a =>
+        a.exprId == idAttr.exprId || scoreIds.contains(a.exprId))
+      if (candidate.isEmpty && !idOrScore)
+        claimBare(entry, scorer, query, dict, params, k, root, refs, scoreIds, outList)
+      else {
+        val scored = ScorerShapes.scoredPlan(
+          IndexStore.load(spark, entry.segDir), scorer, query, dict, params)
+        if (idOrScore && indexOnly(tree, lr, entry))
+          claimIndexOnly(scored, k, scoreIds, outList)
+        else claimFiltered(tree, scored, k, idAttr, scoreIds, outList)
+      }
     }
   }
+
+  /** Whether the index alone answers the top-k: the sorted input is the
+    * bare indexed scan (the `ts_match` legs absorbed) and the index is
+    * byte-fresh with it — the gate every index-only answer uses
+    * ([[StatsShapes.indexFresh]], as in [[ClaimCountOnly]]). A row deleted
+    * or added since the last REFRESH makes the scan's files differ from the
+    * fingerprinted ones, so the top-k joins the scan instead. */
+  private def indexOnly(tree: LogicalPlan, lr: LogicalRelation,
+      entry: IndexCatalog.TextEntry): Boolean =
+    (PlanShapes.stripProjects(tree), lr.relation) match {
+      case (scan: LogicalRelation, rel: HadoopFsRelation) if scan == lr =>
+        StatsShapes.indexFresh(spark, entry.segDir, rel)
+      case _ => false
+    }
 
   /** `candTree` without the `ts_match` semi-joins the scorer makes
     * redundant: a [[TsMatchLeg]] on the same column, dictionary and full
@@ -335,8 +379,9 @@ case class ClaimScoreTopK(spark: SparkSession) extends Rule[LogicalPlan] {
       }
     }
 
-  /** The original bare-scan drive: index top-k, then one late-materializing
-    * join-back for any projected columns beyond the id. */
+  /** The bare-scan drive for outputs wider than the id and the score:
+    * index top-k, then one late-materializing join-back to the covering
+    * columnstore or the base table. */
   private def claimBare(entry: IndexCatalog.TextEntry, scorer: String,
       query: String, dict: String, params: Seq[Any], k: Int, root: String,
       refs: Seq[Attribute], scoreIds: Set[ExprId],
@@ -350,31 +395,27 @@ case class ClaimScoreTopK(spark: SparkSession) extends Rule[LogicalPlan] {
       val neededScanCols = refs.collect {
         case a: AttributeReference if !scoreIds.contains(a.exprId) => a.name
       }.distinct
-      val base =
-        if (neededScanCols.forall(_ == entry.idCol)) topk
-        else {
-          // covered join-back (reference inverted_index_topk_include.test):
-          // when every projected column is id or INCLUDE, the k-row
-          // late materialization reads the narrow stored columnstore
-          // instead of the wide base table — at 100 TB the base fact scan
-          // disappears from the top-k serve path entirely
-          val lookup = IndexCatalog.lookupFields(root) match {
-            case Some(fe) if neededScanCols.forall(c =>
-                c == entry.idCol || fe.included.contains(c)) &&
-                // stale sidecar (text segments advanced since its build)
-                // → base join-back, never a silently-narrower columnstore
-                graft.index.FieldStore.textCoherent(spark, fe.dir) =>
-              graft.index.FieldStore.stored(spark, fe.dir)
-                .withColumnRenamed("doc_id", entry.idCol)
-            case _ => spark.read.parquet(root)
-          }
-          topk
-            .join(lookup.select(
-              (neededScanCols.toSet + entry.idCol).toSeq.map(col): _*), Seq(entry.idCol))
-            // the join-back scrambles row order; the claim replaces a Sort,
-            // so re-establish score order before handing the plan back
-            .orderBy(col("__graft_score").desc, col(entry.idCol))
-        }
+      // covered join-back (reference inverted_index_topk_include.test):
+      // when every projected column is id or INCLUDE, the k-row late
+      // materialization reads the narrow stored columnstore instead of the
+      // wide base table — at 100 TB the base fact scan disappears from the
+      // top-k serve path entirely
+      val lookup = IndexCatalog.lookupFields(root) match {
+        case Some(fe) if neededScanCols.forall(c =>
+            c == entry.idCol || fe.included.contains(c)) &&
+            // stale sidecar (text segments advanced since its build)
+            // → base join-back, never a silently-narrower columnstore
+            graft.index.FieldStore.textCoherent(spark, fe.dir) =>
+          graft.index.FieldStore.stored(spark, fe.dir)
+            .withColumnRenamed("doc_id", entry.idCol)
+        case _ => spark.read.parquet(root)
+      }
+      val base = topk
+        .join(lookup.select(
+          (neededScanCols.toSet + entry.idCol).toSeq.map(col): _*), Seq(entry.idCol))
+        // the join-back scrambles row order; the claim replaces a Sort,
+        // so re-establish score order before handing the plan back
+        .orderBy(col("__graft_score").desc, col(entry.idCol))
       val rPlan = base.queryExecution.optimizedPlan
       val byName = rPlan.output.map(a => a.name -> a).toMap
       def subst(a: AttributeReference): Expression = {
@@ -395,40 +436,57 @@ case class ClaimScoreTopK(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
+  /** The index-only top-k: `Sort(score desc, doc_id)` and the limit over the
+    * scored leaf, the output's id and score read from the leaf's row. It
+    * plans as a TakeOrderedAndProject over the leaf's one task: one Spark
+    * job, no exchange, no base-table bytes — the reference's top-k from the
+    * index scan alone (search_pk_lookup.h materializes only what it
+    * returns, and this output holds nothing beyond the id). */
+  private def claimIndexOnly(scored: LogicalPlan, k: Int, scoreIds: Set[ExprId],
+      outList: Seq[NamedExpression]): LogicalPlan = {
+    val Seq(docId, score) = scored.output
+    val limited = topK(scored, k, Seq(SortOrder(score, Descending), SortOrder(docId, Ascending)))
+    def subst(a: AttributeReference): Expression = {
+      val r = if (scoreIds.contains(a.exprId)) score else docId
+      // the index stores ids as its own integral type; cast back when the
+      // scan's id is narrower so output types are stable
+      if (r.dataType == a.dataType) r
+      else org.apache.spark.sql.catalyst.expressions.Cast(r, a.dataType)
+    }
+    Project(outList.map {
+      case a: AttributeReference => Alias(subst(a), a.name)(exprId = a.exprId)
+      case al @ Alias(c, n) =>
+        Alias(c.transform { case a: AttributeReference => subst(a) }, n)(exprId = al.exprId)
+      case other => other
+    }, limited)
+  }
+
+  private def topK(plan: LogicalPlan, k: Int, order: Seq[SortOrder]): LogicalPlan =
+    GlobalLimit(Literal(k), LocalLimit(Literal(k), Sort(order, global = true, plan)))
+
   /** The COMPOSED claim — filter + scorer top-k in ONE drive (the
     * reference's demo3 shape: `@@` predicates combined with BM25 ordering;
     * iresearch_plan.cpp:870-885 walks Sort/TopN over a scan whose filter
     * tree search_filter_builder.cpp already claimed). The candidate subtree
-    * (residual Filters and the LeftSemi joins earlier claim rules left) runs
-    * FIRST and restricts the scored postings via one inner join on the id,
-    * so the k survivors are the top-k of the FILTERED set — then
-    * Sort+Limit over the join plans as TakeOrderedAndProject (per-partition
-    * heaps, O(k) driver merge). The candidate tree keeps its pushed-down
-    * pruned scan; scan-column references flow through unchanged, so only
-    * the score attribute needs substitution. */
-  private def claimFiltered(candTree: LogicalPlan, entry: IndexCatalog.TextEntry,
-      scorer: String, query: String, dict: String, params: Seq[Any], k: Int,
+    * (residual Filters, the LeftSemi joins earlier claim rules left, or the
+    * bare scan when the index is not fresh with it) restricts the scored
+    * postings via one inner join on the id, so the k survivors are the
+    * top-k of the FILTERED set of live rows — then Sort+Limit over the join
+    * plans as TakeOrderedAndProject (per-partition heaps, O(k) driver
+    * merge). The candidate tree keeps its pushed-down pruned scan;
+    * scan-column references flow through unchanged, so only the score
+    * attribute needs substitution. */
+  private def claimFiltered(candTree: LogicalPlan, scored: LogicalPlan, k: Int,
       idAttr: AttributeReference, scoreIds: Set[ExprId],
       outList: Seq[NamedExpression]): LogicalPlan = {
-    val idx = IndexStore.load(spark, entry.segDir)
-    // fresh exprIds: every IndexStore.load yields fresh leaf exprIds, so the
-    // candidate tree's LeftSemi legs (an earlier load) and this scored plan
-    // start disjoint; re-instancing keeps the Inner join's sides disjoint
-    // even if both sides ever come from one load
-    val scoredPlan = PlanShapes.freshRelationIds(
-      ScorerShapes.scoredQuery(idx, scorer, query, dict, params)
-        .select(col("doc_id"), col("_score").as("__graft_score"))
-        .queryExecution.optimizedPlan)
-    val docId = scoredPlan.output.find(_.name == "doc_id").get
-    val scoreAttr = scoredPlan.output.find(_.name == "__graft_score").get
-    val joined = Join(ScorerShapes.widenWithId(candTree, idAttr), scoredPlan, Inner,
+    val Seq(docId, scoreAttr) = scored.output
+    val joined = Join(ScorerShapes.widenWithId(candTree, idAttr), scored, Inner,
       Some(EqualTo(idAttr, docId)), JoinHint.NONE)
-    // ties break by doc id — the same deterministic refinement as the bare
-    // path; matched-docs-only semantics (can return < k rows, see scaladoc)
-    val sorted = Sort(
-      Seq(SortOrder(scoreAttr, Descending), SortOrder(idAttr, Ascending)),
-      global = true, joined)
-    val limited = GlobalLimit(Literal(k), LocalLimit(Literal(k), sorted))
+    // ties break by doc id — the same deterministic refinement as the
+    // index-only path; matched-docs-only semantics (can return < k rows,
+    // see scaladoc)
+    val limited = topK(joined,
+      k, Seq(SortOrder(scoreAttr, Descending), SortOrder(idAttr, Ascending)))
     val newList = outList.map {
       case a: AttributeReference if scoreIds.contains(a.exprId) =>
         Alias(scoreAttr, a.name)(exprId = a.exprId)
@@ -658,13 +716,9 @@ case class ClaimScoreProject(spark: SparkSession) extends Rule[LogicalPlan] {
     val zero = Literal(0.0, org.apache.spark.sql.types.DoubleType)
     Some(resolved.foldLeft((widened, Map.empty[Shape, Expression])) {
       case ((acc, m), (shape @ (_, scorer, query, dict, params), entry, idAttr)) =>
-        val idx = IndexStore.load(spark, entry.segDir)
-        val scoredPlan = PlanShapes.freshRelationIds(
-          ScorerShapes.scoredQuery(idx, scorer, query, dict, params)
-            .select(col("doc_id"), col("_score").as("__graft_score"))
-            .queryExecution.optimizedPlan)
-        val docId = scoredPlan.output.find(_.name == "doc_id").get
-        val scoreAttr = scoredPlan.output.find(_.name == "__graft_score").get
+        val scoredPlan = ScorerShapes.scoredPlan(
+          IndexStore.load(spark, entry.segDir), scorer, query, dict, params)
+        val Seq(docId, scoreAttr) = scoredPlan.output
         val j = Join(acc, scoredPlan,
           org.apache.spark.sql.catalyst.plans.LeftOuter,
           Some(EqualTo(idAttr, docId)), JoinHint.NONE)

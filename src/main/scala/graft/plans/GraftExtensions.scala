@@ -931,7 +931,7 @@ case class ClaimAnnTopK(spark: SparkSession) extends Rule[LogicalPlan] {
               val quantDir = graft.index.IvfIndex.dirFor(entry.cacheKey, entry.lists)
               val liveQuant = entry.quant.filter(qk =>
                 graft.index.QuantizedIvf.availableKind(spark, quantDir, qk))
-              val ids = liveQuant match {
+              lazy val ids = liveQuant match {
                 case Some(qk) =>
                   val qi = graft.index.QuantizedIvf.ensureKind(spark, idx,
                     quantDir, qk, entry.pqM)
@@ -952,10 +952,17 @@ case class ClaimAnnTopK(spark: SparkSession) extends Rule[LogicalPlan] {
               // the Sort this claim replaces promised distance-ordered output
               // (reference late materialization keeps score order,
               // search_pk_lookup.h)
-              val probed = ids.select(f("vec_id").as(entry.idCol), f("dist"))
-              val result =
-                if (outAttrs.map(_.name) == Seq(entry.idCol))
-                  probed.select(f(entry.idCol))
+              lazy val probed = ids.select(f("vec_id").as(entry.idCol), f("dist"))
+              val rPlan =
+                if (liveQuant.isEmpty && outAttrs.map(_.name) == Seq(entry.idCol))
+                  // the raw probe as plan nodes, the id column only
+                  metric match {
+                    case "ip" => idx.probePlan(idx.ipProbes(q, k), q, k, ip = true)
+                    case "cosine" =>
+                      val n = AnnShapes.normalize(q)
+                      idx.probePlan(idx.exactProbes(n, k), n, k, ip = false)
+                    case _ => idx.probePlan(idx.exactProbes(q, k), q, k, ip = false)
+                  }
                 else {
                   // covered kNN (reference inverted_index_ann_include.test):
                   // when every projected column is the id or an INCLUDE of
@@ -983,8 +990,8 @@ case class ClaimAnnTopK(spark: SparkSession) extends Rule[LogicalPlan] {
                   probed.join(lookup, Seq(entry.idCol))
                     .orderBy(f("dist"), f(entry.idCol))
                     .select(outAttrs.map(a => f(a.name)): _*)
+                    .queryExecution.optimizedPlan
                 }
-              val rPlan = result.queryExecution.optimizedPlan
               Project(outAttrs.zip(rPlan.output).map { case (orig, out) =>
                 Alias(out, orig.name)(exprId = orig.exprId)
               }, rPlan): LogicalPlan
@@ -1425,16 +1432,27 @@ case class ClaimTsMatch(spark: SparkSession) extends Rule[LogicalPlan] {
           val a = graft.analysis.AnalyzerRegistry.get(dict)
           (segDir, dict, graft.search.TsQuery.bindDict(build(a), a))
         }
-        // one drive per leg; an OR conjunct unions its legs' drives (semi/
-        // anti joins are duplicate-insensitive, so no distinct needed)
-        val matched = parsed.map { case (segDir, _, q) =>
-          val idx = graft.index.IndexStore.load(spark, segDir)
-          graft.search.TsQueryExec.matching(idx, q).select("doc_id")
-        }.reduce(_ unionByName _)
-        // optimizedPlan, NOT analyzed: the injected subtree skips the earlier
-        // optimizer batches, so e.g. a Deduplicate (from .distinct()) would
-        // otherwise reach physical planning unreplaced and fail the query
-        val mPlan = matched.queryExecution.optimizedPlan
+        val mPlan = parsed.map(_._1).distinct match {
+          // legs on one index whose OR is an exact-term tree: the text-match
+          // leaf itself, one plan node evaluating the whole OR in one task
+          case Seq(segDir) if parsed.forall(l => graft.index.MatchScan.exact(l._3)) =>
+            val q = parsed.map(_._3) match {
+              case Seq(one) => one
+              case qs => graft.search.TsQuery.Or(qs)
+            }
+            graft.index.MatchScan.leaf(graft.index.IndexStore.load(spark, segDir), q)
+          case _ =>
+            // one drive per leg; an OR conjunct unions its legs' drives
+            // (semi/anti joins are duplicate-insensitive, so no distinct
+            // needed). optimizedPlan, NOT analyzed: the injected subtree
+            // skips the earlier optimizer batches, so e.g. a Deduplicate
+            // (from .distinct()) would otherwise reach physical planning
+            // unreplaced and fail the query
+            parsed.map { case (segDir, _, q) =>
+              val idx = graft.index.IndexStore.load(spark, segDir)
+              graft.search.TsQueryExec.matching(idx, q).select("doc_id")
+            }.reduce(_ unionByName _).queryExecution.optimizedPlan
+        }
         val rightId = mPlan.output.find(_.name == "doc_id").get
         val j = Join(acc, mPlan,
           if (negated) org.apache.spark.sql.catalyst.plans.LeftAnti else LeftSemi,

@@ -102,8 +102,9 @@ private[plans] object StatsShapes {
   *     fresh ⇒ drive ids ⊆ table ids). When every predicate is on one
   *     index and the conjunction of their queries is an exact-term tree,
   *     the count is the text-match leaf's count-only mode
-  *     ([[graft.index.MatchScan.count]]) under a projection: one
-  *     Spark job of one task, no exchange. A predicate on a second index or
+  *     ([[graft.index.MatchScan.countLeaf]]) under a projection, both
+  *     built as plan nodes: one Spark job of one task, no exchange, and no
+  *     nested optimizer run. A predicate on a second index or
   *     a tree with an expansion leaf counts the distinct ids of the
   *     composed drives.
   *
@@ -192,8 +193,7 @@ case class ClaimCountOnly(spark: SparkSession) extends Rule[LogicalPlan] {
         val tree = TsQuery.And(legs.map(ls => TsQuery.Or(ls.map(_._2))))
         legs.flatten.map(_._1).distinct match {
           case Seq(segDir) if MatchScan.exact(tree) =>
-            countProjection(agg,
-              MatchScan.count(IndexStore.load(spark, segDir), tree).queryExecution.optimizedPlan)
+            countProjection(agg, MatchScan.countLeaf(IndexStore.load(spark, segDir), tree))
           case _ =>
             // conjunct intersection on postings-sized doc_id sets; an OR
             // counts through the union of its leaf drives

@@ -68,10 +68,14 @@ object DedupQueries {
     * is output-sensitive — potentially corpus-order on a pathological
     * corpus — which is why the r18/r19 audits kept the sort-merge join;
     * this makes the choice size-PROVEN either way instead of assumed. */
-  private def fitsBroadcast(s: SparkSession, n: Long): Boolean = {
-    val thresh = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      s.conf.get("spark.sql.autoBroadcastJoinThreshold", (10L << 20).toString))
-    thresh > 0 && n * 32L <= thresh
+  private[graft] def fitsBroadcast(s: SparkSession, n: Long): Boolean = {
+    // a negative threshold (Spark's `-1`) disables broadcast joins; the
+    // byte-string parser rejects the sign, so test it first
+    val raw = s.conf.get("spark.sql.autoBroadcastJoinThreshold", (10L << 20).toString).trim
+    !raw.startsWith("-") && {
+      val thresh = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw)
+      thresh > 0 && n * 32L <= thresh
+    }
   }
 
   /** Pairwise near-dups collapsed into components: A~B, B~C → one cluster

@@ -1,6 +1,8 @@
 package graft.search
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType, FloatType, IntegerType, StringType}
 import graft.analysis.AnalyzerRegistry
 import graft.functions.VectorFunctions
 
@@ -16,8 +18,42 @@ import graft.functions.VectorFunctions
   * row-at-a-time. Registration is idempotent per session.
   */
 object SqlSurface {
+  /** The vector parameter type of the `ann_*` distances. */
+  private val Vec = ArrayType(FloatType, containsNull = false)
   private val registered =
     java.util.Collections.synchronizedSet(new java.util.HashSet[SparkSession]())
+
+  /** Registers `f` (a Scala function of the arguments' arity) as a
+    * `ScalaUDF` without input encoders, as the scorer stubs are: Spark
+    * resolves an encoder-typed UDF's input encoders again for every
+    * statement that calls it (`ResolveEncodersInUDF`, milliseconds per
+    * statement), and the search surface sits in every search statement.
+    * Each argument is cast to its parameter type where the types differ,
+    * as implicit casting did, and a NULL argument of a primitive parameter
+    * (`DoubleType`, `IntegerType`) makes the result NULL, as Spark's null
+    * handling for primitive UDF parameters does. */
+  private def register(spark: SparkSession, name: String, out: DataType,
+      params: DataType*)(f: AnyRef): Unit = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, If, IsNull, Literal, Or, ScalaUDF}
+    def builder(args: Seq[Expression]): Expression = {
+      if (args.size != params.size)
+        throw new org.apache.spark.sql.AnalysisException(
+          errorClass = "USER_RAISED_EXCEPTION",
+          messageParameters = Map("errorMessage" ->
+            s"$name expects ${params.size} arguments, got ${args.size}"))
+      val cast = args.zip(params).map { case (a, t) =>
+        if (DataTypeUtils.sameType(a.dataType, t)) a else Cast(a, t)
+      }
+      val udf = ScalaUDF(f, out, cast, Nil, udfName = Some(name))
+      cast.zip(params).collect {
+        case (a, DoubleType | IntegerType) if a.nullable => IsNull(a): Expression
+      }.reduceOption(Or(_, _)) match {
+        case Some(anyNull) => If(anyNull, Literal(null, out), udf)
+        case None => udf
+      }
+    }
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "scala_udf")
+  }
 
   def registerAll(spark: SparkSession): Unit = if (registered.add(spark)) {
     VectorFunctions.registerSql(spark)
@@ -58,7 +94,7 @@ object SqlSurface {
     spark.udf.register("ts_highlight_opts",
       (text: String, offsets: Seq[Int], options: String) =>
         Headline.render(text, offsets, options))
-    spark.udf.register("ts_match",
+    register(spark, "ts_match", BooleanType, StringType, StringType, StringType)(
       (text: String, query: String, dict: String) =>
         // NULL on either side matches nothing — the reference's NULL
         // tsquery-parameter semantics (tsquery_params.test: EXECUTE
@@ -76,7 +112,7 @@ object SqlSurface {
     // `"..."~N` slop) as a SQL predicate — ts_match stays the websearch
     // dialect, mirroring the reference's two parser entry points
     // (ts_query.cpp to_tsquery vs websearch_to_tsquery)
-    spark.udf.register("tsquery_match",
+    register(spark, "tsquery_match", BooleanType, StringType, StringType, StringType)(
       (text: String, query: String, dict: String) =>
         if (text == null || query == null) None else {
           val a = AnalyzerRegistry.get(dict)
@@ -90,24 +126,28 @@ object SqlSurface {
     // Pure String→String encoders (TsQueryCodec); ClaimTsMatch evaluates
     // literal-argument constructor trees at PLAN time, so these claim into
     // the same index drives as the text syntaxes.
-    spark.udf.register("ts_starts_with", (p: String) => TsQueryCodec.startsWith(p))
-    spark.udf.register("ts_like", (p: String) => TsQueryCodec.like(p))
-    spark.udf.register("ts_regexp", (r: String) => TsQueryCodec.regexp(r))
+    register(spark, "ts_starts_with", StringType, StringType)(
+      (p: String) => TsQueryCodec.startsWith(p))
+    register(spark, "ts_like", StringType, StringType)((p: String) => TsQueryCodec.like(p))
+    register(spark, "ts_regexp", StringType, StringType)((r: String) => TsQueryCodec.regexp(r))
     // ts_levenshtein is injected in GraftExtensions (variable arity: 1-4
     // args with the reference's auto-distance ladder and transpositions
     // default — a plain UDF registration is single-arity)
     // ts_ngram likewise injected in GraftExtensions (1-2 args, default 0.7)
-    spark.udf.register("ts_phrase", (text: String) => TsQueryCodec.phrase(text))
-    spark.udf.register("ts_any", (text: String) => TsQueryCodec.any(text))
-    spark.udf.register("ts_all", (text: String) => TsQueryCodec.all(text))
-    spark.udf.register("ts_between",
+    register(spark, "ts_phrase", StringType, StringType)(
+      (text: String) => TsQueryCodec.phrase(text))
+    register(spark, "ts_any", StringType, StringType)((text: String) => TsQueryCodec.any(text))
+    register(spark, "ts_all", StringType, StringType)((text: String) => TsQueryCodec.all(text))
+    register(spark, "ts_between", StringType, StringType, StringType)(
       (lo: String, hi: String) => TsQueryCodec.between(lo, hi))
-    spark.udf.register("ts_ge", (b: String) => TsQueryCodec.cmp("ge", b))
-    spark.udf.register("ts_gt", (b: String) => TsQueryCodec.cmp("gt", b))
-    spark.udf.register("ts_le", (b: String) => TsQueryCodec.cmp("le", b))
-    spark.udf.register("ts_lt", (b: String) => TsQueryCodec.cmp("lt", b))
-    spark.udf.register("boost", (q: String, w: Double) => TsQueryCodec.boost(q, w))
-    spark.udf.register("slop", (q: String, n: Int) => TsQueryCodec.slop(q, n))
+    register(spark, "ts_ge", StringType, StringType)((b: String) => TsQueryCodec.cmp("ge", b))
+    register(spark, "ts_gt", StringType, StringType)((b: String) => TsQueryCodec.cmp("gt", b))
+    register(spark, "ts_le", StringType, StringType)((b: String) => TsQueryCodec.cmp("le", b))
+    register(spark, "ts_lt", StringType, StringType)((b: String) => TsQueryCodec.cmp("lt", b))
+    register(spark, "boost", StringType, StringType, DoubleType)(
+      (q: String, w: Double) => TsQueryCodec.boost(q, w))
+    register(spark, "slop", StringType, StringType, IntegerType)(
+      (q: String, n: Int) => TsQueryCodec.slop(q, n))
     // GeoJSON geometry predicates — the reference's geo-index SQL surface
     // (geo_search.test: ST_Intersects(col, geojson), ST_Contains(geojson,
     // col) over a geojson dictionary). Row-eval exact kernels; the indexed
@@ -118,9 +158,11 @@ object SqlSurface {
       (a: String, b: String) => graft.functions.Geo.geomContains(a, b))
     // TSQUERY combinators — the reference's `&&` / `||` / `!!` operators
     // over TSQUERY values (search.h:82-91)
-    spark.udf.register("ts_or", (a: String, b: String) => TsQueryCodec.or(a, b))
-    spark.udf.register("ts_and", (a: String, b: String) => TsQueryCodec.and(a, b))
-    spark.udf.register("ts_not", (q: String) => TsQueryCodec.not(q))
+    register(spark, "ts_or", StringType, StringType, StringType)(
+      (a: String, b: String) => TsQueryCodec.or(a, b))
+    register(spark, "ts_and", StringType, StringType, StringType)(
+      (a: String, b: String) => TsQueryCodec.and(a, b))
+    register(spark, "ts_not", StringType, StringType)((q: String) => TsQueryCodec.not(q))
     spark.udf.register("ts_tokenize_sql",
       (text: String, dict: String) => AnalyzerRegistry.get(dict).tokens(text))
     // pg's ts_lexize(dictionary, lexeme): the dictionary's output lexemes
@@ -133,7 +175,8 @@ object SqlSurface {
     // probe (approximate, like the reference's ANN claim of `<->` top-k,
     // iresearch_plan.cpp:546-621) — callers wanting guaranteed-exact order
     // use l2_distance instead, which is never claimed.
-    spark.udf.register("ann_l2", (a: Seq[Float], b: Seq[Float]) => {
+    register(spark, "ann_l2", DoubleType, Vec, Vec)(
+      (a: collection.Seq[Float], b: collection.Seq[Float]) => {
       var s = 0.0; var i = 0
       while (i < a.length) { val d = a(i).toDouble - b(i); s += d * d; i += 1 }
       s
@@ -141,7 +184,8 @@ object SqlSurface {
     // per-metric score mappings, all ascending-best so `ORDER BY ann_*(...)
     // LIMIT k` claims uniformly (reference metric table,
     // iresearch_plan.cpp:546-621): cosine DISTANCE (1 − cos), negative dot
-    spark.udf.register("ann_cosine", (a: Seq[Float], b: Seq[Float]) => {
+    register(spark, "ann_cosine", DoubleType, Vec, Vec)(
+      (a: collection.Seq[Float], b: collection.Seq[Float]) => {
       var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
       while (i < a.length) {
         val x = a(i).toDouble; val y = b(i).toDouble
@@ -149,7 +193,8 @@ object SqlSurface {
       }
       if (na == 0 || nb == 0) 1.0 else 1.0 - dot / (math.sqrt(na) * math.sqrt(nb))
     })
-    spark.udf.register("ann_ip", (a: Seq[Float], b: Seq[Float]) => {
+    register(spark, "ann_ip", DoubleType, Vec, Vec)(
+      (a: collection.Seq[Float], b: collection.Seq[Float]) => {
       var s = 0.0; var i = 0
       while (i < a.length) { s -= a(i).toDouble * b(i); i += 1 }
       s
@@ -157,7 +202,8 @@ object SqlSurface {
     // Manhattan — pgvector `<+>`; row-eval only (no rotation preserves L1,
     // so the reference keeps l1 on its legacy layout and this engine keeps
     // it on the exact path: no claim rule maps ann_l1)
-    spark.udf.register("ann_l1", (a: Seq[Float], b: Seq[Float]) => {
+    register(spark, "ann_l1", DoubleType, Vec, Vec)(
+      (a: collection.Seq[Float], b: collection.Seq[Float]) => {
       var s = 0.0; var i = 0
       while (i < a.length) { s += math.abs(a(i).toDouble - b(i)); i += 1 }
       s
@@ -180,21 +226,21 @@ object SqlSurface {
     // levenshtein_matches/has_all_tokens/has_any_tokens). Here each is a
     // row-eval of the equivalent TsQuery leaf; ClaimTsMatch recognizes the
     // names and drives the same leaf from the index when one is registered.
-    spark.udf.register("has_any_tokens",
+    register(spark, "has_any_tokens", BooleanType, StringType, StringType, StringType)(
       (text: String, q: String, dict: String) =>
         if (text == null) None else {
           val a = AnalyzerRegistry.get(dict)
           Some(TsQueryExec.evalTokens(
             TsQuery.Or(a.tokens(q).map(TsQuery.Term.apply)), a.tokens(text)))
         })
-    spark.udf.register("has_all_tokens",
+    register(spark, "has_all_tokens", BooleanType, StringType, StringType, StringType)(
       (text: String, q: String, dict: String) =>
         if (text == null) None else {
           val a = AnalyzerRegistry.get(dict)
           Some(TsQueryExec.evalTokens(
             TsQuery.And(a.tokens(q).map(TsQuery.Term.apply)), a.tokens(text)))
         })
-    spark.udf.register("phrase_matches",
+    register(spark, "phrase_matches", BooleanType, StringType, StringType, StringType)(
       (text: String, q: String, dict: String) =>
         if (text == null) None else {
           val a = AnalyzerRegistry.get(dict)
@@ -202,7 +248,7 @@ object SqlSurface {
         })
     // reference ts_phrase(..., slop := N): shared move budget, order
     // inversions admitted (sloppy_phrase.test) — claimable like the others
-    spark.udf.register("phrase_slop_matches",
+    register(spark, "phrase_slop_matches", BooleanType, StringType, StringType, IntegerType, StringType)(
       (text: String, q: String, slop: Int, dict: String) =>
         if (text == null) None else {
           val a = AnalyzerRegistry.get(dict)
@@ -210,13 +256,13 @@ object SqlSurface {
           val tsq = if (ts.size < 2) TsQuery.Phrase(ts) else TsQuery.SlopPhrase(ts, slop)
           Some(TsQueryExec.evalTokens(tsq, a.tokens(text)))
         })
-    spark.udf.register("levenshtein_matches",
+    register(spark, "levenshtein_matches", BooleanType, StringType, StringType, IntegerType, StringType)(
       (text: String, term: String, maxDist: Int, dict: String) =>
         if (text == null) None else {
           val a = AnalyzerRegistry.get(dict)
           Some(TsQueryExec.evalTokens(TsQuery.Fuzzy(term, maxDist), a.tokens(text)))
         })
-    spark.udf.register("ngram_matches",
+    register(spark, "ngram_matches", BooleanType, StringType, StringType, DoubleType, StringType)(
       (text: String, q: String, minJaccard: Double, dict: String) =>
         if (text == null) None else {
           val a = AnalyzerRegistry.get(dict)

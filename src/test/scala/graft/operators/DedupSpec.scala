@@ -150,4 +150,13 @@ class DedupSpec extends AnyFunSuite {
     assert(phys.contains("BroadcastHashJoin"),
       phys.linesIterator.take(12).mkString("\n"))
   }
+
+  test("a broadcast threshold of -1 (broadcast joins off) never fits the cluster map") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    assert(!graft.queries.DedupQueries.fitsBroadcast(s, 10L))
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "1m")
+    assert(graft.queries.DedupQueries.fitsBroadcast(s, 10L))
+    assert(!graft.queries.DedupQueries.fitsBroadcast(s, 1L << 20))
+  }
 }

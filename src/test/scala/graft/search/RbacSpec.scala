@@ -72,6 +72,28 @@ class RbacSpec extends AnyFunSuite {
     sql("REVOKE SELECT ON graft_documents FROM searcher")
   }
 
+  test("a claimed bm25 top-k is denied to a role with no grant") {
+    SqlSurface.registerAll(spark)
+    Tables.documents(spark, TestSpark.sfDir)
+      .createOrReplaceTempView("graft_documents")
+    sql(s"""CREATE SEARCH INDEX rbac_topk_idx ON graft_documents (text)
+           |WITH (id = 'doc_id', analyzer = 'whitespace',
+           |      key = '${TestSpark.sfDir}-documents-rbac-topk')""".stripMargin)
+    sql("CREATE ROLE ranker")
+    // the index-only top-k reads the scorer leaf alone, no documents file
+    val q = () => spark.sql(
+      """SELECT doc_id FROM graft_documents
+        |ORDER BY bm25(text, 'vector query', 'whitespace') DESC LIMIT 5""".stripMargin)
+      .collect()
+    try {
+      assert(withRole("ranker")(denied(q())),
+        "a claimed top-k must be denied without a grant")
+      sql("GRANT SELECT ON graft_documents TO ranker")
+      assert(withRole("ranker")(q()).nonEmpty)
+      sql("REVOKE SELECT ON graft_documents FROM ranker")
+    } finally sql("DROP SEARCH INDEX rbac_topk_idx")
+  }
+
   test("column grants: only the granted columns are readable; count(*) passes") {
     Tables.documents(spark, TestSpark.sfDir)
       .createOrReplaceTempView("graft_documents")

@@ -167,14 +167,31 @@ class ReaderSnapshotSpec extends AnyFunSuite {
     assert(got.nonEmpty && got.subsetOf(alpha), s"non-alpha docs in $got")
   }
 
-  test("the absorbed top-k: no drive, base-table join kept, at most 2 Spark jobs") {
+  /** The bare bm25 shape: no text match, the id only. */
+  private def bare(k: Int) =
+    s"SELECT pk FROM $idx ORDER BY bm25(body, 'alpha bravo', '$dict') DESC LIMIT $k"
+
+  /** Whether the plan reads a file relation (the base table). */
+  private def readsFiles(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean =
+    plan.exists {
+      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        lr.relation.isInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
+      case _ => false
+    }
+
+  test("the absorbed and the bare top-k: no drive, no base-table relation, 1 Spark job") {
     ready
-    val plan = spark.sql(canonical(5)).queryExecution.optimizedPlan
-    assert(claimed(plan))
-    assert(semiJoins(plan) == 0, s"the ts_match drive must be absorbed\n$plan")
-    run(spark, canonical(5))
-    val (_, jobs) = RefreshJobCount.jobsIn(spark, "topk-exec")(run(spark, canonical(5)))
-    assert(jobs <= 2, s"the warm top-k ran $jobs Spark jobs")
+    Seq(canonical(5), bare(5)).foreach { q =>
+      val plan = spark.sql(q).queryExecution.optimizedPlan
+      assert(claimed(plan))
+      assert(semiJoins(plan) == 0, s"the ts_match drive must be absorbed\n$plan")
+      assert(!readsFiles(plan), s"a fresh index answers the top-k alone\n$plan")
+      run(spark, q)
+      val (_, jobs) = RefreshJobCount.jobsIn(spark, "topk-exec")(run(spark, q))
+      assert(jobs == 1, s"the warm top-k ran $jobs Spark jobs: $q")
+    }
+    assert(run(spark, bare(5)).map(_.getAs[Number](0).intValue).toSeq ==
+      run(spark, canonical(5)).map(_.getAs[Number](0).intValue).toSeq)
 
     // between a DELETE and its REFRESH the index still scores the deleted
     // rows; the base-table join leaves them out and nothing else changes
@@ -182,9 +199,78 @@ class ReaderSnapshotSpec extends AnyFunSuite {
     val gone = all.take(3).map(_._1)
     run(spark, s"DELETE FROM $tbl WHERE pk IN (${gone.mkString(", ")})")
     try {
+      assert(readsFiles(spark.sql(canonical(5)).queryExecution.optimizedPlan))
       val after = run(spark, canonical(5)).map(r => r.getAs[Number](0).intValue -> r.getDouble(1))
       assert(after.toSeq == all.filterNot(p => gone.contains(p._1)).take(5).toSeq)
     } finally run(spark, s"VACUUM (REFRESH_TABLE) $tbl")
+  }
+
+  test("a bare top-k between a DELETE and its REFRESH leaves the deleted rows out") {
+    ready
+    val all = run(spark, bare(100)).map(_.getAs[Number](0).intValue).toSeq
+    val gone = all.take(2)
+    run(spark, s"DELETE FROM $tbl WHERE pk IN (${gone.mkString(", ")})")
+    try {
+      val plan = spark.sql(bare(5)).queryExecution.optimizedPlan
+      assert(claimed(plan) && readsFiles(plan), s"a stale index must join the table\n$plan")
+      assert(run(spark, bare(5)).map(_.getAs[Number](0).intValue).toSeq ==
+        all.filterNot(gone.contains).take(5))
+    } finally run(spark, s"VACUUM (REFRESH_TABLE) $tbl")
+    val refreshed = run(spark, bare(100)).map(_.getAs[Number](0).intValue)
+    assert(refreshed.nonEmpty && !refreshed.exists(gone.contains), "after the REFRESH")
+  }
+
+  /** Effective runs of Spark's `ResolveEncodersInUDF` so far, from the
+    * rule executor's metering table (`… effective runs / total runs`). */
+  private def encoderResolutions(): Long =
+    org.apache.spark.sql.catalyst.rules.RuleExecutor.dumpTimeSpent().split("\n")
+      .find(_.contains("ResolveEncodersInUDF"))
+      .flatMap(l => "(\\d+) / (\\d+)\\s*$".r.findFirstMatchIn(l))
+      .fold(0L)(_.group(1).toLong)
+
+  test("analyzing warm search statements resolves no UDF encoder") {
+    ready
+    val knn = s"SELECT pk FROM $idx ORDER BY emb <-> [20.3, 0.0, 0.0, 0.0]::FLOAT[4] LIMIT 5"
+    val statements = Seq(canonical(5), count, knn, hybrid)
+    statements.foreach(q => spark.sql(q).queryExecution.optimizedPlan)
+    val before = encoderResolutions()
+    statements.foreach(q => spark.sql(q).queryExecution.analyzed)
+    assert(encoderResolutions() == before,
+      org.apache.spark.sql.catalyst.rules.RuleExecutor.dumpTimeSpent())
+  }
+
+  test("row-evaluated search functions keep their answers, NULL inputs included") {
+    ready
+    val rows = run(spark,
+      s"""SELECT ts_match(b, q, '$dict'), ann_l2(e, array(1.0, 4.0)),
+         |  boost(q, NULL), boost('alpha', 2) = boost('alpha', 2.0),
+         |  slop(ts_phrase('a b'), NULL), phrase_slop_matches(b, 'alpha charlie', 1, '$dict')
+         |FROM VALUES ('alpha bravo charlie', 'alpha', array(CAST(1 AS FLOAT), CAST(2 AS FLOAT))),
+         |  (NULL, 'alpha', array(CAST(1 AS FLOAT), CAST(6 AS FLOAT))),
+         |  ('alpha', NULL, array(CAST(3 AS FLOAT), CAST(4 AS FLOAT)))
+         |  AS t(b, q, e)""".stripMargin)
+    def cells(r: Row) = (0 until r.length).map(i => if (r.isNullAt(i)) null else r.get(i))
+    assert(cells(rows(0)) == Seq(true, 4.0, null, true, null, true))
+    assert(cells(rows(1)) == Seq(null, 4.0, null, true, null, null))
+    assert(cells(rows(2)) == Seq(null, 4.0, null, true, null, false))
+  }
+
+  test("CREATE INDEX and REFRESH log no exception") {
+    ready
+    val t2 = s"${tbl}_quiet"
+    run(spark, s"CREATE TABLE $t2(pk INTEGER PRIMARY KEY, body VARCHAR, emb FLOAT[4])")
+    run(spark, s"INSERT INTO $t2 SELECT pk, body, emb FROM $tbl")
+    try {
+      val (_, thrown) = graft.LogCapture.thrownIn {
+        run(spark, s"CREATE INDEX ${idx}_quiet ON $t2 USING inverted(pk, body $dict)")
+        run(spark, s"DELETE FROM $t2 WHERE pk = 1")
+        run(spark, s"VACUUM (REFRESH_TABLE) $t2")
+      }
+      assert(thrown.isEmpty, thrown.mkString("\n"))
+    } finally {
+      run(spark, s"DROP INDEX IF EXISTS ${idx}_quiet")
+      run(spark, s"DROP TABLE IF EXISTS $t2")
+    }
   }
 
   private def joins(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int =
