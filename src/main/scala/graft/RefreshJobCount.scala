@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
   * reader snapshot serves `IndexStore.load` without file listing or schema
   * inference), and the execution of that warm top-k and of the search
   * mix's absorbed `ts_match` + bm25 top-k (index-only on a fresh index: one
-  * job each), of a warm claimed `ts_match` count (the text-match leaf's
-  * count-only mode: one job) and of a warm claimed phrase match. Usage:
+  * job each), of a warm claimed `ts_match` count and of one whose query
+  * expands the term dictionary (the text-match leaf's count-only mode: one
+  * job each) and of a warm claimed phrase match. Usage:
   * runMain graft.RefreshJobCount [sfDir]
   */
 object RefreshJobCount {
@@ -90,12 +91,16 @@ object RefreshJobCount {
       "ORDER BY bm25(text, 'vector query', 'whitespace') DESC LIMIT 10"
     val count = "SELECT count(*) FROM jobcount_all " +
       "WHERE ts_match(text, ts_or(ts_phrase('vector'), ts_phrase('query')), 'whitespace')"
+    // a prefix expands the term dictionary inside the count's one task
+    val expansionCount = "SELECT count(*) FROM jobcount_all " +
+      "WHERE ts_match(text, ts_starts_with('vec'), 'whitespace')"
     val phrase = "SELECT doc_id FROM jobcount_all " +
       "WHERE ts_match(text, ts_phrase('hash join'), 'whitespace')"
     Seq("topk-exec" -> topk, "topk-absorbed-exec" -> absorbed, "count-exec" -> count,
-        "phrase-exec" -> phrase).foreach { case (label, q) =>
-      spark.sql(q).collect()
-      counted(label)(spark.sql(q).collect())
+        "expansion-count-exec" -> expansionCount, "phrase-exec" -> phrase).foreach {
+      case (label, q) =>
+        spark.sql(q).collect()
+        counted(label)(spark.sql(q).collect())
     }
 
     spark.sql("DROP SEARCH INDEX jobcount_topk_idx")

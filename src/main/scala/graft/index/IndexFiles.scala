@@ -34,22 +34,22 @@ object IndexFile {
   }
 }
 
-/** One live segment's files: postings by hash bucket, and docstats. */
+/** One live segment's files: postings by hash bucket, docstats, and the
+  * term dictionary (every bucket). */
 final case class SegmentFiles(segNo: Int,
     postingsSchema: StructType, postings: Seq[(Option[Int], IndexFile)],
-    docStatsSchema: StructType, docStats: Seq[IndexFile]) {
+    docStatsSchema: StructType, docStats: Seq[IndexFile],
+    termDictSchema: StructType, termDict: Seq[IndexFile]) {
   /** Postings files that can hold any of `buckets`. */
   def postingsIn(buckets: Set[Int]): Seq[IndexFile] =
     postings.collect { case (b, f) if b.forall(buckets.contains) => f }
 }
 
 /** The files of one reader snapshot that an index task reads: the live
-  * segments of the index at `dir` in manifest order, the parquet tombstone
-  * generations at or above the floor, and the legacy `_DELETES` lines as
-  * `(doc_id, max_seg)`. */
+  * segments of the index at `dir` in manifest order, and the parquet
+  * tombstone generations at or above the floor. */
 final case class IndexFiles(dir: String, segments: Seq[SegmentFiles],
-    tombstoneSchema: StructType, tombstones: Seq[IndexFile],
-    legacyTombstones: Seq[(Long, Int)])
+    tombstoneSchema: StructType, tombstones: Seq[IndexFile])
 
 /** A relation that opens an index's files inside its own task
   * ([[TermBagScan]], [[MatchScan]]) instead of scanning them as a file
@@ -90,15 +90,13 @@ private[index] object IndexTask {
     def tombstones(files: IndexFiles): TombstoneFiles =
       TombstoneFiles(
         if (files.tombstones.isEmpty) None
-        else Some(input(files.tombstoneSchema, Seq("doc_id", "max_seg"), Nil, files.tombstones)),
-        files.legacyTombstones)
+        else Some(input(files.tombstoneSchema, Seq("doc_id", "max_seg"), Nil, files.tombstones)))
   }
 
-  /** A snapshot's tombstone parquet files and legacy lines. */
-  final case class TombstoneFiles(parquet: Option[Input], legacy: Seq[(Long, Int)]) {
+  /** A snapshot's tombstone parquet files. */
+  final case class TombstoneFiles(parquet: Option[Input]) {
     def load(docType: DataType): Tombstones = {
       val dead = new Tombstones(docType)
-      legacy.foreach { case (d, m) => dead.add(d, m) }
       parquet.foreach(_.rows(r => if (!r.isNull(0)) dead.add(r.long(0), r.int(1))))
       dead
     }
@@ -115,6 +113,9 @@ private[index] object IndexTask {
     * the columns it returns; rows reach `f` through [[Cols]]. */
   final case class Input(read: PartitionedFile => Iterator[InternalRow],
       types: Seq[DataType], files: Seq[PartitionedFile]) {
+    /** The same reader over the files `in` (chosen inside the task). */
+    def over(in: Seq[IndexFile]): Input = copy(files = in.map(_.toPartitionedFile))
+
     def rows(f: Cols => Unit): Unit = {
       val c = new Cols(types)
       files.foreach(pf => read(pf).foreach(r => f(c.bind(r))))

@@ -47,9 +47,8 @@ import org.apache.spark.sql.types.StructType
   * Reader snapshot (the reference keeps its index readers open and reuses
   * the current segment snapshot per query): [[load]] serves one cached
   * snapshot per index directory, keyed by the on-disk state a load reads —
-  * the `_SEGMENTS` manifest (content and modification time), the legacy
-  * `_DELETES` file (length and modification time) and the `_DELETES_P`
-  * listing (each tombstone generation and the `_FLOOR` file, with their
+  * the `_SEGMENTS` manifest (content and modification time) and the
+  * `_DELETES_P` listing (each tombstone generation and the `_FLOOR` file, with their
   * modification times). Computing the key is a few metadata calls and
   * launches no Spark job. The snapshot holds only session-independent
   * state: each segment part's resolved `HadoopFsRelation` (its file listing
@@ -65,8 +64,8 @@ import org.apache.spark.sql.types.StructType
   *
   * Scoring reads the snapshot's files, not its frames: `load` hands the
   * index the snapshot's [[IndexFiles]] (each live segment's postings files
-  * by bucket and docstats files, the live tombstone files and the legacy
-  * tombstone lines), and the term-bag scoring leaf ([[TermBagScan]]) opens
+  * by bucket, docstats and term dictionary files, and the live tombstone
+  * files), and the term-bag scoring leaf ([[TermBagScan]]) opens
   * them inside one task, applying the generation-scoped tombstones and
   * re-deriving live `df`/`ctf`/`max_tf` exactly as [[load]]'s frames do.
   * ClaimScoreTopK (graft.plans) drops a `ts_match` semi-join whose query is
@@ -545,10 +544,10 @@ object IndexStore {
   // ---- reader snapshot -----------------------------------------------------
 
   /** The on-disk state a [[load]] reads (see the object scaladoc): manifest
-    * content and mtime, legacy `_DELETES` (length, mtime), and every
-    * `_DELETES_P` entry (name, mtime, length). */
+    * content and mtime, and every `_DELETES_P` entry (name, mtime,
+    * length). */
   private final case class Stamp(manifest: String, manifestMtime: Long,
-      legacyDeletes: Option[(Long, Long)], deleteEntries: Seq[(String, Long, Long)])
+      deleteEntries: Seq[(String, Long, Long)])
 
   /** Session-independent reader state for one [[Stamp]]. The parquet
     * relations and tombstone scalars resolve lazily (once), so
@@ -572,12 +571,7 @@ object IndexStore {
       else readString(spark, s"$dir/_DELETES_P/_FLOOR").trim.toInt
     private val liveGens = gens.filter(_ >= floor).sorted
     val nextGen: Int = (gens :+ (floor - 1)).max + 1
-    val legacy: Seq[(Long, Long, Int)] =
-      if (stamp.legacyDeletes.isEmpty) Nil
-      else readString(spark, s"$dir/_DELETES").split("\n").map(_.trim)
-        .filter(_.nonEmpty).toSeq
-        .map { l => val p = l.split(","); (p(0).toLong, p(1).toLong, p(2).toInt) }
-    val hasDeletes: Boolean = legacy.nonEmpty || liveGens.nonEmpty
+    val hasDeletes: Boolean = liveGens.nonEmpty
 
     private def resolve(paths: String*): HadoopFsRelation =
       spark.read.parquet(paths: _*).queryExecution.analyzed
@@ -595,28 +589,25 @@ object IndexStore {
       else Some(resolve(liveGens.map(g => s"$dir/_DELETES_P/gen=$g"): _*))
 
     /** All live tombstones (doc_id, dlen, max_seg) over `s`: the parquet
-      * generations at or above the floor plus any legacy `_DELETES` lines. */
-    def tombstones(s: SparkSession): Option[DataFrame] = {
-      import s.implicits._
-      val leg = if (legacy.isEmpty) None else Some(legacy.toDF("doc_id", "dlen", "max_seg"))
-      (leg.toSeq ++ genRel.map(rebind(s, _)).toSeq).reduceOption(_ unionByName _)
-        .map(_.dropDuplicates("doc_id", "max_seg"))
-    }
+      * generations at or above the floor. */
+    def tombstones(s: SparkSession): Option[DataFrame] =
+      genRel.map(rebind(s, _).dropDuplicates("doc_id", "max_seg"))
 
-    /** What a scoring task reads ([[TermBagScan]]): every segment's
-      * postings (by bucket) and docstats files and the live tombstones —
-      * listings of the cached relations, no IO. */
+    /** What an index task reads ([[TermBagScan]], [[MatchScan]]): every
+      * segment's postings (by bucket), docstats and term dictionary files
+      * and the live tombstones — listings of the cached relations, no IO. */
     lazy val files: IndexFiles = {
-      val (post, stats) = (parts("postings"), parts("docstats"))
+      val (post, stats, dict) = (parts("postings"), parts("docstats"), parts("termdict"))
+      def listed(rel: HadoopFsRelation) = IndexFile.listing(rel).map(_._2)
       IndexFiles(dir,
         segs.indices.map { i =>
           SegmentFiles(segs(i).stripPrefix("seg=").toInt,
             post(i).dataSchema, IndexFile.listing(post(i)),
-            stats(i).dataSchema, IndexFile.listing(stats(i)).map(_._2))
+            stats(i).dataSchema, listed(stats(i)),
+            dict(i).dataSchema, listed(dict(i)))
         },
         genRel.fold(new StructType())(_.dataSchema),
-        genRel.toSeq.flatMap(IndexFile.listing(_).map(_._2)),
-        legacy.map { case (d, _, m) => (d, m) })
+        genRel.toSeq.flatMap(listed))
     }
 
     /** (count, Σ dlen) of the live tombstones: the collection-total
@@ -641,8 +632,7 @@ object IndexStore {
         try f.listStatus(new Path(s"$dir/_DELETES_P")).toSeq
           .map(st => (st.getPath.getName, st.getModificationTime, st.getLen)).sortBy(_._1)
         catch { case _: FileNotFoundException => Nil }
-      Stamp(readString(spark, s"$dir/_SEGMENTS"), man.getModificationTime,
-        status(s"$dir/_DELETES").map(st => (st.getLen, st.getModificationTime)), entries)
+      Stamp(readString(spark, s"$dir/_SEGMENTS"), man.getModificationTime, entries)
     }
   }
 
@@ -744,14 +734,12 @@ object IndexStore {
     writeStringAtomic(spark, s"$dir/_SEGMENTS", f"seg=$next%05d\n")
     // the merged segment was written deletes-applied; retire its tombstones
     // AFTER the swap (a crash in between leaves deletes that now anti-join
-    // nothing — never resurrecting rows). Legacy lines are read into each
-    // plan as local rows, so clearing them yanks nothing from a reader.
+    // nothing — never resurrecting rows)
     if (snap.nextGen > snap.floor)
       writeStringAtomic(spark, s"$dir/_DELETES_P/_FLOOR", s"${snap.nextGen}\n")
     val f = fs(spark, dir)
     snap.gens.filter(_ < snap.floor)
       .foreach(g => f.delete(new Path(s"$dir/_DELETES_P/gen=$g"), true))
-    if (snap.legacy.nonEmpty) writeStringAtomic(spark, s"$dir/_DELETES", "")
   }
 
   /** Compact with SNAPSHOT-ISOLATED cleanup (the reference pins the segment

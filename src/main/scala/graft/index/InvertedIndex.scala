@@ -28,14 +28,16 @@ import graft.analysis.AnalyzerRegistry
   *
   * Scale notes: postings are built with one explode + one groupBy shuffle,
   * both keyed on (doc, term) so map-side partial aggregation applies; the
-  * only global state is the (tiny) term dictionary and two scalars. The
-  * expansion primitives below (prefix, wildcard, regexp, range, fuzzy,
-  * n-gram, phrase-prefix) are term-dictionary joins over postings — no
-  * `collect()` — so plans compose and stay distributed. Two single-task
-  * leaves drive everything else: the term-bag scorers ([[scoredTerms]])
-  * read [[TermBagScan]], and exact-term matches (terms, phrases and their
-  * boolean trees, [[graft.search.TsQueryExec.matching]]) read
-  * [[MatchScan]]. Each task reads the query terms' bucket-pruned postings —
+  * only global state is the (tiny) term dictionary and two scalars. Two
+  * single-task leaves drive the reads: the term-bag scorers
+  * ([[scoredTerms]]) read [[TermBagScan]], and every boolean match
+  * ([[graft.search.TsQueryExec.matching]]: terms, phrases, the expansion
+  * leaves prefix, wildcard, regexp, range, fuzzy, n-gram and
+  * phrase-prefix, and their boolean trees) reads [[MatchScan]], which
+  * expands the term dictionary inside its task. The scored dictionary
+  * expansions (`prefixTerms` … `fuzzyTerms`, fed to [[scoreOverTerms]])
+  * and [[anyOfPrefixes]] stay term-dictionary frames joined to postings.
+  * Each task reads the query terms' bucket-pruned postings —
   * the reference's postings walk into a collector (max_score_iterator.hpp,
   * top_k_heap.hpp): cost is O(Σ df(term)) postings rows, never a corpus
   * scan of postings, with no shuffle. An index loaded through
@@ -105,18 +107,10 @@ final case class InvertedIndex(
   private def docsForTerms(terms: DataFrame): DataFrame =
     postings.join(broadcast(terms), "term").select(col("doc_id")).distinct()
 
-  /** Prefix match rewritten as a term RANGE (`term >= p AND term < p⁺`, with
-    * p⁺ = p with its last char incremented) — byte-order-equivalent to
-    * startsWith but pushed to parquet as min/max range filters, so term-dict
-    * row groups outside the prefix band never decompress (the reference walks
-    * a term-dict range the same way, prefix_filter.hpp). The residual
-    * startsWith keeps semantics exact even if p⁺ overflows. */
-  def prefix(p: String): DataFrame = docsForTerms(expandTerms(prefixPred(p)))
-
   /** Docs whose term starts with ANY of `prefixes` — one term-dict scan,
     * then one bucket-pruned postings join. Drives mixed-precision geo cell
     * coverings (a coarse covering cell is a prefix of every finer cell
-    * inside it), where N separate [[prefix]] calls would mean N dict scans
+    * inside it), where N separate prefix matches would mean N dict scans
     * and an N-way union.
     *
     * Small prefix sets become an OR of pushable term ranges; large ones
@@ -158,6 +152,12 @@ final case class InvertedIndex(
     docsForTerms(expandTerms(pred))
   }
 
+  /** Prefix match rewritten as a term RANGE (`term >= p AND term < p⁺`, with
+    * p⁺ = p with its last char incremented) — byte-order-equivalent to
+    * startsWith but pushed to parquet as min/max range filters, so term-dict
+    * row groups outside the prefix band never decompress (the reference walks
+    * a term-dict range the same way, prefix_filter.hpp). The residual
+    * startsWith keeps semantics exact even if p⁺ overflows. */
   private def prefixPred(p: String): Column = {
     val base = col("term").startsWith(p)
     // p.last + 1 landing in the surrogate range would make the upper-bound
@@ -171,17 +171,11 @@ final case class InvertedIndex(
     }
   }
 
-  /** SQL LIKE-style wildcard over terms (%, _) — ts_like. A literal prefix
-    * before the first wildcard char becomes a pushable term range, same as
-    * [[prefix]]. */
-  def wildcard(pattern: String): DataFrame = docsForTerms(wildcardTerms(pattern))
-
-  /** Regex over terms — ts_regexp. */
-  def regexp(pattern: String): DataFrame = docsForTerms(regexpTerms(pattern))
-
   /** Dictionary expansions of the multi-term leaves as `(term)` frames —
-    * the scored MultiTermQuery form feeds [[bm25OverTerms]]; the boolean
-    * match form wraps them in [[docsForTerms]]. */
+    * the scored MultiTermQuery form, fed to [[scoreOverTerms]]. Boolean
+    * matching expands the dictionary inside [[MatchScan]]'s task instead.
+    * A LIKE pattern's literal prefix before its first wildcard becomes a
+    * pushable term range. */
   def prefixTerms(p: String): DataFrame = expandTerms(prefixPred(p))
 
   def wildcardTerms(pattern: String): DataFrame = {
@@ -200,23 +194,12 @@ final case class InvertedIndex(
     expandTerms((lower ++ upper).reduceOption(_ && _).getOrElse(lit(true)))
   }
 
-  /** Levenshtein fuzzy match — ts_levenshtein. `maxTerms` caps the
-    * dictionary expansion to the CLOSEST terms (the reference's
-    * `sdb_levenshtein_max_terms` session knob, default 64, 0 = uncapped —
-    * levenshtein_max_terms.test): survivors are ranked by similarity
-    * `1 - dist/max(len)`, exact match first, term as the deterministic
-    * tie-break. The cap bounds the postings union a sloppy probe can fan
-    * into on a 100 TB-scale dictionary. */
-  def fuzzy(t: String, maxDist: Int, maxTerms: Int = -1,
-      transpositions: Boolean = true, prefix: String = ""): DataFrame =
-    docsForTerms(
-      fuzzyTerms(t, maxDist, maxTerms, transpositions, prefix).select(col("term")))
-
   /** Fuzzy dictionary expansion as `(term, w)` with w = the reference's
     * similarity boost 1 − d/min(|term|,|target|)
     * (levenshtein_filter.cpp:49-54,119-124) — also the rank key for the
     * `maxTerms` cap (the reference's scored_terms_limit keeps the
-    * highest-boost terms). */
+    * highest-boost terms; -1 reads `spark.graft.levenshteinMaxTerms`,
+    * default 64, and 0 keeps every term — levenshtein_max_terms.test). */
   def fuzzyTerms(t: String, maxDist: Int, maxTerms: Int = -1,
       transpositions: Boolean = true, prefix: String = ""): DataFrame = {
     // the session knob (`SET spark.graft.levenshteinMaxTerms = N`) is the
@@ -259,89 +242,6 @@ final case class InvertedIndex(
       if (cap <= 0) expanded
       else expanded.orderBy(col("w").desc, col("term")).limit(cap)
     capped.select(col("term"), col("w"))
-  }
-
-  /** Term range — ts_between / ts_lt / ts_gt family. */
-  def range(lo: Option[String], hi: Option[String],
-      loInc: Boolean = true, hiInc: Boolean = true): DataFrame =
-    docsForTerms(rangeTerms(lo, hi, loInc, hiInc))
-
-  /** ts_ngram — n-gram similarity match (ts_ngram.cpp;
-    * ngram_similarity_filter.hpp; demo3 §4): docs containing any term whose
-    * character-n-gram Jaccard with `query` ≥ minJaccard. The Jaccard runs
-    * over the (small) term dictionary as a codegen'd expression — the
-    * typo-tolerant match class distinct from levenshtein. */
-  def ngramSimilarity(query: String, minJaccard: Double, n: Int = 3): DataFrame = {
-    val qGrams = (0 to query.length - n).map(i => query.substring(i, i + n)).distinct
-    require(qGrams.nonEmpty, s"query shorter than $n")
-    val qLit = qGrams.map(g => s"'${g.replace("'", "\\'")}'").mkString("array(", ", ", ")")
-    val grams = s"""CASE WHEN length(term) < $n THEN CAST(array() AS ARRAY<STRING>)
-      ELSE array_distinct(transform(sequence(1, length(term) - ${n - 1}),
-        i -> substring(term, i, $n))) END"""
-    val j = s"""CAST(size(array_intersect($grams, $qLit)) AS DOUBLE) /
-      CAST(size(array_union($grams, $qLit)) AS DOUBLE)"""
-    docsForTerms(expandTerms(expr(s"$j >= $minJaccard")))
-  }
-
-  /** ts_ngram over a GRAM-TOKENIZED field (TsQuery.GramSim; reference
-    * ngram_match.test, ngram_similarity_query.cpp): the postings' terms ARE
-    * grams, so matching is one bucket-pruned postings probe for the distinct
-    * query grams followed by a per-doc longest-common-gram-SEQUENCE check —
-    * never a dictionary scan, output-sensitive at any corpus size. A doc
-    * matches when LCS(query gram sequence, doc's position-ordered matched
-    * grams) ≥ MinMatchCount(|full query sequence|, minRatio) — duplicates
-    * kept in the denominator and order respected, exactly the reference's
-    * threshold arithmetic (ngram_similarity_filter.cpp:34). A query with no
-    * grams matches nothing (the reference returns QueryBuilder::Empty),
-    * same as the row-eval path — never an error. */
-  def gramSimilarity(qGrams: Seq[String], minRatio: Double): DataFrame = {
-    val gs = qGrams.distinct
-    if (gs.isEmpty) return postings.select(col("doc_id")).filter(lit(false))
-    val minMatch = graft.functions.TsDistances.minMatchCount(qGrams.size, minRatio)
-    val qSeq = qGrams.toIndexedSeq
-    val lcs = udf((doc: Seq[String]) =>
-      graft.functions.TsDistances.lcsLen(qSeq, doc))
-    // sort_array on (pos, term) structs orders by position; a NULL positions
-    // array (index built without positions) explodes to zero rows, so such
-    // fields match nothing — the reference's kRequiredFeatures gate
-    // (ngram_similarity_filter.cpp:60-64) returns Empty there too.
-    postingsForAny(gs)
-      .select(col("doc_id"), explode(col("positions")).as("pos"), col("term"))
-      .groupBy(col("doc_id"))
-      .agg(expr("transform(sort_array(collect_list(struct(pos, term))), x -> x.term)")
-        .as("__seq"))
-      .filter(lcs(col("__seq")) >= minMatch)
-      .select(col("doc_id"))
-  }
-
-  /** Phrase whose final slot is a PREFIX match (ES match_phrase_prefix):
-    * the last step of the position chain runs against the UNION of
-    * positions of every prefix-expanded term, merged per doc with one
-    * groupBy — distributed end to end, so unlike Lucene no max_expansions
-    * cap is needed (the expansion never leaves the executors). `init`
-    * empty degenerates to [[prefix]]. */
-  def phrasePrefix(init: Seq[String], prefix: String): DataFrame = {
-    if (init.isEmpty) return this.prefix(prefix)
-    val lastPos = postings
-      .join(broadcast(expandTerms(prefixPred(prefix))), "term")
-      .groupBy(col("doc_id"))
-      .agg(flatten(collect_list(col("positions"))).as("next_pos"))
-    val first = postingsFor(init.head)
-      .select(col("doc_id"), col("positions").as("chain"))
-    val chained = init.drop(1).foldLeft(first) { (acc, t) =>
-      val next = postingsFor(t)
-        .select(col("doc_id"), col("positions").as("next_pos"))
-      acc.join(next, "doc_id")
-        .withColumn("chain",
-          array_intersect(transform(col("chain"), p => p + 1), col("next_pos")))
-        .filter(size(col("chain")) > 0)
-        .select(col("doc_id"), col("chain"))
-    }
-    chained.join(lastPos, "doc_id")
-      .withColumn("chain",
-        array_intersect(transform(col("chain"), p => p + 1), col("next_pos")))
-      .filter(size(col("chain")) > 0)
-      .select(col("doc_id"))
   }
 
   /** The scoring plan `(doc_id, _score)`: the term-bag leaf — one row per

@@ -562,9 +562,11 @@ object IvfIndex {
       // the manifest, paying the corpus scan this manifest exists to
       // remove. Rewriting _SIZES from actual per-cluster counts (exact ≤
       // the conservative bound; radii untouched, still upper bounds)
-      // restores the zero-job steady path after ONE heal.
-      if (storedN.nonEmpty) {
-        val lists = readAll("_SIZES").get.split("\n").count(_.nonEmpty)
+      // restores the zero-job steady path after ONE heal. The list count
+      // comes from `_CENTROIDS` (one line per list), so an absent `_SIZES`
+      // heals the same way.
+      readAll("_CENTROIDS").foreach { centroids =>
+        val lists = centroids.split("\n").count(_.nonEmpty)
         val actual = spark.read.parquet(s"$dir/vectors")
           .groupBy(col("cluster")).count().collect()
           .map(r => r.getAs[Number](0).intValue -> r.getLong(1)).toMap

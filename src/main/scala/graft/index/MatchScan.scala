@@ -1,7 +1,7 @@
 package graft.index
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SQLContext}
+import org.apache.spark.sql.{DataFrame, Row, SQLContext, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.execution.datasources.LogicalRelation
@@ -10,129 +10,145 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources.{BaseRelation, In, TableScan}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import graft.search.TsQuery
+import graft.functions.TsDistances
+import graft.search.{TermPredicates, TsQuery}
 
 /** The text-match leaf behind [[graft.search.TsQueryExec.matching]]: one
-  * Spark task evaluates an exact-term [[TsQuery]] tree (`Term`, `Phrase`,
-  * `SlopPhrase`, `PhraseGap`, `And`, `Or`, `Not`, `Boost`, `All`) over the
-  * index and emits the matched `doc_id`s, each once — the reference's
-  * IResearch filter tree walked in one scan (search_filter_builder.cpp)
-  * instead of unions, distincts and doc_id joins over postings frames. No
-  * shuffle, no broadcast.
+  * Spark task evaluates a [[TsQuery]] tree — `Term`, `Phrase`,
+  * `SlopPhrase`, `PhraseGap`, `GramSim`, the expansion leaves `Prefix`,
+  * `Wildcard`, `Regexp`, `TermRange`, `Fuzzy`, `NgramSim` and
+  * `PhrasePrefix`, and `And`, `Or`, `Not`, `Boost`, `All` over them — and
+  * emits the matched `doc_id`s, each once: the reference's IResearch filter
+  * tree walked in one scan (search_filter_builder.cpp), its prefix,
+  * wildcard, regexp, range and Levenshtein automata run over the term
+  * dictionary inside that walk (prefix_filter.hpp, wildcard_filter.hpp,
+  * levenshtein_filter.hpp). No shuffle, no broadcast.
   *
-  * The task reads what the tree needs and nothing else: the query terms'
-  * postings (bucket-pruned, the term set pushed to the reader), their
-  * `positions` only when the tree has a positional node, and the docstats
-  * ids (the doc universe) only for `Not`, `All` or an `And` without a
-  * positive child. It applies the generation-scoped tombstones itself, so
-  * every row it keeps is live. File access and tombstones are
-  * [[IndexTask]]'s, shared with [[TermBagScan]]; an index built in memory
-  * has no files and its frames are read through one partition each.
+  * The task reads what the tree needs and nothing else:
+  *  - the term dictionary's `term` column of every live segment, only when
+  *    the tree has an expansion leaf; each leaf keeps the terms its
+  *    [[TermPredicates]] predicate accepts;
+  *  - the postings of the named and expanded terms, bucket-pruned; a tree
+  *    without an expansion leaf pushes its term set to the reader;
+  *  - their `positions` only when the tree has a positional node (a phrase
+  *    of two or more terms, `PhraseGap`, `GramSim`, a `PhrasePrefix` with
+  *    leading terms);
+  *  - the docstats ids (the doc universe) only for `Not`, `All` or an `And`
+  *    without a positive child.
+  * It applies the generation-scoped tombstones itself, so every row it
+  * keeps is live. File access and tombstones are [[IndexTask]]'s, shared
+  * with [[TermBagScan]]; an index built in memory has no files and its
+  * frames are read through one partition each.
   *
-  * Semantics are those of the doc_id join composition this leaf replaces,
+  * Semantics are those of the doc_id join composition this leaf replaced,
   * null ids included:
-  *  - a term matches the docs with a live posting row of it;
+  *  - a term matches the docs with a live posting row of it; an expansion
+  *    leaf the docs with a live posting row of any of its terms. `Fuzzy`
+  *    keeps, of its terms with a live posting, the `levenshteinMaxTerms`
+  *    most similar ones (`spark.graft.levenshteinMaxTerms`, read when the
+  *    statement is planned; 0 or less keeps all), by similarity, then term
+  *    byte order;
   *  - a positional node matches a doc when some choice of its terms' live
   *    rows chains (exact phrase: each next position is the previous + 1;
   *    `PhraseGap`: within the gap's bounds; `SlopPhrase`: total
-  *    displacement within the budget). Chaining over the positions of all
-  *    of a term's live rows at once gives the same answer, since each step
-  *    distributes over unions; a null `positions` array chains nothing;
+  *    displacement within the budget; `PhrasePrefix`: an exact phrase whose
+  *    last step reaches any position of its expanded terms). Chaining over
+  *    the positions of all of a term's live rows at once gives the same
+  *    answer, since each step distributes over unions; a null `positions`
+  *    array chains nothing;
+  *  - `GramSim` matches a doc when the longest common subsequence of its
+  *    grams and the doc's matched grams in (position, term) order reaches
+  *    MinMatchCount; an empty gram list matches nothing;
   *  - `Or` is a union; `And` intersects its positive children and removes
   *    its `Not` children, against the universe when it has no positive
   *    child; `Not` is the universe minus its child;
-  *  - a null id passes where an equi-join would keep it: in a term, a union,
-  *    a lone positive `And` child and the left side of a removal, never
-  *    through a positional node or an intersection of two or more.
+  *  - a null id passes where an equi-join or a grouping would keep it: in a
+  *    term, an expansion leaf, a `GramSim` (its rows' grams merged), a
+  *    union, a lone positive `And` child and the left side of a removal,
+  *    never through a chain of two or more slots or an intersection of two
+  *    or more.
   *
   * Count mode emits one row, the number of matched docs (a null id once) —
   * the reference's row-count-only IResearch scan
   * (inverted_index_count_variants.test). */
 private[graft] object MatchScan {
 
-  /** True when the leaf evaluates every node of `q`; trees holding an
-    * expansion leaf (`Prefix`, `Wildcard`, `Regexp`, `TermRange`, `Fuzzy`,
-    * `NgramSim`, `GramSim`, `PhrasePrefix`) are not. */
-  def exact(q: TsQuery): Boolean = q match {
-    case TsQuery.All | TsQuery.Term(_) | TsQuery.Phrase(_) | TsQuery.SlopPhrase(_, _) |
-        TsQuery.PhraseGap(_, _) => true
-    case TsQuery.And(qs) => qs.forall(exact)
-    case TsQuery.Or(qs) => qs.forall(exact)
-    case TsQuery.Not(inner) => exact(inner)
-    case TsQuery.Boost(inner, _) => exact(inner)
-    case _ => false
-  }
-
-  /** The matched docs of the exact tree `q`: one `doc_id` column. */
+  /** The matched docs of `q`: one `doc_id` column. */
   def frame(idx: InvertedIndex, q: TsQuery): DataFrame =
     Frames.ofRows(idx.postings.sparkSession, leaf(idx, q))
 
   /** [[frame]] as a plan node, for claim rules that splice it into a query. */
   def leaf(idx: InvertedIndex, q: TsQuery): LogicalRelation = relation(idx, q, countOnly = false)
 
-  /** The number of docs the exact tree `q` matches: one row, one `count`
-    * column. */
+  /** The number of docs `q` matches: one row, one `count` column. */
   def countLeaf(idx: InvertedIndex, q: TsQuery): LogicalRelation =
     relation(idx, q, countOnly = true)
 
   private def relation(idx: InvertedIndex, q: TsQuery, countOnly: Boolean): LogicalRelation = {
-    require(exact(q), s"not an exact-term query: $q")
     validate(q)
     val spark = idx.postings.sparkSession
     val docType = idx.postings.schema("doc_id").dataType
-    LogicalRelation(Relation(idx, q, docType, countOnly)(spark.sqlContext))
+    // the reference's per-connection SET sdb_levenshtein_max_terms: the
+    // planning session's value rides in the relation
+    val fuzzyCap = SparkSession.active.conf.get("spark.graft.levenshteinMaxTerms", "64").toInt
+    LogicalRelation(Relation(idx, q, docType, countOnly, fuzzyCap)(spark.sqlContext))
   }
 
   /** The shape checks the positional joins made when they were built. */
-  private def validate(q: TsQuery): Unit = q match {
+  private def validate(q: TsQuery): Unit = nodes(q).foreach {
     case TsQuery.Phrase(ts) => require(ts.nonEmpty, "empty phrase")
     case TsQuery.SlopPhrase(ts, _) => require(ts.nonEmpty, "empty phrase")
     case TsQuery.PhraseGap(ts, gaps) =>
       require(ts.size >= 2 && gaps.size == ts.size - 1, "gaps must be terms-1")
-    case TsQuery.And(qs) => qs.foreach(validate)
-    case TsQuery.Or(qs) => qs.foreach(validate)
-    case TsQuery.Not(inner) => validate(inner)
-    case TsQuery.Boost(inner, _) => validate(inner)
     case _ => ()
   }
 
-  /** Every term of `q`'s term and positional nodes, in first-occurrence order. */
-  private def terms(q: TsQuery): Seq[String] = (q match {
+  /** `q` and every node below it. */
+  private def nodes(q: TsQuery): Seq[TsQuery] = q +: (q match {
+    case TsQuery.And(qs) => qs.flatMap(nodes)
+    case TsQuery.Or(qs) => qs.flatMap(nodes)
+    case TsQuery.Not(inner) => nodes(inner)
+    case TsQuery.Boost(inner, _) => nodes(inner)
+    case _ => Nil
+  })
+
+  /** The terms a node names. */
+  private def named(q: TsQuery): Seq[String] = q match {
     case TsQuery.Term(t) => Seq(t)
     case TsQuery.Phrase(ts) => ts
     case TsQuery.SlopPhrase(ts, _) => ts
     case TsQuery.PhraseGap(ts, _) => ts
-    case TsQuery.And(qs) => qs.flatMap(terms)
-    case TsQuery.Or(qs) => qs.flatMap(terms)
-    case TsQuery.Not(inner) => terms(inner)
-    case TsQuery.Boost(inner, _) => terms(inner)
+    case TsQuery.PhrasePrefix(init, _) => init
+    case TsQuery.GramSim(gs, _) => gs
     case _ => Nil
-  }).distinct
+  }
 
-  /** Whether some node chains positions (a phrase of two or more terms). */
-  private def positional(q: TsQuery): Boolean = q match {
-    case TsQuery.Phrase(ts) => ts.size > 1
-    case TsQuery.SlopPhrase(ts, _) => ts.size > 1
-    case TsQuery.PhraseGap(_, _) => true
-    case TsQuery.And(qs) => qs.exists(positional)
-    case TsQuery.Or(qs) => qs.exists(positional)
-    case TsQuery.Not(inner) => positional(inner)
-    case TsQuery.Boost(inner, _) => positional(inner)
+  /** Whether a node expands the term dictionary. */
+  private def expands(q: TsQuery): Boolean = q match {
+    case _: TsQuery.Prefix | _: TsQuery.Wildcard | _: TsQuery.Regexp | _: TsQuery.TermRange |
+        _: TsQuery.Fuzzy | _: TsQuery.NgramSim | _: TsQuery.PhrasePrefix => true
     case _ => false
   }
 
-  /** Whether the doc universe is read: `Not`, `All`, or an `And` without a
-    * positive child. */
+  /** Whether a node reads positions. */
+  private def positional(q: TsQuery): Boolean = q match {
+    case TsQuery.Phrase(ts) => ts.size > 1
+    case TsQuery.SlopPhrase(ts, _) => ts.size > 1
+    case TsQuery.PhraseGap(_, _) | TsQuery.GramSim(_, _) => true
+    case TsQuery.PhrasePrefix(init, _) => init.nonEmpty
+    case _ => false
+  }
+
+  /** Whether a node reads the doc universe: `Not`, `All`, or an `And`
+    * without a positive child. */
   private def universe(q: TsQuery): Boolean = q match {
     case TsQuery.All | TsQuery.Not(_) => true
-    case TsQuery.And(qs) => qs.forall(_.isInstanceOf[TsQuery.Not]) || qs.exists(universe)
-    case TsQuery.Or(qs) => qs.exists(universe)
-    case TsQuery.Boost(inner, _) => universe(inner)
+    case TsQuery.And(qs) => qs.forall(_.isInstanceOf[TsQuery.Not])
     case _ => false
   }
 
   private final case class Relation(idx: InvertedIndex, q: TsQuery, docType: DataType,
-      countOnly: Boolean)(@transient val sqlContext: SQLContext)
+      countOnly: Boolean, fuzzyCap: Int)(@transient val sqlContext: SQLContext)
       extends BaseRelation with TableScan with IndexLeaf {
 
     override def indexDir: Option[String] = idx.files.map(_.dir)
@@ -152,46 +168,59 @@ private[graft] object MatchScan {
 
     override def buildScan(): RDD[Row] = {
       val spark = sqlContext.sparkSession
-      val ts = terms(q)
-      val (withPos, withDocs) = (positional(q), universe(q))
+      val all = nodes(q)
+      val ts = all.flatMap(named).distinct
+      val expansions = all.filter(expands).distinct
+      val (withPos, withDocs) = (all.exists(positional), all.exists(universe))
       // locals, so the task closures never capture this relation
-      val (query, dt, counting) = (q, docType, countOnly)
+      val (query, dt, counting, cap) = (q, docType, countOnly, fuzzyCap)
+      val postCols = Seq("term", "doc_id") ++ (if (withPos) Seq("positions") else Nil)
       val rdd: RDD[InternalRow] = idx.files match {
         case Some(files) =>
-          val buckets = ts.map(IndexStore.bucketOf).toSet
           val reader = new IndexTask.Reader(spark)
-          val termFilter = Seq(In("term", ts.toArray[Any]))
-          val postCols = Seq("term", "doc_id") ++ (if (withPos) Seq("positions") else Nil)
+          // a tree without an expansion leaf knows its terms here, so the
+          // reader skips row groups without them
+          val termFilter = if (expansions.isEmpty) Seq(In("term", ts.toArray[Any])) else Nil
           val segs = files.segments.map { s =>
-            (s.segNo,
-              if (ts.isEmpty) None
-              else Some(reader.input(s.postingsSchema, postCols, termFilter, s.postingsIn(buckets))),
+            (s,
+              if (ts.isEmpty && expansions.isEmpty) None
+              else Some(reader.input(s.postingsSchema, postCols, termFilter, Nil)),
+              if (expansions.isEmpty) None
+              else Some(reader.input(s.termDictSchema, Seq("term"), Nil, s.termDict)),
               if (withDocs) Some(reader.input(s.docStatsSchema, Seq("doc_id"), Nil, s.docStats))
               else None)
           }
           val tombs = reader.tombstones(files)
           spark.sparkContext.parallelize(Seq(0), 1).mapPartitions { _ =>
-            val m = new Matcher(ts, dt, withPos)
+            val dict = new java.util.HashSet[UTF8String]
+            segs.foreach { case (_, _, d, _) =>
+              d.foreach(_.rows(c => if (!c.isNull(0)) dict.add(c.term(0).copy())))
+            }
+            val m = new Matcher(ts, expansions, dict, dt, withPos, cap)
+            val buckets = m.terms.map(IndexStore.bucketOf).toSet
             val dead = tombs.load(dt)
-            segs.foreach { case (segNo, p, d) =>
-              p.foreach(_.rows(m.posting(segNo, dead, _)))
-              d.foreach(_.rows(m.doc(segNo, dead, _)))
+            segs.foreach { case (s, p, _, d) =>
+              if (m.terms.nonEmpty)
+                p.foreach(_.over(s.postingsIn(buckets)).rows(m.posting(s.segNo, dead, _)))
+              d.foreach(_.rows(m.doc(s.segNo, dead, _)))
             }
             m.emit(query, counting)
           }
         case None =>
           // an in-memory index: its frames, one coalesced partition each
           def none = spark.sparkContext.parallelize(Seq.empty[InternalRow], 1)
+          def one(df: DataFrame) = IndexTask.onePartition(spark, df)
           val post =
-            if (ts.isEmpty) none
-            else IndexTask.onePartition(spark, idx.postingsForAny(ts).select(
-              Seq(col("term"), col("doc_id")) ++ (if (withPos) Seq(col("positions")) else Nil): _*))
-          val docs =
-            if (withDocs) IndexTask.onePartition(spark, idx.docStats.select(col("doc_id")))
+            if (expansions.nonEmpty) one(idx.postings.select(postCols.map(col): _*))
+            else if (ts.nonEmpty) one(idx.postingsForAny(ts).select(postCols.map(col): _*))
             else none
+          val docs = if (withDocs) one(idx.docStats.select(col("doc_id"))) else none
+          val terms = if (expansions.nonEmpty) one(idx.termDict.select(col("term"))) else none
           val postTypes = Seq(StringType, dt) ++ (if (withPos) Seq(ArrayType(IntegerType)) else Nil)
-          post.zipPartitions(docs) { (p, d) =>
-            val m = new Matcher(ts, dt, withPos)
+          post.zipPartitions(docs, terms) { (p, d, t) =>
+            val dict = new java.util.HashSet[UTF8String]
+            t.foreach(r => if (!r.isNullAt(0)) dict.add(r.getUTF8String(0).copy()))
+            val m = new Matcher(ts, expansions, dict, dt, withPos, cap)
             val dead = new IndexTask.Tombstones(dt)
             val pc = new IndexTask.Cols(postTypes)
             p.foreach(r => m.posting(0, dead, pc.bind(r)))
@@ -220,9 +249,21 @@ private[graft] object MatchScan {
     lazy val sorted: Array[Int] = { val a = java.util.Arrays.copyOf(buf, n); java.util.Arrays.sort(a); a }
   }
 
-  /** The task's state: per query term, its live docs and their positions;
-    * the live doc universe when the tree reads it. */
-  private final class Matcher(terms: Seq[String], docType: DataType, withPos: Boolean) {
+  /** The task's state: each expansion leaf's dictionary terms; per named
+    * or expanded term, its live docs and their positions; the live doc
+    * universe when the tree reads it. */
+  private final class Matcher(named: Seq[String], expansions: Seq[TsQuery],
+      dict: java.util.Set[UTF8String], docType: DataType, withPos: Boolean, fuzzyCap: Int) {
+    private val expanded: Map[TsQuery, Seq[String]] = {
+      import scala.jdk.CollectionConverters._
+      val dictTerms = dict.asScala.toSeq
+      expansions.map { e =>
+        val p = TermPredicates(e)
+        e -> dictTerms.filter(p).map(_.toString)
+      }.toMap
+    }
+    /** The terms whose postings the task reads. */
+    val terms: Seq[String] = (named ++ expanded.values.flatten).distinct
     private val slot: Map[String, Int] = terms.zipWithIndex.toMap
     private val index: Map[UTF8String, Int] =
       slot.map { case (t, i) => UTF8String.fromString(t) -> i }
@@ -261,6 +302,26 @@ private[graft] object MatchScan {
     private def termDocs(t: String): Docs =
       new Docs(postings(slot(t)).keySet)
 
+    /** The docs of any of `ts`. */
+    private def anyDocs(ts: Seq[String]): Docs = {
+      val out = new Docs
+      ts.foreach(t => out.addAll(postings(slot(t)).keySet))
+      out
+    }
+
+    /** A fuzzy leaf's terms with a live posting, capped to the most
+      * similar ones. */
+    private def capped(f: TsQuery.Fuzzy): Seq[String] = {
+      val live = expanded(f).filter(t => !postings(slot(t)).isEmpty)
+      if (fuzzyCap <= 0) live
+      else live.map { t =>
+        val u = UTF8String.fromString(t)
+        (TermPredicates.fuzzySimilarity(f, u), u, t)
+      }.sortWith { case ((w1, u1, _), (w2, u2, _)) =>
+        if (w1 != w2) w1 > w2 else u1.binaryCompare(u2) < 0
+      }.take(fuzzyCap).map(_._3)
+    }
+
     /** `base` minus `drop`; a null id in `base` stays (an anti-join keeps
       * a null left key). */
     private def remove(base: Docs, drop: Docs): Docs = {
@@ -275,11 +336,18 @@ private[graft] object MatchScan {
       case TsQuery.Term(t) => termDocs(t)
       case TsQuery.Boost(inner, _) => eval(inner)
       case TsQuery.Phrase(Seq(t)) => termDocs(t)
-      case TsQuery.Phrase(ts) => chained(ts, _ => shifted)
+      case TsQuery.Phrase(ts) => chained(ts.map(Seq(_)), _ => shifted)
       case TsQuery.SlopPhrase(Seq(t), _) => termDocs(t)
-      case TsQuery.SlopPhrase(ts, 0) => chained(ts, _ => shifted)
+      case TsQuery.SlopPhrase(ts, 0) => chained(ts.map(Seq(_)), _ => shifted)
       case TsQuery.SlopPhrase(ts, slop) => slopChained(ts, slop)
-      case TsQuery.PhraseGap(ts, gaps) => chained(ts, i => gapStep(gaps(i)._1, gaps(i)._2))
+      case TsQuery.PhraseGap(ts, gaps) =>
+        chained(ts.map(Seq(_)), i => gapStep(gaps(i)._1, gaps(i)._2))
+      case f: TsQuery.Fuzzy => anyDocs(capped(f))
+      case pp @ TsQuery.PhrasePrefix(init, _) =>
+        if (init.isEmpty) anyDocs(expanded(pp))
+        else chained(init.map(Seq(_)) :+ expanded(pp), _ => shifted)
+      case TsQuery.GramSim(gs, ratio) => gramMatched(gs, ratio)
+      case e if expands(e) => anyDocs(expanded(e))
       case TsQuery.Or(qs) =>
         val out = new Docs
         qs.foreach(c => out.addAll(eval(c)))
@@ -297,33 +365,42 @@ private[graft] object MatchScan {
           }
         negs.foldLeft(base) { (acc, n) => remove(acc, eval(n.asInstanceOf[TsQuery.Not].q)) }
       case TsQuery.Not(inner) => remove(new Docs(all), eval(inner))
-      case other => throw new IllegalStateException(s"not an exact-term query: $other")
+      case other => throw new IllegalStateException(s"unhandled query node: $other")
     }
 
-    // ---- positional chains: docs holding every term, null ids excluded ----
+    // ---- positional chains: docs holding every slot, null ids excluded ----
 
-    /** Candidate docs of a positional node: docs with live rows of every term. */
-    private def candidates(ts: Seq[String]): Iterator[Any] = {
-      val maps = ts.distinct.map(t => postings(slot(t)))
+    /** Candidate docs of a chain: docs with live rows of some term of every
+      * slot. */
+    private def candidates(slots: Seq[Seq[String]]): Iterator[Any] = {
+      val sets = slots.distinct.map {
+        case Seq(t) => postings(slot(t)).keySet
+        case ts => anyDocs(ts)
+      }
       import scala.jdk.CollectionConverters._
-      maps.minBy(_.size).keySet.iterator.asScala
-        .filter(d => d != null && maps.forall(_.containsKey(d)))
+      sets.minBy(_.size).iterator.asScala.filter(d => d != null && sets.forall(_.contains(d)))
     }
 
-    private def positionsOf(t: String, doc: Any): Array[Int] =
-      postings(slot(t)).get(doc).sorted
+    /** `doc`'s sorted positions over the live rows of any of `ts`. */
+    private def positionsOf(ts: Seq[String], doc: Any): Array[Int] = ts match {
+      case Seq(t) => postings(slot(t)).get(doc).sorted
+      case _ =>
+        val ps = ts.flatMap(t => Option(postings(slot(t)).get(doc)).map(_.sorted)).flatten.toArray
+        java.util.Arrays.sort(ps)
+        ps
+    }
 
-    /** Docs where `ts` chain: `step(i)` maps the sorted positions the chain
-      * reached at term i and term i+1's sorted positions to the positions
-      * it reaches at term i+1. */
-    private def chained(ts: Seq[String],
+    /** Docs where the slots chain: `step(i)` maps the sorted positions the
+      * chain reached at slot i and slot i+1's sorted positions to the
+      * positions it reaches at slot i+1. */
+    private def chained(slots: Seq[Seq[String]],
         step: Int => (Array[Int], Array[Int]) => Array[Int]): Docs = {
       val out = new Docs
-      candidates(ts).foreach { doc =>
-        var chain = positionsOf(ts.head, doc)
+      candidates(slots).foreach { doc =>
+        var chain = positionsOf(slots.head, doc)
         var i = 1
-        while (chain.nonEmpty && i < ts.size) {
-          val next = positionsOf(ts(i), doc)
+        while (chain.nonEmpty && i < slots.size) {
+          val next = positionsOf(slots(i), doc)
           chain = step(i - 1)(chain, next)
           i += 1
         }
@@ -361,18 +438,38 @@ private[graft] object MatchScan {
       * different position `p`; entries over `slop` are dropped. */
     private def slopChained(ts: Seq[String], slop: Int): Docs = {
       val out = new Docs
-      candidates(ts).foreach { doc =>
-        var chain: Array[(Int, Long)] = positionsOf(ts.head, doc).map(p => (p, 0L))
+      candidates(ts.map(Seq(_))).foreach { doc =>
+        var chain: Array[(Int, Long)] = positionsOf(Seq(ts.head), doc).map(p => (p, 0L))
         var i = 1
         while (chain.nonEmpty && i < ts.size) {
           val prev = chain
-          chain = positionsOf(ts(i), doc).flatMap { pp =>
+          chain = positionsOf(Seq(ts(i)), doc).flatMap { pp =>
             val costs = prev.collect { case (p, c) if p != pp => c + math.abs(pp.toLong - p - 1) }
             if (costs.isEmpty) None else Some((pp, costs.min))
           }.filter(_._2 <= slop)
           i += 1
         }
         if (chain.nonEmpty) out.add(doc)
+      }
+      out
+    }
+
+    /** `GramSim`: docs (a null id too) whose live grams, in (position,
+      * term byte order) order, share a common subsequence of at least
+      * MinMatchCount(|gs|, ratio) with `gs`. */
+    private def gramMatched(gs: Seq[String], ratio: Double): Docs = {
+      val out = new Docs
+      if (gs.isEmpty) return out
+      val minMatch = TsDistances.minMatchCount(gs.size, ratio)
+      val query = gs.toIndexedSeq
+      // each distinct gram with its rank in term byte order
+      val ranked = gs.distinct.sortWith((a, b) =>
+        UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b)) < 0).zipWithIndex
+      anyDocs(ranked.map(_._1)).forEach { doc =>
+        val seq = ranked.flatMap { case (g, rank) =>
+          Option(postings(slot(g)).get(doc)).toSeq.flatMap(_.sorted.map(p => (p, rank, g)))
+        }.sortBy(x => (x._1, x._2)).map(_._3)
+        if (TsDistances.lcsLen(query, seq) >= minMatch) out.add(doc)
       }
       out
     }

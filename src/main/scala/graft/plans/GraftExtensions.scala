@@ -1432,27 +1432,7 @@ case class ClaimTsMatch(spark: SparkSession) extends Rule[LogicalPlan] {
           val a = graft.analysis.AnalyzerRegistry.get(dict)
           (segDir, dict, graft.search.TsQuery.bindDict(build(a), a))
         }
-        val mPlan = parsed.map(_._1).distinct match {
-          // legs on one index whose OR is an exact-term tree: the text-match
-          // leaf itself, one plan node evaluating the whole OR in one task
-          case Seq(segDir) if parsed.forall(l => graft.index.MatchScan.exact(l._3)) =>
-            val q = parsed.map(_._3) match {
-              case Seq(one) => one
-              case qs => graft.search.TsQuery.Or(qs)
-            }
-            graft.index.MatchScan.leaf(graft.index.IndexStore.load(spark, segDir), q)
-          case _ =>
-            // one drive per leg; an OR conjunct unions its legs' drives
-            // (semi/anti joins are duplicate-insensitive, so no distinct
-            // needed). optimizedPlan, NOT analyzed: the injected subtree
-            // skips the earlier optimizer batches, so e.g. a Deduplicate
-            // (from .distinct()) would otherwise reach physical planning
-            // unreplaced and fail the query
-            parsed.map { case (segDir, _, q) =>
-              val idx = graft.index.IndexStore.load(spark, segDir)
-              graft.search.TsQueryExec.matching(idx, q).select("doc_id")
-            }.reduce(_ unionByName _).queryExecution.optimizedPlan
-        }
+        val mPlan = MatchLeaves.union(spark, parsed.map { case (segDir, _, q) => segDir -> q })
         val rightId = mPlan.output.find(_.name == "doc_id").get
         val j = Join(acc, mPlan,
           if (negated) org.apache.spark.sql.catalyst.plans.LeftAnti else LeftSemi,
@@ -1498,6 +1478,36 @@ case class ClaimTsMatch(spark: SparkSession) extends Rule[LogicalPlan] {
     }.flatten
 }
 
+/** Text-match leaves ([[graft.index.MatchScan]]) as plan nodes for the
+  * claim rules. */
+private[plans] object MatchLeaves {
+  import org.apache.spark.sql.catalyst.expressions.{Alias, Cast}
+  import org.apache.spark.sql.catalyst.plans.logical.{Project, Union}
+
+  /** The docs matching any of `legs` (index dir, query): one leaf per
+    * index, over the OR of its legs' queries, and a `Union` across indexes,
+    * every branch's `doc_id` cast to the first's type. Not deduplicated:
+    * semi/anti joins and distinct counts don't need it. */
+  def union(spark: SparkSession, legs: Seq[(String, graft.search.TsQuery)]): LogicalPlan = {
+    val leaves = legs.map(_._1).distinct.map { segDir =>
+      val q = legs.collect { case (d, q) if d == segDir => q } match {
+        case Seq(one) => one
+        case qs => graft.search.TsQuery.Or(qs)
+      }
+      graft.index.MatchScan.leaf(graft.index.IndexStore.load(spark, segDir), q): LogicalPlan
+    }
+    val idType = leaves.head.output.head.dataType
+    leaves match {
+      case Seq(one) => one
+      case _ => Union(leaves.map { l =>
+        val id = l.output.head
+        if (id.dataType == idType) l
+        else Project(Seq(Alias(Cast(id, idType), "doc_id")()), l)
+      })
+    }
+  }
+}
+
 /** Shared construction of typed-field index drives. */
 private[plans] object FieldDrives {
   import org.apache.spark.sql.catalyst.expressions.{Attribute, Cast}
@@ -1511,8 +1521,7 @@ private[plans] object FieldDrives {
     * the reference's Term / Granular Range posting-list seek. */
   def matchedIds(spark: SparkSession, entry: IndexCatalog.FieldsEntry,
       field: String, mkPred: AttributeReference => Expression): LogicalPlan = {
-    val fPlan = graft.index.FieldStore.field(spark, entry.dir, field)
-      .queryExecution.optimizedPlan
+    val fPlan = graft.index.FieldStore.field(spark, entry.dir, field).queryExecution.analyzed
     val v = fPlan.output.collectFirst {
       case a: AttributeReference if a.name == "v" => a }.get
     val id = fPlan.output.collectFirst {
@@ -1623,17 +1632,14 @@ case class ClaimCoveredProjection(spark: SparkSession) extends Rule[LogicalPlan]
     if (textClaims.isEmpty && fieldClaims.isEmpty) return None
 
     // drive: stored columnstore ⋉ each matched-id set
-    val storedPlan = graft.index.FieldStore.stored(spark, entry.dir)
-      .queryExecution.optimizedPlan
+    val storedPlan = graft.index.FieldStore.stored(spark, entry.dir).queryExecution.analyzed
     val sId = storedPlan.output.collectFirst {
       case a: AttributeReference if a.name == "doc_id" => a }.get
     var acc: LogicalPlan = storedPlan
     textClaims.foreach { case (segDir, dict, build) =>
       val idx = graft.index.IndexStore.load(spark, segDir)
       val a = graft.analysis.AnalyzerRegistry.get(dict)
-      val parsed = graft.search.TsQuery.bindDict(build(a), a)
-      val m = graft.search.TsQueryExec.matching(idx, parsed)
-        .queryExecution.optimizedPlan
+      val m = graft.index.MatchScan.leaf(idx, graft.search.TsQuery.bindDict(build(a), a))
       val rightId = m.output.find(_.name == "doc_id").get
       // idEq, not EqualTo: the stored columnstore's doc_id is long while
       // postings keep the table's native id width (an INT-id table would

@@ -5,13 +5,14 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, And => CAnd, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, IsNotNull, LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.LeftSemi
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, JoinHint, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.index.{IndexStore, MatchScan, PkIndex}
-import graft.search.IndexCatalog
+import graft.search.{IndexCatalog, TsQuery}
 
 /** Shared helpers for the metadata/statistics claim rules. */
 private[plans] object StatsShapes {
@@ -100,13 +101,13 @@ private[plans] object StatsShapes {
   *     the claimed semi-join's left side contributes nothing to a count
   *     once every matched doc_id is known to exist in the scan (index
   *     fresh ⇒ drive ids ⊆ table ids). When every predicate is on one
-  *     index and the conjunction of their queries is an exact-term tree,
-  *     the count is the text-match leaf's count-only mode
-  *     ([[graft.index.MatchScan.countLeaf]]) under a projection, both
-  *     built as plan nodes: one Spark job of one task, no exchange, and no
-  *     nested optimizer run. A predicate on a second index or
-  *     a tree with an expansion leaf counts the distinct ids of the
-  *     composed drives.
+  *     index, the conjunction of their queries is one tree and the count
+  *     is the text-match leaf's count-only mode
+  *     ([[graft.index.MatchScan.countLeaf]]) under a projection: one Spark
+  *     job of one task, no exchange. Predicates on several indexes count
+  *     the distinct ids of their leaves, unioned per conjunct and
+  *     semi-joined across conjuncts. Both shapes are built as plan nodes,
+  *     with no nested optimizer run.
   *
   * Both legs are gated on the `_SOURCE_FP` fingerprint (same bytes the DDL
   * fingerprinted at CREATE/REFRESH); anything stale, partial, deleted-from,
@@ -187,22 +188,20 @@ case class ClaimCountOnly(spark: SparkSession) extends Rule[LogicalPlan] {
         val parts = conjuncts(cond).map(p => disjuncts(p).map(leafQuery))
         if (parts.isEmpty || parts.exists(_.exists(_.isEmpty))) return agg
         val legs = parts.map(_.flatten)
-        import graft.search.{TsQuery, TsQueryExec}
         // on one index, the conjunction is one query tree: an OR per
-        // conjunct, ANDed — the same docs as the semi-joined unions below
-        val tree = TsQuery.And(legs.map(ls => TsQuery.Or(ls.map(_._2))))
+        // conjunct, ANDed — counted by the leaf itself
         legs.flatten.map(_._1).distinct match {
-          case Seq(segDir) if MatchScan.exact(tree) =>
+          case Seq(segDir) =>
+            val tree = TsQuery.And(legs.map(ls => TsQuery.Or(ls.map(_._2))))
             countProjection(agg, MatchScan.countLeaf(IndexStore.load(spark, segDir), tree))
           case _ =>
-            // conjunct intersection on postings-sized doc_id sets; an OR
-            // counts through the union of its leaf drives
-            val drive = legs.map(_.map { case (segDir, q) =>
-                TsQueryExec.matching(IndexStore.load(spark, segDir), q).select("doc_id")
-              }.reduce(_ unionByName _))
-              .reduce((a, b) => a.join(b, Seq("doc_id"), "left_semi"))
-              .select("doc_id").distinct()
-            agg.copy(child = drive.queryExecution.optimizedPlan)
+            // across indexes: each conjunct's leaves unioned, the conjuncts
+            // semi-joined on doc_id, the distinct ids counted
+            val drive = legs.map(MatchLeaves.union(spark, _)).reduce { (l, r) =>
+              Join(l, r, LeftSemi, Some(FieldDrives.idEq(l.output.head, r.output.head)),
+                JoinHint.NONE)
+            }
+            agg.copy(child = Aggregate(Seq(drive.output.head), Seq(drive.output.head), drive))
         }
 
       case _ => agg

@@ -39,32 +39,32 @@ object Search {
 
   /** Prefix — ts_starts_with (prefix_filter.hpp). */
   def tsPrefix(s: SparkSession, dir: String): DataFrame =
-    idx(s, dir).prefix("sc")
+    TsQueryExec.matching(idx(s, dir), TsQuery.Prefix("sc"))
 
   /** Wildcard — ts_like (wildcard_filter.hpp). */
   def tsLike(s: SparkSession, dir: String): DataFrame =
-    idx(s, dir).wildcard("s%t")
+    TsQueryExec.matching(idx(s, dir), TsQuery.Wildcard("s%t"))
 
   /** Regex — ts_regexp (automaton_filter.hpp). */
   def tsRegexp(s: SparkSession, dir: String): DataFrame =
-    idx(s, dir).regexp("^va..e$")
+    TsQueryExec.matching(idx(s, dir), TsQuery.Regexp("^va..e$"))
 
   /** Fuzzy — ts_levenshtein (levenshtein_filter.hpp). */
   def tsLevenshtein(s: SparkSession, dir: String): DataFrame =
-    idx(s, dir).fuzzy("qery", maxDist = 1)
+    TsQueryExec.matching(idx(s, dir), TsQuery.Fuzzy("qery", 1))
 
   /** Term range — ts_between (granular_range_filter.hpp). */
   def tsBetween(s: SparkSession, dir: String): DataFrame =
-    idx(s, dir).range(Some("batch"), Some("customer"))
+    TsQueryExec.matching(idx(s, dir),
+      TsQuery.TermRange(Some("batch"), Some("customer"), loInc = true, hiInc = true))
 
   /** Open-ended range variants — ts_ge/ts_lt (search.h:50,68-71): docs with
     * a term ≥ 'window' minus docs with a term < 'agg' (both bounds
     * exclusive/inclusive semantics exercised). */
-  def tsOpenRanges(s: SparkSession, dir: String): DataFrame = {
-    val i = idx(s, dir)
-    i.range(Some("window"), None)
-      .join(i.range(None, Some("agg"), hiInc = false), Seq("doc_id"), "left_anti")
-  }
+  def tsOpenRanges(s: SparkSession, dir: String): DataFrame =
+    TsQueryExec.matching(idx(s, dir), TsQuery.And(Seq(
+      TsQuery.TermRange(Some("window"), None, loInc = true, hiInc = true),
+      TsQuery.Not(TsQuery.TermRange(None, Some("agg"), loInc = true, hiInc = false)))))
 
   /** Exact positional phrase — ts_phrase slop 0 (phrase_filter.hpp). */
   def tsPhrase(s: SparkSession, dir: String): DataFrame =
@@ -204,7 +204,7 @@ object Search {
   /** ts_ngram — n-gram similarity, the typo-tolerant match distinct from
     * levenshtein ('vectr' → 'vector' via trigram Jaccard 0.4). */
   def tsNgram(s: SparkSession, dir: String): DataFrame =
-    idx(s, dir).ngramSimilarity("vectr", minJaccard = 0.35)
+    TsQueryExec.matching(idx(s, dir), TsQuery.NgramSim("vectr", 0.35))
 
   /** Diagnostic scorers raw_tf / raw_dl / raw_boost (search.cpp:142-173) —
     * with these, every one of the reference's 9 scorers has a verified
@@ -280,7 +280,7 @@ object Search {
     * the query tokenizes under the same dictionary, and a doc matches when
     * the longest common gram SEQUENCE reaches MinMatchCount(grams, 0.5).
     * One bucketed postings probe + per-doc LCS over the matched positions
-    * (InvertedIndex.gramSimilarity) — never a dictionary or corpus scan.
+    * in the text-match leaf — never a dictionary or corpus scan.
     * Restricted to a 2k-doc slice so the gram index build stays
     * proportionate at bench scale. */
   def tsGramMatch(s: SparkSession, dir: String): DataFrame = {
@@ -288,7 +288,7 @@ object Search {
     val idx = IndexStore.ensure(s, docs, s"$dir-documents-ng3", "doc_id",
       "text", "ngram3")
     val grams = AnalyzerRegistry.get("ngram3").tokens("vector")
-    idx.gramSimilarity(grams, 0.5).select(col("doc_id"))
+    TsQueryExec.matching(idx, TsQuery.GramSim(grams, 0.5))
   }
 
   // ---- oracles -------------------------------------------------------------

@@ -1116,35 +1116,42 @@ object Ddl {
                 .otherwise("same").as("__cls"))
             .filter(fcol("__cls") =!= "same")
             .localCheckpoint()
-          val counts = classified.groupBy(fcol("__cls")).count().collect()
-            .map(r => r.getString(0) -> r.getLong(1)).toMap
-          val (nNew, nChanged) =
-            (counts.getOrElse("new", 0L), counts.getOrElse("changed", 0L))
+          // the checkpoint's blocks are released once the delete and the
+          // append are done, or have failed
           val added =
-            if (counts.isEmpty) 0L
-            else {
-              // tombstones FIRST (they scope to the current newest segment),
-              // then the append lands the re-indexed content in a NEWER one
-              IndexStore.deleteIds(spark, e.dir,
-                classified.filter(fcol("__cls").isin("removed", "changed"))
-                  .select(fcol("__cid").as("doc_id")))
-              val n = nNew + nChanged
-              if (n > 0) {
-                // the delta docs: ONE semi-join of the source against the
-                // checkpointed id set (new ∪ changed) — the only other
-                // source evaluation a changeful refresh pays before the
-                // delta re-index itself
-                val toAddIds = classified
-                  .filter(fcol("__cls").isin("new", "changed"))
-                  .select(fcol("__cid"))
-                val toAdd = sourceF.join(toAddIds,
-                  sourceF(idCol) === toAddIds("__cid"), "left_semi")
-                val idx = graft.index.InvertedIndex.build(toAdd, idCol, keyCol, e.analyzer)
-                IndexStore.appendSegment(idx, e.dir,
-                  Some(toAdd.select(fcol(idCol).as("doc_id"),
-                    fcol("__fp").as("content_fp"))))
+            try {
+              val counts = classified.groupBy(fcol("__cls")).count().collect()
+                .map(r => r.getString(0) -> r.getLong(1)).toMap
+              val (nNew, nChanged) =
+                (counts.getOrElse("new", 0L), counts.getOrElse("changed", 0L))
+              if (counts.isEmpty) 0L
+              else {
+                // tombstones FIRST (they scope to the current newest segment),
+                // then the append lands the re-indexed content in a NEWER one
+                IndexStore.deleteIds(spark, e.dir,
+                  classified.filter(fcol("__cls").isin("removed", "changed"))
+                    .select(fcol("__cid").as("doc_id")))
+                val n = nNew + nChanged
+                if (n > 0) {
+                  // the delta docs: ONE semi-join of the source against the
+                  // checkpointed id set (new ∪ changed) — the only other
+                  // source evaluation a changeful refresh pays before the
+                  // delta re-index itself
+                  val toAddIds = classified
+                    .filter(fcol("__cls").isin("new", "changed"))
+                    .select(fcol("__cid"))
+                  val toAdd = sourceF.join(toAddIds,
+                    sourceF(idCol) === toAddIds("__cid"), "left_semi")
+                  val idx = graft.index.InvertedIndex.build(toAdd, idCol, keyCol, e.analyzer)
+                  IndexStore.appendSegment(idx, e.dir,
+                    Some(toAdd.select(fcol(idCol).as("doc_id"),
+                      fcol("__fp").as("content_fp"))))
+                }
+                n
               }
-              n
+            } finally classified.queryExecution.logical.foreach {
+              case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+              case _ => ()
             }
           spark.catalog.refreshByPath(e.dir)
           IndexStore.registerViews(spark, e.dir, name)

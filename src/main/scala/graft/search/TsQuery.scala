@@ -1,8 +1,12 @@
 package graft.search
 
+import java.util.regex.Pattern
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.util.StringUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.analysis.Analyzer
+import graft.functions.TsDistances
 import graft.index.{InvertedIndex, MatchScan}
 
 /** TSQUERY — the composable search-query value of the reference
@@ -110,53 +114,91 @@ object TsQuery {
   }
 }
 
+/** The per-term predicate of each expansion leaf (`Prefix`, `Wildcard`,
+  * `Regexp`, `TermRange`, `Fuzzy`, `NgramSim` and a `PhrasePrefix`'s last
+  * slot), shared by row evaluation ([[TsQueryExec.evalTokens]]) and the
+  * text-match leaf's dictionary expansion ([[MatchScan]]), so both give one
+  * answer. The semantics are Spark's: LIKE through
+  * `StringUtils.escapeLikeRegex` (`\` escapes the next `%`, `_` or `\`),
+  * `rlike`'s unanchored find, ranges in `UTF8String` byte order, and code
+  * points for n-grams and lengths. */
+object TermPredicates {
+
+  def apply(q: TsQuery): UTF8String => Boolean = q match {
+    case TsQuery.Prefix(p) => startsWith(p)
+    case TsQuery.PhrasePrefix(_, p) => startsWith(p)
+    case TsQuery.Wildcard(p) =>
+      val re = Pattern.compile(StringUtils.escapeLikeRegex(p, '\\'))
+      t => re.matcher(t.toString).matches()
+    case TsQuery.Regexp(r) =>
+      val re = Pattern.compile(r)
+      t => re.matcher(t.toString).find(0)
+    case TsQuery.TermRange(lo, hi, loInc, hiInc) =>
+      val (l, h) = (lo.map(UTF8String.fromString), hi.map(UTF8String.fromString))
+      t => l.forall { v => val c = t.binaryCompare(v); c > 0 || (loInc && c == 0) } &&
+        h.forall { v => val c = t.binaryCompare(v); c < 0 || (hiInc && c == 0) }
+    case f: TsQuery.Fuzzy => fuzzyDistance(f, _) >= 0
+    case TsQuery.NgramSim(s, j, n) =>
+      val qg = grams(s, n)
+      t => {
+        val tg = grams(t.toString, n)
+        val union = (tg ++ qg).size
+        union > 0 && (tg & qg).size.toDouble / union >= j
+      }
+    case other => throw new IllegalArgumentException(s"not an expansion leaf: $other")
+  }
+
+  private def startsWith(p: String): UTF8String => Boolean = {
+    val u = UTF8String.fromString(p)
+    _.startsWith(u)
+  }
+
+  /** The distinct `n`-code-point grams of `s` (none when it is shorter). */
+  private def grams(s: String, n: Int): Set[String] = {
+    val cps = s.codePoints.toArray
+    (0 to cps.length - n).map(i => new String(cps, i, n)).toSet
+  }
+
+  /** The edit distance from the fuzzy leaf's target to `term` past the
+    * leaf's exact prefix, or -1 when `term` lacks the prefix or lies more
+    * than `maxDist` away: OSA with transpositions (the reference default,
+    * ts_common.hpp:242), Spark's `levenshtein` without. */
+  def fuzzyDistance(f: TsQuery.Fuzzy, term: UTF8String): Int = {
+    val (prefix, target) = (UTF8String.fromString(f.prefix), UTF8String.fromString(f.t))
+    if (!term.startsWith(prefix)) return -1
+    val rest = term.substring(prefix.numChars, term.numChars)
+    if (math.abs(rest.numChars - target.numChars) > f.maxDist) -1
+    else if (f.transpositions) TsDistances.osa(rest, target, f.maxDist)
+    else rest.levenshteinDistance(target, f.maxDist)
+  }
+
+  /** The reference's similarity boost 1 − d / min(|rest|, |target|)
+    * (levenshtein_filter.cpp:49-54) of a term within the fuzzy leaf's
+    * distance — the rank of the `spark.graft.levenshteinMaxTerms` cap. */
+  def fuzzySimilarity(f: TsQuery.Fuzzy, term: UTF8String): Double = {
+    val rest = term.numChars - UTF8String.fromString(f.prefix).numChars
+    val target = f.t.codePointCount(0, f.t.length)
+    1.0 - fuzzyDistance(f, term).toDouble / math.max(math.min(rest, target), 1).toDouble
+  }
+}
+
 /** Compiles a [[TsQuery]] to doc_id sets over an [[InvertedIndex]] — the
   * Spark analogue of the reference's filter-tree build
   * (search_filter_builder.cpp: irs::Or/And/Not at :505-531,:1135-1151).
   *
-  * An exact-term tree (terms, phrases, `And`/`Or`/`Not`/`Boost`/`All` over
-  * them) is one leaf, [[MatchScan]]: a single task walks the tree over the
-  * snapshot's postings, with no shuffle. Only a tree holding an expansion
-  * leaf (`Prefix`, `Wildcard`, `Regexp`, `TermRange`, `Fuzzy`, `NgramSim`,
-  * `GramSim`, `PhrasePrefix`) composes DataFrames: each expansion leaf is
-  * a term-dictionary join, each exact-term subtree a leaf, and the nodes
-  * joining them unions and semi/anti joins.
+  * Every tree is one leaf, [[MatchScan]]: a single task walks the tree over
+  * the snapshot's postings, with no shuffle. Expansion leaves (`Prefix`,
+  * `Wildcard`, `Regexp`, `TermRange`, `Fuzzy`, `NgramSim`, `PhrasePrefix`)
+  * expand the term dictionary inside that task with [[TermPredicates]],
+  * the predicates [[evalTokens]] applies to a row's tokens.
   *
-  * Negation scoping matches the reference: NOT inside a conjunction becomes
-  * an anti-join against the positive base (never materializing a complement);
-  * a top-level NOT runs against the doc universe.
+  * Negation scoping matches the reference: NOT inside a conjunction removes
+  * docs from the positive base (never materializing a complement); a
+  * top-level NOT runs against the doc universe.
   */
 object TsQueryExec {
 
-  def matching(idx: InvertedIndex, q: TsQuery): DataFrame =
-    if (MatchScan.exact(q)) MatchScan.frame(idx, q)
-    else q match {
-      case TsQuery.Prefix(p) => idx.prefix(p)
-      case TsQuery.Wildcard(p) => idx.wildcard(p)
-      case TsQuery.Regexp(r) => idx.regexp(r)
-      case TsQuery.TermRange(lo, hi, loInc, hiInc) => idx.range(lo, hi, loInc, hiInc)
-      case TsQuery.Fuzzy(t, d, tr, p) => idx.fuzzy(t, d, transpositions = tr, prefix = p)
-      case TsQuery.NgramSim(q, j, n) => idx.ngramSimilarity(q, j, n)
-      case TsQuery.GramSim(gs, r) => idx.gramSimilarity(gs, r)
-      case TsQuery.PhrasePrefix(init, p) => idx.phrasePrefix(init, p)
-      case TsQuery.Boost(inner, _) => matching(idx, inner)
-      case TsQuery.Or(qs) =>
-        qs.map(matching(idx, _)).reduce(_ unionByName _).distinct()
-      case TsQuery.And(qs) =>
-        val (negs, poss) = qs.partition(_.isInstanceOf[TsQuery.Not])
-        val base =
-          if (poss.nonEmpty)
-            poss.map(matching(idx, _))
-              .reduce((a, b) => a.join(b, Seq("doc_id"), "left_semi"))
-          else universe(idx)
-        negs.foldLeft(base) { (acc, n) =>
-          acc.join(matching(idx, n.asInstanceOf[TsQuery.Not].q),
-            Seq("doc_id"), "left_anti")
-        }
-      case TsQuery.Not(inner) =>
-        universe(idx).join(matching(idx, inner), Seq("doc_id"), "left_anti")
-      case other => throw new IllegalStateException(s"unhandled query node: $other")
-    }
+  def matching(idx: InvertedIndex, q: TsQuery): DataFrame = MatchScan.frame(idx, q)
 
   /** BM25 over a STRUCTURED query with boost folding — the reference's
     * `BM25(...) WHERE body @@ (q ^ w)` surface (boost_score.test: "boost
@@ -238,34 +280,6 @@ object TsQueryExec {
       matching(idx, other).select(col("doc_id"), lit(1.0).as("_score"))
   }
 
-  /** All indexed docs (docs with ≥1 token; zero-token docs cannot be
-    * represented in postings and are excluded from NOT results — deviation
-    * documented in InvertedIndex.build). */
-  private def universe(idx: InvertedIndex): DataFrame = MatchScan.frame(idx, TsQuery.All)
-
-  /** Plain two-row DP edit distance for the row-eval Fuzzy leaf (the
-    * indexed path uses Spark's thresholded `levenshtein` over the term
-    * dictionary instead). */
-  private def levenshtein(a: String, b: String): Int = {
-    if (a.isEmpty) return b.length
-    if (b.isEmpty) return a.length
-    var prev = Array.tabulate(b.length + 1)(identity)
-    var curr = new Array[Int](b.length + 1)
-    var i = 1
-    while (i <= a.length) {
-      curr(0) = i
-      var j = 1
-      while (j <= b.length) {
-        val sub = prev(j - 1) + (if (a.charAt(i - 1) == b.charAt(j - 1)) 0 else 1)
-        curr(j) = math.min(math.min(prev(j) + 1, curr(j - 1) + 1), sub)
-        j += 1
-      }
-      val t = prev; prev = curr; curr = t
-      i += 1
-    }
-    prev(b.length)
-  }
-
   /** Row-level TSQUERY evaluation over an analyzed token stream — the
     * un-indexed fallback matcher (the reference's row-eval path for
     * residual/un-claimed predicates). Used by the SQL-visible `ts_match`
@@ -273,68 +287,22 @@ object TsQueryExec {
   def evalTokens(q: TsQuery, toks: Seq[String]): Boolean = q match {
     case TsQuery.All => true
     case TsQuery.Term(t) => toks.contains(t)
-    case TsQuery.Prefix(p) => toks.exists(_.startsWith(p))
-    case TsQuery.Wildcard(p) =>
-      // LIKE → anchored regex: % → .*, _ → ., and a backslash escapes the
-      // NEXT char to a literal (`\_` matches an underscore — the same
-      // escape Spark's like() applies on the index path; term_ops.test)
-      val re = new StringBuilder
-      var i = 0
-      while (i < p.length) {
-        val c = p.charAt(i)
-        if (c == '\\' && i + 1 < p.length) {
-          re ++= java.util.regex.Pattern.quote(p.charAt(i + 1).toString)
-          i += 2
-        } else {
-          c match {
-            case '%' => re ++= ".*"
-            case '_' => re += '.'
-            case x if "\\.[]{}()*+-?^$|".contains(x) => re += '\\'; re += x
-            case x => re += x
-          }
-          i += 1
-        }
-      }
-      val cp = java.util.regex.Pattern.compile("^" + re.result() + "$")
-      toks.exists(t => cp.matcher(t).matches())
-    case TsQuery.Regexp(r) =>
-      // unanchored find — mirrors the dict-side `rlike`
-      val cp = java.util.regex.Pattern.compile(r)
-      toks.exists(t => cp.matcher(t).find())
-    case TsQuery.TermRange(lo, hi, loInc, hiInc) => toks.exists { t =>
-      lo.forall(v => if (loInc) t >= v else t > v) &&
-        hi.forall(v => if (hiInc) t <= v else t < v)
-    }
-    case TsQuery.Fuzzy(t, d, tr, p) =>
-      toks.exists { tok0 =>
-        (p.isEmpty || tok0.startsWith(p)) && {
-          val tok = if (p.isEmpty) tok0 else tok0.substring(p.length)
-          math.abs(tok.length - t.length) <= d &&
-            (if (tr) graft.functions.TsDistances.osaStr(tok, t, d) >= 0
-             else levenshtein(tok, t) <= d)
-        }
-      }
-    case TsQuery.NgramSim(q, j, n) =>
-      // same gram/jaccard arithmetic as InvertedIndex.ngramSimilarity's
-      // codegen'd dict-side expression (distinct grams on both sides;
-      // terms shorter than n have no grams)
-      val qg = (0 to q.length - n).map(i => q.substring(i, i + n)).distinct.toSet
-      toks.exists { tok =>
-        val tg = (0 to tok.length - n).map(i => tok.substring(i, i + n)).distinct.toSet
-        val u = (tg ++ qg).size
-        u > 0 && (tg & qg).size.toDouble / u >= j
-      }
+    case e @ (_: TsQuery.Prefix | _: TsQuery.Wildcard | _: TsQuery.Regexp |
+        _: TsQuery.TermRange | _: TsQuery.Fuzzy | _: TsQuery.NgramSim) =>
+      val p = TermPredicates(e)
+      toks.exists(t => p(UTF8String.fromString(t)))
     case TsQuery.GramSim(gs, r) =>
       // reference semantics (ngram_similarity_query.cpp): longest common
       // gram SEQUENCE vs MinMatchCount over the FULL query gram list
       // (duplicates included) — same kernel the indexed path uses
-      gs.nonEmpty && graft.functions.TsDistances.lcsLen(gs.toIndexedSeq, toks) >=
-        graft.functions.TsDistances.minMatchCount(gs.size, r)
+      gs.nonEmpty && TsDistances.lcsLen(gs.toIndexedSeq, toks) >=
+        TsDistances.minMatchCount(gs.size, r)
     case TsQuery.Phrase(ps) => ps.size <= toks.size && toks.sliding(ps.size).contains(ps)
-    case TsQuery.PhrasePrefix(init, p) =>
-      if (init.isEmpty) toks.exists(_.startsWith(p))
+    case pp @ TsQuery.PhrasePrefix(init, _) =>
+      val last = TermPredicates(pp)
+      if (init.isEmpty) toks.exists(t => last(UTF8String.fromString(t)))
       else init.size < toks.size && toks.sliding(init.size + 1).exists(w =>
-        w.init == init && w.last.startsWith(p))
+        w.init == init && last(UTF8String.fromString(w.last)))
     case TsQuery.PhraseGap(ts, gaps) =>
       val positions = ts.map(t => toks.zipWithIndex.collect { case (x, i) if x == t => i })
       gaps.zip(positions.drop(1)).foldLeft(positions.head) { case (chain, ((lo, hi), next)) =>
@@ -365,10 +333,10 @@ object TsQueryExec {
   def compound(idx: InvertedIndex,
       must: Seq[TsQuery], mustNot: Seq[TsQuery],
       should: Seq[TsQuery], minShouldMatch: Int): DataFrame = {
-    val posNeg = must ++ mustNot.map(TsQuery.Not.apply)
-    val base =
-      if (posNeg.isEmpty) universe(idx)
-      else matching(idx, TsQuery.And(posNeg))
+    // an empty conjunction is every indexed doc (docs with ≥1 token;
+    // zero-token docs cannot be represented in postings — deviation
+    // documented in InvertedIndex.build)
+    val base = matching(idx, TsQuery.And(must ++ mustNot.map(TsQuery.Not.apply)))
     val withShould =
       if (should.isEmpty || minShouldMatch <= 0) base
       else {

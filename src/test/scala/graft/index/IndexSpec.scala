@@ -43,9 +43,9 @@ class IndexSpec extends AnyFunSuite {
   }
 
   test("prefix and wildcard match full scan") {
-    assert(ids(idx.prefix("sc")) ==
+    assert(ids(TsQueryExec.matching(idx, TsQuery.Prefix("sc"))) ==
       toks.collect { case (id, ts) if ts.exists(_.startsWith("sc")) => id }.toSet)
-    assert(ids(idx.wildcard("s%t")) ==
+    assert(ids(TsQueryExec.matching(idx, TsQuery.Wildcard("s%t"))) ==
       toks.collect { case (id, ts)
         if ts.exists(t => t.startsWith("s") && t.endsWith("t")) => id }.toSet)
   }
@@ -287,27 +287,31 @@ class IndexSpec extends AnyFunSuite {
     val wdocs = words.zipWithIndex
       .map { case (w, i) => (i.toLong, w) }.toDF("doc_id", "text")
     val widx = InvertedIndex.build(wdocs, "doc_id", "text", "whitespace")
+    // the cap is the session knob `spark.graft.levenshteinMaxTerms`; null
+    // leaves the default (64)
+    def fuzzy(cap: String, transpositions: Boolean = true): Set[Long] = {
+      if (cap != null) spark.conf.set("spark.graft.levenshteinMaxTerms", cap)
+      try ids(TsQueryExec.matching(widx, TsQuery.Fuzzy("cat", 1, transpositions)))
+      finally if (cap != null) spark.conf.unset("spark.graft.levenshteinMaxTerms")
+    }
     // all 13 are within Damerau distance 1 — 'act' is one transposition,
     // and transpositions default ON (reference ts_common.hpp:242); the
     // plain-Levenshtein path (transpositions = false) excludes it
-    assert(ids(widx.fuzzy("cat", 1, maxTerms = 0)).size == 13)
-    assert(ids(widx.fuzzy("cat", 1, maxTerms = 0, transpositions = false)).size == 12)
+    assert(fuzzy("0").size == 13)
+    assert(fuzzy("0", transpositions = false).size == 12)
     // default session cap (64) leaves all of them
-    assert(ids(widx.fuzzy("cat", 1)).size == 13)
+    assert(fuzzy(null).size == 13)
     // a cap of 5 keeps the 5 closest terms → 5 docs (one doc per word)
-    assert(ids(widx.fuzzy("cat", 1, maxTerms = 5)).size == 5)
+    assert(fuzzy("5").size == 5)
     // cap 1: the exact match wins outright (similarity 1.0 beats 1 - 1/3)
-    assert(ids(widx.fuzzy("cat", 1, maxTerms = 1)) == Set(0L))
-    // the session knob drives the default
-    spark.conf.set("spark.graft.levenshteinMaxTerms", "5")
+    assert(fuzzy("1") == Set(0L))
+    // DICTIONARY ENUMERATION is exempt from the cap (reference
+    // levenshtein_max_terms.test: "the automaton walk visits every
+    // accepted term either way and truncating the list would just
+    // return a wrong answer") — the termdict expansion path the
+    // ts_dict fuzzy probes ride never routes through the capped fuzzy
+    spark.conf.set("spark.graft.levenshteinMaxTerms", "1")
     try {
-      assert(ids(widx.fuzzy("cat", 1)).size == 5)
-      // DICTIONARY ENUMERATION is exempt from the cap (reference
-      // levenshtein_max_terms.test: "the automaton walk visits every
-      // accepted term either way and truncating the list would just
-      // return a wrong answer") — the termdict expansion path the
-      // ts_dict fuzzy probes ride never routes through the capped fuzzy
-      spark.conf.set("spark.graft.levenshteinMaxTerms", "1")
       val dictTerms = widx.expandTerms(
         abs(length(col("term")) - lit(3)) <= 1 &&
           levenshtein(col("term"), lit("cat"), 1).between(0, 1)).count()

@@ -131,6 +131,40 @@ class IvfIndexSpec extends AnyFunSuite {
     IvfIndex.invalidate(dir)
   }
 
+  test("syncedFps heals an absent _SIZES once: the next call neither heals nor warns") {
+    val dirKey = "ivf-sizes-spec"
+    val dir = IvfIndex.dirFor(dirKey)
+    val f = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    f.delete(new org.apache.hadoop.fs.Path(dir), true)
+    IvfIndex.invalidate(dir)
+    IvfIndex.ensure(spark, embs.select("vec_id", "embedding"), dirKey)
+    f.delete(new org.apache.hadoop.fs.Path(s"$dir/_SIZES"), true)
+    /** `syncedFps`'s row count, its Spark jobs and what it printed to stderr. */
+    def synced(label: String): (Long, Int, String) = {
+      val err = new java.io.ByteArrayOutputStream
+      val saved = System.err
+      System.setErr(new java.io.PrintStream(err, true))
+      val (fps, jobs) = try graft.RefreshJobCount.jobsIn(spark, label)(IvfIndex.syncedFps(spark, dir))
+        finally System.setErr(saved)
+      (fps.count(), jobs, err.toString)
+    }
+    try {
+      val (n1, _, warned) = synced("sizes-heal")
+      assert(n1 == embs.count() && warned.contains("out of sync"), warned)
+      val (n2, jobs, quiet) = synced("sizes-healed")
+      assert(n2 == embs.count())
+      // no corpus scan and no rewrite: only the schema inference that opening
+      // the returned parquet frame costs (Spark reads the footer in a job)
+      val (_, open) = graft.RefreshJobCount.jobsIn(spark, "fps-open")(spark.read.parquet(s"$dir/fps"))
+      assert(jobs == open, s"the healed call ran $jobs Spark jobs, opening the manifest $open")
+      assert(!quiet.contains("out of sync"), quiet)
+    } finally {
+      f.delete(new org.apache.hadoop.fs.Path(dir), true)
+      IvfIndex.invalidate(dir)
+    }
+  }
+
   test("filtered knn (adaptive probe) equals brute force over the candidates") {
     val idx = IvfIndex.build(embs)
     val q = embs.filter(col("vec_id") === 0).select("embedding").head().getSeq[Float](0)

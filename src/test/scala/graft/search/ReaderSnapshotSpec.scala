@@ -63,10 +63,12 @@ class ReaderSnapshotSpec extends AnyFunSuite {
       s"WHERE ${m("ts_or(ts_phrase('alpha'), ts_phrase('bravo'))")} ORDER BY s DESC LIMIT $k"
   private val hybrid = s"SELECT pk FROM $idx WHERE ${m("'charlie'")} " +
     "ORDER BY emb <-> [20.3, 0.0, 0.0, 0.0]::FLOAT[4] LIMIT 5"
-  /** Count filters: a term, an OR, an AND of two predicates and a phrase
-    * ("bravo delta" opens the bodies of pk 7, 19, 31 and 43). */
+  /** Count filters: a term, an OR, an AND of two predicates, a phrase
+    * ("bravo delta" opens the bodies of pk 7, 19, 31 and 43) and a prefix,
+    * which expands the term dictionary. */
   private val countFilters = Seq(m("'bravo'"), m("ts_or(ts_phrase('alpha'), ts_phrase('delta'))"),
-    s"${m("'bravo'")} AND ${m("'delta'")}", m("ts_phrase('bravo delta')"))
+    s"${m("'bravo'")} AND ${m("'delta'")}", m("ts_phrase('bravo delta')"),
+    m("ts_starts_with('ch')"))
   private def countOf(f: String) = s"SELECT count(*) AS n FROM $idx WHERE $f"
 
   /** No search stub (text match, scorer, vector distance) is left for
@@ -269,6 +271,27 @@ class ReaderSnapshotSpec extends AnyFunSuite {
       assert(thrown.isEmpty, thrown.mkString("\n"))
     } finally {
       run(spark, s"DROP INDEX IF EXISTS ${idx}_quiet")
+      run(spark, s"DROP TABLE IF EXISTS $t2")
+    }
+  }
+
+  test("a REFRESH that changes rows releases the RDDs it persisted") {
+    ready
+    val t2 = s"${tbl}_persist"
+    run(spark, s"CREATE TABLE $t2(pk INTEGER PRIMARY KEY, body VARCHAR)")
+    run(spark, s"INSERT INTO $t2 SELECT pk, body FROM $tbl")
+    try {
+      run(spark, s"CREATE INDEX ${idx}_persist ON $t2 USING inverted(pk, body $dict)")
+      run(spark, s"DELETE FROM $t2 WHERE pk = 2")
+      run(spark, s"INSERT INTO $t2 VALUES (900, 'alpha zulu')")
+      val before = spark.sparkContext.getPersistentRDDs.size
+      run(spark, s"VACUUM (REFRESH_TABLE) $t2")
+      assert(run(spark, s"SELECT count(*) FROM ${idx}_persist WHERE ${m("'zulu'")}")
+        .head.getLong(0) == 1, "the REFRESH changed the index")
+      assert(spark.sparkContext.getPersistentRDDs.size == before,
+        spark.sparkContext.getPersistentRDDs.values.mkString("\n"))
+    } finally {
+      run(spark, s"DROP INDEX IF EXISTS ${idx}_persist")
       run(spark, s"DROP TABLE IF EXISTS $t2")
     }
   }
