@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   * mix's absorbed `ts_match` + bm25 top-k (index-only on a fresh index: one
   * job each), of a warm claimed `ts_match` count and of one whose query
   * expands the term dictionary (the text-match leaf's count-only mode: one
-  * job each) and of a warm claimed phrase match. Usage:
+  * job each), of a warm claimed phrase match and of a claimed bm25 top-k
+  * over a prefix constructor (`ts_starts_with`). Usage:
   * runMain graft.RefreshJobCount [sfDir]
   */
 object RefreshJobCount {
@@ -96,8 +97,13 @@ object RefreshJobCount {
       "WHERE ts_match(text, ts_starts_with('vec'), 'whitespace')"
     val phrase = "SELECT doc_id FROM jobcount_all " +
       "WHERE ts_match(text, ts_phrase('hash join'), 'whitespace')"
+    // a TSQUERY-constructor scorer: the prefix expands the term dictionary
+    // inside the scoring leaf's one task
+    val structured = "SELECT doc_id FROM jobcount_all " +
+      "ORDER BY bm25(text, ts_starts_with('vec'), 'whitespace') DESC LIMIT 10"
     Seq("topk-exec" -> topk, "topk-absorbed-exec" -> absorbed, "count-exec" -> count,
-        "expansion-count-exec" -> expansionCount, "phrase-exec" -> phrase).foreach {
+        "expansion-count-exec" -> expansionCount, "phrase-exec" -> phrase,
+        "structured-topk-exec" -> structured).foreach {
       case (label, q) =>
         spark.sql(q).collect()
         counted(label)(spark.sql(q).collect())

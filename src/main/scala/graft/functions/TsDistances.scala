@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -55,12 +54,6 @@ object TsDistances {
     if (prev(m) <= max) prev(m) else -1
   }
 
-  /** Column wrapper for the dictionary-scan expression (the
-    * `osa_distance` SQL function GraftExtensions registers). */
-  def osaDistance(term: Column, query: Column, max: Int): Column =
-    org.apache.spark.sql.functions.call_function("osa_distance", term, query,
-      org.apache.spark.sql.functions.lit(max))
-
   /** Longest common subsequence length between the query's gram SEQUENCE
     * and a doc's position-ordered gram sequence — the match count the
     * reference's ngram-similarity filter measures
@@ -109,9 +102,10 @@ object TsDistances {
   }
 }
 
-/** osa_distance(term, query, max) → int, -1 when above max — codegen'd
-  * static call, so the fuzzy dictionary expansion stays inside
-  * whole-stage codegen like the plain-levenshtein path. */
+/** osa_distance(term, query, max) → int, -1 when above max — the SQL
+  * surface of the OSA kernel (a term-dictionary scan over the ts_dict
+  * relations), codegen'd as a static call like Spark's plain
+  * `levenshtein`. */
 case class OsaDistanceExpr(first: Expression, second: Expression, third: Expression)
     extends TernaryExpression {
   override def nullIntolerant: Boolean = true

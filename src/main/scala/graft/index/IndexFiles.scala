@@ -11,6 +11,7 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import graft.search.{TermPredicates, TsQuery}
 
 /** One parquet file of an index part, as an index task opens it. */
 final case class IndexFile(path: String, length: Long, mtime: Long) {
@@ -61,9 +62,48 @@ trait IndexLeaf {
 
 /** What the single-task index leaves ([[TermBagScan]], [[MatchScan]]) share:
   * opening a snapshot's parquet files inside the task, reading an in-memory
-  * index's frames through one partition, and the generation-scoped
-  * tombstones. */
+  * index's frames through one partition, the generation-scoped tombstones,
+  * and the term-dictionary expansion of the multi-term leaves with its
+  * fuzzy cap. */
 private[index] object IndexTask {
+
+  /** The session's fuzzy expansion cap (`spark.graft.levenshteinMaxTerms`,
+    * the reference's per-connection SET sdb_levenshtein_max_terms), read
+    * when a leaf is planned so the planning session's value rides in the
+    * relation; 0 or less keeps every term. */
+  def fuzzyCap(): Int =
+    SparkSession.active.conf.get("spark.graft.levenshteinMaxTerms", "64").toInt
+
+  /** The term dictionary a task reads: the distinct non-null terms of the
+    * `term` rows added, over every live segment. */
+  final class Dictionary {
+    private val terms = new java.util.HashSet[UTF8String]
+    def add(c: Cols): Unit = if (!c.isNull(0)) terms.add(c.term(0).copy())
+
+    /** Each expansion leaf's dictionary terms: those its [[TermPredicates]]
+      * predicate accepts. */
+    def expand(leaves: Seq[TsQuery]): Map[TsQuery, Seq[String]] = {
+      import scala.jdk.CollectionConverters._
+      val all = terms.asScala.toSeq
+      leaves.map { e =>
+        val p = TermPredicates(e)
+        e -> all.filter(p).map(_.toString)
+      }.toMap
+    }
+  }
+
+  /** Of a fuzzy leaf's `live` terms (those with a live posting), the `cap`
+    * most similar ones by [[TermPredicates.fuzzySimilarity]], then term byte
+    * order — the reference's scored_terms_limit; `cap` 0 or less keeps
+    * all. */
+  def capFuzzy(f: TsQuery.Fuzzy, live: Seq[String], cap: Int): Seq[String] =
+    if (cap <= 0) live
+    else live.map { t =>
+      val u = UTF8String.fromString(t)
+      (TermPredicates.fuzzySimilarity(f, u), u, t)
+    }.sortWith { case ((w1, u1, _), (w2, u2, _)) =>
+      if (w1 != w2) w1 > w2 else u1.binaryCompare(u2) < 0
+    }.take(cap).map(_._3)
 
   /** Builds the parquet readers a task opens [[IndexFiles]] with. Driver
     * side: each reader is serialized into the task closure. */

@@ -703,6 +703,12 @@ object IndexStore {
       snap.numDocs - snap.deleted._1, snap.sumDl - snap.deleted._2, Some(snap.files))
   }
 
+  /** Releases the blocks a `localCheckpoint`ed frame persisted. */
+  def releaseCheckpoint(df: DataFrame): Unit = df.queryExecution.logical.foreach {
+    case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ => ()
+  }
+
   /** Compaction (the reference's background compaction task,
     * maintenance.h:36-44): merge all live segments into one NEW segment,
     * atomically repoint the manifest at it, and leave the old segment dirs
@@ -720,6 +726,8 @@ object IndexStore {
     // every fingerprint (REFRESH would then re-add the zero-token docs and
     // lose update detection after any compaction). Checkpointed so the
     // frame doesn't lazily re-read segment dirs cleanup may later remove.
+    // Its blocks are released once the merged segment is written, or has
+    // failed to be.
     val manifest = liveDocFps(spark, dir).localCheckpoint(true)
     val next = snap.segs
       .map(_.stripPrefix("seg=").toInt).foldLeft(-1)(math.max) + 1
@@ -730,7 +738,8 @@ object IndexStore {
       merged.termDict.drop("bucket"),
       merged.docStats,
       merged.numDocs, merged.sumDl)
-    writeSegment(rebuilt, dir, next, Some(manifest))
+    try writeSegment(rebuilt, dir, next, Some(manifest))
+    finally releaseCheckpoint(manifest)
     writeStringAtomic(spark, s"$dir/_SEGMENTS", f"seg=$next%05d\n")
     // the merged segment was written deletes-applied; retire its tombstones
     // AFTER the swap (a crash in between leaves deletes that now anti-join

@@ -1,12 +1,13 @@
 package graft.index
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, GreaterThan, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, GreaterThan, GreaterThanOrEqual, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.graft.Frames
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.analysis.AnalyzerRegistry
+import graft.search.TsQuery
 
 /** Distributed inverted index over a document DataFrame.
   *
@@ -29,14 +30,16 @@ import graft.analysis.AnalyzerRegistry
   * Scale notes: postings are built with one explode + one groupBy shuffle,
   * both keyed on (doc, term) so map-side partial aggregation applies; the
   * only global state is the (tiny) term dictionary and two scalars. Two
-  * single-task leaves drive the reads: the term-bag scorers
-  * ([[scoredTerms]]) read [[TermBagScan]], and every boolean match
+  * single-task leaves drive the reads: every scorer reads [[TermBagScan]]
+  * — a term bag ([[scoredTerms]]) or one multi-term leaf, prefix, wildcard,
+  * regexp, range or fuzzy ([[scoredExpansionPlan]]), whose task expands the
+  * term dictionary — and every boolean match
   * ([[graft.search.TsQueryExec.matching]]: terms, phrases, the expansion
   * leaves prefix, wildcard, regexp, range, fuzzy, n-gram and
   * phrase-prefix, and their boolean trees) reads [[MatchScan]], which
-  * expands the term dictionary inside its task. The scored dictionary
-  * expansions (`prefixTerms` … `fuzzyTerms`, fed to [[scoreOverTerms]])
-  * and [[anyOfPrefixes]] stay term-dictionary frames joined to postings.
+  * expands the term dictionary the same way. A structured query scores as
+  * plan nodes over the two ([[graft.search.TsQueryExec.scoredPlan]]). Only
+  * [[anyOfPrefixes]] stays a term-dictionary frame joined to postings.
   * Each task reads the query terms' bucket-pruned postings —
   * the reference's postings walk into a collector (max_score_iterator.hpp,
   * top_k_heap.hpp): cost is O(Σ df(term)) postings rows, never a corpus
@@ -97,11 +100,10 @@ final case class InvertedIndex(
   /** Docs containing every term (ts_all). */
   def allOf(terms: Seq[String]): DataFrame = anyOf(terms.distinct, terms.distinct.size)
 
-  /** Term-dictionary expansion primitives: prefix / wildcard / regex / fuzzy /
-    * range run over the (small) term dictionary, then join postings —
-    * mirroring the reference's automaton-over-term-dict filters
-    * (prefix_filter.hpp, wildcard_filter.hpp, automaton_filter.hpp,
-    * levenshtein_filter.hpp, granular_range_filter.hpp). */
+  /** The dictionary terms matching `pred`, as a `(term)` frame to join to
+    * postings ([[anyOfPrefixes]], the ts_dict cartesian facet) — the
+    * reference's automaton-over-term-dict filters (prefix_filter.hpp). The
+    * scored and matched expansions run inside the leaves' tasks instead. */
   def expandTerms(pred: Column): DataFrame = termDict.filter(pred).select(col("term"))
 
   private def docsForTerms(terms: DataFrame): DataFrame =
@@ -171,79 +173,6 @@ final case class InvertedIndex(
     }
   }
 
-  /** Dictionary expansions of the multi-term leaves as `(term)` frames —
-    * the scored MultiTermQuery form, fed to [[scoreOverTerms]]. Boolean
-    * matching expands the dictionary inside [[MatchScan]]'s task instead.
-    * A LIKE pattern's literal prefix before its first wildcard becomes a
-    * pushable term range. */
-  def prefixTerms(p: String): DataFrame = expandTerms(prefixPred(p))
-
-  def wildcardTerms(pattern: String): DataFrame = {
-    val litPrefix = pattern.takeWhile(c => c != '%' && c != '_' && c != '\\')
-    val pred = col("term").like(pattern)
-    expandTerms(if (litPrefix.isEmpty) pred else prefixPred(litPrefix) && pred)
-  }
-
-  def regexpTerms(pattern: String): DataFrame =
-    expandTerms(col("term").rlike(pattern))
-
-  def rangeTerms(lo: Option[String], hi: Option[String],
-      loInc: Boolean = true, hiInc: Boolean = true): DataFrame = {
-    val lower = lo.map(v => if (loInc) col("term") >= v else col("term") > v)
-    val upper = hi.map(v => if (hiInc) col("term") <= v else col("term") < v)
-    expandTerms((lower ++ upper).reduceOption(_ && _).getOrElse(lit(true)))
-  }
-
-  /** Fuzzy dictionary expansion as `(term, w)` with w = the reference's
-    * similarity boost 1 − d/min(|term|,|target|)
-    * (levenshtein_filter.cpp:49-54,119-124) — also the rank key for the
-    * `maxTerms` cap (the reference's scored_terms_limit keeps the
-    * highest-boost terms; -1 reads `spark.graft.levenshteinMaxTerms`,
-    * default 64, and 0 keeps every term — levenshtein_max_terms.test). */
-  def fuzzyTerms(t: String, maxDist: Int, maxTerms: Int = -1,
-      transpositions: Boolean = true, prefix: String = ""): DataFrame = {
-    // the session knob (`SET spark.graft.levenshteinMaxTerms = N`) is the
-    // reference's SET sdb_levenshtein_max_terms; an explicit arg overrides
-    // read from the ACTIVE session, not termDict's: the loaded index is
-    // cached across sessions, and the knob is per-connection (the sqllogic
-    // runner SETs it on its own session clone)
-    val cap =
-      if (maxTerms >= 0) maxTerms
-      else org.apache.spark.sql.SparkSession.active.conf
-        .get("spark.graft.levenshteinMaxTerms", "64").toInt
-    // an exact `prefix` (ts_levenshtein 4th arg) narrows the dict to a
-    // PUSHED term range first; the distance runs over the remainder
-    val base =
-      if (prefix.isEmpty) termDict
-      else termDict.filter(col("term").startsWith(prefix))
-    val term =
-      if (prefix.isEmpty) col("term")
-      else col("term").substr(lit(prefix.length + 1), length(col("term")))
-    // length band first: |len(term) - len(t)| <= maxDist is a necessary
-    // condition for edit distance <= maxDist, is pushable/codegen-cheap, and
-    // prunes the dict scan before any DP runs; the thresholded distance
-    // kernel (Spark's 3-arg levenshtein, or the OSA expression when
-    // transpositions are on — the reference DEFAULT, ts_common.hpp:242)
-    // then early-exits rows that blow the band
-    // Spark's length() counts CODE POINTS, so the target length must too
-    // (t.length is UTF-16 units — a non-BMP char would skew the band and
-    // the similarity boost; the reference uses UTF-8 code-point lengths on
-    // both sides, levenshtein_filter.cpp Similarity)
-    val tLen = t.codePointCount(0, t.length)
-    val band = abs(length(term) - lit(tLen)) <= maxDist
-    val dist =
-      if (transpositions)
-        graft.functions.TsDistances.osaDistance(term, lit(t), maxDist)
-      else levenshtein(term, lit(t), maxDist)
-    val expanded = base.filter(band && dist >= 0 && dist <= maxDist)
-      .withColumn("w", lit(1.0) - dist.cast("double") /
-        greatest(least(length(term), lit(tLen)), lit(1)).cast("double"))
-    val capped =
-      if (cap <= 0) expanded
-      else expanded.orderBy(col("w").desc, col("term")).limit(cap)
-    capped.select(col("term"), col("w"))
-  }
-
   /** The scoring plan `(doc_id, _score)`: the term-bag leaf — one row per
     * doc matching ≥1 of `terms`, see [[TermBagScan]] — the kernel's score
     * over it, and the filter dropping non-positive scores where the kernel
@@ -253,13 +182,16 @@ final case class InvertedIndex(
     * claim rule splices the plan into a query as is and the outer optimizer
     * runs once. */
   private def scoredPlan(kernel: ScoreKernel, terms: Seq[String],
-      wand: Option[TermBagScan.Wand]): LogicalPlan = {
-    val leaf = TermBagScan.leaf(this, terms, wand)
+      wand: Option[TermBagScan.Wand]): LogicalPlan =
+    scored(kernel, TermBagScan.leaf(this, terms, wand))
+
+  /** `leaf` scored by `kernel`: `(doc_id, _score)`. */
+  private def scored(kernel: ScoreKernel, leaf: LogicalPlan): LogicalPlan = {
     val byName = leaf.output.map(a => a.name -> (a: Expression)).toMap
-    val scored = Project(
+    val plan = Project(
       Seq(leaf.output.head, Alias(kernel.score(byName), "_score")()), leaf)
-    if (kernel.dropZero) Filter(GreaterThan(scored.output(1), Literal(0.0)), scored)
-    else scored
+    if (kernel.dropZero) Filter(GreaterThan(plan.output(1), Literal(0.0)), plan)
+    else plan
   }
 
   private def scoredFrame(kernel: ScoreKernel, terms: Seq[String],
@@ -272,74 +204,17 @@ final case class InvertedIndex(
   def bm25(terms: Seq[String], k1: Double = 1.2, b: Double = 0.75): DataFrame =
     scoredFrame(ScoreKernels.bm25(this, terms, k1, b), terms)
 
-  /** BM25 over a DATA-DEPENDENT dictionary expansion — the reference's
-    * scored MultiTermQuery (multiterm_query.cpp:157-200): a doc matched by
-    * several expanded terms scores merge(w(term) × bm25-contribution(term)).
-    * Merge is Sum for prefix/range/wildcard/regexp (prefix_filter.cpp:77,
-    * range_filter.cpp:121, automaton_utils.cpp:227-228) and Max for fuzzy
-    * (levenshtein_filter.cpp:163-165), whose `w` carries the similarity
-    * boost from [[fuzzyTerms]]; other expansions default w = 1.
-    *
-    * Float determinism: the Sum merge collects each doc's (term,
-    * contribution) pairs, sorts by term, and folds in that fixed order — a
-    * plain groupBy sum would add doubles in shuffle arrival order. The
-    * per-doc pair count is bounded by the expansion size (itself capped for
-    * fuzzy), so the collected arrays stay small. The expansion is
-    * dict-filtered and broadcast; postings are touched once. */
-  def bm25OverTerms(expansion: DataFrame, mergeMax: Boolean = false,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    scoreOverTerms(expansion, "bm25", mergeMax, Seq(k1, b))
-
-  /** [[bm25OverTerms]] generalized by scorer kernel — the reference scores
-    * ANY scorer over a multi-term expansion (TfIdfScore folds the same
-    * per-term boost, tfidf.cpp:89-95). bm25 and tfidf (the two the
-    * reference's index corpus pins with exact goldens) are supported;
-    * the collection-stats scorers (lm_*, indri, dfi) raise. */
-  def scoreOverTerms(expansion: DataFrame, scorer: String,
-      mergeMax: Boolean = false, params: Seq[Any] = Nil): DataFrame = {
-    def num(i: Int, d: Double): Double = params.lift(i) match {
-      case Some(n: Number) => n.doubleValue
-      case Some(other) => throw new IllegalArgumentException(
-        s"$scorer: parameter ${i + 1} must be numeric, got $other")
-      case None => d
-    }
-    val withW =
-      if (expansion.columns.contains("w")) expansion.select(col("term"), col("w"))
-      else expansion.select(col("term"), lit(1.0).as("w"))
-    val terms = withW.join(termDict.select(col("term"), col("df")), "term")
-    val tfD = col("tf").cast("double")
-    val dfD = col("df").cast("double")
-    val contrib = scorer match {
-      case "bm25" =>
-        val k1 = num(0, 1.2); val b = num(1, 0.75)
-        val idf = log(lit(1.0) + (lit(numDocs.toDouble) - dfD + 0.5) / (dfD + 0.5))
-        idf * tfD * (k1 + 1.0) /
-          (tfD + lit(k1) * (lit(1.0 - b) + lit(b) * col("dlen").cast("double") / avgDl)) *
-          col("w")
-      case "tfidf" =>
-        val base = sqrt(tfD) *
-          log(lit(1.0) + (lit(numDocs.toDouble) + 1.0) / (dfD + 1.0)) * col("w")
-        if (params.headOption.contains(true))
-          base / sqrt(col("dlen").cast("double"))
-        else base
-      case other => throw new IllegalArgumentException(
-        s"scorer $other does not support multi-term expansion scoring")
-    }
-    val matched = postings.join(broadcast(terms), "term")
-      .join(docStats.select(col("doc_id"), col("dlen")), "doc_id")
-      .select(col("doc_id"), col("term"), contrib.as("__c"))
-    val merged =
-      if (mergeMax) matched.groupBy(col("doc_id")).agg(max(col("__c")).as("_score"))
-      else matched.groupBy(col("doc_id"))
-        .agg(aggregate(array_sort(collect_list(struct(col("term"), col("__c")))),
-          lit(0.0), (acc, x) => acc + x.getField("__c")).as("_score"))
-    // The Max merge is the fuzzy path, whose similarity boost can be
-    // EXACTLY 0 (distance == min code-point length): the reference keeps
-    // matched docs at score 0 (levenshtein_filter.cpp Max merge), so only
-    // the Sum paths — where a match mathematically implies a positive
-    // bm25/tfidf contribution — drop the zero guard rows.
-    val out = merged.select(col("doc_id"), col("_score"))
-    if (mergeMax) out else out.filter(col("_score") > 0.0)
+  /** The scoring plan `(doc_id, _score)` of a multi-term leaf (`Prefix`,
+    * `Wildcard`, `Regexp`, `TermRange`, `Fuzzy`): the expansion leaf — one
+    * task expands the dictionary and reads the expanded terms' postings,
+    * see [[TermBagScan]] — and [[ScoreKernels.expansion]]'s merge over it,
+    * Max for `Fuzzy` and Sum otherwise. bm25 and tfidf are supported; the
+    * collection-stats scorers (lm_*, indri, dfi) raise. */
+  private[graft] def scoredExpansionPlan(scorer: String, leaf: TsQuery,
+      params: Seq[Any] = Nil): LogicalPlan = {
+    val kernel = ScoreKernels.expansion(this, scorer, params,
+      mergeMax = leaf.isInstanceOf[TsQuery.Fuzzy])
+    scored(kernel, TermBagScan.expansionLeaf(this, leaf))
   }
 
   /** Scorer-name dispatch over the term-bag kernels — one place for the
@@ -402,9 +277,15 @@ final case class InvertedIndex(
     * equality with the post-filter plan). */
   def bm25MinScore(terms: Seq[String], minScore: Double,
       k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    scoredFrame(ScoreKernels.bm25(this, terms, k1, b), terms,
+    Frames.ofRows(postings.sparkSession, bm25MinScorePlan(terms, minScore, k1, b))
+
+  /** [[bm25MinScore]] as a plan, `(doc_id, _score)`. */
+  private[graft] def bm25MinScorePlan(terms: Seq[String], minScore: Double,
+      k1: Double = 1.2, b: Double = 0.75): LogicalPlan = {
+    val scored = scoredPlan(ScoreKernels.bm25(this, terms, k1, b), terms,
       Some(TermBagScan.Wand(minScore, k1, b)))
-      .filter(col("_score") >= minScore)
+    Filter(GreaterThanOrEqual(scored.output(1), Literal(minScore)), scored)
+  }
 
   /** [[InvertedIndex.wandNecessary]] over this index's term dictionary —
     * exposed so tests can assert a floor prunes the drive. */

@@ -12,7 +12,7 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Cast, In, Li
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, LocalLimit, LogicalPlan, Project, Sort}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Frames
-import org.apache.spark.sql.types.{ArrayType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, StructType}
 import graft.functions.{InnerProductExpr, L2SqrDistanceExpr, VectorFunctions}
 
 /** IVF (inverted-file) index over an embedding column.
@@ -513,21 +513,25 @@ object IvfIndex {
     * from the stored vectors — one linear, shuffle-free pass. The manifest
     * is metadata-scale (16 bytes/vector) beside the embedding corpus; it is
     * what REFRESH reads instead of the stored embeddings. `_FPS_N` records
-    * its row count so the sync check stays a driver file read, not a job. */
+    * its row count so the sync check stays a driver file read, not a job,
+    * and `_FPS_SCHEMA` its schema, so opening it infers nothing. */
   def writeFps(spark: SparkSession, dir: String): Unit = {
-    spark.read.parquet(s"$dir/vectors")
+    val fps = spark.read.parquet(s"$dir/vectors")
       .select(col("vec_id"), xxhash64(col("embedding")).as("fp"))
-      .write.mode("overwrite").parquet(s"$dir/fps")
+    fps.write.mode("overwrite").parquet(s"$dir/fps")
+    val schema = fps.schema
+    writeAtomic(spark, s"$dir/_FPS_SCHEMA", schema.json)
     writeAtomic(spark, s"$dir/_FPS_N",
-      spark.read.parquet(s"$dir/fps").count().toString)
+      spark.read.schema(schema).parquet(s"$dir/fps").count().toString)
   }
 
-  /** The fingerprint manifest, self-healing: absent (pre-r19 artifact) or
-    * out of sync with the vector store (crash between a vectors append and
-    * its fps append) → re-derive. The check compares two DRIVER-side
-    * counters — `_FPS_N` (bumped with every fps write) against the `_SIZES`
-    * total (bumped with every vectors write) — zero Spark jobs on the
-    * steady path. */
+  /** The fingerprint manifest, self-healing: absent (pre-r19 artifact), of
+    * unrecorded schema, or out of sync with the vector store (crash between
+    * a vectors append and its fps append) → re-derive. The check compares
+    * two DRIVER-side counters — `_FPS_N` (bumped with every fps write)
+    * against the `_SIZES` total (bumped with every vectors write) — and the
+    * manifest opens with its recorded schema: zero Spark jobs on the steady
+    * path. */
   def syncedFps(spark: SparkSession, dir: String): DataFrame = {
     val f = fs(spark, dir)
     def readAll(name: String): Option[String] = {
@@ -539,10 +543,11 @@ object IvfIndex {
         finally in.close()
       }
     }
+    def schema = readAll("_FPS_SCHEMA").map(DataType.fromJson(_).asInstanceOf[StructType])
     val storedN = readAll("_SIZES")
       .map(_.split("\n").filter(_.nonEmpty).map(_.toLong).sum)
     val fpsN = readAll("_FPS_N").flatMap(_.trim.toLongOption)
-    val inSync = f.exists(new Path(s"$dir/fps/_SUCCESS")) &&
+    val inSync = f.exists(new Path(s"$dir/fps/_SUCCESS")) && schema.nonEmpty &&
       storedN.nonEmpty && fpsN == storedN
     if (!inSync) {
       // loudly: the self-heal costs a corpus scan, and a production refresh
@@ -550,8 +555,8 @@ object IvfIndex {
       // cost (r19 VERDICT #8)
       System.err.println(s"[graft] IvfIndex fps manifest out of sync at " +
         s"$dir (_FPS_N=${fpsN.getOrElse("absent")} vs _SIZES total=" +
-        s"${storedN.getOrElse("absent")}): re-deriving manifest and " +
-        s"reconciling _SIZES from the vector store")
+        s"${storedN.getOrElse("absent")}, schema ${if (schema.isEmpty) "absent" else "recorded"}): " +
+        s"re-deriving manifest and reconciling _SIZES from the vector store")
       writeFps(spark, dir)
       // Reconcile `_SIZES` from the store itself (r19 ADVICE #1): append()
       // writes _SIZES BEFORE the vectors parquet append (crash-safety order
@@ -574,7 +579,7 @@ object IvfIndex {
           (0 until lists).map(i => actual.getOrElse(i, 0L)).mkString("\n"))
       }
     }
-    spark.read.parquet(s"$dir/fps")
+    spark.read.schema(schema.get).parquet(s"$dir/fps")
   }
 
   private[index] def writeAtomic(spark: SparkSession, path: String, s: String): Unit = {

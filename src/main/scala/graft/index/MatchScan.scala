@@ -1,7 +1,7 @@
 package graft.index
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SQLContext, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SQLContext}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.execution.datasources.LogicalRelation
@@ -11,7 +11,7 @@ import org.apache.spark.sql.sources.{BaseRelation, In, TableScan}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.TsDistances
-import graft.search.{TermPredicates, TsQuery}
+import graft.search.TsQuery
 
 /** The text-match leaf behind [[graft.search.TsQueryExec.matching]]: one
   * Spark task evaluates a [[TsQuery]] tree — `Term`, `Phrase`,
@@ -27,7 +27,7 @@ import graft.search.{TermPredicates, TsQuery}
   * The task reads what the tree needs and nothing else:
   *  - the term dictionary's `term` column of every live segment, only when
   *    the tree has an expansion leaf; each leaf keeps the terms its
-  *    [[TermPredicates]] predicate accepts;
+  *    [[graft.search.TermPredicates]] predicate accepts;
   *  - the postings of the named and expanded terms, bucket-pruned; a tree
   *    without an expansion leaf pushes its term set to the reader;
   *  - their `positions` only when the tree has a positional node (a phrase
@@ -36,9 +36,10 @@ import graft.search.{TermPredicates, TsQuery}
   *  - the docstats ids (the doc universe) only for `Not`, `All` or an `And`
   *    without a positive child.
   * It applies the generation-scoped tombstones itself, so every row it
-  * keeps is live. File access and tombstones are [[IndexTask]]'s, shared
-  * with [[TermBagScan]]; an index built in memory has no files and its
-  * frames are read through one partition each.
+  * keeps is live. File access, tombstones, the dictionary expansion and
+  * the fuzzy cap are [[IndexTask]]'s, shared with [[TermBagScan]]; an index
+  * built in memory has no files and its frames are read through one
+  * partition each.
   *
   * Semantics are those of the doc_id join composition this leaf replaced,
   * null ids included:
@@ -88,10 +89,7 @@ private[graft] object MatchScan {
     validate(q)
     val spark = idx.postings.sparkSession
     val docType = idx.postings.schema("doc_id").dataType
-    // the reference's per-connection SET sdb_levenshtein_max_terms: the
-    // planning session's value rides in the relation
-    val fuzzyCap = SparkSession.active.conf.get("spark.graft.levenshteinMaxTerms", "64").toInt
-    LogicalRelation(Relation(idx, q, docType, countOnly, fuzzyCap)(spark.sqlContext))
+    LogicalRelation(Relation(idx, q, docType, countOnly, IndexTask.fuzzyCap())(spark.sqlContext))
   }
 
   /** The shape checks the positional joins made when they were built. */
@@ -192,10 +190,8 @@ private[graft] object MatchScan {
           }
           val tombs = reader.tombstones(files)
           spark.sparkContext.parallelize(Seq(0), 1).mapPartitions { _ =>
-            val dict = new java.util.HashSet[UTF8String]
-            segs.foreach { case (_, _, d, _) =>
-              d.foreach(_.rows(c => if (!c.isNull(0)) dict.add(c.term(0).copy())))
-            }
+            val dict = new IndexTask.Dictionary
+            segs.foreach { case (_, _, d, _) => d.foreach(_.rows(dict.add)) }
             val m = new Matcher(ts, expansions, dict, dt, withPos, cap)
             val buckets = m.terms.map(IndexStore.bucketOf).toSet
             val dead = tombs.load(dt)
@@ -218,8 +214,9 @@ private[graft] object MatchScan {
           val terms = if (expansions.nonEmpty) one(idx.termDict.select(col("term"))) else none
           val postTypes = Seq(StringType, dt) ++ (if (withPos) Seq(ArrayType(IntegerType)) else Nil)
           post.zipPartitions(docs, terms) { (p, d, t) =>
-            val dict = new java.util.HashSet[UTF8String]
-            t.foreach(r => if (!r.isNullAt(0)) dict.add(r.getUTF8String(0).copy()))
+            val dict = new IndexTask.Dictionary
+            val tc = new IndexTask.Cols(Seq(StringType))
+            t.foreach(r => dict.add(tc.bind(r)))
             val m = new Matcher(ts, expansions, dict, dt, withPos, cap)
             val dead = new IndexTask.Tombstones(dt)
             val pc = new IndexTask.Cols(postTypes)
@@ -253,15 +250,8 @@ private[graft] object MatchScan {
     * or expanded term, its live docs and their positions; the live doc
     * universe when the tree reads it. */
   private final class Matcher(named: Seq[String], expansions: Seq[TsQuery],
-      dict: java.util.Set[UTF8String], docType: DataType, withPos: Boolean, fuzzyCap: Int) {
-    private val expanded: Map[TsQuery, Seq[String]] = {
-      import scala.jdk.CollectionConverters._
-      val dictTerms = dict.asScala.toSeq
-      expansions.map { e =>
-        val p = TermPredicates(e)
-        e -> dictTerms.filter(p).map(_.toString)
-      }.toMap
-    }
+      dict: IndexTask.Dictionary, docType: DataType, withPos: Boolean, fuzzyCap: Int) {
+    private val expanded: Map[TsQuery, Seq[String]] = dict.expand(expansions)
     /** The terms whose postings the task reads. */
     val terms: Seq[String] = (named ++ expanded.values.flatten).distinct
     private val slot: Map[String, Int] = terms.zipWithIndex.toMap
@@ -311,16 +301,8 @@ private[graft] object MatchScan {
 
     /** A fuzzy leaf's terms with a live posting, capped to the most
       * similar ones. */
-    private def capped(f: TsQuery.Fuzzy): Seq[String] = {
-      val live = expanded(f).filter(t => !postings(slot(t)).isEmpty)
-      if (fuzzyCap <= 0) live
-      else live.map { t =>
-        val u = UTF8String.fromString(t)
-        (TermPredicates.fuzzySimilarity(f, u), u, t)
-      }.sortWith { case ((w1, u1, _), (w2, u2, _)) =>
-        if (w1 != w2) w1 > w2 else u1.binaryCompare(u2) < 0
-      }.take(fuzzyCap).map(_._3)
-    }
+    private def capped(f: TsQuery.Fuzzy): Seq[String] =
+      IndexTask.capFuzzy(f, expanded(f).filter(t => !postings(slot(t)).isEmpty), fuzzyCap)
 
     /** `base` minus `drop`; a null id in `base` stays (an anti-join keeps
       * a null left key). */

@@ -1,16 +1,17 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, And => CAnd, Ascending, Attribute, AttributeReference, Descending, EqualTo, ExprId, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, NamedExpression, ScalaUDF, SortOrder}
-import org.apache.spark.sql.catalyst.plans.{Inner, LeftAnti, LeftSemi}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{Alias, And => CAnd, Ascending, Attribute, AttributeReference, Cast, Coalesce, Descending, EqualTo, ExprId, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, NamedExpression, ScalaUDF, SortOrder}
+import org.apache.spark.sql.catalyst.plans.{Inner, LeftAnti, LeftOuter, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, Join, JoinHint, LocalLimit, LogicalPlan, Project, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.Frames
+import org.apache.spark.sql.types.DoubleType
 import org.apache.spark.unsafe.types.UTF8String
 import graft.analysis.AnalyzerRegistry
-import graft.index.{IndexStore, InvertedIndex}
-import graft.search.{IndexCatalog, SqlSurface}
+import graft.index.{FieldStore, IndexStore, InvertedIndex}
+import graft.search.{IndexCatalog, SqlSurface, TsQueryCodec, TsQueryExec}
 
 /** Shared pieces of the scorer-claim rules: recognizing a scorer stub call
   * (`bm25(col, 'query', 'dict')` and friends, registered by
@@ -71,41 +72,24 @@ private[plans] object ScorerShapes {
       case _ => None
     }
 
-  /** All-matched-docs scores `(doc_id, _score)` for a scorer name — the
-    * per-scorer kernels already verified by the ts_*_topk entries. The
-    * query string is a plain term bag through the index's analyzer. */
-  def scored(idx: InvertedIndex, scorer: String, terms: Seq[String],
-      params: Seq[Any] = Nil): DataFrame =
-    idx.scoredTerms(scorer, terms, params)
-
-  /** Scores for a scorer + RAW query string. A plain string is the term-bag
-    * path through [[scored]]; a TSQUERY-codec string (ts_phrase / boost /
-    * ts_like / ts_levenshtein … constructors) decodes to the structured
-    * query and scores through the boost-folding tree — the reference's
-    * `BM25(...) WHERE body @@ (q ^ w)` surface (boost_score.test,
-    * inverted_index_multiterm_score.test). Multi-term leaves need a
-    * per-scorer expansion kernel (bm25/tfidf); others raise and the claim
-    * falls back, so the stub fails loudly rather than mis-scoring. */
-  def scoredQuery(idx: InvertedIndex, scorer: String, query: String,
-      dict: String, params: Seq[Any] = Nil): DataFrame =
-    if (graft.search.TsQueryCodec.isEncoded(query))
-      graft.search.TsQueryExec.scoredScorer(idx, scorer,
-        graft.search.TsQueryCodec.decode(query, AnalyzerRegistry.get(dict)),
-        params)
-    else scored(idx, scorer, termsOf(query, dict), params)
-
   def termsOf(query: String, dict: String): Seq[String] =
     AnalyzerRegistry.get(dict).tokens(query)
 
-  /** [[scoredQuery]] as a plan, `(doc_id, _score)`. A plain term bag is the
-    * scorer leaf plus its score expression, built as plan nodes; a
-    * TSQUERY-constructor query scores through the composed boost-folding
-    * tree, optimized on its own. */
+  /** A scorer's `(doc_id, _score)` plan for a RAW query string, as plan
+    * nodes over the index leaves. A plain string is a term bag through the
+    * index's analyzer ([[InvertedIndex.scoredTermsPlan]]); a TSQUERY-codec
+    * string (ts_phrase / boost / ts_like / ts_levenshtein … constructors)
+    * decodes to the structured query and scores through the boost-folding
+    * tree ([[graft.search.TsQueryExec.scoredPlan]]) — the reference's
+    * `BM25(...) WHERE body @@ (q ^ w)` surface (boost_score.test,
+    * inverted_index_multiterm_score.test). Multi-term leaves score under
+    * bm25 and tfidf only; others raise and the claim is declined, so the
+    * stub fails loudly rather than mis-scoring. */
   def scoredPlan(idx: InvertedIndex, scorer: String, query: String,
       dict: String, params: Seq[Any]): LogicalPlan =
-    if (graft.search.TsQueryCodec.isEncoded(query))
-      PlanShapes.freshRelationIds(scoredQuery(idx, scorer, query, dict, params)
-        .select(col("doc_id"), col("_score")).queryExecution.optimizedPlan)
+    if (TsQueryCodec.isEncoded(query))
+      TsQueryExec.scoredPlan(idx, scorer,
+        TsQueryCodec.decode(query, AnalyzerRegistry.get(dict)), params)
     else idx.scoredTermsPlan(scorer, termsOf(query, dict), params)
 
   /** Resolves the sorted input to its underlying indexed scan. Accepted
@@ -228,10 +212,13 @@ private[plans] object ScorerShapes {
   *   - `Project(cols, Sort(scorerUdf DESC, scan))` — ORDER BY not in SELECT
   *   - `[Project(exprs,)] Sort(s DESC, Project([cols, bm25(...) AS s], scan))`
   *     — scorer aliased in the SELECT list (score value in the output)
-  * The scorer leaf and its score expression are built as plan nodes
-  * ([[graft.index.InvertedIndex.scoredTermsPlan]]), so the outer optimizer
-  * runs once. One construction serves the bare scan and the absorbed `ts_match`
-  * shape; the plan depends only on the index's freshness and the outputs:
+  * The scored plan — a term bag's scorer leaf and score expression, or a
+  * TSQUERY-constructor query's tree of joins and projections over the
+  * index leaves ([[ScorerShapes.scoredPlan]]) — and every node the claim
+  * adds are plan nodes, so the rule never runs the optimizer and the outer
+  * optimizer runs once. One construction serves the bare scan and the
+  * absorbed `ts_match` shape; the plan depends only on the index's
+  * freshness and the outputs:
   *   - the sorted input is the bare indexed scan once absorbed, the index
   *     is byte-fresh with it ([[StatsShapes.indexFresh]]) and every output
   *     is the id or the score → the index-only top-k: Sort and limit over
@@ -333,11 +320,11 @@ case class ClaimScoreTopK(spark: SparkSession) extends Rule[LogicalPlan] {
         .getOrElse(scanPlan)
       val idOrScore = refs.forall(a =>
         a.exprId == idAttr.exprId || scoreIds.contains(a.exprId))
+      val scored = ScorerShapes.scoredPlan(
+        IndexStore.load(spark, entry.segDir), scorer, query, dict, params)
       if (candidate.isEmpty && !idOrScore)
-        claimBare(entry, scorer, query, dict, params, k, root, refs, scoreIds, outList)
+        claimBare(lr, idAttr, entry, scored, k, root, refs, scoreIds, outList)
       else {
-        val scored = ScorerShapes.scoredPlan(
-          IndexStore.load(spark, entry.segDir), scorer, query, dict, params)
         if (idOrScore && indexOnly(tree, lr, entry))
           claimIndexOnly(scored, k, scoreIds, outList)
         else claimFiltered(tree, scored, k, idAttr, scoreIds, outList)
@@ -368,7 +355,7 @@ case class ClaimScoreTopK(spark: SparkSession) extends Rule[LogicalPlan] {
     * deleted before its REFRESH is still left out. */
   private def absorbMatch(candTree: LogicalPlan, entry: IndexCatalog.TextEntry,
       textAttr: AttributeReference, query: String, dict: String): LogicalPlan =
-    if (graft.search.TsQueryCodec.isEncoded(query)) candTree
+    if (TsQueryCodec.isEncoded(query)) candTree
     else {
       val terms = ScorerShapes.termsOf(query, dict).toSet
       candTree.transformUp {
@@ -380,60 +367,40 @@ case class ClaimScoreTopK(spark: SparkSession) extends Rule[LogicalPlan] {
     }
 
   /** The bare-scan drive for outputs wider than the id and the score:
-    * index top-k, then one late-materializing join-back to the covering
-    * columnstore or the base table. */
-  private def claimBare(entry: IndexCatalog.TextEntry, scorer: String,
-      query: String, dict: String, params: Seq[Any], k: Int, root: String,
+    * the index top-k, then one late-materializing join-back on the id to
+    * the covering columnstore (when it holds every output column and is
+    * coherent with the text segments) or to the scan itself, re-sorted by
+    * score — the k-row join-back of search_pk_lookup.h. */
+  private def claimBare(lr: LogicalRelation, idAttr: AttributeReference,
+      entry: IndexCatalog.TextEntry, scored: LogicalPlan, k: Int, root: String,
       refs: Seq[Attribute], scoreIds: Set[ExprId],
       outList: Seq[NamedExpression]): LogicalPlan = {
-    {
-      val idx = IndexStore.load(spark, entry.segDir)
-      val topk = ScorerShapes.scoredQuery(idx, scorer, query, dict, params)
-        .orderBy(col("_score").desc, col("doc_id"))
-        .limit(k)
-        .select(col("doc_id").as(entry.idCol), col("_score").as("__graft_score"))
-      val neededScanCols = refs.collect {
-        case a: AttributeReference if !scoreIds.contains(a.exprId) => a.name
-      }.distinct
-      // covered join-back (reference inverted_index_topk_include.test):
-      // when every projected column is id or INCLUDE, the k-row late
-      // materialization reads the narrow stored columnstore instead of the
-      // wide base table — at 100 TB the base fact scan disappears from the
-      // top-k serve path entirely
-      val lookup = IndexCatalog.lookupFields(root) match {
-        case Some(fe) if neededScanCols.forall(c =>
-            c == entry.idCol || fe.included.contains(c)) &&
-            // stale sidecar (text segments advanced since its build)
-            // → base join-back, never a silently-narrower columnstore
-            graft.index.FieldStore.textCoherent(spark, fe.dir) =>
-          graft.index.FieldStore.stored(spark, fe.dir)
-            .withColumnRenamed("doc_id", entry.idCol)
-        case _ => spark.read.parquet(root)
-      }
-      val base = topk
-        .join(lookup.select(
-          (neededScanCols.toSet + entry.idCol).toSeq.map(col): _*), Seq(entry.idCol))
-        // the join-back scrambles row order; the claim replaces a Sort,
-        // so re-establish score order before handing the plan back
-        .orderBy(col("__graft_score").desc, col(entry.idCol))
-      val rPlan = base.queryExecution.optimizedPlan
-      val byName = rPlan.output.map(a => a.name -> a).toMap
-      def subst(a: AttributeReference): Expression = {
-        val r: Attribute =
-          if (scoreIds.contains(a.exprId)) byName("__graft_score") else byName(a.name)
-        // the stored columnstore keeps ids as long; cast back when the
-        // original scan attribute was narrower so output types are stable
-        if (r.dataType == a.dataType) r
-        else org.apache.spark.sql.catalyst.expressions.Cast(r, a.dataType)
-      }
-      val newList = outList.map {
-        case a: AttributeReference => Alias(subst(a), a.name)(exprId = a.exprId)
-        case al @ Alias(c, n) =>
-          Alias(c.transform { case a: AttributeReference => subst(a) }, n)(exprId = al.exprId)
-        case other => other
-      }
-      Project(newList, rPlan): LogicalPlan
+    val Seq(docId, score) = scored.output
+    val order = Seq(SortOrder(score, Descending), SortOrder(docId, Ascending))
+    val needed = refs.filterNot(a => scoreIds.contains(a.exprId)).map(_.name).distinct
+    // covered join-back (reference inverted_index_topk_include.test): when
+    // every projected column is the id or INCLUDEd, the k-row late
+    // materialization reads the narrow stored columnstore instead of the
+    // wide base table; a stale sidecar (text segments advanced since its
+    // build) joins the scan, never a silently-narrower columnstore
+    val covered = IndexCatalog.lookupFields(root).filter(fe =>
+      needed.forall(c => c == entry.idCol || fe.included.contains(c)) &&
+        FieldStore.textCoherent(spark, fe.dir))
+    // the join-back side, its id, and the value of each scan column
+    val (lookup, lookupId, column) = covered match {
+      case Some(fe) =>
+        val stored = Frames.planOf(FieldStore.stored(spark, fe.dir))
+        def attr(name: String): Attribute = stored.output.find(_.name == name).get
+        (stored, attr("doc_id"),
+          (a: AttributeReference) => if (a.exprId == idAttr.exprId) docId else attr(a.name))
+      case None => (lr, idAttr, (a: AttributeReference) => a)
     }
+    val joined = Join(topK(scored, k, order), lookup, Inner,
+      Some(EqualTo(docId, cast(lookupId, docId.dataType))), JoinHint.NONE)
+    // the join-back scrambles row order; the claim replaces a Sort, so
+    // re-establish score order
+    Project(reproject(outList, a => if (scoreIds.contains(a.exprId)) score else column(a)),
+      Sort(order, global = true, joined))
   }
 
   /** The index-only top-k: `Sort(score desc, doc_id)` and the limit over the
@@ -446,20 +413,29 @@ case class ClaimScoreTopK(spark: SparkSession) extends Rule[LogicalPlan] {
       outList: Seq[NamedExpression]): LogicalPlan = {
     val Seq(docId, score) = scored.output
     val limited = topK(scored, k, Seq(SortOrder(score, Descending), SortOrder(docId, Ascending)))
-    def subst(a: AttributeReference): Expression = {
-      val r = if (scoreIds.contains(a.exprId)) score else docId
-      // the index stores ids as its own integral type; cast back when the
-      // scan's id is narrower so output types are stable
-      if (r.dataType == a.dataType) r
-      else org.apache.spark.sql.catalyst.expressions.Cast(r, a.dataType)
-    }
-    Project(outList.map {
-      case a: AttributeReference => Alias(subst(a), a.name)(exprId = a.exprId)
-      case al @ Alias(c, n) =>
-        Alias(c.transform { case a: AttributeReference => subst(a) }, n)(exprId = al.exprId)
-      case other => other
-    }, limited)
+    Project(reproject(outList, a => if (scoreIds.contains(a.exprId)) score else docId), limited)
   }
+
+  /** `outList` over a claimed plan: every attribute reference becomes
+    * `subst` of it, cast back to its type (the index stores ids as its own
+    * integral type) under its own exprId; an attribute `subst` returns
+    * unchanged stays as it is. */
+  private def reproject(outList: Seq[NamedExpression],
+      subst: AttributeReference => Expression): Seq[NamedExpression] = {
+    def typed(a: AttributeReference): Expression = cast(subst(a), a.dataType)
+    outList.map {
+      case a: AttributeReference => typed(a) match {
+        case `a` => a
+        case r => Alias(r, a.name)(exprId = a.exprId)
+      }
+      case al @ Alias(c, n) =>
+        Alias(c.transformUp { case a: AttributeReference => typed(a) }, n)(exprId = al.exprId)
+      case other => other
+    }
+  }
+
+  private def cast(e: Expression, to: org.apache.spark.sql.types.DataType): Expression =
+    if (e.dataType == to) e else Cast(e, to)
 
   private def topK(plan: LogicalPlan, k: Int, order: Seq[SortOrder]): LogicalPlan =
     GlobalLimit(Literal(k), LocalLimit(Literal(k), Sort(order, global = true, plan)))
@@ -487,29 +463,22 @@ case class ClaimScoreTopK(spark: SparkSession) extends Rule[LogicalPlan] {
     // see scaladoc)
     val limited = topK(joined,
       k, Seq(SortOrder(scoreAttr, Descending), SortOrder(idAttr, Ascending)))
-    val newList = outList.map {
-      case a: AttributeReference if scoreIds.contains(a.exprId) =>
-        Alias(scoreAttr, a.name)(exprId = a.exprId)
-      case a: AttributeReference => a
-      case al @ Alias(c, n) =>
-        Alias(c.transform {
-          case a: AttributeReference if scoreIds.contains(a.exprId) => scoreAttr
-        }, n)(exprId = al.exprId)
-      case other => other
-    }
-    Project(newList, limited)
+    Project(reproject(outList, a => if (scoreIds.contains(a.exprId)) scoreAttr else a), limited)
   }
 
 }
 
 /** Claims score-threshold WHERE conjuncts — `bm25(col, 'q', 'dict') >= c`
   * (also `>`, and the mirrored literal-first forms) — into an index-driven
-  * semi-join. For bm25 the floor seeds the two-level WAND drive
-  * (InvertedIndex.bm25MinScore; reference min_score claim,
-  * duckdb_table_function.h:176-182): the scoring task keeps only docs of
-  * the necessary term set, computed from the term statistics it reads, so
-  * the claim itself reads nothing. Other scorers score their matched docs
-  * and filter. Non-claimable conjuncts stay behind as residual filters. */
+  * semi-join, built as plan nodes: the scored plan, a filter on the score
+  * and a left-semi join on the id. For a plain bm25 term bag the floor
+  * seeds the two-level WAND drive ([[InvertedIndex.bm25MinScorePlan]];
+  * reference min_score claim, duckdb_table_function.h:176-182): the scoring
+  * task keeps only docs of the necessary term set, computed from the term
+  * statistics it reads, so the claim itself reads nothing. Other scorers
+  * and TSQUERY-constructor queries score their matched docs
+  * ([[ScorerShapes.scoredPlan]]) and filter. Non-claimable conjuncts stay
+  * behind as residual filters. */
 case class ClaimScoreFilter(spark: SparkSession) extends Rule[LogicalPlan] {
 
   /** `(scorerUdf, threshold, strict)` for the four comparison forms. */
@@ -564,22 +533,22 @@ case class ClaimScoreFilter(spark: SparkSession) extends Rule[LogicalPlan] {
     val joined = claimable.foldLeft(child) {
       case (acc, (_, scorer, query, dict, params, c, strict, entry, idAttr)) =>
         val idx = IndexStore.load(spark, entry.segDir)
-        val matched = scorer match {
+        val floor = scorer match {
           // the WAND floor drives from per-term score upper bounds, which a
           // structured (boost/phrase/automaton) tree does not expose — those
           // score the folded tree and filter instead (default-param bm25
           // only: a non-default k1/b changes the per-term upper bounds)
-          case "bm25" if !graft.search.TsQueryCodec.isEncoded(query) &&
-              params.isEmpty =>
-            val m = idx.bm25MinScore(ScorerShapes.termsOf(query, dict), c)
-            if (strict) m.filter(col("_score") > c) else m
+          case "bm25" if !TsQueryCodec.isEncoded(query) && params.isEmpty =>
+            idx.bm25MinScorePlan(ScorerShapes.termsOf(query, dict), c)
           case other =>
-            ScorerShapes.scoredQuery(idx, other, query, dict, params)
-              .filter(if (strict) col("_score") > c else col("_score") >= c)
+            val scored = ScorerShapes.scoredPlan(idx, other, query, dict, params)
+            Filter(GreaterThanOrEqual(scored.output(1), Literal(c)), scored)
         }
-        val mPlan = matched.select(col("doc_id")).queryExecution.optimizedPlan
-        Join(acc, mPlan, LeftSemi,
-          Some(EqualTo(idAttr, mPlan.output.head)), JoinHint.NONE)
+        val matched =
+          if (strict) Filter(GreaterThan(floor.output(1), Literal(c)), floor) else floor
+        val docId = matched.output.head
+        Join(acc, Project(Seq(docId), matched), LeftSemi,
+          Some(EqualTo(idAttr, docId)), JoinHint.NONE)
     }
     val claimedSet = claimable.map(_._1).toSet
     parts.filterNot(claimedSet).reduceOption(CAnd(_, _))
@@ -713,18 +682,16 @@ case class ClaimScoreProject(spark: SparkSession) extends Rule[LogicalPlan] {
     val widened = resolved.map(_._3).distinct
       .foldLeft(child)((acc, id) => ScorerShapes.widenWithId(acc, id))
     if (!resolved.forall(r => widened.outputSet.contains(r._3))) return None
-    val zero = Literal(0.0, org.apache.spark.sql.types.DoubleType)
+    val zero = Literal(0.0, DoubleType)
     Some(resolved.foldLeft((widened, Map.empty[Shape, Expression])) {
       case ((acc, m), (shape @ (_, scorer, query, dict, params), entry, idAttr)) =>
-        val scoredPlan = ScorerShapes.scoredPlan(
+        val scored = ScorerShapes.scoredPlan(
           IndexStore.load(spark, entry.segDir), scorer, query, dict, params)
-        val Seq(docId, scoreAttr) = scoredPlan.output
-        val j = Join(acc, scoredPlan,
-          org.apache.spark.sql.catalyst.plans.LeftOuter,
-          Some(EqualTo(idAttr, docId)), JoinHint.NONE)
-        val scoreVal = org.apache.spark.sql.catalyst.expressions.Coalesce(
-          Seq(scoreAttr, zero))
-        (j, m + (shape -> scoreVal))
+        val j = Join(acc, scored, LeftOuter,
+          Some(EqualTo(idAttr, scored.output.head)), JoinHint.NONE)
+        // the join's own (nullable) score attribute: a non-nullable score
+        // expression would let the optimizer drop the coalesce
+        (j, m + (shape -> Coalesce(Seq(j.output.last, zero))))
     })
   }
 }

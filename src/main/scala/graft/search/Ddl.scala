@@ -1149,10 +1149,7 @@ object Ddl {
                 }
                 n
               }
-            } finally classified.queryExecution.logical.foreach {
-              case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
-              case _ => ()
-            }
+            } finally IndexStore.releaseCheckpoint(classified)
           spark.catalog.refreshByPath(e.dir)
           IndexStore.registerViews(spark, e.dir, name)
           IndexStore.registerStatsTables(spark, e.dir, name)

@@ -2,7 +2,11 @@ package graft.search
 
 import java.util.regex.Pattern
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Add, Alias, Coalesce, EqualTo, Expression, Literal, Multiply, NamedExpression}
+import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, JoinType, LeftAnti}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.util.StringUtils
+import org.apache.spark.sql.graft.Frames
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.analysis.Analyzer
@@ -182,15 +186,19 @@ object TermPredicates {
   }
 }
 
-/** Compiles a [[TsQuery]] to doc_id sets over an [[InvertedIndex]] — the
-  * Spark analogue of the reference's filter-tree build
-  * (search_filter_builder.cpp: irs::Or/And/Not at :505-531,:1135-1151).
+/** Compiles a [[TsQuery]] to doc_id sets and scores over an
+  * [[InvertedIndex]] — the Spark analogue of the reference's filter-tree
+  * build (search_filter_builder.cpp: irs::Or/And/Not at :505-531,
+  * :1135-1151).
   *
-  * Every tree is one leaf, [[MatchScan]]: a single task walks the tree over
-  * the snapshot's postings, with no shuffle. Expansion leaves (`Prefix`,
-  * `Wildcard`, `Regexp`, `TermRange`, `Fuzzy`, `NgramSim`, `PhrasePrefix`)
-  * expand the term dictionary inside that task with [[TermPredicates]],
-  * the predicates [[evalTokens]] applies to a row's tokens.
+  * Every match is one leaf, [[MatchScan]]: a single task walks the tree
+  * over the snapshot's postings, with no shuffle. Expansion leaves
+  * (`Prefix`, `Wildcard`, `Regexp`, `TermRange`, `Fuzzy`, `NgramSim`,
+  * `PhrasePrefix`) expand the term dictionary inside that task with
+  * [[TermPredicates]], the predicates [[evalTokens]] applies to a row's
+  * tokens. Every score ([[scoredPlan]]) is plan nodes over that leaf and
+  * the scoring leaf [[graft.index.TermBagScan]], whose task expands the
+  * scored multi-term leaves the same way.
   *
   * Negation scoping matches the reference: NOT inside a conjunction removes
   * docs from the positive base (never materializing a complement); a
@@ -200,85 +208,88 @@ object TsQueryExec {
 
   def matching(idx: InvertedIndex, q: TsQuery): DataFrame = MatchScan.frame(idx, q)
 
-  /** BM25 over a STRUCTURED query with boost folding — the reference's
-    * `BM25(...) WHERE body @@ (q ^ w)` surface (boost_score.test: "boost
-    * must scale the BM25 contribution of every query shape"). Semantics:
-    *  - Term: its bm25 contribution;
-    *  - positional leaves (Phrase/SlopPhrase/PhraseGap): the sum of their
-    *    terms' bm25 contributions over the leaf's MATCHING docs (the
-    *    PhraseQuery shape);
-    *  - multi-term leaves (Prefix/Wildcard/Regexp/TermRange): SUM of the
-    *    matched dictionary terms' bm25 contributions per doc
-    *    (MultiTermQuery Sum merge, automaton_utils.cpp:227-228,
-    *    prefix_filter.cpp:77);
-    *  - Fuzzy: MAX over matched terms of similarity × bm25 contribution
-    *    (levenshtein_filter.cpp:49-54,163-165);
-    *  - NgramSim/PhrasePrefix: constant score 1.0 per matching doc — boost
-    *    still scales it;
-    *  - OR: full-outer sum; AND: inner sum with NOTs as anti-joins;
-    *  - Boost(q, w): w × subtree score.
-    * Returns (doc_id, _score); every operator stays a doc_id-keyed
-    * join/agg over bucket-pruned postings — no corpus scan. */
+  /** BM25 over a structured query, `(doc_id, _score)`: [[scoredPlan]] as
+    * a frame. */
   def scoredBm25(idx: InvertedIndex, q: TsQuery): DataFrame =
-    scoredScorer(idx, "bm25", q)
+    Frames.ofRows(idx.postings.sparkSession, scoredPlan(idx, "bm25", q))
 
-  /** [[scoredBm25]] generalized by scorer — the reference folds boost and
-    * walks the same filter tree for every registered scorer (TfIdfScore
-    * carries boost identically, tfidf.cpp:89-95). Multi-term leaves need a
-    * per-scorer expansion kernel ([[InvertedIndex.scoreOverTerms]]: bm25 +
-    * tfidf); term/phrase legs dispatch through
-    * [[InvertedIndex.scoredTerms]]. */
-  def scoredScorer(idx: InvertedIndex, scorer: String, q: TsQuery,
-      params: Seq[Any] = Nil): DataFrame = q match {
-    case TsQuery.Boost(inner, w) =>
-      scoredScorer(idx, scorer, inner, params)
-        .select(col("doc_id"), (col("_score") * w).as("_score"))
-    case TsQuery.Term(t) => idx.scoredTerms(scorer, Seq(t), params)
-    case p @ TsQuery.Phrase(ts) =>
-      matching(idx, p).join(idx.scoredTerms(scorer, ts.distinct, params), "doc_id")
-        .select(col("doc_id"), col("_score"))
-    case p @ TsQuery.SlopPhrase(ts, _) =>
-      matching(idx, p).join(idx.scoredTerms(scorer, ts.distinct, params), "doc_id")
-        .select(col("doc_id"), col("_score"))
-    case p @ TsQuery.PhraseGap(ts, _) =>
-      matching(idx, p).join(idx.scoredTerms(scorer, ts.distinct, params), "doc_id")
-        .select(col("doc_id"), col("_score"))
-    case TsQuery.Or(qs) if qs.nonEmpty =>
-      qs.map(scoredScorer(idx, scorer, _, params)).reduce { (a, b) =>
-        a.select(col("doc_id"), col("_score").as("s1"))
-          .join(b.select(col("doc_id"), col("_score").as("s2")),
-            Seq("doc_id"), "full_outer")
-          .select(col("doc_id"),
-            (coalesce(col("s1"), lit(0.0)) + coalesce(col("s2"), lit(0.0))).as("_score"))
-      }
-    case TsQuery.And(qs) if qs.nonEmpty =>
-      val (negs, poss) = qs.partition(_.isInstanceOf[TsQuery.Not])
-      require(poss.nonEmpty, "scoredScorer: pure-negative conjunction has no score")
-      val pos = poss.map(scoredScorer(idx, scorer, _, params)).reduce { (a, b) =>
-        a.select(col("doc_id"), col("_score").as("s1"))
-          .join(b.select(col("doc_id"), col("_score").as("s2")), Seq("doc_id"))
-          .select(col("doc_id"), (col("s1") + col("s2")).as("_score"))
-      }
-      negs.foldLeft(pos) { (acc, n) =>
-        acc.join(matching(idx, n.asInstanceOf[TsQuery.Not].q),
-          Seq("doc_id"), "left_anti")
-      }
-    case TsQuery.Prefix(p) =>
-      idx.scoreOverTerms(idx.prefixTerms(p), scorer, params = params)
-    case TsQuery.Wildcard(p) =>
-      idx.scoreOverTerms(idx.wildcardTerms(p), scorer, params = params)
-    case TsQuery.Regexp(r) =>
-      idx.scoreOverTerms(idx.regexpTerms(r), scorer, params = params)
-    case TsQuery.TermRange(lo, hi, loInc, hiInc) =>
-      idx.scoreOverTerms(idx.rangeTerms(lo, hi, loInc, hiInc), scorer,
-        params = params)
-    case TsQuery.Fuzzy(t, d, tr, p) =>
-      idx.scoreOverTerms(
-        idx.fuzzyTerms(t, d, transpositions = tr, prefix = p), scorer,
-        mergeMax = true, params = params)
-    case other =>
-      matching(idx, other).select(col("doc_id"), lit(1.0).as("_score"))
+  /** A scorer over a STRUCTURED query with boost folding — the reference's
+    * `BM25(...) WHERE body @@ (q ^ w)` surface (boost_score.test: "boost
+    * must scale the BM25 contribution of every query shape"), which walks
+    * the same filter tree for every registered scorer (TfIdfScore carries
+    * boost identically, tfidf.cpp:89-95). The plan `(doc_id, _score)` is
+    * made of plan nodes over the two index leaves, so a claim rule splices
+    * it into a query as is:
+    *  - Term: the term-bag leaf's score ([[InvertedIndex.scoredTermsPlan]]);
+    *  - positional leaves (Phrase/SlopPhrase/PhraseGap): the [[MatchScan]]
+    *    leaf inner-joined to the term-bag score of the distinct terms (the
+    *    PhraseQuery shape);
+    *  - multi-term leaves (Prefix/Wildcard/Regexp/TermRange/Fuzzy): the
+    *    expansion leaf ([[InvertedIndex.scoredExpansionPlan]]), SUM of the
+    *    matched dictionary terms' contributions per doc (MultiTermQuery
+    *    Sum merge, automaton_utils.cpp:227-228, prefix_filter.cpp:77), MAX
+    *    of similarity × contribution for Fuzzy
+    *    (levenshtein_filter.cpp:49-54,163-165); only bm25 and tfidf score
+    *    them, other scorers raise;
+    *  - NgramSim/GramSim/PhrasePrefix and any other node: the [[MatchScan]]
+    *    leaf with a constant score of 1.0 per matching doc — boost still
+    *    scales it;
+    *  - OR: a full-outer join, scores coalesce-summed; AND: an inner join,
+    *    scores summed, and a left-anti join to a [[MatchScan]] leaf per NOT;
+    *  - Boost(q, w): a projection, w × subtree score. */
+  def scoredPlan(idx: InvertedIndex, scorer: String, q: TsQuery,
+      params: Seq[Any] = Nil): LogicalPlan = {
+    def scored(q: TsQuery): LogicalPlan = scoredPlan(idx, scorer, q, params)
+    def project(plan: LogicalPlan)(doc: NamedExpression, score: Expression): LogicalPlan =
+      Project(Seq(doc, Alias(score, "_score")()), plan)
+    q match {
+      case TsQuery.Boost(inner, w) =>
+        val p = scored(inner)
+        project(p)(p.output.head, Multiply(p.output(1), Literal(w)))
+      case TsQuery.Term(t) => idx.scoredTermsPlan(scorer, Seq(t), params)
+      case TsQuery.Phrase(ts) => phrase(idx, scorer, q, ts, params)
+      case TsQuery.SlopPhrase(ts, _) => phrase(idx, scorer, q, ts, params)
+      case TsQuery.PhraseGap(ts, _) => phrase(idx, scorer, q, ts, params)
+      case TsQuery.Or(qs) if qs.nonEmpty =>
+        qs.map(scored).reduce { (a, b) =>
+          val j = join(a, b, FullOuter)
+          val Seq(d1, s1, d2, s2) = j.output
+          val zero = Literal(0.0)
+          project(j)(Alias(Coalesce(Seq(d1, d2)), "doc_id")(),
+            Add(Coalesce(Seq(s1, zero)), Coalesce(Seq(s2, zero))))
+        }
+      case TsQuery.And(qs) if qs.nonEmpty =>
+        val (negs, poss) = qs.partition(_.isInstanceOf[TsQuery.Not])
+        require(poss.nonEmpty, "scoredPlan: pure-negative conjunction has no score")
+        val pos = poss.map(scored).reduce { (a, b) =>
+          val j = join(a, b, Inner)
+          val Seq(d1, s1, _, s2) = j.output
+          project(j)(d1, Add(s1, s2))
+        }
+        negs.foldLeft(pos) { (acc, n) =>
+          join(acc, MatchScan.leaf(idx, n.asInstanceOf[TsQuery.Not].q), LeftAnti)
+        }
+      case _: TsQuery.Prefix | _: TsQuery.Wildcard | _: TsQuery.Regexp |
+          _: TsQuery.TermRange | _: TsQuery.Fuzzy =>
+        idx.scoredExpansionPlan(scorer, q, params)
+      case other =>
+        val m = MatchScan.leaf(idx, other)
+        project(m)(m.output.head, Literal(1.0))
+    }
   }
+
+  /** A positional leaf's score: its matched docs joined to the term-bag
+    * score of its distinct terms. */
+  private def phrase(idx: InvertedIndex, scorer: String, q: TsQuery, ts: Seq[String],
+      params: Seq[Any]): LogicalPlan = {
+    val j = join(MatchScan.leaf(idx, q), idx.scoredTermsPlan(scorer, ts.distinct, params), Inner)
+    val Seq(matched, _, score) = j.output
+    Project(Seq(matched, score), j)
+  }
+
+  /** `l` joined to `r` on their first (`doc_id`) columns. */
+  private def join(l: LogicalPlan, r: LogicalPlan, kind: JoinType): Join =
+    Join(l, r, kind, Some(EqualTo(l.output.head, r.output.head)), JoinHint.NONE)
 
   /** Row-level TSQUERY evaluation over an analyzed token stream — the
     * un-indexed fallback matcher (the reference's row-eval path for

@@ -296,6 +296,35 @@ class ReaderSnapshotSpec extends AnyFunSuite {
     }
   }
 
+  test("a COMPACT releases the RDDs it persisted") {
+    ready
+    val t2 = s"${tbl}_cpersist"
+    run(spark, s"CREATE TABLE $t2(pk INTEGER PRIMARY KEY, body VARCHAR)")
+    run(spark, s"INSERT INTO $t2 SELECT pk, body FROM $tbl")
+    try {
+      run(spark, s"CREATE INDEX ${idx}_cpersist ON $t2 USING inverted(pk, body $dict)")
+      run(spark, s"DELETE FROM $t2 WHERE pk = 2")
+      run(spark, s"INSERT INTO $t2 VALUES (900, 'alpha zulu')")
+      run(spark, s"VACUUM (REFRESH_TABLE) $t2")
+      val segDir = IndexCatalog.textKeys.collectFirst {
+        case (root, "body", `dict`) if root.contains(t2) =>
+          IndexCatalog.lookupText(root, "body", dict).get.segDir
+      }.get
+      assert(graft.index.IndexStore.listSegments(spark, segDir).size >= 2)
+      val before = spark.sparkContext.getPersistentRDDs.size
+      run(spark, s"VACUUM (COMPACT_TABLE) $t2")
+      assert(graft.index.IndexStore.listSegments(spark, segDir).size == 1,
+        "the COMPACT merged the segments")
+      assert(run(spark, s"SELECT count(*) FROM ${idx}_cpersist WHERE ${m("'zulu'")}")
+        .head.getLong(0) == 1)
+      assert(spark.sparkContext.getPersistentRDDs.size == before,
+        spark.sparkContext.getPersistentRDDs.values.mkString("\n"))
+    } finally {
+      run(spark, s"DROP INDEX IF EXISTS ${idx}_cpersist")
+      run(spark, s"DROP TABLE IF EXISTS $t2")
+    }
+  }
+
   private def joins(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int =
     plan.collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.size
 
