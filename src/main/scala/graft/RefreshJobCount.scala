@@ -14,7 +14,10 @@ import org.apache.spark.sql.functions._
   * job each), of a warm claimed `ts_match` count and of one whose query
   * expands the term dictionary (the text-match leaf's count-only mode: one
   * job each), of a warm claimed phrase match and of a claimed bm25 top-k
-  * over a prefix constructor (`ts_starts_with`). Usage:
+  * over a prefix constructor (`ts_starts_with`). Last, the search
+  * workload's set-up on 2,000 docs of the slice: the `INSERT … SELECT`
+  * into a pg table with a primary key, and one pg `CREATE INDEX … USING
+  * inverted(pk, body <dict>, emb ivf)` over its text and vectors. Usage:
   * runMain graft.RefreshJobCount [sfDir]
   */
 object RefreshJobCount {
@@ -111,6 +114,28 @@ object RefreshJobCount {
 
     spark.sql("DROP SEARCH INDEX jobcount_topk_idx")
     spark.sql("DROP SEARCH INDEX jobcount_idx")
+
+    // the search set-up: a pg table of (pk, body, emb) rows, then one
+    // CREATE INDEX building the text segment and the IVF lists
+    graft.catalog.CatalogDdl.registerFunctions(spark)
+    val embs = Tables.embeddings(spark, dir)
+    val dim = embs.select(size(col("embedding"))).head().getInt(0)
+    docs.filter(col("doc_id") < 2000)
+      .join(embs, col("doc_id") === col("vec_id"))
+      .select(col("doc_id").cast("int").as("pk"), col("text").as("body"),
+        col("embedding").as("emb"))
+      .createOrReplaceTempView("jobcount_pg_src")
+    spark.sql("DROP INDEX IF EXISTS jobcount_pg_idx")
+    spark.sql("DROP TABLE IF EXISTS jobcount_pg")
+    spark.sql(s"CREATE TABLE jobcount_pg(pk INTEGER PRIMARY KEY, body VARCHAR, emb FLOAT[$dim])")
+    counted("insert")(spark.sql("INSERT INTO jobcount_pg SELECT pk, body, emb FROM jobcount_pg_src"))
+    spark.sql("CREATE TEXT SEARCH DICTIONARY jobcount_dict (template = 'text', " +
+      "locale = 'en_US.UTF-8', case = 'lower', stemming = false, frequency = true, position = true)")
+    counted("create-index")(spark.sql("CREATE INDEX jobcount_pg_idx ON jobcount_pg " +
+      "USING inverted(pk, body jobcount_dict, emb ivf (metric = 'l2'))"))
+    spark.sql("DROP INDEX jobcount_pg_idx")
+    spark.sql("DROP TABLE jobcount_pg")
+    spark.sql("DROP TEXT SEARCH DICTIONARY jobcount_dict")
     spark.stop()
   }
 }

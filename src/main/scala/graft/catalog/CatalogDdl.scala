@@ -1177,7 +1177,7 @@ object CatalogDdl {
     }
     Txn.touchTable(t.qname, t.dir)
     val n = df.count()
-    TableStore.append(spark, t.dir, df)
+    TableStore.append(spark, t.dir, df, n)
     refresh(spark, t)
     countResult(spark, n)
   }
@@ -1384,10 +1384,19 @@ object CatalogDdl {
       }
     }: _*)
 
-    // NOT NULL and CHECK hold regardless of conflict handling
-    t.columns.filter(_.notNull).foreach { c =>
-      if (df.filter(col(c.name).isNull).limit(1).count() > 0) throw analysisErr(
-        s"""null value in column "${c.name}" of relation "${t.qname}" violates not-null constraint""")
+    // one aggregate answers the row count, every NOT NULL check and, for a
+    // plain insert, every in-batch duplicate-key check (count − count
+    // DISTINCT: both skip NULL keys, as pg's unique check does); the errors
+    // still surface in pg's order — NOT NULL, CHECK, enum, duplicate key
+    val notNull = t.columns.filter(_.notNull)
+    val keys =
+      if (conflict.isEmpty) t.columns.filter(c => c.primaryKey || c.unique) else Nil
+    val stats = df.agg(count(lit(1)),
+      notNull.map(c => count(when(col(c.name).isNull, 1))) ++
+        keys.map(c => count(col(c.name)) - countDistinct(col(c.name))): _*).head()
+    notNull.indices.find(i => stats.getLong(1 + i) > 0).foreach { i =>
+      throw analysisErr(s"""null value in column "${notNull(i).name}" of relation """ +
+        s""""${t.qname}" violates not-null constraint""")
     }
     enforceChecks(t, df)
     enforceEnums(t, df)
@@ -1395,17 +1404,18 @@ object CatalogDdl {
     Txn.touchTable(t.qname, t.dir)
     val n = conflict match {
       case None =>
-        // plain insert: any key clash is the pg duplicate-key error
-        t.columns.filter(c => c.primaryKey || c.unique).foreach { c =>
-          val dupIn = df.filter(col(c.name).isNotNull).groupBy(col(c.name))
-            .count().filter(col("count") > 1).limit(1).count()
-          val existing = TableStore.read(spark, t.dir, sparkSchema(t))
-          val clash = df.join(existing, Seq(c.name), "left_semi").limit(1).count()
-          if (dupIn > 0 || clash > 0) throw analysisErr(
+        // plain insert: any key clash is the pg duplicate-key error; an
+        // empty table has nothing to clash with
+        val hasRows = TableStore.liveFiles(t.dir).nonEmpty
+        keys.indices.foreach { i =>
+          val c = keys(i)
+          def clash = df.join(TableStore.read(spark, t.dir, sparkSchema(t)),
+            Seq(c.name), "left_semi").limit(1).count() > 0
+          if (stats.getLong(1 + notNull.size + i) > 0 || (hasRows && clash)) throw analysisErr(
             s"""duplicate key value violates unique constraint "${t.name}_${c.name}_key"""")
         }
-        val inserted = df.count()
-        TableStore.append(spark, t.dir, df)
+        val inserted = stats.getLong(0)
+        TableStore.append(spark, t.dir, df, inserted)
         inserted
       case Some(spec) =>
         if (returningCtx.value.isDefined) throw analysisErr(
@@ -1513,7 +1523,7 @@ object CatalogDdl {
         nUpdated
     }
     val inserted = toInsert.count()
-    if (inserted > 0) TableStore.append(spark, t.dir, toInsert)
+    TableStore.append(spark, t.dir, toInsert, inserted)
     inserted + updated
   }
 

@@ -70,15 +70,19 @@ object TableStore {
     * shared path-keyed status cache — a commit that just retired files
     * must not leave this read serving dead paths. */
   def read(spark: SparkSession, dir: String, schema: StructType): DataFrame = {
-    val cur = currentDir(dir)
-    val f = fs(cur)
-    val files =
-      if (!f.exists(cur)) Seq.empty
-      else f.listStatus(cur).map(_.getPath.toString)
-        .filter(_.endsWith(".parquet")).toSeq.sorted
+    val files = liveFiles(dir)
     if (files.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     else spark.read.schema(schema).parquet(files: _*)
+  }
+
+  /** The live parquet files, from a fresh listing of `current/`. */
+  def liveFiles(dir: String): Seq[String] = {
+    val cur = currentDir(dir)
+    val f = fs(cur)
+    if (!f.exists(cur)) Seq.empty
+    else f.listStatus(cur).map(_.getPath.toString)
+      .filter(_.endsWith(".parquet")).toSeq.sorted
   }
 
   def version(dir: String): Long = {
@@ -178,9 +182,10 @@ object TableStore {
     n
   }
 
-  /** Append rows (INSERT). Returns the new version. */
-  def append(spark: SparkSession, dir: String, df: DataFrame): Long =
-    if (df.isEmpty) version(dir)
+  /** Append the `rows` rows of `df` (INSERT), a count the caller already
+    * has. Returns the new version. */
+  def append(spark: SparkSession, dir: String, df: DataFrame, rows: Long): Long =
+    if (rows == 0) version(dir)
     else commit(dir, stage(spark, dir, df), Nil)
 
   /** Replace the whole live set (CTAS backfill, ALTER TABLE rewrites). */

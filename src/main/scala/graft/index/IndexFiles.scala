@@ -1,13 +1,16 @@
 package graft.index
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
-import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.{FileFormat, FileStatusCache, HadoopFsRelation,
+  InMemoryFileIndex, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.graft.Frames
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -32,6 +35,50 @@ object IndexFile {
         else Some(dir.values.get(bucketAt, rel.partitionSchema(bucketAt).dataType).toString.toInt)
       dir.files.map(f => bucket -> IndexFile(f.getPath.toString, f.getLen, f.getModificationTime))
     }
+  }
+
+  /** The data files under `root` (or `root` itself, a file), listed as a
+    * Spark file scan lists them: recursively, in each directory's listing
+    * order, without the names Spark skips (`_SUCCESS`, `.crc`, …). */
+  def leafFiles(conf: Configuration, root: String): Seq[FileStatus] = {
+    val p = new Path(root)
+    val fs = p.getFileSystem(conf)
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filterNot(c => Frames.skippedPathName(c.getPath.getName))
+        .flatMap(leaves(_))
+    leaves(fs.getFileStatus(p))
+  }
+
+  /** The parquet relation `spark.read.parquet(roots: _*)` resolves, opened
+    * without a Spark job: the leaf files come from a driver-side Hadoop FS
+    * listing, in each directory's listing order and with the names Spark
+    * skips left out, and the data schema from the footer of the first data
+    * file in path order, the one Spark's inference reads. Partition
+    * directories (`bucket=K`, `cluster=K`) are inferred from the listing as
+    * Spark infers them. A root without a data file fails as Spark's read
+    * does, with `UNABLE_TO_INFER_SCHEMA`. */
+  def relation(spark: SparkSession, roots: Seq[String]): HadoopFsRelation = {
+    val conf = spark.sessionState.newHadoopConf()
+    val listed = roots.map { r =>
+      val p = new Path(r)
+      val q = p.getFileSystem(conf).makeQualified(p)
+      q -> leafFiles(conf, q.toString).toArray
+    }
+    val first = listed.flatMap(_._2).sortBy(_.getPath.toString).headOption.getOrElse(
+      throw new AnalysisException("UNABLE_TO_INFER_SCHEMA", Map("format" -> "Parquet")))
+    val dataSchema = Frames.parquetDataSchema(spark, first)
+    val cache = new FileStatusCache {
+      private val byRoot = scala.collection.concurrent.TrieMap(listed: _*)
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] = byRoot.get(path)
+      override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit =
+        byRoot.put(path, leafFiles)
+      override def invalidateAll(): Unit = byRoot.clear()
+    }
+    val index = new InMemoryFileIndex(spark, listed.map(_._1), Map.empty, None, cache)
+    HadoopFsRelation(index, index.partitionSchema, dataSchema, None,
+      new ParquetFileFormat, Map.empty)(spark)
   }
 }
 

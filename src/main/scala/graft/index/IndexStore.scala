@@ -7,7 +7,7 @@ import scala.util.hashing.MurmurHash3
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -51,11 +51,13 @@ import org.apache.spark.sql.types.StructType
   * `_DELETES_P` listing (each tombstone generation and the `_FLOOR` file, with their
   * modification times). Computing the key is a few metadata calls and
   * launches no Spark job. The snapshot holds only session-independent
-  * state: each segment part's resolved `HadoopFsRelation` (its file listing
-  * and inferred schema), the `meta.json` totals, and the tombstone
-  * relation plus its count/dlen scalars. A call whose key matches does no
-  * file listing, no schema inference and no Spark job, so warm claims plan
-  * without Spark jobs; any write that changes the key (append, delete,
+  * state: each segment part's `HadoopFsRelation` (its file listing and
+  * schema, opened from a driver-side listing and one parquet footer by
+  * [[IndexFile.relation]], so a fresh load runs no job either), the
+  * `meta.json` totals, and the tombstone relation plus its count/dlen
+  * scalars. A call whose key matches does no file listing, no footer read
+  * and no Spark job, so warm claims plan without Spark jobs; any write
+  * that changes the key (append, delete,
   * compact, DROP + re-CREATE) makes the next call reload. Segments are
   * immutable once the manifest names them, so the key is exact. DataFrames
   * are never cached: every call rebinds copies of the cached relations to
@@ -178,10 +180,6 @@ object IndexStore {
     ensure(spark, graft.Tables.documents(spark, sfDir),
       s"$sfDir-documents", "doc_id", "text", analyzerName)
 
-  /** Write one immutable segment. Postings and termdict land
-    * bucket-partitioned; termdict/docstats are derived from the (persisted)
-    * postings so the analyzer pass is never repeated; postings are
-    * unpersisted once the segment is durable. */
   /** Per-index segment compression codec, persisted in `<dir>/_OPTIONS`
     * (the reference's `compression` index option,
     * inverted_index_compression_option.test / zstd_multipage): every
@@ -201,35 +199,45 @@ object IndexStore {
     writeStringAtomic(spark, s"$dir/_OPTIONS", s"compression=${codec.toLowerCase}\n")
   }
 
+  /** Write one immutable segment: four writes and no other pass over the
+    * data. Postings and termdict land bucket-partitioned, hash-partitioned
+    * on `bucket` over the session's cores so that each bucket is exactly
+    * one file; termdict and docstats derive from the persisted postings of
+    * [[InvertedIndex.build]], so the analyzer runs once. The `meta.json`
+    * statistics come from the writes themselves: the postings and termdict
+    * row counts are observed on their writes, and a fresh build's numDocs
+    * and sumDl on the tokenizing scan its postings write runs. Postings are
+    * unpersisted once the segment is durable. */
   def writeSegment(idx: InvertedIndex, dir: String, segNo: Int,
       docIds: Option[DataFrame] = None): Unit = {
     val seg = f"$dir/seg=$segNo%05d"
     val spark = idx.postings.sparkSession
     val codec = segmentCompression(spark, dir)
-    def w(df: DataFrame): org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] = {
-      // an EMPTY frame (index created before the table has rows — the pg
-      // corpus' CREATE INDEX → INSERT → VACUUM order) can plan 0
-      // partitions, and a 0-partition parquet write emits NO part files,
-      // so the next read of the segment dies with UNABLE_TO_INFER_SCHEMA
-      // and the index is poisoned forever. One empty partition writes a
-      // schema-bearing footer file instead.
-      val out = if (df.queryExecution.toRdd.getNumPartitions == 0)
-        df.repartition(1) else df
-      val base = out.write.mode("overwrite")
-      codec.fold(base)(c => base.option("compression", c))
+    val conf = spark.sessionState.newHadoopConf()
+    // writes `df` to `path` and returns its observed row count
+    def write(df: DataFrame, path: String, bucketed: Boolean): () => Long = {
+      val (observed, rows) = Observed.count(df)
+      val w =
+        if (!bucketed) observed.write
+        else observed.repartition(spark.sparkContext.defaultParallelism, col("bucket"))
+          .write.partitionBy("bucket")
+      codec.fold(w)(c => w.option("compression", c)).mode("overwrite").parquet(path)
+      // no rows leave no data file (a partitioned write creates no dirs, a
+      // plan of 0 partitions no part file), and a part without one cannot
+      // be opened: write one schema-bearing empty file instead, `bucket` a
+      // plain data column — bucket pruning is irrelevant with zero rows
+      if (IndexFile.leafFiles(conf, path).isEmpty) {
+        val empty = spark.createDataFrame(
+          spark.sparkContext.parallelize(Seq.empty[org.apache.spark.sql.Row], 1), df.schema)
+        codec.fold(empty.write)(c => empty.write.option("compression", c))
+          .mode("overwrite").parquet(path)
+      }
+      rows
     }
-    // partitionBy writes NOTHING for empty data (no partition values → no
-    // dirs, not even a footer file) — an empty build keeps `bucket` as a
-    // plain data column so the dir stays readable; bucket pruning is
-    // irrelevant with zero rows
-    def wBucketed(df0: DataFrame, path: String): Unit = {
-      val df = df0.withColumn("bucket", bucketUdf(col("term")))
-      if (df.isEmpty) w(df).parquet(path)
-      else w(df.repartition(col("bucket"))).partitionBy("bucket").parquet(path)
-    }
-    wBucketed(idx.postings, s"$seg/postings")
-    wBucketed(idx.termDict, s"$seg/termdict")
-    w(idx.docStats).parquet(s"$seg/docstats")
+    def bucketed(df: DataFrame) = df.withColumn("bucket", bucketUdf(col("term")))
+    val postRows = write(bucketed(idx.postings), s"$seg/postings", bucketed = true)
+    val termRows = write(bucketed(idx.termDict), s"$seg/termdict", bucketed = true)
+    write(idx.docStats, s"$seg/docstats", bucketed = false)
     // full doc-id manifest: includes zero-token (empty/stopword-only) docs,
     // which docstats cannot carry — REFRESH anti-joins against this so such
     // docs don't look "new" on every run (segment-count drift, round-7
@@ -245,15 +253,13 @@ object IndexStore {
       if (manifest.columns.contains("content_fp"))
         manifest.select(col("doc_id"), col("content_fp")).dropDuplicates("doc_id")
       else manifest.select(col("doc_id")).distinct()
-    w(manOut).parquet(s"$seg/docids")
+    write(manOut, s"$seg/docids", bucketed = false)
     // per-segment statistics persisted with the segment (the reference's
     // hyperloglog index option, inverted_index_hyperloglog_option.test):
     // postings row count + term NDV (termdict rows ARE the distinct terms)
     // feed the CBO via registerStatsTables without ever re-scanning
-    val postRows = idx.postings.count()
-    val termRows = idx.termDict.count()
     writeStringAtomic(spark, s"$seg/meta.json",
-      s"""{"numDocs":${idx.numDocs},"sumDl":${idx.sumDl},"postingsRows":$postRows,"termRows":$termRows}""")
+      s"""{"numDocs":${idx.numDocs},"sumDl":${idx.sumDl},"postingsRows":${postRows()},"termRows":${termRows()}}""")
     idx.postings.unpersist()
   }
 
@@ -313,8 +319,8 @@ object IndexStore {
   def allDocIds(spark: SparkSession, dir: String): DataFrame =
     listSegments(spark, dir).map { s =>
       val p = s"$dir/$s/docids"
-      if (exists(spark, p)) spark.read.parquet(p).select(col("doc_id"))
-      else spark.read.parquet(s"$dir/$s/docstats").select(col("doc_id"))
+      if (exists(spark, p)) readParquet(spark, p).select(col("doc_id"))
+      else readParquet(spark, s"$dir/$s/docstats").select(col("doc_id"))
     }.reduce(_ unionByName _).distinct()
 
   /** `(doc_id, content_fp)` of every LIVE indexed doc: per-segment doc-id
@@ -330,8 +336,8 @@ object IndexStore {
       val segNo = s.stripPrefix("seg=").toInt
       val p = s"$dir/$s/docids"
       val base =
-        if (exists(spark, p)) spark.read.parquet(p)
-        else spark.read.parquet(s"$dir/$s/docstats").select(col("doc_id"))
+        if (exists(spark, p)) readParquet(spark, p)
+        else readParquet(spark, s"$dir/$s/docstats").select(col("doc_id"))
       val withFp =
         if (base.columns.contains("content_fp"))
           base.select(col("doc_id"), col("content_fp").cast("long"))
@@ -433,14 +439,16 @@ object IndexStore {
       // registered in the session catalog directly: `CREATE TABLE … (path
       // '<glob>')` resolves the relation, and Spark's metadata-directory
       // probe of a glob path logs a FileNotFoundException stack trace. The
-      // schema comes from one segment, which holds every segment's layout.
+      // schema is the first segment's data schema from the reader
+      // snapshot: one segment holds every segment's layout, and the
+      // snapshot opened it without a job.
       spark.sessionState.catalog.createTable(CatalogTable(
         identifier = TableIdentifier(name),
         tableType = CatalogTableType.EXTERNAL,
         storage = CatalogStorageFormat.empty.copy(
           locationUri = Some(CatalogUtils.stringToURI(s"$dir/seg=*/$sub")),
           properties = options),
-        schema = spark.read.options(options).parquet(s"$dir/${segs.head}/$sub").schema,
+        schema = current(spark, dir).parts(sub).head.dataSchema,
         provider = Some("parquet"),
         stats = Some(stats)), ignoreIfExists = false)
     }
@@ -573,20 +581,14 @@ object IndexStore {
     val nextGen: Int = (gens :+ (floor - 1)).max + 1
     val hasDeletes: Boolean = liveGens.nonEmpty
 
-    private def resolve(paths: String*): HadoopFsRelation =
-      spark.read.parquet(paths: _*).queryExecution.analyzed
-        .collectFirst { case lr: LogicalRelation => lr.relation }
-        .collect { case h: HadoopFsRelation => h }
-        .getOrElse(throw new IllegalStateException(s"not a parquet file relation: $paths"))
-
     /** part name → one relation per segment, in `segs` order. */
     lazy val parts: Map[String, Seq[HadoopFsRelation]] =
       Seq("postings", "termdict", "docstats")
-        .map(p => p -> segs.map(s => resolve(s"$dir/$s/$p"))).toMap
+        .map(p => p -> segs.map(s => IndexFile.relation(spark, Seq(s"$dir/$s/$p")))).toMap
 
     private lazy val genRel: Option[HadoopFsRelation] =
       if (liveGens.isEmpty) None
-      else Some(resolve(liveGens.map(g => s"$dir/_DELETES_P/gen=$g"): _*))
+      else Some(IndexFile.relation(spark, liveGens.map(g => s"$dir/_DELETES_P/gen=$g")))
 
     /** All live tombstones (doc_id, dlen, max_seg) over `s`: the parquet
       * generations at or above the floor. */
@@ -622,6 +624,11 @@ object IndexStore {
 
   private def rebind(spark: SparkSession, rel: HadoopFsRelation): DataFrame =
     spark.baseRelationToDataFrame(rel.copy()(spark))
+
+  /** `spark.read.parquet(paths: _*)` opened without a Spark job — see
+    * [[IndexFile.relation]]. */
+  private[graft] def readParquet(spark: SparkSession, paths: String*): DataFrame =
+    rebind(spark, IndexFile.relation(spark, paths))
 
   private def stampOf(spark: SparkSession, dir: String): Option[Stamp] = {
     val f = fs(spark, dir)
@@ -700,13 +707,9 @@ object IndexStore {
           .agg(count(lit(1)).as("df"), sum(col("tf")).as("ctf"),
             max(col("tf")).as("max_tf"))
     InvertedIndex(postings, termDict, docStats,
-      snap.numDocs - snap.deleted._1, snap.sumDl - snap.deleted._2, Some(snap.files))
-  }
-
-  /** Releases the blocks a `localCheckpoint`ed frame persisted. */
-  def releaseCheckpoint(df: DataFrame): Unit = df.queryExecution.logical.foreach {
-    case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
-    case _ => ()
+      new InvertedIndex.Totals(() =>
+        (snap.numDocs - snap.deleted._1, snap.sumDl - snap.deleted._2)),
+      Some(snap.files))
   }
 
   /** Compaction (the reference's background compaction task,
@@ -720,15 +723,13 @@ object IndexStore {
   def compact(spark: SparkSession, dir: String): Unit = Metrics.timed(dir, "consolidation") {
     val snap = current(spark, dir)
     val merged = read(spark, snap)
-    // the surviving doc-id manifest (with content fingerprints) must be
-    // captured BEFORE the manifest repoints — the merged segment's docids
-    // would otherwise fall back to docstats, losing zero-token docs and
-    // every fingerprint (REFRESH would then re-add the zero-token docs and
-    // lose update detection after any compaction). Checkpointed so the
-    // frame doesn't lazily re-read segment dirs cleanup may later remove.
-    // Its blocks are released once the merged segment is written, or has
-    // failed to be.
-    val manifest = liveDocFps(spark, dir).localCheckpoint(true)
+    // the surviving doc-id manifest (with content fingerprints) goes into
+    // the merged segment — its docids would otherwise fall back to
+    // docstats, losing zero-token docs and every fingerprint (REFRESH would
+    // then re-add the zero-token docs and lose update detection after any
+    // compaction). The segment write reads it before the manifest repoints
+    // and before any cleanup can remove the segments it reads.
+    val manifest = liveDocFps(spark, dir)
     val next = snap.segs
       .map(_.stripPrefix("seg=").toInt).foldLeft(-1)(math.max) + 1
     // merged postings/docstats come pre-bucketed/pre-merged from load();
@@ -737,9 +738,8 @@ object IndexStore {
       merged.postings.drop("bucket"),
       merged.termDict.drop("bucket"),
       merged.docStats,
-      merged.numDocs, merged.sumDl)
-    try writeSegment(rebuilt, dir, next, Some(manifest))
-    finally releaseCheckpoint(manifest)
+      merged.totals)
+    writeSegment(rebuilt, dir, next, Some(manifest))
     writeStringAtomic(spark, s"$dir/_SEGMENTS", f"seg=$next%05d\n")
     // the merged segment was written deletes-applied; retire its tombstones
     // AFTER the swap (a crash in between leaves deletes that now anti-join

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project
 import org.apache.spark.sql.graft.Frames
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import scala.concurrent.duration._
 import graft.analysis.AnalyzerRegistry
 import graft.search.TsQuery
 
@@ -52,9 +53,14 @@ final case class InvertedIndex(
     postings: DataFrame,
     termDict: DataFrame,
     docStats: DataFrame,
-    numDocs: Long,
-    sumDl: Long,
+    totals: InvertedIndex.Totals,
     files: Option[IndexFiles] = None) {
+
+  /** Every doc of the collection, zero-token docs included. */
+  def numDocs: Long = totals.numDocs
+
+  /** Σ doc length over the collection. */
+  def sumDl: Long = totals.sumDl
 
   /** Exact collection average doc length; derived so segment merges stay
     * lossless (sumDl adds, avgDl wouldn't). */
@@ -315,6 +321,15 @@ object InvertedIndex {
     (byUb, (0 to byUb.size).find(tailSum(_) < minScore).getOrElse(byUb.size))
   }
 
+  /** numDocs and sumDl of an index, resolved on first use: known for a
+    * loaded index (segment metadata), observed on the tokenizing scan for
+    * a fresh [[build]]. */
+  final class Totals(resolve: () => (Long, Long)) {
+    private lazy val value = resolve()
+    def numDocs: Long = value._1
+    def sumDl: Long = value._2
+  }
+
   /** Build the index in ONE analyzer pass: analyze → posexplode →
     * groupBy(doc, term) → postings; termDict and docStats both derive from
     * postings (dlen = Σ tf), so the tokenizer UDF runs exactly once —
@@ -323,10 +338,13 @@ object InvertedIndex {
     * `withPositions` (phrase support) — the reference's per-field `position`
     * feature toggle (/root/reference/server/pg/tokenizer_options.h:243-245).
     *
-    * numDocs counts ALL docs (parquet metadata count — zero-token docs are
-    * part of the collection for avgdl, matching the reference's per-segment
-    * doc count); docStats carries only docs with ≥1 token, which is the set
-    * that can ever match a query.
+    * numDocs counts ALL docs (zero-token docs are part of the collection
+    * for avgdl, matching the reference's per-segment doc count) and sumDl
+    * every token; both are aggregates observed on the tokenizing scan, so
+    * the first action over the postings — the segment write — reports them
+    * and no pass of their own runs. An index used before any action over it
+    * materializes its postings once to learn them. docStats carries only
+    * docs with ≥1 token, which is the set that can ever match a query.
     */
   def build(docs: DataFrame, idCol: String, textCol: String,
       analyzerName: String = "whitespace",
@@ -334,8 +352,11 @@ object InvertedIndex {
     val analyzer = AnalyzerRegistry.get(analyzerName)
     val tokenize = udf((s: String) => analyzer.tokens(s))
 
-    val exploded = docs
-      .select(col(idCol).as("doc_id"), posexplode(tokenize(col(textCol))).as(Seq("pos", "term")))
+    val scan = docs.select(col(idCol).as("doc_id"), tokenize(col(textCol)).as("tokens"))
+    val totalsOf = Seq(count(lit(1)), coalesce(sum(size(col("tokens")).cast("long")), lit(0L)))
+    val (scanned, observed) = Observed(scan, totalsOf.head, totalsOf.tail: _*)
+    val exploded = scanned
+      .select(col("doc_id"), posexplode(col("tokens")).as(Seq("pos", "term")))
 
     val postings = {
       val base = exploded.groupBy(col("term"), col("doc_id"))
@@ -352,9 +373,16 @@ object InvertedIndex {
     val docStats = postings.groupBy(col("doc_id"))
       .agg(sum(col("tf")).cast("int").as("dlen"))
 
-    val numDocs = docs.count() // parquet metadata count — no tokenize
-    val stats = docStats.agg(sum(col("dlen").cast("long"))).head()
-    val sumDl = if (stats.isNullAt(0)) 0L else stats.getLong(0)
-    InvertedIndex(postings, termDict, docStats, numDocs, sumDl)
+    val totals = new Totals(() => {
+      // the report of an action that ran arrives within moments; without
+      // one, materializing the postings reports the totals
+      if (!(Frames.materialized(postings) && Observed.reports(observed, 5.seconds)))
+        postings.count()
+      // a corpus without a single token leaves the tokenizing stage empty,
+      // and adaptive execution drops it with its observation: count then
+      val r = Observed.result(observed).getOrElse(scan.agg(totalsOf.head, totalsOf.tail: _*).head())
+      (r.getLong(0), r.getLong(1))
+    })
+    InvertedIndex(postings, termDict, docStats, totals)
   }
 }

@@ -4,8 +4,6 @@ import java.nio.charset.StandardCharsets
 import scala.collection.concurrent.TrieMap
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Cast, In, Literal, SortOrder, UnaryMinus}
@@ -20,7 +18,8 @@ import graft.functions.{InnerProductExpr, L2SqrDistanceExpr, VectorFunctions}
   * Spark-native analogue of the reference's faiss-backed IVF
   * (/root/reference/libs/iresearch/include/iresearch/formats/ivf/clustering.cpp;
   * probe planning /root/reference/server/connector/optimizer/iresearch_plan.cpp:546-621):
-  * MLlib KMeans plays the coarse quantizer, vectors are stored
+  * Lloyd's k-means on a bounded driver-side sample plays the coarse
+  * quantizer (see [[IvfIndex.build]]), vectors are stored
   * directory-partitioned by their nearest-centroid id, and a query probes a
   * subset of inverted lists — reading only their fraction of the data via
   * partition pruning, then exact distance + per-partition top-k + global O(k)
@@ -276,96 +275,121 @@ object IvfIndex {
   private def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Per-cluster max L2 distance to the centroid + per-cluster counts — one
-    * distributed pass, 2k numbers back to the driver. */
-  private def clusterMeta(assigned: DataFrame,
-      centroids: Array[Array[Double]]): (Array[Double], Array[Long]) = {
-    val spark = assigned.sparkSession
-    import spark.implicits._
-    val cents = centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cluster", "cvec")
-    val dist = sqrt(aggregate(zip_with(col("embedding"), col("cvec"),
-      (x, y) => (x.cast("double") - y) * (x.cast("double") - y)), lit(0.0), _ + _))
-    val byCluster = assigned.join(broadcast(cents), "cluster")
-      .select(col("cluster"), dist.as("d"))
-      .groupBy("cluster").agg(max(col("d")).as("r"), count(lit(1)).as("n"))
-      .collect().map(r => r.getAs[Number](0).intValue -> ((r.getDouble(1), r.getLong(2)))).toMap
-    (Array.tabulate(centroids.length)(i => byCluster.get(i).map(_._1).getOrElse(0.0)),
-     Array.tabulate(centroids.length)(i => byCluster.get(i).map(_._2).getOrElse(0L)))
+  /** faiss's `max_points_per_centroid`: the coarse quantizer trains on at
+    * most this many sampled points per list (ivf/clustering.cpp). */
+  val MaxPointsPerList = 256
+
+  /** Lloyd's iterations of the coarse quantizer. */
+  private val TrainIters = 20
+
+  /** The `(key, point)` pairs with the `cap` smallest keys among those
+    * added, and the count of all pairs added: a mergeable bounded sample.
+    * Equal keys order by the point's coordinates, so the kept set is a
+    * function of the input alone. */
+  private final class Sample(cap: Int) extends Serializable {
+    var n = 0L
+    private val heap = new java.util.PriorityQueue[(Long, Array[Double])](Sample.Order.reverse)
+    def add(p: (Long, Array[Double])): this.type = {
+      n += 1
+      if (heap.size < cap) heap.add(p)
+      else if (Sample.Order.lt(p, heap.peek)) { heap.poll(); heap.add(p) }
+      this
+    }
+    def merge(o: Sample): this.type = {
+      val total = n + o.n
+      o.heap.forEach(p => add(p))
+      n = total
+      this
+    }
+    /** The kept points in key order. */
+    def points: Array[Array[Double]] =
+      heap.toArray(Array.empty[(Long, Array[Double])]).sorted(Sample.Order).map(_._2)
   }
 
-  /** KMeans training + assignment. Deterministic for a fixed seed and input.
-    * k ≤ 0 selects autoK(count). */
+  private object Sample {
+    object Order extends Ordering[(Long, Array[Double])] {
+      def compare(a: (Long, Array[Double]), b: (Long, Array[Double])): Int =
+        if (a._1 != b._1) java.lang.Long.compare(a._1, b._1)
+        else java.util.Arrays.compare(a._2, b._2)
+    }
+  }
+
+  /** Trains the coarse quantizer and assigns every vector. Deterministic
+    * for a fixed seed and input. k ≤ 0 selects autoK(count).
+    *
+    *  1. One job returns the vector count and a bounded sample: the
+    *     `MaxPointsPerList × k` vectors with the smallest seeded hash of
+    *     their id, faiss's bound on the points it trains on (the whole
+    *     corpus while it is smaller). Each task keeps its smallest keys and
+    *     the tasks' samples merge, so the sample does not depend on how the
+    *     input is partitioned.
+    *  2. Lloyd's iterations on the driver ([[Quantization.lloyd]], the
+    *     k-means the PQ codebooks train with) from k-means++ starting points
+    *     give the centroids. k is clamped to the sample's distinct vectors,
+    *     so the starting points are distinct and an all-duplicates corpus
+    *     gets one list at its mean.
+    *  3. One assignment pass, persisted, gives each vector its nearest
+    *     centroid; the per-list radii (max distance to the centroid) and
+    *     sizes are its aggregate, and [[ensure]]'s `cluster=` and
+    *     fingerprint writes read it. Rows with a NULL embedding are not
+    *     indexed. */
   def build(embs: DataFrame, idCol: String = "vec_id", embCol: String = "embedding",
       k: Int = 0, seed: Long = 42L): IvfIndex = {
     val feat = embs.select(col(idCol).as("vec_id"), col(embCol).as("embedding"))
-      .withColumn("features", array_to_vector(col("embedding")))
-    // KMeans cannot place more centers than DISTINCT points — Spark 4.1's
-    // block-mode aggregator AIOOBEs when init yields fewer centers than k
-    // (a 3-row table under autoK's floor of 4, ivf_rabitq.test §7; 1000
-    // duplicate rows, ivf_duplicate_vectors.test). One agg pass bounds k:
-    // exact row count + HLL distinct of the vector hash (near-exact at the
-    // small cardinalities where the bound can bite, and the 4096 cap makes
-    // a few-% HLL error irrelevant at large ones).
-    val statsRow = feat.agg(
-      count(lit(1)), approx_count_distinct(xxhash64(col("embedding")))).head()
-    val n = statsRow.getLong(0)
-    if (n == 0) {
-      // EMPTY input: the persisted form round-trips through readFrom as
-      // zero centroids (the empty-line filter), so the in-memory index must
-      // agree — Array(zero-length centroid) passed centroids.nonEmpty
-      // guards and crashed later in Pq.train / ensureKind (r18 ADVICE #4).
-      // Checked BEFORE the nDistinct branch: the clamped HLL estimate (1)
-      // never clears the margin, so an empty build used to pay a pointless
-      // exact countDistinct job first (r19 ADVICE #4).
-      return IvfIndex(
-        feat.select(col("vec_id"), col("embedding"), lit(0).as("cluster")),
-        Array.empty, Array.empty, Array.empty)
+      .filter(col("embedding").isNotNull)
+    val cap = MaxPointsPerList * (if (k > 0) k else autoK(Long.MaxValue))
+    val sample = feat
+      .select(xxhash64(lit(seed), col("vec_id")), col("embedding").cast("array<double>"))
+      .queryExecution.toRdd
+      .treeAggregate(new Sample(cap))(
+        (s, r) => s.add((r.getLong(0), r.getArray(1).toDoubleArray())), _ merge _)
+    val n = sample.n
+    if (n == 0)
+      // the persisted form of an empty index reads back as zero centroids
+      return IvfIndex(feat.withColumn("cluster", lit(0)), Array.empty, Array.empty, Array.empty)
+    val kBound = if (k > 0) k else autoK(n)
+    val pts = sample.points.take(MaxPointsPerList * kBound)
+    val kk = math.min(kBound, pts.map(_.toSeq).distinct.length)
+    val centroids = Quantization.lloyd(pts,
+      Quantization.kmeansPlusPlus(pts, kk, new scala.util.Random(seed)), TrainIters)
+    val nearest = udf { (v: Seq[Double]) =>
+      var best = 0; var bestD = Double.MaxValue; var j = 0
+      while (j < centroids.length) {
+        val c = centroids(j)
+        var s = 0.0; var d = 0
+        while (d < c.length) { val x = v(d) - c(d); s += x * x; d += 1 }
+        if (s < bestD) { bestD = s; best = j }
+        j += 1
+      }
+      (best, math.sqrt(bestD))
     }
-    val kBound = if (k > 0) k.toLong else autoK(n).toLong
-    val nDistinctHll = math.max(1L, statsRow.getLong(1))
-    // HLL (default 5% rsd) can OVERestimate, so a clamp taken from it can
-    // still exceed the true distinct count when the two are close (e.g.
-    // 980 distinct, HLL says 1010, autoK=1000 → k=1000 > 980 — the same
-    // AIOOBE again; r18 ADVICE #3). When the estimate is near enough to
-    // the bound that its error could matter, pay one exact distinct count
-    // — cheap precisely in that low-cardinality regime. Counting DISTINCT
-    // HASHES can only undercount true distinct vectors, which keeps the
-    // clamp on the safe side. The 2x trust margin (was 1.2x — r19 ADVICE
-    // #2) covers HLL's probabilistic tail: at 5% rsd a >2x overestimate is
-    // a >20-sigma event, while the exact count it triggers stays cheap
-    // (only fires when the estimate itself is ≤ 2 × min(k, 4096)).
-    val nDistinct =
-      if (nDistinctHll > kBound * 2) nDistinctHll
-      else feat.select(
-        countDistinct(xxhash64(col("embedding")))).head().getLong(0)
-    val kk = math.max(1L, math.min(kBound, math.min(n, nDistinct))).toInt
-    if (kk <= 1) {
-      // Spark KMeans rejects k=1 outright — an all-duplicates (or
-      // single-vector) corpus trains NOTHING and gets one cluster with the
-      // per-dimension mean as its centroid (the reference's no-progress
-      // split guard "slices the group ... without training",
-      // ivf_duplicate_vectors.test). Probe pruning is vacuous at one list;
-      // search is exhaustive over the segment, hence exact.
-      val assigned = feat
-        .select(col("vec_id"), col("embedding"), lit(0).as("cluster"))
-      val dimMeans = feat
-        .select(posexplode(col("embedding")).as(Seq("d", "x")))
-        .groupBy("d").agg(avg(col("x").cast("double")).as("m"))
-        .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-      val centroid = Array.tabulate(
-        if (dimMeans.isEmpty) 0 else dimMeans.keys.max + 1)(i => dimMeans(i))
-      val (radii, sizes) = clusterMeta(assigned, Array(centroid))
-      return IvfIndex(assigned, Array(centroid), radii, sizes)
-    }
-    val model = new KMeans().setK(kk).setSeed(seed).setMaxIter(20)
-      .setFeaturesCol("features").fit(feat)
-    val assigned = model.transform(feat)
-      .select(col("vec_id"), col("embedding"), col("prediction").as("cluster"))
-    val centroids = model.clusterCenters.map(_.toArray)
-    val (radii, sizes) = clusterMeta(assigned, centroids)
-    IvfIndex(assigned, centroids, radii, sizes)
+    val assigned = feat
+      .withColumn("_a", nearest(col("embedding").cast("array<double>")))
+      .select(col("vec_id"), col("embedding"), col("_a._1").as("cluster"),
+        col("_a._2").as("d"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (radii, sizes) = assigned.select(col("cluster"), col("d")).queryExecution.toRdd
+      .aggregate((new Array[Double](kk), new Array[Long](kk)))(
+        { case ((r, s), row) =>
+          val c = row.getInt(0)
+          r(c) = math.max(r(c), row.getDouble(1)); s(c) += 1
+          (r, s)
+        },
+        { case ((r1, s1), (r2, s2)) =>
+          for (c <- 0 until kk) { r1(c) = math.max(r1(c), r2(c)); s1(c) += s2(c) }
+          (r1, s1)
+        })
+    IvfIndex(assigned.drop("d"), centroids, radii, sizes)
   }
+
+  /** Writes `assigned` (`vec_id, embedding, cluster`) as the
+    * `cluster=`-partitioned vector store at `path`: hash-partitioned on
+    * `cluster` over the session's cores, so each list is exactly one
+    * file. */
+  private def writeVectors(assigned: DataFrame, path: String, mode: String): Unit =
+    assigned.select(col("vec_id"), col("embedding"), col("cluster"))
+      .repartition(assigned.sparkSession.sparkContext.defaultParallelism, col("cluster"))
+      .write.mode(mode).partitionBy("cluster").parquet(path)
 
   /** Canonical on-disk location for an ensured index. */
   def dirFor(cacheKey: String, k: Int = 0): String = {
@@ -379,7 +403,7 @@ object IvfIndex {
 
   /** Whether an ensured index is loadable WITHOUT a build — in the JVM
     * cache or durable on disk. Claim rules check this before [[ensure]]:
-    * planning must never run a KMeans job inside `transformUp` (a missing
+    * planning must never run a training job inside `transformUp` (a missing
     * artifact fails the claim and the query keeps its exact sort). */
   def available(spark: SparkSession, cacheKey: String, k: Int = 0): Boolean = {
     val dir = dirFor(cacheKey, k)
@@ -391,7 +415,7 @@ object IvfIndex {
     * keeps index snapshots alive across compactions rather than rebuilding,
     * inverted_index_storage.h:267-270): NEW vectors are assigned to the
     * EXISTING centroids in one broadcast-join pass (|delta| × k candidate
-    * rows, min_by per vector — no KMeans retrain), appended into the
+    * rows, min_by per vector — no retraining), appended into the
     * cluster-partitioned store, and the per-list radii/sizes are merged
     * with the delta's (max radius / summed count), which keeps the
     * ball-bound probe EXACT over the grown index.
@@ -459,9 +483,7 @@ object IvfIndex {
     writeAtomic(spark, s"$dir/_RADII", newRadii.mkString("\n"))
     writeAtomic(spark, s"$dir/_SIZES", newSizes.mkString("\n"))
     writeAtomic(spark, s"$dir/_TRAINED", trainedOn.toString)
-    assigned.select(col("vec_id"), col("embedding"), col("cluster"))
-      .repartition(col("cluster"))
-      .write.mode("append").partitionBy("cluster").parquet(s"$dir/vectors")
+    writeVectors(assigned, s"$dir/vectors", "append")
     // keep the fingerprint manifest covering the delta (vectors first, fps
     // second: a crash in between leaves `_FPS_N` behind the `_SIZES` total,
     // which the next syncedFps detects and re-derives — never a wrong
@@ -480,7 +502,7 @@ object IvfIndex {
       }
       if (prevN >= 0)
         writeAtomic(spark, s"$dir/_FPS_N", (prevN + added).toString)
-    } else writeFps(spark, dir)
+    } else writeFps(spark, dir, readVectors(spark, dir))
     assigned.unpersist()
     val total = sizes.sum + added
     if (total > trainedOn * (1.0 + driftRatio)) {
@@ -490,10 +512,9 @@ object IvfIndex {
       // at any point leaves either the old index intact (marker absent) or
       // a completed swap on the next recover() (marker present, every step
       // idempotent). No delete-then-rename window remains.
-      val all = spark.read.parquet(s"$dir/vectors").select("vec_id", "embedding")
-      val idx = build(all)
-      idx.assignments.repartition(col("cluster"))
-        .write.mode("overwrite").partitionBy("cluster").parquet(s"$dir/vectors_next")
+      val idx = build(readVectors(spark, dir).select("vec_id", "embedding"))
+      try writeVectors(idx.assignments, s"$dir/vectors_next", "overwrite")
+      finally idx.assignments.unpersist()
       writeAtomic(spark, s"$dir/_CENTROIDS.next",
         idx.centroids.map(_.mkString(",")).mkString("\n"))
       writeAtomic(spark, s"$dir/_RADII.next", idx.radii.mkString("\n"))
@@ -509,21 +530,25 @@ object IvfIndex {
     }
   }
 
-  /** (Re)derive the fingerprint manifest `(vec_id, fp=xxhash64(embedding))`
-    * from the stored vectors — one linear, shuffle-free pass. The manifest
-    * is metadata-scale (16 bytes/vector) beside the embedding corpus; it is
+  /** Writes the fingerprint manifest `(vec_id, fp=xxhash64(embedding))` of
+    * `vectors` — the stored vectors, or the assignment a build writes them
+    * from — in one linear, shuffle-free pass. The manifest is
+    * metadata-scale (16 bytes/vector) beside the embedding corpus; it is
     * what REFRESH reads instead of the stored embeddings. `_FPS_N` records
-    * its row count so the sync check stays a driver file read, not a job,
-    * and `_FPS_SCHEMA` its schema, so opening it infers nothing. */
-  def writeFps(spark: SparkSession, dir: String): Unit = {
-    val fps = spark.read.parquet(s"$dir/vectors")
-      .select(col("vec_id"), xxhash64(col("embedding")).as("fp"))
+    * its row count, observed on the write, so the sync check stays a
+    * driver file read, not a job, and `_FPS_SCHEMA` its schema, so opening
+    * it infers nothing. */
+  def writeFps(spark: SparkSession, dir: String, vectors: DataFrame): Unit = {
+    val (fps, rows) = Observed.count(
+      vectors.select(col("vec_id"), xxhash64(col("embedding")).as("fp")))
     fps.write.mode("overwrite").parquet(s"$dir/fps")
-    val schema = fps.schema
-    writeAtomic(spark, s"$dir/_FPS_SCHEMA", schema.json)
-    writeAtomic(spark, s"$dir/_FPS_N",
-      spark.read.schema(schema).parquet(s"$dir/fps").count().toString)
+    writeAtomic(spark, s"$dir/_FPS_SCHEMA", fps.schema.json)
+    writeAtomic(spark, s"$dir/_FPS_N", rows().toString)
   }
+
+  /** The stored vectors of the index at `dir`, opened without a job. */
+  private def readVectors(spark: SparkSession, dir: String): DataFrame =
+    IndexStore.readParquet(spark, s"$dir/vectors")
 
   /** The fingerprint manifest, self-healing: absent (pre-r19 artifact), of
     * unrecorded schema, or out of sync with the vector store (crash between
@@ -557,7 +582,7 @@ object IvfIndex {
         s"$dir (_FPS_N=${fpsN.getOrElse("absent")} vs _SIZES total=" +
         s"${storedN.getOrElse("absent")}, schema ${if (schema.isEmpty) "absent" else "recorded"}): " +
         s"re-deriving manifest and reconciling _SIZES from the vector store")
-      writeFps(spark, dir)
+      writeFps(spark, dir, readVectors(spark, dir))
       // Reconcile `_SIZES` from the store itself (r19 ADVICE #1): append()
       // writes _SIZES BEFORE the vectors parquet append (crash-safety order
       // — radii/sizes must stay conservative upper bounds), so a crash in
@@ -572,7 +597,7 @@ object IvfIndex {
       // heals the same way.
       readAll("_CENTROIDS").foreach { centroids =>
         val lists = centroids.split("\n").count(_.nonEmpty)
-        val actual = spark.read.parquet(s"$dir/vectors")
+        val actual = readVectors(spark, dir)
           .groupBy(col("cluster")).count().collect()
           .map(r => r.getAs[Number](0).intValue -> r.getLong(1)).toMap
         writeAtomic(spark, s"$dir/_SIZES",
@@ -648,14 +673,15 @@ object IvfIndex {
       val marker = new Path(s"$dir/_CENTROIDS")
       if (!f.exists(marker)) {
         val idx = build(embs, k = k)
-        idx.assignments.repartition(col("cluster"))
-          .write.mode("overwrite").partitionBy("cluster").parquet(s"$dir/vectors")
-        // fingerprint manifest (ids + one xxhash64 per vector — the text
-        // path's r15 MANIFEST shape): REFRESH classifies removed/changed
-        // vectors by fp-diff against this instead of re-reading the stored
-        // embedding corpus. Written before the availability marker so a
-        // crash mid-build rebuilds both together.
-        writeFps(spark, dir)
+        try {
+          writeVectors(idx.assignments, s"$dir/vectors", "overwrite")
+          // fingerprint manifest (ids + one xxhash64 per vector — the text
+          // path's r15 MANIFEST shape): REFRESH classifies removed/changed
+          // vectors by fp-diff against this instead of re-reading the stored
+          // embedding corpus. Written before the availability marker so a
+          // crash mid-build rebuilds both together.
+          writeFps(spark, dir, idx.assignments)
+        } finally idx.assignments.unpersist()
         // atomic writes, _CENTROIDS (the availability marker) LAST: a crash
         // mid-build leaves no marker and the next ensure rebuilds over it
         writeAtomic(spark, s"$dir/_RADII", idx.radii.mkString("\n"))
@@ -688,6 +714,6 @@ object IvfIndex {
     val centroids = readLines(new Path(s"$dir/_CENTROIDS")).map(_.split(",").map(_.toDouble))
     val radii = readLines(new Path(s"$dir/_RADII")).map(_.toDouble)
     val sizes = readLines(new Path(s"$dir/_SIZES")).map(_.toLong)
-    IvfIndex(spark.read.parquet(s"$dir/vectors"), centroids, radii, sizes)
+    IvfIndex(readVectors(spark, dir), centroids, radii, sizes)
   }
 }

@@ -34,6 +34,93 @@ import org.apache.spark.sql.functions._
   */
 object Quantization {
 
+  /** Plain Lloyd's iterations on a driver-resident sample from the
+    * starting centroids `init`, which it updates in place: the k-means
+    * behind both the PQ codebooks and the IVF coarse quantizer
+    * ([[IvfIndex.build]]). A centroid whose cluster empties keeps its
+    * position (stable, deterministic). */
+  private[index] def lloyd(pts: Array[Array[Double]], init: Array[Array[Double]],
+      iters: Int): Array[Array[Double]] = {
+    val n = pts.length
+    val k = init.length
+    val d = if (k == 0) 0 else init.head.length
+    val cents = init
+    val assign = new Array[Int](n)
+    var it = 0
+    while (it < iters) {
+      var i = 0
+      while (i < n) {
+        var best = 0; var bestD = Double.MaxValue; var j = 0
+        while (j < k) {
+          var s = 0.0; var dd = 0
+          while (dd < d) { val df = pts(i)(dd) - cents(j)(dd); s += df * df; dd += 1 }
+          if (s < bestD) { bestD = s; best = j }
+          j += 1
+        }
+        assign(i) = best; i += 1
+      }
+      val sums = Array.fill(k, d)(0.0)
+      val counts = new Array[Int](k)
+      i = 0
+      while (i < n) {
+        val a = assign(i); counts(a) += 1
+        var dd = 0
+        while (dd < d) { sums(a)(dd) += pts(i)(dd); dd += 1 }
+        i += 1
+      }
+      var j = 0
+      while (j < k) {
+        if (counts(j) > 0) {
+          var dd = 0
+          while (dd < d) { cents(j)(dd) = sums(j)(dd) / counts(j); dd += 1 }
+        }
+        j += 1
+      }
+      it += 1
+    }
+    cents
+  }
+
+  /** k-means++ starting centroids for [[lloyd]]: the first a uniform pick
+    * of `pts`, each next one a pick weighted by its squared distance to the
+    * nearest centroid so far. Points already chosen weigh 0, so with at
+    * least `k` distinct points the `k` centroids are distinct. One pass over
+    * the sample per centroid: the cost of one Lloyd's iteration. */
+  private[index] def kmeansPlusPlus(pts: Array[Array[Double]], k: Int,
+      rnd: scala.util.Random): Array[Array[Double]] = {
+    val n = pts.length
+    val d = pts.head.length
+    val nearest = Array.fill(n)(Double.PositiveInfinity)
+    val cents = new Array[Array[Double]](k)
+    var next = rnd.nextInt(n)
+    var j = 0
+    while (j < k) {
+      val c = pts(next).clone
+      cents(j) = c
+      var total = 0.0
+      var i = 0
+      while (i < n) {
+        var s = 0.0; var dd = 0
+        while (dd < d) { val df = pts(i)(dd) - c(dd); s += df * df; dd += 1 }
+        if (s < nearest(i)) nearest(i) = s
+        total += nearest(i)
+        i += 1
+      }
+      j += 1
+      if (j < k) {
+        // the first point past a uniform draw of the cumulative weight
+        var target = rnd.nextDouble() * total
+        i = 0
+        while (i < n - 1 && (nearest(i) == 0.0 || target >= nearest(i))) {
+          target -= nearest(i); i += 1
+        }
+        while (nearest(i) == 0.0) i -= 1
+        next = i
+      }
+    }
+    cents
+  }
+
   /** SQ8 scalar quantizer: per-dimension affine [min, min+255·scale] grid.
     * Driver state: 2 × dim doubles. */
   final case class Sq8(mins: Array[Double], scales: Array[Double]) {
@@ -239,55 +326,11 @@ object Quantization {
       val rnd = new scala.util.Random(seed)
       val codebook = Array.tabulate(m) { sub =>
         val pts = sampled.map(r => java.util.Arrays.copyOfRange(r, sub * dsub, (sub + 1) * dsub))
-        lloyd(pts, ksub, rnd)
+        // random starting points (k-means++ would be nicer; a plain sample
+        // matches faiss's default well enough at ksub=16)
+        lloyd(pts, rnd.shuffle(pts.indices.toList).take(ksub).map(pts(_).clone).toArray, 15)
       }
       Pq(m, ksub, dsub, codebook)
-    }
-
-    /** Plain Lloyd's iterations on a driver-resident sample (≤ maxSample
-      * points × dsub doubles). Deterministic for a seeded Random. */
-    private def lloyd(pts: Array[Array[Double]], k: Int,
-        rnd: scala.util.Random, iters: Int = 15): Array[Array[Double]] = {
-      val n = pts.length
-      val d = pts.head.length
-      // distinct starting points when possible (k-means++ would be nicer;
-      // plain distinct-sample matches faiss's default well enough at ksub=16)
-      val init = rnd.shuffle(pts.indices.toList).take(k)
-      val cents = init.map(i => pts(i).clone).toArray
-      val assign = new Array[Int](n)
-      var it = 0
-      while (it < iters) {
-        var i = 0
-        while (i < n) {
-          var best = 0; var bestD = Double.MaxValue; var j = 0
-          while (j < k) {
-            var s = 0.0; var dd = 0
-            while (dd < d) { val df = pts(i)(dd) - cents(j)(dd); s += df * df; dd += 1 }
-            if (s < bestD) { bestD = s; best = j }
-            j += 1
-          }
-          assign(i) = best; i += 1
-        }
-        val sums = Array.fill(k, d)(0.0)
-        val counts = new Array[Int](k)
-        i = 0
-        while (i < n) {
-          val a = assign(i); counts(a) += 1
-          var dd = 0
-          while (dd < d) { sums(a)(dd) += pts(i)(dd); dd += 1 }
-          i += 1
-        }
-        var j = 0
-        while (j < k) {
-          if (counts(j) > 0) {
-            var dd = 0
-            while (dd < d) { cents(j)(dd) = sums(j)(dd) / counts(j); dd += 1 }
-          } // empty cluster: keep previous centroid (stable, deterministic)
-          j += 1
-        }
-        it += 1
-      }
-      cents
     }
 
     def deserialize(s: String): Pq = {

@@ -857,7 +857,7 @@ private[plans] object AnnShapes {
     * so the normal path is a JVM-cache hit or a metadata-only disk load; if
     * the on-disk artifact was deleted AFTER registration, the claim FAILS
     * (throw → caller's catch keeps the exact sort) rather than running a
-    * KMeans job inside the optimizer — plan time must never run jobs. */
+    * training job inside the optimizer — plan time must never run jobs. */
   def ivfFor(spark: SparkSession, root: String,
       e: IndexCatalog.AnnEntry): graft.index.IvfIndex = {
     // e.lists is part of the artifact directory name (dirFor's

@@ -220,12 +220,12 @@ object IndexCatalog {
     * sphere, so the L2 ball-bound probe stays exact for cosine order. */
   def annSource(spark: SparkSession, tableRoot: String, entry: AnnEntry): DataFrame = {
     import org.apache.spark.sql.functions._
-    val base = spark.read.parquet(tableRoot)
+    val base = graft.index.IndexStore.readParquet(spark, tableRoot)
       .select(col(entry.idCol).as("vec_id"), col(entry.embCol).as("embedding"))
       // NULL embeddings are never indexed (the reference's cs child stores
       // a zero-filled slot but the IVF build skips the row,
       // inverted_index_ivf_nulls.test) — otherwise they surface in top-k
-      // whenever k ≥ the non-NULL count, or crash KMeans' featurizer
+      // whenever k ≥ the non-NULL count
       .filter(col("embedding").isNotNull)
     if (entry.metric != "cosine") base
     else base
@@ -1094,16 +1094,15 @@ object Ddl {
           // ONE narrow classify frame (r19 fast path, extended to the change
           // path in r20 — VERDICT r19 #3): ids + fingerprints through a
           // single full-outer join — never the document text — labeling
-          // every non-identical id new/removed/changed. The eager
-          // localCheckpoint materializes that tiny (id, class) frame in ONE
-          // source scan; the reconciliation legs below read IT instead of
-          // re-scanning the fingerprinted source three more times
-          // (left_anti + left_semi + left_anti + a toAdd count = 4+ source
-          // evaluations per changeful REFRESH before r20). A no-change
-          // REFRESH stays one source scan; the delta counts come from the
-          // checkpointed frame for free.
+          // every non-identical id new/removed/changed. That tiny (id,
+          // class) frame is persisted and materialized by ONE action, which
+          // also reports the per-class counts (observed on the frame); the
+          // reconciliation legs below read it instead of re-scanning the
+          // fingerprinted source three more times (left_anti + left_semi +
+          // left_anti + a toAdd count = 4+ source evaluations per changeful
+          // REFRESH before r20). A no-change REFRESH stays one source scan.
           val srcNarrow = sourceF.select(fcol(idCol).as("__sid"), fcol("__fp"))
-          val classified = srcNarrow.join(existing,
+          val (observedCls, clsCounts) = graft.index.Observed(srcNarrow.join(existing,
               srcNarrow("__sid") === existing("doc_id"), "full_outer")
             .select(
               fcoalesce(fcol("__sid"), fcol("doc_id")).as("__cid"),
@@ -1114,17 +1113,23 @@ object Ddl {
                 .when(fcol("content_fp").isNotNull &&
                   fcol("content_fp") =!= fcol("__fp"), "changed")
                 .otherwise("same").as("__cls"))
-            .filter(fcol("__cls") =!= "same")
-            .localCheckpoint()
-          // the checkpoint's blocks are released once the delete and the
-          // append are done, or have failed
+            .filter(fcol("__cls") =!= "same"),
+            org.apache.spark.sql.functions.count(fwhen(fcol("__cls") === "new", 1)),
+            org.apache.spark.sql.functions.count(fwhen(fcol("__cls") === "changed", 1)),
+            org.apache.spark.sql.functions.count(fwhen(fcol("__cls") === "removed", 1)))
+          val classified = observedCls
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          // the persisted frame is released once the delete and the append
+          // are done, or have failed
           val added =
             try {
-              val counts = classified.groupBy(fcol("__cls")).count().collect()
-                .map(r => r.getString(0) -> r.getLong(1)).toMap
-              val (nNew, nChanged) =
-                (counts.getOrElse("new", 0L), counts.getOrElse("changed", 0L))
-              if (counts.isEmpty) 0L
+              // the one job that materializes the classify frame reports
+              // the per-class counts
+              classified.foreachPartition((_: Iterator[org.apache.spark.sql.Row]) => ())
+              // no report: the classify stage was empty and dropped
+              val Seq(nNew, nChanged, nRemoved) = graft.index.Observed.result(clsCounts)
+                .fold(Seq(0L, 0L, 0L))(r => Seq(r.getLong(0), r.getLong(1), r.getLong(2)))
+              if (nNew + nChanged + nRemoved == 0) 0L
               else {
                 // tombstones FIRST (they scope to the current newest segment),
                 // then the append lands the re-indexed content in a NEWER one
@@ -1134,7 +1139,7 @@ object Ddl {
                 val n = nNew + nChanged
                 if (n > 0) {
                   // the delta docs: ONE semi-join of the source against the
-                  // checkpointed id set (new ∪ changed) — the only other
+                  // persisted id set (new ∪ changed) — the only other
                   // source evaluation a changeful refresh pays before the
                   // delta re-index itself
                   val toAddIds = classified
@@ -1149,7 +1154,7 @@ object Ddl {
                 }
                 n
               }
-            } finally IndexStore.releaseCheckpoint(classified)
+            } finally classified.unpersist()
           spark.catalog.refreshByPath(e.dir)
           IndexStore.registerViews(spark, e.dir, name)
           IndexStore.registerStatsTables(spark, e.dir, name)

@@ -2,12 +2,15 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.types.StructType
 
 /** The engine entry points graft needs that Spark keeps package-private:
   * a DataFrame over a plan built from Catalyst nodes, so a plan that the
   * claim rules splice into a query and the DataFrame API answer come from
-  * one construction; and a frame's analyzed plan, so a claim rule can join
-  * a read (a parquet relation) without optimizing it. */
+  * one construction; a frame's analyzed plan, so a claim rule can join
+  * a read (a parquet relation) without optimizing it; whether a persisted
+  * frame's cache has been computed; and a file scan's listing and schema
+  * inference rules, so an index part opens without a Spark job. */
 object Frames {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
@@ -15,4 +18,30 @@ object Frames {
 
   def planOf(df: DataFrame): LogicalPlan =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].logicalPlan
+
+  /** Whether `df` is persisted and an action has computed its cache. */
+  def materialized(df: DataFrame): Boolean = {
+    val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    spark.sharedState.cacheManager.lookupCachedData(spark, planOf(df))
+      .exists(_.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded)
+  }
+
+  /** Whether a file scan's listing skips a file or directory of this name
+    * (`_SUCCESS`, `.crc` files, `_temporary`, …). */
+  def skippedPathName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
+  /** The data schema Spark's parquet inference reads from `file`'s footer:
+    * the Spark schema it was written with, else the converted parquet
+    * schema, every field nullable. */
+  def parquetDataSchema(spark: SparkSession, file: org.apache.hadoop.fs.FileStatus): StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+      ParquetToSparkSchemaConverter}
+    val footer = new org.apache.parquet.hadoop.Footer(file.getPath,
+      org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+        spark.sessionState.newHadoopConf(), file,
+        org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS))
+    ParquetFileFormat.readSchemaFromFooter(footer,
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)).asNullable
+  }
 }

@@ -28,6 +28,12 @@ class ReaderSnapshotSpec extends AnyFunSuite {
 
   private def run(s: SparkSession, sql: String): Array[Row] = s.sql(sql).collect()
 
+  /** Spark jobs of the changeful REFRESH below (65 when its classify frame
+    * was checkpointed and then grouped for the class counts, and each index
+    * part opened by Spark's schema inference): the frame is materialized
+    * by one job that also counts the classes. */
+  private val ChangefulRefreshJobs = 27
+
   private def insert(pks: Range): Unit = {
     spark.createDataFrame(spark.sparkContext.parallelize(
       pks.map(p => Row(p, body(p), emb(p))), 2), schema).createOrReplaceTempView(s"${tbl}_src")
@@ -292,6 +298,30 @@ class ReaderSnapshotSpec extends AnyFunSuite {
         spark.sparkContext.getPersistentRDDs.values.mkString("\n"))
     } finally {
       run(spark, s"DROP INDEX IF EXISTS ${idx}_persist")
+      run(spark, s"DROP TABLE IF EXISTS $t2")
+    }
+  }
+
+  test("a changeful REFRESH classifies in one job and leaves no RDD persisted") {
+    ready
+    val t2 = s"${tbl}_classify"
+    run(spark, s"CREATE TABLE $t2(pk INTEGER PRIMARY KEY, body VARCHAR)")
+    run(spark, s"INSERT INTO $t2 SELECT pk, body FROM $tbl")
+    try {
+      run(spark, s"CREATE INDEX ${idx}_classify ON $t2 USING inverted(pk, body $dict)")
+      run(spark, s"DELETE FROM $t2 WHERE pk = 3")
+      run(spark, s"INSERT INTO $t2 VALUES (901, 'alpha yankee')")
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val (_, jobs) = RefreshJobCount.jobsIn(spark, "refresh")(
+        run(spark, s"VACUUM (REFRESH_TABLE) $t2"))
+      info(s"changeful REFRESH: $jobs Spark jobs")
+      assert(run(spark, s"SELECT count(*) FROM ${idx}_classify WHERE ${m("'yankee'")}")
+        .head.getLong(0) == 1, "the REFRESH changed the index")
+      assert(jobs <= ChangefulRefreshJobs, s"$jobs jobs")
+      assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+        spark.sparkContext.getPersistentRDDs.values.mkString("\n"))
+    } finally {
+      run(spark, s"DROP INDEX IF EXISTS ${idx}_classify")
       run(spark, s"DROP TABLE IF EXISTS $t2")
     }
   }
