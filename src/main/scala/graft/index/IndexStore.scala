@@ -199,14 +199,17 @@ object IndexStore {
     writeStringAtomic(spark, s"$dir/_OPTIONS", s"compression=${codec.toLowerCase}\n")
   }
 
-  /** Write one immutable segment: four writes and no other pass over the
-    * data. Postings and termdict land bucket-partitioned, hash-partitioned
-    * on `bucket` over the session's cores so that each bucket is exactly
-    * one file; termdict and docstats derive from the persisted postings of
-    * [[InvertedIndex.build]], so the analyzer runs once. The `meta.json`
-    * statistics come from the writes themselves: the postings and termdict
-    * row counts are observed on their writes, and a fresh build's numDocs
-    * and sumDl on the tokenizing scan its postings write runs. Postings are
+  /** Write one immutable segment: four writes and, for a fresh build, the
+    * count of its source. Postings and termdict land bucket-partitioned,
+    * hash-partitioned on `bucket` over the session's cores so that each
+    * bucket is exactly one file; termdict and docstats derive from the
+    * persisted postings of [[InvertedIndex.build]], so the analyzer runs
+    * once. The `meta.json` statistics other than numDocs come from the
+    * writes themselves: the postings and termdict row counts, and sumDl as
+    * the docstats' Σ dlen, are aggregates observed in each write's final
+    * stage. That stage is a result stage, whose tasks Spark counts once
+    * each however often they run (an observation below a shuffle counts
+    * every run of a retried or speculative map task). Postings are
     * unpersisted once the segment is durable. */
   def writeSegment(idx: InvertedIndex, dir: String, segNo: Int,
       docIds: Option[DataFrame] = None): Unit = {
@@ -214,13 +217,8 @@ object IndexStore {
     val spark = idx.postings.sparkSession
     val codec = segmentCompression(spark, dir)
     val conf = spark.sessionState.newHadoopConf()
-    // writes `df` to `path` and returns its observed row count
-    def write(df: DataFrame, path: String, bucketed: Boolean): () => Long = {
-      val (observed, rows) = Observed.count(df)
-      val w =
-        if (!bucketed) observed.write
-        else observed.repartition(spark.sparkContext.defaultParallelism, col("bucket"))
-          .write.partitionBy("bucket")
+    def write(df: DataFrame, path: String, partitioned: Boolean): Unit = {
+      val w = if (partitioned) df.write.partitionBy("bucket") else df.write
       codec.fold(w)(c => w.option("compression", c)).mode("overwrite").parquet(path)
       // no rows leave no data file (a partitioned write creates no dirs, a
       // plan of 0 partitions no part file), and a part without one cannot
@@ -232,12 +230,18 @@ object IndexStore {
         codec.fold(empty.write)(c => empty.write.option("compression", c))
           .mode("overwrite").parquet(path)
       }
-      rows
     }
-    def bucketed(df: DataFrame) = df.withColumn("bucket", bucketUdf(col("term")))
-    val postRows = write(bucketed(idx.postings), s"$seg/postings", bucketed = true)
-    val termRows = write(bucketed(idx.termDict), s"$seg/termdict", bucketed = true)
-    write(idx.docStats, s"$seg/docstats", bucketed = false)
+    // `df` bucketed and hash-partitioned on the bucket, its rows counted in
+    // the partitions the write consumes
+    def bucketed(df: DataFrame): (DataFrame, () => Long) =
+      Observed.count(df.withColumn("bucket", bucketUdf(col("term")))
+        .repartition(spark.sparkContext.defaultParallelism, col("bucket")))
+    val (postings, postRows) = bucketed(idx.postings)
+    write(postings, s"$seg/postings", partitioned = true)
+    val (termDict, termRows) = bucketed(idx.termDict)
+    write(termDict, s"$seg/termdict", partitioned = true)
+    val (docStats, sumDl) = Observed(idx.docStats, coalesce(sum(col("dlen").cast("long")), lit(0L)))
+    write(docStats, s"$seg/docstats", partitioned = false)
     // full doc-id manifest: includes zero-token (empty/stopword-only) docs,
     // which docstats cannot carry — REFRESH anti-joins against this so such
     // docs don't look "new" on every run (segment-count drift, round-7
@@ -253,13 +257,14 @@ object IndexStore {
       if (manifest.columns.contains("content_fp"))
         manifest.select(col("doc_id"), col("content_fp")).dropDuplicates("doc_id")
       else manifest.select(col("doc_id")).distinct()
-    write(manOut, s"$seg/docids", bucketed = false)
+    write(manOut, s"$seg/docids", partitioned = false)
     // per-segment statistics persisted with the segment (the reference's
     // hyperloglog index option, inverted_index_hyperloglog_option.test):
     // postings row count + term NDV (termdict rows ARE the distinct terms)
     // feed the CBO via registerStatsTables without ever re-scanning
     writeStringAtomic(spark, s"$seg/meta.json",
-      s"""{"numDocs":${idx.numDocs},"sumDl":${idx.sumDl},"postingsRows":${postRows()},"termRows":${termRows()}}""")
+      s"""{"numDocs":${idx.numDocs},"sumDl":${Observed.result(sumDl).fold(0L)(_.getLong(0))},""" +
+        s""""postingsRows":${postRows()},"termRows":${termRows()}}""")
     idx.postings.unpersist()
   }
 
@@ -707,8 +712,8 @@ object IndexStore {
           .agg(count(lit(1)).as("df"), sum(col("tf")).as("ctf"),
             max(col("tf")).as("max_tf"))
     InvertedIndex(postings, termDict, docStats,
-      new InvertedIndex.Totals(() =>
-        (snap.numDocs - snap.deleted._1, snap.sumDl - snap.deleted._2)),
+      new InvertedIndex.Totals(() => snap.numDocs - snap.deleted._1,
+        () => snap.sumDl - snap.deleted._2),
       Some(snap.files))
   }
 

@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project
 import org.apache.spark.sql.graft.Frames
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import scala.concurrent.duration._
 import graft.analysis.AnalyzerRegistry
 import graft.search.TsQuery
 
@@ -321,13 +320,13 @@ object InvertedIndex {
     (byUb, (0 to byUb.size).find(tailSum(_) < minScore).getOrElse(byUb.size))
   }
 
-  /** numDocs and sumDl of an index, resolved on first use: known for a
-    * loaded index (segment metadata), observed on the tokenizing scan for
-    * a fresh [[build]]. */
-  final class Totals(resolve: () => (Long, Long)) {
-    private lazy val value = resolve()
-    def numDocs: Long = value._1
-    def sumDl: Long = value._2
+  /** numDocs and sumDl of an index, each resolved on first use: segment
+    * metadata for a loaded index, a pass over a fresh [[build]]'s source
+    * (numDocs) or postings (sumDl). [[IndexStore.writeSegment]] takes sumDl
+    * from the docstats it writes instead. */
+  final class Totals(numDocsOf: () => Long, sumDlOf: () => Long) {
+    lazy val numDocs: Long = numDocsOf()
+    lazy val sumDl: Long = sumDlOf()
   }
 
   /** Build the index in ONE analyzer pass: analyze → posexplode →
@@ -338,13 +337,12 @@ object InvertedIndex {
     * `withPositions` (phrase support) — the reference's per-field `position`
     * feature toggle (/root/reference/server/pg/tokenizer_options.h:243-245).
     *
-    * numDocs counts ALL docs (zero-token docs are part of the collection
-    * for avgdl, matching the reference's per-segment doc count) and sumDl
-    * every token; both are aggregates observed on the tokenizing scan, so
-    * the first action over the postings — the segment write — reports them
-    * and no pass of their own runs. An index used before any action over it
-    * materializes its postings once to learn them. docStats carries only
-    * docs with ≥1 token, which is the set that can ever match a query.
+    * numDocs counts ALL docs (an exact count of `docs`: zero-token docs
+    * are part of the collection for avgdl, matching the reference's
+    * per-segment doc count) and sumDl every token; each is one job, run
+    * when first asked for (a segment write asks only for numDocs).
+    * docStats carries only docs with ≥1 token, which is the set that can
+    * ever match a query.
     */
   def build(docs: DataFrame, idCol: String, textCol: String,
       analyzerName: String = "whitespace",
@@ -352,11 +350,8 @@ object InvertedIndex {
     val analyzer = AnalyzerRegistry.get(analyzerName)
     val tokenize = udf((s: String) => analyzer.tokens(s))
 
-    val scan = docs.select(col(idCol).as("doc_id"), tokenize(col(textCol)).as("tokens"))
-    val totalsOf = Seq(count(lit(1)), coalesce(sum(size(col("tokens")).cast("long")), lit(0L)))
-    val (scanned, observed) = Observed(scan, totalsOf.head, totalsOf.tail: _*)
-    val exploded = scanned
-      .select(col("doc_id"), posexplode(col("tokens")).as(Seq("pos", "term")))
+    val exploded = docs
+      .select(col(idCol).as("doc_id"), posexplode(tokenize(col(textCol))).as(Seq("pos", "term")))
 
     val postings = {
       val base = exploded.groupBy(col("term"), col("doc_id"))
@@ -373,16 +368,8 @@ object InvertedIndex {
     val docStats = postings.groupBy(col("doc_id"))
       .agg(sum(col("tf")).cast("int").as("dlen"))
 
-    val totals = new Totals(() => {
-      // the report of an action that ran arrives within moments; without
-      // one, materializing the postings reports the totals
-      if (!(Frames.materialized(postings) && Observed.reports(observed, 5.seconds)))
-        postings.count()
-      // a corpus without a single token leaves the tokenizing stage empty,
-      // and adaptive execution drops it with its observation: count then
-      val r = Observed.result(observed).getOrElse(scan.agg(totalsOf.head, totalsOf.tail: _*).head())
-      (r.getLong(0), r.getLong(1))
-    })
+    val totals = new Totals(() => docs.count(), // parquet metadata count — no tokenize
+      () => docStats.agg(coalesce(sum(col("dlen").cast("long")), lit(0L))).head().getLong(0))
     InvertedIndex(postings, termDict, docStats, totals)
   }
 }

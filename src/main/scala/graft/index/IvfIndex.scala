@@ -282,35 +282,49 @@ object IvfIndex {
   /** Lloyd's iterations of the coarse quantizer. */
   private val TrainIters = 20
 
-  /** The `(key, point)` pairs with the `cap` smallest keys among those
-    * added, and the count of all pairs added: a mergeable bounded sample.
-    * Equal keys order by the point's coordinates, so the kept set is a
-    * function of the input alone. */
-  private final class Sample(cap: Int) extends Serializable {
+  /** The share of `n` vectors the coarse quantizer trains on: at most
+    * [[MaxPointsPerList]] per list, at ≈√n lists (autoK unrounded) or `k`.
+    * Non-increasing in `n`, which [[Sample]] relies on. */
+  private def sampleRate(n: Long, k: Int): Double = {
+    val lists = if (k > 0) k.toDouble else math.max(4.0, math.min(4096.0, math.sqrt(n.toDouble)))
+    math.min(1.0, MaxPointsPerList * lists / n)
+  }
+
+  /** A mergeable threshold sample: of the `(key, point)` pairs added, with
+    * keys uniform in [0, 1), the ones whose key is below `sampleRate(n, k)`
+    * for the count `n` of all pairs added. A pair dropped at a partial
+    * count can never qualify at the larger final one, so each task and
+    * each merge holds about the final sample's size, and the result does
+    * not depend on how the input is partitioned. */
+  private final class Sample(k: Int) extends Serializable {
     var n = 0L
-    private val heap = new java.util.PriorityQueue[(Long, Array[Double])](Sample.Order.reverse)
-    def add(p: (Long, Array[Double])): this.type = {
+    private var kept = scala.collection.mutable.ArrayBuffer.empty[(Double, Array[Double])]
+    private var bound = 1.0
+    private def trim(): Unit = {
+      bound = sampleRate(n, k)
+      kept = kept.filter(_._1 < bound)
+    }
+    def add(key: Double, point: => Array[Double]): this.type = {
       n += 1
-      if (heap.size < cap) heap.add(p)
-      else if (Sample.Order.lt(p, heap.peek)) { heap.poll(); heap.add(p) }
+      if (key < bound) {
+        kept += key -> point
+        // amortized: the rate falls slowly, trim when the buffer doubles
+        if (kept.length > 2 * sampleRate(n, k) * n + 16) trim()
+      }
       this
     }
     def merge(o: Sample): this.type = {
-      val total = n + o.n
-      o.heap.forEach(p => add(p))
-      n = total
+      n += o.n
+      kept ++= o.kept
+      trim()
       this
     }
-    /** The kept points in key order. */
-    def points: Array[Array[Double]] =
-      heap.toArray(Array.empty[(Long, Array[Double])]).sorted(Sample.Order).map(_._2)
-  }
-
-  private object Sample {
-    object Order extends Ordering[(Long, Array[Double])] {
-      def compare(a: (Long, Array[Double]), b: (Long, Array[Double])): Int =
-        if (a._1 != b._1) java.lang.Long.compare(a._1, b._1)
-        else java.util.Arrays.compare(a._2, b._2)
+    /** The sampled points in key order (coordinates break ties). */
+    def points: Array[Array[Double]] = {
+      trim()
+      kept.sortWith { (a, b) =>
+        a._1 < b._1 || a._1 == b._1 && java.util.Arrays.compare(a._2, b._2) < 0
+      }.map(_._2).toArray
     }
   }
 
@@ -318,31 +332,34 @@ object IvfIndex {
     * for a fixed seed and input. k ≤ 0 selects autoK(count).
     *
     *  1. One job returns the vector count and a bounded sample: the
-    *     `MaxPointsPerList × k` vectors with the smallest seeded hash of
-    *     their id, faiss's bound on the points it trains on (the whole
-    *     corpus while it is smaller). Each task keeps its smallest keys and
-    *     the tasks' samples merge, so the sample does not depend on how the
-    *     input is partitioned.
+    *     vectors whose seeded hash of their id falls below
+    *     [[sampleRate]], about `MaxPointsPerList × k` of them (faiss's bound
+    *     on the points it trains on; the whole corpus while it is smaller).
     *  2. Lloyd's iterations on the driver ([[Quantization.lloyd]], the
-    *     k-means the PQ codebooks train with) from k-means++ starting points
-    *     give the centroids. k is clamped to the sample's distinct vectors,
-    *     so the starting points are distinct and an all-duplicates corpus
-    *     gets one list at its mean.
+    *     k-means the PQ codebooks train with) from k-means|| starting points
+    *     ([[Quantization.kmeansParallel]]) give the centroids. k is clamped
+    *     to the sample's distinct vectors, so the starting points are
+    *     distinct and an all-duplicates corpus gets one list at its mean.
     *  3. One assignment pass, persisted, gives each vector its nearest
     *     centroid; the per-list radii (max distance to the centroid) and
     *     sizes are its aggregate, and [[ensure]]'s `cluster=` and
     *     fingerprint writes read it. Rows with a NULL embedding are not
-    *     indexed. */
+    *     indexed.
+    *
+    * The sample and the training live on the driver, single-threaded:
+    * about 256·√n vectors against ≈√n lists, some 7,000 · n · dim
+    * multiply-adds for the k-means|| start and 20 iterations. */
   def build(embs: DataFrame, idCol: String = "vec_id", embCol: String = "embedding",
       k: Int = 0, seed: Long = 42L): IvfIndex = {
     val feat = embs.select(col(idCol).as("vec_id"), col(embCol).as("embedding"))
       .filter(col("embedding").isNotNull)
-    val cap = MaxPointsPerList * (if (k > 0) k else autoK(Long.MaxValue))
     val sample = feat
       .select(xxhash64(lit(seed), col("vec_id")), col("embedding").cast("array<double>"))
       .queryExecution.toRdd
-      .treeAggregate(new Sample(cap))(
-        (s, r) => s.add((r.getLong(0), r.getArray(1).toDoubleArray())), _ merge _)
+      .treeAggregate(new Sample(k))(
+        // the hash's top 53 bits as a uniform key in [0, 1)
+        (s, r) => s.add((r.getLong(0) >>> 11).toDouble / (1L << 53), r.getArray(1).toDoubleArray()),
+        _ merge _)
     val n = sample.n
     if (n == 0)
       // the persisted form of an empty index reads back as zero centroids
@@ -351,7 +368,7 @@ object IvfIndex {
     val pts = sample.points.take(MaxPointsPerList * kBound)
     val kk = math.min(kBound, pts.map(_.toSeq).distinct.length)
     val centroids = Quantization.lloyd(pts,
-      Quantization.kmeansPlusPlus(pts, kk, new scala.util.Random(seed)), TrainIters)
+      Quantization.kmeansParallel(pts, kk, new scala.util.Random(seed)), TrainIters)
     val nearest = udf { (v: Seq[Double]) =>
       var best = 0; var bestD = Double.MaxValue; var j = 0
       while (j < centroids.length) {

@@ -8,7 +8,13 @@ import org.apache.spark.sql.functions.{count => countOf, lit}
 
 /** Aggregates observed on a query that runs anyway ([[DataFrame.observe]]):
   * the index writers take their row counts and collection totals from the
-  * write that produces them, not from a second pass over the data. */
+  * write that produces them, not from a second pass over the data.
+  *
+  * An observation is exact only in an action's final stage: Spark applies
+  * each result task's metric updates once, but those of every run of a
+  * map task below a shuffle, which a stage retry or a speculative attempt
+  * repeats. Observe the frame the action consumes, above its last
+  * exchange. */
 private[graft] object Observed {
 
   /** `df` with `aggs` observed, and the observation. The first action over
@@ -18,10 +24,6 @@ private[graft] object Observed {
     val obs = Observation()
     (df.observe(obs, agg, aggs: _*), obs)
   }
-
-  /** Whether `obs` reports within `wait`. */
-  def reports(obs: Observation, wait: FiniteDuration): Boolean =
-    scala.util.Try(Await.ready(obs.future, wait)).isSuccess
 
   /** The observed row, once an action over the observed frame has run (the
     * report reaches the driver through the listener bus, after the action

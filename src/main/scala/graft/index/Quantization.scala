@@ -34,13 +34,33 @@ import org.apache.spark.sql.functions._
   */
 object Quantization {
 
+  /** Squared L2 distance. */
+  private def dist2(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0; var i = 0
+    while (i < a.length) { val df = a(i) - b(i); s += df * df; i += 1 }
+    s
+  }
+
+  /** The index of the centroid nearest `p` (the first on ties). */
+  private def nearestOf(p: Array[Double], cents: Array[Array[Double]]): Int = {
+    var best = 0; var bestD = Double.MaxValue; var j = 0
+    while (j < cents.length) {
+      val s = dist2(p, cents(j))
+      if (s < bestD) { bestD = s; best = j }
+      j += 1
+    }
+    best
+  }
+
   /** Plain Lloyd's iterations on a driver-resident sample from the
     * starting centroids `init`, which it updates in place: the k-means
     * behind both the PQ codebooks and the IVF coarse quantizer
-    * ([[IvfIndex.build]]). A centroid whose cluster empties keeps its
-    * position (stable, deterministic). */
+    * ([[IvfIndex.build]]). `weight(i)` is point i's multiplicity (1 by
+    * default, which leaves every sum and mean as the unweighted one). A
+    * centroid whose cluster empties keeps its position (stable,
+    * deterministic). */
   private[index] def lloyd(pts: Array[Array[Double]], init: Array[Array[Double]],
-      iters: Int): Array[Array[Double]] = {
+      iters: Int, weight: Int => Double = _ => 1.0): Array[Array[Double]] = {
     val n = pts.length
     val k = init.length
     val d = if (k == 0) 0 else init.head.length
@@ -49,23 +69,14 @@ object Quantization {
     var it = 0
     while (it < iters) {
       var i = 0
-      while (i < n) {
-        var best = 0; var bestD = Double.MaxValue; var j = 0
-        while (j < k) {
-          var s = 0.0; var dd = 0
-          while (dd < d) { val df = pts(i)(dd) - cents(j)(dd); s += df * df; dd += 1 }
-          if (s < bestD) { bestD = s; best = j }
-          j += 1
-        }
-        assign(i) = best; i += 1
-      }
+      while (i < n) { assign(i) = nearestOf(pts(i), cents); i += 1 }
       val sums = Array.fill(k, d)(0.0)
-      val counts = new Array[Int](k)
+      val counts = new Array[Double](k)
       i = 0
       while (i < n) {
-        val a = assign(i); counts(a) += 1
+        val a = assign(i); val w = weight(i); counts(a) += w
         var dd = 0
-        while (dd < d) { sums(a)(dd) += pts(i)(dd); dd += 1 }
+        while (dd < d) { sums(a)(dd) += pts(i)(dd) * w; dd += 1 }
         i += 1
       }
       var j = 0
@@ -81,44 +92,67 @@ object Quantization {
     cents
   }
 
-  /** k-means++ starting centroids for [[lloyd]]: the first a uniform pick
-    * of `pts`, each next one a pick weighted by its squared distance to the
-    * nearest centroid so far. Points already chosen weigh 0, so with at
-    * least `k` distinct points the `k` centroids are distinct. One pass over
-    * the sample per centroid: the cost of one Lloyd's iteration. */
-  private[index] def kmeansPlusPlus(pts: Array[Array[Double]], k: Int,
+  /** Weighted k-means++ picks of `k` of the distinct `pts`: each pick is
+    * drawn with probability proportional to its weight times its squared
+    * distance to the nearest pick so far (the first by weight alone).
+    * Picked points weigh 0 from then on, so the `k` picks are distinct. */
+  private def kmeansPlusPlus(pts: Array[Array[Double]], weights: Array[Double], k: Int,
       rnd: scala.util.Random): Array[Array[Double]] = {
     val n = pts.length
-    val d = pts.head.length
+    val mass = weights.clone
+    // the first point past a uniform draw of the cumulative mass
+    def draw(): Int = {
+      var target = rnd.nextDouble() * mass.sum
+      var i = 0
+      while (i < n - 1 && (mass(i) == 0.0 || target >= mass(i))) { target -= mass(i); i += 1 }
+      while (mass(i) == 0.0) i -= 1
+      i
+    }
     val nearest = Array.fill(n)(Double.PositiveInfinity)
-    val cents = new Array[Array[Double]](k)
-    var next = rnd.nextInt(n)
-    var j = 0
-    while (j < k) {
-      val c = pts(next).clone
-      cents(j) = c
-      var total = 0.0
+    Array.fill(k) {
+      val c = pts(draw()).clone
       var i = 0
       while (i < n) {
-        var s = 0.0; var dd = 0
-        while (dd < d) { val df = pts(i)(dd) - c(dd); s += df * df; dd += 1 }
-        if (s < nearest(i)) nearest(i) = s
-        total += nearest(i)
+        nearest(i) = math.min(nearest(i), dist2(pts(i), c))
+        mass(i) = weights(i) * nearest(i)
         i += 1
       }
-      j += 1
-      if (j < k) {
-        // the first point past a uniform draw of the cumulative weight
-        var target = rnd.nextDouble() * total
-        i = 0
-        while (i < n - 1 && (nearest(i) == 0.0 || target >= nearest(i))) {
-          target -= nearest(i); i += 1
-        }
-        while (nearest(i) == 0.0) i -= 1
-        next = i
-      }
+      c
     }
-    cents
+  }
+
+  /** k-means|| starting centroids (Bahmani et al., "Scalable K-Means++",
+    * VLDB 2012; MLlib's default) for `k` lists over `pts`, which hold at
+    * least `k` distinct points. Two rounds each draw every point with
+    * probability 2k × its squared distance to the candidates so far over
+    * the sum of those distances. Each candidate then weighs the number of
+    * points nearest it, and weighted k-means++ picks refined by 30 weighted
+    * Lloyd's iterations over the candidates reduce them to `k`. When the
+    * rounds draw fewer than `k` distinct candidates, every distinct point
+    * is one.
+    *
+    * Against k-means++ over all points, the heavy candidate groups start
+    * lists near the bulk of the data: on uniform data the lists come out
+    * uneven, and the nearest half of them holds most vectors (what a
+    * fixed-`nprobe` probe reads). */
+  private[index] def kmeansParallel(pts: Array[Array[Double]], k: Int,
+      rnd: scala.util.Random): Array[Array[Double]] = {
+    val first = pts(rnd.nextInt(pts.length))
+    val cost = pts.map(dist2(_, first))
+    val drawn = scala.collection.mutable.ArrayBuffer(first)
+    for (_ <- 0 until 2) {
+      val sum = cost.sum
+      val chosen = pts.indices.filter(i => rnd.nextDouble() * sum < 2.0 * k * cost(i))
+        .map(pts(_))
+      drawn ++= chosen
+      for (i <- pts.indices; c <- chosen) cost(i) = math.min(cost(i), dist2(pts(i), c))
+    }
+    val distinct = drawn.map(_.toSeq).distinct
+    val cands = (if (distinct.length >= k) distinct else pts.toSeq.map(_.toSeq).distinct)
+      .map(_.toArray).toArray
+    val weights = new Array[Double](cands.length)
+    pts.foreach(p => weights(nearestOf(p, cands)) += 1)
+    lloyd(cands, kmeansPlusPlus(cands, weights, k, rnd), 30, weights)
   }
 
   /** SQ8 scalar quantizer: per-dimension affine [min, min+255·scale] grid.
@@ -326,8 +360,8 @@ object Quantization {
       val rnd = new scala.util.Random(seed)
       val codebook = Array.tabulate(m) { sub =>
         val pts = sampled.map(r => java.util.Arrays.copyOfRange(r, sub * dsub, (sub + 1) * dsub))
-        // random starting points (k-means++ would be nicer; a plain sample
-        // matches faiss's default well enough at ksub=16)
+        // random starting points (faiss's default), kept so that a sample
+        // and seed train the same codebooks they always have
         lloyd(pts, rnd.shuffle(pts.indices.toList).take(ksub).map(pts(_).clone).toArray, 15)
       }
       Pq(m, ksub, dsub, codebook)

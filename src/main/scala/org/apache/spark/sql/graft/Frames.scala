@@ -8,9 +8,9 @@ import org.apache.spark.sql.types.StructType
   * a DataFrame over a plan built from Catalyst nodes, so a plan that the
   * claim rules splice into a query and the DataFrame API answer come from
   * one construction; a frame's analyzed plan, so a claim rule can join
-  * a read (a parquet relation) without optimizing it; whether a persisted
-  * frame's cache has been computed; and a file scan's listing and schema
-  * inference rules, so an index part opens without a Spark job. */
+  * a read (a parquet relation) without optimizing it; and a file scan's
+  * listing and schema inference rules, so an index part opens without a
+  * Spark job. */
 object Frames {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
@@ -18,13 +18,6 @@ object Frames {
 
   def planOf(df: DataFrame): LogicalPlan =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].logicalPlan
-
-  /** Whether `df` is persisted and an action has computed its cache. */
-  def materialized(df: DataFrame): Boolean = {
-    val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    spark.sharedState.cacheManager.lookupCachedData(spark, planOf(df))
-      .exists(_.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded)
-  }
 
   /** Whether a file scan's listing skips a file or directory of this name
     * (`_SUCCESS`, `.crc` files, `_temporary`, …). */

@@ -192,6 +192,15 @@ class IndexBuildSpec extends AnyFunSuite {
     assert(three.radii.forall(_ == 0.0))
   }
 
+  test("the IVF training sample does not depend on how the input is partitioned") {
+    // 2 lists train on about 512 of the 1,200 vectors: a partial sample
+    val r = new scala.util.Random(11)
+    val rows = (0 until 1200).map(i => Row(i.toLong, Seq.fill(4)(r.nextFloat())))
+    def trained(parts: Int) = IvfIndex.build(spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, parts), embSchema), k = 2).centroids.map(_.toSeq).toSeq
+    assert(trained(1) == trained(5))
+  }
+
   test("a pg CREATE INDEX runs at most 25 Spark jobs; opening what it wrote runs none") {
     graft.search.SqlSurface.registerAll(spark)
     graft.catalog.CatalogDdl.registerFunctions(spark)

@@ -31,8 +31,9 @@ class ReaderSnapshotSpec extends AnyFunSuite {
   /** Spark jobs of the changeful REFRESH below (65 when its classify frame
     * was checkpointed and then grouped for the class counts, and each index
     * part opened by Spark's schema inference): the frame is materialized
-    * by one job that also counts the classes. */
-  private val ChangefulRefreshJobs = 27
+    * by one job that also counts the classes. Three of them count the
+    * delta segment's source, its exact numDocs. */
+  private val ChangefulRefreshJobs = 30
 
   private def insert(pks: Range): Unit = {
     spark.createDataFrame(spark.sparkContext.parallelize(
