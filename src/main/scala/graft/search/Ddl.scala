@@ -1124,7 +1124,8 @@ object Ddl {
           val added =
             try {
               // the one job that materializes the classify frame reports
-              // the per-class counts
+              // the per-class counts, observed above its joins: in that
+              // job's result stage, where each task counts once
               classified.foreachPartition((_: Iterator[org.apache.spark.sql.Row]) => ())
               // no report: the classify stage was empty and dropped
               val Seq(nNew, nChanged, nRemoved) = graft.index.Observed.result(clsCounts)
