@@ -45,7 +45,12 @@ object Bench {
       if (args.nonEmpty) { val only = args(0).split(",").toSet; all.filter(only) }
       else all
     }
-    names.foreach(runOnce) // warmup: JIT + codegen cache + parquet footers
+    // warmup: JIT, parquet footers and each entry's generated classes. The
+    // codegen cache (GraftSession.CodegenCacheEntries, an LRU) keeps a class
+    // until that many others were used after it, so of an entry's three
+    // back-to-back timed runs only the first can recompile, and only when
+    // the entries since its warmup used more classes than the cache holds
+    names.foreach(runOnce)
     // median of 3 timed runs — n=1 deltas were noise-level (VERDICT r2).
     // A full GC between entries keeps one entry's garbage from being
     // collected on a later entry's clock: with 130+ entries in one JVM the

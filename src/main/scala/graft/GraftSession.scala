@@ -7,7 +7,10 @@ import org.apache.spark.sql.SparkSession
   * Defaults are chosen for the local[32] test harness but the same knobs are
   * what you would set on a real cluster: AQE on (runtime re-planning, skew-join
   * splitting), modest shuffle partitions for the local scale, UTC timezone so
-  * timestamp arithmetic is stable against the DuckDB oracle.
+  * timestamp arithmetic is stable against the DuckDB oracle. The codegen
+  * cache is sized to the engine's working set of generated classes
+  * ([[CodegenCacheEntries]]): at Spark's default of 100 its LRU cycles, and
+  * every repeated statement shape recompiles its classes.
   */
 object GraftSession {
   private val metricsHooked =
@@ -54,7 +57,24 @@ object GraftSession {
     .config("spark.sql.parquet.mergeSchema", "false")
     .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
     .config("spark.ui.enabled", "false")
+    .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
   }
+
+  /** Size of Spark's JVM-wide cache of compiled generated classes
+    * (`spark.sql.codegen.cache.maxEntries`, an LRU keyed by the generated
+    * source). Spark's default of 100 is smaller than one TPC-H Q1–Q22 pass,
+    * which needs about 370 distinct classes, so the LRU evicted every class
+    * before its next use and each pass recompiled about 390 of them at
+    * 44–56 ms each. The `search` workload's set-up and warm-up need 124
+    * classes, plus 2 for each pk lookup, whose key is inlined into its
+    * generated filter. A cached entry costs about 20 KB of live heap (a TPC-H
+    * pass's entries: +7.7 MB), so 1,000 entries hold both working sets and
+    * bound the worst case near 20 MB.
+    *
+    * The conf is static: the cache is built once per JVM, with the size in
+    * force in the first session that compiles a class. [[adopt]] cannot
+    * change it on a session that is already running. */
+  val CodegenCacheEntries = 1000
 
   /** The session database is `public` (the pg default schema): unqualified
     * relation names — catalog tables, index relations, native tables alike —
@@ -81,7 +101,10 @@ object GraftSession {
     spark
   }
 
-  /** Ensure graft settings on an externally created session (Verify/Bench). */
+  /** Ensure graft settings on an externally created session (Verify/Bench).
+    * Runtime settings only: static ones such as the codegen cache size
+    * ([[CodegenCacheEntries]]) are fixed once the session's context runs, so
+    * a session not built through [[configure]] keeps Spark's defaults. */
   def adopt(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

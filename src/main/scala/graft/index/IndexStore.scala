@@ -59,10 +59,12 @@ import org.apache.spark.sql.types.StructType
   * and no Spark job, so warm claims plan without Spark jobs; any write
   * that changes the key (append, delete,
   * compact, DROP + re-CREATE) makes the next call reload. Segments are
-  * immutable once the manifest names them, so the key is exact. DataFrames
-  * are never cached: every call rebinds copies of the cached relations to
-  * the caller's session, so every `load` yields fresh leaf exprIds and
-  * plans under the caller's SQLConf.
+  * immutable once the manifest names them, so the key is exact. The
+  * snapshot builds the index frames once per session, over copies of the
+  * cached relations bound to that session, so they plan under the caller's
+  * SQLConf and never cross sessions. Two loads of one snapshot in one
+  * session return the same frames, with the same leaf exprIds: a rule that
+  * joins two of them re-instances one side (`PlanShapes.freshRelationIds`).
   *
   * Scoring reads the snapshot's files, not its frames: `load` hands the
   * index the snapshot's [[IndexFiles]] (each live segment's postings files
@@ -623,6 +625,23 @@ object IndexStore {
       val r = d.agg(count(lit(1)), coalesce(sum(col("dlen")), lit(0L))).head()
       (r.getLong(0), r.getLong(1))
     }
+
+    /** The index [[read]] builds over each session, built once: a claimed
+      * statement loads it from several rules and optimizer passes, and each
+      * build analyzes every part's frames again. Keyed weakly, so frames
+      * never cross sessions. The frames reference their session, so the
+      * value is held softly: a strong one would keep its weak key reachable
+      * as long as the snapshot lives. */
+    private val built =
+      new java.util.WeakHashMap[SparkSession, java.lang.ref.SoftReference[InvertedIndex]]()
+
+    def index(s: SparkSession): InvertedIndex = built.synchronized {
+      Option(built.get(s)).flatMap(r => Option(r.get)).getOrElse {
+        val idx = read(s, this)
+        built.put(s, new java.lang.ref.SoftReference(idx))
+        idx
+      }
+    }
   }
 
   private val readers = TrieMap.empty[String, Snapshot]
@@ -667,9 +686,10 @@ object IndexStore {
   }
 
   /** Load an index, merging all segments' stats at read time. The frames
-    * are rebuilt over `spark` from the reader snapshot on every call. */
+    * are built over `spark` once per reader snapshot; a write, delete or
+    * compaction yields a new snapshot and new frames. */
   def load(spark: SparkSession, dir: String): InvertedIndex =
-    read(spark, current(spark, dir))
+    current(spark, dir).index(spark)
 
   private def read(spark: SparkSession, snap: Snapshot): InvertedIndex = {
     val segs = snap.segs

@@ -701,7 +701,7 @@ case class PushdownTsDictAggregate(spark: SparkSession) extends Rule[LogicalPlan
       fMin(f("term")).as("__mn"), fMax(f("term")).as("__mx"),
       fCount(fLit(1)).as("__nd"),
       fCoalesce(fSum(f("ctf")), fLit(0L)).cast("long").as("__nt"))
-    val rPlan = aggd.queryExecution.optimizedPlan
+    val rPlan = freshRelationIds(aggd.queryExecution.optimizedPlan)
     val byName = rPlan.output.map(a => a.name -> a).toMap
     Some(Project(
       mapped.flatten.map { case (al, key) =>
@@ -722,9 +722,9 @@ case class PushdownTsDictAggregate(spark: SparkSession) extends Rule[LogicalPlan
     import org.apache.spark.sql.catalyst.expressions.aggregate.{Complete, Sum}
     val idx = graft.index.IndexStore.load(spark, c.segDir)
     val posts = idx.postings.select(f("term"), f("doc_id"), f("tf").cast("long").as("tf"))
-    // every IndexStore.load yields fresh leaf exprIds, so `right` (an
-    // earlier load) and these postings start disjoint; re-instancing keeps
-    // the self-join's sides disjoint even if both came from one load
+    // `right` may hold these postings' leaf exprIds (loads of one snapshot
+    // in one session share their frames): re-instancing keeps the
+    // self-join's sides disjoint
     val pBase = freshRelationIds(posts.queryExecution.optimizedPlan)
     // token residual commutes with the per-term grouping — apply it to the
     // postings' term column BEFORE the semi-join (prunes earliest)
@@ -772,7 +772,7 @@ case class PushdownTsDictAggregate(spark: SparkSession) extends Rule[LogicalPlan
       org.apache.spark.sql.functions.col("term"),
       org.apache.spark.sql.functions.col("df").cast("long").as("df"),
       org.apache.spark.sql.functions.col("ctf").cast("long").as("ctf"))
-    val tdBase = td.queryExecution.optimizedPlan
+    val tdBase = freshRelationIds(td.queryExecution.optimizedPlan)
     // token residual → dictionary residual: same predicate, token attr
     // re-bound to the dict's term column (the reference's FILTER over the
     // term projection, ts_dict_cartesian.test `len` leg)

@@ -380,6 +380,33 @@ class ReaderSnapshotSpec extends AnyFunSuite {
     check("after DELETE + refresh")
   }
 
+  test("loads of an unchanged index share their frames in a session; a write brings new ones") {
+    ready
+    val segDir = IndexCatalog.textKeys.collectFirst {
+      case (root, "body", `dict`) if s"\\b$tbl\\b".r.findFirstIn(root).nonEmpty =>
+        IndexCatalog.lookupText(root, "body", dict).get.segDir
+    }.get
+    def frames(s: SparkSession) = {
+      val i = graft.index.IndexStore.load(s, segDir)
+      Seq(i.postings, i.termDict, i.docStats)
+    }
+    def same(a: Seq[AnyRef], b: Seq[AnyRef]) = a.zip(b).forall { case (x, y) => x eq y }
+    def disjoint(a: Seq[AnyRef], b: Seq[AnyRef]) = a.zip(b).forall { case (x, y) => !(x eq y) }
+    val first = frames(spark)
+    assert(same(frames(spark), first), "a second load of an unchanged index built new frames")
+    val s2 = spark.newSession()
+    val other = frames(s2)
+    assert(disjoint(other, first) && other.forall(_.sparkSession eq s2), "frames crossed sessions")
+    val pk = run(spark, s"SELECT min(pk) FROM $tbl").head.getInt(0)
+    run(spark, s"DELETE FROM $tbl WHERE pk = $pk")
+    run(spark, s"VACUUM (REFRESH_TABLE) $tbl")
+    val after = frames(spark)
+    assert(disjoint(after, first), "a DELETE + REFRESH kept the old frames")
+    assert(same(frames(spark), after))
+    assert(after(2).filter(org.apache.spark.sql.functions.col("doc_id") === pk).isEmpty,
+      s"the new frames still hold the deleted pk $pk")
+  }
+
   test("a count between a DELETE and its REFRESH stays on the base-table semi-join") {
     ready
     run(spark, s"DELETE FROM $tbl WHERE pk IN (19, 20, 21)")
