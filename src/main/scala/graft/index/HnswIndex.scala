@@ -301,7 +301,7 @@ object HnswIndex {
         .select(col("vec_id"), col("embedding")).distinct()
       build(all, m = m, efConstruction = efConstruction, partitions = partitions)
         .graph.write.mode("overwrite").parquet(s"$dir/graph_next")
-      IvfIndex.writeAtomic(spark, s"$dir/_SWAP_PENDING", "1") // commit point
+      IndexStore.writeStringAtomic(spark, s"$dir/_SWAP_PENDING", "1") // commit point
       completeSwap(f, dir)
       jvmCache.remove(dir)
       (nd, true)
@@ -335,7 +335,7 @@ object HnswIndex {
   def dirFor(cacheKey: String, m: Int = 16, efConstruction: Int = 64,
       partitions: Int = 0): String = {
     val key = cacheKey.replaceAll("[^A-Za-z0-9._-]+", "_")
-    s"${IvfIndex.defaultRoot}/$key-hnsw$m-$efConstruction-$partitions-v${IndexStore.FormatVersion}"
+    s"${IndexStore.defaultRoot}/$key-hnsw$m-$efConstruction-$partitions-v${IndexStore.FormatVersion}"
   }
 
   /** Build-or-load the persisted graph (parquet neighbor lists; Hadoop-FS

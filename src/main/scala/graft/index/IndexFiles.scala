@@ -8,7 +8,7 @@ import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.execution.datasources.{FileFormat, FileStatusCache, HadoopFsRelation,
-  InMemoryFileIndex, PartitionedFile}
+  InMemoryFileIndex, PartitionedFile, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graft.Frames
 import org.apache.spark.sql.sources.Filter
@@ -57,8 +57,8 @@ object IndexFile {
     * skips left out, and the data schema from the footer of the first data
     * file in path order, the one Spark's inference reads. Partition
     * directories (`bucket=K`, `cluster=K`) are inferred from the listing as
-    * Spark infers them. A root without a data file fails as Spark's read
-    * does, with `UNABLE_TO_INFER_SCHEMA`. */
+    * Spark infers them, under each root. A root without a data file fails
+    * as Spark's read does, with `UNABLE_TO_INFER_SCHEMA`. */
   def relation(spark: SparkSession, roots: Seq[String]): HadoopFsRelation = {
     val conf = spark.sessionState.newHadoopConf()
     val listed = roots.map { r =>
@@ -76,7 +76,16 @@ object IndexFile {
         byRoot.put(path, leafFiles)
       override def invalidateAll(): Unit = byRoot.clear()
     }
-    val index = new InMemoryFileIndex(spark, listed.map(_._1), Map.empty, None, cache)
+    def fileIndex(paths: Seq[Path], spec: Option[PartitionSpec]) =
+      new InMemoryFileIndex(spark, paths, Map.empty, None, cache, spec)
+    // Spark infers partitions under one base path: partitioned roots (an
+    // IVF's `vectors-N/cluster=K` per append) are inferred one by one and
+    // their partitions merged
+    val spec = Some(listed).filter(_.size > 1)
+      .map(_.map(r => fileIndex(Seq(r._1), None).partitionSpec()))
+      .filter(_.head.partitionColumns.nonEmpty)
+      .map(specs => PartitionSpec(specs.head.partitionColumns, specs.flatMap(_.partitions)))
+    val index = fileIndex(listed.map(_._1), spec)
     HadoopFsRelation(index, index.partitionSchema, dataSchema, None,
       new ParquetFileFormat, Map.empty)(spark)
   }
@@ -94,8 +103,8 @@ final case class SegmentFiles(segNo: Int,
 }
 
 /** The files of one reader snapshot that an index task reads: the live
-  * segments of the index at `dir` in manifest order, and the parquet
-  * tombstone generations at or above the floor. */
+  * segments of the index at `dir` in manifest order, and its live parquet
+  * tombstone generations. */
 final case class IndexFiles(dir: String, segments: Seq[SegmentFiles],
     tombstoneSchema: StructType, tombstones: Seq[IndexFile])
 

@@ -1,8 +1,6 @@
 package graft.index
 
-import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets
-import scala.collection.concurrent.TrieMap
 import scala.util.hashing.MurmurHash3
 
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -16,14 +14,17 @@ import org.apache.spark.sql.types.StructType
   * Spark-native analogue of the reference's on-disk index segments
   * (/root/reference/server/search/inverted_index_storage.h;
   * /root/reference/libs/iresearch/include/iresearch/formats/). An index lives
-  * under one directory as parquet, split into append-only segments:
+  * under one directory as parquet, split into append-only segments, and is
+  * versioned by the [[Commit]] protocol:
   *
   * {{{
-  *   <root>/<key>/_SEGMENTS                     (manifest: one seg name/line)
+  *   <root>/<key>/_CURRENT, _v/                 (the published version)
   *   <root>/<key>/seg=NNNNN/postings/bucket=K/  (parquet files)
   *   <root>/<key>/seg=NNNNN/termdict/bucket=K/  (parquet files)
   *   <root>/<key>/seg=NNNNN/docstats/           (parquet files)
+  *   <root>/<key>/seg=NNNNN/docids/             (doc ids + content fingerprints)
   *   <root>/<key>/seg=NNNNN/meta.json           (numDocs, sumDl per segment)
+  *   <root>/<key>/del=NNNNNNNN/                 (one tombstone generation)
   * }}}
   *
   * - All metadata IO goes through the Hadoop `FileSystem` API, so the store
@@ -38,33 +39,33 @@ import org.apache.spark.sql.types.StructType
   *   mirroring the reference's per-segment stats merge — so appending a
   *   segment never rewrites old ones, and BM25 stats stay correct under
   *   incremental ingest (SURVEY.md §7.4 "BM25 global statistics").
-  * - the `_SEGMENTS` manifest (not directory listing) is the source of truth:
-  *   [[compact]] writes a NEW merged segment, atomically repoints the
-  *   manifest, and leaves old segment dirs for [[cleanup]] — readers holding
-  *   lazy plans over old segments keep working until cleanup runs (the
-  *   reference's snapshot-pinning behavior, iresearch_snapshot_pinning.test).
+  * - the manifest of the current version (not a directory listing) is the
+  *   source of truth: it names the live segments, the live tombstone
+  *   generations and the fingerprint of the source the index was last
+  *   synced with. Every write — a new segment, a delete, a REFRESH's
+  *   tombstones and delta segment, a compaction — stages its files and
+  *   publishes one version. [[compact]] writes a NEW merged segment and
+  *   publishes it without the segments and generations it folded; those
+  *   stay on disk until the next compaction publishes, so readers holding
+  *   lazy plans over them keep working (the reference's snapshot-pinning
+  *   behavior, iresearch_snapshot_pinning.test).
   *
   * Reader snapshot (the reference keeps its index readers open and reuses
-  * the current segment snapshot per query): [[load]] serves one cached
-  * snapshot per index directory, keyed by the on-disk state a load reads —
-  * the `_SEGMENTS` manifest (content and modification time) and the
-  * `_DELETES_P` listing (each tombstone generation and the `_FLOOR` file, with their
-  * modification times). Computing the key is a few metadata calls and
-  * launches no Spark job. The snapshot holds only session-independent
-  * state: each segment part's `HadoopFsRelation` (its file listing and
-  * schema, opened from a driver-side listing and one parquet footer by
-  * [[IndexFile.relation]], so a fresh load runs no job either), the
-  * `meta.json` totals, and the tombstone relation plus its count/dlen
-  * scalars. A call whose key matches does no file listing, no footer read
-  * and no Spark job, so warm claims plan without Spark jobs; any write
-  * that changes the key (append, delete,
-  * compact, DROP + re-CREATE) makes the next call reload. Segments are
-  * immutable once the manifest names them, so the key is exact. The
-  * snapshot builds the index frames once per session, over copies of the
-  * cached relations bound to that session, so they plan under the caller's
-  * SQLConf and never cross sessions. Two loads of one snapshot in one
-  * session return the same frames, with the same leaf exprIds: a rule that
-  * joins two of them re-instances one side (`PlanShapes.freshRelationIds`).
+  * the current segment snapshot per query): [[load]] serves one snapshot
+  * per published version, memoized on it ([[Commit.Version.memo]]); which
+  * version is current is one read of `_CURRENT`, once per statement. The
+  * snapshot holds only session-independent state: each segment part's
+  * `HadoopFsRelation` (its file listing and schema, opened from a
+  * driver-side listing and one parquet footer by [[IndexFile.relation]], so
+  * a fresh load runs no job), the `meta.json` totals, and the tombstone
+  * relation plus its count/dlen scalars. A load of a version already seen
+  * does no file listing, no footer read and no Spark job, so warm claims
+  * plan without Spark jobs. The snapshot builds the index frames once per
+  * session, over copies of the cached relations bound to that session, so
+  * they plan under the caller's SQLConf and never cross sessions. Two loads
+  * of one snapshot in one session return the same frames, with the same
+  * leaf exprIds: a rule that joins two of them re-instances one side
+  * (`PlanShapes.freshRelationIds`).
   *
   * Scoring reads the snapshot's files, not its frames: `load` hands the
   * index the snapshot's [[IndexFiles]] (each live segment's postings files
@@ -85,8 +86,9 @@ object IndexStore {
     * v4: docids manifest gained `content_fp` (REFRESH update detection) —
     * the change shipped WITHOUT this bump and v3 dirs on disk were a mixed
     * population; gates now also reset state (GateHygiene), this keeps any
-    * long-lived deployment's old dirs from being half-trusted. */
-  val FormatVersion = 4
+    * long-lived deployment's old dirs from being half-trusted.
+    * v5: every index directory is versioned by one [[Commit]] manifest. */
+  val FormatVersion = 5
 
   /** Stable term → bucket hash, computable on both driver (literal pruning)
     * and executors (write path). */
@@ -97,11 +99,6 @@ object IndexStore {
 
   def defaultRoot: String = sys.env.getOrElse(
     "GRAFT_INDEX_DIR", sys.props("java.io.tmpdir") + "/graft-index")
-
-  /** Drop the reader snapshot of `dir` (callers that delete the directory
-    * out of band — e.g. DROP SEARCH INDEX — invalidate so the dead index's
-    * relations are not kept alive until the next load). */
-  def invalidate(dir: String): Unit = readers.remove(dir)
 
   private def slug(s: String): String = s.replaceAll("[^A-Za-z0-9._-]+", "_")
 
@@ -118,29 +115,59 @@ object IndexStore {
     try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
   }
 
-  /** Write via temp file + FileContext rename(OVERWRITE) — atomic on
-    * HDFS/local with no delete-then-rename window (a crash leaves the old or
-    * the new manifest, never none), close-to-atomic on object stores. */
+  /** Write via temp file + a rename that replaces `path` atomically, so a
+    * crash or a concurrent reader sees the old or the new content, never
+    * none: FileContext rename(OVERWRITE) on HDFS (close-to-atomic on object
+    * stores). Hadoop's local file system implements that overwrite as a
+    * delete followed by a rename, and renames a file's checksum apart from
+    * it, so on a local disk the write bypasses the checksum layer and uses
+    * the plain rename, which replaces the target in one step. */
   private[graft] def writeStringAtomic(spark: SparkSession, path: String, s: String): Unit = {
-    val f = fs(spark, path)
-    val tmp = new Path(path + ".tmp")
-    val out = f.create(tmp, true)
-    try out.write(s.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    val dst = new Path(path)
-    org.apache.hadoop.fs.FileContext.getFileContext(dst.toUri,
-        spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    val (tmp, dst) = (new Path(path + ".tmp"), new Path(path))
+    def write(f: FileSystem): Unit = {
+      val out = f.create(tmp, true)
+      try out.write(s.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    }
+    fs(spark, path) match {
+      case local: org.apache.hadoop.fs.LocalFileSystem =>
+        val raw = local.getRawFileSystem
+        write(raw)
+        // a checksum from an earlier checksummed write would not match
+        raw.delete(local.getChecksumFile(dst), false)
+        if (!raw.rename(tmp, dst)) throw new java.io.IOException(s"could not replace $dst")
+      case f =>
+        write(f)
+        org.apache.hadoop.fs.FileContext.getFileContext(dst.toUri,
+            spark.sparkContext.hadoopConfiguration)
+          .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    }
   }
 
   private[graft] def exists(spark: SparkSession, path: String): Boolean =
     fs(spark, path).exists(new Path(path))
 
-  /** Whether the durable segment manifest for an index dir is on disk — the
-    * catalog fast paths verify this before trusting a persisted row: a row
-    * whose segments were deleted out-of-band must trigger a rebuild, not a
-    * load failure. */
+  /** Whether a version of the index at `dir` is published — the catalog
+    * fast paths verify this before trusting a persisted row: a row whose
+    * segments were deleted out-of-band must trigger a rebuild, not a load
+    * failure. */
   def durable(spark: SparkSession, dir: String): Boolean =
-    exists(spark, s"$dir/_SEGMENTS")
+    Commit.current(spark, dir).isDefined
+
+  /** The fingerprint of the source the index was last built or refreshed
+    * from (`count:bytes:maxMtime` of its files), from the current version. */
+  def sourceFp(spark: SparkSession, dir: String): Option[String] =
+    Commit.current(spark, dir).flatMap(sourceFpOf)
+
+  private def sourceFpOf(v: Commit.Version): Option[String] = v.field("sourceFp").map(_.asText)
+
+  /** Publish `fp` as the source fingerprint of the latest version of the
+    * index at `dir` (of any kind), unless it already carries it. */
+  def recordSourceFp(spark: SparkSession, dir: String, fp: Option[String]): Unit =
+    for (f <- fp; base <- Commit.latest(spark, dir) if !sourceFpOf(base).contains(f))
+      Commit.publish(spark, dir, Some(base), base.files, "sourceFp" -> f)
+
+  private def segName(n: Int): String = f"seg=$n%05d"
+  private def segNo(name: String): Int = name.stripPrefix("seg=").toInt
 
   // ---- lifecycle -----------------------------------------------------------
 
@@ -149,31 +176,25 @@ object IndexStore {
     s"$defaultRoot/${slug(cacheKey)}-$textCol-$analyzerName-v$FormatVersion"
 
   /** Build-or-load the index for (table parquet dir, text column, analyzer):
-    * built once, persisted across JVMs, loaded through the reader snapshot. */
+    * built once, persisted across JVMs, loaded through the reader snapshot.
+    * `sourceFp` is the fingerprint of `docs`' source, taken before it is
+    * read; it is published with the build, or with a version of its own
+    * when the index already exists and was synced with other bytes. */
   def ensure(spark: SparkSession, docs: => DataFrame, cacheKey: String,
       idCol: String, textCol: String, analyzerName: String,
-      withPositions: Boolean = true): InvertedIndex = {
+      withPositions: Boolean = true, sourceFp: Option[String] = None): InvertedIndex = {
     val dir = dirFor(cacheKey, textCol, analyzerName)
-    def build(): Unit = {
-      val d = docs
-      val idx = InvertedIndex.build(d, idCol, textCol, analyzerName, withPositions)
-      writeSegment(idx, dir, 0, Some(d.select(col(idCol).as("doc_id"),
-        xxhash64(col(textCol)).as("content_fp"))))
-      writeStringAtomic(spark, s"$dir/_SEGMENTS", "seg=00000\n")
+    if (sourceFp.nonEmpty || !durable(spark, dir)) commit(spark, dir, sourceFp) { (snap, _) =>
+      if (snap.nonEmpty) Seq.empty
+      else {
+        val d = docs
+        val idx = InvertedIndex.build(d, idCol, textCol, analyzerName, withPositions)
+        writeSegment(idx, dir, 0, Some(d.select(col(idCol).as("doc_id"),
+          xxhash64(col(textCol)).as("content_fp"))))
+        Seq(segName(0))
+      }
     }
-    if (!exists(spark, s"$dir/_SEGMENTS")) build()
-    try load(spark, dir)
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") =>
-        // a POISONED dir from an older build over an empty source
-        // (0-partition parquet write → fileless segment): rebuild once
-        val p = new Path(dir)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.delete(p, true)
-        build()
-        load(spark, dir)
-    }
+    load(spark, dir)
   }
 
   /** Convenience: the standard documents-table index. */
@@ -282,7 +303,7 @@ object IndexStore {
     * and a 100 TB backfill's compaction/retry unit stays bounded. */
   def ensureRotating(spark: SparkSession, docs: => DataFrame, cacheKey: String,
       idCol: String, textCol: String, analyzerName: String,
-      docsMax: Long): InvertedIndex = {
+      docsMax: Long, sourceFp: Option[String] = None): InvertedIndex = {
     val dir = dirFor(cacheKey, textCol, analyzerName)
     if (!exists(spark, s"$dir/_BACKFILL_DONE")) {
       val d = docs
@@ -304,54 +325,79 @@ object IndexStore {
       }
       writeStringAtomic(spark, s"$dir/_BACKFILL_DONE", waves.toString)
     }
+    recordSourceFp(spark, dir, sourceFp)
     load(spark, dir)
   }
 
   /** Append a new segment (streaming ingest / incremental refresh). */
   def appendSegment(idx: InvertedIndex, dir: String,
-      docIds: Option[DataFrame] = None): Int = Metrics.timed(dir, "commit") {
-    val spark = idx.postings.sparkSession
-    val existing = listSegments(spark, dir)
-    val next = existing.map(_.stripPrefix("seg=").toInt).foldLeft(-1)(math.max) + 1
-    writeSegment(idx, dir, next, docIds)
-    writeStringAtomic(spark, s"$dir/_SEGMENTS",
-      (existing :+ f"seg=$next%05d").distinct.sorted.mkString("", "\n", "\n"))
-    next
+      docIds: Option[DataFrame] = None): Unit = Metrics.timed(dir, "commit") {
+    commit(idx.postings.sparkSession, dir) { (snap, _) =>
+      val next = nextSeg(snap)
+      writeSegment(idx, dir, next, docIds)
+      Seq(segName(next))
+    }
   }
 
-  /** Every doc id ever indexed into `dir`, INCLUDING zero-token docs — the
-    * REFRESH anti-join base. Segments written before the docids manifest
-    * existed fall back to their docstats (the pre-fix behavior, confined to
-    * old segments). */
-  def allDocIds(spark: SparkSession, dir: String): DataFrame =
-    listSegments(spark, dir).map { s =>
-      val p = s"$dir/$s/docids"
-      if (exists(spark, p)) readParquet(spark, p).select(col("doc_id"))
-      else readParquet(spark, s"$dir/$s/docstats").select(col("doc_id"))
-    }.reduce(_ unionByName _).distinct()
+  /** One REFRESH as one version: tombstones for the `removed` ids (scoped
+    * to the newest segment), a delta segment for `added` (the index and its
+    * `(doc_id, content_fp)` manifest) in a newer one, and the source
+    * fingerprint `sourceFp` — staged, then published together, so no
+    * reader sees the tombstones without the re-indexed docs. */
+  def refresh(spark: SparkSession, dir: String, removed: Option[DataFrame],
+      added: Option[(InvertedIndex, DataFrame)], sourceFp: Option[String]): Unit =
+    Metrics.timed(dir, "commit") {
+      commit(spark, dir, sourceFp) { (snap, n) =>
+        val s = snap.getOrElse(throw new IllegalStateException(s"no index at $dir"))
+        removed.flatMap(ids => stageTombstones(spark, s, idsMatched(spark, s, ids), n)).toSeq ++
+          added.map { case (idx, docIds) =>
+            val next = nextSeg(snap)
+            writeSegment(idx, dir, next, Some(docIds))
+            segName(next)
+          }
+      }
+    }
+
+  private def snapshotOf(spark: SparkSession, v: Commit.Version): Snapshot =
+    v.memo("text")(new Snapshot(spark, v))
+
+  private def nextSeg(snap: Option[Snapshot]): Int = snap.fold(0)(_.maxSeg + 1)
+
+  /** Stage on the latest version and publish once: `stage` gets that
+    * version's snapshot and the number the staged roots are named with, and
+    * returns the roots it wrote, which join the version's files. Nothing
+    * staged and an unchanged fingerprint publish nothing. */
+  private def commit(spark: SparkSession, dir: String, sourceFp: Option[String] = None)(
+      stage: (Option[Snapshot], Long) => Seq[String]): Unit = {
+    val base = Commit.latest(spark, dir)
+    val staged = stage(base.map(snapshotOf(spark, _)), Commit.nextNumber(base))
+    if (staged.nonEmpty)
+      Commit.publish(spark, dir, base, base.fold(Seq.empty[String])(_.files) ++ staged,
+        sourceFp.map("sourceFp" -> _).toSeq: _*)
+    else recordSourceFp(spark, dir, sourceFp)
+  }
 
   /** `(doc_id, content_fp)` of every LIVE indexed doc: per-segment doc-id
     * manifests with the generation-scoped tombstones applied (same
     * semantics as [[load]]'s applyDeletes), the NEWEST segment's row
-    * winning for re-inserted ids. `content_fp` is null for segments
-    * written before the fingerprint existed (or by callers that don't
-    * supply one, e.g. streaming batches) — those docs reconcile by
-    * add/remove only, never by content diff. This is REFRESH's
-    * reconciliation base and compaction's manifest carry-forward. */
-  def liveDocFps(spark: SparkSession, dir: String): DataFrame = {
-    val perSeg = listSegments(spark, dir).map { s =>
-      val segNo = s.stripPrefix("seg=").toInt
-      val p = s"$dir/$s/docids"
-      val base =
-        if (exists(spark, p)) readParquet(spark, p)
-        else readParquet(spark, s"$dir/$s/docstats").select(col("doc_id"))
+    * winning for re-inserted ids. `content_fp` is null for docs written by
+    * callers that don't supply one (e.g. streaming batches) — those docs
+    * reconcile by add/remove only, never by content diff. This is
+    * REFRESH's reconciliation base and compaction's manifest
+    * carry-forward. */
+  def liveDocFps(spark: SparkSession, dir: String): DataFrame =
+    liveDocFps(spark, current(spark, dir))
+
+  private def liveDocFps(spark: SparkSession, snap: Snapshot): DataFrame = {
+    val perSeg = snap.segs.map { s =>
+      val base = readParquet(spark, snap.version.path(s"$s/docids"))
       val withFp =
         if (base.columns.contains("content_fp"))
           base.select(col("doc_id"), col("content_fp").cast("long"))
         else base.select(col("doc_id"), lit(null).cast("long").as("content_fp"))
-      withFp.withColumn("__seg", lit(segNo))
+      withFp.withColumn("__seg", lit(segNo(s)))
     }.reduce(_ unionByName _)
-    val alive = snapshot(spark, dir).flatMap(_.tombstones(spark)) match {
+    val alive = snap.tombstones(spark) match {
       case None => perSeg
       case Some(d) =>
         val del = broadcast(d.select(col("doc_id").as("__del_id"),
@@ -467,8 +513,8 @@ object IndexStore {
 
   /** Tombstone every doc matching a predicate — the reference's delete path
     * into the search index (duckdb_physical_search_delete.cpp), DataFrame-
-    * native: matched (doc_id, dlen, max_seg) rows are WRITTEN as parquet
-    * under `_DELETES_P/`, deduped against existing tombstones with a
+    * native: matched (doc_id, dlen, max_seg) rows are WRITTEN as one parquet
+    * tombstone generation, deduped against existing tombstones with a
     * distributed anti-join — nothing ever materializes on the driver, so a
     * predicate delete of 10⁶ ids is a join + write like any other DML.
     *
@@ -480,56 +526,49 @@ object IndexStore {
     * numDocs/sumDl accounting in load() never double-subtracts. Readers
     * apply tombstones at load; [[compact]] folds them away permanently. */
   def deleteWhere(spark: SparkSession, dir: String,
-      predicate: org.apache.spark.sql.Column): Unit = {
-    val current = load(spark, dir)
-    val maxSeg = listSegments(spark, dir)
-      .map(_.stripPrefix("seg=").toInt).foldLeft(-1)(math.max)
-    val matched = current.docStats
-      .filter(predicate)
-      .select(col("doc_id").cast("long").as("doc_id"),
-        col("dlen").cast("long").as("dlen"),
-        lit(maxSeg).cast("int").as("max_seg"))
-    writeTombstones(spark, dir, matched)
-  }
+      predicate: org.apache.spark.sql.Column): Unit =
+    commit(spark, dir) { (snap, n) =>
+      val s = snap.getOrElse(throw new IllegalStateException(s"no index at $dir"))
+      stageTombstones(spark, s, s.index(spark).docStats
+        .filter(predicate)
+        .select(col("doc_id").cast("long").as("doc_id"),
+          col("dlen").cast("long").as("dlen"),
+          lit(s.maxSeg).cast("int").as("max_seg")), n).toSeq
+    }
 
-  /** Tombstone an explicit id set (a one-column `doc_id` frame) — the
-    * REFRESH reconciliation leg (ids removed from or updated in the source
-    * view). Ids may include zero-token docs absent from docStats (dlen
-    * defaults 0) and ids never indexed (dropped by the live-manifest
-    * semi-join). Distributed end-to-end, like [[deleteWhere]]. */
-  def deleteIds(spark: SparkSession, dir: String, ids: DataFrame): Unit = {
-    val live = liveDocFps(spark, dir).select(col("doc_id"))
-    val targets = ids.select(col("doc_id")).distinct()
-      .join(live, Seq("doc_id"), "left_semi")
-    val current = load(spark, dir)
-    val maxSeg = listSegments(spark, dir)
-      .map(_.stripPrefix("seg=").toInt).foldLeft(-1)(math.max)
-    val matched = targets
-      .join(current.docStats.select(col("doc_id"), col("dlen")),
+  /** The tombstone rows for an explicit id set (a one-column `doc_id`
+    * frame) — the REFRESH reconciliation leg (ids removed from or updated
+    * in the source view). Ids may include zero-token docs absent from
+    * docStats (dlen defaults 0) and ids never indexed (dropped by the
+    * live-manifest semi-join). Distributed end-to-end, like
+    * [[deleteWhere]]. */
+  private def idsMatched(spark: SparkSession, snap: Snapshot, ids: DataFrame): DataFrame =
+    ids.select(col("doc_id")).distinct()
+      .join(liveDocFps(spark, snap).select(col("doc_id")), Seq("doc_id"), "left_semi")
+      .join(snap.index(spark).docStats.select(col("doc_id"), col("dlen")),
         Seq("doc_id"), "left")
       .select(col("doc_id").cast("long").as("doc_id"),
         coalesce(col("dlen").cast("long"), lit(0L)).as("dlen"),
-        lit(maxSeg).cast("int").as("max_seg"))
-    writeTombstones(spark, dir, matched)
-  }
+        lit(snap.maxSeg).cast("int").as("max_seg"))
 
-  private def writeTombstones(spark: SparkSession, dir: String,
-      matched: DataFrame): Unit = {
-    val snap = snapshot(spark, dir)
-    val fresh = snap.flatMap(_.tombstones(spark)) match {
+  /** Writes the tombstones of `matched` not already in `snap` as the
+    * generation `del=<n>`; None when there are none. A no-op delete writes
+    * NOTHING: the mere existence of a tombstone generation bails the
+    * metadata count fast paths, so an empty one would permanently degrade
+    * them for zero information. */
+  private def stageTombstones(spark: SparkSession, snap: Snapshot,
+      matched: DataFrame, n: Long): Option[String] = {
+    val fresh = snap.tombstones(spark) match {
       case Some(prior) => matched.join(prior.select("doc_id", "max_seg"),
         Seq("doc_id", "max_seg"), "left_anti")
       case None => matched
     }
-    // a no-op delete writes NOTHING: the mere existence of a tombstone
-    // generation bails the metadata count fast paths, so an empty one
-    // would permanently degrade them for zero information
-    if (fresh.isEmpty) return
-    // each delete lands in its own generation dir — the write target is
-    // never a path the dedup anti-join is reading, and never below the
-    // floor, where it would be born retired
-    val next = snap.fold(0)(_.nextGen)
-    fresh.write.mode("overwrite").parquet(s"$dir/_DELETES_P/gen=$next")
+    if (fresh.isEmpty) None
+    else {
+      val name = f"del=$n%08d"
+      fresh.write.mode("overwrite").parquet(snap.version.path(name))
+      Some(name)
+    }
   }
 
   /** Id-list delete, routed through the predicate leg. */
@@ -550,43 +589,30 @@ object IndexStore {
   def hasDeletes(spark: SparkSession, dir: String): Boolean =
     snapshot(spark, dir).exists(_.hasDeletes)
 
-  /** Live segments per the manifest (source of truth — compacted-away
-    * segment dirs may still exist on disk until [[cleanup]]). */
+  /** Live segments of the current version. */
   def listSegments(spark: SparkSession, dir: String): Seq[String] =
-    if (!exists(spark, s"$dir/_SEGMENTS")) Seq.empty
-    else readString(spark, s"$dir/_SEGMENTS").split("\n").filter(_.nonEmpty).toSeq.sorted
+    snapshot(spark, dir).fold(Seq.empty[String])(_.segs)
 
   // ---- reader snapshot -----------------------------------------------------
 
-  /** The on-disk state a [[load]] reads (see the object scaladoc): manifest
-    * content and mtime, and every `_DELETES_P` entry (name, mtime,
-    * length). */
-  private final case class Stamp(manifest: String, manifestMtime: Long,
-      deleteEntries: Seq[(String, Long, Long)])
+  /** Session-independent reader state for one published version. The
+    * segment metadata, parquet relations and tombstone scalars resolve
+    * lazily (once), so metadata-only callers (the freshness gate,
+    * [[metaNumDocs]]) never list files, infer schemas or run a job. */
+  private final class Snapshot(spark: SparkSession, val version: Commit.Version) {
+    private val dir = version.dir
+    val segs: Seq[String] = version.files.filter(_.startsWith("seg=")).sorted
+    /** The live tombstone generations. */
+    val gens: Seq[String] = version.files.filter(_.startsWith("del=")).sorted
+    val hasDeletes: Boolean = gens.nonEmpty
+    def maxSeg: Int = segs.map(segNo).foldLeft(-1)(math.max)
 
-  /** Session-independent reader state for one [[Stamp]]. The parquet
-    * relations and tombstone scalars resolve lazily (once), so
-    * metadata-only callers ([[metaNumDocs]]) never list files, infer
-    * schemas or run a job. */
-  private final class Snapshot(spark: SparkSession, dir: String, val stamp: Stamp) {
-    val segs: Seq[String] = stamp.manifest.split("\n").filter(_.nonEmpty).toSeq.sorted
-    private val metas = segs.map(s => readString(spark, s"$dir/$s/meta.json"))
+    private lazy val metas = segs.map(s => readString(spark, s"$dir/$s/meta.json"))
     private def metaSum(key: String): Long = metas.map { t =>
       s""""$key":(\\d+)""".r.findFirstMatchIn(t).get.group(1).toLong
     }.sum
-    val numDocs: Long = metaSum("numDocs")
-    val sumDl: Long = metaSum("sumDl")
-
-    /** Every tombstone generation on disk. Those below the floor were folded
-      * into a compacted segment and stay only as grace for in-flight plans. */
-    val gens: Seq[Int] = stamp.deleteEntries.map(_._1)
-      .filter(_.startsWith("gen=")).map(_.stripPrefix("gen=").toInt)
-    val floor: Int =
-      if (!stamp.deleteEntries.exists(_._1 == "_FLOOR")) 0
-      else readString(spark, s"$dir/_DELETES_P/_FLOOR").trim.toInt
-    private val liveGens = gens.filter(_ >= floor).sorted
-    val nextGen: Int = (gens :+ (floor - 1)).max + 1
-    val hasDeletes: Boolean = liveGens.nonEmpty
+    lazy val numDocs: Long = metaSum("numDocs")
+    lazy val sumDl: Long = metaSum("sumDl")
 
     /** part name → one relation per segment, in `segs` order. */
     lazy val parts: Map[String, Seq[HadoopFsRelation]] =
@@ -594,11 +620,10 @@ object IndexStore {
         .map(p => p -> segs.map(s => IndexFile.relation(spark, Seq(s"$dir/$s/$p")))).toMap
 
     private lazy val genRel: Option[HadoopFsRelation] =
-      if (liveGens.isEmpty) None
-      else Some(IndexFile.relation(spark, liveGens.map(g => s"$dir/_DELETES_P/gen=$g")))
+      if (gens.isEmpty) None
+      else Some(IndexFile.relation(spark, gens.map(g => s"$dir/$g")))
 
-    /** All live tombstones (doc_id, dlen, max_seg) over `s`: the parquet
-      * generations at or above the floor. */
+    /** All live tombstones (doc_id, dlen, max_seg) over `s`. */
     def tombstones(s: SparkSession): Option[DataFrame] =
       genRel.map(rebind(s, _).dropDuplicates("doc_id", "max_seg"))
 
@@ -610,7 +635,7 @@ object IndexStore {
       def listed(rel: HadoopFsRelation) = IndexFile.listing(rel).map(_._2)
       IndexFiles(dir,
         segs.indices.map { i =>
-          SegmentFiles(segs(i).stripPrefix("seg=").toInt,
+          SegmentFiles(segNo(segs(i)),
             post(i).dataSchema, IndexFile.listing(post(i)),
             stats(i).dataSchema, listed(stats(i)),
             dict(i).dataSchema, listed(dict(i)))
@@ -628,25 +653,11 @@ object IndexStore {
 
     /** The index [[read]] builds over each session, built once: a claimed
       * statement loads it from several rules and optimizer passes, and each
-      * build analyzes every part's frames again. Keyed weakly, so frames
-      * never cross sessions. The frames reference their session, so the
-      * value is held softly: a strong one would keep its weak key reachable
-      * as long as the snapshot lives. */
-    private val built =
-      new java.util.WeakHashMap[SparkSession, java.lang.ref.SoftReference[InvertedIndex]]()
-
-    def index(s: SparkSession): InvertedIndex = built.synchronized {
-      Option(built.get(s)).flatMap(r => Option(r.get)).getOrElse {
-        val idx = read(s, this)
-        built.put(s, new java.lang.ref.SoftReference(idx))
-        idx
-      }
-    }
+      * build analyzes every part's frames again. */
+    val index = new Commit.PerSession[InvertedIndex](read(_, this))
   }
 
-  private val readers = TrieMap.empty[String, Snapshot]
-
-  private def rebind(spark: SparkSession, rel: HadoopFsRelation): DataFrame =
+  private[index] def rebind(spark: SparkSession, rel: HadoopFsRelation): DataFrame =
     spark.baseRelationToDataFrame(rel.copy()(spark))
 
   /** `spark.read.parquet(paths: _*)` opened without a Spark job — see
@@ -654,30 +665,10 @@ object IndexStore {
   private[graft] def readParquet(spark: SparkSession, paths: String*): DataFrame =
     rebind(spark, IndexFile.relation(spark, paths))
 
-  private def stampOf(spark: SparkSession, dir: String): Option[Stamp] = {
-    val f = fs(spark, dir)
-    def status(p: String) =
-      try Some(f.getFileStatus(new Path(p))) catch { case _: FileNotFoundException => None }
-    status(s"$dir/_SEGMENTS").map { man =>
-      val entries =
-        try f.listStatus(new Path(s"$dir/_DELETES_P")).toSeq
-          .map(st => (st.getPath.getName, st.getModificationTime, st.getLen)).sortBy(_._1)
-        catch { case _: FileNotFoundException => Nil }
-      Stamp(readString(spark, s"$dir/_SEGMENTS"), man.getModificationTime, entries)
-    }
-  }
-
-  /** The snapshot matching `dir`'s on-disk state now, reloaded when the
-    * state changed; None when the manifest is missing. */
+  /** The snapshot of the version current for the caller's statement; None
+    * when no version is published. */
   private def snapshot(spark: SparkSession, dir: String): Option[Snapshot] =
-    stampOf(spark, dir) match {
-      case None => readers.remove(dir); None
-      case Some(st) => readers.get(dir).filter(_.stamp == st).orElse {
-        val s = new Snapshot(spark, dir, st)
-        readers.put(dir, s)
-        Some(s)
-      }
-    }
+    Commit.current(spark, dir).map(snapshotOf(spark, _))
 
   private def current(spark: SparkSession, dir: String): Snapshot = {
     val snap = snapshot(spark, dir)
@@ -686,8 +677,8 @@ object IndexStore {
   }
 
   /** Load an index, merging all segments' stats at read time. The frames
-    * are built over `spark` once per reader snapshot; a write, delete or
-    * compaction yields a new snapshot and new frames. */
+    * are built over `spark` once per version; a write, delete or
+    * compaction publishes a new version, with new frames. */
   def load(spark: SparkSession, dir: String): InvertedIndex =
     current(spark, dir).index(spark)
 
@@ -738,25 +729,26 @@ object IndexStore {
   }
 
   /** Compaction (the reference's background compaction task,
-    * maintenance.h:36-44): merge all live segments into one NEW segment,
-    * atomically repoint the manifest at it, and leave the old segment dirs
-    * in place — readers holding lazy plans over them stay valid; call
-    * [[cleanup]] when no reader can still reference them. Tombstone
-    * generations get the same one-compaction grace: the ones folded into
-    * the merged segment are retired by raising the floor, and only those
-    * below the PREVIOUS floor are deleted. */
-  def compact(spark: SparkSession, dir: String): Unit = Metrics.timed(dir, "consolidation") {
-    val snap = current(spark, dir)
+    * maintenance.h:36-44): merge all live segments into one NEW segment and
+    * publish it alone — the segments and tombstone generations it folded
+    * are dropped from the version but stay on disk, so readers holding lazy
+    * plans over them stay valid, until the next compaction publishes and
+    * deletes them (the reference pins the segment set a query opened with
+    * until the query ends — iresearch_snapshot_pinning.test,
+    * ts_offsets_isolation.test; Spark has no per-query pin, so one full
+    * compaction generation of grace stands in for it). Returns how many
+    * segments it retired. */
+  def compact(spark: SparkSession, dir: String): Int = Metrics.timed(dir, "consolidation") {
+    val base = Commit.latest(spark, dir)
+    val snap = base.map(snapshotOf(spark, _)).filter(_.segs.nonEmpty)
+      .getOrElse(throw new IllegalArgumentException(s"no index segments under $dir"))
     val merged = read(spark, snap)
     // the surviving doc-id manifest (with content fingerprints) goes into
     // the merged segment — its docids would otherwise fall back to
     // docstats, losing zero-token docs and every fingerprint (REFRESH would
     // then re-add the zero-token docs and lose update detection after any
-    // compaction). The segment write reads it before the manifest repoints
-    // and before any cleanup can remove the segments it reads.
-    val manifest = liveDocFps(spark, dir)
-    val next = snap.segs
-      .map(_.stripPrefix("seg=").toInt).foldLeft(-1)(math.max) + 1
+    // compaction)
+    val next = snap.maxSeg + 1
     // merged postings/docstats come pre-bucketed/pre-merged from load();
     // strip the bucket column so writeSegment re-derives partitioning.
     val rebuilt = InvertedIndex(
@@ -764,56 +756,8 @@ object IndexStore {
       merged.termDict.drop("bucket"),
       merged.docStats,
       merged.totals)
-    writeSegment(rebuilt, dir, next, Some(manifest))
-    writeStringAtomic(spark, s"$dir/_SEGMENTS", f"seg=$next%05d\n")
-    // the merged segment was written deletes-applied; retire its tombstones
-    // AFTER the swap (a crash in between leaves deletes that now anti-join
-    // nothing — never resurrecting rows)
-    if (snap.nextGen > snap.floor)
-      writeStringAtomic(spark, s"$dir/_DELETES_P/_FLOOR", s"${snap.nextGen}\n")
-    val f = fs(spark, dir)
-    snap.gens.filter(_ < snap.floor)
-      .foreach(g => f.delete(new Path(s"$dir/_DELETES_P/gen=$g"), true))
-  }
-
-  /** Compact with SNAPSHOT-ISOLATED cleanup (the reference pins the segment
-    * set a query opened with until the query ends, so background compaction
-    * never yanks files out from under a reader —
-    * iresearch_snapshot_pinning.test, ts_offsets_isolation.test). Spark has
-    * no per-query segment pin, so we retain one full COMPACT GENERATION of
-    * grace instead: segments retired by THIS compact stay on disk (lazy
-    * plans over them remain executable); segments retired by the PREVIOUS
-    * compact — which have now survived an entire compaction interval, far
-    * past any live query — are deleted. Returns (retiredNow, cleanedPrior).
-    */
-  def compactRetaining(spark: SparkSession, dir: String): (Int, Int) = {
-    val retiredPath = s"$dir/_RETIRED"
-    val prior =
-      if (exists(spark, retiredPath))
-        readString(spark, retiredPath).split("\n").filter(_.nonEmpty).toSeq
-      else Seq.empty
-    val before = listSegments(spark, dir)
-    compact(spark, dir)
-    val f = fs(spark, dir)
-    var cleaned = 0
-    prior.foreach { seg =>
-      val p = new Path(s"$dir/$seg")
-      if (f.exists(p)) { f.delete(p, true); cleaned += 1 }
-    }
-    writeStringAtomic(spark, retiredPath, before.mkString("", "\n", "\n"))
-    (before.size, cleaned)
-  }
-
-  /** Delete segment directories no longer referenced by the manifest. Safe
-    * to run any time no reader holds plans over pre-compaction segments. */
-  def cleanup(spark: SparkSession, dir: String): Int = Metrics.timed(dir, "cleanup") {
-    val live = listSegments(spark, dir).toSet
-    val f = fs(spark, dir)
-    val base = new Path(dir)
-    if (!f.exists(base)) return 0
-    val stale = f.listStatus(base).map(_.getPath)
-      .filter(p => p.getName.startsWith("seg=") && !live.contains(p.getName))
-    stale.foreach(p => f.delete(p, true))
-    stale.length
+    writeSegment(rebuilt, dir, next, Some(liveDocFps(spark, snap)))
+    Commit.publish(spark, dir, base, Seq(segName(next)))
+    snap.segs.size
   }
 }

@@ -1,16 +1,17 @@
 package graft.index
 
-import java.nio.charset.StandardCharsets
 import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import com.fasterxml.jackson.databind.JsonNode
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Cast, In, Literal, SortOrder, UnaryMinus}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, LocalLimit, LogicalPlan, Project, Sort}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Frames
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType, StructType}
 import graft.functions.{InnerProductExpr, L2SqrDistanceExpr, VectorFunctions}
 
 /** IVF (inverted-file) index over an embedding column.
@@ -260,20 +261,9 @@ final case class IvfIndex(
 }
 
 object IvfIndex {
-  private val jvmCache = TrieMap.empty[String, IvfIndex]
-
-  /** Bumped when the on-disk layout changes (sizes sidecar added in .3). */
-  private val IvfFormat = 3
-
-  def defaultRoot: String = sys.env.getOrElse(
-    "GRAFT_INDEX_DIR", sys.props("java.io.tmpdir") + "/graft-index")
-
   /** faiss-style list sizing: ≈√N lists, clamped to something trainable. */
   def autoK(n: Long): Int =
     math.max(4, math.min(4096, math.ceil(math.sqrt(n.toDouble)).toInt))
-
-  private def fs(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** faiss's `max_points_per_centroid`: the coarse quantizer trains on at
     * most this many sampled points per list (ivf/clustering.cpp). */
@@ -403,71 +393,183 @@ object IvfIndex {
     * `cluster=`-partitioned vector store at `path`: hash-partitioned on
     * `cluster` over the session's cores, so each list is exactly one
     * file. */
-  private def writeVectors(assigned: DataFrame, path: String, mode: String): Unit =
+  private def writeVectors(assigned: DataFrame, path: String): Unit =
     assigned.select(col("vec_id"), col("embedding"), col("cluster"))
       .repartition(assigned.sparkSession.sparkContext.defaultParallelism, col("cluster"))
-      .write.mode(mode).partitionBy("cluster").parquet(path)
+      .write.mode("overwrite").partitionBy("cluster").parquet(path)
+
+  /** Writes the fingerprint manifest `(vec_id, fp=xxhash64(embedding))` of
+    * `vectors` in one linear, shuffle-free pass: metadata-scale (16
+    * bytes/vector) beside the embedding corpus, it is what REFRESH reads
+    * instead of the stored embeddings. */
+  private def writeFps(vectors: DataFrame, path: String): Unit =
+    vectors.select(col("vec_id"), xxhash64(col("embedding")).as("fp"))
+      .write.mode("overwrite").parquet(path)
 
   /** Canonical on-disk location for an ensured index. */
   def dirFor(cacheKey: String, k: Int = 0): String = {
     val kTag = if (k > 0) k.toString else "auto"
-    s"$defaultRoot/${cacheKey.replaceAll("[^A-Za-z0-9._-]+", "_")}-ivf$kTag-v${IndexStore.FormatVersion}.$IvfFormat"
+    s"${IndexStore.defaultRoot}/${cacheKey.replaceAll("[^A-Za-z0-9._-]+", "_")}-ivf$kTag-v${IndexStore.FormatVersion}"
   }
 
-  /** Drop the cached load (callers deleting the directory — DROP VECTOR
-    * INDEX — must invalidate). */
-  def invalidate(dir: String): Unit = jvmCache.remove(dir)
+  /** One published version of an IVF index ([[Commit]]), its session-
+    * independent state: the coarse quantizer (centroids, list radii and
+    * sizes, the vector count it was trained on and the requested list
+    * count), the vector roots (`vectors-N`, `cluster=`-partitioned; an
+    * append adds one) and their schema, the fingerprint roots (`fps-N`),
+    * and each quantized code family's trained state with its root
+    * (`<kind>-N`). An index over no vectors names no roots. */
+  private[index] final class State(spark: SparkSession, val version: Commit.Version) {
+    private def field(name: String) = version.field(name).get
+    private def doubles(n: JsonNode): Array[Double] = n.elements().asScala.map(_.asDouble).toArray
+    val lists: Int = field("lists").asInt
+    val trained: Long = field("trained").asLong
+    val centroids: Array[Array[Double]] = field("centroids").elements().asScala.map(doubles).toArray
+    val radii: Array[Double] = doubles(field("radii"))
+    val sizes: Array[Long] = field("sizes").elements().asScala.map(_.asLong).toArray
+    private val schema = DataType.fromJson(field("schema").asText).asInstanceOf[StructType]
+    /** Code family → its serialized trained state. */
+    val codes: Map[String, String] =
+      field("codes").fields().asScala.map(e => e.getKey -> e.getValue.asText).toMap
+    def roots(prefix: String): Seq[String] = version.files.filter(_.startsWith(prefix + "-"))
 
-  /** Whether an ensured index is loadable WITHOUT a build — in the JVM
-    * cache or durable on disk. Claim rules check this before [[ensure]]:
-    * planning must never run a training job inside `transformUp` (a missing
-    * artifact fails the claim and the query keeps its exact sort). */
-  def available(spark: SparkSession, cacheKey: String, k: Int = 0): Boolean = {
+    private def frame(s: SparkSession, prefix: String, empty: => StructType): DataFrame =
+      if (roots(prefix).isEmpty) s.createDataFrame(s.sparkContext.emptyRDD[Row], empty)
+      else IndexStore.rebind(s, relation(prefix))
+    private val relations = TrieMap.empty[String, HadoopFsRelation]
+    private def relation(prefix: String): HadoopFsRelation =
+      relations.getOrElseUpdate(prefix, IndexFile.relation(spark, roots(prefix).map(version.path)))
+
+    /** The fingerprint manifest. */
+    def fps(s: SparkSession): DataFrame =
+      frame(s, "fps", new StructType().add(schema("vec_id")).add("fp", LongType, nullable = false))
+
+    private val indexes = new Commit.PerSession[IvfIndex](s =>
+      IvfIndex(frame(s, "vectors", schema), centroids, radii, sizes))
+    def index(s: SparkSession): IvfIndex = indexes(s)
+
+    private val families = TrieMap.empty[String, Commit.PerSession[QuantizedIvf]]
+    /** The `kind` code family over `s`. */
+    def quantized(s: SparkSession, kind: String): QuantizedIvf =
+      families.getOrElseUpdate(kind, new Commit.PerSession(t =>
+        QuantizedIvf.load(index(t), IndexStore.rebind(t, relation(kind)), kind, codes(kind))))(s)
+  }
+
+  private[index] def stateOf(spark: SparkSession, v: Commit.Version): State =
+    v.memo("ivf")(new State(spark, v))
+
+  /** The version of the index at `dir` a reader sees. */
+  private def current(spark: SparkSession, dir: String): Option[State] =
+    Commit.current(spark, dir).map(stateOf(spark, _))
+
+  /** Whether an ensured index is published — loadable WITHOUT a build.
+    * Claim rules check this before [[ensure]]: planning must never run a
+    * training job inside `transformUp` (a missing artifact fails the claim
+    * and the query keeps its exact sort). */
+  def available(spark: SparkSession, cacheKey: String, k: Int = 0): Boolean =
+    current(spark, dirFor(cacheKey, k)).nonEmpty
+
+  /** Publishes the version after `base` naming `files`, with the coarse
+    * quantizer and the code families' trained states. */
+  private def publish(spark: SparkSession, dir: String, base: Option[Commit.Version],
+      files: Seq[String], centroids: Array[Array[Double]], radii: Array[Double],
+      sizes: Array[Long], codes: Map[String, String], fields: (String, Any)*): Unit =
+    Commit.publish(spark, dir, base, files, Seq[(String, Any)](
+      "centroids" -> centroids, "radii" -> radii, "sizes" -> sizes,
+      "codes" -> codes.asJava) ++ fields: _*)
+
+  /** Builds the index over `embs` with `k` lists (0: auto) into new roots
+    * and publishes them as the version after the latest one, dropping all of
+    * its roots: the first build, a rebuild after rows were removed or
+    * changed, or a recluster. The code families of the replaced version are
+    * retrained over the new vectors and published in the same version. */
+  private def write(spark: SparkSession, dir: String, embs: DataFrame, k: Int,
+      sourceFp: Option[String]): Unit = {
+    val base = Commit.latest(spark, dir)
+    val n = Commit.nextNumber(base)
+    val idx = build(embs, k = k)
+    try {
+      val stored = if (idx.sizes.sum == 0) Seq.empty else Seq(f"vectors-$n%08d", f"fps-$n%08d")
+      if (stored.nonEmpty) {
+        writeVectors(idx.assignments, s"$dir/${stored(0)}")
+        writeFps(idx.assignments, s"$dir/${stored(1)}")
+      }
+      val codes = base.filter(_ => stored.nonEmpty)
+        .fold(Map.empty[String, String])(stateOf(spark, _).codes).map { case (kind, state) =>
+          kind -> QuantizedIvf.stage(idx, dir, kind, QuantizedIvf.trainedM(kind, state), n) }
+      publish(spark, dir, base, stored ++ codes.values.map(_._1),
+        idx.centroids, idx.radii, idx.sizes, codes.map { case (kind, (_, state)) => kind -> state },
+        Seq[(String, Any)]("lists" -> k, "trained" -> idx.sizes.sum,
+          "schema" -> idx.assignments.select("vec_id", "embedding", "cluster").schema.json) ++
+          sourceFp.map("sourceFp" -> _): _*)
+    } finally idx.assignments.unpersist()
+  }
+
+  /** Build-or-load a persisted, cluster-partitioned copy (the durable form:
+    * partition pruning on `cluster=` directories is what makes the probed
+    * fraction of the data the actual IO cost). All metadata IO is Hadoop-FS
+    * so the index works on HDFS/S3 unchanged. */
+  def ensure(spark: SparkSession, embs: => DataFrame, cacheKey: String,
+      k: Int = 0): IvfIndex = {
     val dir = dirFor(cacheKey, k)
-    jvmCache.contains(dir) ||
-      fs(spark, dir).exists(new Path(s"$dir/_CENTROIDS"))
+    current(spark, dir).getOrElse {
+      write(spark, dir, embs, k, None)
+      current(spark, dir).get
+    }.index(spark)
   }
+
+  /** Load a BUILT index straight from its directory — REFRESH paths that
+    * know the dir but not the cacheKey/lists it was ensured under. Throws
+    * when no version is published. */
+  def loadFrom(spark: SparkSession, dir: String): IvfIndex =
+    current(spark, dir).getOrElse(
+      throw new IllegalArgumentException(s"no IVF index at $dir")).index(spark)
+
+  /** Rebuild the index at `dir` over `embs` as one version that replaces
+    * every root (REFRESH or COMPACT after rows were removed or changed),
+    * with the list count it was built with (`lists` when none is
+    * published), the code families it carries, and the source fingerprint
+    * `sourceFp`. */
+  def rebuild(spark: SparkSession, dir: String, embs: DataFrame, lists: Int,
+      sourceFp: Option[String]): Unit =
+    write(spark, dir, embs, Commit.latest(spark, dir).fold(lists)(stateOf(spark, _).lists),
+      sourceFp)
+
+  /** The fingerprint manifest `(vec_id, fp)` of the latest version, opened
+    * without a Spark job. */
+  def fingerprints(spark: SparkSession, dir: String): DataFrame =
+    stateOf(spark, Commit.latest(spark, dir).getOrElse(
+      throw new IllegalArgumentException(s"no IVF index at $dir"))).fps(spark)
 
   /** Incremental append — the faiss add-after-train shape (the reference
     * keeps index snapshots alive across compactions rather than rebuilding,
     * inverted_index_storage.h:267-270): NEW vectors are assigned to the
     * EXISTING centroids in one broadcast-join pass (|delta| × k candidate
-    * rows, min_by per vector — no retraining), appended into the
-    * cluster-partitioned store, and the per-list radii/sizes are merged
-    * with the delta's (max radius / summed count), which keeps the
-    * ball-bound probe EXACT over the grown index.
+    * rows, min_by per vector — no retraining) and written as a new vector
+    * root beside the old ones, with their fingerprints; the per-list
+    * radii/sizes are merged with the delta's (max radius / summed count),
+    * which keeps the ball-bound probe EXACT over the grown index. Code
+    * families are retrained and re-encoded over every vector. All of it is
+    * published as one version, so a reader sees the old index or the grown
+    * one, never vectors outside the radii or codes missing vectors.
     *
     * Appending forever would let the data distribution drift away from the
     * trained centroids (lists bloat, probes widen): once the total grows
     * past `1 + driftRatio` of the size the centroids were TRAINED on, the
-    * index re-clusters from scratch at the new autoK — the (rare,
-    * amortized) full rebuild instead of a per-append one.
+    * index re-clusters from scratch (at the new autoK, or the list count it
+    * was created with) — the (rare, amortized) full rebuild instead of a
+    * per-append one.
     *
-    * Returns (#appended, reclustered?). Single-writer (the DDL path);
-    * concurrent readers keep the old JVM-cached load until invalidated. */
+    * Returns (#appended, reclustered?). Single-writer (the DDL path). */
   def append(spark: SparkSession, dir: String, newVecs: DataFrame,
-      driftRatio: Double = 0.5): (Long, Boolean) = {
+      driftRatio: Double = 0.5, sourceFp: Option[String] = None): (Long, Boolean) = {
     import spark.implicits._
-    val f = fs(spark, dir)
-    recover(spark, dir)
-    def readLines(p: Path): Array[String] = {
-      val in = f.open(p)
-      val txt = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
-      txt.split("\n").filter(_.nonEmpty)
-    }
-    val marker = new Path(s"$dir/_CENTROIDS")
-    require(f.exists(marker), s"no IVF index at $dir to append to")
-    val centroids = readLines(marker).map(_.split(",").map(_.toDouble))
-    val radii = readLines(new Path(s"$dir/_RADII")).map(_.toDouble)
-    val sizes = readLines(new Path(s"$dir/_SIZES")).map(_.toLong)
-    val trainedOn =
-      if (f.exists(new Path(s"$dir/_TRAINED")))
-        readLines(new Path(s"$dir/_TRAINED")).head.toLong
-      else sizes.sum
-
+    val base = Commit.latest(spark, dir).getOrElse(
+      throw new IllegalArgumentException(s"no IVF index at $dir to append to"))
+    val st = stateOf(spark, base)
     // nearest-centroid assignment: broadcast the (tiny) centroid table,
     // min_by over the k candidates per vector — one shuffle on vec_id
-    val cents = centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+    val cents = st.centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
       .toDF("cluster", "cvec")
     val d2 = aggregate(zip_with(col("embedding"), col("cvec"),
       (x, y) => (x.cast("double") - y) * (x.cast("double") - y)), lit(0.0), _ + _)
@@ -479,258 +581,37 @@ object IvfIndex {
         first(col("embedding")).as("embedding"),
         sqrt(min(col("d2"))).as("d"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deltaMeta = assigned.groupBy("cluster")
-      .agg(max(col("d")).as("r"), count(lit(1)).as("n"))
-      .collect().map(r => r.getAs[Number](0).intValue -> ((r.getDouble(1), r.getLong(2)))).toMap
-    val added = deltaMeta.values.map(_._2).sum
-    if (added == 0) { assigned.unpersist(); return (0L, false) }
-    // Metadata FIRST, data second: merged radii/sizes are conservative
-    // upper bounds over the union, so a crash after the metadata rename but
-    // before the parquet append leaves radii slightly too large — the
-    // ball-bound probe stays EXACT, just a touch wider. The reverse order
-    // (data first) had a window where appended vectors sat outside stale
-    // radii and the probe silently missed true neighbors. A crash mid
-    // parquet-append is invisible (task files live under _temporary until
-    // commit), and the interrupted REFRESH re-derives the same delta by
-    // anti-join and retries.
-    val newRadii = radii.indices.map { i =>
-      deltaMeta.get(i).map(m => math.max(radii(i), m._1)).getOrElse(radii(i)) }
-    val newSizes = sizes.indices.map { i =>
-      sizes(i) + deltaMeta.get(i).map(_._2).getOrElse(0L) }
-    writeAtomic(spark, s"$dir/_RADII", newRadii.mkString("\n"))
-    writeAtomic(spark, s"$dir/_SIZES", newSizes.mkString("\n"))
-    writeAtomic(spark, s"$dir/_TRAINED", trainedOn.toString)
-    writeVectors(assigned, s"$dir/vectors", "append")
-    // keep the fingerprint manifest covering the delta (vectors first, fps
-    // second: a crash in between leaves `_FPS_N` behind the `_SIZES` total,
-    // which the next syncedFps detects and re-derives — never a wrong
-    // CLASSIFY, at worst a one-time linear re-derive)
-    if (f.exists(new Path(s"$dir/fps/_SUCCESS"))) {
-      assigned.select(col("vec_id"), xxhash64(col("embedding")).as("fp"))
-        .write.mode("append").parquet(s"$dir/fps")
-      val prevN = {
-        val p = new Path(s"$dir/_FPS_N")
-        if (!f.exists(p)) -1L // pre-_FPS_N manifest: leave absent → re-derive
-        else {
-          val in = f.open(p)
-          try new String(in.readAllBytes(), StandardCharsets.UTF_8).trim.toLong
-          finally in.close()
-        }
+    try {
+      val deltaMeta = assigned.groupBy("cluster")
+        .agg(max(col("d")).as("r"), count(lit(1)).as("n"))
+        .collect().map(r => r.getAs[Number](0).intValue -> ((r.getDouble(1), r.getLong(2)))).toMap
+      val added = deltaMeta.values.map(_._2).sum
+      if (added == 0) (0L, false)
+      else if (st.sizes.sum + added > st.trained * (1.0 + driftRatio)) {
+        // drift: re-cluster the whole store at the new scale
+        write(spark, dir, st.index(spark).assignments.select("vec_id", "embedding")
+          .unionByName(assigned.select("vec_id", "embedding")), st.lists, sourceFp)
+        (added, true)
+      } else {
+        val n = base.next
+        val (vecRoot, fpsRoot) = (f"vectors-$n%08d", f"fps-$n%08d")
+        writeVectors(assigned, s"$dir/$vecRoot")
+        writeFps(assigned, s"$dir/$fpsRoot")
+        val radii = st.radii.indices.map { i =>
+          deltaMeta.get(i).fold(st.radii(i))(m => math.max(st.radii(i), m._1)) }.toArray
+        val sizes = st.sizes.indices.map(i => st.sizes(i) + deltaMeta.get(i).fold(0L)(_._2)).toArray
+        lazy val grown = IvfIndex(
+          IndexStore.readParquet(spark, (st.roots("vectors") :+ vecRoot).map(base.path): _*),
+          st.centroids, radii, sizes)
+        val codes = st.codes.map { case (kind, state) =>
+          kind -> QuantizedIvf.stage(grown, dir, kind, QuantizedIvf.trainedM(kind, state), n) }
+        publish(spark, dir, Some(base),
+          base.files.filterNot(f => st.codes.keys.exists(k => f.startsWith(k + "-"))) ++
+            Seq(vecRoot, fpsRoot) ++ codes.values.map(_._1),
+          st.centroids, radii, sizes, codes.map { case (kind, (_, state)) => kind -> state },
+          sourceFp.map("sourceFp" -> _).toSeq: _*)
+        (added, false)
       }
-      if (prevN >= 0)
-        writeAtomic(spark, s"$dir/_FPS_N", (prevN + added).toString)
-    } else writeFps(spark, dir, readVectors(spark, dir))
-    assigned.unpersist()
-    val total = sizes.sum + added
-    if (total > trainedOn * (1.0 + driftRatio)) {
-      // drift: re-cluster the full store at the new scale. The whole new
-      // index (vectors + centroids/radii/sizes) is staged durably first,
-      // then committed via the _SWAP_PENDING roll-forward marker — a crash
-      // at any point leaves either the old index intact (marker absent) or
-      // a completed swap on the next recover() (marker present, every step
-      // idempotent). No delete-then-rename window remains.
-      val idx = build(readVectors(spark, dir).select("vec_id", "embedding"))
-      try writeVectors(idx.assignments, s"$dir/vectors_next", "overwrite")
-      finally idx.assignments.unpersist()
-      writeAtomic(spark, s"$dir/_CENTROIDS.next",
-        idx.centroids.map(_.mkString(",")).mkString("\n"))
-      writeAtomic(spark, s"$dir/_RADII.next", idx.radii.mkString("\n"))
-      writeAtomic(spark, s"$dir/_SIZES.next", idx.sizes.mkString("\n"))
-      writeAtomic(spark, s"$dir/_TRAINED.next", total.toString)
-      writeAtomic(spark, s"$dir/_SWAP_PENDING", "1") // commit point
-      completeSwap(spark, dir)
-      invalidate(dir)
-      (added, true)
-    } else {
-      invalidate(dir)
-      (added, false)
-    }
-  }
-
-  /** Writes the fingerprint manifest `(vec_id, fp=xxhash64(embedding))` of
-    * `vectors` — the stored vectors, or the assignment a build writes them
-    * from — in one linear, shuffle-free pass. The manifest is
-    * metadata-scale (16 bytes/vector) beside the embedding corpus; it is
-    * what REFRESH reads instead of the stored embeddings. `_FPS_N` records
-    * its row count, observed on the write, so the sync check stays a
-    * driver file read, not a job, and `_FPS_SCHEMA` its schema, so opening
-    * it infers nothing. */
-  def writeFps(spark: SparkSession, dir: String, vectors: DataFrame): Unit = {
-    val (fps, rows) = Observed.count(
-      vectors.select(col("vec_id"), xxhash64(col("embedding")).as("fp")))
-    fps.write.mode("overwrite").parquet(s"$dir/fps")
-    writeAtomic(spark, s"$dir/_FPS_SCHEMA", fps.schema.json)
-    writeAtomic(spark, s"$dir/_FPS_N", rows().toString)
-  }
-
-  /** The stored vectors of the index at `dir`, opened without a job. */
-  private def readVectors(spark: SparkSession, dir: String): DataFrame =
-    IndexStore.readParquet(spark, s"$dir/vectors")
-
-  /** The fingerprint manifest, self-healing: absent (pre-r19 artifact), of
-    * unrecorded schema, or out of sync with the vector store (crash between
-    * a vectors append and its fps append) → re-derive. The check compares
-    * two DRIVER-side counters — `_FPS_N` (bumped with every fps write)
-    * against the `_SIZES` total (bumped with every vectors write) — and the
-    * manifest opens with its recorded schema: zero Spark jobs on the steady
-    * path. */
-  def syncedFps(spark: SparkSession, dir: String): DataFrame = {
-    val f = fs(spark, dir)
-    def readAll(name: String): Option[String] = {
-      val p = new Path(s"$dir/$name")
-      if (!f.exists(p)) None
-      else {
-        val in = f.open(p)
-        try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8))
-        finally in.close()
-      }
-    }
-    def schema = readAll("_FPS_SCHEMA").map(DataType.fromJson(_).asInstanceOf[StructType])
-    val storedN = readAll("_SIZES")
-      .map(_.split("\n").filter(_.nonEmpty).map(_.toLong).sum)
-    val fpsN = readAll("_FPS_N").flatMap(_.trim.toLongOption)
-    val inSync = f.exists(new Path(s"$dir/fps/_SUCCESS")) && schema.nonEmpty &&
-      storedN.nonEmpty && fpsN == storedN
-    if (!inSync) {
-      // loudly: the self-heal costs a corpus scan, and a production refresh
-      // loop must not mistake a PERSISTENT counter mismatch for steady-state
-      // cost (r19 VERDICT #8)
-      System.err.println(s"[graft] IvfIndex fps manifest out of sync at " +
-        s"$dir (_FPS_N=${fpsN.getOrElse("absent")} vs _SIZES total=" +
-        s"${storedN.getOrElse("absent")}, schema ${if (schema.isEmpty) "absent" else "recorded"}): " +
-        s"re-deriving manifest and reconciling _SIZES from the vector store")
-      writeFps(spark, dir, readVectors(spark, dir))
-      // Reconcile `_SIZES` from the store itself (r19 ADVICE #1): append()
-      // writes _SIZES BEFORE the vectors parquet append (crash-safety order
-      // — radii/sizes must stay conservative upper bounds), so a crash in
-      // that window followed by a retried REFRESH can leave _SIZES
-      // permanently above the true row count — and then _FPS_N (actual
-      // rows) never equals the _SIZES total and EVERY refresh re-derives
-      // the manifest, paying the corpus scan this manifest exists to
-      // remove. Rewriting _SIZES from actual per-cluster counts (exact ≤
-      // the conservative bound; radii untouched, still upper bounds)
-      // restores the zero-job steady path after ONE heal. The list count
-      // comes from `_CENTROIDS` (one line per list), so an absent `_SIZES`
-      // heals the same way.
-      readAll("_CENTROIDS").foreach { centroids =>
-        val lists = centroids.split("\n").count(_.nonEmpty)
-        val actual = readVectors(spark, dir)
-          .groupBy(col("cluster")).count().collect()
-          .map(r => r.getAs[Number](0).intValue -> r.getLong(1)).toMap
-        writeAtomic(spark, s"$dir/_SIZES",
-          (0 until lists).map(i => actual.getOrElse(i, 0L)).mkString("\n"))
-      }
-    }
-    spark.read.schema(schema.get).parquet(s"$dir/fps")
-  }
-
-  private[index] def writeAtomic(spark: SparkSession, path: String, s: String): Unit = {
-    val f = fs(spark, path)
-    val tmp = new Path(path + ".tmp")
-    val out = f.create(tmp, true)
-    try out.write(s.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(tmp.toUri,
-        spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, new Path(path), org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
-  private val metaFiles = Seq("_CENTROIDS", "_RADII", "_SIZES", "_TRAINED")
-
-  /** Roll the staged recluster forward. Every step checks before acting, so
-    * this is safe to re-run from any crash point after the _SWAP_PENDING
-    * commit marker was written (the staged `.next` files are durable by
-    * then). */
-  private def completeSwap(spark: SparkSession, dir: String): Unit = {
-    val f = fs(spark, dir)
-    if (f.exists(new Path(s"$dir/vectors_next"))) {
-      if (f.exists(new Path(s"$dir/vectors")))
-        require(f.rename(new Path(s"$dir/vectors"), new Path(s"$dir/vectors_stale")),
-          s"recluster swap: could not move old store aside at $dir")
-      require(f.rename(new Path(s"$dir/vectors_next"), new Path(s"$dir/vectors")),
-        s"recluster swap: could not move new store in at $dir")
-    }
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      new Path(dir).toUri, spark.sparkContext.hadoopConfiguration)
-    metaFiles.foreach { m =>
-      val next = new Path(s"$dir/$m.next")
-      if (f.exists(next))
-        fc.rename(next, new Path(s"$dir/$m"), org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    }
-    f.delete(new Path(s"$dir/vectors_stale"), true)
-    f.delete(new Path(s"$dir/_SWAP_PENDING"), false)
-  }
-
-  /** Crash recovery, run before any read/append of a persisted index:
-    * marker present → the staged recluster is complete on disk, finish the
-    * swap; marker absent → any `vectors_next` / `.next` staging is from a
-    * crash BEFORE the commit point, so the old index is intact and the
-    * leftovers are deleted. */
-  private def recover(spark: SparkSession, dir: String): Unit = {
-    val f = fs(spark, dir)
-    if (!f.exists(new Path(dir))) return
-    if (f.exists(new Path(s"$dir/_SWAP_PENDING"))) {
-      completeSwap(spark, dir)
-      invalidate(dir)
-    } else {
-      f.delete(new Path(s"$dir/vectors_next"), true)
-      metaFiles.foreach(m => f.delete(new Path(s"$dir/$m.next"), false))
-    }
-  }
-
-  /** Build-or-load a persisted, cluster-partitioned copy (the durable form:
-    * partition pruning on `cluster=` directories is what makes the probed
-    * fraction of the data the actual IO cost). All metadata IO is Hadoop-FS
-    * so the index works on HDFS/S3 unchanged. */
-  def ensure(spark: SparkSession, embs: => DataFrame, cacheKey: String,
-      k: Int = 0): IvfIndex = {
-    val dir = dirFor(cacheKey, k)
-    jvmCache.getOrElseUpdate(dir, {
-      val f = fs(spark, dir)
-      recover(spark, dir)
-      val marker = new Path(s"$dir/_CENTROIDS")
-      if (!f.exists(marker)) {
-        val idx = build(embs, k = k)
-        try {
-          writeVectors(idx.assignments, s"$dir/vectors", "overwrite")
-          // fingerprint manifest (ids + one xxhash64 per vector — the text
-          // path's r15 MANIFEST shape): REFRESH classifies removed/changed
-          // vectors by fp-diff against this instead of re-reading the stored
-          // embedding corpus. Written before the availability marker so a
-          // crash mid-build rebuilds both together.
-          writeFps(spark, dir, idx.assignments)
-        } finally idx.assignments.unpersist()
-        // atomic writes, _CENTROIDS (the availability marker) LAST: a crash
-        // mid-build leaves no marker and the next ensure rebuilds over it
-        writeAtomic(spark, s"$dir/_RADII", idx.radii.mkString("\n"))
-        writeAtomic(spark, s"$dir/_SIZES", idx.sizes.mkString("\n"))
-        writeAtomic(spark, s"$dir/_TRAINED", idx.sizes.sum.toString)
-        writeAtomic(spark, marker.toString, idx.centroids.map(_.mkString(",")).mkString("\n"))
-      }
-      readFrom(spark, dir)
-    })
-  }
-
-  /** Load a BUILT index straight from its directory — REFRESH paths that
-    * know the dir but not the cacheKey/lists it was ensured under. Throws
-    * when no availability marker exists. */
-  def loadFrom(spark: SparkSession, dir: String): IvfIndex =
-    jvmCache.getOrElseUpdate(dir, {
-      recover(spark, dir)
-      require(fs(spark, dir).exists(new Path(s"$dir/_CENTROIDS")),
-        s"no IVF index at $dir")
-      readFrom(spark, dir)
-    })
-
-  private def readFrom(spark: SparkSession, dir: String): IvfIndex = {
-    val f = fs(spark, dir)
-    def readLines(p: Path): Array[String] = {
-      val in = f.open(p)
-      val txt = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
-      txt.split("\n").filter(_.nonEmpty)
-    }
-    val centroids = readLines(new Path(s"$dir/_CENTROIDS")).map(_.split(",").map(_.toDouble))
-    val radii = readLines(new Path(s"$dir/_RADII")).map(_.toDouble)
-    val sizes = readLines(new Path(s"$dir/_SIZES")).map(_.toLong)
-    IvfIndex(readVectors(spark, dir), centroids, radii, sizes)
+    } finally assigned.unpersist()
   }
 }

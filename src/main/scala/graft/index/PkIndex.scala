@@ -1,7 +1,5 @@
 package graft.index
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -17,9 +15,10 @@ import org.apache.spark.sql.functions._
   * distributed parquet, no rowids), so the index is a per-FILE zone-map
   * sidecar: for each data file, (min key, max key, row count), written once
   * at CREATE SECONDARY INDEX from ONE metadata-only aggregation over the
-  * `_metadata.file_path` virtual column. The manifest is #files-sized —
+  * `_metadata.file_path` virtual column. The zones are #files-sized —
   * metadata, not data: at 100 TB / 128 MB files that is ~800k rows of a few
-  * strings, read once per JVM and cached.
+  * strings, written as one `zones-N.json` root of a [[Commit]] version and
+  * parsed once per version.
   *
   * `WHERE pk = x` (and small IN lists) then prunes to the files whose
   * [min,max] covers a key BEFORE the scan — for data clustered/sorted by
@@ -64,20 +63,12 @@ object PkIndex {
     * FileIndex listings (`file:/x/y`) regardless of scheme spelling. */
   def pathKey(p: String): String = new Path(p).toUri.getPath
 
-  private val cache = TrieMap.empty[String, Manifest]
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   private def slug(s: String): String = s.replaceAll("[^A-Za-z0-9._-]+", "_")
 
   def dirFor(cacheKey: String, col: String): String =
-    s"${IndexStore.defaultRoot}/${slug(cacheKey)}-pk-$col-v1"
-
-  def invalidate(dir: String): Unit = cache.remove(dir)
-
-  def available(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(s"$dir/manifest.json")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+    s"${IndexStore.defaultRoot}/${slug(cacheKey)}-pk-$col-v${IndexStore.FormatVersion}"
 
   /** True iff the persisted manifest's file set matches the table's CURRENT
     * listing — a rewrite (compaction, re-ingest, overwrite) invalidates the
@@ -122,46 +113,34 @@ object PkIndex {
       node.put("cnt", r.getLong(3))
       mapper.writeValueAsString(node)
     }
-    val f = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    f.mkdirs(new Path(dir))
-    val tmp = new Path(s"$dir/manifest.json.tmp")
-    val out = f.create(tmp, true)
+    // the zones of every rebuild are a new root; the version that names it
+    // drops the previous one
+    val base = Commit.latest(spark, dir)
+    val root = f"zones-${Commit.nextNumber(base)}%08d.json"
+    val out = IndexStore.fsFor(spark, dir).create(new Path(s"$dir/$root"), true)
     try out.write((s"""{"keyType":"$kt"}""" +: lines).mkString("", "\n", "\n")
       .getBytes("UTF-8"))
     finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(tmp.toUri,
-        spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, new Path(s"$dir/manifest.json"),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    cache.remove(dir)
+    Commit.publish(spark, dir, base, Seq(root))
     rows.length
   }
 
-  /** Load (JVM-cached) — a plan-time driver FS read like the IndexCatalog's
-    * catalog.json, never a Spark job. */
+  /** The zones of the current version, parsed once per version — a
+    * plan-time driver FS read like the IndexCatalog's catalog.json, never a
+    * Spark job. */
   def load(spark: SparkSession, dir: String): Option[Manifest] =
-    cache.get(dir).orElse {
-      val p = new Path(s"$dir/manifest.json")
-      val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!f.exists(p)) None
-      else {
-        val in = f.open(p)
-        val content = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-        val ls = content.linesIterator.filter(_.trim.nonEmpty).toSeq
-        val head = mapper.readTree(ls.head)
-        val kt = head.get("keyType").asText()
-        val zones = ls.tail.map { l =>
-          val n = mapper.readTree(l)
-          if (kt == "long")
-            Zone(n.get("file").asText(), n.get("min").asLong, n.get("max").asLong, "", "",
-              n.get("cnt").asLong)
-          else
-            Zone(n.get("file").asText(), 0L, 0L, n.get("min").asText(), n.get("max").asText(),
-              n.get("cnt").asLong)
-        }
-        val m = Manifest(kt, zones)
-        cache.put(dir, m)
-        Some(m)
-      }
-    }
+    Commit.current(spark, dir).map(v => v.memo("pk") {
+      val ls = IndexStore.readString(spark, v.path(v.files.head))
+        .linesIterator.filter(_.trim.nonEmpty).toSeq
+      val kt = mapper.readTree(ls.head).get("keyType").asText()
+      Manifest(kt, ls.tail.map { l =>
+        val n = mapper.readTree(l)
+        if (kt == "long")
+          Zone(n.get("file").asText(), n.get("min").asLong, n.get("max").asLong, "", "",
+            n.get("cnt").asLong)
+        else
+          Zone(n.get("file").asText(), 0L, 0L, n.get("min").asText(), n.get("max").asText(),
+            n.get("cnt").asLong)
+      })
+    })
 }

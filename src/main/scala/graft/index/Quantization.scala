@@ -1,8 +1,7 @@
 package graft.index
 
-import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -377,9 +376,9 @@ object Quantization {
 }
 
 /** A quantized codes dataset attached to an ensured [[IvfIndex]]: the codes
-  * live under the index dir (`sq8/` or `pq/`), `cluster=`-partitioned like
-  * the raw vectors so the ball-bound probe prunes the same directories, and
-  * a kNN is two bounded stages:
+  * are a root of the index's version (`sq8-N`, `pq-N`, …),
+  * `cluster=`-partitioned like the raw vectors so the ball-bound probe
+  * prunes the same directories, and a kNN is two bounded stages:
   *
   *   1. probe: read CODES for the probed lists only, approximate top
   *      `rerankFactor × k` by the asymmetric (query-vs-code) distance —
@@ -571,161 +570,96 @@ final case class QuantizedIvf(ivf: IvfIndex, codes: DataFrame,
 object QuantizedIvf {
   import Quantization._
 
-  private val jvmCache = scala.collection.concurrent.TrieMap.empty[String, QuantizedIvf]
-
-  private def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def readText(spark: SparkSession, p: String): String = {
-    val in = fs(spark, p).open(new Path(p))
-    try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+  /** The family `kind` over `ivf`, its codes and its serialized state. */
+  private[index] def load(ivf: IvfIndex, codes: DataFrame, kind: String,
+      state: String): QuantizedIvf = kind match {
+    case "sq8" => QuantizedIvf(ivf, codes, Some(Sq8.deserialize(state)), None)
+    case "sq4" => QuantizedIvf(ivf, codes, None, None, sq4 = Some(Sq4.deserialize(state)))
+    case "pq" => QuantizedIvf(ivf, codes, None, Some(Pq.deserialize(state)))
+    case "rabitq" => QuantizedIvf(ivf, codes, None, None, rabitq = true)
   }
 
-  /** Build-or-load the SQ8 codes for an ensured IVF index. */
-  def ensureSq8(spark: SparkSession, ivf: IvfIndex, ivfDir: String): QuantizedIvf =
-    jvmCache.getOrElseUpdate(s"$ivfDir/sq8", {
-      val meta = s"$ivfDir/_SQ8_META"
-      val f = fs(spark, ivfDir)
-      if (!f.exists(new Path(meta))) {
-        val q = Sq8.train(ivf.assignments)
-        ivf.assignments
-          .select(col("vec_id"), col("cluster"), q.encode(col("embedding")).as("code"))
-          .repartition(col("cluster"))
-          .write.mode("overwrite").partitionBy("cluster").parquet(s"$ivfDir/sq8")
-        IvfIndex.writeAtomic(spark, meta, q.serialize) // marker LAST
-      }
-      val q = Sq8.deserialize(readText(spark, meta))
-      QuantizedIvf(ivf, spark.read.parquet(s"$ivfDir/sq8"), Some(q), None)
-    })
+  /** The PQ subspace count a serialized PQ state was trained with. */
+  private[index] def trainedM(kind: String, state: String): Option[Int] =
+    if (kind == "pq") Some(state.split("\n").head.split(",")(0).toInt) else None
 
-  /** Build-or-load the PQ codes for an ensured IVF index. */
-  def ensurePq(spark: SparkSession, ivf: IvfIndex, ivfDir: String,
-      m: Int, ksub: Int = 16): QuantizedIvf =
-    jvmCache.getOrElseUpdate(s"$ivfDir/pq", {
-      import spark.implicits._
-      val meta = s"$ivfDir/_PQ_META"
-      val f = fs(spark, ivfDir)
-      if (!f.exists(new Path(meta))) {
-        val q = Pq.train(ivf, m, ksub)
-        val cents = ivf.centroids.zipWithIndex
-          .map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cluster", "cvec")
-        ivf.assignments
-          .join(broadcast(cents), "cluster")
+  /** Trains the `kind` family over `ivf` (PQ with `m` subspaces) and writes
+    * its codes as the root `<kind>-<n>` under `dir`, `cluster=`-partitioned
+    * like the vectors: (root, serialized trained state). Training is one
+    * pass over the vectors (SQ: per-dimension min/max; PQ: a bounded
+    * sample of centroid residuals); RaBitQ trains nothing — its
+    * "quantizer" is the centroid set the IVF already carries, so it
+    * encodes each vector's residual sign bits and norm. */
+  private[index] def stage(ivf: IvfIndex, dir: String, kind: String, m: Option[Int],
+      n: Long): (String, String) = {
+    val spark = ivf.assignments.sparkSession
+    import spark.implicits._
+    lazy val cents = ivf.centroids.zipWithIndex
+      .map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cluster", "cvec")
+    val vecs = ivf.assignments
+    val (codes, state) = kind match {
+      case "sq8" =>
+        val q = Sq8.train(vecs)
+        (vecs.select(col("vec_id"), col("cluster"), q.encode(col("embedding")).as("code")),
+          q.serialize)
+      case "sq4" =>
+        val q = Sq4.train(vecs)
+        (vecs.select(col("vec_id"), col("cluster"), q.encode(col("embedding")).as("code")),
+          q.serialize)
+      case "pq" =>
+        val q = Pq.train(ivf, m.get)
+        (vecs.join(broadcast(cents), "cluster")
           .select(col("vec_id"), col("cluster"),
-            q.encode(col("embedding"), col("cvec")).as("code"))
-          .repartition(col("cluster"))
-          .write.mode("overwrite").partitionBy("cluster").parquet(s"$ivfDir/pq")
-        IvfIndex.writeAtomic(spark, meta, q.serialize)
-      }
-      val q = Pq.deserialize(readText(spark, meta))
-      QuantizedIvf(ivf, spark.read.parquet(s"$ivfDir/pq"), None, Some(q))
-    })
-
-  /** Build-or-load the SQ4 codes (4-bit packed, ceil(d/2) bytes/vector). */
-  def ensureSq4(spark: SparkSession, ivf: IvfIndex, ivfDir: String): QuantizedIvf =
-    jvmCache.getOrElseUpdate(s"$ivfDir/sq4", {
-      val meta = s"$ivfDir/_SQ4_META"
-      val f = fs(spark, ivfDir)
-      if (!f.exists(new Path(meta))) {
-        val q = Sq4.train(ivf.assignments)
-        ivf.assignments
-          .select(col("vec_id"), col("cluster"), q.encode(col("embedding")).as("code"))
-          .repartition(col("cluster"))
-          .write.mode("overwrite").partitionBy("cluster").parquet(s"$ivfDir/sq4")
-        IvfIndex.writeAtomic(spark, meta, q.serialize)
-      }
-      val q = Sq4.deserialize(readText(spark, meta))
-      QuantizedIvf(ivf, spark.read.parquet(s"$ivfDir/sq4"), None, None, sq4 = Some(q))
-    })
-
-  /** Build-or-load the RaBitQ codes: 1 sign bit per dim of the centroid
-    * residual (d/8 bytes — a 32× storage cut) + the residual norm scalar
-    * per vector. No trained state at all: the "quantizer" is the cluster
-    * centroid set the IVF already carries, so a segment append never
-    * retrains (reference: the rotation seed is a constant,
-    * quantizer.cpp:85). */
-  def ensureRabitq(spark: SparkSession, ivf: IvfIndex, ivfDir: String): QuantizedIvf =
-    jvmCache.getOrElseUpdate(s"$ivfDir/rabitq", {
-      import spark.implicits._
-      val meta = s"$ivfDir/_RABITQ_META"
-      val f = fs(spark, ivfDir)
-      if (!f.exists(new Path(meta))) {
-        val cents = ivf.centroids.zipWithIndex
-          .map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cluster", "cvec")
-        ivf.assignments
-          .join(broadcast(cents), "cluster")
+            q.encode(col("embedding"), col("cvec")).as("code")), q.serialize)
+      case "rabitq" =>
+        (vecs.join(broadcast(cents), "cluster")
           .select(col("vec_id"), col("cluster"),
             call_function("rabitq_bits", col("embedding"), col("cvec")).as("code"),
             sqrt(graft.functions.VectorFunctions.l2SqrDistance(col("embedding"),
-              col("cvec").cast("array<float>"))).cast("float").as("rnorm"))
-          .repartition(col("cluster"))
-          .write.mode("overwrite").partitionBy("cluster").parquet(s"$ivfDir/rabitq")
-        IvfIndex.writeAtomic(spark, meta, "rabitq")
-      }
-      QuantizedIvf(ivf, spark.read.parquet(s"$ivfDir/rabitq"), None, None,
-        rabitq = true)
-    })
+              col("cvec").cast("array<float>"))).cast("float").as("rnorm")), "rabitq")
+    }
+    val root = f"$kind-$n%08d"
+    codes.repartition(col("cluster"))
+      .write.mode("overwrite").partitionBy("cluster").parquet(s"$dir/$root")
+    (root, state)
+  }
 
-  /** Whether a quantized code family is loadable WITHOUT a build — in the
-    * JVM cache or durable on disk (the `_<KIND>_META` marker is written
-    * LAST by every build, so its presence implies complete codes). Claim
-    * rules check this before [[ensureKind]]: planning must never run a
-    * train+encode job inside `transformUp` (r17 ADVICE — e.g. a
-    * registration restored from the persisted catalog on a fresh cluster
-    * whose code artifact is gone); a missing family fails the quantized
-    * probe and the claim falls back to the raw IVF path. */
+  /** Whether a quantized code family is published for the IVF index at
+    * `ivfDir` — loadable WITHOUT a build. Claim rules check this before
+    * [[ensureKind]]: planning must never run a train+encode job inside
+    * `transformUp` (r17 ADVICE — e.g. a registration restored from the
+    * persisted catalog on a fresh cluster whose code artifact is gone); a
+    * missing family fails the quantized probe and the claim falls back to
+    * the raw IVF path. */
   def availableKind(spark: SparkSession, ivfDir: String, kind: String): Boolean =
-    jvmCache.contains(s"$ivfDir/$kind") ||
-      fs(spark, ivfDir).exists(new Path(s"$ivfDir/_${kind.toUpperCase}_META"))
+    Commit.current(spark, ivfDir).exists(v => IvfIndex.stateOf(spark, v).codes.contains(kind))
 
-  /** Build-or-load by kind name (the `quant=` DDL option values). PQ uses
-    * the DDL's `pq_m` when given; the unset default mirrors the reference
+  /** Build-or-load by kind name (the `quant=` DDL option values): a family
+    * not yet published is trained over `ivf`, the index at `ivfDir`, and
+    * published as the next version of that index. PQ uses the DDL's `pq_m`
+    * when given; the unset default mirrors the reference
     * (catalog/index.cpp:367-384): the divisor of the dimension whose
     * subspace width dim/m lands closest to kTargetDsub = 2, ties to the
     * SMALLER m (the reference's ascending scan replaces only on a strictly
-    * smaller diff). A persisted family loads with its OWN trained m from
-    * `_PQ_META` regardless. */
+    * smaller diff). A published family loads with its OWN trained m
+    * regardless. */
   def ensureKind(spark: SparkSession, ivf: IvfIndex, ivfDir: String,
-      kind: String, pqM: Option[Int] = None): QuantizedIvf = kind match {
-    case "sq8" => ensureSq8(spark, ivf, ivfDir)
-    case "sq4" => ensureSq4(spark, ivf, ivfDir)
-    case "rabitq" => ensureRabitq(spark, ivf, ivfDir)
-    case "pq" =>
-      val dim = ivf.centroids.head.length
-      ensurePq(spark, ivf, ivfDir, m = pqM.getOrElse(
-        (1 to dim).filter(dim % _ == 0).minBy(m => math.abs(dim / m - 2))))
-    case other => throw new IllegalArgumentException(s"unknown quant '$other'")
-  }
-
-  /** Invalidate cached loads under an index dir (DROP / REFRESH paths). */
-  def invalidate(ivfDir: String): Unit = {
-    jvmCache.remove(s"$ivfDir/sq8"); jvmCache.remove(s"$ivfDir/pq")
-    jvmCache.remove(s"$ivfDir/sq4"); jvmCache.remove(s"$ivfDir/rabitq")
-  }
-
-  /** Rebuild whichever code families exist under an IVF dir after its
-    * vectors changed (REFRESH append / recluster): codes must cover every
-    * vector or the probe silently misses the new ones. Rebuild is one
-    * encode pass over the assignments — the same cost the initial build
-    * paid — and only runs for families that were actually materialized. */
-  def refreshCodes(spark: SparkSession, ivf: IvfIndex, ivfDir: String): Unit = {
-    val f = fs(spark, ivfDir)
-    def drop(meta: String, sub: String): Boolean = {
-      val existed = f.exists(new Path(meta))
-      if (existed) { f.delete(new Path(meta), false)
-        f.delete(new Path(s"$ivfDir/$sub"), true) }
-      existed
-    }
-    invalidate(ivfDir)
-    if (drop(s"$ivfDir/_SQ8_META", "sq8")) ensureSq8(spark, ivf, ivfDir)
-    if (drop(s"$ivfDir/_SQ4_META", "sq4")) ensureSq4(spark, ivf, ivfDir)
-    if (drop(s"$ivfDir/_RABITQ_META", "rabitq")) ensureRabitq(spark, ivf, ivfDir)
-    val pqMeta = s"$ivfDir/_PQ_META"
-    if (f.exists(new Path(pqMeta))) {
-      val m = readText(spark, pqMeta).split("\n").head.split(",")(0).toInt
-      f.delete(new Path(pqMeta), false)
-      f.delete(new Path(s"$ivfDir/pq"), true)
-      ensurePq(spark, ivf, ivfDir, m = m)
-    }
+      kind: String, pqM: Option[Int] = None): QuantizedIvf = {
+    require(Set("sq8", "sq4", "pq", "rabitq").contains(kind), s"unknown quant '$kind'")
+    val published = Commit.current(spark, ivfDir).map(IvfIndex.stateOf(spark, _))
+      .filter(_.codes.contains(kind))
+    published.getOrElse {
+      val base = Commit.latest(spark, ivfDir).getOrElse(
+        throw new IllegalArgumentException(s"no IVF index at $ivfDir"))
+      val st = IvfIndex.stateOf(spark, base)
+      val m = if (kind != "pq") None else pqM.orElse {
+        val dim = ivf.centroids.head.length
+        Some((1 to dim).filter(dim % _ == 0).minBy(m => math.abs(dim / m - 2)))
+      }
+      val (root, state) = stage(ivf, ivfDir, kind, m, base.next)
+      Commit.publish(spark, ivfDir, Some(base), base.files :+ root,
+        "codes" -> (st.codes + (kind -> state)).asJava)
+      IvfIndex.stateOf(spark, Commit.current(spark, ivfDir).get)
+    }.quantized(spark, kind)
   }
 }

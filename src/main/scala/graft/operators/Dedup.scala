@@ -59,28 +59,10 @@ object Dedup {
     * whole-stage codegen exactly there (r16 VERDICT item 8; DedupSpec
     * pins UDF-vs-native value parity). Tokens materialize as their own
     * attribute first (the shinglesOf HOF contract — see TextExprs). */
-  /** Legacy UDF form of the signature kernel — kept ONLY as the A/B arm
-    * for benchmarking the native expression against it on a quiet machine
-    * (r17 VERDICT: "dedup_minhash_lsh stays weak until a quiet-machine
-    * UDF-vs-native A/B on the r17 tree lands"). Same arithmetic, same
-    * values (DedupSpec pins parity); the difference is codegen. */
-  private lazy val minhashUdf =
-    org.apache.spark.sql.functions.udf(
-      (sh: scala.collection.immutable.Seq[String], n: Int) =>
-        graft.analysis.Analyzers.minHashSignature(sh, n))
-
-  private def kernelIsUdf: Boolean =
-    // the SYSPROP first, so one JVM can switch kernels between runs even
-    // when the env var is set; the env var is the out-of-band override
-    sys.props.get("graft.minhash.kernel").orElse(
-      sys.env.get("GRAFT_MINHASH_KERNEL")).contains("udf")
-
   def minHashSignatures(docs: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 128, shingleN: Int = 3): DataFrame = {
     val shingles = graft.functions.TextExprs.shinglesOf(col("ts"), shingleN)
-    val sig =
-      if (kernelIsUdf) minhashUdf(shingles, lit(numHashes))
-      else graft.functions.TextExprs.minhashOf(shingles, numHashes)
+    val sig = graft.functions.TextExprs.minhashOf(shingles, numHashes)
     docs.select(col(idCol).as("doc_id"),
         graft.functions.TextExprs.tokens(col(textCol)).as("ts"))
       .select(col("doc_id"), sig.as("sig"))

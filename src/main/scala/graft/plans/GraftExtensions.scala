@@ -854,7 +854,8 @@ private[plans] object AnnShapes {
   }
 
   /** The lazily-ensured IVF index for a catalog entry. DDL builds eagerly,
-    * so the normal path is a JVM-cache hit or a metadata-only disk load; if
+    * so the normal path is the published version, already opened or a
+    * metadata-only disk load; if
     * the on-disk artifact was deleted AFTER registration, the claim FAILS
     * (throw → caller's catch keeps the exact sort) rather than running a
     * training job inside the optimizer — plan time must never run jobs. */

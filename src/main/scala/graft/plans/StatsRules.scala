@@ -18,8 +18,9 @@ import graft.search.{IndexCatalog, TsQuery}
 private[plans] object StatsShapes {
 
   /** Source fingerprint of a file relation from its (already-listed, cached)
-    * FileIndex — format-compatible with the `_SOURCE_FP` the DDL persists at
-    * CREATE/REFRESH (`count:bytes:maxMtime`, Ddl.sourceFingerprint). No FS
+    * FileIndex — format-compatible with the source fingerprint the DDL
+    * publishes in the index's manifest at CREATE/REFRESH
+    * (`count:bytes:maxMtime`, Ddl.sourceFingerprint). No FS
     * listing happens here: the relation's FileIndex already holds the file
     * statuses it scanned. */
   def relationFingerprint(rel: HadoopFsRelation): Option[String] =
@@ -37,14 +38,12 @@ private[plans] object StatsShapes {
 
   /** True iff the index at `segDir` was built from EXACTLY the bytes this
     * relation scans — the soundness gate for answering a query from index
-    * artifacts without touching the base table. Unknown (pre-fingerprint
-    * index, non-file relation) counts as NOT fresh: fall back to the scan. */
+    * artifacts without touching the base table. The stored side is a field
+    * of the index version the statement reads. Unknown (no fingerprint
+    * recorded, non-file relation) counts as NOT fresh: fall back to the
+    * scan. */
   def indexFresh(spark: SparkSession, segDir: String, rel: HadoopFsRelation): Boolean = {
-    val stored =
-      if (IndexStore.exists(spark, s"$segDir/_SOURCE_FP"))
-        Some(IndexStore.readString(spark, s"$segDir/_SOURCE_FP").trim)
-      else None
-    (stored, relationFingerprint(rel)) match {
+    (IndexStore.sourceFp(spark, segDir), relationFingerprint(rel)) match {
       case (Some(a), Some(b)) => a == b
       case _ => false
     }
@@ -109,7 +108,7 @@ private[plans] object StatsShapes {
   *     semi-joined across conjuncts. Both shapes are built as plan nodes,
   *     with no nested optimizer run.
   *
-  * Both legs are gated on the `_SOURCE_FP` fingerprint (same bytes the DDL
+  * Both legs are gated on the source fingerprint (same bytes the DDL
   * fingerprinted at CREATE/REFRESH); anything stale, partial, deleted-from,
   * or unresolvable falls through to the ordinary claim path, which is
   * always result-correct. At 100 TB leg 1 replaces a 100k-file footer pass

@@ -143,7 +143,7 @@ object Vectors {
     val query = Tables.embeddings(s, dir).filter(col("vec_id") === 0)
       .select(col("embedding")).head().getSeq[Float](0)
     val ivf = IvfIndex.ensure(s, Tables.embeddings(s, dir), s"$dir-embeddings")
-    graft.index.QuantizedIvf.ensureSq8(s, ivf, IvfIndex.dirFor(s"$dir-embeddings"))
+    graft.index.QuantizedIvf.ensureKind(s, ivf, IvfIndex.dirFor(s"$dir-embeddings"), "sq8")
       .knn(query, k = 10, rerankFactor = 5)
       .select(col("vec_id"))
   }
@@ -158,7 +158,7 @@ object Vectors {
     val query = Tables.embeddings(s, dir).filter(col("vec_id") === 0)
       .select(col("embedding")).head().getSeq[Float](0)
     val ivf = IvfIndex.ensure(s, Tables.embeddings(s, dir), s"$dir-embeddings")
-    graft.index.QuantizedIvf.ensurePq(s, ivf, IvfIndex.dirFor(s"$dir-embeddings"), m = 8)
+    graft.index.QuantizedIvf.ensureKind(s, ivf, IvfIndex.dirFor(s"$dir-embeddings"), "pq", Some(8))
       .knn(query, k = 10, rerankFactor = 30)
       .select(col("vec_id"))
       .join(knnExact(s, dir), "vec_id")
@@ -175,7 +175,7 @@ object Vectors {
     val query = Tables.embeddings(s, dir).filter(col("vec_id") === 0)
       .select(col("embedding")).head().getSeq[Float](0)
     val ivf = IvfIndex.ensure(s, Tables.embeddings(s, dir), s"$dir-embeddings")
-    graft.index.QuantizedIvf.ensureSq4(s, ivf, IvfIndex.dirFor(s"$dir-embeddings"))
+    graft.index.QuantizedIvf.ensureKind(s, ivf, IvfIndex.dirFor(s"$dir-embeddings"), "sq4")
       .knn(query, k = 10, rerankFactor = 15)
       .select(col("vec_id"))
   }
@@ -190,7 +190,7 @@ object Vectors {
     val query = Tables.embeddings(s, dir).filter(col("vec_id") === 0)
       .select(col("embedding")).head().getSeq[Float](0)
     val ivf = IvfIndex.ensure(s, Tables.embeddings(s, dir), s"$dir-embeddings")
-    graft.index.QuantizedIvf.ensureRabitq(s, ivf, IvfIndex.dirFor(s"$dir-embeddings"))
+    graft.index.QuantizedIvf.ensureKind(s, ivf, IvfIndex.dirFor(s"$dir-embeddings"), "rabitq")
       .knn(query, k = 10, rerankFactor = 30)
       .select(col("vec_id"))
       .join(knnExact(s, dir), "vec_id")
@@ -204,7 +204,7 @@ object Vectors {
     val query = Tables.embeddings(s, dir).filter(col("vec_id") === 0)
       .select(col("embedding")).head().getSeq[Float](0)
     val ivf = IvfIndex.ensure(s, Tables.embeddings(s, dir), s"$dir-embeddings")
-    graft.index.QuantizedIvf.ensureSq8(s, ivf, IvfIndex.dirFor(s"$dir-embeddings"))
+    graft.index.QuantizedIvf.ensureKind(s, ivf, IvfIndex.dirFor(s"$dir-embeddings"), "sq8")
       .knnIp(query, k = 10, rerankFactor = 5)
       .select(col("vec_id"))
   }
@@ -224,7 +224,7 @@ object Vectors {
         graft.functions.VectorFunctions.innerProduct(col("embedding"),
           typedlit(query)).as("ip"))
       .orderBy(col("ip").desc, col("vec_id")).limit(10).select("vec_id")
-    graft.index.QuantizedIvf.ensurePq(s, ivf, IvfIndex.dirFor(s"$dir-embeddings"), m = 8)
+    graft.index.QuantizedIvf.ensureKind(s, ivf, IvfIndex.dirFor(s"$dir-embeddings"), "pq", Some(8))
       .knnIp(query, k = 10, rerankFactor = 30)
       .select(col("vec_id"))
       .join(exactIp, "vec_id")

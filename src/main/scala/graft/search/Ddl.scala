@@ -453,10 +453,11 @@ object Ddl {
 
   /** Fingerprint of an index's SOURCE data: file count, total bytes, max
     * mtime over the view's input files — one metadata listing, no data read.
-    * Persisted to `<dir>/_SOURCE_FP` at CREATE/REFRESH; DESCRIBE recomputes
-    * and compares, surfacing `stale: true` when the source was rewritten
-    * after the index was last (re)built (the reference tracks the analogue
-    * via its collection tick vs index snapshot tick). */
+    * Taken before CREATE/REFRESH reads the source and published in the
+    * index's manifest with what it wrote; DESCRIBE recomputes and compares,
+    * surfacing `stale: true` when the source was rewritten after the index
+    * was last (re)built (the reference tracks the analogue via its
+    * collection tick vs index snapshot tick). */
   private def sourceFingerprint(spark: SparkSession, view: String): Option[String] =
     try {
       val files = spark.table(view).inputFiles
@@ -473,10 +474,6 @@ object Ddl {
       }
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  private def writeSourceFp(spark: SparkSession, dir: String, view: String): Unit =
-    sourceFingerprint(spark, view).foreach(fp =>
-      IndexStore.writeStringAtomic(spark, s"$dir/_SOURCE_FP", fp + "\n"))
-
   /** VACUUM (COMPACT_TABLE) leg for a VECTOR index: physical removal of
     * deleted/updated rows means rebuilding the artifact (and any quantized
     * code families) from the live rows — the vector analogue of folding
@@ -488,28 +485,25 @@ object Ddl {
     val annEntry = e.annKey.flatMap(k =>
       IndexCatalog.ann.values.find(_.cacheKey == k)).getOrElse(
       throw new IllegalStateException(s"no ANN registration for ${e.dir}"))
-    val p = new org.apache.hadoop.fs.Path(e.dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    graft.index.IvfIndex.invalidate(e.dir)
-    graft.index.QuantizedIvf.invalidate(e.dir)
-    // lists tag round-trips through the dir name (dirFor's -ivf<k>|auto-)
-    val lists = "-ivf(\\d+)-".r.findFirstMatchIn(e.dir).map(_.group(1).toInt)
-      .getOrElse(0)
-    val ivf = graft.index.IvfIndex.ensure(spark,
-      IndexCatalog.annSource(spark, root, annEntry), annEntry.cacheKey, lists)
-    annEntry.quant.foreach(qv => if (ivf.centroids.nonEmpty)
-      graft.index.QuantizedIvf.ensureKind(spark, ivf, e.dir, qv, annEntry.pqM))
+    val fp = sourceFingerprint(spark, e.view)
+    graft.index.IvfIndex.rebuild(spark, e.dir, IndexCatalog.annSource(spark, root, annEntry),
+      annEntry.lists, fp)
+    ensureQuant(spark, e.dir, annEntry.quant, annEntry.pqM)
     spark.catalog.refreshByPath(e.dir)
-    writeSourceFp(spark, e.dir, e.view)
+  }
+
+  /** Builds the declared code family of the vector index at `dir` if the
+    * index has vectors to train it on and does not carry it yet. */
+  private def ensureQuant(spark: SparkSession, dir: String, quant: Option[String],
+      pqM: Option[Int]): Unit = quant.foreach { qv =>
+    val ivf = graft.index.IvfIndex.loadFrom(spark, dir)
+    if (ivf.centroids.nonEmpty) graft.index.QuantizedIvf.ensureKind(spark, ivf, dir, qv, pqM)
   }
 
   /** `(stale, detail)` rows for DESCRIBE: "unknown" when either side of the
-    * comparison is unavailable (non-parquet view, pre-fingerprint index). */
+    * comparison is unavailable (non-parquet view, no fingerprint recorded). */
   private def stalenessRows(spark: SparkSession, dir: String, view: String): Seq[(String, String)] = {
-    val stored =
-      if (IndexStore.exists(spark, s"$dir/_SOURCE_FP"))
-        Some(IndexStore.readString(spark, s"$dir/_SOURCE_FP").trim)
-      else None
+    val stored = IndexStore.sourceFp(spark, dir)
     val now = sourceFingerprint(spark, view)
     (stored, now) match {
       case (Some(a), Some(b)) => Seq("stale" -> (a != b).toString)
@@ -697,11 +691,11 @@ object Ddl {
           IndexStore.registerViews(spark, exprDir, name)
         return result(spark, s"created $name")
       }
+      val fp = sourceFingerprint(spark, view)
       val df = spark.table(view)
         .withColumn(keyCol, org.apache.spark.sql.functions.expr(exprRaw))
-      IndexStore.ensure(spark, df, cacheKey, idCol, keyCol, analyzer)
+      IndexStore.ensure(spark, df, cacheKey, idCol, keyCol, analyzer, sourceFp = fp)
       val dir = exprDir
-      writeSourceFp(spark, dir, view)
       IndexStore.registerViews(spark, dir, name)
       // root path of the scan the view wraps → claimable by expression
       // equality (bare-scan views only; anything else stays SQL-queryable
@@ -791,6 +785,7 @@ object Ddl {
       // the predicate is a WHERE filter on the backfill scan — Catalyst
       // pushes it into the parquet read (the reference shows it as a
       // Column Filter in the backfill SEQ_SCAN, inverted_index_partial.test)
+      val fp = sourceFingerprint(spark, view)
       val source = predicate.foldLeft(spark.table(view))(
         (df, p) => df.filter(org.apache.spark.sql.functions.expr(p)))
       // segment_docs_max: commit-on-flush backfill rotation (reference
@@ -799,12 +794,12 @@ object Ddl {
       opts.get("segment_docs_max").map(_.toLong) match {
         case Some(max) =>
           IndexStore.ensureRotating(spark, source, cacheKey, idCol, textCol,
-            analyzer, max)
+            analyzer, max, sourceFp = fp)
         case None =>
-          IndexStore.ensure(spark, source, cacheKey, idCol, textCol, analyzer)
+          IndexStore.ensure(spark, source, cacheKey, idCol, textCol, analyzer,
+            sourceFp = fp)
       }
       val dir = fastDir
-      writeSourceFp(spark, dir, view)
       IndexStore.registerViews(spark, dir, name)
       IndexStore.registerStatsTables(spark, dir, name) // CBO sees the manifest stats
       // typed-field postings + INCLUDE columnstore sidecar: one linear
@@ -909,6 +904,7 @@ object Ddl {
           s"CREATE VECTOR INDEX: view $view is not a bare parquet scan"))
       val entry = IndexCatalog.AnnEntry(effKey, idCol, embCol, metric,
         quantOpt, lists, pqM)
+      val fp = sourceFingerprint(spark, view)
       val builtIvf = graft.index.IvfIndex.ensure(spark,
         IndexCatalog.annSource(spark, root, entry), effKey, lists)
       quantOpt.foreach { qv =>
@@ -935,7 +931,7 @@ object Ddl {
         IndexCatalog.registerFields(root,
           IndexCatalog.FieldsEntry(vecFieldsDir, idCol, Seq.empty, includeCols))
       }
-      writeSourceFp(spark, vecDir, view)
+      IndexStore.recordSourceFp(spark, vecDir, fp)
       catalog.put(name, Entry(vecDir, view, vecSpec, s"vector:$metric",
         annKey = Some(effKey), idCol = idCol))
       CatalogStore.persist(spark)
@@ -968,18 +964,15 @@ object Ddl {
         case Some(e) =>
           val p = new org.apache.hadoop.fs.Path(e.dir)
           p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-          IndexStore.invalidate(e.dir)
           IndexCatalog.unregisterText(e.dir)
           IndexCatalog.unregisterPk(e.dir)
           graft.index.FieldStore.drop(spark, e.dir + "-fields")
           IndexCatalog.unregisterFields(e.dir + "-fields")
           CatalogStore.dropped.put(e.dir + "-fields", true)
-          graft.index.PkIndex.invalidate(e.dir)
           // tombstone for the persist merge: another session's catalog row
           // pointing at this (now deleted) artifact must not be resurrected
           CatalogStore.dropped.put(e.dir, true)
           e.annKey.foreach { k =>
-            graft.index.IvfIndex.invalidate(e.dir)
             IndexCatalog.unregisterAnn(k)
             CatalogStore.dropped.put(k, true)
           }
@@ -1008,15 +1001,14 @@ object Ddl {
           // snapshot-isolated: segments retired NOW stay on disk one full
           // compaction generation (a query planned pre-compact still reads
           // them); segments retired by the PREVIOUS compact are deleted
-          val (retired, cleaned) = IndexStore.compactRetaining(spark, e.dir)
+          val retired = IndexStore.compact(spark, e.dir)
           // the session's <name>_termdict/_postings views cache a file
           // index over the pre-compaction segment dirs — re-register so
           // they list the new segment (and drop the stale cached listing)
           spark.catalog.refreshByPath(e.dir)
           IndexStore.registerViews(spark, e.dir, name)
           IndexStore.registerStatsTables(spark, e.dir, name)
-          result(spark, s"compacted $name ($retired segments retired, " +
-            s"$cleaned prior-generation segments removed)")
+          result(spark, s"compacted $name ($retired segments retired)")
         case Some(_) =>
           throw new IllegalArgumentException(
             s"COMPACT SEARCH INDEX applies to search indexes; $name is a vector index")
@@ -1035,7 +1027,7 @@ object Ddl {
           // metadata-only aggregation — cost ∝ #files, not table bytes).
           // Without this there was no way to repair a stale manifest short
           // of DROP+CREATE, and the generic text branch below would throw
-          // from IndexStore.allDocIds on a dir with no _SEGMENTS.
+          // on a dir with no segments.
           val root = scanRootOf(spark, e.view)
             .orElse(IndexCatalog.pk.collectFirst {
               case ((tableRoot, _), pe) if pe.dir == e.dir => tableRoot
@@ -1089,6 +1081,7 @@ object Ddl {
           //                  segments (null fp) reconcile by id only.
           import org.apache.spark.sql.functions.{col => fcol, xxhash64,
             coalesce => fcoalesce, when => fwhen}
+          val fp = sourceFingerprint(spark, e.view)
           val existing = IndexStore.liveDocFps(spark, e.dir)
           val sourceF = source.withColumn("__fp", xxhash64(fcol(keyCol)))
           // ONE narrow classify frame (r19 fast path, extended to the change
@@ -1130,15 +1123,15 @@ object Ddl {
               // no report: the classify stage was empty and dropped
               val Seq(nNew, nChanged, nRemoved) = graft.index.Observed.result(clsCounts)
                 .fold(Seq(0L, 0L, 0L))(r => Seq(r.getLong(0), r.getLong(1), r.getLong(2)))
-              if (nNew + nChanged + nRemoved == 0) 0L
-              else {
-                // tombstones FIRST (they scope to the current newest segment),
-                // then the append lands the re-indexed content in a NEWER one
-                IndexStore.deleteIds(spark, e.dir,
-                  classified.filter(fcol("__cls").isin("removed", "changed"))
-                    .select(fcol("__cid").as("doc_id")))
-                val n = nNew + nChanged
-                if (n > 0) {
+              val n = nNew + nChanged
+              // tombstones scope to the current newest segment and the
+              // re-indexed content lands in a NEWER one; both, and the
+              // source fingerprint, publish as one version
+              IndexStore.refresh(spark, e.dir,
+                Some(classified.filter(fcol("__cls").isin("removed", "changed"))
+                  .select(fcol("__cid").as("doc_id")))
+                  .filter(_ => nChanged + nRemoved > 0),
+                Some(n).filter(_ > 0).map { _ =>
                   // the delta docs: ONE semi-join of the source against the
                   // persisted id set (new ∪ changed) — the only other
                   // source evaluation a changeful refresh pays before the
@@ -1148,13 +1141,11 @@ object Ddl {
                     .select(fcol("__cid"))
                   val toAdd = sourceF.join(toAddIds,
                     sourceF(idCol) === toAddIds("__cid"), "left_semi")
-                  val idx = graft.index.InvertedIndex.build(toAdd, idCol, keyCol, e.analyzer)
-                  IndexStore.appendSegment(idx, e.dir,
-                    Some(toAdd.select(fcol(idCol).as("doc_id"),
-                      fcol("__fp").as("content_fp"))))
-                }
-                n
-              }
+                  (graft.index.InvertedIndex.build(toAdd, idCol, keyCol, e.analyzer),
+                    toAdd.select(fcol(idCol).as("doc_id"), fcol("__fp").as("content_fp")))
+                },
+                fp)
+              n
             } finally classified.unpersist()
           spark.catalog.refreshByPath(e.dir)
           IndexStore.registerViews(spark, e.dir, name)
@@ -1177,7 +1168,6 @@ object Ddl {
               s"${name}_stored_tbl")
             spark.catalog.refreshByPath(sidecar)
           }
-          writeSourceFp(spark, e.dir, e.view)
           result(spark, s"refreshed $name (+$added docs)")
         case Some(e) =>
           // vector index: assign new vectors to the EXISTING centroids and
@@ -1214,7 +1204,8 @@ object Ddl {
           // rebuild — the same accepted odds as the text path's content_fp
           // manifest (r15), and the same place a production system would
           // trade a corpus diff for a hash.
-          val existing = graft.index.IvfIndex.syncedFps(spark, e.dir)
+          val fp = sourceFingerprint(spark, e.view)
+          val existing = graft.index.IvfIndex.fingerprints(spark, e.dir)
           val sourceFp = source
             .select(col("vec_id"), xxhash64(col("embedding")).as("_sfp"))
           // removed / changed / NEW in one aggregate: a no-change REFRESH
@@ -1230,37 +1221,27 @@ object Ddl {
           val (removed, changed, newN) =
             (delta.getLong(0), delta.getLong(1), delta.getLong(2))
           if (removed > 0 || changed > 0) {
-            val p = new org.apache.hadoop.fs.Path(e.dir)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-            graft.index.IvfIndex.invalidate(e.dir)
-            graft.index.QuantizedIvf.invalidate(e.dir)
-            val lists = "-ivf(\\d+)-".r.findFirstMatchIn(e.dir)
-              .map(_.group(1).toInt).getOrElse(0)
-            val ivf = graft.index.IvfIndex.ensure(spark, source,
-              entry.cacheKey, lists)
-            entry.quant.foreach(qv => if (ivf.centroids.nonEmpty)
-              graft.index.QuantizedIvf.ensureKind(spark, ivf, e.dir, qv,
-                entry.pqM))
+            // the rebuild publishes as one version beside the old one: a
+            // kNN planned before it still reads the vectors it dropped
+            graft.index.IvfIndex.rebuild(spark, e.dir, source, entry.lists, fp)
+            ensureQuant(spark, e.dir, entry.quant, entry.pqM)
             spark.catalog.refreshByPath(e.dir)
-            writeSourceFp(spark, e.dir, e.view)
             result(spark, s"refreshed $name (rebuilt: -$removed vectors, " +
               s"~$changed updated)")
           } else if (newN == 0) {
             // nothing to reconcile: the classifier job IS the whole refresh
+            IndexStore.recordSourceFp(spark, e.dir, fp)
             spark.catalog.refreshByPath(e.dir)
-            writeSourceFp(spark, e.dir, e.view)
             result(spark, s"refreshed $name (+0 vectors)")
           } else {
             val newVecs = source.join(existing.select("vec_id"),
               Seq("vec_id"), "left_anti")
-            val (added, reclustered) = graft.index.IvfIndex.append(spark, e.dir, newVecs)
+            // the append re-encodes the quantized code families
+            // (sq8/sq4/pq/rabitq) over the grown vectors in the same version
+            val (added, reclustered) =
+              graft.index.IvfIndex.append(spark, e.dir, newVecs, sourceFp = fp)
+            IndexStore.recordSourceFp(spark, e.dir, fp)
             spark.catalog.refreshByPath(e.dir)
-            // quantized code families (sq8/sq4/pq/rabitq) must cover the new
-            // vectors too — rebuild whichever exist under this dir
-            if (added > 0 || reclustered)
-              graft.index.QuantizedIvf.refreshCodes(spark,
-                graft.index.IvfIndex.loadFrom(spark, e.dir), e.dir)
-            writeSourceFp(spark, e.dir, e.view)
             result(spark, s"refreshed $name (+$added vectors)" +
               (if (reclustered) " [reclustered]" else ""))
           }

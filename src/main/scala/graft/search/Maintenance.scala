@@ -22,8 +22,8 @@ import graft.index.IndexStore
   *  - **compaction tick**: `COMPACT SEARCH INDEX <name>` for any text index
   *    whose live segment count reached `compactMinSegments` — keeping the
   *    per-query segment fan-in bounded under continuous ingest. COMPACT is
-  *    snapshot-isolated (IndexStore.compactRetaining): in-flight queries
-  *    keep their segment files for a full compaction generation.
+  *    snapshot-isolated (IndexStore.compact): in-flight queries keep their
+  *    segment files for a full compaction generation.
   *
   * All work runs through the SAME DDL verbs a user would issue, so the
   * scheduler adds no second code path — it is purely a clock. Errors on one

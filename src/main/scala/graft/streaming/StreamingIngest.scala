@@ -72,16 +72,13 @@ object StreamingIngest {
   * compaction_interval, compaction_max_segments). */
 object Maintenance {
 
-  /** Compact when the segment count exceeds `maxSegments`; stale segment
-    * dirs are removed afterwards (safe here: compaction runs in the same
-    * process that owns the index, and readers resolve segments through the
-    * manifest at load time). */
+  /** Compact when the segment count exceeds `maxSegments`; the segments a
+    * compaction retires are deleted by the next one. */
   def compactIfNeeded(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, maxSegments: Int): Boolean = {
     val n = IndexStore.listSegments(spark, indexDir).size
     if (n > maxSegments) {
       IndexStore.compact(spark, indexDir)
-      IndexStore.cleanup(spark, indexDir)
       true
     } else false
   }

@@ -227,10 +227,17 @@ class IndexBuildSpec extends AnyFunSuite {
       }.get
       val textDir = graft.search.IndexCatalog.lookupText(root, "body", dict).get.segDir
       val ivfDir = IvfIndex.dirFor(graft.search.IndexCatalog.lookupAnn(root, "emb", "l2").get.cacheKey)
-      IndexStore.invalidate(textDir)
-      IvfIndex.invalidate(ivfDir)
-      val (text, textJobs) = RefreshJobCount.jobsIn(spark, "load")(IndexStore.load(spark, textDir))
-      val (vecs, ivfJobs) = RefreshJobCount.jobsIn(spark, "load-ivf")(IvfIndex.loadFrom(spark, ivfDir))
+      // a manifest names its files relative to the index directory, so a
+      // copy is an index this JVM has never opened: a cold open
+      def coldCopy(dir: String): String = {
+        val (src, dst) = (new org.apache.hadoop.fs.Path(dir), new org.apache.hadoop.fs.Path(s"$dir-cold"))
+        val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, true, spark.sparkContext.hadoopConfiguration)
+        dst.toString
+      }
+      val (textCold, ivfCold) = (coldCopy(textDir), coldCopy(ivfDir))
+      val (text, textJobs) = RefreshJobCount.jobsIn(spark, "load")(IndexStore.load(spark, textCold))
+      val (vecs, ivfJobs) = RefreshJobCount.jobsIn(spark, "load-ivf")(IvfIndex.loadFrom(spark, ivfCold))
       assert(textJobs == 0 && ivfJobs == 0, s"load ran $textJobs jobs, loadFrom $ivfJobs")
       assert(text.numDocs == 300 && vecs.sizes.sum == 300)
       // the relations opened without a job are the ones Spark's read resolves
@@ -238,7 +245,11 @@ class IndexBuildSpec extends AnyFunSuite {
         assert(IndexStore.readParquet(spark, s"${segOf(textDir)}/$p").schema ==
           spark.read.parquet(s"${segOf(textDir)}/$p").schema, p)
       }
-      assert(vecs.assignments.schema == spark.read.parquet(s"$ivfDir/vectors").schema)
+      assert(vecs.assignments.schema == spark.read.parquet(s"$ivfCold/vectors-00000001").schema)
+      Seq(textCold, ivfCold).foreach { d =>
+        val p = new org.apache.hadoop.fs.Path(d)
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      }
     } finally {
       spark.sql(s"DROP INDEX IF EXISTS $idx")
       spark.sql(s"DROP TABLE IF EXISTS $tbl")

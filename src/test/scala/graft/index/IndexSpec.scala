@@ -149,14 +149,18 @@ class IndexSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSeq
     assert(got == want, "BM25 stats must not drift across appended segments")
 
-    // compaction: merge to one segment, same answers; old segments cleanable
-    IndexStore.compact(spark, dir)
+    // compaction: merge to one segment, same answers; the old segments are
+    // retired, and deleted when the next compaction publishes
+    assert(IndexStore.compact(spark, dir) == 2, "two pre-compaction segments")
     val compacted = IndexStore.load(spark, dir)
     assert(IndexStore.listSegments(spark, dir).size == 1)
     assert(dict(compacted) == dict(idx))
     assert(compacted.bm25TopK(Seq("vector", "dup", "query"), 10)
       .collect().map(_.getLong(0)).toSeq == want)
-    assert(IndexStore.cleanup(spark, dir) == 2, "two pre-compaction segments")
+    def onDisk(seg: String) = new java.io.File(s"$dir/$seg").exists()
+    assert(onDisk("seg=00000") && onDisk("seg=00001"), "retired segments stay one compaction")
+    IndexStore.compact(spark, dir)
+    assert(!onDisk("seg=00000") && !onDisk("seg=00001") && onDisk("seg=00002"))
     assert(ids(IndexStore.load(spark, dir).term("vector")) == ids(idx.term("vector")))
   }
 
@@ -217,8 +221,9 @@ class IndexSpec extends AnyFunSuite {
       docs.filter(col("doc_id") % 2 =!= 0), "doc_id", "text", "whitespace")
     assert(del.numDocs == expect.numDocs && del.sumDl == expect.sumDl)
     assert(ids(del.term("vector")) == ids(expect.term("vector")))
-    assert(new java.io.File(s"$dir/_DELETES_P").exists(),
-      "predicate deletes must persist as a parquet dataset")
+    assert(Commit.latest(spark, dir).get.files.exists(f =>
+        f.startsWith("del=") && new java.io.File(s"$dir/$f").isDirectory),
+      "predicate deletes must persist as a parquet dataset the version names")
     // a repeated identical delete must not double-subtract the stats
     IndexStore.deleteWhere(spark, dir, col("doc_id") % 2 === 0)
     val again = IndexStore.load(spark, dir)
@@ -260,7 +265,6 @@ class IndexSpec extends AnyFunSuite {
     val f = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     f.delete(new org.apache.hadoop.fs.Path(dir), true)
-    IndexStore.invalidate(dir)
     val n = docs.count()
     val rotated = IndexStore.ensureRotating(spark, docs, "rotation-spec",
       "doc_id", "text", "whitespace", docsMax = n / 4)

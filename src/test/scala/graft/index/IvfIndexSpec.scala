@@ -1,6 +1,8 @@
 package graft.index
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import graft.{Tables, TestSpark}
 
@@ -43,7 +45,6 @@ class IvfIndexSpec extends AnyFunSuite {
     val f = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     f.delete(new org.apache.hadoop.fs.Path(dir), true)
-    IvfIndex.invalidate(dir)
     val twoThirds = embs.filter(col("vec_id") % 3 < 2).select("vec_id", "embedding")
     val rest = embs.filter(col("vec_id") % 3 === 2).select("vec_id", "embedding")
     val before = IvfIndex.ensure(spark, twoThirds, dirKey)
@@ -66,7 +67,7 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(got == want, "post-append claimed knn must equal brute force")
     // idempotent: appending the same ids again is a no-op
     assert(IvfIndex.append(spark, dir,
-      rest.join(spark.read.parquet(s"$dir/vectors").select("vec_id"),
+      rest.join(IvfIndex.loadFrom(spark, dir).assignments.select("vec_id"),
         Seq("vec_id"), "left_anti"))._1 == 0)
 
     // drift: tripling the trained volume re-clusters at the new autoK
@@ -80,88 +81,59 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(rebuilt.sizes.sum == embs.count() * 3)
     assert(rebuilt.numLists > nLists, "re-cluster must retrain at the new scale")
     f.delete(new org.apache.hadoop.fs.Path(dir), true)
-    IvfIndex.invalidate(dir)
   }
 
-  test("fingerprint manifest tracks build and append; syncedFps self-heals") {
+  test("fingerprint manifest tracks build and append; an append that crashes before " +
+      "publish leaves the previous version serving, and its staged files are never read") {
     val dirKey = "ivf-fps-spec"
     val dir = IvfIndex.dirFor(dirKey)
     val f = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     f.delete(new org.apache.hadoop.fs.Path(dir), true)
-    IvfIndex.invalidate(dir)
     val twoThirds = embs.filter(col("vec_id") % 3 < 2).select("vec_id", "embedding")
     val rest = embs.filter(col("vec_id") % 3 === 2).select("vec_id", "embedding")
-    IvfIndex.ensure(spark, twoThirds, dirKey)
+    val built = IvfIndex.ensure(spark, twoThirds, dirKey)
     // build writes the manifest: one fp per stored vector, fp = xxhash64 of
     // the STORED embedding (so a source-side xxhash64 compares bit-equal)
-    val fps = spark.read.parquet(s"$dir/fps")
+    val fps = IvfIndex.fingerprints(spark, dir)
     assert(fps.count() == twoThirds.count())
-    val stored = spark.read.parquet(s"$dir/vectors")
-      .select(col("vec_id"), xxhash64(col("embedding")).as("want"))
+    val stored = built.assignments.select(col("vec_id"), xxhash64(col("embedding")).as("want"))
     assert(fps.join(stored, "vec_id").filter(col("fp") =!= col("want")).count() == 0,
       "manifest fps must equal xxhash64 of the stored embeddings")
-    // append keeps the manifest covering the delta
+    // an append that crashes at its publish: the delta's vectors and
+    // fingerprints are staged on disk, but the index still serves the
+    // built version, vectors, sizes and fingerprints alike
+    val v0 = Commit.latest(spark, dir).get
+    PublishCrash(spark, dir)(IvfIndex.append(spark, dir, rest))
+    assert(f.exists(new org.apache.hadoop.fs.Path(s"$dir/vectors-${"%08d".format(v0.next)}")))
+    assert(Commit.latest(spark, dir).get.id == v0.id)
+    val served = IvfIndex.loadFrom(spark, dir)
+    assert(served.sizes.toSeq == built.sizes.toSeq && served.assignments.count() == twoThirds.count())
+    assert(IvfIndex.fingerprints(spark, dir).count() == twoThirds.count())
+    // its retry stages over the leftovers and publishes once: the manifest
+    // covers the delta exactly
     IvfIndex.append(spark, dir, rest)
-    assert(spark.read.parquet(s"$dir/fps").count() == embs.count())
-    // self-heal: a missing/short manifest (pre-r19 artifact, or a crash
-    // between the vectors append and the fps append) re-derives in full
-    f.delete(new org.apache.hadoop.fs.Path(s"$dir/fps"), true)
-    assert(IvfIndex.syncedFps(spark, dir).count() == embs.count())
-    // _SIZES drift heal (r19 ADVICE #1): append() writes _SIZES before the
-    // vectors parquet append, so a crash + retried REFRESH can leave the
-    // _SIZES total permanently above the true row count — the heal must
-    // reconcile _SIZES from the store so ONE re-derive restores the
-    // zero-job steady path instead of re-deriving forever
-    def readMeta(name: String): String = {
-      val in = f.open(new org.apache.hadoop.fs.Path(s"$dir/$name"))
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    }
-    val trueSizes = readMeta("_SIZES").split("\n").filter(_.nonEmpty).map(_.toLong)
-    IvfIndex.writeAtomic(spark, s"$dir/_SIZES",
-      trueSizes.updated(0, trueSizes(0) + 7).mkString("\n")) // simulate drift
-    assert(IvfIndex.syncedFps(spark, dir).count() == embs.count())
-    val healed = readMeta("_SIZES").split("\n").filter(_.nonEmpty).map(_.toLong)
-    assert(healed.toSeq == trueSizes.toSeq,
-      "heal must rewrite _SIZES from actual per-cluster counts")
-    assert(readMeta("_FPS_N").trim.toLong == healed.sum,
-      "after one heal the sync counters must agree (steady path restored)")
+    assert(Commit.latest(spark, dir).get.number == v0.number + 1)
+    assert(IvfIndex.fingerprints(spark, dir).count() == embs.count())
+    assert(IvfIndex.loadFrom(spark, dir).sizes.sum == embs.count())
     f.delete(new org.apache.hadoop.fs.Path(dir), true)
-    IvfIndex.invalidate(dir)
   }
 
-  test("syncedFps heals an absent _SIZES once: the next call neither heals nor warns") {
+  test("the fingerprint manifest opens without a Spark job and covers the list sizes") {
     val dirKey = "ivf-sizes-spec"
     val dir = IvfIndex.dirFor(dirKey)
     val f = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     f.delete(new org.apache.hadoop.fs.Path(dir), true)
-    IvfIndex.invalidate(dir)
-    IvfIndex.ensure(spark, embs.select("vec_id", "embedding"), dirKey)
-    f.delete(new org.apache.hadoop.fs.Path(s"$dir/_SIZES"), true)
-    /** `syncedFps`'s row count, its Spark jobs and what it printed to stderr. */
-    def synced(label: String): (Long, Int, String) = {
-      val err = new java.io.ByteArrayOutputStream
-      val saved = System.err
-      System.setErr(new java.io.PrintStream(err, true))
-      val (fps, jobs) = try graft.RefreshJobCount.jobsIn(spark, label)(IvfIndex.syncedFps(spark, dir))
-        finally System.setErr(saved)
-      (fps.count(), jobs, err.toString)
-    }
     try {
-      val (n1, _, warned) = synced("sizes-heal")
-      assert(n1 == embs.count() && warned.contains("out of sync"), warned)
-      val (n2, jobs, quiet) = synced("sizes-healed")
-      assert(n2 == embs.count())
-      // no corpus scan, no rewrite, and no schema inference: the manifest
-      // opens with the schema its writer recorded
-      assert(jobs == 0, s"the healed call ran $jobs Spark jobs")
-      assert(!quiet.contains("out of sync"), quiet)
-    } finally {
-      f.delete(new org.apache.hadoop.fs.Path(dir), true)
-      IvfIndex.invalidate(dir)
-    }
+      IvfIndex.ensure(spark, embs.select("vec_id", "embedding"), dirKey)
+      val (fps, jobs) = graft.RefreshJobCount.jobsIn(spark, "fps-open")(
+        IvfIndex.fingerprints(spark, dir))
+      assert(jobs == 0, s"opening the fingerprint manifest ran $jobs Spark jobs")
+      val v = Commit.latest(spark, dir).get
+      assert(fps.count() == embs.count())
+      assert(v.field("sizes").get.elements().asScala.map(_.asLong).sum == embs.count())
+    } finally f.delete(new org.apache.hadoop.fs.Path(dir), true)
   }
 
   test("filtered knn (adaptive probe) equals brute force over the candidates") {
@@ -252,55 +224,35 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(got == exact)
   }
 
-  test("recluster swap is crash-safe: roll-forward after the commit marker, " +
-      "rollback-by-cleanup before it") {
-    import org.apache.hadoop.fs.{FileUtil, Path}
+  test("a recluster that crashes before publish leaves the previous version serving; " +
+      "its retry publishes once and drops the old roots") {
     val dirKey = "ivf-crash-spec"
     val dir = IvfIndex.dirFor(dirKey)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val f = new Path(dir).getFileSystem(conf)
-    f.delete(new Path(dir), true)
-    IvfIndex.invalidate(dir)
+    val f = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    f.delete(new org.apache.hadoop.fs.Path(dir), true)
     val base = embs.select("vec_id", "embedding")
-    IvfIndex.ensure(spark, base, dirKey)
-    def meta(name: String): String = {
-      val in = f.open(new Path(s"$dir/$name"))
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    }
-    val origMeta = Seq("_CENTROIDS", "_RADII", "_SIZES", "_TRAINED").map(n => n -> meta(n))
-
-    // crash BEFORE the commit marker: staged leftovers, old index intact —
-    // recovery (run inside ensure) must discard the staging
-    FileUtil.copy(f, new Path(s"$dir/vectors"), f, new Path(s"$dir/vectors_next"),
-      false, conf)
-    val out = f.create(new Path(s"$dir/_RADII.next"), true)
-    out.write("999.0".getBytes("UTF-8")); out.close()
-    IvfIndex.invalidate(dir)
-    IvfIndex.ensure(spark, sys.error("must load, not rebuild"), dirKey)
-    assert(!f.exists(new Path(s"$dir/vectors_next")), "pre-commit staging discarded")
-    assert(!f.exists(new Path(s"$dir/_RADII.next")))
-    origMeta.foreach { case (n, v) => assert(meta(n) == v, s"$n untouched") }
-
-    // crash AFTER the commit marker (all .next staged, dirs unswapped):
-    // recovery must complete the swap and the probe must stay exact
-    FileUtil.copy(f, new Path(s"$dir/vectors"), f, new Path(s"$dir/vectors_next"),
-      false, conf)
-    origMeta.foreach { case (n, v) =>
-      val o = f.create(new Path(s"$dir/$n.next"), true)
-      o.write(v.getBytes("UTF-8")); o.close()
-    }
-    val mk = f.create(new Path(s"$dir/_SWAP_PENDING"), true)
-    mk.write("1".getBytes("UTF-8")); mk.close()
-    IvfIndex.invalidate(dir)
-    val idx = IvfIndex.ensure(spark, sys.error("must load, not rebuild"), dirKey)
-    assert(!f.exists(new Path(s"$dir/_SWAP_PENDING")), "marker cleared")
-    assert(!f.exists(new Path(s"$dir/vectors_next")) &&
-      !f.exists(new Path(s"$dir/vectors_stale")), "swap completed and cleaned")
-    origMeta.foreach { case (n, v) => assert(meta(n) == v, s"$n rolled forward") }
+    val before = IvfIndex.ensure(spark, base, dirKey)
+    val v0 = Commit.latest(spark, dir).get
+    // tripling the trained volume re-clusters: a whole new index is staged
+    val big = base.union(embs.select((col("vec_id") + 1000000).as("vec_id"), col("embedding")))
+      .union(embs.select((col("vec_id") + 2000000).as("vec_id"), col("embedding")))
+      .join(base.select("vec_id"), Seq("vec_id"), "left_anti")
+    PublishCrash(spark, dir)(IvfIndex.append(spark, dir, big))
+    val served = IvfIndex.loadFrom(spark, dir)
+    assert(Commit.latest(spark, dir).get.id == v0.id, "nothing published")
+    assert(served.centroids.map(_.toSeq).toSeq == before.centroids.map(_.toSeq).toSeq &&
+      served.sizes.toSeq == before.sizes.toSeq, "the previous version serves")
     val rows = base.collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
     val q = rows.head._2
     val exact = rows.map { case (id, e) => (l2sq(e, q), id) }.sorted.take(5).map(_._2).toSeq
-    assert(idx.knn(q, 5).collect().map(_.getLong(0)).toSeq == exact,
-      "post-recovery probe equals brute force")
+    assert(served.knn(q, 5).collect().map(_.getLong(0)).toSeq == exact,
+      "the staged recluster is never read")
+    val (_, reclustered) = IvfIndex.append(spark, dir, big)
+    assert(reclustered)
+    val v1 = Commit.latest(spark, dir).get
+    assert(v1.number == v0.number + 1 && v1.files.intersect(v0.files).isEmpty &&
+      v1.retired.toSet == v0.files.toSet, s"${v0.files} -> ${v1.files}, retired ${v1.retired}")
+    assert(IvfIndex.loadFrom(spark, dir).sizes.sum == embs.count() * 3)
+    f.delete(new org.apache.hadoop.fs.Path(dir), true)
   }
 }

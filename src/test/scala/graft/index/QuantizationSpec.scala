@@ -59,14 +59,14 @@ class QuantizationSpec extends AnyFunSuite {
   }
 
   test("sq8 kNN with exact rerank returns the exact top-10 on this corpus") {
-    val q = QuantizedIvf.ensureSq8(spark, ivf, ivfDir)
+    val q = QuantizedIvf.ensureKind(spark, ivf, ivfDir, "sq8")
     val got = q.knn(query, k = 10, rerankFactor = 5)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     assert(got == exactTop10)
   }
 
   test("sq8 IP kNN with exact rerank matches brute-force largest-dot top-10") {
-    val q = QuantizedIvf.ensureSq8(spark, ivf, ivfDir)
+    val q = QuantizedIvf.ensureKind(spark, ivf, ivfDir, "sq8")
     val got = q.knnIp(query, k = 10, rerankFactor = 5)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     val exact = embs.crossJoin(broadcast(
@@ -79,7 +79,7 @@ class QuantizationSpec extends AnyFunSuite {
   }
 
   test("pq codes are m bytes and ADC+rerank recall is high") {
-    val q = QuantizedIvf.ensurePq(spark, ivf, ivfDir, m = 8)
+    val q = QuantizedIvf.ensureKind(spark, ivf, ivfDir, "pq", Some(8))
     val codeLen = q.codes.select(length(col("code"))).head().getInt(0)
     assert(codeLen == 8, s"expected 8-byte PQ codes, got $codeLen")
     val got = q.knn(query, k = 10, rerankFactor = 10)
@@ -89,7 +89,7 @@ class QuantizationSpec extends AnyFunSuite {
   }
 
   test("pq LUT matches brute-force residual distances") {
-    val q = QuantizedIvf.ensurePq(spark, ivf, ivfDir, m = 8).pq.get
+    val q = QuantizedIvf.ensureKind(spark, ivf, ivfDir, "pq", Some(8)).pq.get
     val cvec = ivf.centroids(0)
     val lut = q.lut(query, cvec)
     assert(lut.length == q.m * q.ksub)
@@ -105,7 +105,7 @@ class QuantizationSpec extends AnyFunSuite {
   }
 
   test("quantized probe reads only probed clusters; rerank is id-bounded") {
-    val q = QuantizedIvf.ensureSq8(spark, ivf, ivfDir)
+    val q = QuantizedIvf.ensureKind(spark, ivf, ivfDir, "sq8")
     val (p1, p2) = ivf.ballProbes(query, 10)
     val probes = (p1 ++ p2).toSet
     // the codes scan under a probe filter must READ only probed partitions:

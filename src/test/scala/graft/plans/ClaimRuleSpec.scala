@@ -913,7 +913,7 @@ class ClaimRuleSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val q = Tables.embeddings(spark, TestSpark.sfDir).filter(col("vec_id") === 0)
       .select(col("embedding")).head().getSeq[Float](0)
-    // delete the durable artifact out-of-band + forget the JVM cache.
+    // delete the durable artifact out-of-band.
     // Other suites (CoveredIndexSpec) may have re-registered the (root,
     // embedding, l2) entry with THEIR artifact key — a claim through any
     // still-live artifact would be correct behavior and not the bail under
@@ -932,7 +932,6 @@ class ClaimRuleSpec extends AnyFunSuite {
     ivfDirs.foreach { ivfDir =>
       val p = new org.apache.hadoop.fs.Path(ivfDir)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      graft.index.IvfIndex.invalidate(ivfDir)
     }
     try {
       val df = Tables.embeddings(spark, TestSpark.sfDir)

@@ -365,37 +365,38 @@ class DdlSpec extends AnyFunSuite {
     }
   }
 
-  test("crash-torn builds: orphan segments invisible, missing manifest rebuilds") {
+  test("crash-torn builds: a crash before publish leaves the previous version serving, " +
+      "and a build never published is rebuilt") {
     try Ddl.execute(spark, "DROP SEARCH INDEX torn_idx")
     catch { case _: IllegalArgumentException => () }
     Tables.documents(spark, dir).limit(30).createOrReplaceTempView("torn_docs")
-    spark.sql("CREATE SEARCH INDEX torn_idx ON torn_docs (text) " +
-      "WITH (id = 'doc_id', analyzer = 'whitespace', key = 'torn-spec')")
+    val create = "CREATE SEARCH INDEX torn_idx ON torn_docs (text) " +
+      "WITH (id = 'doc_id', analyzer = 'whitespace', key = 'torn-spec')"
+    spark.sql(create)
     def stats = spark.sql("DESCRIBE SEARCH INDEX torn_idx")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val loc = stats("location")
     val n0 = stats("num_docs").toLong
     assert(n0 > 0 && stats("num_segments") == "1")
 
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(loc).getFileSystem(conf)
-    // a KILLED mid-append: segment data fully written but the _SEGMENTS
-    // manifest swap never happened — the orphan directory must be invisible
-    // (readers see the OLD index, never a torn one)
-    org.apache.hadoop.fs.FileUtil.copy(fs,
-      new org.apache.hadoop.fs.Path(s"$loc/seg=00000"),
-      fs, new org.apache.hadoop.fs.Path(s"$loc/seg=00001"), false, conf)
-    graft.index.IndexStore.invalidate(loc)
+    // a KILLED append: segment data fully written, its version never
+    // published — the staged segment must be invisible (readers see the OLD
+    // index, never a torn one)
+    graft.index.PublishCrash(spark, loc)(graft.index.IndexStore.appendSegment(
+      graft.index.InvertedIndex.build(Tables.documents(spark, dir).limit(40),
+        "doc_id", "text", "whitespace"), loc))
+    assert(new java.io.File(s"$loc/seg=00001").isDirectory, "the segment was staged")
     assert(stats("num_segments") == "1",
-      "an orphan segment dir outside the manifest must stay invisible")
+      "a staged segment outside the published version must stay invisible")
     assert(stats("num_docs").toLong == n0)
 
-    // a KILLED initial build: segment data present, manifest never written.
+    // a KILLED initial build: segment data present, no version published.
     // durable() is false, so CREATE must take the full rebuild path
-    fs.delete(new org.apache.hadoop.fs.Path(s"$loc/_SEGMENTS"), false)
-    graft.index.IndexStore.invalidate(loc)
-    val recreated = spark.sql("CREATE SEARCH INDEX torn_idx ON torn_docs (text) " +
-      "WITH (id = 'doc_id', analyzer = 'whitespace', key = 'torn-spec')")
+    Ddl.execute(spark, "DROP SEARCH INDEX torn_idx")
+    graft.index.PublishCrash(spark, loc)(Ddl.execute(spark, create))
+    assert(new java.io.File(s"$loc/seg=00000").isDirectory, "the build was staged")
+    assert(!graft.index.IndexStore.durable(spark, loc))
+    val recreated = spark.sql(create)
     assert(recreated.head().getString(0) == "created torn_idx")
     assert(stats("num_segments") == "1")
     assert(stats("num_docs").toLong == n0, "rebuild must restore the index")
