@@ -17,21 +17,34 @@ import org.apache.spark.sql.functions._
   * over a prefix constructor (`ts_starts_with`). Last, the search
   * workload's set-up on 2,000 docs of the slice: the `INSERT … SELECT`
   * into a pg table with a primary key, and one pg `CREATE INDEX … USING
-  * inverted(pk, body <dict>, emb ivf)` over its text and vectors. Usage:
+  * inverted(pk, body <dict>, emb ivf)` over its text and vectors, and a pk
+  * lookup with a key not seen before. Each `*-exec` line and the lookup
+  * also print the statement's broadcasts and generated-class compiles.
+  * Usage:
   * runMain graft.RefreshJobCount [sfDir]
   */
 object RefreshJobCount {
 
-  /** `body`'s result and the number of Spark jobs it launched on this
-    * thread, counted by job group from `statusTracker`. The status store is
-    * fed by the listener bus in order, so once a marker job submitted after
-    * `body` is visible, every job `body` launched is visible too — an exact
-    * count with no settle sleep. */
-  def jobsIn[T](spark: SparkSession, label: String)(body: => T): (T, Int) = {
+  /** What a statement launched: Spark jobs, broadcasts (each job's task
+    * binary is one) and generated classes compiled. */
+  final case class Cost(jobs: Int, broadcasts: Long, compiles: Long)
+
+  /** `body`'s result and its [[Cost]] on this thread. Jobs are counted by
+    * job group from `statusTracker`. The status store is fed by the
+    * listener bus in order, so once a marker job submitted after `body` is
+    * visible, every job `body` launched is visible too — an exact count
+    * with no settle sleep. Broadcasts are the ids `body` took from the
+    * context's sequence, read off a probe broadcast before and after it;
+    * compiles the count of Spark's codegen compile-time histogram. */
+  def costIn[T](spark: SparkSession, label: String)(body: => T): (T, Cost) = {
     val sc = spark.sparkContext
+    def nextBroadcast(): Long = { val b = sc.broadcast(0); b.destroy(); b.id }
+    val compiled = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     val group = s"jobcount-$label-${System.nanoTime()}"
+    val (b0, c0) = (nextBroadcast(), compiled.getCount)
     sc.setJobGroup(group, label)
     val out = try body finally sc.clearJobGroup()
+    val (b1, c1) = (nextBroadcast(), compiled.getCount)
     val marker = s"$group-marker"
     sc.setJobGroup(marker, "status barrier")
     try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
@@ -40,7 +53,21 @@ object RefreshJobCount {
       require(System.nanoTime() < deadline, "status store never saw the marker job")
       Thread.sleep(5)
     }
-    (out, sc.statusTracker.getJobIdsForGroup(group).length)
+    (out, Cost(sc.statusTracker.getJobIdsForGroup(group).length, b1 - b0 - 1, c1 - c0))
+  }
+
+  /** `body`'s result and the number of Spark jobs it launched on this
+    * thread (see [[costIn]]). */
+  def jobsIn[T](spark: SparkSession, label: String)(body: => T): (T, Int) = {
+    val (out, cost) = costIn(spark, label)(body)
+    (out, cost.jobs)
+  }
+
+  /** One line of a statement's cost: `JOBS[label] = j  BCAST[label] = b
+    * COMPILES[label] = c`. */
+  def costLine(spark: SparkSession, label: String)(body: => Unit): String = {
+    val c = costIn(spark, label)(body)._2
+    s"JOBS[$label] = ${c.jobs}  BCAST[$label] = ${c.broadcasts}  COMPILES[$label] = ${c.compiles}"
   }
 
   def main(args: Array[String]): Unit = {
@@ -109,7 +136,7 @@ object RefreshJobCount {
         "structured-topk-exec" -> structured).foreach {
       case (label, q) =>
         spark.sql(q).collect()
-        counted(label)(spark.sql(q).collect())
+        println(costLine(spark, label)(spark.sql(q).collect()))
     }
 
     spark.sql("DROP SEARCH INDEX jobcount_topk_idx")
@@ -133,6 +160,11 @@ object RefreshJobCount {
       "locale = 'en_US.UTF-8', case = 'lower', stemming = false, frequency = true, position = true)")
     counted("create-index")(spark.sql("CREATE INDEX jobcount_pg_idx ON jobcount_pg " +
       "USING inverted(pk, body jobcount_dict, emb ivf (metric = 'l2'))"))
+    // the search mix's pk lookup (unclaimed: a filter over the table's
+    // scan), warmed with one key and measured with a key not seen before
+    spark.sql("SELECT pk, body FROM jobcount_pg WHERE pk = 17").collect()
+    println(costLine(spark, "pk-lookup-new-key")(
+      spark.sql("SELECT pk, body FROM jobcount_pg WHERE pk = 1345").collect()))
     spark.sql("DROP INDEX jobcount_pg_idx")
     spark.sql("DROP TABLE jobcount_pg")
     spark.sql("DROP TEXT SEARCH DICTIONARY jobcount_dict")

@@ -34,7 +34,7 @@ case class HnswNode(part: Int, vec_id: Long, embedding: Array[Float],
   *  - SEARCH: each partition's graph walks its own beam (ef candidates,
   *    touching O(ef·M·log n) of its nodes — probes ≪ corpus, asserted in
   *    HnswIndexSpec) and emits its local top-k; the global answer is the
-  *    O(k) merge of P local lists (TakeOrderedAndProject). Layer levels
+  *    O(k) merge of P local lists (the engine top-k). Layer levels
   *    derive from splitmix64(vec_id), so the whole structure is
   *    deterministic for a given partitioning — no RNG state in executors.
   *

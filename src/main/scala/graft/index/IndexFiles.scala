@@ -2,26 +2,21 @@ package graft.index
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.paths.SparkPath
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
-import org.apache.spark.sql.execution.datasources.{FileFormat, FileStatusCache, HadoopFsRelation,
-  InMemoryFileIndex, PartitionedFile, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
+  InMemoryFileIndex, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.graft.Frames
-import org.apache.spark.sql.sources.Filter
+import org.apache.spark.sql.graft.{Frames, IndexParquet}
+import org.apache.spark.sql.sources.{BaseRelation, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.search.{TermPredicates, TsQuery}
 
 /** One parquet file of an index part, as an index task opens it. */
-final case class IndexFile(path: String, length: Long, mtime: Long) {
-  def toPartitionedFile: PartitionedFile =
-    PartitionedFile(InternalRow.empty, SparkPath.fromPath(new Path(path)), 0L, length,
-      Array.empty[String], mtime, length)
-}
+final case class IndexFile(path: String, length: Long, mtime: Long)
 
 object IndexFile {
   /** Every data file of `rel` with its hash bucket (None for files outside
@@ -110,10 +105,16 @@ final case class IndexFiles(dir: String, segments: Seq[SegmentFiles],
 
 /** A relation that opens an index's files inside its own task
   * ([[TermBagScan]], [[MatchScan]]) instead of scanning them as a file
-  * relation. `indexDir` names that index (None for one built in memory), so
-  * scan-level checks such as RBAC can map the read back to its table. */
-trait IndexLeaf {
+  * relation. Claim rules splice it into plans as a `LogicalRelation`; the
+  * planner makes it one physical leaf (`graft.plans.IndexLeafStrategy`),
+  * which builds its rows only when the plan executes. `indexDir` names that
+  * index (None for one built in memory), so scan-level checks such as RBAC
+  * can map the read back to its table. */
+trait IndexLeaf extends BaseRelation {
   def indexDir: Option[String]
+
+  /** The leaf's rows, in `schema`'s column order. */
+  def rows(): RDD[InternalRow]
 }
 
 /** What the single-task index leaves ([[TermBagScan]], [[MatchScan]]) share:
@@ -161,25 +162,17 @@ private[index] object IndexTask {
       if (w1 != w2) w1 > w2 else u1.binaryCompare(u2) < 0
     }.take(cap).map(_._3)
 
-  /** Builds the parquet readers a task opens [[IndexFiles]] with. Driver
-    * side: each reader is serialized into the task closure. */
+  /** Opens a snapshot's files inside a task, through the session's reader
+    * ([[IndexParquet]]: one Hadoop conf broadcast per session). Driver side:
+    * each [[Input]] is serialized into the task closure and reads nothing
+    * until the task runs. */
   final class Reader(spark: SparkSession) {
-    private val fmt = new ParquetFileFormat
-    private val readers = scala.collection.mutable.Map.empty[
-      (StructType, StructType, Seq[Filter]), PartitionedFile => Iterator[InternalRow]]
+    private val parquet = IndexParquet(spark)
 
     /** `cols` of `data` from the files `in`, with `filters` pushed down. */
     def input(data: StructType, cols: Seq[String], filters: Seq[Filter],
-        in: Seq[IndexFile]): Input = {
-      val required = StructType(cols.map(data(_)))
-      // a fresh conf per reader: the build writes the requested schema
-      // into the conf it broadcasts
-      val read = readers.getOrElseUpdate((data, required, filters),
-        fmt.buildReaderWithPartitionValues(spark, data, StructType(Nil), required,
-          filters, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-          spark.sessionState.newHadoopConf()))
-      Input(read, required.map(_.dataType), in.map(_.toPartitionedFile))
-    }
+        in: Seq[IndexFile]): Input =
+      Input(parquet, StructType(cols.map(data(_))), filters, in)
 
     /** The live tombstones of `files`, read in the task by
       * [[TombstoneFiles.load]]. */
@@ -205,16 +198,19 @@ private[index] object IndexTask {
     else rdd.coalesce(1)
   }
 
-  /** Files of one index part, the reader that opens them and the types of
-    * the columns it returns; rows reach `f` through [[Cols]]. */
-  final case class Input(read: PartitionedFile => Iterator[InternalRow],
-      types: Seq[DataType], files: Seq[PartitionedFile]) {
-    /** The same reader over the files `in` (chosen inside the task). */
-    def over(in: Seq[IndexFile]): Input = copy(files = in.map(_.toPartitionedFile))
+  /** Files of one index part and the columns a task reads from them, with
+    * the filters pushed to the reader; rows reach `f` through [[Cols]]. */
+  final case class Input(parquet: IndexParquet, required: StructType, filters: Seq[Filter],
+      files: Seq[IndexFile]) {
+    /** The same read over the files `in` (chosen inside the task). */
+    def over(in: Seq[IndexFile]): Input = copy(files = in)
 
     def rows(f: Cols => Unit): Unit = {
-      val c = new Cols(types)
-      files.foreach(pf => read(pf).foreach(r => f(c.bind(r))))
+      val c = new Cols(required.map(_.dataType))
+      files.foreach { file =>
+        val it = parquet.rows(file.path, file.length, file.mtime, required, filters)
+        try it.foreach(r => f(c.bind(r))) finally it.close()
+      }
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.index
 
 import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
 import scala.util.hashing.MurmurHash3
 
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -329,10 +330,12 @@ object IndexStore {
     load(spark, dir)
   }
 
-  /** Append a new segment (streaming ingest / incremental refresh). */
-  def appendSegment(idx: InvertedIndex, dir: String,
-      docIds: Option[DataFrame] = None): Unit = Metrics.timed(dir, "commit") {
-    commit(idx.postings.sparkSession, dir) { (snap, _) =>
+  /** Append a new segment (streaming ingest / incremental refresh). A
+    * streaming micro-batch passes its `batch` id, recorded in the version
+    * that publishes the segment ([[batchCommitted]]). */
+  def appendSegment(idx: InvertedIndex, dir: String, docIds: Option[DataFrame] = None,
+      batch: Option[Long] = None): Unit = Metrics.timed(dir, "commit") {
+    commit(idx.postings.sparkSession, dir, batch = batch) { (snap, _) =>
       val next = nextSeg(snap)
       writeSegment(idx, dir, next, docIds)
       Seq(segName(next))
@@ -367,13 +370,14 @@ object IndexStore {
     * version's snapshot and the number the staged roots are named with, and
     * returns the roots it wrote, which join the version's files. Nothing
     * staged and an unchanged fingerprint publish nothing. */
-  private def commit(spark: SparkSession, dir: String, sourceFp: Option[String] = None)(
-      stage: (Option[Snapshot], Long) => Seq[String]): Unit = {
+  private def commit(spark: SparkSession, dir: String, sourceFp: Option[String] = None,
+      batch: Option[Long] = None)(stage: (Option[Snapshot], Long) => Seq[String]): Unit = {
     val base = Commit.latest(spark, dir)
     val staged = stage(base.map(snapshotOf(spark, _)), Commit.nextNumber(base))
     if (staged.nonEmpty)
       Commit.publish(spark, dir, base, base.fold(Seq.empty[String])(_.files) ++ staged,
-        sourceFp.map("sourceFp" -> _).toSeq: _*)
+        sourceFp.map("sourceFp" -> _).toSeq ++
+          batch.map(b => "batches" -> (batches(base) :+ b).map(Long.box).asJava): _*)
     else recordSourceFp(spark, dir, sourceFp)
   }
 
@@ -410,17 +414,14 @@ object IndexStore {
       .select(col("doc_id"), col("__m.content_fp").as("content_fp"))
   }
 
-  /** Streaming-ingest batch markers (see graft.streaming.StreamingIngest):
-    * which foreachBatch ids have fully committed their segment. */
+  /** Whether the streaming micro-batch `batchId` has committed its segment
+    * (see graft.streaming.StreamingIngest): the latest version names it. */
   def batchCommitted(spark: SparkSession, dir: String, batchId: Long): Boolean =
-    exists(spark, s"$dir/_BATCHES") &&
-      readString(spark, s"$dir/_BATCHES").split("\n").contains(batchId.toString)
+    batches(Commit.latest(spark, dir)).contains(batchId)
 
-  def markBatchCommitted(spark: SparkSession, dir: String, batchId: Long): Unit = {
-    val prior =
-      if (exists(spark, s"$dir/_BATCHES")) readString(spark, s"$dir/_BATCHES") else ""
-    writeStringAtomic(spark, s"$dir/_BATCHES", prior + batchId + "\n")
-  }
+  /** The streaming batch ids a version records, each with its segment. */
+  private def batches(v: Option[Commit.Version]): Seq[Long] =
+    v.flatMap(_.field("batches")).fold(Seq.empty[Long])(_.elements().asScala.map(_.asLong).toSeq)
 
   /** Register the index parts as SQL relations — the reference's
     * "indexes are relations" surface (`SELECT ... FROM <index_name>`,

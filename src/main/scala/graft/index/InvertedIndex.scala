@@ -260,7 +260,7 @@ final case class InvertedIndex(
   /** BM25 top-k with score pushdown: per-partition top-k heaps before the
     * global merge, the Spark shape of the reference's WAND collector
     * (/root/reference/server/connector/duckdb_table_function.h:176-194,
-    * top_k_heap.hpp). `orderBy.limit` alone already plans TakeOrderedAndProject
+    * top_k_heap.hpp). `orderBy.limit` alone already plans the engine top-k
     * (partial top-k per partition, O(k) driver merge — no global sort). */
   def bm25TopK(terms: Seq[String], k: Int): DataFrame =
     bm25(terms)

@@ -24,7 +24,7 @@ import graft.functions.{InnerProductExpr, L2SqrDistanceExpr, VectorFunctions}
   * directory-partitioned by their nearest-centroid id, and a query probes a
   * subset of inverted lists — reading only their fraction of the data via
   * partition pruning, then exact distance + per-partition top-k + global O(k)
-  * merge (TakeOrderedAndProject). At 100 TB the only driver-side state is the
+  * merge (the engine top-k). At 100 TB the only driver-side state is the
   * centroid table (k × dim doubles) plus k list radii and k list sizes.
   *
   * The number of inverted lists defaults to ≈√N (faiss's standard sizing):

@@ -1,13 +1,13 @@
 package graft.index
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SQLContext}
+import org.apache.spark.sql.{DataFrame, SQLContext}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.graft.Frames
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.sources.{BaseRelation, In, TableScan}
+import org.apache.spark.sql.sources.In
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.TsDistances
@@ -147,7 +147,7 @@ private[graft] object MatchScan {
 
   private final case class Relation(idx: InvertedIndex, q: TsQuery, docType: DataType,
       countOnly: Boolean, fuzzyCap: Int)(@transient val sqlContext: SQLContext)
-      extends BaseRelation with TableScan with IndexLeaf {
+      extends IndexLeaf {
 
     override def indexDir: Option[String] = idx.files.map(_.dir)
 
@@ -160,11 +160,9 @@ private[graft] object MatchScan {
       if (countOnly) schema.defaultSize
       else math.max(1L, idx.numDocs) * schema.defaultSize
 
-    override def needConversion: Boolean = false
-
     override def toString: String = s"MatchScan(${if (countOnly) "count, " else ""}$q)"
 
-    override def buildScan(): RDD[Row] = {
+    override def rows(): RDD[InternalRow] = {
       val spark = sqlContext.sparkSession
       val all = nodes(q)
       val ts = all.flatMap(named).distinct
@@ -173,7 +171,7 @@ private[graft] object MatchScan {
       // locals, so the task closures never capture this relation
       val (query, dt, counting, cap) = (q, docType, countOnly, fuzzyCap)
       val postCols = Seq("term", "doc_id") ++ (if (withPos) Seq("positions") else Nil)
-      val rdd: RDD[InternalRow] = idx.files match {
+      idx.files match {
         case Some(files) =>
           val reader = new IndexTask.Reader(spark)
           // a tree without an expansion leaf knows its terms here, so the
@@ -226,7 +224,6 @@ private[graft] object MatchScan {
             m.emit(query, counting)
           }
       }
-      rdd.asInstanceOf[RDD[Row]]
     }
   }
 

@@ -382,7 +382,7 @@ object Quantization {
   *
   *   1. probe: read CODES for the probed lists only, approximate top
   *      `rerankFactor × k` by the asymmetric (query-vs-code) distance —
-  *      TakeOrderedAndProject, so per-partition heaps + O(pool) driver merge;
+  *      the engine top-k, so per-partition heaps + O(pool) driver merge;
   *   2. rerank: exact distance over the raw vectors of those ≤ pool ids only
   *      (isin pushdown on vec_id — parquet row-group stats prune inside the
   *      probed partitions), final top-k.

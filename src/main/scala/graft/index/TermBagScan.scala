@@ -1,13 +1,13 @@
 package graft.index
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SQLContext}
+import org.apache.spark.sql.{DataFrame, SQLContext}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.sources.{BaseRelation, In, TableScan}
+import org.apache.spark.sql.sources.In
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.search.{TermPredicates, TsQuery}
@@ -94,8 +94,7 @@ private[index] object TermBagScan {
     * it the bucket-pruned postings of its terms (a known term set is also
     * pushed to the reader) and the docstats, with the tombstones
     * applied. */
-  private abstract class Leaf(idx: InvertedIndex, docType: DataType) extends BaseRelation
-      with TableScan with IndexLeaf {
+  private abstract class Leaf(idx: InvertedIndex, docType: DataType) extends IndexLeaf {
     /** The terms, when known at planning (a term bag). */
     protected def known: Option[Seq[String]]
 
@@ -109,13 +108,11 @@ private[index] object TermBagScan {
     override def sizeInBytes: Long =
       math.max(1L, idx.numDocs) * schema.defaultSize
 
-    override def needConversion: Boolean = false
-
-    override def buildScan(): RDD[Row] = {
+    override def rows(): RDD[InternalRow] = {
       val spark = sqlContext.sparkSession
       val (dt, acc, readDict) = (docType, accumulator, known.isEmpty)
       val postCols = Seq("term", "doc_id", "tf")
-      val rdd: RDD[InternalRow] = idx.files match {
+      idx.files match {
         case Some(files) =>
           val reader = new IndexTask.Reader(spark)
           val termFilter = known.toSeq.map(ts => In("term", ts.distinct.toArray[Any]))
@@ -161,7 +158,6 @@ private[index] object TermBagScan {
             a.emit()
           }
       }
-      rdd.asInstanceOf[RDD[Row]]
     }
   }
 

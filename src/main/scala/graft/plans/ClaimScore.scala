@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.DoubleType
 import org.apache.spark.unsafe.types.UTF8String
 import graft.analysis.AnalyzerRegistry
 import graft.index.{FieldStore, IndexStore, InvertedIndex}
-import graft.search.{IndexCatalog, SqlSurface, TsQueryCodec, TsQueryExec}
+import graft.search.{IndexCatalog, SqlSurface, TsQuery, TsQueryCodec, TsQueryExec}
 
 /** Shared pieces of the scorer-claim rules: recognizing a scorer stub call
   * (`bm25(col, 'query', 'dict')` and friends, registered by
@@ -91,6 +91,134 @@ private[plans] object ScorerShapes {
       TsQueryExec.scoredPlan(idx, scorer,
         TsQueryCodec.decode(query, AnalyzerRegistry.get(dict)), params)
     else idx.scoredTermsPlan(scorer, termsOf(query, dict), params)
+
+  /** A scorer top-k [[ClaimScoreTopK]] claims: `[Project p1] Sort(key
+    * DESC) [Project p2] input` under its limit, the key a scorer call or a
+    * `p2` alias of one; `input` the indexed scan of the scorer's column on
+    * a full index, bare or under row-reducing layers (`candidate`, see
+    * [[candidateScan]]); every output the scan's columns or the score
+    * (`scoreIds`, every `p2` alias of the same scorer call). */
+  final case class TopKClaim(input: LogicalPlan, textAttr: AttributeReference,
+      scorer: String, query: String, dict: String, params: Seq[Any], lr: LogicalRelation,
+      root: String, candidate: Option[LogicalPlan], entry: IndexCatalog.TextEntry,
+      idAttr: AttributeReference, scoreIds: Set[ExprId], outList: Seq[NamedExpression],
+      refs: Seq[Attribute])
+
+  /** `inner` (the plan under a `GlobalLimit`/`LocalLimit`) as a claimable
+    * scorer top-k. */
+  def topKClaim(inner: LogicalPlan): Option[TopKClaim] = {
+    val (p1, afterP1) = inner match {
+      case Project(l, c) => (Some(l), c)
+      case _ => (None, inner)
+    }
+    val (order, afterSort) = afterP1 match {
+      case Sort(Seq(SortOrder(so, Descending, _, _)), true, c, _) => (so, c)
+      case _ => return None
+    }
+    val (p2, input) = afterSort match {
+      case Project(l, c) => (Some(l), c)
+      case _ => (None, afterSort)
+    }
+    for {
+      // the sort key: a scorer call directly, or an attribute bound to a
+      // scorer alias in P2
+      (textAttr, scorer, query, dict, params, scoreId) <- asScorer(order)
+          .map { case (a, n, q, d, ps) => (a, n, q, d, ps, None: Option[ExprId]) }
+          .orElse(order match {
+            case a: AttributeReference =>
+              p2.flatMap(_.collectFirst {
+                case al @ Alias(u: ScalaUDF, _) if al.exprId == a.exprId && asScorer(u).isDefined =>
+                  val (ta, n, q, d, ps) = asScorer(u).get
+                  (ta, n, q, d, ps, Some(al.exprId): Option[ExprId])
+              })
+            case _ => None
+          })
+      // the sorted input: the bare indexed scan (fast path) or a stack of
+      // row-reducing layers over it (the composed filter + top-k claim)
+      (lr, root, candidate) <- candidateScan(input)
+      if PlanShapes.isColumnOf(lr, textAttr, textAttr.name)
+      entry <- IndexCatalog.lookupText(root, textAttr.name, dict)
+      // partial indexes never drive scorer top-k (see indexedScanOf)
+      if entry.predicate.isEmpty
+      idAttr <- lr.output.collectFirst {
+        case a: AttributeReference if a.name == entry.idCol => a }
+      // duplicate-alias dedup (reference score_alias_dedup.test: "the
+      // rewrite keeps one scorer + one virtual score column ... each
+      // select-list slot gets its own column ref"): EVERY P2 alias of the
+      // semantically-same scorer call maps onto the single score column
+      scoreIds = p2.map(_.collect {
+        case al @ Alias(u: ScalaUDF, _)
+            if asScorer(u).exists { case (ta, n, q2, d2, ps2) =>
+              ta.semanticEquals(textAttr) && n == scorer && q2 == query &&
+                d2 == dict && ps2 == params } =>
+          al.exprId
+      }.toSet).getOrElse(Set.empty[ExprId]) ++ scoreId
+      // P2 may hold only the scan's own columns + aliases of THE scorer
+      // call — anything else computed there would be silently lost
+      if p2.forall(_.forall {
+        case a: AttributeReference => PlanShapes.isColumnOf(lr, a, a.name)
+        case al: Alias => scoreIds.contains(al.exprId)
+        case _ => false
+      })
+      // every output expression must read only scan columns / the score
+      outList = p1.getOrElse(afterSort.output.map(a => a: NamedExpression))
+      refs = outList.flatMap(_.references.toSeq).distinct
+      if refs.forall(a =>
+        PlanShapes.isColumnOf(lr, a, a.name) || scoreIds.contains(a.exprId))
+    } yield TopKClaim(input, textAttr, scorer, query, dict, params, lr, root, candidate, entry,
+      idAttr, scoreIds, outList, refs)
+  }
+
+  /** The `ts_match` conjuncts under claimable scorer top-ks that the scorer
+    * makes redundant ([[absorbs]]), found before [[ClaimTsMatch]] builds a
+    * text-match leg for them: the top-k claim drops them instead. */
+  def absorbedMatches(plan: LogicalPlan): Set[Expression] = plan.collect {
+    case GlobalLimit(Literal(_: Int, _), LocalLimit(_, inner)) =>
+      topKClaim(inner).filter(_.candidate.isDefined).toSeq.flatMap { c =>
+        candidateFilters(c.input).flatMap(TsPredicates.conjuncts)
+          .filter(absorbs(_, c.textAttr, c.query, c.dict))
+      }
+  }.flatten.toSet
+
+  /** The filter conditions of a candidate chain ([[candidateScan]]'s
+    * shapes). */
+  private def candidateFilters(plan: LogicalPlan): Seq[Expression] = plan match {
+    case Filter(cond, child) => cond +: candidateFilters(child)
+    case Join(l, _, LeftSemi | LeftAnti, _, _) => candidateFilters(l)
+    case Project(_, child) => candidateFilters(child)
+    case _ => Nil
+  }
+
+  /** Whether a conjunct is a `ts_match` the scorer `(textAttr, query,
+    * dict)` makes redundant: on the same column and dictionary, whose query
+    * is an OR of single terms covering every analyzed scorer term. Exact,
+    * because a term-bag scorer returns only docs holding at least one of its
+    * terms, and each such doc matches the OR. The scan stays in the tree, so
+    * the top-k still joins the base table and a row deleted before its
+    * REFRESH is still left out. */
+  def absorbs(conj: Expression, textAttr: AttributeReference, query: String,
+      dict: String): Boolean =
+    !TsQueryCodec.isEncoded(query) && TsPredicates.asTsMatch(conj).exists {
+      case (a: AttributeReference, d, build) if a.exprId == textAttr.exprId && d == dict =>
+        val analyzer = AnalyzerRegistry.get(dict)
+        orTerms(TsQuery.bindDict(build(analyzer), analyzer))
+          .exists(termsOf(query, dict).toSet.subsetOf)
+      case _ => false
+    }
+
+  /** The terms of a query that matches exactly the docs holding at least
+    * one of them: an OR (nested, boosted or not) of single terms. */
+  private def orTerms(q: TsQuery): Option[Set[String]] = q match {
+    case TsQuery.Term(t) => Some(Set(t))
+    case TsQuery.Phrase(Seq(t)) => Some(Set(t))
+    case TsQuery.SlopPhrase(Seq(t), _) => Some(Set(t))
+    case TsQuery.Boost(inner, _) => orTerms(inner)
+    case TsQuery.And(Seq(inner)) => orTerms(inner)
+    case TsQuery.Or(qs) if qs.nonEmpty =>
+      val parts = qs.map(orTerms)
+      if (parts.forall(_.isDefined)) Some(parts.flatten.reduce(_ ++ _)) else None
+    case _ => None
+  }
 
   /** Resolves the sorted input to its underlying indexed scan. Accepted
     * shapes (the reference claims Sort/TopN over an already-claimed filter
@@ -204,7 +332,7 @@ private[plans] object ScorerShapes {
   * five scorers) over an indexed scan into the index postings top-k drive —
   * the reference's flagship demo query (examples/demo0/demo.sql:39-48;
   * claim walk iresearch_plan.cpp:870-885). `orderBy(_score desc).limit(k)`
-  * plans TakeOrderedAndProject: per-partition top-k heaps + an O(k) driver
+  * plans as the engine top-k ([[TopKExec]]): per-partition top-k heaps + an O(k) driver
   * merge, the Spark shape of the reference's WAND collector.
   *
   * Claimed shapes (all under GlobalLimit/LocalLimit):
@@ -254,70 +382,10 @@ case class ClaimScoreTopK(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  private def claim(gl: GlobalLimit, k: Int, inner: LogicalPlan): Option[LogicalPlan] = {
-    // peel: [Project P1] Sort [Project P2] scan
-    val (p1, afterP1) = inner match {
-      case Project(l, c) => (Some(l), c)
-      case _ => (None, inner)
-    }
-    val (order, afterSort) = afterP1 match {
-      case Sort(Seq(SortOrder(so, Descending, _, _)), true, c, _) => (so, c)
-      case _ => return None
-    }
-    val (p2, scanPlan) = afterSort match {
-      case Project(l, c) => (Some(l), c)
-      case _ => (None, afterSort)
-    }
-    for {
-      // the sort key: a scorer call directly, or an attribute bound to a
-      // scorer alias in P2
-      (textAttr, scorer, query, dict, params, scoreId) <- ScorerShapes.asScorer(order)
-          .map { case (a, n, q, d, ps) => (a, n, q, d, ps, None: Option[ExprId]) }
-          .orElse(order match {
-            case a: AttributeReference =>
-              p2.flatMap(_.collectFirst {
-                case al @ Alias(u: ScalaUDF, _)
-                    if al.exprId == a.exprId && ScorerShapes.asScorer(u).isDefined =>
-                  val (ta, n, q, d, ps) = ScorerShapes.asScorer(u).get
-                  (ta, n, q, d, ps, Some(al.exprId): Option[ExprId])
-              })
-            case _ => None
-          })
-      // the sorted input: the bare indexed scan (fast path) or a stack of
-      // row-reducing layers over it (the composed filter + top-k claim)
-      (lr, root, candidate) <- ScorerShapes.candidateScan(scanPlan)
-      if PlanShapes.isColumnOf(lr, textAttr, textAttr.name)
-      entry <- IndexCatalog.lookupText(root, textAttr.name, dict)
-      // partial indexes never drive scorer top-k (see indexedScanOf)
-      if entry.predicate.isEmpty
-      idAttr <- lr.output.collectFirst {
-        case a: AttributeReference if a.name == entry.idCol => a }
-      // duplicate-alias dedup (reference score_alias_dedup.test: "the
-      // rewrite keeps one scorer + one virtual score column ... each
-      // select-list slot gets its own column ref"): EVERY P2 alias of the
-      // semantically-same scorer call maps onto the single score column
-      scoreIds = p2.map(_.collect {
-        case al @ Alias(u: ScalaUDF, _)
-            if ScorerShapes.asScorer(u).exists { case (ta, n, q2, d2, ps2) =>
-              ta.semanticEquals(textAttr) && n == scorer && q2 == query &&
-                d2 == dict && ps2 == params } =>
-          al.exprId
-      }.toSet).getOrElse(Set.empty[ExprId]) ++ scoreId
-      // P2 may hold only the scan's own columns + aliases of THE scorer
-      // call — anything else computed there would be silently lost
-      if p2.forall(_.forall {
-        case a: AttributeReference => PlanShapes.isColumnOf(lr, a, a.name)
-        case al: Alias => scoreIds.contains(al.exprId)
-        case _ => false
-      })
-      // every output expression must read only scan columns / the score
-      outList = p1.getOrElse(afterSort.output.map(a => a: NamedExpression))
-      refs = outList.flatMap(_.references.toSeq).distinct
-      if refs.forall(a =>
-        PlanShapes.isColumnOf(lr, a, a.name) || scoreIds.contains(a.exprId))
-    } yield {
-      val tree = candidate.map(absorbMatch(_, entry, textAttr, query, dict))
-        .getOrElse(scanPlan)
+  private def claim(gl: GlobalLimit, k: Int, inner: LogicalPlan): Option[LogicalPlan] =
+    ScorerShapes.topKClaim(inner).map { c =>
+      import c._
+      val tree = candidate.map(absorbMatch(_, textAttr, query, dict)).getOrElse(input)
       val idOrScore = refs.forall(a =>
         a.exprId == idAttr.exprId || scoreIds.contains(a.exprId))
       val scored = ScorerShapes.scoredPlan(
@@ -330,7 +398,6 @@ case class ClaimScoreTopK(spark: SparkSession) extends Rule[LogicalPlan] {
         else claimFiltered(tree, scored, k, idAttr, scoreIds, outList)
       }
     }
-  }
 
   /** Whether the index alone answers the top-k: the sorted input is the
     * bare indexed scan (the `ts_match` legs absorbed) and the index is
@@ -346,24 +413,15 @@ case class ClaimScoreTopK(spark: SparkSession) extends Rule[LogicalPlan] {
       case _ => false
     }
 
-  /** `candTree` without the `ts_match` semi-joins the scorer makes
-    * redundant: a [[TsMatchLeg]] on the same column, dictionary and full
-    * index whose query is an OR of single terms covering every analyzed
-    * scorer term. Exact, because a term-bag scorer returns only docs holding
-    * at least one of its terms, and each such doc matches the OR. The scan
-    * stays in the tree, so the top-k still joins the base table and a row
-    * deleted before its REFRESH is still left out. */
-  private def absorbMatch(candTree: LogicalPlan, entry: IndexCatalog.TextEntry,
-      textAttr: AttributeReference, query: String, dict: String): LogicalPlan =
-    if (TsQueryCodec.isEncoded(query)) candTree
-    else {
-      val terms = ScorerShapes.termsOf(query, dict).toSet
-      candTree.transformUp {
-        case j @ Join(left, _, LeftSemi, _, _) if j.getTagValue(TsMatchLeg.tag).exists { l =>
-            l.segDir == entry.segDir && l.dict == dict && l.text == textAttr.exprId &&
-              TsMatchLeg.orTerms(l.query).exists(terms.subsetOf) } =>
-          left
-      }
+  /** `candTree` without the `ts_match` conjuncts the scorer makes
+    * redundant ([[ScorerShapes.absorbs]]), which [[ClaimTsMatch]] left
+    * unclaimed for this rule ([[ScorerShapes.absorbedMatches]]). */
+  private def absorbMatch(candTree: LogicalPlan, textAttr: AttributeReference, query: String,
+      dict: String): LogicalPlan =
+    candTree.transformUp {
+      case Filter(cond, child) =>
+        TsPredicates.conjuncts(cond).filterNot(ScorerShapes.absorbs(_, textAttr, query, dict))
+          .reduceOption(CAnd(_, _)).fold(child)(Filter(_, child))
     }
 
   /** The bare-scan drive for outputs wider than the id and the score:
@@ -405,7 +463,7 @@ case class ClaimScoreTopK(spark: SparkSession) extends Rule[LogicalPlan] {
 
   /** The index-only top-k: `Sort(score desc, doc_id)` and the limit over the
     * scored leaf, the output's id and score read from the leaf's row. It
-    * plans as a TakeOrderedAndProject over the leaf's one task: one Spark
+    * plans as a [[TopKExec]] over the leaf's one task: one Spark
     * job, no exchange, no base-table bytes — the reference's top-k from the
     * index scan alone (search_pk_lookup.h materializes only what it
     * returns, and this output holds nothing beyond the id). */
@@ -448,7 +506,7 @@ case class ClaimScoreTopK(spark: SparkSession) extends Rule[LogicalPlan] {
     * bare scan when the index is not fresh with it) restricts the scored
     * postings via one inner join on the id, so the k survivors are the
     * top-k of the FILTERED set of live rows — then Sort+Limit over the join
-    * plans as TakeOrderedAndProject (per-partition heaps, O(k) driver
+    * plans as a [[TopKExec]] (per-partition heaps, O(k) driver
     * merge). The candidate tree keeps its pushed-down pruned scan;
     * scan-column references flow through unchanged, so only the score
     * attribute needs substitution. */

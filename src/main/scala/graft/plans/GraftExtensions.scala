@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.expressions.{And => CAnd, AttributeReferenc
 import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, JoinHint, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.search.IndexCatalog
@@ -44,6 +43,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectResolutionRule(s => PinSnapshotReads(s))
     e.injectPlannerStrategy(s => StrictClaimCheck(s))
     e.injectPlannerStrategy(s => RbacCheck(s))
+    e.injectPlannerStrategy(s => IndexLeafStrategy(s))
+    e.injectPlannerStrategy(s => TopKStrategy(s))
+    e.injectColumnar(_ => BindFilterLiterals.columnarRule)
     e.injectParser((_, delegate) => new graft.search.GraftSqlParser(delegate))
     graft.sources.ReadTvfs.functions.foreach(e.injectTableFunction)
     graft.search.EsSql.functions.foreach(e.injectTableFunction)
@@ -1254,33 +1256,6 @@ private[plans] object TsPredicates {
   }
 }
 
-/** The text claim behind a [[ClaimTsMatch]] semi-join — one positive
-  * `ts_match` leg over a plain column — tagged on the join so
-  * [[ClaimScoreTopK]] can absorb a leg its scorer makes redundant. */
-private[plans] final case class TsMatchLeg(segDir: String, dict: String,
-    text: ExprId, query: graft.search.TsQuery)
-
-private[plans] object TsMatchLeg {
-  val tag: TreeNodeTag[TsMatchLeg] = TreeNodeTag("graft.tsMatchLeg")
-
-  /** The terms of a query that matches exactly the docs holding at least
-    * one of them: an OR (nested, boosted or not) of single terms. */
-  def orTerms(q: graft.search.TsQuery): Option[Set[String]] = {
-    import graft.search.TsQuery._
-    q match {
-      case Term(t) => Some(Set(t))
-      case Phrase(Seq(t)) => Some(Set(t))
-      case SlopPhrase(Seq(t), _) => Some(Set(t))
-      case Boost(inner, _) => orTerms(inner)
-      case And(Seq(inner)) => orTerms(inner)
-      case Or(qs) if qs.nonEmpty =>
-        val parts = qs.map(orTerms)
-        if (parts.forall(_.isDefined)) Some(parts.flatten.reduce(_ ++ _)) else None
-      case _ => None
-    }
-  }
-}
-
 case class ClaimTsMatch(spark: SparkSession) extends Rule[LogicalPlan] {
   import TsPredicates.{asTsMatch, conjuncts}
 
@@ -1306,15 +1281,20 @@ case class ClaimTsMatch(spark: SparkSession) extends Rule[LogicalPlan] {
   private def bareSql(e: Expression): String =
     e.transform { case a: AttributeReference => a.withQualifier(Seq.empty) }.sql
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case f @ Filter(cond, child) if cond.exists(asTsMatch(_).isDefined) =>
-      try claim(f, cond, child) catch {
+  override def apply(plan: LogicalPlan): LogicalPlan = {
+    // legs a scorer top-k above makes redundant are left to its claim,
+    // which drops them, rather than built here
+    lazy val absorbed = ScorerShapes.absorbedMatches(plan)
+    plan.transformUp {
+      case f @ Filter(cond, child) if cond.exists(asTsMatch(_).isDefined) =>
+        try claim(f, cond, child, absorbed) catch {
         // a failed claim must never break the query — the row-eval UDF
         // is still in the plan and remains correct
-        case e: Exception =>
-          logWarning(s"ts_match claim failed, keeping row-eval filter: $e")
-          f
-      }
+          case e: Exception =>
+            logWarning(s"ts_match claim failed, keeping row-eval filter: $e")
+            f
+        }
+    }
   }
 
   /** Resolves an EXPRESSION key (`ts_match(upper(text), ...)`-style) against
@@ -1344,7 +1324,8 @@ case class ClaimTsMatch(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  private def claim(f: Filter, cond: Expression, child: LogicalPlan): LogicalPlan = {
+  private def claim(f: Filter, cond: Expression, child: LogicalPlan,
+      absorbed: Set[Expression]): LogicalPlan = {
     import org.apache.spark.sql.catalyst.expressions.{IsNotNull, Not}
     val parts = conjuncts(cond)
 
@@ -1386,7 +1367,7 @@ case class ClaimTsMatch(spark: SparkSession) extends Rule[LogicalPlan] {
     // reference's Or filter node (search_filter_builder.cpp irs::Or): the
     // union of the leaf drives is exact for OR because a row passes iff
     // some leaf is TRUE, and every true leaf's doc is in its drive.
-    val claimable = parts.flatMap { p =>
+    val claimable = parts.filterNot(absorbed).flatMap { p =>
       p match {
         case Not(i) =>
           leafOf(i, requireFull = true).map { case (leg, docId, arg) =>
@@ -1405,7 +1386,7 @@ case class ClaimTsMatch(spark: SparkSession) extends Rule[LogicalPlan] {
           }
       }
     }
-    if (claimable.isEmpty) return f
+    if (claimable.isEmpty && !parts.exists(absorbed)) return f
 
     // typed-FIELD conjuncts (composite index sidecar): claimed only when a
     // text claim already drives the same Filter — the intersection then
@@ -1426,24 +1407,19 @@ case class ClaimTsMatch(spark: SparkSession) extends Rule[LogicalPlan] {
         if child.outputSet.contains(idAttr)
       } yield (p, attr, mkPred, entry, idAttr)
     }
+    if (claimable.isEmpty && fieldClaimable.isEmpty) return f
 
     val joined = claimable.foldLeft(child) {
-      case (acc, (_, legs, docId, negated, args)) =>
+      case (acc, (_, legs, docId, negated, _)) =>
         val parsed = legs.map { case (segDir, dict, build) =>
           val a = graft.analysis.AnalyzerRegistry.get(dict)
           (segDir, dict, graft.search.TsQuery.bindDict(build(a), a))
         }
         val mPlan = MatchLeaves.union(spark, parsed.map { case (segDir, _, q) => segDir -> q })
         val rightId = mPlan.output.find(_.name == "doc_id").get
-        val j = Join(acc, mPlan,
+        Join(acc, mPlan,
           if (negated) org.apache.spark.sql.catalyst.plans.LeftAnti else LeftSemi,
           Some(EqualTo(docId, rightId)), JoinHint.NONE)
-        (parsed, args) match {
-          case (Seq((segDir, dict, q)), Seq(text: AttributeReference)) if !negated =>
-            j.setTagValue(TsMatchLeg.tag, TsMatchLeg(segDir, dict, text.exprId, q))
-          case _ => ()
-        }
-        j
     }
     val joinedAll = fieldClaimable.foldLeft(joined) {
       case (acc, (_, attr, mkPred, entry, idAttr)) =>

@@ -135,7 +135,7 @@ object Search {
     idx(s, dir).anyOf(Seq("dup", "vector"))
       .agg(count(lit(1)).as("n"))
 
-  /** BM25 top-k with per-partition partial top-k (TakeOrderedAndProject) —
+  /** BM25 top-k with per-partition partial top-k (the engine top-k) —
     * the WAND-pushdown analogue (§2.6). Oracle recomputes BM25 in DuckDB
     * with the identical FP expression tree. */
   def bm25TopK(s: SparkSession, dir: String): DataFrame =

@@ -37,7 +37,7 @@ object Vectors {
         q4(l2Norm(col("embedding"))).as("l2n"),
         q4(l1Norm(col("embedding"))).as("l1n"))
 
-  /** Exact k-NN by L2 — brute force + TakeOrderedAndProject (partial top-k
+  /** Exact k-NN by L2 — brute force + the engine top-k (partial top-k
     * per partition, O(k) global merge; no full sort). */
   def knnExact(s: SparkSession, dir: String): DataFrame =
     withQuery(s, dir)

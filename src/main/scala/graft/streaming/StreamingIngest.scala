@@ -19,10 +19,9 @@ import graft.index.{IndexStore, InvertedIndex}
   *  - the streaming checkpoint is the WAL analogue: on restart, foreachBatch
   *    re-delivers from the last committed batch. The data leg is idempotent
   *    (each batch overwrites its own `batch=N` partition); the index leg
-  *    skips batches already recorded in the index's `_BATCHES` marker, so a
-  *    replay duplicates a segment only if the crash landed exactly between
-  *    segment append and marker write — at-least-once on the index leg in
-  *    that window, exactly-once everywhere else;
+  *    records the batch id in the index version that publishes its segment
+  *    and skips batches the latest version records, so a replay after a
+  *    crash at any point adds the segment exactly once;
   *  - [[Maintenance.compactIfNeeded]] is the compaction loop
   *    (`compaction_max_segments`), run opportunistically after each batch.
   *
@@ -60,8 +59,7 @@ object StreamingIngest {
       // data leg: overwriting the batch's own partition is replay-idempotent
       batch.write.mode("overwrite").parquet(s"$tableDir/data/batch=$batchId")
       IndexStore.appendSegment(
-        InvertedIndex.build(batch, idCol, textCol, analyzerName), indexDir)
-      IndexStore.markBatchCommitted(spark, indexDir, batchId)
+        InvertedIndex.build(batch, idCol, textCol, analyzerName), indexDir, batch = Some(batchId))
       Maintenance.compactIfNeeded(spark, indexDir, compactionMaxSegments)
     } finally batch.unpersist()
   }

@@ -2,6 +2,7 @@ package graft.search
 
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{RefreshJobCount, TestSpark}
 
@@ -11,7 +12,7 @@ import graft.{RefreshJobCount, TestSpark}
   * checked against row evaluation of the same predicate over a copy of the
   * table that the claim rules cannot see (a local relation, not an indexed
   * scan). */
-class ReaderSnapshotSpec extends AnyFunSuite {
+class ReaderSnapshotSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = TestSpark.spark
   private val tag = System.nanoTime().toString.takeRight(9)
   private val tbl = s"rs_docs_$tag"
@@ -56,6 +57,14 @@ class ReaderSnapshotSpec extends AnyFunSuite {
     run(spark, s"CREATE TABLE $tbl(pk INTEGER PRIMARY KEY, body VARCHAR, emb FLOAT[4])")
     insert(1 to 40)
     createIndex()
+  }
+
+  // the test catalog is shared by every suite of the JVM: a table left
+  // behind is in the way of later suites (an EXPORT/IMPORT round trip)
+  override def afterAll(): Unit = {
+    run(spark, s"DROP INDEX IF EXISTS $idx")
+    run(spark, s"DROP TABLE IF EXISTS $tbl")
+    super.afterAll()
   }
 
   private def m(q: String) = s"ts_match(body, $q, '$dict')"

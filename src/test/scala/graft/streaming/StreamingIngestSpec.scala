@@ -16,6 +16,30 @@ case class Doc(doc_id: Long, text: String)
 @graft.SlowTest
 class StreamingIngestSpec extends AnyFunSuite {
 
+  test("a batch whose publish crashed is applied once on replay, a published one never again") {
+    val spark = TestSpark.spark
+    val docs = Tables.documents(spark, TestSpark.sfDir).select("doc_id", "text")
+    val base = sys.props("java.io.tmpdir") + s"/graft-stream-crash-${System.nanoTime()}"
+    val (tableDir, indexDir) = (s"$base/table", s"$base/index")
+    def ingest(batch: org.apache.spark.sql.DataFrame, id: Long): Unit =
+      StreamingIngest.ingestBatch(batch, id, tableDir, indexDir, "doc_id", "text",
+        "whitespace", compactionMaxSegments = 8)
+    val (first, second) = (docs.filter(col("doc_id") % 2 === 0), docs.filter(col("doc_id") % 2 === 1))
+    ingest(first, 0)
+    // the index leg of batch 1 writes its segment and dies at the publish:
+    // the batch id rides in the version that never published
+    graft.index.PublishCrash(spark, indexDir)(ingest(second, 1))
+    assert(!IndexStore.batchCommitted(spark, indexDir, 1))
+    assert(IndexStore.listSegments(spark, indexDir).size == 1)
+    ingest(second, 1) // the replay
+    assert(IndexStore.batchCommitted(spark, indexDir, 1))
+    ingest(second, 1) // a replay of a published batch changes nothing
+    assert(IndexStore.listSegments(spark, indexDir).size == 2)
+    val idx = IndexStore.load(spark, indexDir)
+    assert(idx.numDocs == docs.count())
+    assert(idx.docStats.count() == idx.docStats.select("doc_id").distinct().count())
+  }
+
   test("two-leg streaming ingest matches one-shot index build") {
     val spark = TestSpark.spark
     import spark.implicits._
