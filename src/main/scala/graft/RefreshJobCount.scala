@@ -17,9 +17,11 @@ import org.apache.spark.sql.functions._
   * over a prefix constructor (`ts_starts_with`). Last, the search
   * workload's set-up on 2,000 docs of the slice: the `INSERT … SELECT`
   * into a pg table with a primary key, and one pg `CREATE INDEX … USING
-  * inverted(pk, body <dict>, emb ivf)` over its text and vectors, and a pk
-  * lookup with a key not seen before. Each `*-exec` line and the lookup
-  * also print the statement's broadcasts and generated-class compiles.
+  * inverted(pk, body <dict>, emb ivf)` over its text and vectors, a pk
+  * lookup with a key not seen before, a one-row DELETE and UPDATE of the
+  * table and the pk lookup that first reads it after them. Each `*-exec`
+  * line and the lookups also print the statement's broadcasts and
+  * generated-class compiles.
   * Usage:
   * runMain graft.RefreshJobCount [sfDir]
   */
@@ -165,6 +167,11 @@ object RefreshJobCount {
     spark.sql("SELECT pk, body FROM jobcount_pg WHERE pk = 17").collect()
     println(costLine(spark, "pk-lookup-new-key")(
       spark.sql("SELECT pk, body FROM jobcount_pg WHERE pk = 1345").collect()))
+    // table writes, then the first read after a commit
+    counted("table-delete")(spark.sql("DELETE FROM jobcount_pg WHERE pk = 5"))
+    counted("table-update")(spark.sql("UPDATE jobcount_pg SET body = 'updated' WHERE pk = 6"))
+    println(costLine(spark, "pk-lookup-after-write")(
+      spark.sql("SELECT pk, body FROM jobcount_pg WHERE pk = 1346").collect()))
     spark.sql("DROP INDEX jobcount_pg_idx")
     spark.sql("DROP TABLE jobcount_pg")
     spark.sql("DROP TEXT SEARCH DICTIONARY jobcount_dict")

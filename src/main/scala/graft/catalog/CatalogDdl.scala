@@ -296,7 +296,7 @@ object CatalogDdl {
     case dropSchemaRe(ife, name, mode) =>
       val dropped = ObjectCatalog.dropSchema(spark, name,
         cascade = mode != null && mode.equalsIgnoreCase("CASCADE"),
-        ifExists = ife != null, retireTable)
+        ifExists = ife != null, retireTable(spark))
       result(spark, s"dropped schema $name (${dropped.size} objects)")
 
     case createTableRe(ine, name, colsRaw) =>
@@ -306,21 +306,21 @@ object CatalogDdl {
     case dropTableRe(ife, name, mode) =>
       val dropped = ObjectCatalog.drop(spark, name, "table",
         cascade = mode != null && mode.equalsIgnoreCase("CASCADE"),
-        ifExists = ife != null, retireTable)
+        ifExists = ife != null, retireTable(spark))
       result(spark, s"dropped ${dropped.mkString(", ")}")
 
     case createViewRe(orRepl, name, body) => createView(spark, name, body.trim, orRepl != null)
     case dropViewRe(ife, name, mode) =>
       val dropped = ObjectCatalog.drop(spark, name, "view",
         cascade = mode != null && mode.equalsIgnoreCase("CASCADE"),
-        ifExists = ife != null, retireTable)
+        ifExists = ife != null, retireTable(spark))
       result(spark, s"dropped ${dropped.mkString(", ")}")
 
     case createSeqRe(ine, name, opts) => createSequence(spark, name, opts, ine != null)
     case dropSeqRe(ife, name, mode) =>
       val dropped = ObjectCatalog.drop(spark, name, "sequence",
         cascade = mode != null && mode.equalsIgnoreCase("CASCADE"),
-        ifExists = ife != null, retireTable)
+        ifExists = ife != null, retireTable(spark))
       result(spark, s"dropped ${dropped.mkString(", ")}")
     case alterSeqRe(name, restartWith) =>
       val s = ObjectCatalog.sequence(name).getOrElse(throw analysisErr(
@@ -333,7 +333,7 @@ object CatalogDdl {
     case dropTypeRe(ife, name, mode) =>
       val dropped = ObjectCatalog.drop(spark, name, "type",
         cascade = mode != null && mode.equalsIgnoreCase("CASCADE"),
-        ifExists = ife != null, retireTable)
+        ifExists = ife != null, retireTable(spark))
       result(spark, s"dropped ${dropped.mkString(", ")}")
 
     case copyQueryToRe(query, path, opts) =>
@@ -354,7 +354,7 @@ object CatalogDdl {
     case dropFnRe(ife, name, mode) =>
       val dropped = ObjectCatalog.drop(spark, name, "function",
         cascade = mode != null && mode.equalsIgnoreCase("CASCADE"),
-        ifExists = ife != null, retireTable)
+        ifExists = ife != null, retireTable(spark))
       result(spark, s"dropped ${dropped.mkString(", ")}")
 
     case insertRe(mod, name, byMode, colList, source) =>
@@ -365,13 +365,12 @@ object CatalogDdl {
       val ts = truncateNames(names).map(tableOf)
       // pg: TRUNCATE needs only the TRUNCATE privilege, never SELECT
       ts.foreach(t => graft.search.Rbac.checkWrite(
-        spark, s"${t.dir}/current", "truncate", t.qname))
+        spark, t.dir, "truncate", t.qname))
       ObjectCatalog.internal.withValue(true) {
         ts.foreach { t =>
           Txn.touchTable(t.qname, t.dir)
           TableStore.overwrite(spark, t.dir,
             spark.createDataFrame(spark.sparkContext.emptyRDD[Row], sparkSchema(t)))
-          refresh(spark, t)
         }
         result(spark, s"truncated ${ts.map(_.qname).mkString(", ")}")
       }
@@ -506,35 +505,17 @@ object CatalogDdl {
     result(spark, msg)
   }
 
-  private def retireTable(t: TableDef): Unit =
+  private def retireTable(spark: SparkSession)(t: TableDef): Unit =
     // a REPEATABLE READ reader that already pinned this table keeps its
     // snapshot across the drop (file removal deferred; the dir is orphaned
     // and swept by maintenance — pg would have blocked the DROP on its
     // lock until that reader committed)
     if (!Txn.tableDropped(t.dir) &&
-        !Txn.anyActivePin(s"tablever:${t.dir}")) TableStore.destroy(t.dir)
+        !Txn.anyActivePin(s"tablever:${t.dir}")) TableStore.destroy(spark, t.dir)
 
   private def tableOf(name: String): TableDef =
     ObjectCatalog.table(name).getOrElse(throw analysisErr(
       s"""relation "$name" does not exist"""))
-
-  private def refresh(spark: SparkSession, t: TableDef): Unit = {
-    // REFRESH TABLE alone leaves the shared path-keyed file-status cache
-    // stale: a rewrite that retired files would then serve dead paths to
-    // the NEXT statement's spark.read of current/ (FILE_NOT_EXIST).
-    // EVERY session's caches are refreshed, not only the writer's — a
-    // READ COMMITTED reader on another connection must see this commit on
-    // its next statement (vector_search_isolation.test), and relation
-    // caches are per-session
-    ObjectCatalog.knownSessions.foreach { s =>
-      // refreshTable, not refreshByPath: the relation cache is keyed by
-      // identifier, and path-prefix matching misses on scheme differences
-      try s.catalog.refreshTable(t.qname)
-      catch { case _: Exception => () }
-    }
-    spark.catalog.refreshByPath(s"${t.dir}/current")
-    ObjectCatalog.internalSql(spark, s"REFRESH TABLE ${t.qname}")
-  }
 
   private def analysisErr(msg: String) =
     new org.apache.spark.sql.AnalysisException(
@@ -1003,11 +984,10 @@ object CatalogDdl {
       ColumnDef(f.name.toLowerCase, f.dataType.sql)).toSeq
     val dir = ObjectCatalog.dataDir(schema, tname)
     val t = TableDef(schema, tname, dir, cols)
-    TableStore.create(dir)
+    TableStore.create(spark, dir)
     TableStore.overwrite(spark, dir, df.toDF(cols.map(_.name): _*))
     ObjectCatalog.put(spark, t)
     Txn.tableCreated(dir)
-    refresh(spark, t)
     result(spark, s"created table ${t.qname} (${df.count()} rows)")
   }
 
@@ -1144,7 +1124,7 @@ object CatalogDdl {
   private def copyFrom(spark: SparkSession, name: String, path: String,
       optsRaw: Option[String]): DataFrame = {
     val t = tableOf(name)
-    graft.search.Rbac.checkWrite(spark, s"${t.dir}/current", "insert", t.qname)
+    graft.search.Rbac.checkWrite(spark, t.dir, "insert", t.qname)
     val o = optsRaw.map(parseCopyOpts).getOrElse(Map.empty)
     val schema = sparkSchema(t)
     val header = o.get("header").forall(v => v == "true" || v == "1")
@@ -1178,7 +1158,6 @@ object CatalogDdl {
     Txn.touchTable(t.qname, t.dir)
     val n = df.count()
     TableStore.append(spark, t.dir, df, n)
-    refresh(spark, t)
     countResult(spark, n)
   }
 
@@ -1285,7 +1264,7 @@ object CatalogDdl {
       sourceRaw: String, modifier: Option[String],
       byMode: Option[String]): DataFrame = {
     val t = tableOf(name)
-    graft.search.Rbac.checkWrite(spark, s"${t.dir}/current", "insert", t.qname)
+    graft.search.Rbac.checkWrite(spark, t.dir, "insert", t.qname)
 
     // peel a trailing ON CONFLICT clause off the source text
     val (sourceTxt, trailing, conflictTarget): (String, Option[Conflict], Option[String]) =
@@ -1406,7 +1385,7 @@ object CatalogDdl {
       case None =>
         // plain insert: any key clash is the pg duplicate-key error; an
         // empty table has nothing to clash with
-        val hasRows = TableStore.liveFiles(t.dir).nonEmpty
+        val hasRows = TableStore.version(spark, t.dir).exists(_.files.nonEmpty)
         keys.indices.foreach { i =>
           val c = keys(i)
           def clash = df.join(TableStore.read(spark, t.dir, sparkSchema(t)),
@@ -1422,7 +1401,6 @@ object CatalogDdl {
           "RETURNING with ON CONFLICT is not supported")
         resolveConflicts(spark, t, df, spec, conflictTarget)
     }
-    refresh(spark, t)
     returningCtx.value match {
       case Some(cols) => df.selectExpr(splitTop(cols).map(_.trim): _*)
       case None => countResult(spark, n)
@@ -1546,7 +1524,7 @@ object CatalogDdl {
         ua.name.toLowerCase
     }).toSet ++ (if (stars.nonEmpty) names else Set.empty)).intersect(names)
     if (read.nonEmpty)
-      graft.search.Rbac.check(spark, s"${t.dir}/current", t.qname, read)
+      graft.search.Rbac.check(spark, t.dir, t.qname, read)
     // pg charges SELECT on EVERY relation in the statement's range table —
     // a WHERE/SET/RETURNING scalar subquery reading another table needs
     // SELECT there too, even though the DML body then runs under the
@@ -1566,7 +1544,7 @@ object CatalogDdl {
           }.foreach { ref =>
             ObjectCatalog.table(ref).filter(_.qname != t.qname).foreach { ft =>
               val used = subAttrs.intersect(ft.columns.map(_.name).toSet)
-              graft.search.Rbac.check(spark, s"${ft.dir}/current", ft.qname, used)
+              graft.search.Rbac.check(spark, ft.dir, ft.qname, used)
             }
           }
         case _ => ()
@@ -1577,7 +1555,7 @@ object CatalogDdl {
   private def update(spark: SparkSession, name: String, sets: String,
       where: Option[String]): DataFrame = {
     val t = tableOf(name)
-    graft.search.Rbac.checkWrite(spark, s"${t.dir}/current", "update", t.qname)
+    graft.search.Rbac.checkWrite(spark, t.dir, "update", t.qname)
     checkReadCols(spark, t,
       where.toSeq ++ splitTop(sets).map { a =>
         val i = a.indexOf('='); if (i < 0) a else a.substring(i + 1)
@@ -1628,7 +1606,7 @@ object CatalogDdl {
       }
       post.selectExpr(splitTop(cols).map(_.trim): _*).localCheckpoint(true)
     }
-    val (affected, _) = TableStore.rewriteMatching(spark, t.dir, sparkSchema(t), pred,
+    val affected = TableStore.rewriteMatching(spark, t.dir, sparkSchema(t), pred,
       touched => {
         var out = touched
         assignments.foreach { case (cd, e) =>
@@ -1649,14 +1627,13 @@ object CatalogDdl {
         enforceEnums(t, post)
         post
       })
-    refresh(spark, t)
     returned.getOrElse(countResult(spark, affected))
   }
 
   private def delete(spark: SparkSession, name: String,
       where: Option[String]): DataFrame = {
     val t = tableOf(name)
-    graft.search.Rbac.checkWrite(spark, s"${t.dir}/current", "delete", t.qname)
+    graft.search.Rbac.checkWrite(spark, t.dir, "delete", t.qname)
     checkReadCols(spark, t,
       where.toSeq ++ returningCtx.value.toSeq.flatMap(splitTop(_)))
     ObjectCatalog.internal.withValue(true) {
@@ -1668,9 +1645,8 @@ object CatalogDdl {
         TableStore.read(spark, t.dir, sparkSchema(t)).filter(pred)
           .selectExpr(splitTop(cols).map(_.trim): _*).localCheckpoint(true)
       }
-      val (affected, _) = TableStore.rewriteMatching(spark, t.dir, sparkSchema(t), pred,
+      val affected = TableStore.rewriteMatching(spark, t.dir, sparkSchema(t), pred,
         touched => touched.filter(!pred))
-      refresh(spark, t)
       returned.getOrElse(countResult(spark, affected))
     }
   }
@@ -1685,9 +1661,9 @@ object CatalogDdl {
       s"""column "${c.name}" of relation "${t.qname}" already exists""")
     val cur = TableStore.read(spark, t.dir, sparkSchema(t))
     // pg fills existing rows in heap order: sequence defaults assign in
-    // insertion order, keyed by (file, row) — live files are named in
-    // commit-then-part order precisely so this sort IS insertion order
-    // (Spark's scan otherwise orders splits by size, not name)
+    // insertion order, keyed by (file, row) — a table version's files are
+    // named in commit-then-part order precisely so this sort IS insertion
+    // order (Spark's scan otherwise orders splits by size, not name)
     var filled = cur.withColumn("__ord",
       struct(col("_metadata.file_path"), col("_metadata.row_index")))
     if (c.generated.isDefined)

@@ -160,7 +160,6 @@ object ExportImport {
       }
       TableStore.overwrite(spark, t.dir,
         df.select(t.columns.map(c => col(c.name)): _*))
-      ObjectCatalog.internalSql(spark, s"REFRESH TABLE ${t.qname}")
       n += 1
     }
     s"imported $n tables from $dir"

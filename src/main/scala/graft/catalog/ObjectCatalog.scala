@@ -91,16 +91,6 @@ object ObjectCatalog {
   /** Internal statements must bypass the GraftSqlParser interception. */
   val internal = new DynamicVariable[Boolean](false)
 
-  /** Every session that has replayed the catalog — so a committed write can
-    * invalidate ALL sessions' relation/file-status caches, not only the
-    * writer's (pg READ COMMITTED: another connection's next statement sees
-    * the commit; a stale per-session listing would serve dead paths). */
-  private[catalog] def knownSessions: Seq[SparkSession] =
-    sessionReady.synchronized {
-      import scala.jdk.CollectionConverters._
-      sessionReady.keySet.asScala.toSeq
-    }
-
   @volatile private[graft] var baseDirOverride: Option[String] = None
   private def baseDir: String = baseDirOverride.getOrElse(sys.env.getOrElse(
     "GRAFT_CATALOG_DIR", sys.props("java.io.tmpdir") + "/graft-objects"))
@@ -128,9 +118,6 @@ object ObjectCatalog {
   def get(raw: String): Option[ObjDef] = { ensureLoaded(); objects.get(qualify(raw)) }
   def table(raw: String): Option[TableDef] =
     get(raw).collect { case t: TableDef => t }
-  /** The catalog table whose data directory's `current/` is `path`
-    * (scheme-insensitive) — how the snapshot-read rule maps a resolved
-    * file scan back to its TableStore for REPEATABLE READ pinning. */
   /** Every catalog table in a schema — the ES surface's _cat/indices
     * enumeration base (tables in schema `es` ARE the ES indexes). */
   def tablesInSchema(schema: String): Seq[TableDef] = {
@@ -140,12 +127,13 @@ object ObjectCatalog {
     }.toSeq.sortBy(_.name)
   }
 
-  def tableByCurrentPath(path: String): Option[TableDef] = {
+  /** The catalog table whose data directory is `root` (scheme-insensitive)
+    * — how a file scan maps back to its table's versions. */
+  def tableAt(root: Path): Option[TableDef] = {
     ensureLoaded()
-    val p = new org.apache.hadoop.fs.Path(path).toUri.getPath
-    objects.values.collectFirst {
-      case t: TableDef
-        if new org.apache.hadoop.fs.Path(s"${t.dir}/current").toUri.getPath == p => t
+    val p = root.toUri.getPath
+    objects.valuesIterator.collectFirst {
+      case t: TableDef if t.dir == p || new Path(t.dir).toUri.getPath == p => t
     }
   }
   def sequence(raw: String): Option[SequenceDef] =
@@ -337,7 +325,6 @@ object ObjectCatalog {
         objects.put(tableQ, newT)
         internalSql(spark, s"DROP TABLE IF EXISTS $tableQ")
         register(spark, newT)
-        internalSql(spark, s"REFRESH TABLE $tableQ")
       }
     }
     mutated(spark)
@@ -496,7 +483,6 @@ object ObjectCatalog {
           while (it.hasNext) {
             val o = fromJson(it.next())
             objects.put(o.qname, o)
-            o match { case t: TableDef => TableStore.repair(t.dir); case _ => () }
           }
         }
       } catch { case e: Exception =>
@@ -547,7 +533,7 @@ object ObjectCatalog {
 
   private def register(spark: SparkSession, o: ObjDef): Unit = o match {
     case t: TableDef =>
-      TableStore.create(t.dir)
+      TableStore.create(spark, t.dir)
       if (t.columns.exists(_.enumType.isDefined)) {
         // the Catalog API path: CREATE TABLE SQL text cannot attach field
         // metadata, and the enum-order optimizer rule reads declaration
@@ -565,12 +551,12 @@ object ObjectCatalog {
               }
             }
             spark.catalog.createTable(t.qname, "parquet",
-              StructType(fields), Map("path" -> s"${t.dir}/current"))
+              StructType(fields), Map("path" -> t.dir))
           }
         }
       } else internalSql(spark,
         s"CREATE TABLE IF NOT EXISTS ${t.qname} (${sparkSchemaDdl(t.columns)}) " +
-          s"USING parquet LOCATION '${t.dir}/current'")
+          s"USING parquet LOCATION '${t.dir}'")
       internalSql(spark, s"REFRESH TABLE ${t.qname}")
     case v: ViewDef =>
       try internalSql(spark, s"CREATE OR REPLACE VIEW ${v.qname} AS ${v.sql}")
@@ -657,13 +643,12 @@ object ObjectCatalog {
     * is OBJECT-precise and DIFF-based: only relations whose definition
     * actually changed across the rollback are dropped/re-registered — an
     * unchanged external table keeps its registration (its location did not
-    * move; the data plane rolled back underneath it and a REFRESH suffices).
+    * move, and its reads take their files from the table's versions).
     * A whole-database drop would take down native tables (index relations
     * etc.) sharing the `public` namespace, and re-registering everything
     * made every small-transaction rollback O(catalog). */
   def restore(spark: SparkSession,
-      snap: (Map[String, Boolean], Map[String, ObjDef]),
-      refreshOnly: Option[Set[String]] = None): Unit = synchronized {
+      snap: (Map[String, Boolean], Map[String, ObjDef])): Unit = synchronized {
     val oldObjects = objects.toMap
     val oldSchemas = schemas.keys.toSet
     schemas.clear(); snap._1.foreach { case (k, v) => schemas.put(k, v) }
@@ -697,16 +682,6 @@ object ObjectCatalog {
       pendingV = rem
     }
     pendingV.foreach(register(spark, _))
-    // surviving tables' data may have rolled back underneath Spark's caches;
-    // `refreshOnly` limits this to the tables the txn actually touched so a
-    // small rollback stays O(its own footprint), not O(catalog)
-    snap._2.valuesIterator.foreach {
-      case t: TableDef if !changed.contains(t.qname) &&
-          refreshOnly.forall(_.contains(t.qname)) =>
-        spark.catalog.refreshByPath(s"${t.dir}/current")
-        internalSql(spark, s"REFRESH TABLE ${t.qname}")
-      case _ => ()
-    }
     (oldSchemas -- snap._1.keySet).foreach(s =>
       internalSql(spark, s"DROP DATABASE IF EXISTS $s CASCADE"))
     (snap._1.keySet -- oldSchemas).foreach(registerSchema(spark, _))

@@ -2,269 +2,225 @@ package graft.catalog
 
 import java.util.UUID
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.input_file_name
 import org.apache.spark.sql.types.StructType
 
-/** Data plane for catalog TABLEs (graft.catalog.ObjectCatalog): a directory
-  * of parquet files with an undo log, so transactions can roll DML back and
-  * a crashed commit never corrupts the live set.
+import graft.index.Commit
+
+/** Data plane for catalog TABLEs (graft.catalog.ObjectCatalog): a table is
+  * a sequence of versions, each naming its parquet files, published by the
+  * commit protocol of the indexes ([[graft.index.Commit]]).
   *
   * Reference analogue: the catalog-owned native tables the pg corpus runs
-  * DML against (server/catalog/table.cpp — heap storage + WAL undo). The
-  * Spark shape is file-granularity MVCC:
+  * DML against (server/catalog/table.cpp over DuckDB's MVCC storage). The
+  * Spark shape is file-granularity versions, as in Delta Lake:
   *
   * {{{
-  *   <dir>/current/<uuid>.parquet     the live file set (Spark scans this)
-  *   <dir>/_LOG/<n>.json              commit n: {"added":[...],"retired":[...]}
-  *   <dir>/_RETIRED/<n>/<file>        files commit n removed (kept for undo)
+  *   <dir>/_CURRENT                         the published version
+  *   <dir>/_v/<n>-<id>.json                 one version's manifest
+  *   <dir>/_data/<n>-<id>/part-*.parquet    the files one write staged
   * }}}
   *
-  * Every commit is O(delta): INSERT adds files, DELETE/UPDATE rewrites ONLY
-  * the files whose row groups matched the predicate (file pruning via
-  * `input_file_name`), never the whole table. Rollback to version v undoes
-  * logs > v in reverse: deletes the files they added, moves the files they
-  * retired back — O(changed files), no data copy. Readers are plain
-  * distributed parquet scans of `current/` — native pushdown/pruning apply,
-  * and the Spark session catalog points a real external table at the
-  * directory so `SELECT ... FROM schema.tbl` plans with full stats.
+  * A manifest lists its data files in heap order (commit, then part) —
+  * also their path order, which `ALTER TABLE … ADD COLUMN DEFAULT nextval`
+  * fills existing rows in — with each file's length and modification time,
+  * so planning a scan lists no directory and stats no file.
   *
-  * Crash safety: new files land in `_TMP` first; the log row is written
-  * (atomic rename) BEFORE any move into/out of `current/`, so a crash
-  * leaves either a no-op (tmp garbage) or a logged commit that
-  * [[completeOrUndo]] finishes idempotently on next open.
+  * Every write is O(delta) and publishes one version: INSERT appends its
+  * files, DELETE/UPDATE drop only the files whose rows matched (file
+  * pruning via `input_file_name`) and add their rewrites, an overwrite
+  * replaces every file. A crash before the publish leaves the previous
+  * version serving; what it staged is never read.
   *
-  * Concurrency scope: one writer session per table (the corpus' model);
-  * cross-session snapshot-isolated DML at scale is the Iceberg surface
-  * (graft.sources.IcebergTables), which this store deliberately does not
-  * duplicate.
+  * Reads: every scan of a table reads one version's files through a
+  * [[TableFiles]] index. Writers read the latest version ([[read]]);
+  * statements get theirs from the analyzer rule
+  * `graft.plans.ReadTableVersions` — the statement's current version, or
+  * the one a REPEATABLE READ block pinned. The Spark catalog table is
+  * located at `<dir>`, where Spark's own listing finds no data file (every
+  * entry is `_`-prefixed), so its cached relation never goes stale.
+  *
+  * Retention: a dropped file stays on disk while an open transaction block
+  * holds a version that names it ([[Txn.heldFiles]]); otherwise the next
+  * version that drops files deletes it. ROLLBACK publishes the files of the
+  * version the block first wrote on ([[restore]]).
+  *
+  * Concurrency: one writer per table. A publish whose base is no longer the
+  * latest version fails instead of overwriting it; readers never lock.
+  * Cross-session snapshot-isolated DML at scale is the Iceberg surface
+  * (graft.sources.IcebergTables), which this store does not duplicate.
   */
 object TableStore {
 
-  private val mapper = new ObjectMapper()
+  /** One data file of a version: its name relative to the table directory,
+    * its length and its modification time. */
+  final case class DataFile(name: String, length: Long, mtime: Long)
 
-  private def fs(p: Path): FileSystem =
-    p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-
-  private def currentDir(dir: String) = new Path(dir, "current")
-  private def logDir(dir: String) = new Path(dir, "_LOG")
-  private def retiredDir(dir: String, n: Long) = new Path(new Path(dir, "_RETIRED"), n.toString)
-
-  def create(dir: String): Unit = {
-    val f = fs(new Path(dir))
-    f.mkdirs(currentDir(dir))
-    f.mkdirs(logDir(dir))
+  /** The files of one version of the table at `root`, as a scan lists
+    * them. */
+  final case class TableFiles(root: Path, files: Seq[FileStatus]) extends FileIndex {
+    override def rootPaths: Seq[Path] = Seq(root)
+    override def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(InternalRow.empty, files.toArray))
+    override def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
+    override def refresh(): Unit = ()
+    override def sizeInBytes: Long = files.map(_.getLen).sum
+    override def partitionSchema: StructType = new StructType()
   }
 
-  def destroy(dir: String): Unit = {
+  private def fs(spark: SparkSession, dir: String): FileSystem =
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  def create(spark: SparkSession, dir: String): Unit = fs(spark, dir).mkdirs(new Path(dir))
+
+  def destroy(spark: SparkSession, dir: String): Unit = {
     val p = new Path(dir)
-    val f = fs(p)
+    val f = fs(spark, dir)
     if (f.exists(p)) f.delete(p, true)
   }
 
-  /** Live parquet scan with the declared schema (an empty table has no
-    * files, so the schema must come from the catalog, not the footers).
-    * The file list comes from a FRESH filesystem listing, never Spark's
-    * shared path-keyed status cache — a commit that just retired files
-    * must not leave this read serving dead paths. */
-  def read(spark: SparkSession, dir: String, schema: StructType): DataFrame = {
-    val files = liveFiles(dir)
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(files: _*)
+  /** The latest published version, the one a writer builds on. */
+  def version(spark: SparkSession, dir: String): Option[Commit.Version] =
+    Commit.latest(spark, dir)
+
+  /** The version a statement reads (read once per statement). */
+  def current(spark: SparkSession, dir: String): Option[Commit.Version] =
+    Commit.current(spark, dir)
+
+  private def dataFiles(v: Option[Commit.Version]): Seq[DataFile] =
+    v.fold(Seq.empty[DataFile])(v => v.memo("dataFiles") {
+      val sizes = v.field("sizes").fold(Seq.empty[com.fasterxml.jackson.databind.JsonNode])(
+        _.elements().asScala.toSeq)
+      require(sizes.size == v.files.size, s"table version ${v.id} of ${v.dir} lacks file sizes")
+      v.files.zip(sizes).map { case (name, s) => DataFile(name, s.get(0).asLong, s.get(1).asLong) }
+    })
+
+  /** The scan index of `files` of the table at `root`. */
+  private def index(root: Path, files: Seq[DataFile]): TableFiles =
+    TableFiles(root, files.map(f =>
+      new FileStatus(f.length, false, 0, 0, f.mtime, new Path(root, f.name))))
+
+  /** The scan index of version `v` (None: never written) of the table at
+    * `root`. */
+  def files(root: Path, v: Option[Commit.Version]): TableFiles = index(root, dataFiles(v))
+
+  private def qualified(spark: SparkSession, dir: String): Path =
+    fs(spark, dir).makeQualified(new Path(dir))
+
+  private def scan(spark: SparkSession, schema: StructType, files: TableFiles): DataFrame =
+    spark.baseRelationToDataFrame(HadoopFsRelation(files, new StructType(), schema, None,
+      new ParquetFileFormat, Map.empty)(spark))
+
+  /** A scan of version `v` with the declared schema (an empty table has no
+    * files, so the schema comes from the catalog, not the footers). */
+  def readVersion(spark: SparkSession, dir: String, schema: StructType,
+      v: Option[Commit.Version]): DataFrame =
+    scan(spark, schema, files(qualified(spark, dir), v))
+
+  /** A scan of the latest version: the rows a writer builds on. */
+  def read(spark: SparkSession, dir: String, schema: StructType): DataFrame =
+    readVersion(spark, dir, schema, version(spark, dir))
+
+  /** `spark.read.parquet(root)` for a scan root that may be a catalog
+    * table's directory, which holds no file Spark's inference could read:
+    * the table is read with its declared schema, and the analyzer's version
+    * rule gives the scan its files. None for any other root, and for a
+    * table whose version holds no file: that read fails as an empty
+    * directory's does, which defers an index build to the first VACUUM. */
+  def readRoot(spark: SparkSession, root: String): Option[DataFrame] =
+    ObjectCatalog.tableAt(new Path(root))
+      .filter(t => current(spark, t.dir).exists(_.files.nonEmpty))
+      .map(t => spark.read.schema(StructType.fromDDL(ObjectCatalog.sparkSchemaDdl(t.columns)))
+        .parquet(root))
+
+  /** Write `df` under a directory named for version `n` that no other
+    * write uses; its files in part order. */
+  private def stage(spark: SparkSession, dir: String, n: Long, df: DataFrame): Seq[DataFile] = {
+    val rel = f"_data/$n%08d-${UUID.randomUUID().toString.take(8)}"
+    val staged = new Path(dir, rel)
+    df.write.option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .parquet(staged.toString)
+    fs(spark, dir).listStatus(staged).toSeq.filter(_.getPath.getName.endsWith(".parquet"))
+      .sortBy(_.getPath.getName)
+      .map(s => DataFile(s"$rel/${s.getPath.getName}", s.getLen, s.getModificationTime))
   }
 
-  /** The live parquet files, from a fresh listing of `current/`. */
-  def liveFiles(dir: String): Seq[String] = {
-    val cur = currentDir(dir)
-    val f = fs(cur)
-    if (!f.exists(cur)) Seq.empty
-    else f.listStatus(cur).map(_.getPath.toString)
-      .filter(_.endsWith(".parquet")).toSeq.sorted
-  }
+  private val writers = TrieMap.empty[String, Object]
 
-  def version(dir: String): Long = {
-    val f = fs(logDir(dir))
-    if (!f.exists(logDir(dir))) 0L
-    else f.listStatus(logDir(dir)).map(_.getPath.getName)
-      .filter(_.endsWith(".json")).map(_.stripSuffix(".json").toLong)
-      .foldLeft(0L)(math.max)
-  }
+  private def locked[T](dir: String)(body: => T): T =
+    writers.getOrElseUpdate(dir, new Object).synchronized(body)
 
-  private def writeLog(dir: String, n: Long, added: Seq[String],
-      retired: Seq[String], tmpDir: String): Unit = {
-    val node = mapper.createObjectNode()
-    val a = node.putArray("added"); added.foreach(a.add)
-    val r = node.putArray("retired"); retired.foreach(r.add)
-    node.put("tmpdir", tmpDir)
-    val f = fs(logDir(dir))
-    val tmp = new Path(logDir(dir), s".$n.json.tmp")
-    val out = f.create(tmp, true)
-    try out.write(mapper.writeValueAsBytes(node)) finally out.close()
-    if (!f.rename(tmp, new Path(logDir(dir), s"$n.json")))
-      throw new IllegalStateException(s"table commit $n already exists under $dir")
-  }
-
-  private def readLog(dir: String, n: Long): (Seq[String], Seq[String], String) = {
-    val f = fs(logDir(dir))
-    val in = f.open(new Path(logDir(dir), s"$n.json"))
-    val node = try mapper.readTree(in.readAllBytes()) finally in.close()
-    def arr(k: String): Seq[String] = {
-      val it = node.get(k).elements()
-      val b = Seq.newBuilder[String]
-      while (it.hasNext) b += it.next().asText()
-      b.result()
-    }
-    (arr("added"), arr("retired"),
-      Option(node.get("tmpdir")).map(_.asText()).getOrElse(""))
-  }
-
-  /** Finish a commit interrupted between its log write and its file moves
-    * (idempotent): staged files still in _TMP move in, retired files still
-    * in current/ move out. Called once per table at catalog load. */
-  def repair(dir: String): Unit = {
-    val n = version(dir)
-    if (n == 0) return
-    val (added, retired, tmpDir) = readLog(dir, n)
-    val f = fs(currentDir(dir))
-    if (tmpDir.nonEmpty) added.foreach { name =>
-      val src = new Path(tmpDir, name)
-      if (f.exists(src)) f.rename(src, new Path(currentDir(dir), name))
-    }
-    retired.foreach { name =>
-      val src = new Path(currentDir(dir), name)
-      if (f.exists(src)) {
-        f.mkdirs(retiredDir(dir, n))
-        f.rename(src, new Path(retiredDir(dir, n), name))
+  /** Publish the version after `base` naming `files`; fails when another
+    * writer published since `base` was read. */
+  private def publish(spark: SparkSession, dir: String, base: Option[Commit.Version],
+      files: Seq[DataFile]): Unit = locked(dir) {
+    if (version(spark, dir).map(_.id) != base.map(_.id))
+      throw new org.apache.spark.sql.AnalysisException("USER_RAISED_EXCEPTION", Map(
+        "errorMessage" -> s"could not serialize access due to concurrent update of $dir"))
+    Commit.publishHolding(spark, dir, base, files.map(_.name), Txn.heldFiles(dir),
+      "sizes" -> files.map(f => Array(f.length, f.mtime)).asJava)
+    // a staged directory whose last file was retired goes with it
+    val live = files.map(_.name).toSet
+    if (base.exists(_.files.exists(!live(_)))) {
+      val f = fs(spark, dir)
+      base.get.retired.map(r => new Path(dir, r).getParent).distinct.foreach { p =>
+        if (f.exists(p) && f.listStatus(p).isEmpty) f.delete(p, true)
       }
     }
   }
 
-  /** Materialize `df` into staged parquet files under `_TMP`, in Spark's
-    * part-file order (insertion order within the batch); the caller moves
-    * them only after the commit log row exists. */
-  private def stage(spark: SparkSession, dir: String, df: DataFrame): Seq[String] = {
-    val tmp = new Path(dir, s"_TMP/${UUID.randomUUID()}")
-    df.write.mode("overwrite").parquet(tmp.toString)
-    val f = fs(tmp)
-    f.listStatus(tmp).map(_.getPath).filter(_.getName.endsWith(".parquet")).toSeq
-      .sortBy(_.getName).map(_.toString)
-  }
-
-  /** Commit: log first, then move staged files in and retired files out.
-    * Live files are named `<commit>-<idx>-<uuid>.parquet` so a plain
-    * listing sorts in commit-then-part order — the pg heap-order contract
-    * row-order-sensitive paths (ALTER ... ADD COLUMN DEFAULT nextval)
-    * rely on. `staged` are absolute paths under _TMP; `retire` are names
-    * in current/. */
-  private def commit(dir: String, staged: Seq[String], retire: Seq[String]): Long = {
-    val n = version(dir) + 1
-    val names = staged.zipWithIndex.map { case (_, i) =>
-      f"$n%06d-$i%04d-${UUID.randomUUID().toString.take(8)}.parquet"
-    }
-    val tmpDir = staged.headOption.map(p => new Path(p).getParent.toString).getOrElse("")
-    // pre-rename inside _TMP to the final names so repair() can finish the
-    // move from the log alone after a crash
-    val f = fs(currentDir(dir))
-    staged.zip(names).foreach { case (p, name) =>
-      f.rename(new Path(p), new Path(tmpDir, name))
-    }
-    writeLog(dir, n, names, retire, tmpDir)
-    names.foreach(name =>
-      f.rename(new Path(tmpDir, name), new Path(currentDir(dir), name)))
-    if (retire.nonEmpty) {
-      f.mkdirs(retiredDir(dir, n))
-      retire.foreach(name =>
-        f.rename(new Path(currentDir(dir), name), new Path(retiredDir(dir, n), name)))
-    }
-    n
-  }
-
   /** Append the `rows` rows of `df` (INSERT), a count the caller already
-    * has. Returns the new version. */
-  def append(spark: SparkSession, dir: String, df: DataFrame, rows: Long): Long =
-    if (rows == 0) version(dir)
-    else commit(dir, stage(spark, dir, df), Nil)
+    * has. */
+  def append(spark: SparkSession, dir: String, df: DataFrame, rows: Long): Unit =
+    if (rows > 0) {
+      val base = version(spark, dir)
+      publish(spark, dir, base,
+        dataFiles(base) ++ stage(spark, dir, Commit.nextNumber(base), df))
+    }
 
-  /** Replace the whole live set (CTAS backfill, ALTER TABLE rewrites). */
-  def overwrite(spark: SparkSession, dir: String, df: DataFrame): Long = {
-    val f = fs(currentDir(dir))
-    val existing =
-      if (!f.exists(currentDir(dir))) { create(dir); Seq.empty[String] }
-      else f.listStatus(currentDir(dir)).map(_.getPath.getName).toSeq
-    commit(dir, stage(spark, dir, df), existing)
+  /** Replace every file (CTAS backfill, ALTER TABLE rewrites, TRUNCATE). */
+  def overwrite(spark: SparkSession, dir: String, df: DataFrame): Unit = {
+    val base = version(spark, dir)
+    publish(spark, dir, base, stage(spark, dir, Commit.nextNumber(base), df))
   }
 
   /** Rewrite only the files whose rows match `pred`, replacing them with
     * `remap(matchedFiles)` — the DELETE/UPDATE kernel. Only touched files
     * are rewritten (pg heap-page analogue); untouched files carry over.
-    * Returns (affected row count, new version). */
+    * Returns the affected row count. */
   def rewriteMatching(spark: SparkSession, dir: String, schema: StructType,
-      pred: org.apache.spark.sql.Column,
-      remap: DataFrame => DataFrame): (Long, Long) = {
-    val cur = read(spark, dir, schema)
-    val hits = cur.filter(pred)
+      pred: Column, remap: DataFrame => DataFrame): Long = {
+    val base = version(spark, dir)
+    val root = qualified(spark, dir)
+    val all = dataFiles(base)
+    val hits = scan(spark, schema, index(root, all)).filter(pred)
       .groupBy(input_file_name().as("f")).count().collect()
-    if (hits.isEmpty) return (0L, version(dir))
-    val files = hits.map(_.getString(0)).toSeq
-    val affected = hits.map(_.getLong(1)).sum
-    val touched = spark.read.schema(schema).parquet(files: _*)
-    val replacement = remap(touched)
-    val staged = if (replacement.isEmpty) Nil else stage(spark, dir, replacement)
-    val names = files.map(p => new Path(new java.net.URI(p).getPath).getName)
-    (affected, commit(dir, staged, names))
+    if (hits.isEmpty) return 0L
+    val byPath = all.map(f => new Path(root, f.name).toUri.getPath -> f).toMap
+    val touched = hits.map(h => byPath(new java.net.URI(h.getString(0)).getPath)).toSet
+    val replacement = remap(scan(spark, schema, index(root, all.filter(touched))))
+    val staged =
+      if (replacement.isEmpty) Nil else stage(spark, dir, Commit.nextNumber(base), replacement)
+    publish(spark, dir, base, all.filterNot(touched) ++ staged)
+    hits.map(_.getLong(1)).sum
   }
 
-  /** The file set AS OF commit `target`, without touching the live state:
-    * start from current/ and walk the logs above `target` in reverse,
-    * dropping their additions and re-including their retirees (which still
-    * sit under _RETIRED/<n>/). This is the REPEATABLE READ snapshot scan —
-    * a reader pinned at version v keeps a consistent file list while
-    * writers commit past it (pg's MVCC snapshot; file-granularity here).
-    * O(commits since target), metadata only. */
-  def filesAt(dir: String, target: Long): Seq[String] = {
-    val cur = currentDir(dir)
-    val f = fs(cur)
-    val live = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    if (f.exists(cur))
-      f.listStatus(cur).map(_.getPath).filter(_.getName.endsWith(".parquet"))
-        .foreach(p => live.put(p.getName, p.toString))
-    var n = version(dir)
-    while (n > target) {
-      val (added, retired, _) = readLog(dir, n)
-      added.foreach(live.remove)
-      retired.foreach { name =>
-        live.put(name, new Path(retiredDir(dir, n), name).toString)
-      }
-      n -= 1
-    }
-    live.values.toSeq.sorted
-  }
-
-  /** Snapshot scan at a pinned version (see [[filesAt]]). */
-  def readAt(spark: SparkSession, dir: String, schema: StructType,
-      target: Long): DataFrame = {
-    val files = filesAt(dir, target)
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(files: _*)
-  }
-
-  /** Undo every commit newer than `target` (transaction rollback): delete
-    * what they added, restore what they retired. */
-  def rollbackTo(dir: String, target: Long): Unit = {
-    val f = fs(currentDir(dir))
-    var n = version(dir)
-    while (n > target) {
-      val (added, retired, _) = readLog(dir, n)
-      added.foreach(name => f.delete(new Path(currentDir(dir), name), false))
-      retired.foreach(name =>
-        f.rename(new Path(retiredDir(dir, n), name), new Path(currentDir(dir), name)))
-      f.delete(retiredDir(dir, n), true)
-      f.delete(new Path(logDir(dir), s"$n.json"), false)
-      n -= 1
-    }
+  /** Make version `v`'s files current again (transaction rollback): a new
+    * version naming them, unless `v` is still the latest. A table whose
+    * directory is gone is left alone. */
+  def restore(spark: SparkSession, dir: String, v: Option[Commit.Version]): Unit = locked(dir) {
+    val latest = version(spark, dir)
+    if (latest.isDefined && latest.map(_.id) != v.map(_.id))
+      publish(spark, dir, latest, dataFiles(v))
   }
 }

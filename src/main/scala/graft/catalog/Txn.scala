@@ -2,6 +2,8 @@ package graft.catalog
 
 import org.apache.spark.sql.SparkSession
 
+import graft.index.Commit
+
 /** Session transaction blocks over the object catalog and its table data —
   * the pg semantics the reference's txn corpus pins
   * (tests/sqllogic/any/pg/txn/ *.test, recovery/ddl_in_transaction.test):
@@ -11,10 +13,15 @@ import org.apache.spark.sql.SparkSession
   *    COMMIT/ROLLBACK is refused with pg's 25P02 message, and COMMIT of an
   *    aborted block is converted to a rollback (aborted_block.test).
   *  - DDL is transactional (pg!): CREATE/DROP TABLE inside a block roll
-  *    back with it. Undo = catalog snapshot at BEGIN (metadata-sized) +
-  *    per-table data version at first touch (TableStore.rollbackTo is
-  *    O(files changed since), not O(table)). Physical data of tables
+  *    back with it. Undo = the catalog pre-images of the objects the block
+  *    wrote (metadata-sized) + each written table's data version at first
+  *    touch: ROLLBACK publishes that version's file list as a new version
+  *    ([[TableStore.restore]], metadata only). Physical data of tables
   *    DROPped inside a block is retired, not deleted, until COMMIT.
+  *  - REPEATABLE READ / SERIALIZABLE blocks pin the version of each table
+  *    they first scan (graft.plans.ReadTableVersions). Every version a
+  *    block holds — first-touch or pinned — keeps its files on disk until
+  *    the block ends ([[heldFiles]]).
   *  - Sequences are deliberately NON-transactional, as in pg: a rolled-
   *    back nextval leaves a gap.
   *  - SET LOCAL changes revert at block end, commit or abort.
@@ -44,8 +51,9 @@ object Txn {
       * a concurrent session's committed DDL intact across our rollback. */
     val objUndo = scala.collection.mutable.LinkedHashMap.empty[String, Option[ObjectCatalog.ObjDef]]
     val schemaUndo = scala.collection.mutable.LinkedHashMap.empty[String, Option[Boolean]]
-    /** table qname -> (dir, data version at first touch) */
-    val tableVersions = scala.collection.mutable.LinkedHashMap.empty[String, (String, Long)]
+    /** table qname -> (dir, data version at first touch; None = never written) */
+    val tableVersions =
+      scala.collection.mutable.LinkedHashMap.empty[String, (String, Option[Commit.Version])]
     /** dirs of tables created in this txn (destroyed on rollback) */
     val createdDirs = scala.collection.mutable.ArrayBuffer.empty[String]
     /** dirs of tables dropped in this txn (deleted only on commit) */
@@ -58,7 +66,8 @@ object Txn {
       * sticks; any/pg/settings/scopes.test). */
     val sessionVars = scala.collection.mutable.LinkedHashMap.empty[String, Option[String]]
     /** REPEATABLE READ pins: resolution-time snapshots keyed by kind
-      * ("tablever:<dir>" -> java.lang.Long version, "idxrel:<name>" ->
+      * ("tablever:<dir>" -> Option[Commit.Version], "tabledef:<qname>" ->
+      * (TableDef, Option[Commit.Version]), "idxrel:<name>" ->
       * table qname String, "analyzer:<name>" -> Analyzer). First touch
       * inside an RR/SERIALIZABLE block records the live state; later
       * touches in the SAME block reuse it even after another session's
@@ -186,8 +195,20 @@ object Txn {
   /** Record a table's data version before its FIRST mutation in this block. */
   def touchTable(qname: String, dir: String): Unit = running.foreach { s =>
     if (s.state == Active && !s.ctx.tableVersions.contains(qname))
-      s.ctx.tableVersions.put(qname, (dir, TableStore.version(dir)))
+      s.ctx.tableVersions.put(qname, (dir, TableStore.version(s.ctx.spark, dir)))
   }
+
+  /** The data files at `dir` that open blocks still read: those of each
+    * block's first-touch version (its rollback target) and of its
+    * REPEATABLE READ pin. A write keeps them on disk. */
+  def heldFiles(dir: String): Set[String] =
+    states.synchronized {
+      import scala.jdk.CollectionConverters._
+      states.values.asScala.toSeq.flatMap(s => Option(s.ctx).filter(_ => s.state != Idle))
+    }.flatMap { c =>
+      c.tableVersions.valuesIterator.collect { case (`dir`, v) => v }.toSeq ++
+        c.pins.get(s"tablever:$dir").map(_.asInstanceOf[Option[Commit.Version]])
+    }.flatten.flatMap(_.files).toSet
 
   def tableCreated(dir: String): Unit = running.foreach { s =>
     if (s.state == Active) s.ctx.createdDirs += dir
@@ -269,7 +290,7 @@ object Txn {
       case Aborted => rollback(spark); "ROLLBACK" // pg converts COMMIT of an aborted block
       case Active =>
         val c = s.ctx
-        c.droppedDirs.foreach(TableStore.destroy) // deferred physical deletes
+        c.droppedDirs.foreach(TableStore.destroy(spark, _)) // deferred physical deletes
         restoreLocals(spark, c)
         s.state = Idle; s.ctx = null
         "COMMIT"
@@ -285,14 +306,12 @@ object Txn {
         s.state = Idle; s.ctx = null
         // data first (while the old defs still reference the dirs), then catalog
         c.tableVersions.values.foreach { case (dir, v) =>
-          TableStore.rollbackTo(dir, v)
-          c.spark.catalog.refreshByPath(s"$dir/current")
+          if (!c.createdDirs.contains(dir)) TableStore.restore(c.spark, dir, v)
         }
-        c.createdDirs.foreach(TableStore.destroy)
-        if (c.objUndo.nonEmpty || c.schemaUndo.nonEmpty || c.tableVersions.nonEmpty)
+        c.createdDirs.foreach(TableStore.destroy(c.spark, _))
+        if (c.objUndo.nonEmpty || c.schemaUndo.nonEmpty)
           ObjectCatalog.restore(c.spark,
-            ObjectCatalog.overlayUndo(c.objUndo.toSeq, c.schemaUndo.toSeq),
-            refreshOnly = Some(c.tableVersions.keySet.toSet))
+            ObjectCatalog.overlayUndo(c.objUndo.toSeq, c.schemaUndo.toSeq))
         // undo runs inner-to-outer: SET LOCAL undo first, then the plain-SET
         // pre-images — so when a variable was plain-SET and then SET LOCAL'd
         // in the same block, the session-level pre-image wins (pg reverts

@@ -10,9 +10,10 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.QueryPlanningTracker
 
-/** The commit protocol of every index directory: the text index
+/** The commit protocol of every versioned directory: the text index
   * ([[IndexStore]]), the IVF index with its quantized codes ([[IvfIndex]],
-  * [[QuantizedIvf]]) and the point-lookup zones ([[PkIndex]]).
+  * [[QuantizedIvf]]), the point-lookup zones ([[PkIndex]]) and the data of
+  * catalog tables ([[graft.catalog.TableStore]]).
   *
   * {{{
   *   <dir>/_CURRENT             the published version: its manifest's name
@@ -37,7 +38,9 @@ import org.apache.spark.sql.catalyst.QueryPlanningTracker
   *    ([[Version.memo]]), is kept per (directory, version).
   *  - Retire: the roots a version drops stay on disk, so plans opened on
   *    the previous version keep running, until the next version that drops
-  *    roots is published; then they are deleted. Of the manifests, the
+  *    roots is published; then they are deleted, except those a writer
+  *    names as still held (a table version an open transaction reads),
+  *    which are retired again by the following one. Of the manifests, the
   *    current and the previous one are kept.
   *
   * One writer per directory at a time (the DDL path); readers never lock.
@@ -140,15 +143,24 @@ object Commit {
     * with `base`'s object fields overlaid by `fields`, then retire. Every
     * root in `files` must already be written. */
   def publish(spark: SparkSession, dir: String, base: Option[Version],
-      files: Seq[String], fields: (String, Any)*): Version = {
+      files: Seq[String], fields: (String, Any)*): Version =
+    publishHolding(spark, dir, base, files, Set.empty, fields: _*)
+
+  /** [[publish]], keeping the retired roots in `held` on disk: they stay
+    * retired and are deleted by a later dropping version that no longer
+    * holds them. A root that `files` names again is live, never retired. */
+  def publishHolding(spark: SparkSession, dir: String, base: Option[Version],
+      files: Seq[String], held: Set[String], fields: (String, Any)*): Version = {
     val n = nextNumber(base)
-    val dropped = base.fold(Seq.empty[String])(_.files.filterNot(files.toSet))
+    val live = files.toSet
+    val dropped = base.fold(Seq.empty[String])(_.files.filterNot(live))
+    val retired = base.fold(Seq.empty[String])(_.retired.filterNot(live))
     val body = base.fold(mapper.createObjectNode())(_.body.deepCopy[ObjectNode]())
     fields.foreach { case (k, v) => body.set[JsonNode](k, mapper.valueToTree[JsonNode](v)) }
     body.put("version", n)
     body.set[JsonNode]("files", mapper.valueToTree[JsonNode](files.asJava))
     body.set[JsonNode]("retired", mapper.valueToTree[JsonNode](
-      (if (dropped.nonEmpty) dropped else base.fold(Seq.empty[String])(_.retired)).asJava))
+      (if (dropped.nonEmpty) dropped ++ retired.filter(held) else retired).asJava))
     base.fold(body.remove("previous"))(b => body.put("previous", b.id))
     val id = f"$n%08d-${java.util.UUID.randomUUID().toString.take(8)}.json"
     val fs = IndexStore.fsFor(spark, dir)
@@ -159,7 +171,7 @@ object Commit {
     versions.put(dir, v)
     statementPins.foreach(_.put(dir, Some(id)))
     if (dropped.nonEmpty)
-      base.foreach(_.retired.foreach(r => fs.delete(new Path(s"$dir/$r"), true)))
+      retired.filterNot(held).foreach(r => fs.delete(new Path(s"$dir/$r"), true))
     base.flatMap(_.previous).foreach(p => fs.delete(new Path(s"$dir/_v/$p"), false))
     v
   }

@@ -207,10 +207,8 @@ private[index] object IndexTask {
 
     def rows(f: Cols => Unit): Unit = {
       val c = new Cols(required.map(_.dataType))
-      files.foreach { file =>
-        val it = parquet.rows(file.path, file.length, file.mtime, required, filters)
-        try it.foreach(r => f(c.bind(r))) finally it.close()
-      }
+      files.foreach(file =>
+        parquet.foreachRow(file.path, file.length, file.mtime, required, filters)(r => f(c.bind(r))))
     }
   }
 

@@ -70,6 +70,9 @@ object PkIndex {
   def dirFor(cacheKey: String, col: String): String =
     s"${IndexStore.defaultRoot}/${slug(cacheKey)}-pk-$col-v${IndexStore.FormatVersion}"
 
+  private def read(spark: SparkSession, tableRoot: String) =
+    graft.catalog.TableStore.readRoot(spark, tableRoot).getOrElse(spark.read.parquet(tableRoot))
+
   /** True iff the persisted manifest's file set matches the table's CURRENT
     * listing — a rewrite (compaction, re-ingest, overwrite) invalidates the
     * zones. Driver-side listing only, no Spark job; the claim rule performs
@@ -77,7 +80,7 @@ object PkIndex {
     * that lets CREATE rebuild instead of fast-pathing onto stale zones. */
   def fresh(spark: SparkSession, dir: String, tableRoot: String): Boolean =
     load(spark, dir).exists { m =>
-      val live = spark.read.parquet(tableRoot).inputFiles.map(pathKey).toSet
+      val live = read(spark, tableRoot).inputFiles.map(pathKey).toSet
       m.fileKeys == live
     }
 
@@ -86,7 +89,7 @@ object PkIndex {
     * full rows. Result is #files rows to the driver (metadata-sized). */
   def build(spark: SparkSession, tableRoot: String, keyCol: String,
       dir: String): Int = {
-    val df = spark.read.parquet(tableRoot)
+    val df = read(spark, tableRoot)
     val kt = df.schema(keyCol).dataType match {
       case org.apache.spark.sql.types.LongType |
            org.apache.spark.sql.types.IntegerType |

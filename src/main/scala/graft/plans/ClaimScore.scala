@@ -198,12 +198,13 @@ private[plans] object ScorerShapes {
     * REFRESH is still left out. */
   def absorbs(conj: Expression, textAttr: AttributeReference, query: String,
       dict: String): Boolean =
-    !TsQueryCodec.isEncoded(query) && TsPredicates.asTsMatch(conj).exists {
-      case (a: AttributeReference, d, build) if a.exprId == textAttr.exprId && d == dict =>
-        val analyzer = AnalyzerRegistry.get(dict)
-        orTerms(TsQuery.bindDict(build(analyzer), analyzer))
-          .exists(termsOf(query, dict).toSet.subsetOf)
+    !TsQueryCodec.isEncoded(query) && TsPredicates.matchTarget(conj).exists {
+      case (a: AttributeReference, d) => a.exprId == textAttr.exprId && d == dict
       case _ => false
+    } && TsPredicates.asTsMatch(conj).exists { case (_, _, build) =>
+      val analyzer = AnalyzerRegistry.get(dict)
+      orTerms(TsQuery.bindDict(build(analyzer), analyzer))
+        .exists(termsOf(query, dict).toSet.subsetOf)
     }
 
   /** The terms of a query that matches exactly the docs holding at least

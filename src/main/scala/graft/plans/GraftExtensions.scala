@@ -40,7 +40,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(s => EnumOrder(s))
     e.injectResolutionRule(s => ResolveInformationSchema(s))
     e.injectResolutionRule(s => ResolveIndexRelation(s))
-    e.injectResolutionRule(s => PinSnapshotReads(s))
+    e.injectResolutionRule(s => ReadTableVersions(s))
     e.injectPlannerStrategy(s => StrictClaimCheck(s))
     e.injectPlannerStrategy(s => RbacCheck(s))
     e.injectPlannerStrategy(s => IndexLeafStrategy(s))
@@ -988,7 +988,8 @@ case class ClaimAnnTopK(spark: SparkSession) extends Rule[LogicalPlan] {
                         graft.index.FieldStore.sourceCoherent(spark, fe.dir, curFp) =>
                       graft.index.FieldStore.stored(spark, fe.dir)
                         .withColumnRenamed("doc_id", entry.idCol)
-                    case _ => spark.read.parquet(root)
+                    case _ => graft.catalog.TableStore.readRoot(spark, root)
+                      .getOrElse(spark.read.parquet(root))
                   }
                   probed.join(lookup, Seq(entry.idCol))
                     .orderBy(f("dist"), f(entry.idCol))
@@ -1179,6 +1180,22 @@ private[plans] object TsPredicates {
     case _ => None
   }
 
+  private val matchNames = Set("ts_match", "tsquery_match", "has_any_tokens", "has_all_tokens",
+    "phrase_matches", "phrase_slop_matches", "levenshtein_matches", "ngram_matches")
+
+  /** The text argument and dictionary of a call that [[asTsMatch]] may
+    * accept, read off the UDF's name and argument shape alone: nothing is
+    * evaluated, so a rule can test every Filter with it and fold constant
+    * queries only where it goes on to claim. */
+  def matchTarget(e: Expression): Option[(Expression, String)] = e match {
+    case u: ScalaUDF if matchNames.contains(u.udfName.getOrElse("")) =>
+      (u.children.head, u.children.last) match {
+        case (arg, Literal(d: UTF8String, _)) => Some((arg, d.toString))
+        case _ => None
+      }
+    case _ => None
+  }
+
   def asTsMatch(
       e: Expression): Option[(Expression, String, graft.analysis.Analyzer => graft.search.TsQuery)] = {
     import graft.search.TsQuery
@@ -1257,7 +1274,7 @@ private[plans] object TsPredicates {
 }
 
 case class ClaimTsMatch(spark: SparkSession) extends Rule[LogicalPlan] {
-  import TsPredicates.{asTsMatch, conjuncts}
+  import TsPredicates.{asTsMatch, conjuncts, matchTarget}
 
   /** Resolves the indexed scan that PRODUCED `textAttr` — matched by exprId,
     * not name, so a join partner exposing a same-named column can never have
@@ -1286,7 +1303,7 @@ case class ClaimTsMatch(spark: SparkSession) extends Rule[LogicalPlan] {
     // which drops them, rather than built here
     lazy val absorbed = ScorerShapes.absorbedMatches(plan)
     plan.transformUp {
-      case f @ Filter(cond, child) if cond.exists(asTsMatch(_).isDefined) =>
+      case f @ Filter(cond, child) if cond.exists(matchTarget(_).isDefined) =>
         try claim(f, cond, child, absorbed) catch {
         // a failed claim must never break the query — the row-eval UDF
         // is still in the plan and remains correct
@@ -1339,7 +1356,7 @@ case class ClaimTsMatch(spark: SparkSession) extends Rule[LogicalPlan] {
         ((String, String, graft.analysis.Analyzer => graft.search.TsQuery),
           AttributeReference, Expression)] =
       for {
-        (arg, dict, build) <- asTsMatch(e)
+        (arg, dict) <- matchTarget(e)
         (segDir, docId, partialPred) <- arg match {
           case attr: AttributeReference => indexedScanOf(child, attr, dict)
           case ex => exprIndexOf(child, ex, dict).map { case (d, id) => (d, id, None) }
@@ -1359,6 +1376,8 @@ case class ClaimTsMatch(spark: SparkSession) extends Rule[LogicalPlan] {
         if (!requireFull && partialPred.forall(ps =>
           parts.exists(c => bareSql(c).equalsIgnoreCase(ps)))) ||
           (requireFull && partialPred.isEmpty)
+        // a constructor query folds only for a call on an indexed column
+        (_, _, build) <- asTsMatch(e)
       } yield ((segDir, dict, build), docId, arg)
 
     // each conjunct classifies as: a single positive text claim; `NOT

@@ -2,16 +2,16 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-import org.apache.spark.sql.catalyst.expressions.{Alias, NamedExpression}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, View}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.StructType
 
 import graft.catalog.{ObjectCatalog, TableStore, Txn}
+import graft.index.Commit
 
-/** Cross-session resolution + snapshot isolation for the index-as-relation
-  * surface and catalog table data (reference semantics:
+/** Cross-session resolution + the table version every catalog table scan
+  * reads (reference semantics:
   * tests/sqllogic/sdb/pg/index/{vector_search,ts_offsets,inverted_index}
   * _isolation.test — a REPEATABLE READ reader keeps the catalog and data
   * state it first read, while other connections commit DDL/DML past it).
@@ -36,11 +36,10 @@ case class ResolveIndexRelation(spark: SparkSession) extends Rule[LogicalPlan] {
     val qname = ObjectCatalog.qualify(name)
     if (ObjectCatalog.table(qname).isDefined) return None // live: normal path
     Txn.pinnedGet(spark, s"tabledef:${qname.toLowerCase}").map { pinned =>
-      val (t, v) = pinned.asInstanceOf[(graft.catalog.ObjectCatalog.TableDef, java.lang.Long)]
+      val (t, v) = pinned.asInstanceOf[(ObjectCatalog.TableDef, Option[Commit.Version])]
       val schema = StructType.fromDDL(ObjectCatalog.sparkSchemaDdl(t.columns))
       org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias(name,
-        TableStore.readAt(spark, t.dir, schema, v.longValue())
-          .queryExecution.analyzed)
+        TableStore.readVersion(spark, t.dir, schema, v).queryExecution.analyzed)
     }
   }
 
@@ -72,44 +71,45 @@ case class ResolveIndexRelation(spark: SparkSession) extends Rule[LogicalPlan] {
   }
 }
 
-/** REPEATABLE READ data snapshots over catalog tables: the first scan of a
-  * table inside an RR/SERIALIZABLE block pins its TableStore version; every
-  * scan in the block then reads the file set AS OF that version
-  * ([[TableStore.filesAt]] — retired files stay under _RETIRED), so
-  * another session's committed INSERT/UPDATE/DELETE is invisible until
-  * COMMIT, exactly like pg's snapshot. READ COMMITTED sessions scan live.
-  * The replacement projects back onto the original attribute ids, so
-  * parent operators (and claim rules) are untouched. */
-case class PinSnapshotReads(spark: SparkSession) extends Rule[LogicalPlan] {
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!Txn.snapshotActive(spark)) plan
-    else plan.resolveOperatorsUp {
-      case lr: LogicalRelation if lr.relation.isInstanceOf[HadoopFsRelation] =>
-        val h = lr.relation.asInstanceOf[HadoopFsRelation]
-        h.location.rootPaths.headOption
-          .flatMap(p => ObjectCatalog.tableByCurrentPath(p.toString)) match {
-          case Some(t) =>
-            val v = Txn.pinned(spark, s"tablever:${t.dir}",
-              java.lang.Long.valueOf(TableStore.version(t.dir)))
-              .asInstanceOf[java.lang.Long].longValue()
+/** Every scan of a catalog table reads the files of one published version
+  * of it ([[TableStore]]): each file relation whose root is a catalog
+  * table's directory gets a [[TableStore.TableFiles]] index over that
+  * version's files, with the relation's output attributes and root kept,
+  * so claim rules (which match columns by exprId), the index catalog, RBAC
+  * paths and plan pins see the relation they would see without it. The
+  * version is, inside a REPEATABLE READ or SERIALIZABLE block, the one the
+  * block pinned at its first scan of the table — another session's
+  * committed INSERT/UPDATE/DELETE stays invisible until COMMIT, exactly
+  * like pg's snapshot — and otherwise the version current for the
+  * statement (read once per statement). A temporary view made from a
+  * Dataset keeps its analyzed plan, scans included; they read the
+  * statement's version too. */
+case class ReadTableVersions(spark: SparkSession) extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperatorsUp {
+    case lr @ LogicalRelation(h: HadoopFsRelation, _, _, _, _)
+        if !h.location.isInstanceOf[TableStore.TableFiles] => versioned(lr, h)
+    case v: View if v.isTempView && v.child.analyzed =>
+      v.copy(child = v.child.transformUp {
+        case lr @ LogicalRelation(h: HadoopFsRelation, _, _, _, _) => versioned(lr, h)
+      })
+  }
+
+  private def versioned(lr: LogicalRelation, h: HadoopFsRelation): LogicalPlan =
+    h.location.rootPaths match {
+      case Seq(root) => ObjectCatalog.tableAt(root).fold[LogicalPlan](lr) { t =>
+        val v =
+          if (!Txn.snapshotActive(spark)) TableStore.current(spark, t.dir)
+          else {
+            val pin = Txn.pinned(spark, s"tablever:${t.dir}", TableStore.current(spark, t.dir))
+              .asInstanceOf[Option[Commit.Version]]
             // remember the TableDef too: a concurrent DROP TABLE removes
             // the catalog object, and this block's later statements then
             // resolve the bare name from this pin (ResolveIndexRelation)
-            Txn.pinned(spark, s"tabledef:${t.qname.toLowerCase}", (t, java.lang.Long.valueOf(v)))
-            if (v == TableStore.version(t.dir)) lr // snapshot is the live set
-            else {
-              val schema = StructType.fromDDL(
-                ObjectCatalog.sparkSchemaDdl(t.columns))
-              val snap = TableStore.readAt(spark, t.dir, schema, v)
-                .queryExecution.analyzed
-              val byName = snap.output.map(a => a.name.toLowerCase -> a).toMap
-              val proj: Seq[NamedExpression] = lr.output.map { o =>
-                Alias(byName(o.name.toLowerCase), o.name)(
-                  exprId = o.exprId, qualifier = o.qualifier)
-              }
-              Project(proj, snap)
-            }
-          case None => lr
-        }
+            Txn.pinned(spark, s"tabledef:${t.qname.toLowerCase}", (t, pin))
+            pin
+          }
+        lr.copy(relation = h.copy(location = TableStore.files(root, v))(h.sparkSession))
+      }
+      case _ => lr
     }
 }

@@ -220,7 +220,8 @@ object IndexCatalog {
     * sphere, so the L2 ball-bound probe stays exact for cosine order. */
   def annSource(spark: SparkSession, tableRoot: String, entry: AnnEntry): DataFrame = {
     import org.apache.spark.sql.functions._
-    val base = graft.index.IndexStore.readParquet(spark, tableRoot)
+    val base = graft.catalog.TableStore.readRoot(spark, tableRoot)
+      .getOrElse(graft.index.IndexStore.readParquet(spark, tableRoot))
       .select(col(entry.idCol).as("vec_id"), col(entry.embCol).as("embedding"))
       // NULL embeddings are never indexed (the reference's cs child stores
       // a zero-filled slot but the IVF build skips the row,

@@ -10,7 +10,9 @@ import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{ParquetInputFormat, ParquetRecordReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.deploy.SparkHadoopUtil
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
@@ -37,10 +39,27 @@ final class IndexParquet private (conf: Broadcast[SerializableConfiguration],
   /** This task's copy of the session conf, made on its first read. */
   @transient private lazy val taskConf = new Configuration(conf.value.value)
 
-  /** The `required` columns of the parquet file at `path` (`length` bytes,
-    * modified at `mtime`), with `filters` pushed to the reader's row-group
-    * filter. Runs in a task; rows are the reader's reused buffer. */
-  def rows(path: String, length: Long, mtime: Long, required: StructType,
+  /** Feeds `f` the `required` columns of every row of the parquet file at
+    * `path` (`length` bytes, modified at `mtime`), with `filters` pushed to
+    * the reader's row-group filter. Runs in a task; rows are the reader's
+    * reused buffer. The bytes and records read count into the task's input
+    * metrics, as a Spark file scan's do. */
+  def foreachRow(path: String, length: Long, mtime: Long, required: StructType,
+      filters: Seq[Filter])(f: InternalRow => Unit): Unit = {
+    val bytesRead = SparkHadoopUtil.get.getFSBytesReadOnThreadCallback()
+    var records = 0L
+    val it = rows(path, length, mtime, required, filters)
+    try it.foreach { r => records += 1; f(r) } finally {
+      it.close()
+      Option(TaskContext.get()).foreach { t =>
+        val m = t.taskMetrics().inputMetrics
+        m.incBytesRead(bytesRead())
+        m.incRecordsRead(records)
+      }
+    }
+  }
+
+  private def rows(path: String, length: Long, mtime: Long, required: StructType,
       filters: Seq[Filter]): RecordReaderIterator[InternalRow] = {
     val s = settings
     val file = new Path(path)
