@@ -143,16 +143,26 @@ object TableStore {
       .map(t => spark.read.schema(StructType.fromDDL(ObjectCatalog.sparkSchemaDdl(t.columns)))
         .parquet(root))
 
-  /** Write `df` under a directory named for version `n` that no other
-    * write uses; its files in part order. */
-  private def stage(spark: SparkSession, dir: String, n: Long, df: DataFrame): Seq[DataFile] = {
-    val rel = f"_data/$n%08d-${UUID.randomUUID().toString.take(8)}"
+  /** Stage `df` (None: nothing) under a directory named for the version
+    * after `base` that no other write uses, then publish `kept` and its
+    * files, in part order. A write whose publish fails — a lost race, a
+    * crash — deletes what it staged unless the latest version names it. */
+  private def stageAndPublish(spark: SparkSession, dir: String, base: Option[Commit.Version],
+      kept: Seq[DataFile], df: Option[DataFrame]): Unit = {
+    val rel = f"_data/${Commit.nextNumber(base)}%08d-${UUID.randomUUID().toString.take(8)}"
     val staged = new Path(dir, rel)
-    df.write.option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .parquet(staged.toString)
-    fs(spark, dir).listStatus(staged).toSeq.filter(_.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName)
-      .map(s => DataFile(s"$rel/${s.getPath.getName}", s.getLen, s.getModificationTime))
+    try publish(spark, dir, base, kept ++ df.toSeq.flatMap { d =>
+      d.write.option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        .parquet(staged.toString)
+      fs(spark, dir).listStatus(staged).toSeq.filter(_.getPath.getName.endsWith(".parquet"))
+        .sortBy(_.getPath.getName)
+        .map(s => DataFile(s"$rel/${s.getPath.getName}", s.getLen, s.getModificationTime))
+    }) catch {
+      case scala.util.control.NonFatal(e) =>
+        if (!version(spark, dir).exists(_.files.exists(_.startsWith(rel + "/"))))
+          fs(spark, dir).delete(staged, true)
+        throw e
+    }
   }
 
   private val writers = TrieMap.empty[String, Object]
@@ -184,14 +194,12 @@ object TableStore {
   def append(spark: SparkSession, dir: String, df: DataFrame, rows: Long): Unit =
     if (rows > 0) {
       val base = version(spark, dir)
-      publish(spark, dir, base,
-        dataFiles(base) ++ stage(spark, dir, Commit.nextNumber(base), df))
+      stageAndPublish(spark, dir, base, dataFiles(base), Some(df))
     }
 
   /** Replace every file (CTAS backfill, ALTER TABLE rewrites, TRUNCATE). */
   def overwrite(spark: SparkSession, dir: String, df: DataFrame): Unit = {
-    val base = version(spark, dir)
-    publish(spark, dir, base, stage(spark, dir, Commit.nextNumber(base), df))
+    stageAndPublish(spark, dir, version(spark, dir), Nil, Some(df))
   }
 
   /** Rewrite only the files whose rows match `pred`, replacing them with
@@ -209,9 +217,8 @@ object TableStore {
     val byPath = all.map(f => new Path(root, f.name).toUri.getPath -> f).toMap
     val touched = hits.map(h => byPath(new java.net.URI(h.getString(0)).getPath)).toSet
     val replacement = remap(scan(spark, schema, index(root, all.filter(touched))))
-    val staged =
-      if (replacement.isEmpty) Nil else stage(spark, dir, Commit.nextNumber(base), replacement)
-    publish(spark, dir, base, all.filterNot(touched) ++ staged)
+    stageAndPublish(spark, dir, base, all.filterNot(touched),
+      Some(replacement).filterNot(_.isEmpty))
     hits.map(_.getLong(1)).sum
   }
 

@@ -12,8 +12,9 @@ import org.apache.spark.sql.catalyst.QueryPlanningTracker
 
 /** The commit protocol of every versioned directory: the text index
   * ([[IndexStore]]), the IVF index with its quantized codes ([[IvfIndex]],
-  * [[QuantizedIvf]]), the point-lookup zones ([[PkIndex]]) and the data of
-  * catalog tables ([[graft.catalog.TableStore]]).
+  * [[QuantizedIvf]]), either one's composite sidecar ([[FieldStore]]), the
+  * HNSW graph ([[HnswIndex]]), the point-lookup zones ([[PkIndex]]) and the
+  * data of catalog tables ([[graft.catalog.TableStore]]).
   *
   * {{{
   *   <dir>/_CURRENT             the published version: its manifest's name
@@ -101,16 +102,23 @@ object Commit {
   /** The last version seen per directory. */
   private val versions = TrieMap.empty[String, Version]
 
-  /** Per statement being planned: directory → the `_CURRENT` it read. */
+  /** Per statement being planned: key → what it resolved to (a
+    * directory → the `_CURRENT` it read). */
   private val pins = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[QueryPlanningTracker, TrieMap[String, Option[String]]]())
+    new java.util.WeakHashMap[QueryPlanningTracker, TrieMap[String, AnyRef]]())
 
-  private def statementPins: Option[TrieMap[String, Option[String]]] =
+  private def statementPins: Option[TrieMap[String, AnyRef]] =
     QueryPlanningTracker.get.map(t => pins.synchronized {
       var m = pins.get(t)
       if (m == null) { m = TrieMap.empty; pins.put(t, m) }
       m
     })
+
+  /** `resolve` once per statement being planned under `key` (outside
+    * planning, on every call): what a statement reads stays put across the
+    * planner's passes. */
+  def perStatement[T <: AnyRef](key: String)(resolve: => T): T =
+    statementPins.fold(resolve)(_.getOrElseUpdate(key, resolve).asInstanceOf[T])
 
   private def pointer(spark: SparkSession, dir: String): Option[String] =
     try Some(IndexStore.readString(spark, s"$dir/_CURRENT").trim)
@@ -128,10 +136,7 @@ object Commit {
 
   /** The version a reader sees: pinned for the statement being planned. */
   def current(spark: SparkSession, dir: String): Option[Version] =
-    resolve(spark, dir, statementPins match {
-      case Some(m) => m.getOrElseUpdate(dir, pointer(spark, dir))
-      case None => pointer(spark, dir)
-    })
+    resolve(spark, dir, perStatement(dir)(pointer(spark, dir)))
 
   /** The version a writer builds on: always read from disk. */
   def latest(spark: SparkSession, dir: String): Option[Version] =

@@ -1,6 +1,11 @@
 package graft.index
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.JsonNode
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.functions._
 
 /** Typed-field postings + INCLUDE columnstore for a composite search index.
@@ -19,13 +24,22 @@ import org.apache.spark.sql.functions._
   *     so a query projecting only covered columns never touches the base
   *     table at all — `Lookup: columnstore` vs `Lookup: table`.
   *
-  * Layout under the composite dir (all parquet, all written by executors):
+  * Like the reference's `store_values` columns, the sidecar lives inside
+  * the index it rides on: its files are roots of a version of the text
+  * index ([[IndexStore]]) or the IVF index ([[IvfIndex]]), published by
+  * that index's [[Commit]], and its spec and column statistics are the
+  * manifest field `sidecar`:
   *
   * {{{
-  *   <dir>/_FIELDS                    (manifest json: idCol, fields, included)
-  *   <dir>/field=<name>/              (v, doc_id) range-partitioned + sorted by v
-  *   <dir>/stored/                    (doc_id, <included cols...>) sorted by doc_id
+  *   <dir>/fields-<n>/<field>/   (v, doc_id) range-partitioned + sorted by v
+  *   <dir>/stored-<n>/           (doc_id, <included cols...>) sorted by doc_id
+  *   sidecar = {idCol, fields, included, ndv, at: <n>, stats}
   * }}}
+  *
+  * A version names its sidecar when its files hold the roots numbered
+  * `at`; every write says what becomes of it ([[Policy]]). The claim rules
+  * read the sidecar only from a version that names it, and answer without
+  * the base table only when that version is byte-fresh with the scan.
   *
   * The field datasets are the idiomatic-Spark stand-in for per-term typed
   * posting lists: `(v, doc_id)` written `repartitionByRange(v).sortWithinPartitions(v)`
@@ -38,120 +52,163 @@ import org.apache.spark.sql.functions._
   *
   * The stored dataset is the covering columnstore: two to a few narrow
   * columns, sorted by `doc_id` so the matched-ids join prunes row groups.
-  * Rebuild (REFRESH) is one linear scan of the source — these are sorted
-  * COPIES, not merged structures, so there is no incremental-merge
-  * machinery to maintain; the text postings beside them keep their own
-  * segmented incremental path.
+  * A restage is one linear scan of the source — these are sorted COPIES,
+  * not merged structures, so there is no incremental-merge machinery to
+  * maintain; the text postings beside them keep their own segmented
+  * incremental path.
   */
 object FieldStore {
-  /** Manifest: which columns are indexed fields / included, the id, and
-    * coherence fingerprints (`extras`): `segfp` pins the text index's
-    * segment list at sidecar-build time, `srcfp` the source files — the
-    * claim rules compare these before serving covered reads, because the
-    * sidecar rebuilds only on REFRESH while text segments / IVF vectors
-    * advance incrementally. A mismatched sidecar must fall back to the
-    * base-table join (correct, just not covered), never silently drop the
-    * newer docs. */
-  final case class Manifest(idCol: String, fields: Seq[String],
-      included: Seq[String], extras: Map[String, String] = Map.empty)
+  /** Which columns are indexed fields / included, the id column, and the
+    * included columns whose NDV is tracked (the `hyperloglog` option). */
+  final case class Spec(idCol: String, fields: Seq[String], included: Seq[String],
+      ndv: Seq[String] = Nil)
 
-  private def manifestPath(dir: String) = s"$dir/_FIELDS"
+  /** What a write does with the sidecar of the version it builds on. */
+  sealed trait Policy
+  /** Name it again: the write leaves the doc set alone. */
+  case object Carry extends Policy
+  /** Publish without it when the write changes the doc set and has no
+    * source to restage from (a streaming append): covered reads use the
+    * base table until a restage. */
+  case object Drop extends Policy
+  /** Restage it over `source` (CREATE, REFRESH, a vector COMPACT): with
+    * `spec`, or with the base version's spec unless the write changes
+    * nothing and the base version is synced with the same source
+    * fingerprint. No spec: [[Carry]]. */
+  final case class Restage(source: DataFrame, spec: Option[Spec] = None) extends Policy
 
-  def exists(spark: SparkSession, dir: String): Boolean =
-    IndexStore.exists(spark, manifestPath(dir))
+  /** The sidecar a version names: its spec and statistics, and its
+    * datasets opened without a Spark job. */
+  final class Sidecar private[FieldStore] (spark: SparkSession, version: Commit.Version,
+      val spec: Spec, at: Long, stats: JsonNode) {
+    val roots: Seq[String] = rootsOf(spec, at)
+    private def root(prefix: String) = roots.find(_.startsWith(prefix)).map(version.path)
 
-  def readManifest(spark: SparkSession, dir: String): Manifest = {
-    val lines = IndexStore.readString(spark, manifestPath(dir)).split("\n")
-    def row(k: String): Seq[String] = lines.collectFirst {
-      case l if l.startsWith(s"$k=") => l.stripPrefix(s"$k=").split(",").filter(_.nonEmpty).toSeq
-    }.getOrElse(Seq.empty)
-    val extras = lines.collect {
-      case l if l.contains("=") &&
-          !Seq("id", "fields", "included").contains(l.takeWhile(_ != '=')) =>
-        l.takeWhile(_ != '=') -> l.dropWhile(_ != '=').drop(1)
-    }.toMap
-    Manifest(row("id").headOption.getOrElse("doc_id"), row("fields"),
-      row("included"), extras)
+    /** The stored columnstore's path. */
+    val storedPath: Option[String] = root("stored-")
+
+    /** `(rowCount, <stat>.<column> → value)` of the INCLUDE columnstore. */
+    def colStats: Option[(Long, Map[String, String])] = Option(stats).map { n =>
+      val m = n.fields().asScala.map(e => e.getKey -> e.getValue.asText).toMap
+      (m("rowcount").toLong, m - "rowcount")
+    }
+
+    private val relations = TrieMap.empty[String, HadoopFsRelation]
+    private def open(s: SparkSession, path: String): DataFrame =
+      IndexStore.rebind(s, relations.getOrElseUpdate(path, IndexFile.relation(spark, Seq(path))))
+
+    /** The covering columnstore `(doc_id, included...)`. */
+    def stored(s: SparkSession): DataFrame = open(s, storedPath.get)
+
+    /** The `(v, doc_id)` dataset of the indexed field `name`. */
+    def field(s: SparkSession, name: String): DataFrame = open(s, s"${root("fields-").get}/$name")
   }
 
-  /** Whether a TEXT-index sidecar still matches its index's segment list
-    * (streaming ingest appends segments; REFRESH re-syncs the sidecar). A
-    * pre-fingerprint manifest reads as coherent; a MISSING manifest (e.g.
-    * the sidecar is mid-rebuild — its own build queries plan through the
-    * claim rules) reads as incoherent, quietly falling back to base. */
-  def textCoherent(spark: SparkSession, dir: String): Boolean =
-    exists(spark, dir) &&
-      readManifest(spark, dir).extras.get("segfp").forall { fp =>
-        fp == IndexStore.listSegments(spark, dir.stripSuffix("-fields")).mkString(",")
+  /** The roots of `spec`'s sidecar numbered `at`. */
+  private def rootsOf(spec: Spec, at: Long): Seq[String] =
+    Seq(f"fields-$at%08d").filter(_ => spec.fields.nonEmpty) ++
+      Seq(f"stored-$at%08d").filter(_ => spec.included.nonEmpty)
+
+  /** Whether `name`, relative to its index directory, is a sidecar root. */
+  def isRoot(name: String): Boolean = name.startsWith("fields-") || name.startsWith("stored-")
+
+  /** The sidecar spec version `v` records, named or not. */
+  def spec(v: Commit.Version): Option[Spec] = v.field("sidecar").map { n =>
+    def strings(key: String) = n.get(key).elements().asScala.map(_.asText).toSeq
+    Spec(n.get("idCol").asText, strings("fields"), strings("included"), strings("ndv"))
+  }
+
+  /** The sidecar version `v` names, if any. */
+  def of(spark: SparkSession, v: Commit.Version): Option[Sidecar] =
+    v.memo("sidecar")(for {
+      sp <- spec(v)
+      n = v.field("sidecar").get
+      side = new Sidecar(spark, v, sp, n.get("at").asLong, n.get("stats"))
+      if side.roots.forall(v.files.contains)
+    } yield side)
+
+  /** The sidecar of the version of `dir` the caller's statement reads. */
+  def current(spark: SparkSession, dir: String): Option[Sidecar] =
+    Commit.current(spark, dir).flatMap(of(spark, _))
+
+  /** The sidecar of the latest version of `dir` (DDL). */
+  def latest(spark: SparkSession, dir: String): Option[Sidecar] =
+    Commit.latest(spark, dir).flatMap(of(spark, _))
+
+  private def manifestField(spec: Spec, at: Long, stats: Option[java.util.Map[String, String]]) =
+    "sidecar" -> (Map[String, AnyRef]("idCol" -> spec.idCol, "fields" -> spec.fields.asJava,
+      "included" -> spec.included.asJava, "ndv" -> spec.ndv.asJava, "at" -> Long.box(at)) ++
+      stats.map("stats" -> _)).asJava
+
+  /** The sidecar's part of the version after `base`, numbered `n`: the
+    * roots it names, the manifest fields it sets and whether it wrote new
+    * roots. */
+  private[index] final case class Staged(roots: Seq[String], fields: Seq[(String, Any)],
+      wrote: Boolean)
+
+  /** Stages the sidecar under `policy` for a write that changes the doc set
+    * (`changed`) or not, publishing the source fingerprint `sourceFp`. */
+  private[index] def stage(spark: SparkSession, dir: String, base: Option[Commit.Version],
+      n: Long, policy: Policy, changed: Boolean, sourceFp: Option[String]): Staged = {
+    val named = base.flatMap(of(spark, _))
+    val carry = Staged(named.fold(Seq.empty[String])(_.roots), Nil, wrote = false)
+    policy match {
+      case Drop if changed => Staged(Nil, Nil, wrote = false)
+      case Restage(source, given) => given.orElse(base.flatMap(spec)) match {
+        case Some(_) if given.isEmpty && !changed && named.nonEmpty && sourceFp.nonEmpty &&
+            sourceFp == base.flatMap(_.field("sourceFp")).map(_.asText) => carry
+        case Some(sp) =>
+          Staged(rootsOf(sp, n), Seq(manifestField(sp, n, write(spark, source, dir, n, sp))),
+            wrote = true)
+        case None => carry
       }
+      case _ => carry
+    }
+  }
 
-  /** Whether a sidecar's recorded source fingerprint matches `current`
-    * (count:bytes:maxMtime of the source files). */
-  def sourceCoherent(spark: SparkSession, dir: String, current: Option[String]): Boolean =
-    exists(spark, dir) &&
-      ((readManifest(spark, dir).extras.get("srcfp"), current) match {
-        case (Some(a), Some(b)) => a == b
-        case _ => true // no fingerprint on either side: legacy manifest
-      })
-
-  /** Build (or rebuild) the field datasets + stored columnstore from the
-    * source relation. One pass per field dataset plus one for the stored
-    * copy — each a plain column-pruned scan of the source, so the total
-    * cost is linear in the covered columns, not in the table width. The
-    * manifest is written LAST (atomic rename): a crash mid-build leaves no
-    * manifest, and the next CREATE rebuilds from scratch. */
-  def build(spark: SparkSession, source: DataFrame, dir: String,
-      idCol: String, fields: Seq[String], included: Seq[String],
-      extras: Map[String, String] = Map.empty,
-      ndvCols: Seq[String] = Nil): Unit = {
-    val fs = IndexStore.fsFor(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    if (fs.exists(p)) fs.delete(p, true)
-    fields.foreach { f =>
-      source.select(col(f).as("v"), col(idCol).cast("long").as("doc_id"))
+  /** Writes the field datasets and the stored columnstore of `spec` over
+    * `source` as the roots numbered `n`: one column-pruned pass of the
+    * source per field plus one for the stored copy, so the cost is linear
+    * in the covered columns, not in the table width. Returns the stored
+    * columnstore's statistics. */
+  private def write(spark: SparkSession, source: DataFrame, dir: String, n: Long,
+      spec: Spec): Option[java.util.Map[String, String]] = {
+    spec.fields.foreach { f =>
+      source.select(col(f).as("v"), col(spec.idCol).cast("long").as("doc_id"))
         .filter(col("v").isNotNull)
         .repartitionByRange(col("v"))
         .sortWithinPartitions("v")
-        .write.mode("overwrite").parquet(s"$dir/field=$f")
+        .write.mode("overwrite").parquet(f"$dir/fields-$n%08d/$f")
     }
-    if (included.nonEmpty) {
-      source.select((col(idCol).cast("long").as("doc_id") +:
-          included.map(c => col(c))): _*)
+    Some(f"$dir/stored-$n%08d").filter(_ => spec.included.nonEmpty).map { path =>
+      source.select((col(spec.idCol).cast("long").as("doc_id") +:
+          spec.included.map(c => col(c))): _*)
         .repartitionByRange(col("doc_id"))
         .sortWithinPartitions("doc_id")
-        .write.mode("overwrite").parquet(s"$dir/stored")
-      writeColStats(spark, dir, included, ndvCols)
+        .write.mode("overwrite").parquet(path)
+      columnStats(IndexStore.readParquet(spark, path), spec)
     }
-    val extraLines = (extras ++ (if (ndvCols.nonEmpty)
-        Map("ndv" -> ndvCols.mkString(",")) else Map.empty))
-      .toSeq.sortBy(_._1)
-      .map { case (k, v) => s"$k=$v" }.mkString("", "\n", "\n")
-    IndexStore.writeStringAtomic(spark, manifestPath(dir),
-      s"id=$idCol\nfields=${fields.mkString(",")}\nincluded=${included.mkString(",")}\n" +
-        (if (extras.isEmpty && ndvCols.isEmpty) "" else extraLines))
   }
-
-  /** Per-INCLUDE-column statistics from ONE aggregation pass over the just-
-    * written stored columnstore — the Spark analogue of the reference's
-    * per-column `hyperloglog` option (inverted_index_hyperloglog_option
-    * .test: NDV tracked per segment, unioned at scan time, exposed to the
-    * optimizer as approx_unique). Our sidecar rebuilds wholly at
-    * CREATE/REFRESH, so one pass over the final dataset is the equivalent
-    * of the reference's segment union. min/max/null-count are recorded for
-    * every atomic column regardless (the reference does the same);
-    * approx_unique only for the opted-in `ndvCols`. */
-  private def writeColStats(spark: SparkSession, dir: String,
-      included: Seq[String], ndvCols: Seq[String]): Unit = {
+  /** Per-INCLUDE-column statistics from ONE aggregation pass over the stored
+    * columnstore — the Spark analogue of the reference's per-column
+    * `hyperloglog` option (inverted_index_hyperloglog_option.test: NDV
+    * tracked per segment, unioned at scan time, exposed to the optimizer as
+    * approx_unique). The sidecar is restaged whole, so one pass over the
+    * final dataset is the equivalent of the reference's segment union.
+    * min/max/null-count are recorded for every atomic column regardless
+    * (the reference does the same); approx_unique only for the opted-in
+    * `ndv` columns. Keys are `rowcount` and `<stat>.<column>`; a NULL
+    * statistic is the empty string. */
+  private def columnStats(st: DataFrame, spec: Spec): java.util.Map[String, String] = {
     import org.apache.spark.sql.types.{BooleanType, DataType, DateType, NumericType, StringType, TimestampType}
     def atomic(dt: DataType): Boolean = dt match {
       case _: NumericType | StringType | BooleanType | DateType | TimestampType => true
       case _ => false
     }
-    val st = spark.read.parquet(s"$dir/stored")
     val aggs = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Column](
       count(lit(1)).cast("long").as("rc"))
     val legs = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    included.foreach { c =>
+    spec.included.foreach { c =>
       val dt = st.schema(c).dataType
       aggs += sum(when(col(c).isNull, 1L).otherwise(0L)).cast("long").as(s"nulls__$c")
       legs += (("nulls", c))
@@ -160,87 +217,60 @@ object FieldStore {
         aggs += max(col(c)).cast("string").as(s"max__$c")
         legs += (("min", c)); legs += (("max", c))
       }
-      if (ndvCols.contains(c) && atomic(dt)) {
+      if (spec.ndv.contains(c) && atomic(dt)) {
         aggs += approx_count_distinct(col(c)).cast("long").as(s"ndv__$c")
         legs += (("ndv", c))
       }
     }
     val r = st.agg(aggs.head, aggs.drop(1).toSeq: _*).head()
-    val lines = ("rowcount=" + r.getLong(0)) +: legs.zipWithIndex.map {
-      case ((kind, c), i) =>
-        s"$kind.$c=${if (r.isNullAt(i + 1)) "" else r.get(i + 1).toString}"
-    }.toSeq
-    IndexStore.writeStringAtomic(spark, s"$dir/_COLSTATS",
-      lines.mkString("", "\n", "\n"))
+    (("rowcount" -> r.getLong(0).toString) +: legs.zipWithIndex.map {
+      case ((kind, c), i) => s"$kind.$c" -> (if (r.isNullAt(i + 1)) "" else r.get(i + 1).toString)
+    }.toSeq).toMap.asJava
   }
 
-  /** Re-derive `_COLSTATS` from the current stored dataset (the VACUUM
-    * (RECOMPUTE_STATS_TABLE) leg — the reference runs ANALYZE on the
-    * backing store tables). Returns false when there is no sidecar or no
+  /** Re-derive the column statistics of the latest version's columnstore
+    * and publish them (the VACUUM (RECOMPUTE_STATS_TABLE) leg — the
+    * reference runs ANALYZE on the backing store tables); the roots carry
+    * forward. Returns false when the version names no sidecar or no
     * INCLUDE columnstore to profile. */
   def recomputeStats(spark: SparkSession, dir: String): Boolean =
-    if (!exists(spark, dir)) false
-    else {
-      val m = readManifest(spark, dir)
-      if (m.included.isEmpty) false
-      else {
-        writeColStats(spark, dir, m.included,
-          m.extras.get("ndv").toSeq.flatMap(_.split(",")).filter(_.nonEmpty))
-        true
-      }
-    }
+    (for {
+      base <- Commit.latest(spark, dir)
+      side <- of(spark, base)
+      path <- side.storedPath
+    } yield Commit.publish(spark, dir, Some(base), base.files, manifestField(side.spec,
+      base.field("sidecar").get.get("at").asLong,
+      Some(columnStats(IndexStore.readParquet(spark, path), side.spec))))).nonEmpty
 
-  /** Parsed `_COLSTATS`: (rowCount, stat-kind → column → value). */
-  def colStats(spark: SparkSession, dir: String): Option[(Long, Map[String, String])] =
-    if (!IndexStore.exists(spark, s"$dir/_COLSTATS")) None
-    else {
-      val lines = IndexStore.readString(spark, s"$dir/_COLSTATS")
-        .split("\n").filter(_.contains("="))
-      val m = lines.map(l =>
-        l.takeWhile(_ != '=') -> l.dropWhile(_ != '=').drop(1)).toMap
-      m.get("rowcount").map(rc => (rc.toLong, m - "rowcount"))
-    }
-
-  /** Register the stored columnstore as a catalog table carrying its
-    * statistics, so Spark's cost-based optimizer sees rowCount + per-column
-    * NDV/null-count/min-max for join-order and broadcast decisions — the
-    * "exposed to the optimizer" leg of the reference's hyperloglog option
-    * and of search_table_stats_propagation.test. */
+  /** Register the current version's stored columnstore as a catalog table
+    * carrying its statistics, so Spark's cost-based optimizer sees
+    * rowCount + per-column NDV/null-count/min-max for join-order and
+    * broadcast decisions — the "exposed to the optimizer" leg of the
+    * reference's hyperloglog option and of
+    * search_table_stats_propagation.test. */
   def registerStatsTable(spark: SparkSession, dir: String, name: String): Unit =
-    colStats(spark, dir).foreach { case (rc, stats) =>
+    for {
+      side <- latest(spark, dir)
+      path <- side.storedPath
+      (rc, stats) <- side.colStats
+    } {
       import org.apache.spark.sql.catalyst.TableIdentifier
       import org.apache.spark.sql.catalyst.catalog.{CatalogColumnStat, CatalogStatistics}
       spark.sql(s"DROP TABLE IF EXISTS $name")
-      spark.sql(s"CREATE TABLE $name USING parquet OPTIONS (path '$dir/stored')")
-      val byCol = stats.toSeq.groupBy(_._1.split("\\.", 2)(1))
-      val colStatsMap = byCol.flatMap { case (c, kvs) =>
+      spark.sql(s"CREATE TABLE $name USING parquet OPTIONS (path '$path')")
+      val colStatsMap = stats.toSeq.groupBy(_._1.split("\\.", 2)(1)).map { case (c, kvs) =>
         val kinds = kvs.map { case (k, v) => k.split("\\.", 2)(0) -> v }.toMap
         def nonEmpty(k: String) = kinds.get(k).filter(_.nonEmpty)
-        val cs = CatalogColumnStat(
+        c -> CatalogColumnStat(
           distinctCount = nonEmpty("ndv").map(BigInt(_)),
           min = nonEmpty("min"),
           max = nonEmpty("max"),
           nullCount = nonEmpty("nulls").map(BigInt(_)))
-        Some(c -> cs)
       }
       val bytes = IndexStore.fsFor(spark, dir)
-        .getContentSummary(new org.apache.hadoop.fs.Path(s"$dir/stored")).getLength
+        .getContentSummary(new org.apache.hadoop.fs.Path(path)).getLength
       spark.sessionState.catalog.alterTableStats(TableIdentifier(name),
         Some(CatalogStatistics(sizeInBytes = BigInt(bytes),
           rowCount = Some(BigInt(rc)), colStats = colStatsMap)))
     }
-
-  /** The `(v, doc_id)` dataset of one indexed field. */
-  def field(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/field=$name")
-
-  /** The covering columnstore `(doc_id, included...)`. */
-  def stored(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/stored")
-
-  def drop(spark: SparkSession, dir: String): Unit = {
-    val fs = IndexStore.fsFor(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    if (fs.exists(p)) fs.delete(p, true)
-  }
 }

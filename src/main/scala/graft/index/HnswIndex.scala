@@ -1,10 +1,7 @@
 package graft.index
 
-import java.nio.charset.StandardCharsets
-import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,7 +25,9 @@ case class HnswNode(part: Int, vec_id: Long, embedding: Array[Float],
   *    graph in one `mapGroups` task (graph construction is inherently
   *    pointer-chasing, the genuine per-partition-imperative case); the
   *    graph is persisted as plain parquet rows of per-layer neighbor
-  *    lists. Partition sizing targets graphs that fit executor memory
+  *    lists, in `graph-<n>` roots of versions published by [[Commit]]
+  *    (see [[HnswIndex.append]]). Partition sizing targets graphs that fit
+  *    executor memory
   *    (`autoPartitions` ≈ N/250k), so build parallelism and memory are both
   *    bounded at 100 TB.
   *  - SEARCH: each partition's graph walks its own beam (ef candidates,
@@ -217,11 +216,6 @@ final case class HnswIndex(graph: Dataset[HnswNode], m: Int, efConstruction: Int
 }
 
 object HnswIndex {
-  private val jvmCache = TrieMap.empty[String, HnswIndex]
-
-  /** Drop the cached load (callers deleting the directory out of band). */
-  def invalidate(dir: String): Unit = jvmCache.remove(dir)
-
   /** Deterministic layer level: geometric with mL = 1/ln(M), the uniform
     * drawn from splitmix64(vec_id) — no executor RNG state, rebuildable
     * bit-for-bit. */
@@ -259,102 +253,84 @@ object HnswIndex {
     HnswIndex(nodes, m, efConstruction)
   }
 
+  /** The graph a published version ([[Commit]]) names: its `graph-<n>`
+    * roots (a rebuild writes one, an append adds a delta), loaded once per
+    * session. The version's fields hold its partition and vector counts. */
+  private def graphOf(spark: SparkSession, v: Commit.Version, m: Int, efc: Int): HnswIndex =
+    v.memo("hnsw")(new Commit.PerSession[HnswIndex]({ s =>
+      import s.implicits._
+      HnswIndex(IndexStore.readParquet(s, v.files.map(v.path): _*).as[HnswNode], m, efc)
+    }))(spark)
+
+  /** Writes `graph` as the root numbered `n` and publishes the version after
+    * `base` naming it beside `kept`. */
+  private def publish(spark: SparkSession, dir: String, base: Option[Commit.Version],
+      kept: Seq[String], graph: HnswIndex, parts: Int, vectors: Long): Unit = {
+    val root = f"graph-${Commit.nextNumber(base)}%08d"
+    graph.graph.write.mode("overwrite").parquet(s"$dir/$root")
+    Commit.publish(spark, dir, base, kept :+ root, "parts" -> parts, "vectors" -> vectors)
+  }
+
   /** Incremental append for a persisted graph — the reference's
     * per-segment shape (new segments get their own graphs; query-time
     * merge spans them, inverted_index_storage.h:267-270): the delta builds
     * its OWN partition-local graphs, numbered after the existing
-    * partitions, and appends to the parquet store. Search already merges
-    * per-partition local top-k lists, so recall properties are per-graph
-    * and unaffected by the append; exhaustive mode (`ef <= 0`) stays
-    * exact. When accumulated appends leave more than 2× the partition
-    * count autoPartitions would pick for the total, the graph rebuilds
-    * once at the new scale (staged + rename) — amortized, like IVF's
-    * drift re-cluster. Returns (#appended, rebuilt?). */
+    * partitions, as a new root published beside the existing ones. Search
+    * already merges per-partition local top-k lists, so recall properties
+    * are per-graph and unaffected by the append; exhaustive mode
+    * (`ef <= 0`) stays exact. When accumulated appends would leave more
+    * than 2× the partition count autoPartitions would pick for the total,
+    * the graph rebuilds once at the new scale into one root published
+    * alone — amortized, like IVF's drift re-cluster. A crash before either
+    * publish leaves the previous version serving. Returns (#appended,
+    * rebuilt?). */
   def append(spark: SparkSession, cacheKey: String, newVecs: DataFrame,
       m: Int = 16, efConstruction: Int = 64, partitions: Int = 0): (Long, Boolean) = {
-    import spark.implicits._
     val dir = dirFor(cacheKey, m, efConstruction, partitions)
-    val f = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recover(spark, dir)
-    require(f.exists(new Path(s"$dir/_OK")), s"no HNSW graph at $dir to append to")
-    val existing = spark.read.parquet(s"$dir/graph")
-    val stats = existing.agg(max("part"), count(lit(1))).head()
-    val (maxPart, n0) = (stats.getInt(0), stats.getLong(1))
+    val base = Commit.latest(spark, dir).getOrElse(
+      throw new IllegalArgumentException(s"no HNSW graph at $dir to append to"))
+    val (parts, n) = (base.field("parts").get.asInt, base.field("vectors").get.asLong)
     val nd = newVecs.count()
     if (nd == 0) return (0L, false)
     val deltaParts = autoPartitions(nd)
-    val offset = maxPart + 1
-    val delta = build(newVecs, partitions = deltaParts,
-        m = m, efConstruction = efConstruction)
-      .graph.map(node => node.copy(part = node.part + offset))
-    delta.write.mode("append").parquet(s"$dir/graph")
-    jvmCache.remove(dir)
-    val totalParts = offset + deltaParts
-    if (totalParts > 2 * autoPartitions(n0 + nd)) {
-      // too many small segment graphs: each adds a beam at query time —
-      // rebuild once at the new scale, staged durably then committed via
-      // the _SWAP_PENDING roll-forward marker (same protocol as the IVF
-      // recluster: a crash leaves the old graph intact before the marker,
-      // and recover() finishes the idempotent swap after it — no
-      // delete-then-rename window)
-      val all = spark.read.parquet(s"$dir/graph")
-        .select(col("vec_id"), col("embedding")).distinct()
-      build(all, m = m, efConstruction = efConstruction, partitions = partitions)
-        .graph.write.mode("overwrite").parquet(s"$dir/graph_next")
-      IndexStore.writeStringAtomic(spark, s"$dir/_SWAP_PENDING", "1") // commit point
-      completeSwap(f, dir)
-      jvmCache.remove(dir)
+    if (parts + deltaParts > 2 * autoPartitions(n + nd)) {
+      // too many small segment graphs: each adds a beam at query time
+      val all = graphOf(spark, base, m, efConstruction).graph.select(col("vec_id"), col("embedding"))
+        .unionByName(newVecs.select(col("vec_id").cast("long"), col("embedding"))).distinct()
+      val p = if (partitions > 0) partitions else autoPartitions(n + nd)
+      publish(spark, dir, Some(base), Nil,
+        build(all, m = m, efConstruction = efConstruction, partitions = p), p, n + nd)
       (nd, true)
-    } else (nd, false)
-  }
-
-  /** Idempotent: safe to re-run from any crash point after the marker. */
-  private def completeSwap(f: org.apache.hadoop.fs.FileSystem, dir: String): Unit = {
-    if (f.exists(new Path(s"$dir/graph_next"))) {
-      if (f.exists(new Path(s"$dir/graph")))
-        require(f.rename(new Path(s"$dir/graph"), new Path(s"$dir/graph_stale")),
-          s"graph swap: could not move old graph aside at $dir")
-      require(f.rename(new Path(s"$dir/graph_next"), new Path(s"$dir/graph")),
-        s"graph swap: could not move new graph in at $dir")
+    } else {
+      val ss = spark
+      import ss.implicits._
+      val delta = build(newVecs, partitions = deltaParts, m = m, efConstruction = efConstruction)
+      publish(spark, dir, Some(base), base.files,
+        HnswIndex(delta.graph.map(node => node.copy(part = node.part + parts)), m, efConstruction),
+        parts + deltaParts, n + nd)
+      (nd, false)
     }
-    f.delete(new Path(s"$dir/graph_stale"), true)
-    f.delete(new Path(s"$dir/_SWAP_PENDING"), false)
-  }
-
-  /** Marker present → finish the staged rebuild; absent → delete any
-    * pre-commit staging leftovers (the old graph is intact). */
-  private def recover(spark: SparkSession, dir: String): Unit = {
-    val f = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(new Path(dir))) return
-    if (f.exists(new Path(s"$dir/_SWAP_PENDING"))) {
-      completeSwap(f, dir)
-      jvmCache.remove(dir)
-    } else f.delete(new Path(s"$dir/graph_next"), true)
   }
 
   def dirFor(cacheKey: String, m: Int = 16, efConstruction: Int = 64,
       partitions: Int = 0): String = {
-    val key = cacheKey.replaceAll("[^A-Za-z0-9._-]+", "_")
-    s"${IndexStore.defaultRoot}/$key-hnsw$m-$efConstruction-$partitions-v${IndexStore.FormatVersion}"
+    s"${IndexStore.defaultRoot}/${IndexStore.slug(cacheKey)}-hnsw$m-$efConstruction-$partitions-v${IndexStore.FormatVersion}"
   }
 
   /** Build-or-load the persisted graph (parquet neighbor lists; Hadoop-FS
-    * metadata IO only, so HDFS/S3 work unchanged). */
+    * metadata IO only, so HDFS/S3 work unchanged): the current version's,
+    * or a first build published as version 1. */
   def ensure(spark: SparkSession, embs: => DataFrame, cacheKey: String,
       m: Int = 16, efConstruction: Int = 64, partitions: Int = 0): HnswIndex = {
     val dir = dirFor(cacheKey, m, efConstruction, partitions)
-    jvmCache.getOrElseUpdate(dir, {
-      import spark.implicits._
-      val f = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      recover(spark, dir)
-      val marker = new Path(s"$dir/_OK")
-      if (!f.exists(marker)) {
-        build(embs, m = m, efConstruction = efConstruction, partitions = partitions)
-          .graph.write.mode("overwrite").parquet(s"$dir/graph")
-        val out = f.create(marker, true)
-        try out.write("ok".getBytes(StandardCharsets.UTF_8)) finally out.close()
-      }
-      HnswIndex(spark.read.parquet(s"$dir/graph").as[HnswNode], m, efConstruction)
-    })
+    val v = Commit.current(spark, dir).getOrElse {
+      val src = embs
+      val n = src.count()
+      val p = if (partitions > 0) partitions else autoPartitions(n)
+      publish(spark, dir, None, Nil,
+        build(src, m = m, efConstruction = efConstruction, partitions = p), p, n)
+      Commit.current(spark, dir).get
+    }
+    graphOf(spark, v, m, efConstruction)
   }
 }

@@ -26,6 +26,7 @@ import org.apache.spark.sql.types.StructType
   *   <root>/<key>/seg=NNNNN/docids/             (doc ids + content fingerprints)
   *   <root>/<key>/seg=NNNNN/meta.json           (numDocs, sumDl per segment)
   *   <root>/<key>/del=NNNNNNNN/                 (one tombstone generation)
+  *   <root>/<key>/fields-N/, stored-N/          (a composite index's sidecar, [[FieldStore]])
   * }}}
   *
   * - All metadata IO goes through the Hadoop `FileSystem` API, so the store
@@ -43,7 +44,8 @@ import org.apache.spark.sql.types.StructType
   * - the manifest of the current version (not a directory listing) is the
   *   source of truth: it names the live segments, the live tombstone
   *   generations and the fingerprint of the source the index was last
-  *   synced with. Every write — a new segment, a delete, a REFRESH's
+  *   synced with, the segment codec, and the composite sidecar's roots and
+  *   statistics. Every write — a new segment, a delete, a REFRESH's
   *   tombstones and delta segment, a compaction — stages its files and
   *   publishes one version. [[compact]] writes a NEW merged segment and
   *   publishes it without the segments and generations it folded; those
@@ -88,8 +90,10 @@ object IndexStore {
     * the change shipped WITHOUT this bump and v3 dirs on disk were a mixed
     * population; gates now also reset state (GateHygiene), this keeps any
     * long-lived deployment's old dirs from being half-trusted.
-    * v5: every index directory is versioned by one [[Commit]] manifest. */
-  val FormatVersion = 5
+    * v5: every index directory is versioned by one [[Commit]] manifest.
+    * v6: the composite sidecar, the segment codec and the backfill's
+    * completion are parts of that manifest; HNSW graphs are versioned. */
+  val FormatVersion = 6
 
   /** Stable term → bucket hash, computable on both driver (literal pruning)
     * and executors (write path). */
@@ -101,7 +105,8 @@ object IndexStore {
   def defaultRoot: String = sys.env.getOrElse(
     "GRAFT_INDEX_DIR", sys.props("java.io.tmpdir") + "/graft-index")
 
-  private def slug(s: String): String = s.replaceAll("[^A-Za-z0-9._-]+", "_")
+  /** `s` as one directory-name part. */
+  private[index] def slug(s: String): String = s.replaceAll("[^A-Za-z0-9._-]+", "_")
 
   // ---- Hadoop FS helpers (cluster-safe metadata IO) ------------------------
 
@@ -162,10 +167,28 @@ object IndexStore {
   private def sourceFpOf(v: Commit.Version): Option[String] = v.field("sourceFp").map(_.asText)
 
   /** Publish `fp` as the source fingerprint of the latest version of the
-    * index at `dir` (of any kind), unless it already carries it. */
-  def recordSourceFp(spark: SparkSession, dir: String, fp: Option[String]): Unit =
-    for (f <- fp; base <- Commit.latest(spark, dir) if !sourceFpOf(base).contains(f))
-      Commit.publish(spark, dir, Some(base), base.files, "sourceFp" -> f)
+    * index at `dir` (of any kind), with its sidecar as `sidecar` says,
+    * unless that changes nothing. */
+  def recordSourceFp(spark: SparkSession, dir: String, fp: Option[String],
+      sidecar: FieldStore.Policy = FieldStore.Carry): Unit =
+    Commit.latest(spark, dir).foreach(b => publish(spark, dir, Some(b), Nil, fp, sidecar))
+
+  /** Publish the version after `base` naming `base`'s files, the `staged`
+    * roots and the sidecar `sidecar` leaves ([[FieldStore.stage]]), with
+    * the source fingerprint `sourceFp` and the object fields `fields` —
+    * unless nothing is staged or restaged and the fields and fingerprint
+    * are the ones `base` carries. */
+  private[index] def publish(spark: SparkSession, dir: String, base: Option[Commit.Version],
+      staged: Seq[String], sourceFp: Option[String], sidecar: FieldStore.Policy,
+      fields: (String, Any)*): Unit = {
+    val side = FieldStore.stage(spark, dir, base, Commit.nextNumber(base), sidecar,
+      staged.nonEmpty, sourceFp)
+    val newFp = sourceFp.exists(f => !base.flatMap(sourceFpOf).contains(f))
+    if (staged.nonEmpty || side.wrote || fields.nonEmpty || newFp)
+      Commit.publish(spark, dir, base,
+        base.fold(Seq.empty[String])(_.files.filterNot(FieldStore.isRoot)) ++ staged ++ side.roots,
+        sourceFp.map("sourceFp" -> _).toSeq ++ side.fields ++ fields: _*)
+  }
 
   private def segName(n: Int): String = f"seg=$n%05d"
   private def segNo(name: String): Int = name.stripPrefix("seg=").toInt
@@ -183,18 +206,21 @@ object IndexStore {
     * when the index already exists and was synced with other bytes. */
   def ensure(spark: SparkSession, docs: => DataFrame, cacheKey: String,
       idCol: String, textCol: String, analyzerName: String,
-      withPositions: Boolean = true, sourceFp: Option[String] = None): InvertedIndex = {
+      withPositions: Boolean = true, sourceFp: Option[String] = None,
+      compression: Option[String] = None,
+      sidecar: FieldStore.Policy = FieldStore.Carry): InvertedIndex = {
     val dir = dirFor(cacheKey, textCol, analyzerName)
-    if (sourceFp.nonEmpty || !durable(spark, dir)) commit(spark, dir, sourceFp) { (snap, _) =>
-      if (snap.nonEmpty) Seq.empty
-      else {
-        val d = docs
-        val idx = InvertedIndex.build(d, idCol, textCol, analyzerName, withPositions)
-        writeSegment(idx, dir, 0, Some(d.select(col(idCol).as("doc_id"),
-          xxhash64(col(textCol)).as("content_fp"))))
-        Seq(segName(0))
+    if (sourceFp.nonEmpty || !durable(spark, dir) || sidecar != FieldStore.Carry)
+      commit(spark, dir, sourceFp, sidecar, compression) { (snap, codec, _) =>
+        if (snap.nonEmpty) Seq.empty
+        else {
+          val d = docs
+          val idx = InvertedIndex.build(d, idCol, textCol, analyzerName, withPositions)
+          writeSegment(idx, dir, 0, Some(d.select(col(idCol).as("doc_id"),
+            xxhash64(col(textCol)).as("content_fp"))), codec)
+          Seq(segName(0))
+        }
       }
-    }
     load(spark, dir)
   }
 
@@ -204,23 +230,22 @@ object IndexStore {
     ensure(spark, graft.Tables.documents(spark, sfDir),
       s"$sfDir-documents", "doc_id", "text", analyzerName)
 
-  /** Per-index segment compression codec, persisted in `<dir>/_OPTIONS`
-    * (the reference's `compression` index option,
-    * inverted_index_compression_option.test / zstd_multipage): every
-    * segment writer — CREATE backfill, REFRESH delta, COMPACT merge,
-    * streaming batches — reads it here, so the codec survives restarts and
-    * maintenance. Parquet self-describes the codec per file, so readers
-    * need nothing. */
-  private[graft] def segmentCompression(spark: SparkSession, dir: String): Option[String] =
-    if (!exists(spark, s"$dir/_OPTIONS")) None
-    else readString(spark, s"$dir/_OPTIONS").split("\n")
-      .collectFirst { case l if l.startsWith("compression=") =>
-        l.stripPrefix("compression=").trim }.filter(_.nonEmpty)
+  /** Per-index segment compression codec (the reference's `compression`
+    * index option, inverted_index_compression_option.test /
+    * zstd_multipage): given to the first build and held as the version
+    * field `compression` from then on, so every segment writer — CREATE
+    * backfill, REFRESH delta, COMPACT merge, streaming batches — writes it
+    * and it survives restarts and maintenance. Parquet self-describes the
+    * codec per file, so readers need nothing. */
+  def segmentCompression(spark: SparkSession, dir: String): Option[String] =
+    Commit.current(spark, dir).flatMap(codecOf)
 
-  def setCompression(spark: SparkSession, dir: String, codec: String): Unit = {
+  private def codecOf(v: Commit.Version): Option[String] = v.field("compression").map(_.asText)
+
+  private def validCodec(codec: String): String = {
     require(Set("snappy", "zstd", "gzip", "lz4", "uncompressed", "none")
       .contains(codec.toLowerCase), s"unsupported compression codec: $codec")
-    writeStringAtomic(spark, s"$dir/_OPTIONS", s"compression=${codec.toLowerCase}\n")
+    codec.toLowerCase
   }
 
   /** Write one immutable segment: four writes and, for a fresh build, the
@@ -236,10 +261,9 @@ object IndexStore {
     * every run of a retried or speculative map task). Postings are
     * unpersisted once the segment is durable. */
   def writeSegment(idx: InvertedIndex, dir: String, segNo: Int,
-      docIds: Option[DataFrame] = None): Unit = {
+      docIds: Option[DataFrame] = None, codec: Option[String] = None): Unit = {
     val seg = f"$dir/seg=$segNo%05d"
     val spark = idx.postings.sparkSession
-    val codec = segmentCompression(spark, dir)
     val conf = spark.sessionState.newHadoopConf()
     def write(df: DataFrame, path: String, partitioned: Boolean): Unit = {
       val w = if (partitioned) df.write.partitionBy("bucket") else df.write
@@ -304,9 +328,13 @@ object IndexStore {
     * and a 100 TB backfill's compaction/retry unit stays bounded. */
   def ensureRotating(spark: SparkSession, docs: => DataFrame, cacheKey: String,
       idCol: String, textCol: String, analyzerName: String,
-      docsMax: Long, sourceFp: Option[String] = None): InvertedIndex = {
+      docsMax: Long, sourceFp: Option[String] = None, compression: Option[String] = None,
+      sidecar: FieldStore.Policy = FieldStore.Carry): InvertedIndex = {
     val dir = dirFor(cacheKey, textCol, analyzerName)
-    if (!exists(spark, s"$dir/_BACKFILL_DONE")) {
+    // the version that records the backfill's wave count ends it
+    if (Commit.latest(spark, dir).exists(_.field("backfill").nonEmpty))
+      recordSourceFp(spark, dir, sourceFp, sidecar)
+    else {
       val d = docs
       val n = d.count()
       val waves = math.max(1, math.ceil(n.toDouble / docsMax).toInt)
@@ -320,42 +348,54 @@ object IndexStore {
           org.apache.spark.sql.functions.pmod(
             org.apache.spark.sql.functions.hash(col(idCol)),
             org.apache.spark.sql.functions.lit(waves)) === w)
-        val idx = InvertedIndex.build(wave, idCol, textCol, analyzerName)
-        appendSegment(idx, dir, Some(wave.select(col(idCol).as("doc_id"),
-          xxhash64(col(textCol)).as("content_fp"))))
+        Metrics.timed(dir, "commit") {
+          commit(spark, dir, sidecar = FieldStore.Drop, compression = compression) {
+            (snap, codec, _) =>
+              val next = nextSeg(snap)
+              writeSegment(InvertedIndex.build(wave, idCol, textCol, analyzerName), dir, next,
+                Some(wave.select(col(idCol).as("doc_id"), xxhash64(col(textCol)).as("content_fp"))),
+                codec)
+              Seq(segName(next))
+          }
+        }
       }
-      writeStringAtomic(spark, s"$dir/_BACKFILL_DONE", waves.toString)
+      publish(spark, dir, Commit.latest(spark, dir), Nil, sourceFp, sidecar, "backfill" -> waves)
     }
-    recordSourceFp(spark, dir, sourceFp)
     load(spark, dir)
   }
 
   /** Append a new segment (streaming ingest / incremental refresh). A
     * streaming micro-batch passes its `batch` id, recorded in the version
-    * that publishes the segment ([[batchCommitted]]). */
+    * that publishes the segment ([[batchCommitted]]). The version names no
+    * composite sidecar: covered reads use the base table until the next
+    * REFRESH restages it. */
   def appendSegment(idx: InvertedIndex, dir: String, docIds: Option[DataFrame] = None,
       batch: Option[Long] = None): Unit = Metrics.timed(dir, "commit") {
-    commit(idx.postings.sparkSession, dir, batch = batch) { (snap, _) =>
-      val next = nextSeg(snap)
-      writeSegment(idx, dir, next, docIds)
-      Seq(segName(next))
+    commit(idx.postings.sparkSession, dir, sidecar = FieldStore.Drop, batch = batch) {
+      (snap, codec, _) =>
+        val next = nextSeg(snap)
+        writeSegment(idx, dir, next, docIds, codec)
+        Seq(segName(next))
     }
   }
 
   /** One REFRESH as one version: tombstones for the `removed` ids (scoped
     * to the newest segment), a delta segment for `added` (the index and its
     * `(doc_id, content_fp)` manifest) in a newer one, and the source
-    * fingerprint `sourceFp` — staged, then published together, so no
-    * reader sees the tombstones without the re-indexed docs. */
+    * fingerprint `sourceFp`, with the composite sidecar as `sidecar` says
+    * — staged, then published together, so no reader sees the tombstones
+    * without the re-indexed docs, or either without the sidecar they
+    * imply. */
   def refresh(spark: SparkSession, dir: String, removed: Option[DataFrame],
-      added: Option[(InvertedIndex, DataFrame)], sourceFp: Option[String]): Unit =
+      added: Option[(InvertedIndex, DataFrame)], sourceFp: Option[String],
+      sidecar: FieldStore.Policy = FieldStore.Carry): Unit =
     Metrics.timed(dir, "commit") {
-      commit(spark, dir, sourceFp) { (snap, n) =>
+      commit(spark, dir, sourceFp, sidecar) { (snap, codec, n) =>
         val s = snap.getOrElse(throw new IllegalStateException(s"no index at $dir"))
         removed.flatMap(ids => stageTombstones(spark, s, idsMatched(spark, s, ids), n)).toSeq ++
           added.map { case (idx, docIds) =>
             val next = nextSeg(snap)
-            writeSegment(idx, dir, next, Some(docIds))
+            writeSegment(idx, dir, next, Some(docIds), codec)
             segName(next)
           }
       }
@@ -366,19 +406,21 @@ object IndexStore {
 
   private def nextSeg(snap: Option[Snapshot]): Int = snap.fold(0)(_.maxSeg + 1)
 
-  /** Stage on the latest version and publish once: `stage` gets that
-    * version's snapshot and the number the staged roots are named with, and
-    * returns the roots it wrote, which join the version's files. Nothing
-    * staged and an unchanged fingerprint publish nothing. */
+  /** Stage on the latest version and publish once ([[publish]]): `stage`
+    * gets that version's snapshot, the segment codec (`compression` for a
+    * first build, which records it) and the number the staged roots are
+    * named with, and returns the roots it wrote, which join the version's
+    * files. */
   private def commit(spark: SparkSession, dir: String, sourceFp: Option[String] = None,
-      batch: Option[Long] = None)(stage: (Option[Snapshot], Long) => Seq[String]): Unit = {
+      sidecar: FieldStore.Policy = FieldStore.Carry, compression: Option[String] = None,
+      batch: Option[Long] = None)(
+      stage: (Option[Snapshot], Option[String], Long) => Seq[String]): Unit = {
     val base = Commit.latest(spark, dir)
-    val staged = stage(base.map(snapshotOf(spark, _)), Commit.nextNumber(base))
-    if (staged.nonEmpty)
-      Commit.publish(spark, dir, base, base.fold(Seq.empty[String])(_.files) ++ staged,
-        sourceFp.map("sourceFp" -> _).toSeq ++
-          batch.map(b => "batches" -> (batches(base) :+ b).map(Long.box).asJava): _*)
-    else recordSourceFp(spark, dir, sourceFp)
+    val codec = base.fold(compression.map(validCodec))(codecOf)
+    val staged = stage(base.map(snapshotOf(spark, _)), codec, Commit.nextNumber(base))
+    publish(spark, dir, base, staged, sourceFp, sidecar,
+      codec.filter(_ => base.isEmpty).map("compression" -> _).toSeq ++
+        batch.map(b => "batches" -> (batches(base) :+ b).map(Long.box).asJava): _*)
   }
 
   /** `(doc_id, content_fp)` of every LIVE indexed doc: per-segment doc-id
@@ -454,29 +496,17 @@ object IndexStore {
     * term NDV and flips join build sides accordingly (IndexStatsSpec).
     * Cross-segment term NDV is the sum of per-segment dictionary sizes — an
     * upper bound (terms shared across segments count twice), the
-    * conservative direction for selectivity estimates. Segments written
-    * before the stats fields existed fall back to one counting scan. */
+    * conservative direction for selectivity estimates. */
   def registerStatsTables(spark: SparkSession, dir: String, prefix: String): Unit = {
     import org.apache.spark.sql.catalyst.TableIdentifier
     import org.apache.spark.sql.catalyst.catalog.{CatalogColumnStat, CatalogStatistics,
       CatalogStorageFormat, CatalogTable, CatalogTableType, CatalogUtils}
-    val segs = listSegments(spark, dir)
-    require(segs.nonEmpty, s"no index segments under $dir")
-    def metaSum(key: String): Option[Long] = {
-      val vals = segs.map { s =>
-        val txt = readString(spark, s"$dir/$s/meta.json")
-        (s""""$key":(\\d+)""").r.findFirstMatchIn(txt).map(_.group(1).toLong)
-      }
-      if (vals.forall(_.isDefined)) Some(vals.flatten.sum) else None
-    }
+    val snap = current(spark, dir)
     def bytesUnder(sub: String): Long = {
       val f = fs(spark, dir)
-      segs.map(s => f.getContentSummary(new Path(s"$dir/$s/$sub")).getLength).sum
+      snap.segs.map(s => f.getContentSummary(new Path(s"$dir/$s/$sub")).getLength).sum
     }
-    val termRows = metaSum("termRows")
-      .getOrElse(segs.map(s => spark.read.parquet(s"$dir/$s/termdict").count()).sum)
-    val postRows = metaSum("postingsRows")
-      .getOrElse(segs.map(s => spark.read.parquet(s"$dir/$s/postings").count()).sum)
+    val (termRows, postRows) = (snap.metaSum("termRows"), snap.metaSum("postingsRows"))
     def mk(name: String, sub: String, rows: Long, termNdv: Long): Unit = {
       spark.sql(s"DROP TABLE IF EXISTS $name")
       // recursiveFileLookup: a multi-segment glob would otherwise make
@@ -502,7 +532,7 @@ object IndexStore {
         storage = CatalogStorageFormat.empty.copy(
           locationUri = Some(CatalogUtils.stringToURI(s"$dir/seg=*/$sub")),
           properties = options),
-        schema = current(spark, dir).parts(sub).head.dataSchema,
+        schema = snap.parts(sub).head.dataSchema,
         provider = Some("parquet"),
         stats = Some(stats)), ignoreIfExists = false)
     }
@@ -528,7 +558,7 @@ object IndexStore {
     * apply tombstones at load; [[compact]] folds them away permanently. */
   def deleteWhere(spark: SparkSession, dir: String,
       predicate: org.apache.spark.sql.Column): Unit =
-    commit(spark, dir) { (snap, n) =>
+    commit(spark, dir, sidecar = FieldStore.Drop) { (snap, _, n) =>
       val s = snap.getOrElse(throw new IllegalStateException(s"no index at $dir"))
       stageTombstones(spark, s, s.index(spark).docStats
         .filter(predicate)
@@ -609,7 +639,7 @@ object IndexStore {
     def maxSeg: Int = segs.map(segNo).foldLeft(-1)(math.max)
 
     private lazy val metas = segs.map(s => readString(spark, s"$dir/$s/meta.json"))
-    private def metaSum(key: String): Long = metas.map { t =>
+    def metaSum(key: String): Long = metas.map { t =>
       s""""$key":(\\d+)""".r.findFirstMatchIn(t).get.group(1).toLong
     }.sum
     lazy val numDocs: Long = metaSum("numDocs")
@@ -757,8 +787,9 @@ object IndexStore {
       merged.termDict.drop("bucket"),
       merged.docStats,
       merged.totals)
-    writeSegment(rebuilt, dir, next, Some(liveDocFps(spark, snap)))
-    Commit.publish(spark, dir, base, Seq(segName(next)))
+    writeSegment(rebuilt, dir, next, Some(liveDocFps(spark, snap)), base.flatMap(codecOf))
+    // the live docs are the same: the composite sidecar carries forward
+    Commit.publish(spark, dir, base, segName(next) +: base.get.files.filter(FieldStore.isRoot))
     snap.segs.size
   }
 }

@@ -197,18 +197,15 @@ final case class IvfIndex(
     top.toSeq.toDF("vec_id", "dist")
   }
 
-  /** All vectors within L2 distance `r` of `query` — the reference's ANN
-    * range claim (`TryClaimAnnRange`, iresearch_plan.cpp:927-965). List j can
+  /** All vectors within squared L2 distance `rSq` of `query` — the
+    * reference's ANN range claim (`TryClaimAnnRange`,
+    * iresearch_plan.cpp:927-965) in the `ann_l2` score's units. List j can
     * hold a qualifying vector only if ‖q−cⱼ‖ − rⱼ ≤ r, so the probe set is
     * static metadata math like [[ballProbes]]; the exact distance filter
-    * inside the probed lists makes the result exact. */
-  def rangeSearch(query: Seq[Float], r: Double): DataFrame =
-    rangeSearchSq(query, r * r)
-
-  /** Same, with the threshold in SQUARED-L2 units (the `ann_l2` score
-    * mapping) — the probe bound takes a sqrt (padded, superset-safe) but the
-    * exact row filter compares the caller's threshold verbatim, so boundary
-    * rows match the row-eval predicate bit-for-bit. */
+    * inside the probed lists makes the result exact. The probe bound takes
+    * a sqrt (padded, superset-safe) but the exact row filter compares the
+    * caller's threshold verbatim, so boundary rows match the row-eval
+    * predicate bit-for-bit. */
   def rangeSearchSq(query: Seq[Float], rSq: Double): DataFrame = {
     val r = math.sqrt(math.max(rSq, 0.0))
     val probes = centroidDistSq(query.map(_.toDouble)).collect {
@@ -409,7 +406,7 @@ object IvfIndex {
   /** Canonical on-disk location for an ensured index. */
   def dirFor(cacheKey: String, k: Int = 0): String = {
     val kTag = if (k > 0) k.toString else "auto"
-    s"${IndexStore.defaultRoot}/${cacheKey.replaceAll("[^A-Za-z0-9._-]+", "_")}-ivf$kTag-v${IndexStore.FormatVersion}"
+    s"${IndexStore.defaultRoot}/${IndexStore.slug(cacheKey)}-ivf$kTag-v${IndexStore.FormatVersion}"
   }
 
   /** One published version of an IVF index ([[Commit]]), its session-
@@ -418,7 +415,8 @@ object IvfIndex {
     * count), the vector roots (`vectors-N`, `cluster=`-partitioned; an
     * append adds one) and their schema, the fingerprint roots (`fps-N`),
     * and each quantized code family's trained state with its root
-    * (`<kind>-N`). An index over no vectors names no roots. */
+    * (`<kind>-N`), and an INCLUDE sidecar ([[FieldStore]]). An index over
+    * no vectors names no vector roots. */
   private[index] final class State(spark: SparkSession, val version: Commit.Version) {
     private def field(name: String) = version.field(name).get
     private def doubles(n: JsonNode): Array[Double] = n.elements().asScala.map(_.asDouble).toArray
@@ -470,21 +468,27 @@ object IvfIndex {
     current(spark, dirFor(cacheKey, k)).nonEmpty
 
   /** Publishes the version after `base` naming `files`, with the coarse
-    * quantizer and the code families' trained states. */
+    * quantizer, the code families' trained states, the source fingerprint
+    * and the sidecar as `sidecar` says. */
   private def publish(spark: SparkSession, dir: String, base: Option[Commit.Version],
       files: Seq[String], centroids: Array[Array[Double]], radii: Array[Double],
-      sizes: Array[Long], codes: Map[String, String], fields: (String, Any)*): Unit =
-    Commit.publish(spark, dir, base, files, Seq[(String, Any)](
+      sizes: Array[Long], codes: Map[String, String], sourceFp: Option[String],
+      sidecar: FieldStore.Policy, fields: (String, Any)*): Unit = {
+    val side = FieldStore.stage(spark, dir, base, Commit.nextNumber(base), sidecar,
+      changed = true, sourceFp)
+    Commit.publish(spark, dir, base, files ++ side.roots, Seq[(String, Any)](
       "centroids" -> centroids, "radii" -> radii, "sizes" -> sizes,
-      "codes" -> codes.asJava) ++ fields: _*)
+      "codes" -> codes.asJava) ++ sourceFp.map("sourceFp" -> _) ++ side.fields ++ fields: _*)
+  }
 
   /** Builds the index over `embs` with `k` lists (0: auto) into new roots
     * and publishes them as the version after the latest one, dropping all of
     * its roots: the first build, a rebuild after rows were removed or
     * changed, or a recluster. The code families of the replaced version are
-    * retrained over the new vectors and published in the same version. */
+    * retrained over the new vectors and published in the same version, and
+    * the sidecar as `sidecar` says. */
   private def write(spark: SparkSession, dir: String, embs: DataFrame, k: Int,
-      sourceFp: Option[String]): Unit = {
+      sourceFp: Option[String], sidecar: FieldStore.Policy): Unit = {
     val base = Commit.latest(spark, dir)
     val n = Commit.nextNumber(base)
     val idx = build(embs, k = k)
@@ -499,9 +503,8 @@ object IvfIndex {
           kind -> QuantizedIvf.stage(idx, dir, kind, QuantizedIvf.trainedM(kind, state), n) }
       publish(spark, dir, base, stored ++ codes.values.map(_._1),
         idx.centroids, idx.radii, idx.sizes, codes.map { case (kind, (_, state)) => kind -> state },
-        Seq[(String, Any)]("lists" -> k, "trained" -> idx.sizes.sum,
-          "schema" -> idx.assignments.select("vec_id", "embedding", "cluster").schema.json) ++
-          sourceFp.map("sourceFp" -> _): _*)
+        sourceFp, sidecar, "lists" -> k, "trained" -> idx.sizes.sum,
+        "schema" -> idx.assignments.select("vec_id", "embedding", "cluster").schema.json)
     } finally idx.assignments.unpersist()
   }
 
@@ -513,7 +516,7 @@ object IvfIndex {
       k: Int = 0): IvfIndex = {
     val dir = dirFor(cacheKey, k)
     current(spark, dir).getOrElse {
-      write(spark, dir, embs, k, None)
+      write(spark, dir, embs, k, None, FieldStore.Carry)
       current(spark, dir).get
     }.index(spark)
   }
@@ -528,12 +531,12 @@ object IvfIndex {
   /** Rebuild the index at `dir` over `embs` as one version that replaces
     * every root (REFRESH or COMPACT after rows were removed or changed),
     * with the list count it was built with (`lists` when none is
-    * published), the code families it carries, and the source fingerprint
-    * `sourceFp`. */
+    * published), the code families it carries, the sidecar as `sidecar`
+    * says, and the source fingerprint `sourceFp`. */
   def rebuild(spark: SparkSession, dir: String, embs: DataFrame, lists: Int,
-      sourceFp: Option[String]): Unit =
+      sourceFp: Option[String], sidecar: FieldStore.Policy = FieldStore.Carry): Unit =
     write(spark, dir, embs, Commit.latest(spark, dir).fold(lists)(stateOf(spark, _).lists),
-      sourceFp)
+      sourceFp, sidecar)
 
   /** The fingerprint manifest `(vec_id, fp)` of the latest version, opened
     * without a Spark job. */
@@ -560,9 +563,12 @@ object IvfIndex {
     * was created with) — the (rare, amortized) full rebuild instead of a
     * per-append one.
     *
-    * Returns (#appended, reclustered?). Single-writer (the DDL path). */
+    * The sidecar goes as `sidecar` says (appended vectors change the doc
+    * set: restage it or drop it). Returns (#appended, reclustered?).
+    * Single-writer (the DDL path). */
   def append(spark: SparkSession, dir: String, newVecs: DataFrame,
-      driftRatio: Double = 0.5, sourceFp: Option[String] = None): (Long, Boolean) = {
+      driftRatio: Double = 0.5, sourceFp: Option[String] = None,
+      sidecar: FieldStore.Policy = FieldStore.Drop): (Long, Boolean) = {
     import spark.implicits._
     val base = Commit.latest(spark, dir).getOrElse(
       throw new IllegalArgumentException(s"no IVF index at $dir to append to"))
@@ -590,7 +596,7 @@ object IvfIndex {
       else if (st.sizes.sum + added > st.trained * (1.0 + driftRatio)) {
         // drift: re-cluster the whole store at the new scale
         write(spark, dir, st.index(spark).assignments.select("vec_id", "embedding")
-          .unionByName(assigned.select("vec_id", "embedding")), st.lists, sourceFp)
+          .unionByName(assigned.select("vec_id", "embedding")), st.lists, sourceFp, sidecar)
         (added, true)
       } else {
         val n = base.next
@@ -606,10 +612,11 @@ object IvfIndex {
         val codes = st.codes.map { case (kind, state) =>
           kind -> QuantizedIvf.stage(grown, dir, kind, QuantizedIvf.trainedM(kind, state), n) }
         publish(spark, dir, Some(base),
-          base.files.filterNot(f => st.codes.keys.exists(k => f.startsWith(k + "-"))) ++
+          base.files.filterNot(f => FieldStore.isRoot(f) ||
+            st.codes.keys.exists(k => f.startsWith(k + "-"))) ++
             Seq(vecRoot, fpsRoot) ++ codes.values.map(_._1),
           st.centroids, radii, sizes, codes.map { case (kind, (_, state)) => kind -> state },
-          sourceFp.map("sourceFp" -> _).toSeq: _*)
+          sourceFp, sidecar)
         (added, false)
       }
     } finally assigned.unpersist()

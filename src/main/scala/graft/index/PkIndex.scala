@@ -65,10 +65,8 @@ object PkIndex {
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  private def slug(s: String): String = s.replaceAll("[^A-Za-z0-9._-]+", "_")
-
   def dirFor(cacheKey: String, col: String): String =
-    s"${IndexStore.defaultRoot}/${slug(cacheKey)}-pk-$col-v${IndexStore.FormatVersion}"
+    s"${IndexStore.defaultRoot}/${IndexStore.slug(cacheKey)}-pk-$col-v${IndexStore.FormatVersion}"
 
   private def read(spark: SparkSession, tableRoot: String) =
     graft.catalog.TableStore.readRoot(spark, tableRoot).getOrElse(spark.read.parquet(tableRoot))

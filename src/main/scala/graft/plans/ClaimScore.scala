@@ -10,7 +10,7 @@ import org.apache.spark.sql.graft.Frames
 import org.apache.spark.sql.types.DoubleType
 import org.apache.spark.unsafe.types.UTF8String
 import graft.analysis.AnalyzerRegistry
-import graft.index.{FieldStore, IndexStore, InvertedIndex}
+import graft.index.{IndexStore, InvertedIndex}
 import graft.search.{IndexCatalog, SqlSurface, TsQuery, TsQueryCodec, TsQueryExec}
 
 /** Shared pieces of the scorer-claim rules: recognizing a scorer stub call
@@ -427,9 +427,10 @@ case class ClaimScoreTopK(spark: SparkSession) extends Rule[LogicalPlan] {
 
   /** The bare-scan drive for outputs wider than the id and the score:
     * the index top-k, then one late-materializing join-back on the id to
-    * the covering columnstore (when it holds every output column and is
-    * coherent with the text segments) or to the scan itself, re-sorted by
-    * score — the k-row join-back of search_pk_lookup.h. */
+    * the covering columnstore (when it holds every output column and
+    * passes the index-only gate, [[StatsShapes.freshSidecar]]) or to the
+    * scan itself, re-sorted by score — the k-row join-back of
+    * search_pk_lookup.h. */
   private def claimBare(lr: LogicalRelation, idAttr: AttributeReference,
       entry: IndexCatalog.TextEntry, scored: LogicalPlan, k: Int, root: String,
       refs: Seq[Attribute], scoreIds: Set[ExprId],
@@ -440,15 +441,16 @@ case class ClaimScoreTopK(spark: SparkSession) extends Rule[LogicalPlan] {
     // covered join-back (reference inverted_index_topk_include.test): when
     // every projected column is the id or INCLUDEd, the k-row late
     // materialization reads the narrow stored columnstore instead of the
-    // wide base table; a stale sidecar (text segments advanced since its
-    // build) joins the scan, never a silently-narrower columnstore
-    val covered = IndexCatalog.lookupFields(root).filter(fe =>
-      needed.forall(c => c == entry.idCol || fe.included.contains(c)) &&
-        FieldStore.textCoherent(spark, fe.dir))
+    // wide base table; a sidecar that is not fresh with the scan joins the
+    // scan, so a row deleted since the last REFRESH never comes back
+    val covered = IndexCatalog.sidecarDirs(root).iterator
+      .flatMap(StatsShapes.freshSidecar(spark, _, lr.relation))
+      .find(side => side.spec.idCol == entry.idCol &&
+        needed.forall(c => c == entry.idCol || side.spec.included.contains(c)))
     // the join-back side, its id, and the value of each scan column
     val (lookup, lookupId, column) = covered match {
-      case Some(fe) =>
-        val stored = Frames.planOf(FieldStore.stored(spark, fe.dir))
+      case Some(side) =>
+        val stored = Frames.planOf(side.stored(spark))
         def attr(name: String): Attribute = stored.output.find(_.name == name).get
         (stored, attr("doc_id"),
           (a: AttributeReference) => if (a.exprId == idAttr.exprId) docId else attr(a.name))

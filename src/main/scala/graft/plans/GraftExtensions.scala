@@ -408,7 +408,7 @@ case class RbacCheck(spark: SparkSession)
             // an index artifact counts as reading the SOURCE columns it
             // materializes (postings reveal the indexed column; the
             // covering sidecar carries source columns verbatim)
-            val (src, usedCols) = IndexCatalog.sourceOfArtifact(root) match {
+            val (src, usedCols) = IndexCatalog.sourceOfArtifact(spark, root) match {
               case Some((s, cols)) => (s, if (atRoot) cols else Set.empty[String])
               case None =>
                 (root,
@@ -969,26 +969,16 @@ case class ClaimAnnTopK(spark: SparkSession) extends Rule[LogicalPlan] {
                 else {
                   // covered kNN (reference inverted_index_ann_include.test):
                   // when every projected column is the id or an INCLUDE of
-                  // the vector index's sidecar, the k-row join-back reads
+                  // a sidecar fresh with the scan, the k-row join-back reads
                   // the narrow stored columnstore, never the base table
-                  // the ANN sidecar pins the SOURCE files at build (srcfp);
-                  // IVF refresh-append can add vectors without the sidecar —
-                  // a mismatch falls back to the base join (never narrower)
-                  val curFp = lr.relation match {
-                    case h: HadoopFsRelation =>
-                      val files = h.location.listFiles(Nil, Nil).flatMap(_.files)
-                      if (files.isEmpty) None
-                      else Some(s"${files.length}:${files.map(_.getLen).sum}:" +
-                        s"${files.map(_.getModificationTime).max}")
-                    case _ => None
-                  }
-                  val lookup = IndexCatalog.lookupFields(root) match {
-                    case Some(fe) if outAttrs.forall(a =>
-                        a.name == entry.idCol || fe.included.contains(a.name)) &&
-                        graft.index.FieldStore.sourceCoherent(spark, fe.dir, curFp) =>
-                      graft.index.FieldStore.stored(spark, fe.dir)
-                        .withColumnRenamed("doc_id", entry.idCol)
-                    case _ => graft.catalog.TableStore.readRoot(spark, root)
+                  val covered = IndexCatalog.sidecarDirs(root).iterator
+                    .flatMap(StatsShapes.freshSidecar(spark, _, lr.relation))
+                    .find(side => side.spec.idCol == entry.idCol && outAttrs.forall(a =>
+                      a.name == entry.idCol || side.spec.included.contains(a.name)))
+                  val lookup = covered match {
+                    case Some(side) =>
+                      side.stored(spark).withColumnRenamed("doc_id", entry.idCol)
+                    case None => graft.catalog.TableStore.readRoot(spark, root)
                       .getOrElse(spark.read.parquet(root))
                   }
                   probed.join(lookup, Seq(entry.idCol))
@@ -1422,9 +1412,9 @@ case class ClaimTsMatch(spark: SparkSession) extends Rule[LogicalPlan] {
       for {
         (attr, mkPred, isPoint) <- TsPredicates.asFieldPred(p)
         if isPoint
-        (entry, idAttr) <- fieldIndexOf(child, attr)
+        (side, idAttr) <- fieldIndexOf(child, attr)
         if child.outputSet.contains(idAttr)
-      } yield (p, attr, mkPred, entry, idAttr)
+      } yield (p, attr, mkPred, side, idAttr)
     }
     if (claimable.isEmpty && fieldClaimable.isEmpty) return f
 
@@ -1441,8 +1431,8 @@ case class ClaimTsMatch(spark: SparkSession) extends Rule[LogicalPlan] {
           Some(EqualTo(docId, rightId)), JoinHint.NONE)
     }
     val joinedAll = fieldClaimable.foldLeft(joined) {
-      case (acc, (_, attr, mkPred, entry, idAttr)) =>
-        val m = FieldDrives.matchedIds(spark, entry, attr.name, mkPred)
+      case (acc, (_, attr, mkPred, side, idAttr)) =>
+        val m = FieldDrives.matchedIds(spark, side, attr.name, mkPred)
         val rightId = m.output.find(_.name == "doc_id").get
         Join(acc, m, LeftSemi,
           Some(FieldDrives.idEq(idAttr, rightId)), JoinHint.NONE)
@@ -1459,18 +1449,21 @@ case class ClaimTsMatch(spark: SparkSession) extends Rule[LogicalPlan] {
   }
 
   /** Resolves the composite-index sidecar covering the scan that produced
-    * `attr` as an indexed FIELD, plus that scan's id attribute. */
+    * `attr` as an indexed FIELD, plus that scan's id attribute. The field
+    * semi-join narrows the scan, which still reads every column: the
+    * sidecar need only be the one the version the statement reads names. */
   private def fieldIndexOf(plan: LogicalPlan,
-      attr: AttributeReference): Option[(IndexCatalog.FieldsEntry, AttributeReference)] =
+      attr: AttributeReference): Option[(graft.index.FieldStore.Sidecar, AttributeReference)] =
     plan.collectFirst {
       case lr: LogicalRelation if lr.outputSet.contains(attr) =>
         for {
           root <- PlanShapes.scanRoot(lr)
-          e <- IndexCatalog.lookupFields(root)
-          if e.fields.contains(attr.name)
+          side <- IndexCatalog.sidecarDirs(root).iterator
+            .flatMap(graft.index.FieldStore.current(spark, _))
+            .find(_.spec.fields.contains(attr.name))
           idAttr <- lr.output.collectFirst {
-            case a: AttributeReference if a.name == e.idCol => a }
-        } yield (e, idAttr)
+            case a: AttributeReference if a.name == side.spec.idCol => a }
+        } yield (side, idAttr)
     }.flatten
 }
 
@@ -1511,13 +1504,13 @@ private[plans] object FieldDrives {
 
   /** The matched doc_ids of one field predicate as a logical subtree:
     * `Project(doc_id, Filter(pred(v), <field dataset scan>))`. The field
-    * dataset is range-partitioned + sorted by `v` (FieldStore.build), so
+    * dataset is range-partitioned + sorted by `v` (FieldStore), so
     * the Filter lands on the parquet scan and prunes to the files/row
     * groups whose min/max straddle the constants — the Spark analogue of
     * the reference's Term / Granular Range posting-list seek. */
-  def matchedIds(spark: SparkSession, entry: IndexCatalog.FieldsEntry,
+  def matchedIds(spark: SparkSession, side: graft.index.FieldStore.Sidecar,
       field: String, mkPred: AttributeReference => Expression): LogicalPlan = {
-    val fPlan = graft.index.FieldStore.field(spark, entry.dir, field).queryExecution.analyzed
+    val fPlan = side.field(spark, field).queryExecution.analyzed
     val v = fPlan.output.collectFirst {
       case a: AttributeReference if a.name == "v" => a }.get
     val id = fPlan.output.collectFirst {
@@ -1575,16 +1568,15 @@ case class ClaimCoveredProjection(spark: SparkSession) extends Rule[LogicalPlan]
       case Some(x) => x
       case None => return None
     }
-    val entry = IndexCatalog.lookupFields(root) match {
-      case Some(e) if e.included.nonEmpty => e
-      case _ => return None
-    }
-    // coherence: the sidecar rebuilds only on REFRESH while the text index
-    // appends segments incrementally (streaming ingest) — a stale sidecar
-    // would silently drop the newer docs from covered reads. Fall back to
-    // the base-table path instead (one manifest read, driver metadata).
-    if (!graft.index.FieldStore.textCoherent(spark, entry.dir)) return None
-    val coveredNames = (entry.included :+ entry.idCol).toSet
+    // the gate of every index-only answer: the version the statement reads
+    // names the sidecar and is byte-fresh with the scan — a row deleted,
+    // added or changed since the last REFRESH, or a streaming append that
+    // published without the sidecar, falls back to the base-table path
+    val side = IndexCatalog.sidecarDirs(root).iterator
+      .flatMap(StatsShapes.freshSidecar(spark, _, lr.relation))
+      .find(_.spec.included.nonEmpty).getOrElse(return None)
+    val spec = side.spec
+    val coveredNames = (spec.included :+ spec.idCol).toSet
     val covered: Map[org.apache.spark.sql.catalyst.expressions.ExprId, AttributeReference] =
       lr.output.collect {
         case a: AttributeReference if coveredNames.contains(a.name) => a.exprId -> a
@@ -1617,8 +1609,8 @@ case class ClaimCoveredProjection(spark: SparkSession) extends Rule[LogicalPlan]
           // column is ALSO included (free on rows being read anyway), and
           // drive the field dataset only when it is the sole access path.
           case Some((attr, mk, isPoint)) if lr.outputSet.contains(attr) &&
-              entry.fields.contains(attr.name) &&
-              (isPoint || !entry.included.contains(attr.name)) =>
+              spec.fields.contains(attr.name) &&
+              (isPoint || !spec.included.contains(attr.name)) =>
             fieldClaims += ((attr.name, mk))
           case _ =>
             if (isCovered(c)) residuals += c else return None
@@ -1628,7 +1620,7 @@ case class ClaimCoveredProjection(spark: SparkSession) extends Rule[LogicalPlan]
     if (textClaims.isEmpty && fieldClaims.isEmpty) return None
 
     // drive: stored columnstore ⋉ each matched-id set
-    val storedPlan = graft.index.FieldStore.stored(spark, entry.dir).queryExecution.analyzed
+    val storedPlan = side.stored(spark).queryExecution.analyzed
     val sId = storedPlan.output.collectFirst {
       case a: AttributeReference if a.name == "doc_id" => a }.get
     var acc: LogicalPlan = storedPlan
@@ -1643,13 +1635,15 @@ case class ClaimCoveredProjection(spark: SparkSession) extends Rule[LogicalPlan]
       acc = Join(acc, m, LeftSemi, Some(FieldDrives.idEq(sId, rightId)), JoinHint.NONE)
     }
     fieldClaims.foreach { case (field, mk) =>
-      val m = FieldDrives.matchedIds(spark, entry, field, mk)
+      val m = FieldDrives.matchedIds(spark, side, field, mk)
       val rightId = m.output.find(_.name == "doc_id").get
       acc = Join(acc, m, LeftSemi, Some(FieldDrives.idEq(sId, rightId)), JoinHint.NONE)
     }
 
-    // original covered attr → stored attr (cast when stored widened the id)
-    val byName = storedPlan.output.collect { case a: AttributeReference => a.name -> a }.toMap
+    // original covered attr → stored attr, the id column → the stored
+    // `doc_id` (cast back when the columnstore widened the id)
+    val byName = storedPlan.output.collect { case a: AttributeReference => a.name -> a }.toMap +
+      (spec.idCol -> sId)
     def sub(e: Expression): Expression = e.transform {
       case a: AttributeReference if covered.contains(a.exprId) =>
         val s = byName.getOrElse(a.name,

@@ -83,33 +83,45 @@ case class ResolveIndexRelation(spark: SparkSession) extends Rule[LogicalPlan] {
   * like pg's snapshot — and otherwise the version current for the
   * statement (read once per statement). A temporary view made from a
   * Dataset keeps its analyzed plan, scans included; they read the
-  * statement's version too. */
+  * statement's version too. A statement resolves each table root once:
+  * the analyzer's later passes find its scans reading the index chosen
+  * for the statement and leave them as they are. */
 case class ReadTableVersions(spark: SparkSession) extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperatorsUp {
     case lr @ LogicalRelation(h: HadoopFsRelation, _, _, _, _)
         if !h.location.isInstanceOf[TableStore.TableFiles] => versioned(lr, h)
     case v: View if v.isTempView && v.child.analyzed =>
-      v.copy(child = v.child.transformUp {
+      val child = v.child.transformUp {
         case lr @ LogicalRelation(h: HadoopFsRelation, _, _, _, _) => versioned(lr, h)
-      })
+      }
+      if (child eq v.child) v else v.copy(child = child)
   }
 
+  /** `lr` reading the statement's version of its table: `lr` itself when
+    * it already does or scans no catalog table. */
   private def versioned(lr: LogicalRelation, h: HadoopFsRelation): LogicalPlan =
     h.location.rootPaths match {
-      case Seq(root) => ObjectCatalog.tableAt(root).fold[LogicalPlan](lr) { t =>
-        val v =
-          if (!Txn.snapshotActive(spark)) TableStore.current(spark, t.dir)
-          else {
-            val pin = Txn.pinned(spark, s"tablever:${t.dir}", TableStore.current(spark, t.dir))
-              .asInstanceOf[Option[Commit.Version]]
-            // remember the TableDef too: a concurrent DROP TABLE removes
-            // the catalog object, and this block's later statements then
-            // resolve the bare name from this pin (ResolveIndexRelation)
-            Txn.pinned(spark, s"tabledef:${t.qname.toLowerCase}", (t, pin))
-            pin
-          }
-        lr.copy(relation = h.copy(location = TableStore.files(root, v))(h.sparkSession))
-      }
+      case Seq(root) => Commit.perStatement(s"tablefiles:$root")(indexOf(root))
+        .filterNot(_ eq h.location)
+        .fold[LogicalPlan](lr)(i => lr.copy(relation = h.copy(location = i)(h.sparkSession)))
       case _ => lr
+    }
+
+  /** The scan index of the version of the catalog table at `root` that a
+    * statement reads; None when `root` is no catalog table's directory. */
+  private def indexOf(root: org.apache.hadoop.fs.Path): Option[TableStore.TableFiles] =
+    ObjectCatalog.tableAt(root).map { t =>
+      val v =
+        if (!Txn.snapshotActive(spark)) TableStore.current(spark, t.dir)
+        else {
+          val pin = Txn.pinned(spark, s"tablever:${t.dir}", TableStore.current(spark, t.dir))
+            .asInstanceOf[Option[Commit.Version]]
+          // remember the TableDef too: a concurrent DROP TABLE removes
+          // the catalog object, and this block's later statements then
+          // resolve the bare name from this pin (ResolveIndexRelation)
+          Txn.pinned(spark, s"tabledef:${t.qname.toLowerCase}", (t, pin))
+          pin
+        }
+      TableStore.files(root, v)
     }
 }

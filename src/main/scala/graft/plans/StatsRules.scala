@@ -49,6 +49,13 @@ private[plans] object StatsShapes {
     }
   }
 
+  /** The composite sidecar of the index at `dir` a plan may answer from
+    * without the base table: the one the statement's version names, when
+    * that version is byte-fresh with `rel` ([[indexFresh]]). */
+  def freshSidecar(spark: SparkSession, dir: String, rel: org.apache.spark.sql.sources.BaseRelation) =
+    Some(rel).collect { case h: HadoopFsRelation if indexFresh(spark, dir, h) => h }
+      .flatMap(_ => graft.index.FieldStore.current(spark, dir))
+
   /** Row-count expression → output expressions, when the whole aggregate
     * list is countable from a row count alone: count(*) / count(1) /
     * count(<non-null literal>) count every row, count(NULL) is always 0,

@@ -784,11 +784,9 @@ object Surface {
     * anti-join against the stored graph's ids). */
   def vecHnswRefresh(s: SparkSession, dir: String): DataFrame = {
     val key = s"$dir-emb-hnsw-refresh"
-    val graphDir = graft.index.HnswIndex.dirFor(key)
-    graft.index.HnswIndex.ensure(s,
+    val present = graft.index.HnswIndex.ensure(s,
       Tables.embeddings(s, dir).filter(col("vec_id") % 3 < 2)
-        .select(col("vec_id"), col("embedding")), key)
-    val present = s.read.parquet(s"$graphDir/graph").select("vec_id")
+        .select(col("vec_id"), col("embedding")), key).graph.select("vec_id")
     val delta = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
       .join(present, Seq("vec_id"), "left_anti")
     graft.index.HnswIndex.append(s, key, delta)

@@ -4,7 +4,7 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import graft.index.IndexStore
+import graft.index.{FieldStore, IndexStore}
 
 /** Registry of expression-key indexes for claim-by-semantic-equality: maps
   * (table root path, normalized expression SQL, analyzer) → (segment dir,
@@ -65,20 +65,8 @@ object IndexCatalog {
   /** Secondary (point-lookup) index: the PkIndex manifest dir. */
   final case class PkEntry(dir: String)
 
-  /** Composite-index sidecar: typed indexed FIELDS + INCLUDE columnstore
-    * (reference InvertedIndexColumnInfo: typed posting lists +
-    * store_values, inverted_index_indexed_vs_included.test). One per scan
-    * root — the claim rules use it to (a) serve equality/range predicates
-    * on indexed fields from the field datasets and (b) serve covered
-    * projections from the stored columnstore with no base-table access. */
-  final case class FieldsEntry(dir: String, idCol: String,
-      fields: Seq[String], included: Seq[String])
-
   private[search] val text = TrieMap.empty[(String, String, String), TextEntry]
 
-  /** Registered (root, column, analyzer) keys — diagnostics only. */
-  def debugTextKeys: Seq[String] =
-    text.keysIterator.map { case (r, c, a) => s"$r | $c | $a" }.toSeq
   // keyed (root, column, metric, cacheKey): several indexes may cover one
   // (column, metric) — e.g. a plain AND a quantized IVF over the same
   // column (inverted_index_multi_vector_ivf.test) — and a 3-tuple key let
@@ -86,58 +74,56 @@ object IndexCatalog {
   // COMPACT then failed with "no ANN registration")
   private[search] val ann = TrieMap.empty[(String, String, String, String), AnnEntry]
   private[search] val pk = TrieMap.empty[(String, String), PkEntry]
-  private[search] val fieldSide = TrieMap.empty[String, FieldsEntry]
 
-  def registerFields(tableRoot: String, e: FieldsEntry): Unit =
-    fieldSide.put(tableRoot, e)
-
-  def lookupFields(tableRoot: String): Option[FieldsEntry] = {
+  /** The directories of the indexes over `tableRoot` that can carry a
+    * composite sidecar (typed FIELDS + INCLUDE columnstore, [[FieldStore]]
+    * — the reference's InvertedIndexColumnInfo typed posting lists and
+    * store_values): its full text indexes, then its vector indexes. */
+  def sidecarDirs(tableRoot: String): Seq[String] = {
     CatalogStore.ensureLoaded()
-    fieldSide.get(tableRoot)
+    text.collect { case ((r, _, _), e) if r == tableRoot && e.predicate.isEmpty => e.segDir }
+      .toSeq.sorted ++
+      ann.collect { case ((r, _, _, _), e) if r == tableRoot =>
+        graft.index.IvfIndex.dirFor(e.cacheKey, e.lists) }.toSeq.sorted
   }
 
-  def unregisterFields(dir: String): Unit =
-    fieldSide.filterInPlace((_, e) => e.dir != dir)
-
-  /** The protected SOURCE root an index-artifact path answers to, if any:
-    * the table root whose registered text / expression / PK / sidecar /
-    * IVF artifact contains `path`. RBAC maps claimed plans' artifact
-    * scans back through this — an index over a protected table is as
-    * protected as the table (graft.plans.RbacCheck). */
-  def sourceRootOfArtifact(path: String): Option[String] =
-    sourceOfArtifact(path).map(_._1)
-
   /** `(source root, source columns the artifact materializes)` for an
-    * index-artifact path. The column set feeds RBAC's COLUMN grants: a
+    * index-artifact path: the table root whose registered text /
+    * expression / PK / sidecar / IVF artifact contains `path`. RBAC maps
+    * claimed plans' artifact scans back through this — an index over a
+    * protected table is as protected as the table (graft.plans.RbacCheck).
+    * The column set feeds RBAC's COLUMN grants: a
     * text index's postings reveal the indexed column's content, so the
     * scan counts as reading that column (plus the id it joins back on);
     * the covering sidecar's stored/field datasets carry source columns
     * verbatim. `Set("*")` marks artifacts whose provenance is an
     * arbitrary expression (expression-key indexes) — only a table-level
     * grant covers those. */
-  def sourceOfArtifact(path: String): Option[(String, Set[String])] = {
+  def sourceOfArtifact(spark: SparkSession, path: String): Option[(String, Set[String])] = {
     CatalogStore.ensureLoaded()
     def owns(dir: String) = path == dir || path.startsWith(dir + "/")
+    // a composite sidecar's roots sit inside the index it rides on: a
+    // field dataset holds its field, the columnstore the INCLUDE columns
+    def side(dir: String, idCol: String): Option[Set[String]] =
+      path.stripPrefix(dir + "/").split("/").toSeq match {
+        case r +: f +: _ if r.startsWith("fields-") => Some(Set(f, idCol))
+        case r +: _ if FieldStore.isRoot(r) => Some(graft.index.Commit.current(spark, dir)
+          .flatMap(FieldStore.spec).fold(Set("*"))(s => (s.fields ++ s.included).toSet + idCol))
+        case _ => None
+      }
     text.collectFirst {
-      case ((root, c, _), e) if owns(e.segDir) => (root, Set(c, e.idCol)) }
+      case ((root, c, _), e) if owns(e.segDir) =>
+        (root, side(e.segDir, e.idCol).getOrElse(Set(c, e.idCol))) }
       .orElse(ExprIndexes.reg.collectFirst {
         case ((root, _, _), (segDir, _)) if owns(segDir) => (root, Set("*")) })
       .orElse(pk.collectFirst {
         case ((root, c), e) if owns(e.dir) => (root, Set(c)) })
-      .orElse(fieldSide.collectFirst {
-        case (root, e) if owns(e.dir) =>
-          val cols =
-            if (path.contains("/stored")) e.included.toSet + e.idCol
-            else "/field=(\\w+)".r.findFirstMatchIn(path) match {
-              case Some(m) => Set(m.group(1), e.idCol)
-              case None => e.fields.toSet ++ e.included.toSet + e.idCol
-            }
-          (root, cols) })
       .orElse(ann.collectFirst {
         case ((root, _, _, _), e)
             if owns(graft.index.IvfIndex.dirFor(e.cacheKey)) ||
               path.contains("/" + e.cacheKey.replaceAll("[^A-Za-z0-9._-]+", "_") + "-ivf") =>
-          (root, Set(e.embCol, e.idCol)) })
+          (root, side(graft.index.IvfIndex.dirFor(e.cacheKey, e.lists), e.idCol)
+            .getOrElse(Set(e.embCol, e.idCol))) })
   }
 
   def registerText(tableRoot: String, column: String, analyzer: String,
@@ -488,7 +474,7 @@ object Ddl {
       throw new IllegalStateException(s"no ANN registration for ${e.dir}"))
     val fp = sourceFingerprint(spark, e.view)
     graft.index.IvfIndex.rebuild(spark, e.dir, IndexCatalog.annSource(spark, root, annEntry),
-      annEntry.lists, fp)
+      annEntry.lists, fp, FieldStore.Restage(spark.table(e.view)))
     ensureQuant(spark, e.dir, annEntry.quant, annEntry.pqM)
     spark.catalog.refreshByPath(e.dir)
   }
@@ -738,9 +724,9 @@ object Ddl {
           s"$baseKey-part${java.lang.Integer.toHexString(p.hashCode).takeRight(8)}"
         case None => baseKey
       }
-      // the composite sidecar (typed fields + INCLUDE columnstore) always
-      // lives NEXT to the text index dir, so DROP/REFRESH/DESCRIBE find it
-      // from the catalog row alone
+      // the composite sidecar (typed fields + INCLUDE columnstore) is part
+      // of the text index's versions, so DROP/REFRESH/DESCRIBE find it from
+      // the catalog row alone
       if ((fieldCols.nonEmpty || includeCols.nonEmpty) && predicate.nonEmpty)
         throw new IllegalArgumentException(
           "FIELDS/INCLUDE are not supported on a partial (WHERE) index")
@@ -752,18 +738,17 @@ object Ddl {
       // DROP removes the catalog row, so a recreate always takes the full
       // path and rebuilds
       val fastDir = IndexStore.dirFor(cacheKey, textCol, analyzer)
-      val fieldsDir = fastDir + "-fields"
       val fieldsWanted = fieldCols.nonEmpty || includeCols.nonEmpty
       if (catalog.get(name).exists(_.sameSpec(
             Entry(fastDir, view, keySpecOf, analyzer, predicate = predicate))) &&
           IndexStore.durable(spark, fastDir) &&
-          (!fieldsWanted || graft.index.FieldStore.exists(spark, fieldsDir))) {
+          (!fieldsWanted || FieldStore.latest(spark, fastDir).exists(s =>
+            s.spec.fields == fieldCols && s.spec.included == includeCols))) {
         if (sessionReady.putIfAbsent(name, true).isEmpty) {
           IndexStore.registerViews(spark, fastDir, name)
           IndexStore.registerStatsTables(spark, fastDir, name)
           if (fieldsWanted)
-            graft.index.FieldStore.registerStatsTable(spark, fieldsDir,
-              s"${name}_stored_tbl")
+            FieldStore.registerStatsTable(spark, fastDir, s"${name}_stored_tbl")
         }
         // the claim-catalog slot may be vacant even when the artifact is
         // durable (e.g. this index's registration was refused while a FULL
@@ -771,62 +756,47 @@ object Ddl {
         // vacates the slot and the persisted catalog carries no row for
         // it). Re-offer the registration; registerText's no-downgrade rule
         // still keeps a live full index in place.
-        claimSafeRoot(spark, view, Seq(textCol, idCol)).foreach { root =>
-          IndexCatalog.registerText(root, textCol, analyzer, fastDir, idCol, predicate)
-          if (fieldsWanted)
-            IndexCatalog.registerFields(root,
-              IndexCatalog.FieldsEntry(fieldsDir, idCol, fieldCols, includeCols))
-        }
+        claimSafeRoot(spark, view, Seq(textCol, idCol)).foreach(
+          IndexCatalog.registerText(_, textCol, analyzer, fastDir, idCol, predicate))
         return result(spark, s"created $name")
       }
-      // segment compression codec persists BEFORE the first segment write
-      // so the backfill itself honors it (reference compression option)
-      opts.get("compression").foreach(c =>
-        IndexStore.setCompression(spark, fastDir, c))
       // the predicate is a WHERE filter on the backfill scan — Catalyst
       // pushes it into the parquet read (the reference shows it as a
       // Column Filter in the backfill SEQ_SCAN, inverted_index_partial.test)
       val fp = sourceFingerprint(spark, view)
       val source = predicate.foldLeft(spark.table(view))(
         (df, p) => df.filter(org.apache.spark.sql.functions.expr(p)))
+      // typed-field postings + INCLUDE columnstore sidecar: one linear
+      // column-pruned pass over the source per covered column family,
+      // staged into the version the build publishes; per-column
+      // hyperloglog option: NDV tracked for these INCLUDE columns and
+      // exposed to the CBO (reference inverted_index_hyperloglog_option.test)
+      val sidecar =
+        if (!fieldsWanted) FieldStore.Carry
+        else FieldStore.Restage(spark.table(view), Some(FieldStore.Spec(idCol, fieldCols,
+          includeCols, opts.get("hyperloglog").toSeq.flatMap(_.split(",")).map(_.trim)
+            .filter(_.nonEmpty))))
       // segment_docs_max: commit-on-flush backfill rotation (reference
       // online_create_index_rotation.test) — many independently committed
-      // segments instead of one final publish
+      // segments instead of one final publish. The segment codec
+      // (reference compression option) is recorded by the first build.
       opts.get("segment_docs_max").map(_.toLong) match {
         case Some(max) =>
           IndexStore.ensureRotating(spark, source, cacheKey, idCol, textCol,
-            analyzer, max, sourceFp = fp)
+            analyzer, max, sourceFp = fp, compression = opts.get("compression"),
+            sidecar = sidecar)
         case None =>
           IndexStore.ensure(spark, source, cacheKey, idCol, textCol, analyzer,
-            sourceFp = fp)
+            sourceFp = fp, compression = opts.get("compression"), sidecar = sidecar)
       }
       val dir = fastDir
       IndexStore.registerViews(spark, dir, name)
       IndexStore.registerStatsTables(spark, dir, name) // CBO sees the manifest stats
-      // typed-field postings + INCLUDE columnstore sidecar: one linear
-      // column-pruned pass over the source per covered column family
-      if (fieldsWanted) {
-        graft.index.FieldStore.build(spark, spark.table(view), fieldsDir,
-          idCol, fieldCols, includeCols,
-          // coherence pin: the claim rules serve covered reads only while
-          // the text index's segment list still matches this fingerprint
-          Map("segfp" -> IndexStore.listSegments(spark, fastDir).mkString(",")),
-          // per-column hyperloglog option: NDV tracked for these INCLUDE
-          // columns and exposed to the CBO (reference
-          // inverted_index_hyperloglog_option.test)
-          ndvCols = opts.get("hyperloglog").toSeq
-            .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty))
-        graft.index.FieldStore.registerStatsTable(spark, fieldsDir,
-          s"${name}_stored_tbl")
-      }
+      if (fieldsWanted) FieldStore.registerStatsTable(spark, dir, s"${name}_stored_tbl")
       // the claim-rule catalog: any ts_match / facet over (this scan root,
       // this column, this analyzer) now resolves to the segments just built
-      claimSafeRoot(spark, view, Seq(textCol, idCol)).foreach { root =>
-        IndexCatalog.registerText(root, textCol, analyzer, dir, idCol, predicate)
-        if (fieldsWanted)
-          IndexCatalog.registerFields(root,
-            IndexCatalog.FieldsEntry(fieldsDir, idCol, fieldCols, includeCols))
-      }
+      claimSafeRoot(spark, view, Seq(textCol, idCol)).foreach(
+        IndexCatalog.registerText(_, textCol, analyzer, dir, idCol, predicate))
       catalog.put(name,
         Entry(dir, view, keySpecOf, analyzer, idCol = idCol, predicate = predicate))
       sessionReady.put(name, true)
@@ -880,7 +850,7 @@ object Ddl {
       val lists = opts.get("lists").map(_.toInt).getOrElse(0)
       // INCLUDE → covered kNN: the reference's ivf opclass implicitly sets
       // store_values (inverted_index_ann_include.test); here the stored
-      // copies live in the shared FieldStore sidecar next to the IVF dir
+      // copies are a FieldStore sidecar in the IVF index's versions
       val includeCols = Option(includeRaw).toSeq
         .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
       val vecSpec =
@@ -888,18 +858,12 @@ object Ddl {
         else s"$embCol include(${includeCols.mkString(",")})"
       // idempotent fast path, same contract as the search-index branch
       val vecDir = graft.index.IvfIndex.dirFor(effKey, lists)
-      val vecFieldsDir = vecDir + "-fields"
       if (catalog.get(name).exists(_.sameSpec(
             Entry(vecDir, view, vecSpec, s"vector:$metric"))) &&
           graft.index.IvfIndex.available(spark, effKey, lists) &&
-          (includeCols.isEmpty || graft.index.FieldStore.exists(spark, vecFieldsDir))) {
-        scanRootOf(spark, view).foreach { root =>
-          if (includeCols.nonEmpty)
-            IndexCatalog.registerFields(root,
-              IndexCatalog.FieldsEntry(vecFieldsDir, idCol, Seq.empty, includeCols))
-        }
+          (includeCols.isEmpty ||
+            FieldStore.latest(spark, vecDir).exists(_.spec.included == includeCols)))
         return result(spark, s"created $name")
-      }
       val root = scanRootOf(spark, view).getOrElse(
         throw new IllegalArgumentException(
           s"CREATE VECTOR INDEX: view $view is not a bare parquet scan"))
@@ -925,14 +889,9 @@ object Ddl {
         }
       }
       IndexCatalog.registerAnn(root, embCol, metric, entry)
-      if (includeCols.nonEmpty) {
-        graft.index.FieldStore.build(spark, spark.table(view), vecFieldsDir,
-          idCol, Seq.empty, includeCols,
-          sourceFingerprint(spark, view).map("srcfp" -> _).toMap)
-        IndexCatalog.registerFields(root,
-          IndexCatalog.FieldsEntry(vecFieldsDir, idCol, Seq.empty, includeCols))
-      }
-      IndexStore.recordSourceFp(spark, vecDir, fp)
+      IndexStore.recordSourceFp(spark, vecDir, fp,
+        if (includeCols.isEmpty) FieldStore.Carry
+        else FieldStore.Restage(spark.table(view), Some(FieldStore.Spec(idCol, Nil, includeCols))))
       catalog.put(name, Entry(vecDir, view, vecSpec, s"vector:$metric",
         annKey = Some(effKey), idCol = idCol))
       CatalogStore.persist(spark)
@@ -967,9 +926,6 @@ object Ddl {
           p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
           IndexCatalog.unregisterText(e.dir)
           IndexCatalog.unregisterPk(e.dir)
-          graft.index.FieldStore.drop(spark, e.dir + "-fields")
-          IndexCatalog.unregisterFields(e.dir + "-fields")
-          CatalogStore.dropped.put(e.dir + "-fields", true)
           // tombstone for the persist merge: another session's catalog row
           // pointing at this (now deleted) artifact must not be resurrected
           CatalogStore.dropped.put(e.dir, true)
@@ -1126,8 +1082,11 @@ object Ddl {
                 .fold(Seq(0L, 0L, 0L))(r => Seq(r.getLong(0), r.getLong(1), r.getLong(2)))
               val n = nNew + nChanged
               // tombstones scope to the current newest segment and the
-              // re-indexed content lands in a NEWER one; both, and the
-              // source fingerprint, publish as one version
+              // re-indexed content lands in a NEWER one; both, the source
+              // fingerprint and a composite sidecar restaged from the
+              // source (sorted copies: one linear rebuild, which folds
+              // removals and changed INCLUDE values in), publish as one
+              // version
               IndexStore.refresh(spark, e.dir,
                 Some(classified.filter(fcol("__cls").isin("removed", "changed"))
                   .select(fcol("__cid").as("doc_id")))
@@ -1145,30 +1104,13 @@ object Ddl {
                   (graft.index.InvertedIndex.build(toAdd, idCol, keyCol, e.analyzer),
                     toAdd.select(fcol(idCol).as("doc_id"), fcol("__fp").as("content_fp")))
                 },
-                fp)
+                fp, FieldStore.Restage(spark.table(e.view)))
               n
             } finally classified.unpersist()
           spark.catalog.refreshByPath(e.dir)
           IndexStore.registerViews(spark, e.dir, name)
           IndexStore.registerStatsTables(spark, e.dir, name)
-          // the composite sidecar is sorted COPIES, not merged segments:
-          // refresh = one linear rebuild from the source (cheaper than an
-          // incremental merge would be to maintain, and it folds source
-          // deletes in for free)
-          val sidecar = e.dir + "-fields"
-          if (added > 0 && graft.index.FieldStore.exists(spark, sidecar)) {
-            val m = graft.index.FieldStore.readManifest(spark, sidecar)
-            graft.index.FieldStore.build(spark, spark.table(e.view), sidecar,
-              m.idCol, m.fields, m.included,
-              Map("segfp" -> IndexStore.listSegments(spark, e.dir).mkString(",")),
-              // the NDV opt-in rides the manifest, so REFRESH re-tracks the
-              // same columns' statistics the CREATE declared
-              ndvCols = m.extras.get("ndv").toSeq
-                .flatMap(_.split(",")).filter(_.nonEmpty))
-            graft.index.FieldStore.registerStatsTable(spark, sidecar,
-              s"${name}_stored_tbl")
-            spark.catalog.refreshByPath(sidecar)
-          }
+          FieldStore.registerStatsTable(spark, e.dir, s"${name}_stored_tbl")
           result(spark, s"refreshed $name (+$added docs)")
         case Some(e) =>
           // vector index: assign new vectors to the EXISTING centroids and
@@ -1224,14 +1166,16 @@ object Ddl {
           if (removed > 0 || changed > 0) {
             // the rebuild publishes as one version beside the old one: a
             // kNN planned before it still reads the vectors it dropped
-            graft.index.IvfIndex.rebuild(spark, e.dir, source, entry.lists, fp)
+            graft.index.IvfIndex.rebuild(spark, e.dir, source, entry.lists, fp,
+              FieldStore.Restage(spark.table(e.view)))
             ensureQuant(spark, e.dir, entry.quant, entry.pqM)
             spark.catalog.refreshByPath(e.dir)
             result(spark, s"refreshed $name (rebuilt: -$removed vectors, " +
               s"~$changed updated)")
           } else if (newN == 0) {
-            // nothing to reconcile: the classifier job IS the whole refresh
-            IndexStore.recordSourceFp(spark, e.dir, fp)
+            // no vector to reconcile: the classifier job is the whole
+            // refresh, unless a source change restages the sidecar
+            IndexStore.recordSourceFp(spark, e.dir, fp, FieldStore.Restage(spark.table(e.view)))
             spark.catalog.refreshByPath(e.dir)
             result(spark, s"refreshed $name (+0 vectors)")
           } else {
@@ -1240,7 +1184,8 @@ object Ddl {
             // the append re-encodes the quantized code families
             // (sq8/sq4/pq/rabitq) over the grown vectors in the same version
             val (added, reclustered) =
-              graft.index.IvfIndex.append(spark, e.dir, newVecs, sourceFp = fp)
+              graft.index.IvfIndex.append(spark, e.dir, newVecs, sourceFp = fp,
+                sidecar = FieldStore.Restage(spark.table(e.view)))
             IndexStore.recordSourceFp(spark, e.dir, fp)
             spark.catalog.refreshByPath(e.dir)
             result(spark, s"refreshed $name (+$added vectors)" +
@@ -1271,23 +1216,21 @@ object Ddl {
             else stalenessRows(spark, e.dir, e.view)
           val compression = IndexStore.segmentCompression(spark, e.dir)
             .map("compression" -> _).toSeq
-          val sidecar =
-            if (graft.index.FieldStore.exists(spark, e.dir + "-fields")) {
-              val m = graft.index.FieldStore.readManifest(spark, e.dir + "-fields")
-              // per-column statistics (approx_unique only for the
-              // hyperloglog-opted columns — reference stats(col) surface)
-              val cstats = graft.index.FieldStore
-                .colStats(spark, e.dir + "-fields").toSeq
-                .flatMap { case (rc, stats) =>
-                  ("stored_rowcount" -> rc.toString) +:
-                    stats.toSeq.sortBy(_._1).map { case (k, v) =>
-                      (if (k.startsWith("ndv."))
-                        "approx_unique." + k.stripPrefix("ndv.") else k) -> v
-                    }
-                }
+          val sidecar = graft.index.Commit.current(spark, e.dir).toSeq.flatMap { v =>
+            // per-column statistics (approx_unique only for the
+            // hyperloglog-opted columns — reference stats(col) surface)
+            val cstats = FieldStore.of(spark, v).flatMap(_.colStats).toSeq
+              .flatMap { case (rc, stats) =>
+                ("stored_rowcount" -> rc.toString) +:
+                  stats.toSeq.sortBy(_._1).map { case (k, v) =>
+                    (if (k.startsWith("ndv."))
+                      "approx_unique." + k.stripPrefix("ndv.") else k) -> v
+                  }
+              }
+            FieldStore.spec(v).toSeq.flatMap(m =>
               Seq("indexed_fields" -> m.fields.mkString(","),
-                "included_columns" -> m.included.mkString(",")) ++ cstats
-            } else Seq.empty
+                "included_columns" -> m.included.mkString(","))) ++ cstats
+          }
           (base ++ stats ++ sidecar ++ compression ++ staleness)
             .toDF("stat", "value")
         case None =>
@@ -1393,9 +1336,8 @@ object Ddl {
           // table stats for every sidecar on this view
           val done = catalog.toSeq.collect {
             case (n, e) if e.view.equalsIgnoreCase(target) &&
-              graft.index.FieldStore.recomputeStats(spark, e.dir + "-fields") =>
-              graft.index.FieldStore.registerStatsTable(spark,
-                e.dir + "-fields", s"${n}_stored_tbl")
+              FieldStore.recomputeStats(spark, e.dir) =>
+              FieldStore.registerStatsTable(spark, e.dir, s"${n}_stored_tbl")
               n
           }
           if (done.isEmpty) throw new IllegalArgumentException(
@@ -1580,7 +1522,6 @@ object CatalogStore {
     * fresh session would. */
   private[graft] def reset(): Unit = synchronized {
     IndexCatalog.text.clear(); IndexCatalog.ann.clear(); IndexCatalog.pk.clear()
-    IndexCatalog.fieldSide.clear()
     ExprIndexes.reg.clear(); Ddl.catalog.clear(); Ddl.sessionReady.clear()
     dropped.clear()
     loadedOnce = false
@@ -1638,12 +1579,6 @@ object CatalogStore {
     IndexCatalog.pk.foreach { case ((root, c), e) =>
       add(s"pk|$root|$c", row("kind" -> "pk", "root" -> root, "column" -> c,
         "dir" -> e.dir))
-    }
-    IndexCatalog.fieldSide.foreach { case (root, e) =>
-      add(s"fields|$root", row("kind" -> "fields", "root" -> root,
-        "dir" -> e.dir, "idCol" -> e.idCol,
-        "fields" -> e.fields.mkString(","),
-        "included" -> e.included.mkString(",")))
     }
     Ddl.catalog.foreach { case (n, e) =>
       add(s"ddl|$n", row((Seq("kind" -> "ddl", "name" -> n, "dir" -> e.dir,
@@ -1717,11 +1652,6 @@ object CatalogStore {
         case Some("pk") =>
           IndexCatalog.pk.putIfAbsent((s("root").get, s("column").get),
             IndexCatalog.PkEntry(s("dir").get))
-        case Some("fields") =>
-          IndexCatalog.fieldSide.putIfAbsent(s("root").get,
-            IndexCatalog.FieldsEntry(s("dir").get, s("idCol").get,
-              s("fields").toSeq.flatMap(_.split(",")).filter(_.nonEmpty),
-              s("included").toSeq.flatMap(_.split(",")).filter(_.nonEmpty)))
         case Some("ddl") =>
           Ddl.catalog.putIfAbsent(s("name").get,
             Ddl.Entry(s("dir").get, s("view").get, s("keySpec").get,

@@ -37,6 +37,15 @@ class TableRetentionSpec extends AnyFunSuite {
 
   private def files(dir: String): Set[String] = Commit.latest(spark, dir).get.files.toSet
 
+  /** The staged-write directories under `_data` that the latest version
+    * names no file of. */
+  private def unnamedStaging(dir: String): Set[String] = {
+    val data = new Path(dir, "_data")
+    val named = files(dir).map(_.split("/").take(2).mkString("/"))
+    data.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(data)
+      .map(s => s"_data/${s.getPath.getName}").toSet -- named
+  }
+
   private def withTable(name: String)(body: (String, String) => Unit): Unit = {
     val t = s"${name}_$tag"
     spark.sql(s"CREATE TABLE $t (pk INTEGER, v INTEGER)")
@@ -53,8 +62,10 @@ class TableRetentionSpec extends AnyFunSuite {
       val before = pks(t)
       PublishCrash(spark, dir)(spark.sql(s"INSERT INTO $t VALUES (100, 1)"))
       assert(pks(t) == before)
+      assert(unnamedStaging(dir).isEmpty, "the failed INSERT deletes what it staged")
       PublishCrash(spark, dir)(spark.sql(s"DELETE FROM $t WHERE pk = 3"))
       assert(pks(t) == before)
+      assert(unnamedStaging(dir).isEmpty, "the failed DELETE deletes what it staged")
       spark.sql(s"INSERT INTO $t VALUES (100, 1)")
       spark.sql(s"DELETE FROM $t WHERE pk = 3")
       assert(pks(t) == before + 100 - 3)

@@ -37,7 +37,6 @@ class HnswIndexSpec extends AnyFunSuite {
     val f = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     f.delete(new org.apache.hadoop.fs.Path(dir), true)
-    HnswIndex.invalidate(dir)
     val twoThirds = embs.filter(col("vec_id") % 3 < 2).select("vec_id", "embedding")
     val rest = embs.filter(col("vec_id") % 3 === 2).select("vec_id", "embedding")
     HnswIndex.ensure(spark, twoThirds, key)
@@ -59,6 +58,38 @@ class HnswIndexSpec extends AnyFunSuite {
     val beam = idx.knn(q, 10, ef = 128).collect().map(_.getLong(0)).toSet
     assert((beam & want.toSet).size >= 9, s"beam recall dropped: $beam vs $want")
     f.delete(new org.apache.hadoop.fs.Path(dir), true)
+  }
+
+  test("appends publish delta graphs until a rebuild replaces them; exhaustive search stays exact") {
+    import org.apache.spark.sql.functions._
+    val key = s"hnsw-rebuild-spec-${System.nanoTime()}"
+    val dir = HnswIndex.dirFor(key)
+    def part(r: Int) = embs.filter(col("vec_id") % 4 === r).select("vec_id", "embedding")
+    try {
+      HnswIndex.ensure(spark, part(0).unionByName(part(1)), key)
+      val v1 = Commit.current(spark, dir).get
+      // a delta graph is a root published beside the existing ones
+      assert(HnswIndex.append(spark, key, part(2)) == ((part(2).count(), false)))
+      val v2 = Commit.current(spark, dir).get
+      assert(v2.files.size == 2 && v1.files.forall(v2.files.contains), s"${v1.files} -> ${v2.files}")
+      // three partition graphs exceed twice what the corpus needs: one
+      // rebuilt graph replaces every root
+      assert(HnswIndex.append(spark, key, part(3)) == ((part(3).count(), true)))
+      val v3 = Commit.current(spark, dir).get
+      assert(v3.files.size == 1 && !v2.files.contains(v3.files.head), s"${v2.files} -> ${v3.files}")
+      val idx = HnswIndex.ensure(spark, sys.error("must load, not rebuild"), key)
+      val all = embs.select("vec_id", "embedding").collect()
+        .map(r => r.getLong(0) -> r.getSeq[Float](1))
+      assert(idx.graph.count() == all.length)
+      Seq(0L, 5L, 42L).foreach { id =>
+        val q = all.find(_._1 == id).get._2
+        val want = all.map { case (i, e) => (l2sq(e, q), i) }.sorted.take(10).map(_._2).toSeq
+        assert(idx.knn(q, 10, ef = 0).collect().map(_.getLong(0)).toSeq == want)
+      }
+    } finally {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
   }
 
   test("graph serialization round-trips through rows") {

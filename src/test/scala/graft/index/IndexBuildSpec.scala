@@ -118,8 +118,9 @@ class IndexBuildSpec extends AnyFunSuite {
   test("the compression option reaches every part") {
     val key = s"build-spec-zstd-$tag"
     val dir = IndexStore.dirFor(key, "text", "whitespace")
-    IndexStore.setCompression(spark, dir, "zstd")
-    IndexStore.ensure(spark, docs(), key, "doc_id", "text", "whitespace")
+    IndexStore.ensure(spark, docs(), key, "doc_id", "text", "whitespace",
+      compression = Some("zstd"))
+    assert(IndexStore.segmentCompression(spark, dir).contains("zstd"))
     checkSegment(segOf(dir), texts)
     Seq("postings", "termdict", "docstats", "docids").foreach { p =>
       val files = IndexFile.leafFiles(spark.sessionState.newHadoopConf(), s"${segOf(dir)}/$p")
