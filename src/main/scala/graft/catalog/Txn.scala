@@ -223,12 +223,6 @@ object Txn {
   def localVarSet(name: String, previous: Option[String]): Unit =
     running.foreach(localVarSetIn(_, name, previous))
 
-  /** Explicit-session variant (set_config captures its session — a task
-    * thread has no active-session binding to resolve through). */
-  def localVarSetFor(spark: SparkSession, name: String,
-      previous: Option[String]): Unit =
-    localVarSetIn(stateOf(spark), name, previous)
-
   private def localVarSetIn(s: SessState, name: String,
       previous: Option[String]): Unit =
     if (s.state == Active && !s.ctx.localVars.contains(name))
@@ -237,10 +231,6 @@ object Txn {
   /** Plain SET inside a block: transactional (undone by ROLLBACK only). */
   def sessionVarSet(name: String, previous: Option[String]): Unit =
     running.foreach(sessionVarSetIn(_, name, previous))
-
-  def sessionVarSetFor(spark: SparkSession, name: String,
-      previous: Option[String]): Unit =
-    sessionVarSetIn(stateOf(spark), name, previous)
 
   private def sessionVarSetIn(s: SessState, name: String,
       previous: Option[String]): Unit =

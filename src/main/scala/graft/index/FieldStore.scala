@@ -37,7 +37,7 @@ import org.apache.spark.sql.functions._
   * }}}
   *
   * A version names its sidecar when its files hold the roots numbered
-  * `at`; every write says what becomes of it ([[Policy]]). The claim rules
+  * `at`; every write says what becomes of it ([[Restage]]). The claim rules
   * read the sidecar only from a version that names it, and answer without
   * the base table only when that version is byte-fresh with the scan.
   *
@@ -63,19 +63,15 @@ object FieldStore {
   final case class Spec(idCol: String, fields: Seq[String], included: Seq[String],
       ndv: Seq[String] = Nil)
 
-  /** What a write does with the sidecar of the version it builds on. */
-  sealed trait Policy
-  /** Name it again: the write leaves the doc set alone. */
-  case object Carry extends Policy
-  /** Publish without it when the write changes the doc set and has no
-    * source to restage from (a streaming append): covered reads use the
-    * base table until a restage. */
-  case object Drop extends Policy
-  /** Restage it over `source` (CREATE, REFRESH, a vector COMPACT): with
-    * `spec`, or with the base version's spec unless the write changes
-    * nothing and the base version is synced with the same source
-    * fingerprint. No spec: [[Carry]]. */
-  final case class Restage(source: DataFrame, spec: Option[Spec] = None) extends Policy
+  /** A write's source to restage the sidecar over (CREATE, REFRESH, a
+    * vector COMPACT): with `spec`, or with the base version's spec unless
+    * the write changes nothing and the base version is synced with the
+    * same source fingerprint. A write with no source (a streaming append,
+    * a fingerprint-only publish) names the base version's sidecar again
+    * when it leaves the doc set alone, and publishes without it when it
+    * changes the doc set: covered reads then use the base table until a
+    * restage. */
+  final case class Restage(source: DataFrame, spec: Option[Spec] = None)
 
   /** The sidecar a version names: its spec and statistics, and its
     * datasets opened without a Spark job. */
@@ -146,15 +142,16 @@ object FieldStore {
   private[index] final case class Staged(roots: Seq[String], fields: Seq[(String, Any)],
       wrote: Boolean)
 
-  /** Stages the sidecar under `policy` for a write that changes the doc set
-    * (`changed`) or not, publishing the source fingerprint `sourceFp`. */
+  /** Stages the sidecar over `restage`'s source, if any, for a write that
+    * changes the doc set (`changed`) or not, publishing the source
+    * fingerprint `sourceFp`. */
   private[index] def stage(spark: SparkSession, dir: String, base: Option[Commit.Version],
-      n: Long, policy: Policy, changed: Boolean, sourceFp: Option[String]): Staged = {
+      n: Long, restage: Option[Restage], changed: Boolean, sourceFp: Option[String]): Staged = {
     val named = base.flatMap(of(spark, _))
     val carry = Staged(named.fold(Seq.empty[String])(_.roots), Nil, wrote = false)
-    policy match {
-      case Drop if changed => Staged(Nil, Nil, wrote = false)
-      case Restage(source, given) => given.orElse(base.flatMap(spec)) match {
+    restage match {
+      case None => if (changed) Staged(Nil, Nil, wrote = false) else carry
+      case Some(Restage(source, given)) => given.orElse(base.flatMap(spec)) match {
         case Some(_) if given.isEmpty && !changed && named.nonEmpty && sourceFp.nonEmpty &&
             sourceFp == base.flatMap(_.field("sourceFp")).map(_.asText) => carry
         case Some(sp) =>
@@ -162,7 +159,6 @@ object FieldStore {
             wrote = true)
         case None => carry
       }
-      case _ => carry
     }
   }
 

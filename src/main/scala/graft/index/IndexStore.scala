@@ -167,21 +167,21 @@ object IndexStore {
   private def sourceFpOf(v: Commit.Version): Option[String] = v.field("sourceFp").map(_.asText)
 
   /** Publish `fp` as the source fingerprint of the latest version of the
-    * index at `dir` (of any kind), with its sidecar as `sidecar` says,
-    * unless that changes nothing. */
+    * index at `dir` (of any kind), with its sidecar restaged over
+    * `restage`'s source when that is stale, unless that changes nothing. */
   def recordSourceFp(spark: SparkSession, dir: String, fp: Option[String],
-      sidecar: FieldStore.Policy = FieldStore.Carry): Unit =
-    Commit.latest(spark, dir).foreach(b => publish(spark, dir, Some(b), Nil, fp, sidecar))
+      restage: Option[FieldStore.Restage] = None): Unit =
+    Commit.latest(spark, dir).foreach(b => publish(spark, dir, Some(b), Nil, fp, restage))
 
   /** Publish the version after `base` naming `base`'s files, the `staged`
-    * roots and the sidecar `sidecar` leaves ([[FieldStore.stage]]), with
+    * roots and the sidecar `restage` leaves ([[FieldStore.stage]]), with
     * the source fingerprint `sourceFp` and the object fields `fields` —
     * unless nothing is staged or restaged and the fields and fingerprint
     * are the ones `base` carries. */
   private[index] def publish(spark: SparkSession, dir: String, base: Option[Commit.Version],
-      staged: Seq[String], sourceFp: Option[String], sidecar: FieldStore.Policy,
+      staged: Seq[String], sourceFp: Option[String], restage: Option[FieldStore.Restage],
       fields: (String, Any)*): Unit = {
-    val side = FieldStore.stage(spark, dir, base, Commit.nextNumber(base), sidecar,
+    val side = FieldStore.stage(spark, dir, base, Commit.nextNumber(base), restage,
       staged.nonEmpty, sourceFp)
     val newFp = sourceFp.exists(f => !base.flatMap(sourceFpOf).contains(f))
     if (staged.nonEmpty || side.wrote || fields.nonEmpty || newFp)
@@ -202,27 +202,34 @@ object IndexStore {
   /** Build-or-load the index for (table parquet dir, text column, analyzer):
     * built once, persisted across JVMs, loaded through the reader snapshot.
     * `sourceFp` is the fingerprint of `docs`' source, taken before it is
-    * read; it is published with the build, or with a version of its own
-    * when the index already exists and was synced with other bytes. */
+    * read; it is published with the build ([[loadedFp]] when the index
+    * already exists). */
   def ensure(spark: SparkSession, docs: => DataFrame, cacheKey: String,
       idCol: String, textCol: String, analyzerName: String,
       withPositions: Boolean = true, sourceFp: Option[String] = None,
       compression: Option[String] = None,
-      sidecar: FieldStore.Policy = FieldStore.Carry): InvertedIndex = {
+      restage: Option[FieldStore.Restage] = None): InvertedIndex = {
     val dir = dirFor(cacheKey, textCol, analyzerName)
-    if (sourceFp.nonEmpty || !durable(spark, dir) || sidecar != FieldStore.Carry)
-      commit(spark, dir, sourceFp, sidecar, compression) { (snap, codec, _) =>
-        if (snap.nonEmpty) Seq.empty
-        else {
-          val d = docs
-          val idx = InvertedIndex.build(d, idCol, textCol, analyzerName, withPositions)
-          writeSegment(idx, dir, 0, Some(d.select(col(idCol).as("doc_id"),
-            xxhash64(col(textCol)).as("content_fp"))), codec)
-          Seq(segName(0))
-        }
+    if (sourceFp.nonEmpty || !durable(spark, dir) || restage.nonEmpty)
+      commit(spark, dir, loadedFp(spark, dir, sourceFp), restage, compression) {
+        (snap, codec, _) =>
+          if (snap.nonEmpty) Seq.empty
+          else {
+            val d = docs
+            val idx = InvertedIndex.build(d, idCol, textCol, analyzerName, withPositions)
+            writeSegment(idx, dir, 0, Some(d.select(col(idCol).as("doc_id"),
+              xxhash64(col(textCol)).as("content_fp"))), codec)
+            Seq(segName(0))
+          }
       }
     load(spark, dir)
   }
+
+  /** The source fingerprint a build-or-load publishes for `fp`: a load
+    * re-indexes nothing, so an existing index keeps the one it was synced
+    * with, and only an index built without one adopts `fp`. */
+  private def loadedFp(spark: SparkSession, dir: String, fp: Option[String]): Option[String] =
+    Commit.latest(spark, dir).fold(fp)(v => sourceFpOf(v).orElse(fp))
 
   /** Convenience: the standard documents-table index. */
   def documents(spark: SparkSession, sfDir: String,
@@ -329,11 +336,11 @@ object IndexStore {
   def ensureRotating(spark: SparkSession, docs: => DataFrame, cacheKey: String,
       idCol: String, textCol: String, analyzerName: String,
       docsMax: Long, sourceFp: Option[String] = None, compression: Option[String] = None,
-      sidecar: FieldStore.Policy = FieldStore.Carry): InvertedIndex = {
+      restage: Option[FieldStore.Restage] = None): InvertedIndex = {
     val dir = dirFor(cacheKey, textCol, analyzerName)
     // the version that records the backfill's wave count ends it
     if (Commit.latest(spark, dir).exists(_.field("backfill").nonEmpty))
-      recordSourceFp(spark, dir, sourceFp, sidecar)
+      recordSourceFp(spark, dir, loadedFp(spark, dir, sourceFp), restage)
     else {
       val d = docs
       val n = d.count()
@@ -348,49 +355,44 @@ object IndexStore {
           org.apache.spark.sql.functions.pmod(
             org.apache.spark.sql.functions.hash(col(idCol)),
             org.apache.spark.sql.functions.lit(waves)) === w)
-        Metrics.timed(dir, "commit") {
-          commit(spark, dir, sidecar = FieldStore.Drop, compression = compression) {
-            (snap, codec, _) =>
-              val next = nextSeg(snap)
-              writeSegment(InvertedIndex.build(wave, idCol, textCol, analyzerName), dir, next,
-                Some(wave.select(col(idCol).as("doc_id"), xxhash64(col(textCol)).as("content_fp"))),
-                codec)
-              Seq(segName(next))
-          }
-        }
+        appendSegment(InvertedIndex.build(wave, idCol, textCol, analyzerName), dir,
+          Some(wave.select(col(idCol).as("doc_id"), xxhash64(col(textCol)).as("content_fp"))),
+          compression = compression)
       }
-      publish(spark, dir, Commit.latest(spark, dir), Nil, sourceFp, sidecar, "backfill" -> waves)
+      publish(spark, dir, Commit.latest(spark, dir), Nil, sourceFp, restage, "backfill" -> waves)
     }
     load(spark, dir)
   }
 
-  /** Append a new segment (streaming ingest / incremental refresh). A
+  /** Append a new segment (streaming ingest / incremental refresh / a
+    * backfill wave, whose first one records the codec `compression`). A
     * streaming micro-batch passes its `batch` id, recorded in the version
     * that publishes the segment ([[batchCommitted]]). The version names no
     * composite sidecar: covered reads use the base table until the next
     * REFRESH restages it. */
   def appendSegment(idx: InvertedIndex, dir: String, docIds: Option[DataFrame] = None,
-      batch: Option[Long] = None): Unit = Metrics.timed(dir, "commit") {
-    commit(idx.postings.sparkSession, dir, sidecar = FieldStore.Drop, batch = batch) {
-      (snap, codec, _) =>
-        val next = nextSeg(snap)
-        writeSegment(idx, dir, next, docIds, codec)
-        Seq(segName(next))
+      batch: Option[Long] = None, compression: Option[String] = None): Unit =
+    Metrics.timed(dir, "commit") {
+      commit(idx.postings.sparkSession, dir, batch = batch, compression = compression) {
+        (snap, codec, _) =>
+          val next = nextSeg(snap)
+          writeSegment(idx, dir, next, docIds, codec)
+          Seq(segName(next))
+      }
     }
-  }
 
   /** One REFRESH as one version: tombstones for the `removed` ids (scoped
     * to the newest segment), a delta segment for `added` (the index and its
     * `(doc_id, content_fp)` manifest) in a newer one, and the source
-    * fingerprint `sourceFp`, with the composite sidecar as `sidecar` says
-    * — staged, then published together, so no reader sees the tombstones
-    * without the re-indexed docs, or either without the sidecar they
-    * imply. */
+    * fingerprint `sourceFp`, with the composite sidecar restaged over
+    * `restage`'s source — staged, then published together, so no reader
+    * sees the tombstones without the re-indexed docs, or either without the
+    * sidecar they imply. */
   def refresh(spark: SparkSession, dir: String, removed: Option[DataFrame],
       added: Option[(InvertedIndex, DataFrame)], sourceFp: Option[String],
-      sidecar: FieldStore.Policy = FieldStore.Carry): Unit =
+      restage: Option[FieldStore.Restage]): Unit =
     Metrics.timed(dir, "commit") {
-      commit(spark, dir, sourceFp, sidecar) { (snap, codec, n) =>
+      commit(spark, dir, sourceFp, restage) { (snap, codec, n) =>
         val s = snap.getOrElse(throw new IllegalStateException(s"no index at $dir"))
         removed.flatMap(ids => stageTombstones(spark, s, idsMatched(spark, s, ids), n)).toSeq ++
           added.map { case (idx, docIds) =>
@@ -412,13 +414,13 @@ object IndexStore {
     * named with, and returns the roots it wrote, which join the version's
     * files. */
   private def commit(spark: SparkSession, dir: String, sourceFp: Option[String] = None,
-      sidecar: FieldStore.Policy = FieldStore.Carry, compression: Option[String] = None,
+      restage: Option[FieldStore.Restage] = None, compression: Option[String] = None,
       batch: Option[Long] = None)(
       stage: (Option[Snapshot], Option[String], Long) => Seq[String]): Unit = {
     val base = Commit.latest(spark, dir)
     val codec = base.fold(compression.map(validCodec))(codecOf)
     val staged = stage(base.map(snapshotOf(spark, _)), codec, Commit.nextNumber(base))
-    publish(spark, dir, base, staged, sourceFp, sidecar,
+    publish(spark, dir, base, staged, sourceFp, restage,
       codec.filter(_ => base.isEmpty).map("compression" -> _).toSeq ++
         batch.map(b => "batches" -> (batches(base) :+ b).map(Long.box).asJava): _*)
   }
@@ -558,7 +560,7 @@ object IndexStore {
     * apply tombstones at load; [[compact]] folds them away permanently. */
   def deleteWhere(spark: SparkSession, dir: String,
       predicate: org.apache.spark.sql.Column): Unit =
-    commit(spark, dir, sidecar = FieldStore.Drop) { (snap, _, n) =>
+    commit(spark, dir) { (snap, _, n) =>
       val s = snap.getOrElse(throw new IllegalStateException(s"no index at $dir"))
       stageTombstones(spark, s, s.index(spark).docStats
         .filter(predicate)

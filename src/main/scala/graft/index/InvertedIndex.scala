@@ -31,7 +31,7 @@ import graft.search.TsQuery
   * both keyed on (doc, term) so map-side partial aggregation applies; the
   * only global state is the (tiny) term dictionary and two scalars. Two
   * single-task leaves drive the reads: every scorer reads [[TermBagScan]]
-  * — a term bag ([[scoredTerms]]) or one multi-term leaf, prefix, wildcard,
+  * — a term bag ([[scoredTermsPlan]]) or one multi-term leaf, prefix, wildcard,
   * regexp, range or fuzzy ([[scoredExpansionPlan]]), whose task expands the
   * term dictionary — and every boolean match
   * ([[graft.search.TsQueryExec.matching]]: terms, phrases, the expansion
@@ -229,10 +229,6 @@ final case class InvertedIndex(
   private[graft] def scoredTermsPlan(scorer: String, terms: Seq[String],
       params: Seq[Any] = Nil): LogicalPlan =
     scoredPlan(ScoreKernels(this, scorer, terms, params), terms, None)
-
-  def scoredTerms(scorer: String, terms: Seq[String],
-      params: Seq[Any] = Nil): DataFrame =
-    Frames.ofRows(postings.sparkSession, scoredTermsPlan(scorer, terms, params))
 
   def tfidf(terms: Seq[String], withNorms: Boolean = false): DataFrame =
     scoredFrame(ScoreKernels.tfidf(this, terms, withNorms), terms)

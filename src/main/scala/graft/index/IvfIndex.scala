@@ -469,12 +469,12 @@ object IvfIndex {
 
   /** Publishes the version after `base` naming `files`, with the coarse
     * quantizer, the code families' trained states, the source fingerprint
-    * and the sidecar as `sidecar` says. */
+    * and the sidecar restaged over `restage`'s source, if any. */
   private def publish(spark: SparkSession, dir: String, base: Option[Commit.Version],
       files: Seq[String], centroids: Array[Array[Double]], radii: Array[Double],
       sizes: Array[Long], codes: Map[String, String], sourceFp: Option[String],
-      sidecar: FieldStore.Policy, fields: (String, Any)*): Unit = {
-    val side = FieldStore.stage(spark, dir, base, Commit.nextNumber(base), sidecar,
+      restage: Option[FieldStore.Restage], fields: (String, Any)*): Unit = {
+    val side = FieldStore.stage(spark, dir, base, Commit.nextNumber(base), restage,
       changed = true, sourceFp)
     Commit.publish(spark, dir, base, files ++ side.roots, Seq[(String, Any)](
       "centroids" -> centroids, "radii" -> radii, "sizes" -> sizes,
@@ -486,9 +486,9 @@ object IvfIndex {
     * its roots: the first build, a rebuild after rows were removed or
     * changed, or a recluster. The code families of the replaced version are
     * retrained over the new vectors and published in the same version, and
-    * the sidecar as `sidecar` says. */
+    * the sidecar restaged over `restage`'s source, if any. */
   private def write(spark: SparkSession, dir: String, embs: DataFrame, k: Int,
-      sourceFp: Option[String], sidecar: FieldStore.Policy): Unit = {
+      sourceFp: Option[String], restage: Option[FieldStore.Restage]): Unit = {
     val base = Commit.latest(spark, dir)
     val n = Commit.nextNumber(base)
     val idx = build(embs, k = k)
@@ -503,7 +503,7 @@ object IvfIndex {
           kind -> QuantizedIvf.stage(idx, dir, kind, QuantizedIvf.trainedM(kind, state), n) }
       publish(spark, dir, base, stored ++ codes.values.map(_._1),
         idx.centroids, idx.radii, idx.sizes, codes.map { case (kind, (_, state)) => kind -> state },
-        sourceFp, sidecar, "lists" -> k, "trained" -> idx.sizes.sum,
+        sourceFp, restage, "lists" -> k, "trained" -> idx.sizes.sum,
         "schema" -> idx.assignments.select("vec_id", "embedding", "cluster").schema.json)
     } finally idx.assignments.unpersist()
   }
@@ -516,7 +516,7 @@ object IvfIndex {
       k: Int = 0): IvfIndex = {
     val dir = dirFor(cacheKey, k)
     current(spark, dir).getOrElse {
-      write(spark, dir, embs, k, None, FieldStore.Carry)
+      write(spark, dir, embs, k, None, None)
       current(spark, dir).get
     }.index(spark)
   }
@@ -531,12 +531,12 @@ object IvfIndex {
   /** Rebuild the index at `dir` over `embs` as one version that replaces
     * every root (REFRESH or COMPACT after rows were removed or changed),
     * with the list count it was built with (`lists` when none is
-    * published), the code families it carries, the sidecar as `sidecar`
-    * says, and the source fingerprint `sourceFp`. */
+    * published), the code families it carries, the sidecar restaged over
+    * `restage`'s source, if any, and the source fingerprint `sourceFp`. */
   def rebuild(spark: SparkSession, dir: String, embs: DataFrame, lists: Int,
-      sourceFp: Option[String], sidecar: FieldStore.Policy = FieldStore.Carry): Unit =
+      sourceFp: Option[String], restage: Option[FieldStore.Restage]): Unit =
     write(spark, dir, embs, Commit.latest(spark, dir).fold(lists)(stateOf(spark, _).lists),
-      sourceFp, sidecar)
+      sourceFp, restage)
 
   /** The fingerprint manifest `(vec_id, fp)` of the latest version, opened
     * without a Spark job. */
@@ -563,12 +563,12 @@ object IvfIndex {
     * was created with) — the (rare, amortized) full rebuild instead of a
     * per-append one.
     *
-    * The sidecar goes as `sidecar` says (appended vectors change the doc
-    * set: restage it or drop it). Returns (#appended, reclustered?).
+    * The sidecar is restaged over `restage`'s source, or dropped without
+    * one: appended vectors change the doc set. Returns (#appended, reclustered?).
     * Single-writer (the DDL path). */
   def append(spark: SparkSession, dir: String, newVecs: DataFrame,
       driftRatio: Double = 0.5, sourceFp: Option[String] = None,
-      sidecar: FieldStore.Policy = FieldStore.Drop): (Long, Boolean) = {
+      restage: Option[FieldStore.Restage] = None): (Long, Boolean) = {
     import spark.implicits._
     val base = Commit.latest(spark, dir).getOrElse(
       throw new IllegalArgumentException(s"no IVF index at $dir to append to"))
@@ -596,7 +596,7 @@ object IvfIndex {
       else if (st.sizes.sum + added > st.trained * (1.0 + driftRatio)) {
         // drift: re-cluster the whole store at the new scale
         write(spark, dir, st.index(spark).assignments.select("vec_id", "embedding")
-          .unionByName(assigned.select("vec_id", "embedding")), st.lists, sourceFp, sidecar)
+          .unionByName(assigned.select("vec_id", "embedding")), st.lists, sourceFp, restage)
         (added, true)
       } else {
         val n = base.next
@@ -616,7 +616,7 @@ object IvfIndex {
             st.codes.keys.exists(k => f.startsWith(k + "-"))) ++
             Seq(vecRoot, fpsRoot) ++ codes.values.map(_._1),
           st.centroids, radii, sizes, codes.map { case (kind, (_, state)) => kind -> state },
-          sourceFp, sidecar)
+          sourceFp, restage)
         (added, false)
       }
     } finally assigned.unpersist()

@@ -19,7 +19,7 @@ import graft.search.{TermPredicates, TsQuery}
   * top_k_heap.hpp) as a single leaf instead of a join/aggregate
   * composition. No shuffle, no broadcast. It has two modes.
   *
-  * Term bag ([[leaf]], behind [[InvertedIndex.scoredTerms]]): a row per doc
+  * Term bag ([[leaf]], behind [[InvertedIndex.scoredTermsPlan]]): a row per doc
   * that has at least one live posting of a query term AND a docstats row:
   * `doc_id`, `dlen` (summed over live segments), and for each distinct term
   * `i` (in first-occurrence order) `i_tf`, `i_df`, `i_ctf` — null when the

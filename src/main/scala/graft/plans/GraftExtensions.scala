@@ -1449,9 +1449,11 @@ case class ClaimTsMatch(spark: SparkSession) extends Rule[LogicalPlan] {
   }
 
   /** Resolves the composite-index sidecar covering the scan that produced
-    * `attr` as an indexed FIELD, plus that scan's id attribute. The field
-    * semi-join narrows the scan, which still reads every column: the
-    * sidecar need only be the one the version the statement reads names. */
+    * `attr` as an indexed FIELD, plus that scan's id attribute. The claimed
+    * conjunct leaves the filter, so the field dataset answers it alone:
+    * the sidecar must pass the gate of every index-only answer
+    * ([[StatsShapes.freshSidecar]]), or a row whose field was UPDATEd since
+    * the last REFRESH would match on its old value. */
   private def fieldIndexOf(plan: LogicalPlan,
       attr: AttributeReference): Option[(graft.index.FieldStore.Sidecar, AttributeReference)] =
     plan.collectFirst {
@@ -1459,7 +1461,7 @@ case class ClaimTsMatch(spark: SparkSession) extends Rule[LogicalPlan] {
         for {
           root <- PlanShapes.scanRoot(lr)
           side <- IndexCatalog.sidecarDirs(root).iterator
-            .flatMap(graft.index.FieldStore.current(spark, _))
+            .flatMap(StatsShapes.freshSidecar(spark, _, lr.relation))
             .find(_.spec.fields.contains(attr.name))
           idAttr <- lr.output.collectFirst {
             case a: AttributeReference if a.name == side.spec.idCol => a }

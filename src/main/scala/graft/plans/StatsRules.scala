@@ -49,12 +49,15 @@ private[plans] object StatsShapes {
     }
   }
 
-  /** The composite sidecar of the index at `dir` a plan may answer from
-    * without the base table: the one the statement's version names, when
-    * that version is byte-fresh with `rel` ([[indexFresh]]). */
+  /** The composite sidecar of the index at `dir` a plan may read in place
+    * of the base table's columns: the one the statement's version names,
+    * when that version is byte-fresh with `rel` ([[indexFresh]], checked
+    * only for a version that names one). */
   def freshSidecar(spark: SparkSession, dir: String, rel: org.apache.spark.sql.sources.BaseRelation) =
-    Some(rel).collect { case h: HadoopFsRelation if indexFresh(spark, dir, h) => h }
-      .flatMap(_ => graft.index.FieldStore.current(spark, dir))
+    graft.index.FieldStore.current(spark, dir).filter(_ => rel match {
+      case h: HadoopFsRelation => indexFresh(spark, dir, h)
+      case _ => false
+    })
 
   /** Row-count expression → output expressions, when the whole aggregate
     * list is countable from a row count alone: count(*) / count(1) /

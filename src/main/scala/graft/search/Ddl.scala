@@ -103,14 +103,18 @@ object IndexCatalog {
     CatalogStore.ensureLoaded()
     def owns(dir: String) = path == dir || path.startsWith(dir + "/")
     // a composite sidecar's roots sit inside the index it rides on: a
-    // field dataset holds its field, the columnstore the INCLUDE columns
-    def side(dir: String, idCol: String): Option[Set[String]] =
+    // field dataset holds its field, the columnstore the INCLUDE columns,
+    // a bare `fields-` root every field
+    def side(dir: String, idCol: String): Option[Set[String]] = {
+      def spec(cols: FieldStore.Spec => Seq[String]) = graft.index.Commit.current(spark, dir)
+        .flatMap(FieldStore.spec).fold(Set("*"))(s => cols(s).toSet + idCol)
       path.stripPrefix(dir + "/").split("/").toSeq match {
         case r +: f +: _ if r.startsWith("fields-") => Some(Set(f, idCol))
-        case r +: _ if FieldStore.isRoot(r) => Some(graft.index.Commit.current(spark, dir)
-          .flatMap(FieldStore.spec).fold(Set("*"))(s => (s.fields ++ s.included).toSet + idCol))
+        case r +: _ if r.startsWith("fields-") => Some(spec(_.fields))
+        case r +: _ if r.startsWith("stored-") => Some(spec(_.included))
         case _ => None
       }
+    }
     text.collectFirst {
       case ((root, c, _), e) if owns(e.segDir) =>
         (root, side(e.segDir, e.idCol).getOrElse(Set(c, e.idCol))) }
@@ -474,7 +478,7 @@ object Ddl {
       throw new IllegalStateException(s"no ANN registration for ${e.dir}"))
     val fp = sourceFingerprint(spark, e.view)
     graft.index.IvfIndex.rebuild(spark, e.dir, IndexCatalog.annSource(spark, root, annEntry),
-      annEntry.lists, fp, FieldStore.Restage(spark.table(e.view)))
+      annEntry.lists, fp, Some(FieldStore.Restage(spark.table(e.view))))
     ensureQuant(spark, e.dir, annEntry.quant, annEntry.pqM)
     spark.catalog.refreshByPath(e.dir)
   }
@@ -736,15 +740,20 @@ object Ddl {
       // idempotent fast path: re-issuing the SAME statement (entries do this
       // once per query) must not re-run the stats/view registration IO;
       // DROP removes the catalog row, so a recreate always takes the full
-      // path and rebuilds
+      // path and rebuilds. An index whose source was rewritten since, or
+      // whose latest version names no sidecar it asks for, is brought up to
+      // date by the REFRESH path: re-indexed and restaged in one version
       val fastDir = IndexStore.dirFor(cacheKey, textCol, analyzer)
       val fieldsWanted = fieldCols.nonEmpty || includeCols.nonEmpty
+      val fp = sourceFingerprint(spark, view)
       if (catalog.get(name).exists(_.sameSpec(
             Entry(fastDir, view, keySpecOf, analyzer, predicate = predicate))) &&
-          IndexStore.durable(spark, fastDir) &&
-          (!fieldsWanted || FieldStore.latest(spark, fastDir).exists(s =>
-            s.spec.fields == fieldCols && s.spec.included == includeCols))) {
-        if (sessionReady.putIfAbsent(name, true).isEmpty) {
+          IndexStore.durable(spark, fastDir)) {
+        if (IndexStore.sourceFp(spark, fastDir) != fp ||
+            (fieldsWanted && FieldStore.latest(spark, fastDir).isEmpty)) {
+          executeParsed(spark, s"REFRESH SEARCH INDEX $name") // registers the views
+          sessionReady.put(name, true)
+        } else if (sessionReady.putIfAbsent(name, true).isEmpty) {
           IndexStore.registerViews(spark, fastDir, name)
           IndexStore.registerStatsTables(spark, fastDir, name)
           if (fieldsWanted)
@@ -763,7 +772,6 @@ object Ddl {
       // the predicate is a WHERE filter on the backfill scan — Catalyst
       // pushes it into the parquet read (the reference shows it as a
       // Column Filter in the backfill SEQ_SCAN, inverted_index_partial.test)
-      val fp = sourceFingerprint(spark, view)
       val source = predicate.foldLeft(spark.table(view))(
         (df, p) => df.filter(org.apache.spark.sql.functions.expr(p)))
       // typed-field postings + INCLUDE columnstore sidecar: one linear
@@ -771,11 +779,11 @@ object Ddl {
       // staged into the version the build publishes; per-column
       // hyperloglog option: NDV tracked for these INCLUDE columns and
       // exposed to the CBO (reference inverted_index_hyperloglog_option.test)
-      val sidecar =
-        if (!fieldsWanted) FieldStore.Carry
-        else FieldStore.Restage(spark.table(view), Some(FieldStore.Spec(idCol, fieldCols,
+      val restage =
+        if (!fieldsWanted) None
+        else Some(FieldStore.Restage(spark.table(view), Some(FieldStore.Spec(idCol, fieldCols,
           includeCols, opts.get("hyperloglog").toSeq.flatMap(_.split(",")).map(_.trim)
-            .filter(_.nonEmpty))))
+            .filter(_.nonEmpty)))))
       // segment_docs_max: commit-on-flush backfill rotation (reference
       // online_create_index_rotation.test) — many independently committed
       // segments instead of one final publish. The segment codec
@@ -784,10 +792,10 @@ object Ddl {
         case Some(max) =>
           IndexStore.ensureRotating(spark, source, cacheKey, idCol, textCol,
             analyzer, max, sourceFp = fp, compression = opts.get("compression"),
-            sidecar = sidecar)
+            restage = restage)
         case None =>
           IndexStore.ensure(spark, source, cacheKey, idCol, textCol, analyzer,
-            sourceFp = fp, compression = opts.get("compression"), sidecar = sidecar)
+            sourceFp = fp, compression = opts.get("compression"), restage = restage)
       }
       val dir = fastDir
       IndexStore.registerViews(spark, dir, name)
@@ -858,18 +866,20 @@ object Ddl {
         else s"$embCol include(${includeCols.mkString(",")})"
       // idempotent fast path, same contract as the search-index branch
       val vecDir = graft.index.IvfIndex.dirFor(effKey, lists)
+      val fp = sourceFingerprint(spark, view)
       if (catalog.get(name).exists(_.sameSpec(
             Entry(vecDir, view, vecSpec, s"vector:$metric"))) &&
-          graft.index.IvfIndex.available(spark, effKey, lists) &&
-          (includeCols.isEmpty ||
-            FieldStore.latest(spark, vecDir).exists(_.spec.included == includeCols)))
+          graft.index.IvfIndex.available(spark, effKey, lists)) {
+        if (IndexStore.sourceFp(spark, vecDir) != fp ||
+            (includeCols.nonEmpty && FieldStore.latest(spark, vecDir).isEmpty))
+          executeParsed(spark, s"REFRESH SEARCH INDEX $name")
         return result(spark, s"created $name")
+      }
       val root = scanRootOf(spark, view).getOrElse(
         throw new IllegalArgumentException(
           s"CREATE VECTOR INDEX: view $view is not a bare parquet scan"))
       val entry = IndexCatalog.AnnEntry(effKey, idCol, embCol, metric,
         quantOpt, lists, pqM)
-      val fp = sourceFingerprint(spark, view)
       val builtIvf = graft.index.IvfIndex.ensure(spark,
         IndexCatalog.annSource(spark, root, entry), effKey, lists)
       quantOpt.foreach { qv =>
@@ -890,8 +900,8 @@ object Ddl {
       }
       IndexCatalog.registerAnn(root, embCol, metric, entry)
       IndexStore.recordSourceFp(spark, vecDir, fp,
-        if (includeCols.isEmpty) FieldStore.Carry
-        else FieldStore.Restage(spark.table(view), Some(FieldStore.Spec(idCol, Nil, includeCols))))
+        if (includeCols.isEmpty) None
+        else Some(FieldStore.Restage(spark.table(view), Some(FieldStore.Spec(idCol, Nil, includeCols)))))
       catalog.put(name, Entry(vecDir, view, vecSpec, s"vector:$metric",
         annKey = Some(effKey), idCol = idCol))
       CatalogStore.persist(spark)
@@ -1104,7 +1114,7 @@ object Ddl {
                   (graft.index.InvertedIndex.build(toAdd, idCol, keyCol, e.analyzer),
                     toAdd.select(fcol(idCol).as("doc_id"), fcol("__fp").as("content_fp")))
                 },
-                fp, FieldStore.Restage(spark.table(e.view)))
+                fp, Some(FieldStore.Restage(spark.table(e.view))))
               n
             } finally classified.unpersist()
           spark.catalog.refreshByPath(e.dir)
@@ -1167,7 +1177,7 @@ object Ddl {
             // the rebuild publishes as one version beside the old one: a
             // kNN planned before it still reads the vectors it dropped
             graft.index.IvfIndex.rebuild(spark, e.dir, source, entry.lists, fp,
-              FieldStore.Restage(spark.table(e.view)))
+              Some(FieldStore.Restage(spark.table(e.view))))
             ensureQuant(spark, e.dir, entry.quant, entry.pqM)
             spark.catalog.refreshByPath(e.dir)
             result(spark, s"refreshed $name (rebuilt: -$removed vectors, " +
@@ -1175,7 +1185,7 @@ object Ddl {
           } else if (newN == 0) {
             // no vector to reconcile: the classifier job is the whole
             // refresh, unless a source change restages the sidecar
-            IndexStore.recordSourceFp(spark, e.dir, fp, FieldStore.Restage(spark.table(e.view)))
+            IndexStore.recordSourceFp(spark, e.dir, fp, Some(FieldStore.Restage(spark.table(e.view))))
             spark.catalog.refreshByPath(e.dir)
             result(spark, s"refreshed $name (+0 vectors)")
           } else {
@@ -1185,7 +1195,7 @@ object Ddl {
             // (sq8/sq4/pq/rabitq) over the grown vectors in the same version
             val (added, reclustered) =
               graft.index.IvfIndex.append(spark, e.dir, newVecs, sourceFp = fp,
-                sidecar = FieldStore.Restage(spark.table(e.view)))
+                restage = Some(FieldStore.Restage(spark.table(e.view))))
             IndexStore.recordSourceFp(spark, e.dir, fp)
             spark.catalog.refreshByPath(e.dir)
             result(spark, s"refreshed $name (+$added vectors)" +

@@ -53,8 +53,6 @@ object Maintenance {
   private val excluded = TrieMap.empty[String, Boolean]
   def exclude(name: String): Unit = excluded.put(name, true)
 
-  def isRunning(spark: SparkSession): Boolean = running.contains(spark)
-
   /** Config from session confs — the reference's `SET refresh_interval = N`
     * / `SET compaction_interval = N` settings surface (its sqllogic tests
     * flip them per session): `SET spark.graft.maintenance.refreshIntervalMs

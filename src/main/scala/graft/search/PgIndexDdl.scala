@@ -727,13 +727,6 @@ object PgIndexDdl extends org.apache.spark.internal.Logging {
       }
   }
 
-  /** Engine-index names created on behalf of pg-spelled indexes over this
-    * table (so VACUUM refresh can target them). */
-  def enginesFor(table: String): Seq[String] =
-    registry.values.filter(_.table.equalsIgnoreCase(table)).toSeq.flatMap {
-      spec => delegations(spec).map(_.split("\\s+")(5))
-    }
-
   private def result(spark: SparkSession, msg: String): DataFrame = {
     import spark.implicits._
     Seq(msg).toDF("result")

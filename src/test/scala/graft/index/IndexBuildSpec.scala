@@ -115,6 +115,20 @@ class IndexBuildSpec extends AnyFunSuite {
     checkSegment(segOf(IndexStore.dirFor(key, "text", "whitespace")), texts, positions = false)
   }
 
+  test("a load keeps the source fingerprint the index was synced with") {
+    val key = s"build-spec-fp-$tag"
+    val dir = IndexStore.dirFor(key, "text", "whitespace")
+    IndexStore.ensure(spark, docs(), key, "doc_id", "text", "whitespace")
+    // an index built without one adopts the first fingerprint it is given
+    IndexStore.ensure(spark, sys.error("must load"), key, "doc_id", "text", "whitespace",
+      sourceFp = Some("8:100:1"))
+    assert(IndexStore.sourceFp(spark, dir).contains("8:100:1"))
+    // a load re-indexes nothing: other source bytes must not look synced
+    IndexStore.ensure(spark, sys.error("must load"), key, "doc_id", "text", "whitespace",
+      sourceFp = Some("9:120:2"))
+    assert(IndexStore.sourceFp(spark, dir).contains("8:100:1"))
+  }
+
   test("the compression option reaches every part") {
     val key = s"build-spec-zstd-$tag"
     val dir = IndexStore.dirFor(key, "text", "whitespace")

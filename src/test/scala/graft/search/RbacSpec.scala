@@ -121,6 +121,32 @@ class RbacSpec extends AnyFunSuite {
     }
   }
 
+  test("column grants: a covered read needs only the columns its sidecar root holds") {
+    SqlSurface.registerAll(spark)
+    val root = sys.props("java.io.tmpdir") + "/graft-rbac-covered/docs"
+    Tables.documents(spark, TestSpark.sfDir).limit(200).write.mode("overwrite").parquet(root)
+    spark.read.parquet(root).createOrReplaceTempView("x_cov_docs")
+    sql("""CREATE SEARCH INDEX x_cov_idx ON x_cov_docs (text)
+          |WITH (id = 'doc_id', analyzer = 'whitespace', key = 'rbac-covered')
+          |FIELDS (lang) INCLUDE (source)""".stripMargin)
+    sql("CREATE ROLE x_cov_reader")
+    // every column the covered read answers from, but not the FIELDS one
+    sql("GRANT SELECT (doc_id, text, source) ON x_cov_docs TO x_cov_reader")
+    try {
+      val q = spark.sql(
+        "SELECT doc_id, source FROM x_cov_docs WHERE ts_match(text, 'vector', 'whitespace')")
+      assert(q.inputFiles.exists(_.contains("/stored-")) &&
+        (q.inputFiles.toSet & spark.read.parquet(root).inputFiles.toSet).isEmpty,
+        s"the read must be covered:\n${q.queryExecution.executedPlan}")
+      withRole("x_cov_reader") {
+        assert(q.collect().nonEmpty, "the columnstore holds no FIELDS column")
+        assert(denied(spark.sql(
+          "SELECT doc_id FROM x_cov_docs WHERE ts_match(text, 'vector', 'whitespace') " +
+            "AND lang = 'en'").collect()), "a FIELDS column is still a read")
+      }
+    } finally sql("DROP SEARCH INDEX x_cov_idx")
+  }
+
   test("GRANTED BY requires membership; granting requires the grant option") {
     Tables.orders(spark, TestSpark.sfDir).createOrReplaceTempView("graft_orders")
     sql("CREATE ROLE gb_mop"); sql("CREATE ROLE gb_ved"); sql("CREATE ROLE gb_cc")

@@ -14,6 +14,8 @@ import graft.index.{Commit, PublishCrash}
   * part of its index's versions: a covered read answers without the base
   * table only from a version that names the sidecar and is fresh with the
   * table, so a row DELETEd before or after a REFRESH never comes back, a
+  * FIELDS value UPDATEd since the last REFRESH is not matched on its old
+  * value, a CREATE re-issued over rewritten files re-syncs the index, a
   * pk-keyed index is claimed like a `doc_id`-keyed one, reads interleaved
   * with REFRESH and COMPACT see one committed state, and a REFRESH that
   * crashes at its publish leaves the previous version serving. The shapes
@@ -116,6 +118,58 @@ class SidecarVersionSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       assert(failures.isEmpty, failures.mkString("\n"))
     }
+  }
+
+  test("a FIELDS column UPDATEd since the last REFRESH is not answered from the sidecar") {
+    val (t, _) = table("sv_field", "pk INTEGER")
+    run(spark, s"INSERT INTO $t VALUES (4, 'alpha foxtrot', 'de', 'x4', 'o4')")
+    run(spark, s"VACUUM (REFRESH_TABLE) $t")
+    run(spark, s"UPDATE $t SET lang = 'de' WHERE pk = 2")
+    run(spark, s"UPDATE $t SET lang = 'en' WHERE pk = 4")
+    // covered (pk, tag) and not (other): the covered projection and the
+    // text claim's field semi-join both drive from the `lang` dataset
+    def answers(step: String, fresh: Boolean): Seq[String] =
+      Seq("pk, tag", "pk, tag, other").flatMap { cols =>
+        val df = spark.sql(s"SELECT $cols FROM $t " +
+          s"WHERE ts_match(body, ts_phrase('alpha'), '$dict') AND lang = 'en'")
+        val got = df.collect().map(_.getInt(0)).sorted.toSeq
+        val drives = df.inputFiles.exists(_.contains("/fields-"))
+        Seq(
+          Some(s"$step, $cols: $got, want 1, 4").filter(_ => got != Seq(1, 4)),
+          Some(s"$step, $cols must ${if (fresh) "" else "not "}read the field dataset:\n" +
+            df.queryExecution.executedPlan).filter(_ => drives != fresh)).flatten
+      }
+    val failures = answers("before the REFRESH", fresh = false) ++ {
+      run(spark, s"VACUUM (REFRESH_TABLE) $t")
+      answers("after the REFRESH", fresh = true)
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
+  test("re-issuing CREATE over rewritten source files re-syncs the index") {
+    ready
+    val root = sys.props("java.io.tmpdir") + s"/graft-sv-recreate-$tag/docs"
+    val ss = spark
+    import ss.implicits._
+    def write(rows: Seq[(Long, String, String)]): Unit = {
+      rows.toDF("doc_id", "body", "tag").write.mode("overwrite").parquet(root)
+      spark.read.parquet(root).createOrReplaceTempView(s"sv_recreate_$tag")
+    }
+    val create = s"""CREATE SEARCH INDEX sv_recreate_idx_$tag ON sv_recreate_$tag (body)
+                    |WITH (id = 'doc_id', analyzer = 'whitespace', key = 'sv-recreate-$tag')
+                    |INCLUDE (tag)""".stripMargin
+    val q = s"SELECT doc_id, tag FROM sv_recreate_$tag WHERE ts_match(body, 'alpha', 'whitespace')"
+    try {
+      write(Seq((1L, "alpha", "a1"), (2L, "alpha beta", "a2"), (3L, "gamma", "a3")))
+      Ddl.execute(spark, create)
+      write(Seq((1L, "alpha", "b1"), (3L, "gamma alpha", "b3")))
+      Ddl.execute(spark, create)
+      val df = spark.sql(q)
+      assert(df.collect().map(r => r.getLong(0) -> r.getString(1)).sorted.toSeq ==
+        Seq(1L -> "b1", 3L -> "b3"))
+      assert(covered(df, s"sv_recreate_$tag"),
+        s"the re-issued CREATE leaves the sidecar fresh\n${df.queryExecution.executedPlan}")
+    } finally Ddl.execute(spark, s"DROP SEARCH INDEX sv_recreate_idx_$tag")
   }
 
   test("covered reads interleaved with REFRESH and COMPACT see one committed state") {
