@@ -225,10 +225,11 @@ object IndexStore {
     load(spark, dir)
   }
 
-  /** The source fingerprint a build-or-load publishes for `fp`: a load
-    * re-indexes nothing, so an existing index keeps the one it was synced
-    * with, and only an index built without one adopts `fp`. */
-  private def loadedFp(spark: SparkSession, dir: String, fp: Option[String]): Option[String] =
+  /** The source fingerprint a build-or-load (of any kind) publishes for
+    * `fp`: a load re-indexes nothing, so an existing index keeps the one it
+    * was synced with, and only an index built without one adopts `fp`. */
+  private[graft] def loadedFp(spark: SparkSession, dir: String,
+      fp: Option[String]): Option[String] =
     Commit.latest(spark, dir).fold(fp)(v => sourceFpOf(v).orElse(fp))
 
   /** Convenience: the standard documents-table index. */

@@ -899,7 +899,7 @@ object Ddl {
         }
       }
       IndexCatalog.registerAnn(root, embCol, metric, entry)
-      IndexStore.recordSourceFp(spark, vecDir, fp,
+      IndexStore.recordSourceFp(spark, vecDir, IndexStore.loadedFp(spark, vecDir, fp),
         if (includeCols.isEmpty) None
         else Some(FieldStore.Restage(spark.table(view), Some(FieldStore.Spec(idCol, Nil, includeCols)))))
       catalog.put(name, Entry(vecDir, view, vecSpec, s"vector:$metric",

@@ -172,6 +172,34 @@ class SidecarVersionSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally Ddl.execute(spark, s"DROP SEARCH INDEX sv_recreate_idx_$tag")
   }
 
+  test("a CREATE that loads an existing vector index keeps the fingerprint it was synced with") {
+    ready
+    val root = sys.props("java.io.tmpdir") + s"/graft-sv-vec-$tag/emb"
+    val ss = spark
+    import ss.implicits._
+    val view = s"sv_vec_$tag"
+    def write(shift: Float): Unit = {
+      (0 until 20).map(i => (i.toLong, Seq(i.toFloat + shift, 1f, 0f, 2f), s"l$i"))
+        .toDF("vec_id", "embedding", "label").write.mode("overwrite").parquet(root)
+      spark.read.parquet(root).createOrReplaceTempView(view)
+    }
+    // two index names over one key share the IVF directory
+    def create(name: String) = Ddl.execute(spark, s"CREATE VECTOR INDEX $name ON $view (embedding) " +
+      s"WITH (id = 'vec_id', metric = 'l2', key = 'sv-vec-$tag') INCLUDE (label)")
+    try {
+      write(0f)
+      create(s"sv_vec_a_$tag")
+      val dir = Ddl.execute(spark, s"DESCRIBE SEARCH INDEX sv_vec_a_$tag").collect()
+        .collectFirst { case r if r.getString(0) == "location" => r.getString(1) }.get
+      val synced = graft.index.IndexStore.sourceFp(spark, dir)
+      write(100f)
+      create(s"sv_vec_b_$tag")
+      assert(synced.nonEmpty && graft.index.IndexStore.sourceFp(spark, dir) == synced,
+        "the vectors of the old source must not look fresh with the new one")
+    } finally Seq("a", "b").foreach(n =>
+      try Ddl.execute(spark, s"DROP SEARCH INDEX sv_vec_${n}_$tag") catch { case NonFatal(_) => () })
+  }
+
   test("covered reads interleaved with REFRESH and COMPACT see one committed state") {
     val (t, _) = table("sv_rw", "pk INTEGER")
     val reader = {
